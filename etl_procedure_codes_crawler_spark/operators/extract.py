@@ -10,8 +10,13 @@ frames, run serially against one global browser. Spark-first shape:
 
 Design points for 100 TB scale:
 
-- one fetcher per *partition*, built lazily inside the iterator and
-  closed in ``finally`` (connection/login reuse without driver state);
+- one fetcher per *fetch thread*, at most N = ``FETCH_CONCURRENCY`` per
+  partition: each partition's :class:`FetchPool` overlaps the network
+  waits of up to N codes, builds each thread's fetcher lazily and
+  closes them all when the iterator ends (connection/login reuse
+  without driver state; N concurrent logins per partition on a
+  login-gated site). Results come back in input order, so each
+  batch's rows are in the order of its codes;
 - Arrow-batched both directions; the parse layer is pure Python per
   page (inherently row-wise work — the page is the row);
 - failures become ``status``/``error`` columns, not exceptions, so one
@@ -35,7 +40,7 @@ from ..schemas import (
     EXTRACT_RESULT_SCHEMA,
     PROCEDURE_CODES_COLUMNS,
 )
-from ..sources.fetcher import FetcherFactory
+from ..sources.fetcher import FETCH_CONCURRENCY, FetcherFactory, FetchPool
 
 _RESULT_COLUMNS = [f.name for f in EXTRACT_RESULT_SCHEMA.fields]
 
@@ -46,6 +51,7 @@ def extract_procedure_pages(
     base_url: str = "",
     code_column: str = "code",
     batch_partitions: int | None = None,
+    concurrency: int = FETCH_CONCURRENCY,
 ) -> DataFrame:
     """Fetch+parse every code; returns the flat extraction relation.
 
@@ -53,20 +59,19 @@ def extract_procedure_pages(
     the reference's 200-codes-per-chunk scheduling
     (``procedure_code.py:725``), but expressed as partition count so
     the cluster, not a driver loop, owns the parallelism.
+    ``concurrency`` bounds the fetches in flight per partition; the
+    rows do not depend on it.
     """
     source = codes.select(F.col(code_column).alias("code"))
     if batch_partitions:
         source = source.repartition(batch_partitions)
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        fetcher = None
-        try:
+        with FetchPool(fetcher_factory, concurrency) as pool:
             for batch in batches:
+                batch_codes = batch["code"]
                 records = []
-                for code in batch["code"]:
-                    if fetcher is None:
-                        fetcher = fetcher_factory()
-                    result = fetcher.fetch(code)
+                for code, result in zip(batch_codes, pool.map(batch_codes)):
                     # Final (post-redirect) URL when the fetcher knows it —
                     # CPT/HCPCS classification depends on it (reference:
                     # driver.current_url, procedure_code.py:550).
@@ -78,12 +83,7 @@ def extract_procedure_pages(
                     else:
                         record = parse_procedure_page(code, url, result.html)
                     records.append(record)
-                yield pd.DataFrame(
-                    records, columns=_RESULT_COLUMNS
-                )
-        finally:
-            if fetcher is not None:
-                fetcher.close()
+                yield pd.DataFrame(records, columns=_RESULT_COLUMNS)
 
     return source.mapInPandas(run, schema=EXTRACT_RESULT_SCHEMA)
 

@@ -8,10 +8,10 @@ driver/executor boundary exactly once (at ``mapInPandas``); everything
 else is declarative and Catalyst-planned:
 
     codes ─ clean(P1-P3) ─ anti-join vs existing codes (J3)
-          ─ mapInPandas(extract, fetcher/partition)
+          ─ mapInPandas(extract, fetcher/fetch thread)
           ─ split into 3 relations
           ─ incremental dedup (J1/J2) per relation
-          ─ append sinks (K1), partitioned by load_date
+          ─ append sinks (K1), partitioned by load_date; codes last
 
 Improvement over the reference, by design (SURVEY §2.4 note): dedup is
 within-batch *and* against the snapshot, so one run never writes a key
@@ -166,14 +166,20 @@ def run_and_sink(
     # path and drops dependent caches — persist() would silently recompute
     # against the new snapshot and lose rows. Checkpointing truncates the
     # lineage so the appended state can't leak back into this run.
-    pinned = [
+    codes, modifiers, ndc = (
         df.localCheckpoint(eager=True)
         for df in (result.codes, result.modifiers, result.ndc)
-    ]
-    for df, path in zip(pinned, (paths["codes"], paths["modifiers"], paths["ndc"])):
+    )
+    # Append NDC, then modifiers, then codes LAST: the codes table is the
+    # crawl's progress marker (the next run crawls only codes missing
+    # from it). A crash between appends leaves those codes unmarked, so
+    # the rerun crawls them again; the NDC and modifier rows it re-derives
+    # are already in their tables and dedup on their own keys, so the
+    # replay appends nothing twice and loses nothing.
+    for df, table in ((ndc, "ndc"), (modifiers, "modifiers"), (codes, "codes")):
         write_parquet_dataset(
             with_load_date(df, load_date),
-            path=path,
+            path=paths[table],
             mode="append",
             partition_by=["load_date"],
         )
@@ -182,4 +188,4 @@ def run_and_sink(
     # session running incremental crawls would otherwise accumulate
     # one pinned extraction per run
     result.release()
-    return CrawlResult(*pinned, observation=result.observation)
+    return CrawlResult(codes, modifiers, ndc, observation=result.observation)

@@ -14,8 +14,10 @@ alternative: pages become a table the planner can reason about, with
 - **filter pushdown** — ``WHERE code = 'X'`` / ``code IN (...)`` prunes
   the fetch set *before any page is fetched* (`pushFilters`): the scan
   fetches two pages for a two-code query, not the whole crawl;
-- **one fetcher per partition** — same session-reuse discipline as the
-  mapInPandas operator (cf. SURVEY §4 "session/connection reuse").
+- **one fetcher per fetch thread, at most N per partition** — the same
+  :class:`~.fetcher.FetchPool` as the mapInPandas operator, so codes
+  are fetched N at a time in input order, each thread reusing its own
+  session (cf. SURVEY §4 "session/connection reuse").
 
 Usage::
 
@@ -35,6 +37,7 @@ crashed the chunk loop on a bad page, ``procedure_code.py:650-651``).
 
 from __future__ import annotations
 
+import functools
 from dataclasses import dataclass
 from typing import Iterator
 
@@ -101,23 +104,20 @@ class ProcedurePagesReader(DataSourceReader):
         return [_CodesPartition(c) for c in chunks]
 
     def read(self, partition: _CodesPartition) -> Iterator[tuple]:
-        from .fetcher import FixtureFetcher, HttpFetcher
+        from .fetcher import FetchPool, FixtureFetcher, HttpFetcher
 
         if self.pages_dir:
-            fetcher = FixtureFetcher(directory=self.pages_dir)
+            factory = functools.partial(FixtureFetcher, directory=self.pages_dir)
         else:
-            fetcher = HttpFetcher(base_url=self.base_url)
-        try:
-            for code in partition.codes:
-                result = fetcher.fetch(code)
-                if result.error is not None:
+            factory = functools.partial(HttpFetcher, base_url=self.base_url)
+        with FetchPool(factory) as pool:
+            for code, result in zip(partition.codes, pool.map(partition.codes)):
+                if result.html is None:
                     # "fetch_error" is the engine-wide status vocabulary
-                    # (operators/extract.py emits the same value)
+                    # (operators/extract.py classifies the same way)
                     yield (code, result.url, None, "fetch_error", result.error)
                 else:
                     yield (code, result.url, result.html, "ok", None)
-        finally:
-            fetcher.close()
 
 
 class CodeListChangedError(RuntimeError):

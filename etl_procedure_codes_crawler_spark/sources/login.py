@@ -4,7 +4,8 @@ Reference: ``crawler/src/utils/login.py:12-88`` (``aapc_login``) — a
 Selenium dance: enter email → click continue → enter password → click
 sign-in → click the re-confirm button twice → repeat the full
 email/password sequence → open the subscription menu. The engine keeps
-the *session* concern (one authenticated session per partition,
+the *session* concern (one authenticated session per fetch thread, up
+to ``FETCH_CONCURRENCY`` logging in concurrently per partition,
 ``fetcher.py``) separate from the *sequence* concern: this module
 expresses the sequence as data (a list of :class:`LoginStep`) and
 returns a ``login(session)`` callable the fetcher runs once at

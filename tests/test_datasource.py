@@ -57,6 +57,21 @@ class TestReaderPlanning:
         r = ProcedurePagesReader({"codes": ""})
         assert len(r.partitions()) == 1
 
+    def test_result_without_html_is_a_fetch_error(self, monkeypatch):
+        """Classified on ``html is None``, as the mapInPandas operator
+        does: a result with neither html nor error is not an ok row."""
+        from etl_procedure_codes_crawler_spark.sources import fetcher
+        from etl_procedure_codes_crawler_spark.sources.datasource import (
+            _CodesPartition,
+        )
+
+        monkeypatch.setattr(
+            fetcher.FixtureFetcher, "fetch", lambda self, code: fetcher.FetchResult()
+        )
+        r = ProcedurePagesReader({"pages_dir": FIXTURES})
+        rows = list(r.read(_CodesPartition(["cpt_normal"])))
+        assert rows == [("cpt_normal", None, None, "fetch_error", None)]
+
     def test_codes_discovered_from_pages_dir(self):
         r = ProcedurePagesReader({"pages_dir": FIXTURES})
         assert "cpt_normal" in r.codes and "page_404" in r.codes

@@ -16,6 +16,7 @@ FLAKY_FAILURES = 2
 
 class _Handler(BaseHTTPRequestHandler):
     flaky_hits = 0
+    status_hits: dict = {}
 
     def log_message(self, *args):  # silence test output
         pass
@@ -31,6 +32,11 @@ class _Handler(BaseHTTPRequestHandler):
                 self._respond(503, "try later")
             else:
                 self._respond(200, "<html>recovered</html>")
+        elif self.path.startswith("/status/"):
+            # /status/<n>: always answers HTTP <n>
+            hits = type(self).status_hits
+            hits[self.path] = hits.get(self.path, 0) + 1
+            self._respond(int(self.path.rsplit("/", 1)[1]), "status page")
         elif self.path == "/moved":
             self.send_response(302)
             self.send_header("Location", "/ok")
@@ -86,6 +92,24 @@ def test_retries_exhausted_returns_error_not_raise(server):
     fetcher = HttpFetcher(base_url=server, max_retries=2, backoff=0.01)
     result = fetcher.fetch("always-500")
     assert result.html is None and "500" in result.error
+    fetcher.close()
+
+
+@pytest.mark.parametrize("status", [400, 401, 403, 410])
+def test_permanent_client_error_is_not_retried(server, status):
+    fetcher = HttpFetcher(base_url=server, max_retries=3, backoff=0.01)
+    result = fetcher.fetch(f"status/{status}")
+    assert result.html is None and str(status) in result.error
+    assert _Handler.status_hits[f"/status/{status}"] == 1
+    fetcher.close()
+
+
+@pytest.mark.parametrize("status", [408, 429, 502])
+def test_transient_status_is_retried(server, status):
+    fetcher = HttpFetcher(base_url=server, max_retries=3, backoff=0.001)
+    result = fetcher.fetch(f"status/{status}")
+    assert result.html is None and str(status) in result.error
+    assert _Handler.status_hits[f"/status/{status}"] == 3
     fetcher.close()
 
 

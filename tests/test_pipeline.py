@@ -5,6 +5,9 @@ from __future__ import annotations
 import functools
 import os
 
+import pytest
+
+from etl_procedure_codes_crawler_spark.plans import pipeline
 from etl_procedure_codes_crawler_spark.plans.pipeline import (
     run_and_sink,
     run_crawl_pipeline,
@@ -94,6 +97,52 @@ def test_incremental_new_code_appends_only_new(spark, tmp_path):
     stored = spark.read.parquet(f"{warehouse}/procedure_ndc")
     # 2 NDC rows from 99213 (run 1) + 1 from J0120 (run 2)
     assert stored.count() == 3
+
+
+def _warehouse_rows(spark, warehouse):
+    return {
+        table: sorted(map(tuple, spark.read.parquet(f"{warehouse}/{table}").collect()))
+        for table in ("procedure_codes", "procedure_modifiers", "procedure_ndc")
+    }
+
+
+@pytest.fixture(scope="module")
+def clean_warehouse(spark, tmp_path_factory):
+    warehouse = str(tmp_path_factory.mktemp("clean") / "wh")
+    codes = spark.createDataFrame([(c,) for c in RAW_CODES], CODES_INPUT_SCHEMA)
+    run_and_sink(spark, codes, _factory, warehouse, load_date="20260813")
+    return _warehouse_rows(spark, warehouse)
+
+
+class _InjectedCrash(RuntimeError):
+    pass
+
+
+@pytest.mark.parametrize("crash_at", [1, 2, 3])
+def test_crash_between_appends_recovers_on_rerun(
+    spark, tmp_path, monkeypatch, clean_warehouse, crash_at
+):
+    """A crash at any of the three appends, then a rerun of the same
+    input, leaves the warehouse the no-crash run leaves: no table loses
+    rows and none gets a key twice."""
+    warehouse = str(tmp_path / "wh")
+    codes = spark.createDataFrame([(c,) for c in RAW_CODES], CODES_INPUT_SCHEMA)
+    write = pipeline.write_parquet_dataset
+    calls = []
+
+    def crashing_write(*args, **kwargs):
+        calls.append(kwargs["path"])
+        if len(calls) == crash_at:
+            raise _InjectedCrash(f"crash at append {crash_at}")
+        return write(*args, **kwargs)
+
+    monkeypatch.setattr(pipeline, "write_parquet_dataset", crashing_write)
+    with pytest.raises(_InjectedCrash):
+        run_and_sink(spark, codes, _factory, warehouse, load_date="20260813")
+    monkeypatch.setattr(pipeline, "write_parquet_dataset", write)
+
+    run_and_sink(spark, codes, _factory, warehouse, load_date="20260813")
+    assert _warehouse_rows(spark, warehouse) == clean_warehouse
 
 
 class TestObservedMetrics:
