@@ -9,7 +9,7 @@ Spark-first notes:
 
 - ``left_anti`` lets Catalyst choose broadcast-hash-anti when the
   existing-keys side is small; we expose ``broadcast_existing`` to
-  force it (the snapshot's *distinct keys* are usually tiny relative
+  force it (the snapshot's key column is usually tiny relative
   to the fact side even at 100 TB).
 - The reference never dedups *within* the new batch and never dedups
   against rows written earlier in the same run; ``incremental_new_rows``
@@ -34,9 +34,11 @@ def anti_join_on_key(
     Equality-key left anti-join (J1 at ``procedure_code.py:763-767``,
     J2 at ``:769-772``). Only the key column of ``existing`` is needed:
     projecting it first lets the scan prune every other column and
-    makes the broadcast side as small as possible.
+    makes the broadcast side as small as possible. Duplicate or NULL
+    keys there do not change the rows, so deduplicating them (a shuffle)
+    would buy nothing; a snapshot's keys are unique anyway.
     """
-    existing_keys = existing.select(key).dropDuplicates([key])
+    existing_keys = existing.select(key)
     if broadcast_existing:
         existing_keys = F.broadcast(existing_keys)
     return new.join(existing_keys, on=key, how="left_anti")

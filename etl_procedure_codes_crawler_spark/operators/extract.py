@@ -22,8 +22,8 @@ Design points for 100 TB scale:
 - failures become ``status``/``error`` columns, not exceptions, so one
   bad page costs one row, not a task retry storm;
 - fan-out to the three output relations is ``select``/``explode`` —
-  Catalyst handles it JVM-side, and the wide frame is only traversed
-  once per output (cache it if all three sinks run in one job).
+  Catalyst handles it JVM-side; the pipeline checkpoints the wide
+  frame once, so the three outputs do not fetch again.
 """
 
 from __future__ import annotations

@@ -3,15 +3,16 @@
 Reference flow (``crawler/src/procedure_code.py:677-815``): read codes
 from Athena → clean → serial chunked crawl with a global browser →
 pandas concat accumulation → `isin` anti-join vs the *initial* snapshot
-→ per-chunk S3 appends. The Spark translation crosses the
-driver/executor boundary exactly once (at ``mapInPandas``); everything
-else is declarative and Catalyst-planned:
+→ per-chunk S3 appends, one output after another. The Spark translation
+crosses the driver/executor boundary exactly once (at ``mapInPandas``)
+and materializes the crawl exactly once:
 
     codes ─ clean(P1-P3) ─ anti-join vs existing codes (J3)
           ─ mapInPandas(extract, fetcher/fetch thread)
-          ─ split into 3 relations
-          ─ incremental dedup (J1/J2) per relation
-          ─ append sinks (K1), partitioned by load_date; codes last
+          ─ localCheckpoint, one partition per core
+          ├─ ndc       ─ dedup vs snapshot (J1) ─ checkpoint ─ append ┐ in
+          ├─ modifiers ─ dedup vs snapshot (J2) ─ checkpoint ─ append ┘ parallel
+          └─ codes ─────────────────────────────────────────── append  last
 
 Improvement over the reference, by design (SURVEY §2.4 note): dedup is
 within-batch *and* against the snapshot, so one run never writes a key
@@ -20,10 +21,12 @@ twice even when the same modifier appears on many pages.
 
 from __future__ import annotations
 
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.util import inheritable_thread_target
 
 from ..operators.cleaning import clean_codes
 from ..operators.dedup import anti_join_on_key, incremental_new_rows
@@ -43,25 +46,14 @@ class CrawlResult:
     """The three deduplicated new-row relations produced by one run.
 
     ``observation`` carries extraction health metrics (page counts by
-    status) once any action has executed — the in-plan replacement for
-    the reference's 60+ log lines (SURVEY §5): metrics ride the job
-    itself, no second pass over the data."""
+    status) — the in-plan replacement for the reference's 60+ log lines
+    (SURVEY §5): metrics ride the extraction job itself, no second pass
+    over the data."""
 
     codes: DataFrame
     modifiers: DataFrame
     ndc: DataFrame
     observation: Observation | None = field(default=None, compare=False)
-    #: the shared persisted extraction feeding all three relations —
-    #: call :meth:`release` once the outputs are materialized, or the
-    #: cached page payloads stay pinned for the session's lifetime
-    cached_extraction: DataFrame | None = field(default=None, compare=False)
-
-    def release(self) -> None:
-        """Drop the shared extraction cache (safe after the three
-        outputs are checkpointed/written; a later collect on
-        un-checkpointed outputs would refetch)."""
-        if self.cached_extraction is not None:
-            self.cached_extraction.unpersist()
 
     @property
     def extract_metrics(self) -> dict:
@@ -81,8 +73,13 @@ def run_crawl_pipeline(
     base_url: str = "",
     batch_partitions: int | None = None,
 ) -> CrawlResult:
-    """Plan the full crawl; nothing executes until the result is sunk.
+    """Crawl the codes missing from ``existing_codes`` and plan the
+    three outputs over that one crawl.
 
+    The fetch runs here: the extraction is checkpointed eagerly in
+    ``batch_partitions`` partitions (default: one per core; left to AQE,
+    a small batch coalesces into one fetch task). ``modifiers`` and
+    ``ndc`` still read their snapshots when they execute.
     ``existing_*`` default to typed empty relations (first run).
     """
     if existing_codes is None:
@@ -101,7 +98,7 @@ def run_crawl_pipeline(
         to_crawl,
         fetcher_factory,
         base_url=base_url,
-        batch_partitions=batch_partitions,
+        batch_partitions=batch_partitions or spark.sparkContext.defaultParallelism,
     )
     observation = Observation("extract")
     extracted = extracted.observe(
@@ -112,20 +109,16 @@ def run_crawl_pipeline(
         F.count(
             F.when(F.col("status").isin("fetch_error", "parse_error"), 1)
         ).alias("n_errors"),
-    )
-    # Three sinks consume the same extraction — materialize it once.
-    extracted = extracted.persist()
+    ).localCheckpoint(eager=True)
 
-    new_codes, new_modifiers, new_ndc = split_procedure_outputs(extracted)
-
+    codes, modifiers, ndc = split_procedure_outputs(extracted)
+    # codes need no dedup: each extracted row keeps its input code, and
+    # the input is distinct and absent from the snapshot (to_crawl)
     return CrawlResult(
-        codes=anti_join_on_key(new_codes, existing_codes, "code"),
-        modifiers=incremental_new_rows(
-            new_modifiers, existing_modifiers, "modifier"
-        ),
-        ndc=incremental_new_rows(new_ndc, existing_ndc, "ndc_alternate_id"),
+        codes=codes,
+        modifiers=incremental_new_rows(modifiers, existing_modifiers, "modifier"),
+        ndc=incremental_new_rows(ndc, existing_ndc, "ndc_alternate_id"),
         observation=observation,
-        cached_extraction=extracted,
     )
 
 
@@ -140,52 +133,50 @@ def run_and_sink(
     """End-to-end incremental run against a parquet warehouse directory:
     reads the three snapshot tables (empty on first run), crawls, and
     appends new rows partitioned by ``load_date`` (K1 semantics)."""
-    paths = {
-        "codes": f"{warehouse}/procedure_codes",
-        "modifiers": f"{warehouse}/procedure_modifiers",
-        "ndc": f"{warehouse}/procedure_ndc",
+    schemas = {
+        "codes": PROCEDURE_CODES_SCHEMA,
+        "modifiers": PROCEDURE_MODIFIERS_SCHEMA,
+        "ndc": PROCEDURE_NDC_SCHEMA,
     }
+    paths = {table: f"{warehouse}/procedure_{table}" for table in schemas}
     result = run_crawl_pipeline(
         spark,
         codes_input,
         fetcher_factory,
-        existing_codes=read_table_or_empty(
-            spark, paths["codes"], PROCEDURE_CODES_SCHEMA
-        ),
-        existing_modifiers=read_table_or_empty(
-            spark, paths["modifiers"], PROCEDURE_MODIFIERS_SCHEMA
-        ),
-        existing_ndc=read_table_or_empty(
-            spark, paths["ndc"], PROCEDURE_NDC_SCHEMA
-        ),
         base_url=base_url,
+        **{
+            f"existing_{table}": read_table_or_empty(spark, paths[table], schema)
+            for table, schema in schemas.items()
+        },
     )
-    # Pin ALL results BEFORE the first append: every result's lineage
-    # reads the snapshots the appends are about to extend (the extraction
-    # itself anti-joins the codes snapshot), and an append refreshes the
-    # path and drops dependent caches — persist() would silently recompute
-    # against the new snapshot and lose rows. Checkpointing truncates the
-    # lineage so the appended state can't leak back into this run.
-    codes, modifiers, ndc = (
-        df.localCheckpoint(eager=True)
-        for df in (result.codes, result.modifiers, result.ndc)
-    )
-    # Append NDC, then modifiers, then codes LAST: the codes table is the
-    # crawl's progress marker (the next run crawls only codes missing
-    # from it). A crash between appends leaves those codes unmarked, so
-    # the rerun crawls them again; the NDC and modifier rows it re-derives
-    # are already in their tables and dedup on their own keys, so the
-    # replay appends nothing twice and loses nothing.
-    for df, table in ((ndc, "ndc"), (modifiers, "modifiers"), (codes, "codes")):
+
+    def append(df: DataFrame, table: str) -> None:
         write_parquet_dataset(
             with_load_date(df, load_date),
             path=paths[table],
             mode="append",
             partition_by=["load_date"],
         )
-    # outputs are checkpointed and written — the shared extraction
-    # cache (full page payloads) is now dead weight; a long-lived
-    # session running incremental crawls would otherwise accumulate
-    # one pinned extraction per run
-    result.release()
-    return CrawlResult(codes, modifiers, ndc, observation=result.observation)
+
+    # Each dedup reads the snapshot its own append extends: checkpoint it
+    # first, or the returned relation recomputes against the extended
+    # snapshot and comes back empty. No append touches another branch's
+    # input, so the branches run side by side, in the caller's job group.
+    @inheritable_thread_target(spark)
+    def checkpoint_and_append(df: DataFrame, table: str) -> DataFrame:
+        df = df.localCheckpoint(eager=True)
+        append(df, table)
+        return df
+
+    with ThreadPoolExecutor(max_workers=2) as pool:
+        ndc = pool.submit(checkpoint_and_append, result.ndc, "ndc")
+        modifiers = pool.submit(checkpoint_and_append, result.modifiers, "modifiers")
+        ndc, modifiers = ndc.result(), modifiers.result()
+    # Codes LAST, after both branches succeed: the codes table is the
+    # crawl's progress marker (the next run crawls only codes missing
+    # from it), so after a crash before this append the rerun crawls them
+    # again, and the NDC and modifier rows it re-derives dedup on their
+    # own keys: nothing is appended twice or lost. Codes read only the
+    # checkpointed extraction, so they need no checkpoint of their own.
+    append(result.codes, "codes")
+    return CrawlResult(result.codes, modifiers, ndc, observation=result.observation)

@@ -65,6 +65,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
+from pyspark.util import inheritable_thread_target
 
 from ..llm import kmv as KV
 from ..llm import passagefreq as PF
@@ -572,9 +573,10 @@ def stream_ingest_unified(
 
         from concurrent.futures import ThreadPoolExecutor
 
+        # local properties are JVM-thread-local: copy this thread's (the
+        # stream's job group) into each commit thread, then label its jobs
+        @inheritable_thread_target(spark)
         def _run_commit(fn) -> None:
-            # job descriptions are JVM-thread-local — label each
-            # commit thread's jobs independently
             spark.sparkContext.setJobDescription(
                 f"unified b{batch_id}: store commits"
             )

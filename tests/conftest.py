@@ -2,6 +2,7 @@ from __future__ import annotations
 
 import os
 import sys
+import uuid
 
 import pytest
 
@@ -63,3 +64,43 @@ def sf_dir() -> str:
 @pytest.fixture()
 def fixtures_dir() -> str:
     return os.path.join(os.path.dirname(os.path.abspath(__file__)), "fixtures")
+
+
+@pytest.fixture()
+def jobs_started_by(spark):
+    """``jobs_started_by(fn, group)`` runs ``fn`` under job group
+    ``group`` and returns the ids of every Spark job started meanwhile,
+    on any thread. Job ids are sequential, so two marker jobs, each in a
+    group of its own, bracket them."""
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+
+    def marker() -> list[int]:
+        group = f"marker-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, "marker")
+        spark.range(1).collect()
+        return tracker.getJobIdsForGroup(group)
+
+    def run(fn, group: str) -> range:
+        first = max(marker())
+        sc.setJobGroup(group, group)
+        fn()
+        return range(first + 1, min(marker()))
+
+    yield run
+    for key in ("jobGroup.id", "job.description", "job.interruptOnCancel"):
+        sc.setLocalProperty(f"spark.{key}", None)
+
+
+@pytest.fixture()
+def module_pickled_by_value(request):
+    """Pickle the requesting test module by value for the test's
+    duration, so executors rebuild a fetcher class defined there
+    without importing the module."""
+    from pyspark import cloudpickle
+
+    cloudpickle.register_pickle_by_value(request.module)
+    try:
+        yield
+    finally:
+        cloudpickle.unregister_pickle_by_value(request.module)

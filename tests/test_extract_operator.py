@@ -319,15 +319,8 @@ class _MarkedFetcher:
 
 
 @pytest.fixture()
-def marker_dir(tmp_path):
-    from pyspark import cloudpickle
-
-    module = sys.modules[__name__]
-    cloudpickle.register_pickle_by_value(module)
-    try:
-        yield str(tmp_path)
-    finally:
-        cloudpickle.unregister_pickle_by_value(module)
+def marker_dir(tmp_path, module_pickled_by_value):
+    return str(tmp_path)
 
 
 def _markers(marker_dir, kind):

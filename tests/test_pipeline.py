@@ -4,6 +4,7 @@ from __future__ import annotations
 
 import functools
 import os
+from dataclasses import dataclass
 
 import pytest
 
@@ -118,31 +119,110 @@ class _InjectedCrash(RuntimeError):
     pass
 
 
-@pytest.mark.parametrize("crash_at", [1, 2, 3])
+@pytest.mark.parametrize(
+    "crash_tables",
+    [
+        {"procedure_ndc"},
+        {"procedure_modifiers"},
+        {"procedure_codes"},
+        {"procedure_ndc", "procedure_modifiers"},
+    ],
+    ids=["ndc", "modifiers", "codes", "ndc+modifiers"],
+)
 def test_crash_between_appends_recovers_on_rerun(
-    spark, tmp_path, monkeypatch, clean_warehouse, crash_at
+    spark, tmp_path, monkeypatch, clean_warehouse, crash_tables
 ):
-    """A crash at any of the three appends, then a rerun of the same
-    input, leaves the warehouse the no-crash run leaves: no table loses
-    rows and none gets a key twice."""
+    """A crash at any append, or at both concurrent ones, then a rerun
+    of the same input, leaves the warehouse the no-crash run leaves: no
+    table loses rows and none gets a key twice. The crash is keyed by
+    table, not by call order: NDC and modifiers append concurrently."""
     warehouse = str(tmp_path / "wh")
     codes = spark.createDataFrame([(c,) for c in RAW_CODES], CODES_INPUT_SCHEMA)
     write = pipeline.write_parquet_dataset
-    calls = []
 
     def crashing_write(*args, **kwargs):
-        calls.append(kwargs["path"])
-        if len(calls) == crash_at:
-            raise _InjectedCrash(f"crash at append {crash_at}")
+        if os.path.basename(kwargs["path"]) in crash_tables:
+            raise _InjectedCrash(f"crash at the {kwargs['path']} append")
         return write(*args, **kwargs)
 
     monkeypatch.setattr(pipeline, "write_parquet_dataset", crashing_write)
     with pytest.raises(_InjectedCrash):
         run_and_sink(spark, codes, _factory, warehouse, load_date="20260813")
     monkeypatch.setattr(pipeline, "write_parquet_dataset", write)
+    if "procedure_codes" not in crash_tables:
+        # the progress marker is written only after both other appends
+        assert not os.path.exists(f"{warehouse}/procedure_codes/load_date=20260813")
 
     run_and_sink(spark, codes, _factory, warehouse, load_date="20260813")
     assert _warehouse_rows(spark, warehouse) == clean_warehouse
+
+
+def test_every_job_stays_in_the_callers_job_group(spark, tmp_path, jobs_started_by):
+    """The concurrent sink branches run their jobs in the caller's job
+    group, so ``cancelJobGroup`` and job-group accounting reach them."""
+    codes = spark.createDataFrame([(c,) for c in RAW_CODES], CODES_INPUT_SCHEMA)
+    group = "crawl-under-test"
+    jobs = jobs_started_by(
+        lambda: run_and_sink(spark, codes, _factory, str(tmp_path / "wh")), group
+    )
+    in_group = set(spark.sparkContext.statusTracker().getJobIdsForGroup(group))
+    assert jobs and set(jobs) <= in_group
+
+
+@dataclass
+class _PartitionRecordingFetcher(FixtureFetcher):
+    """A fixture fetcher that leaves one marker file per fetch, named
+    after the fetching task's partition (pickled by value: see
+    ``module_pickled_by_value``)."""
+
+    record_dir: str = ""
+
+    def fetch(self, code):
+        from pyspark import TaskContext
+
+        partition = TaskContext.get().partitionId()
+        open(os.path.join(self.record_dir, f"{partition}-{code}"), "w").close()
+        return super().fetch(code)
+
+
+def _crawl_recording_partitions(spark, tmp_path, batch_partitions):
+    """Crawl 40 codes (4 with fixture pages) and return the three
+    outputs' sorted rows and the partitions that fetched."""
+    out = tmp_path / f"parts-{batch_partitions}"
+    out.mkdir()
+    codes = spark.createDataFrame(
+        [(c,) for c in [*RAW_CODES, *(f"F{i:02d}" for i in range(36))]],
+        CODES_INPUT_SCHEMA,
+    )
+    factory = functools.partial(
+        _PartitionRecordingFetcher, pages=_pages(), urls=_URLS, record_dir=str(out)
+    )
+    result = run_crawl_pipeline(
+        spark, codes, factory, batch_partitions=batch_partitions
+    )
+    rows = [
+        sorted(map(tuple, df.collect()))
+        for df in (result.codes, result.modifiers, result.ndc)
+    ]
+    return rows, {int(name.split("-", 1)[0]) for name in os.listdir(out)}
+
+
+def test_extraction_fetches_in_one_partition_per_core(
+    spark, tmp_path, module_pickled_by_value
+):
+    """A 40-code batch is small enough for AQE to coalesce its shuffle
+    into one partition, yet the fetch runs in one partition per core by
+    default and in ``batch_partitions`` when given; the rows do not
+    depend on the count."""
+    cores = spark.sparkContext.defaultParallelism
+    default_rows, default_parts = _crawl_recording_partitions(spark, tmp_path, None)
+    assert default_parts == set(range(cores))
+    given_rows, given_parts = _crawl_recording_partitions(spark, tmp_path, 3)
+    assert given_parts == {0, 1, 2}
+    single_rows, single_parts = _crawl_recording_partitions(spark, tmp_path, 1)
+    assert single_parts == {0}
+    assert default_rows == single_rows == given_rows
+    assert [len(rows) for rows in default_rows] == [3, 2, 3]
 
 
 class TestObservedMetrics:

@@ -253,3 +253,36 @@ class TestCrashReplay:
                   ckpt=str(tmp_path / "ckB"))
         got = _state(spark, root_b)
         assert got == ref
+
+
+def test_store_commit_jobs_stay_in_the_streams_job_group(
+    spark, tmp_path, jobs_started_by
+):
+    """One micro-batch's store commits run on a thread pool; their jobs
+    carry the stream thread's job group (the query's run id), like every
+    other job of the batch."""
+    docs = spark.createDataFrame(
+        [(i, f"solo{i} words{i} here{i} now{i}", "s9") for i in range(1, 4)],
+        "doc_id long, text string, source string",
+    )
+    src = _stage(docs, tmp_path)
+    root = str(tmp_path / "g")
+    os.makedirs(root)
+    U.create_unified_stores(spark, os.path.join(root, "stores"), block=3,
+                            kmv_k=16, kmv_shingle_k=3)
+    runs = []
+
+    def one_batch():
+        runs.append(U.stream_ingest_unified(
+            spark, src, docs.schema, os.path.join(root, "wh"),
+            os.path.join(root, "stores"), str(tmp_path / "ck"), budgets={},
+            min_doc_freq=2, gate_shuffle_partitions=4,
+        ))
+        runs[0].awaitTermination(300)
+        runs[0].stop()
+
+    jobs = jobs_started_by(one_batch, "caller")
+    tracker = spark.sparkContext.statusTracker()
+    stream_jobs = set(tracker.getJobIdsForGroup(str(runs[0].runId)))
+    caller_jobs = set(tracker.getJobIdsForGroup("caller"))
+    assert stream_jobs and set(jobs) <= stream_jobs | caller_jobs
