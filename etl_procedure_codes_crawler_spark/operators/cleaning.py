@@ -42,17 +42,12 @@ def clean_key_column(df: DataFrame, column: str = "code") -> DataFrame:
     )
 
 
-def clean_codes(
-    df: DataFrame, column: str = "code", distinct: bool = True
-) -> DataFrame:
+def clean_codes(df: DataFrame, column: str = "code") -> DataFrame:
     """Full codes-input cleaning: P1-P3 plus within-batch dedup.
 
-    ``distinct=True`` adds ``dropDuplicates`` on the key — an
-    intentional improvement over the reference, which only dedups
-    against the existing snapshot, never within the incoming batch
-    (SURVEY §2.4 note on ``procedure_code.py:763-772``).
+    The ``dropDuplicates`` on the key is an intentional improvement over
+    the reference, which only dedups against the existing snapshot,
+    never within the incoming batch (SURVEY §2.4 note on
+    ``procedure_code.py:763-772``).
     """
-    out = clean_key_column(df, column)
-    if distinct:
-        out = out.dropDuplicates([column])
-    return out
+    return clean_key_column(df, column).dropDuplicates([column])

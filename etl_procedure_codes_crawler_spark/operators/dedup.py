@@ -7,10 +7,10 @@ there with an O(n·m) pandas ``isin``.
 
 Spark-first notes:
 
-- ``left_anti`` lets Catalyst choose broadcast-hash-anti when the
-  existing-keys side is small; we expose ``broadcast_existing`` to
-  force it (the snapshot's key column is usually tiny relative
-  to the fact side even at 100 TB).
+- the existing side is always broadcast, forcing broadcast-hash-anti:
+  the snapshot's key column is usually tiny relative to the fact side
+  even at 100 TB, and the static planner never broadcasts on its own
+  (``session.py`` turns its size-based broadcast off).
 - The reference never dedups *within* the new batch and never dedups
   against rows written earlier in the same run; ``incremental_new_rows``
   fixes both (per-batch ``dropDuplicates`` + caller unions current-run
@@ -27,7 +27,6 @@ def anti_join_on_key(
     new: DataFrame,
     existing: DataFrame,
     key: str,
-    broadcast_existing: bool = True,
 ) -> DataFrame:
     """Rows of ``new`` whose ``key`` is absent from ``existing``.
 
@@ -38,17 +37,13 @@ def anti_join_on_key(
     keys there do not change the rows, so deduplicating them (a shuffle)
     would buy nothing; a snapshot's keys are unique anyway.
     """
-    existing_keys = existing.select(key)
-    if broadcast_existing:
-        existing_keys = F.broadcast(existing_keys)
-    return new.join(existing_keys, on=key, how="left_anti")
+    return new.join(F.broadcast(existing.select(key)), on=key, how="left_anti")
 
 
 def incremental_new_rows(
     new: DataFrame,
     existing: DataFrame,
     key: str,
-    broadcast_existing: bool = True,
 ) -> DataFrame:
     """Within-batch distinct + anti-join vs snapshot.
 
@@ -61,4 +56,4 @@ def incremental_new_rows(
         new.filter(F.col(key).isNotNull())
         .dropDuplicates([key])
     )
-    return anti_join_on_key(batch, existing, key, broadcast_existing)
+    return anti_join_on_key(batch, existing, key)

@@ -49,11 +49,11 @@ def extract_procedure_pages(
     codes: DataFrame,
     fetcher_factory: FetcherFactory,
     base_url: str = "",
-    code_column: str = "code",
     batch_partitions: int | None = None,
     concurrency: int = FETCH_CONCURRENCY,
 ) -> DataFrame:
-    """Fetch+parse every code; returns the flat extraction relation.
+    """Fetch+parse every code in the ``code`` column of ``codes``;
+    returns the flat extraction relation.
 
     ``batch_partitions`` repartitions the codes first — the analog of
     the reference's 200-codes-per-chunk scheduling
@@ -62,7 +62,7 @@ def extract_procedure_pages(
     ``concurrency`` bounds the fetches in flight per partition; the
     rows do not depend on it.
     """
-    source = codes.select(F.col(code_column).alias("code"))
+    source = codes.select("code")
     if batch_partitions:
         source = source.repartition(batch_partitions)
 

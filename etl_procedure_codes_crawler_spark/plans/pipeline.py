@@ -53,13 +53,11 @@ class CrawlResult:
     codes: DataFrame
     modifiers: DataFrame
     ndc: DataFrame
-    observation: Observation | None = field(default=None, compare=False)
+    observation: Observation = field(compare=False)
 
     @property
     def extract_metrics(self) -> dict:
         """Page counts by outcome; blocks until an action has run."""
-        if self.observation is None:
-            return {}
         return dict(self.observation.get)
 
 

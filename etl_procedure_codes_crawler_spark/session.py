@@ -77,9 +77,6 @@ def get_spark(
         # no-op for sessions created by this factory.
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.ansi.enabled", "true")
-        # Python DataSource filter pushdown (sources/datasource.py):
-        # lets pushFilters prune the crawl set before any fetch.
-        .config("spark.sql.python.filterPushdown.enabled", "true")
         # Robustness to parquet files carrying TIMESTAMP(NANOS), which
         # Spark otherwise rejects outright: read as long; the actual
         # dtype is then inspected and normalized at the source
@@ -87,20 +84,7 @@ def get_spark(
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.ui.enabled", os.environ.get("SPARK_GRAFT_UI", "false"))
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
-        # REVERTED (round 13, verdict r12 #6): round 12's unmeasured
-        # JVM twiddles — spark.sql.codegen.cache.maxEntries=10000 and
-        # -XX:ReservedCodeCacheSize=512m — were A/B-benched this round
-        # and removed. Raw headline totals favored ON (162.7 vs
-        # 216.8 s) but the host yardstick moved 0.88 → 1.32 between
-        # the arms (box-normalized the OFF arm was FASTER), and only
-        # the ON arm exhibited a 6x late-JVM isolation-recheck decay —
-        # consistent with the 10000-entry cache PINNING every
-        # generated class (their compiled nmethods can never be
-        # evicted, raising JIT code-cache pressure late in a ~200-plan
-        # session). No reproducible win + one plausible harm + the
-        # static-conf first-session-only caveat (ADVICE r12) = revert
-        # per guide §1.2 (configuration last, only with measurement).
-        # Numbers in OPTIMIZATION_r13.md.
+        # Codegen/JIT code-cache flags gave no reproducible gain (OPTIMIZATION_r13.md).
     )
     for key, value in (extra_conf or {}).items():
         builder = builder.config(key, value)

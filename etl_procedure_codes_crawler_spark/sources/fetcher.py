@@ -9,9 +9,8 @@ Each partition runs a :class:`FetchPool` of at most
 fetcher from a picklable *factory* — one fetcher per fetch thread, at
 most N = ``FETCH_CONCURRENCY`` per partition:
 
-- :class:`FixtureFetcher` — serves HTML from an in-memory dict or a
-  directory of ``<code>.html`` files; used in tests and the correctness
-  harness (no network, no browser).
+- :class:`FixtureFetcher` — serves HTML from an in-memory dict; used
+  in tests and the correctness harness (no network, no browser).
 - :class:`HttpFetcher` — ``requests``-based with bounded retries and an
   optional login hook; one authenticated session per fetch thread
   replaces the reference's global browser session (SURVEY §7 "what's
@@ -31,7 +30,6 @@ crashing the partition (the reference's bare ``return None`` at
 from __future__ import annotations
 
 import contextlib
-import os
 import threading
 import time
 from concurrent.futures import ThreadPoolExecutor
@@ -116,14 +114,12 @@ class FetchPool:
 
 @dataclass
 class FixtureFetcher:
-    """Serves canned HTML — from ``pages`` and/or ``<code>.html`` files
-    under ``directory``. ``urls`` optionally maps a code to the final
-    URL the live site would land on (drives CPT/HCPCS classification in
-    tests). Unknown codes are a fetch error (covers the network-failure
-    path)."""
+    """Serves canned HTML from ``pages`` (code → html). ``urls``
+    optionally maps a code to the final URL the live site would land on
+    (drives CPT/HCPCS classification in tests). Unknown codes are a
+    fetch error (covers the network-failure path)."""
 
     pages: dict[str, str] = field(default_factory=dict)
-    directory: str | None = None
     urls: dict[str, str] = field(default_factory=dict)
 
     def fetch(self, code: str) -> FetchResult:
@@ -131,11 +127,6 @@ class FixtureFetcher:
         url = self.urls.get(code)
         if code in self.pages:
             return FetchResult(html=self.pages[code], url=url)
-        if self.directory:
-            path = os.path.join(self.directory, f"{code}.html")
-            if os.path.exists(path):
-                with open(path, encoding="utf-8") as handle:
-                    return FetchResult(html=handle.read(), url=url)
         return FetchResult(error=f"no fixture for code {code!r}", url=url)
 
     def close(self) -> None:

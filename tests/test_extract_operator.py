@@ -61,10 +61,14 @@ _URLS = {
 }
 
 _PAGES = _load_pages()
-_factory = functools.partial(FixtureFetcher, pages=_PAGES, urls=_URLS)
+# NOHTML fetches a result with neither html nor error, which the Fetcher
+# contract makes a fetch error
+_factory = functools.partial(
+    FixtureFetcher, pages={**_PAGES, "NOHTML": None}, urls=_URLS
+)
 
 
-CODES = ["99213", "J0120", "XXXXX", "J9999", "0001M", "0042T", "NOFIX"]
+CODES = ["99213", "J0120", "XXXXX", "J9999", "0001M", "0042T", "NOFIX", "NOHTML"]
 
 
 @pytest.fixture(scope="module")
@@ -90,6 +94,7 @@ def test_statuses(extracted):
         "0001M": "deleted",
         "0042T": "ok",
         "NOFIX": "fetch_error",
+        "NOHTML": "fetch_error",
     }
 
 

@@ -163,54 +163,6 @@ class TestErrorAudit:
         assert written[0].run_id == "r1"
 
 
-class TestSqlTemplates:
-    """S8: parameterized SQL replaces the reference's str.format
-    interpolation (procedure_code.py:686-701)."""
-
-    def test_named_parameter_binding(self, spark, sf_dir, tmp_path):
-        from etl_procedure_codes_crawler_spark.sources.parquet import read_testdata
-        from etl_procedure_codes_crawler_spark.sources.sqltemplate import (
-            run_sql_template,
-        )
-
-        read_testdata(spark, sf_dir, "orders").createOrReplaceTempView("tpl_orders")
-        try:
-            sql_file = tmp_path / "codes.sql"
-            sql_file.write_text(
-                "SELECT o_orderkey FROM tpl_orders"
-                " WHERE o_orderdate >= :logical_date AND o_totalprice > :floor"
-            )
-            out = run_sql_template(
-                spark,
-                str(sql_file),
-                {"logical_date": "1999-01-01", "floor": 1000.0},
-                from_file=True,
-            )
-            n = out.count()
-            assert n > 0
-            direct = spark.sql(
-                "SELECT count(*) AS n FROM tpl_orders WHERE"
-                " o_orderdate >= '1999-01-01' AND o_totalprice > 1000.0"
-            ).collect()[0].n
-            assert n == direct
-        finally:
-            spark.catalog.dropTempView("tpl_orders")
-
-    def test_malicious_value_stays_a_value(self, spark):
-        from etl_procedure_codes_crawler_spark.sources.sqltemplate import (
-            run_sql_template,
-        )
-
-        # with .format this would change the query shape; as a bound
-        # parameter it's just a string that matches nothing
-        rows = run_sql_template(
-            spark,
-            "SELECT 1 AS x WHERE 'safe' = :v",
-            {"v": "'); DROP TABLE t --"},
-        ).collect()
-        assert rows == []
-
-
 class TestEmbeddedDerbyRoundTrip:
     """K3/S4 against a REAL JVM-reachable database: Apache Derby runs
     embedded inside the Spark JVM (its jars ship with Spark), so the

@@ -229,24 +229,19 @@ class TestObservedMetrics:
     def test_extract_metrics_ride_the_job(self, spark, fixtures_dir):
         """Observation metrics come from the extraction pass itself —
         no second job — and reconcile with the input code count."""
-        import functools
-        import os
-
-        from etl_procedure_codes_crawler_spark.plans.pipeline import (
-            run_crawl_pipeline,
-        )
-        from etl_procedure_codes_crawler_spark.schemas import CODES_INPUT_SCHEMA
-        from etl_procedure_codes_crawler_spark.sources.fetcher import FixtureFetcher
-
-        pages_dir = fixtures_dir
-        codes = [os.path.splitext(f)[0] for f in os.listdir(pages_dir) if f.endswith(".html")]
+        pages = {}
+        for name in os.listdir(fixtures_dir):
+            if name.endswith(".html"):
+                with open(os.path.join(fixtures_dir, name), encoding="utf-8") as handle:
+                    pages[os.path.splitext(name)[0]] = handle.read()
+        codes = list(pages)
         codes_df = spark.createDataFrame(
             [(c,) for c in codes] + [("MISSING1",)], CODES_INPUT_SCHEMA
         )
         result = run_crawl_pipeline(
             spark,
             codes_df,
-            functools.partial(FixtureFetcher, directory=pages_dir),
+            functools.partial(FixtureFetcher, pages=pages),
         )
         result.codes.count()  # any action over the observed plan
         metrics = result.extract_metrics

@@ -1,5 +1,4 @@
-"""Scale-path operators: salted aggregation/join equivalence and
-bucketed shuffle-free joins."""
+"""Scale-path operators: salted aggregation/join equivalence."""
 
 from __future__ import annotations
 
@@ -13,15 +12,7 @@ from etl_procedure_codes_crawler_spark.operators.skew import (
     top_keys,
     with_salt,
 )
-from etl_procedure_codes_crawler_spark.sinks.bucketed import (
-    bucketed_join_ready,
-    write_bucketed_table,
-)
 from etl_procedure_codes_crawler_spark.sources.parquet import read_testdata
-
-
-def _plan(df) -> str:
-    return df._jdf.queryExecution().executedPlan().toString()
 
 
 class TestSaltedAgg:
@@ -125,45 +116,3 @@ class TestSaltedJoin:
         counts = [r.n_rows for r in rows]
         assert counts == sorted(counts, reverse=True)
 
-
-class TestBucketedJoin:
-    def test_bucketed_join_has_no_exchange(self, spark, sf_dir):
-        orders = read_testdata(spark, sf_dir, "orders")
-        lineitem = read_testdata(spark, sf_dir, "lineitem")
-        try:
-            write_bucketed_table(
-                orders, "b_orders", "o_orderkey", num_buckets=8,
-                sort_cols="o_orderkey",
-            )
-            write_bucketed_table(
-                lineitem, "b_lineitem", "l_orderkey", num_buckets=8,
-                sort_cols="l_orderkey",
-            )
-            assert bucketed_join_ready(spark, "b_orders", "b_lineitem")
-
-            bo, bl = spark.table("b_orders"), spark.table("b_lineitem")
-            # force SMJ so the bucket-spec path (not broadcast) is exercised
-            spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-            try:
-                joined = bo.join(bl, bo.o_orderkey == bl.l_orderkey).groupBy(
-                    "o_orderpriority"
-                ).agg(F.sum("l_quantity").alias("q"))
-                plan = _plan(joined)
-                assert "Exchange" not in plan.split("AdaptiveSparkPlan")[0] or (
-                    "Exchange hashpartitioning" not in plan
-                ), plan
-                # correctness: same result as the plain-parquet join
-                plain = orders.join(
-                    lineitem, orders.o_orderkey == lineitem.l_orderkey
-                ).groupBy("o_orderpriority").agg(F.sum("l_quantity").alias("q"))
-                assert sorted(map(tuple, joined.collect())) == sorted(
-                    map(tuple, plain.collect())
-                )
-            finally:
-                spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "64m")
-        finally:
-            spark.sql("DROP TABLE IF EXISTS b_orders")
-            spark.sql("DROP TABLE IF EXISTS b_lineitem")
-
-    def test_bucketed_join_ready_false_for_missing(self, spark):
-        assert not bucketed_join_ready(spark, "nope_a", "nope_b")
