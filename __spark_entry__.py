@@ -28,59 +28,46 @@ os.environ["PYTHONPATH"] = (
 # operator family (TPC-H shapes, joins, windows, set ops, streaming,
 # extraction goldens, and each LLM-pipeline family) instead of the raw
 # registration order, which left 70 queries permanently unsampled.
+# A query that cedes its slot to one that strictly contains it stays
+# oracled in the full registry and the parity replica run in pytest.
 _GATE_PRIORITY = [
-    # relational keepers — one per §2.5 family, all green r1-r4
+    # relational keepers — one per §2.5 family
     "q1_pricing_summary",
     "q3_shipping_priority",
     "anti_join_customers_without_orders",
     "clean_codes_normalize",
     "window_top3_orders_per_customer",
     "rollup_revenue_by_flag_status",
-    # round-8 family takes the long-green pivot slot (r7 precedent:
-    # ceded slots stay oracled in the full registry + parity replica):
     # soft-dedup weights hash-prove the component fixpoint AND the
     # 1/|cluster| weighting in one sampled row
     "soft_dedup_weights",
     "explode_token_counts",
-    # round-8 capstone's intersect-slot position now carries v5 (see
-    # the session-2 comment below; v4 stays oracled in registry +
-    # parity replica — v5 strictly contains its axes)
-    # round-9 rotation (the documented precedent: ceded slots stay
-    # oracled in the full registry + the parity replica run in
-    # pytest). The three-modality capstone takes llm_corpus_prep_v2's
-    # slot — it hash-proves the v4 text funnel PLUS both perceptual
-    # content-verify gates in one sampled row
+    # the three-modality capstone hash-proves the v4 text funnel PLUS
+    # both perceptual content-verify gates in one sampled row
     "llm_corpus_prep_multimodal",
-    # round-9 session 2: v5 takes v4's slot (v4 stays oracled in
-    # registry + parity replica; v5 CONTAINS v4's strip/weights/yield
-    # axes and adds containment fragments, the KMV diversity estimate,
-    # and the bootstrap CI — one sampled row, five families hashed)
+    # v5 CONTAINS v4's strip/weights/yield axes and adds containment
+    # fragments, the KMV diversity estimate, and the bootstrap CI —
+    # one sampled row, five families hashed
     "llm_corpus_prep_v5",
     "events_hourly_windows",
     "sessionize_user_events",
     "scalar_extract_functions",
     "streaming_hourly_event_counts",
-    # TPC-H completions — never driver-sampled before r5
+    # TPC-H completions
     "q2_min_cost_supplier",
-    # round-9 session 2: the hash-ORACLED store lifecycle takes the
-    # long-green q21 slot (q21 stays oracled in registry + parity
-    # replica): one sampled row now proves create/ingest/replay/
-    # compact/serve of the persisted KMV sketch store equals the
-    # one-shot batch sketch bit-for-bit
+    # one sampled row proves create/ingest/replay/compact/serve of the
+    # persisted KMV sketch store equals the one-shot batch sketch
+    # bit-for-bit
     "kmv_store_incremental_estimate",
-    # round-9 lifecycle conversions take two long-green TPC-H slots
-    # (q13/q18 stay oracled in registry + parity replica): the
-    # takedown and time-travel roundtrips now emit deterministic
+    # the takedown and time-travel roundtrips emit deterministic
     # relations the driver hashes instead of rows-only counting
     "forget_documents_roundtrip",
     "dataset_versioning_roundtrip",
-    # round-7 session-2 families take four long-green TPC-H slots
-    # (q6/q7/q8/q10 stay oracled in the full registry + parity
-    # replica): exact TV drift, its streaming monitor twin,
-    # leakage-safe cluster holdout (recursive-components oracle), and
-    # the v3 funnel capstone — which also hash-proves the Gopher
-    # battery, the quality margin, intra-doc block dedup, and the
-    # quality-survivor ranking inside one sampled slot
+    # exact TV drift, its streaming monitor twin, leakage-safe cluster
+    # holdout (recursive-components oracle), and the v3 funnel capstone
+    # — which also hash-proves the Gopher battery, the quality margin,
+    # intra-doc block dedup, and the quality-survivor ranking inside
+    # one sampled slot
     "token_drift_by_source",
     "streaming_token_drift_monitor",
     "cluster_aware_holdout",
@@ -89,97 +76,64 @@ _GATE_PRIORITY = [
     "asof_last_view_before_purchase",
     "range_join_purchases_within_hour_of_signup",
     "funnel_signup_to_purchase",
-    # round-9 session 2: CCNet per-lang terciles take the deciles slot
-    # (deciles stays oracled in registry + parity replica) — the
-    # sampled row proves the same windowed-distribution machinery PLUS
-    # the bigram-typicality ordering and NTILE tie contract
+    # CCNet per-lang terciles prove the windowed-distribution machinery
+    # PLUS the bigram-typicality ordering and NTILE tie contract
     "ccnet_bucket_documents",
-    # round-9: the composed bloom-gate decision (no-false-negative +
-    # exact-check-catches-FPs, now enforced by hash) takes the
-    # date-spine slot
+    # the composed bloom-gate decision (no-false-negative +
+    # exact-check-catches-FPs, enforced by hash)
     "bloom_prefilter_documents",
     "exact_moment_statistics",
 
     # §2.7 extraction goldens
     "extract_procedure_pages_fixture",
     "udtf_extract_modifiers_fixture",
-    # round-9: the MP4 keyframe manifest took the distinct-event-types
-    # slot; round-10: real keyframe DECODE took the manifest's slot;
-    # round-11: INTER-FRAME delta decode takes the keyframe row's slot
-    # (video_keyframe_decode_stats stays oracled in registry + parity
-    # replica) — the delta row strictly contains it: container parse +
-    # real demuxer seek + real JPEG keyframe decode PLUS closed-loop
-    # delta-chain reconstruction and the chain-break/recovery error
-    # plane, all hashed in one sampled row
+    # inter-frame delta decode strictly contains keyframe decode:
+    # container parse + real demuxer seek + real JPEG keyframe decode
+    # PLUS closed-loop delta-chain reconstruction and the
+    # chain-break/recovery error plane, all hashed in one sampled row
     "video_delta_decode_stats",
-    # round-5 training-layout + PII-enforcement families
+    # training-layout + PII-enforcement families
     "training_shuffle_manifest",
     "corpus_holdout_split",
     "pii_redact_documents",
     # LLM text analysis
     "token_count_bpe_documents",
     "text_quality_documents",
-    # round-7 data-selection family (DSIR importance weighting) —
-    # fully hash-oracled; lang_id_documents cedes its slot (text
-    # family keeps two other hash rows) and stays oracled in the
-    # full registry
+    # data selection (DSIR importance weighting), fully hash-oracled
     "dsir_importance_topk",
 
     # LLM dedup family
     "dedup_exact_documents",
-    # round-10: the md5-mode MinHash-LSH pipeline takes the
-    # incremental-dedup slot (dedup keeps exact + streaming sampled;
-    # incremental stays oracled in registry + parity replica) — the
-    # first sampled row to hash-prove LSH end to end: md5-60
-    # signatures, band buckets, candidate join, exact-Jaccard verify
+    # hash-proves LSH end to end: md5-60 signatures, band buckets,
+    # candidate join, exact-Jaccard verify
     "minhash_near_dup_pairs",
     "streaming_incremental_dedup_documents",
-    # round-9 session 2: containment takes the jaccard-dfcap slot
-    # (jaccard stays oracled in registry + parity replica) — the
-    # containment row runs the IDENTICAL df-capped posting-list core
-    # plus both directed ratios, so the swap strictly widens coverage
+    # containment runs the IDENTICAL df-capped posting-list core as
+    # jaccard plus both directed ratios, so it strictly widens coverage
     "ngram_containment_pairs",
     "contamination_overlap",
     "pii_scan_documents",
-    # ANN / embeddings (oracled members). semantic_dedup_exact runs
-    # the embedding_similar_pairs computation internally and clusters
-    # on top, so the swap strictly widens what the sampled slot proves;
-    # embedding_similar_pairs itself stays oracled in the full registry
-    # round-9 session 2: margin mining takes the brute-topk slot
-    # (ann_cosine_topk stays oracled in registry + parity replica) —
-    # the margin row exercises the same pairwise cosine math PLUS the
-    # rank-ordered fold and neighborhood-mean contract
-    # round-12: the ANN margin row takes the exact margin row's slot
-    # (embedding_margin_pairs stays oracled in registry + parity
-    # replica) — STRICT containment: the ANN oracle ends in the exact
-    # twin's margin CTEs verbatim, and in front of them hash-proves
-    # the round's flagship conversion — md5-seeded INTEGER k-means
-    # (fixed-point Lloyd, dynamic cell count), cell assignment, and
-    # the IVF kNN-graph candidate derivation in one sampled row
+    # ANN / embeddings. STRICT containment: the ANN margin oracle ends
+    # in the exact twin's margin CTEs verbatim (pairwise cosine math +
+    # rank-ordered fold + neighborhood-mean contract), and in front of
+    # them hash-proves md5-seeded INTEGER k-means (fixed-point Lloyd,
+    # dynamic cell count), cell assignment, and the IVF kNN-graph
+    # candidate derivation
     "embedding_margin_pairs_ann",
+    # runs the embedding_similar_pairs computation internally and
+    # clusters on top
     "semantic_dedup_exact",
-    # multimodal (BMP/PNG stay oracled in the full registry; the
-    # round-7 real-codec JPEG path takes the sampled slot)
-    # round-9: the MP4 box-walk takes both image-stats slots (payload
-    # byte accounting is subsumed; JPEG decode stays oracled in the
-    # registry + parity replica)
+    # multimodal: the MP4 box-walk subsumes payload byte accounting
     "multimodal_mp4_stats",
     # trends / corpus prep / packing
     "user_value_trends",
-    # round-9: the streaming boilerplate gate (store lifecycle +
-    # strip-at-admission, bit-identical to the batch oracle) and the
-    # best-fit packer (recursive-CTE replay oracle) take the v2/stats
-    # slots. round-10: the UNIFIED five-gate admission capstone takes
-    # the boilerplate gate's slot (which it strictly contains —
-    # strip-at-admission + batch-keyed count append is its gate 3,
-    # composed with exact dedup, media content-verify, budgets, and
-    # KMV folding in one commit protocol; boilerplate ingest stays
-    # oracled in registry + parity replica)
+    # the unified admission capstone strictly contains the boilerplate
+    # gate (strip-at-admission + batch-keyed count append is its gate
+    # 3), composed with exact dedup, media content-verify, budgets, and
+    # KMV folding in one commit protocol
     "streaming_unified_admission",
-    # round-9 session 2: the oracled KMV pair estimates take the tfidf
-    # slot (tfidf stays oracled in registry + parity replica) — the
-    # sampled row hashes a SKETCH's set-operation estimates, which no
-    # other sampled slot can (HLL rows are engine-specific)
+    # hashes a SKETCH's set-operation estimates, which no other sampled
+    # slot can (HLL rows are engine-specific)
     "kmv_source_overlap_pairs",
     "sequence_packing_bestfit",
 ]

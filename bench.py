@@ -3,7 +3,7 @@
 (default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS].
 
 Prints the FULL result JSON (with per-query dicts) on one line, then
-a compact final line the harness's tail capture can always parse:
+a compact final line a tail capture can always parse:
   {"metric": "...", "value": <best-pass total sec>, "unit": "sec",
    "value_cold": <first-pass total>, "runs": 2, "sf": 0.1,
    "box_factor": <sec>, "detail": "<path to BENCH_FULL.json sidecar>"}
@@ -11,53 +11,50 @@ The sidecar (override via SPARK_GRAFT_BENCH_OUT) carries the
 per-query "queries"/"queries_cold" dicts for regression comparison.
 
 "box_factor" is the best-pass subtotal of three long-frozen pure-JVM
-scan-aggregation queries (_BOX_FACTOR_QUERIES) whose plans have not
-changed since round 2 — a built-in yardstick for HOST state, not code.
-Identical binaries measured 82-93 s across three round-7 box states
-(the driver benches minutes after its 50-query correctness gate on the
-same machine; SCALING.md documents a measured ±40% host swing), so
-raw round-over-round totals compare box contention as much as code.
-Divide per-query times by (box_factor / frozen box_factor) before
-applying the 1.5x regression bar.
+scan-aggregation queries (_BOX_FACTOR_QUERIES): a built-in yardstick
+for HOST state, not code. The same binaries swing by tens of percent
+with box contention (SCALING.md), so raw totals from two runs compare
+box state as much as code. Divide per-query times by
+(box_factor / frozen box_factor) before applying the 1.5x regression
+bar.
 
-Each query is executed to completion (count() forces the full plan;
-results are small aggregates so collection cost is negligible).
-A warmup run of the first query is excluded so JVM/codegen startup
-doesn't pollute per-query numbers.
+Each query is timed through ``harness.time_query``: the noop write
+materializes every column and operator of the result, which count()
+would prune. An untimed ``harness.warm_up`` runs first so JVM,
+codegen and Python-worker startup is not billed to whichever query
+happens to run first.
 
-INTERFERENCE FIREBREAK (round 9): before each timed unit the harness
-clears the SQL cache, forces a JVM + Python GC twice with a drain gap
-(System.gc() triggers Spark's ContextCleaner, whose async file
-deletion must not land in the next timed window), and settles
-($SPARK_GRAFT_BENCH_SETTLE sec total, default 0.3, untimed), so a
-query is not billed for the GC debt / leaked cache of whichever
-lifecycle query ran before it (round 8's driver run recorded 2-3x
-phantom tails this way — dsir_importance_topk 9.06 s in-suite vs
-3.1 s isolated — which box_factor, a HOST-speed yardstick, cannot
-normalize). Passes additionally run as FULL SWEEPS (A B ... A B), not
-back-to-back per query: positional process-state tails hit adjacent
-passes identically, so only sweep-separated sampling lets best-of-N
-escape them (round-9 session-2 measurement: the multimodal capstone's
-two adjacent passes both read ~26 s at one suite position while the
-same query cost 6.9 s at suite end). After the suite, the three most
-expensive in-suite queries are rerun under isolation conditions and
-land in "isolation_recheck" [{query, in_suite, isolated, ratio}...]:
-ratios near 1 certify the recorded values as isolation-grade; a high
-ratio flags that row's suite value, and the isolated number is the
-regression floor for it.
+INTERFERENCE FIREBREAK: every timed unit starts from
+``harness.settle`` (SQL cache cleared, JVM + Python GC twice with a
+drain gap), so a query is not billed for the GC debt or leaked cache
+of whichever lifecycle query ran before it; box_factor, a host-speed
+yardstick, cannot normalize such neighbor effects. Passes run as FULL
+SWEEPS (A B ... A B), not back-to-back per query: positional
+process-state tails hit adjacent passes identically, so only
+sweep-separated sampling lets best-of-N escape them. After the suite,
+the three most expensive rows, plus every row whose best exceeds 1.5x
+its floor in bench_floors.json (at most RECHECK_CAP of those), are
+rerun under isolation conditions and land in "isolation_recheck"
+[{query, in_suite, isolated, ratio}...]: ratios near 1 certify the
+recorded values as isolation-grade; a high ratio flags that row's
+suite value, and the isolated number is the regression floor for it.
 
 SPARK_GRAFT_BENCH_RUNS (default 2) controls timed passes per query.
 With N>1 passes, "queries"/"value" carry the BEST pass per query —
 the steady-state floor regression rules compare against — and the
-first pass lands in "queries_cold"/"value_cold". Rationale
-(SCALING.md): single runs swing 1.2-1.5x (occasionally 2-3x on the
-shuffle-heavy shapes) on plan-compile, page-cache and GC noise, in
-BOTH directions — r6 measured ngram_jaccard at 2.5 s first pass /
-5.5 s second — so neither "the cold run" nor "the warm run" is a
+first pass lands in "queries_cold"/"value_cold". Single runs swing
+1.2-1.5x on plan-compile, page-cache and GC noise in BOTH directions
+(SCALING.md), so neither "the cold run" nor "the warm run" is a
 stable per-query number; the min over passes is. Each pass still
 recompiles the plan (a fresh DataFrame per pass), so the floor is
 execution time, not a cache readback.
-Set SPARK_GRAFT_BENCH_RUNS=1 for the old single-cold-pass behavior.
+Set SPARK_GRAFT_BENCH_RUNS=1 for a single cold pass.
+
+The "scaling" block re-times the SCALING_TOP most expensive rows,
+isolated, on a fresh session with a quarter of the cores, and ships
+{query: {high, low}} pairs: per-operator parallelism, which a
+whole-suite comparison at sf0.1 cannot show because it is
+scheduler-overhead bound. SPARK_GRAFT_BENCH_SCALING=0 skips it.
 """
 
 from __future__ import annotations
@@ -65,7 +62,6 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 
 _REPO_ROOT = os.path.dirname(os.path.abspath(__file__))
 sys.path.insert(0, _REPO_ROOT)
@@ -73,7 +69,8 @@ os.environ["PYTHONPATH"] = (
     _REPO_ROOT + os.pathsep + os.environ.get("PYTHONPATH", "")
 ).rstrip(os.pathsep)
 
-#: the queries that define this engine's headline throughput
+#: the queries that define this engine's headline throughput. Rows may
+#: be added, never removed, so every benched number keeps a history.
 HEADLINE = [
     "q1_pricing_summary",
     "q3_shipping_priority",
@@ -116,7 +113,7 @@ HEADLINE = [
     # ANN scale-path variants (brute LSH is benched above): IVF cells,
     # PQ ADC shortlist + exact re-rank, and the composed IVF+PQ
     # billion-scale shape — regressions in these plans must be visible
-    # round-over-round, not just recall-floored in tests.
+    # in the bench, not just recall-floored in tests.
     "ann_cosine_topk_ivf",
     "ann_cosine_topk_pq",
     "ann_cosine_topk_ivfpq",
@@ -128,21 +125,21 @@ HEADLINE = [
     # Python-heavy batch-decode shapes
     "multimodal_png_decode_stats",
     "multimodal_jpeg_decode_stats",
-    # round-6 additions: zero-shuffle chunk fan-out, the winnowing
-    # fingerprint join (Arrow hash pass + df-capped self-join), and
-    # the iterative BPE trainer (1 corpus scan + 12 vocab-table jobs)
+    # zero-shuffle chunk fan-out, the winnowing fingerprint join (Arrow
+    # hash pass + df-capped self-join), and the iterative BPE trainer
+    # (1 corpus scan + 12 vocab-table jobs)
     "rag_chunk_documents",
     "winnow_overlap_pairs",
     "bpe_train_merges",
     # the ANN serving shape: partition-pruned query against the
-    # persisted index (round 11: the build is memoized scaffolding —
-    # pass 1 carries it into queries_cold, warm passes time probe +
-    # pruned ADC scan + exact re-rank only)
+    # persisted index. The build is memoized scaffolding: pass 1
+    # carries it into queries_cold, warm passes time probe + pruned
+    # ADC scan + exact re-rank only
     "ann_index_ivfpq_query",
-    # round-7 additions: SemDeDup cell-scoped semantic dedup (k-means
-    # multi-probe cells + within-cell exact cosine + component loop)
-    # and the CCNet-style bigram-LM perplexity filter (count windows
-    # + fixed-order per-doc fold)
+    # SemDeDup cell-scoped semantic dedup (k-means multi-probe cells +
+    # within-cell exact cosine + component loop) and the CCNet-style
+    # bigram-LM perplexity filter (count windows + fixed-order per-doc
+    # fold)
     "semantic_dedup_cells",
     "lm_perplexity_documents",
     # one-pass moment fit + Arrow whiten-projection + self-check aggs
@@ -150,7 +147,7 @@ HEADLINE = [
     # mergeable per-source MinHash sketches (map-side min merge)
     "source_overlap_minhash",
     # OPQ-rotated IVF+PQ: regressions in the rotation closure must be
-    # visible round-over-round like the other ANN variants
+    # visible like the other ANN variants
     "ann_cosine_topk_opq",
     # DSIR importance-weighted selection: two raw-pool scans + one
     # target scan, all-broadcast joins, TakeOrderedAndProject top-k
@@ -166,25 +163,16 @@ HEADLINE = [
     "remove_duplicate_spans_documents",
     # the span family's scale shape: LSH candidates -> pair-scoped
     # extraction (key joins only, no posting-list self-join). The
-    # BENCHED row is the xx-mode production path (round 12, r11
-    # verdict #1: the md5 oracle twin duplicate_spans_lsh_scoped
-    # carries the hash proof, but its digest tax made it breach a
-    # floor certified on xx-mode rounds — bench production, oracle md5)
+    # xx-mode production path is benched; its md5 oracle twin
+    # (duplicate_spans_lsh_scoped) carries the hash proof, pays the
+    # digest tax and is benched against its own md5-mode floor
     "duplicate_spans_lsh_prod",
-    # ... and the md5 oracle twin STAYS benched (optimization round 12:
-    # the driver contract allows ADDING bench rows, never removing —
-    # the interrupted build had dropped this BENCH_r11 row). Round 13
-    # (ADVICE r12): the row ran FLOORLESS through round 12 — the
-    # claimed md5-mode re-base had never landed in bench_floors.json;
-    # it now carries a certified md5-mode floor (4.12, protocol in the
-    # floors file's _comment)
     "duplicate_spans_lsh_scoped",
-    # round-7 second half: the Gopher hand-rule battery (map-only
-    # projection), exact TV drift (one corpus shuffle + pinned
-    # marginals), leakage-safe cluster holdout (jaccard edges +
-    # hash-min components), Bloom build/merge/probe (bit_or agg +
-    # k broadcast joins), and best-fit whole-doc packing
-    # (applyInPandas per shard)
+    # the Gopher hand-rule battery (map-only projection), exact TV
+    # drift (one corpus shuffle + pinned marginals), leakage-safe
+    # cluster holdout (jaccard edges + hash-min components), Bloom
+    # build/merge/probe (bit_or agg + k broadcast joins), and best-fit
+    # whole-doc packing (applyInPandas per shard)
     "gopher_quality_filter",
     "token_drift_by_source",
     "cluster_aware_holdout",
@@ -194,126 +182,145 @@ HEADLINE = [
     # capstone (gopher + margin + block dedup + cluster survivors)
     "near_dup_quality_survivors",
     "llm_corpus_prep_v3",
-    # round-8: perceptual-hash image near-dup (PNG synth + decode +
-    # dHash in one Arrow pass, 4-band hamming join) — the multimodal
-    # dedup shape
+    # perceptual-hash image near-dup (PNG synth + decode + dHash in one
+    # Arrow pass, 4-band hamming join) — the multimodal dedup shape
     "multimodal_image_neardup_pairs",
-    # round-8: store-backed quality survivors off persisted incremental
-    # cluster labels (two quotient absorbs + argmax window, no
-    # from-scratch components)
+    # store-backed quality survivors off persisted incremental cluster
+    # labels (two quotient absorbs + argmax window, no from-scratch
+    # components)
     "neardup_store_cluster_survivors",
-    # round-8 capstone: tokenizer-true layout — BPE train + encode +
-    # best-fit pack on subword counts + reproducible shuffle +
-    # physical shard write/read-back
+    # tokenizer-true layout — BPE train + encode + best-fit pack on
+    # subword counts + reproducible shuffle + physical shard
+    # write/read-back
     "llm_training_shards_bpe",
-    # round-8: gain-invariant audio fingerprint near-dup (WAV synth +
-    # stdlib decode + energy-gradient hash in one Arrow pass)
+    # gain-invariant audio fingerprint near-dup (WAV synth + stdlib
+    # decode + energy-gradient hash in one Arrow pass)
     "multimodal_audio_neardup_pairs",
-    # round-8: SlimPajama-style soft dedup — 1/|cluster| sampling
-    # weights off the same df-capped Jaccard edges (hash-oracled)
+    # SlimPajama-style soft dedup — 1/|cluster| sampling weights off
+    # the same df-capped Jaccard edges (hash-oracled)
     "soft_dedup_weights",
-    # round-8: the streaming MEDIA ingest gate — decode+dHash once per
-    # object, intra-batch collapse + persisted phash-store gate
+    # the streaming MEDIA ingest gate — decode+dHash once per object,
+    # intra-batch collapse + persisted phash-store gate
     "streaming_media_neardup_ingest",
-    # round-8: in-engine quality-model training — one normal-equation
+    # in-engine quality-model training — one normal-equation
     # aggregation pass distills the Gopher battery into the linear
     # scorer, corpus re-scored with the learned model
     "quality_model_distilled",
-    # round-8: CCNet-style cross-doc boilerplate strip — fingerprint
-    # shuffle + doc-frequency groupBy + in-order reassembly
+    # CCNet-style cross-doc boilerplate strip — fingerprint shuffle +
+    # doc-frequency groupBy + in-order reassembly
     "boilerplate_passage_removal",
-    # round-8 capstone #2: boilerplate strip -> soft-dedup weights ->
-    # per-source effective-token yield (hash-oracled end to end)
+    # boilerplate strip -> soft-dedup weights -> per-source
+    # effective-token yield (hash-oracled end to end)
     "llm_corpus_prep_v4",
-    # round-8: the passage-frequency store lifecycle (two mergeable
-    # count appends + strip against persisted frequencies)
+    # the passage-frequency store lifecycle (two mergeable count
+    # appends + strip against persisted frequencies)
     "boilerplate_store_strip",
-    # round-9: the streaming twin — passage counts appended under the
-    # durable (gate, batch) key + strip-at-admission, one stream
-    # round-trip (the full gate runs every pass; only the corpus file
-    # staging is process-shared scaffolding)
+    # the streaming twin — passage counts appended under the durable
+    # (gate, batch) key + strip-at-admission, one stream round-trip
+    # (the full gate runs every pass; only the corpus file staging is
+    # process-shared scaffolding)
     "streaming_boilerplate_strip_ingest",
-    # round-9: MP4 container box-walk (synth + parse in Arrow passes,
-    # no codec decode) — the video-modality payload-stats shape
+    # MP4 container box-walk (synth + parse in Arrow passes, no codec
+    # decode) — the video-modality payload-stats shape
     "multimodal_mp4_stats",
-    # round-9 capstone: the three-modality attrition funnel (v4 text
-    # funnel + per-modality decode/hash/band-join/content-verify) —
+    # the three-modality attrition funnel (v4 text funnel +
+    # per-modality decode/hash/band-join/content-verify) —
     # deliberately the heaviest all-operator query in the suite
     "llm_corpus_prep_multimodal",
-    # round-9: DoReMi excess-loss domain reweighting — one corpus
-    # bigram groupBy + count-relation rollups + driver softmax
+    # DoReMi excess-loss domain reweighting — one corpus bigram
+    # groupBy + count-relation rollups + driver softmax
     "doremi_domain_weights",
-    # round-9: tokenizer fertility — train + encode + one integer agg
+    # tokenizer fertility — train + encode + one integer agg
     "bpe_fertility_by_source",
-    # round-9 session 2: asymmetric containment (same df-capped
-    # posting-list core as the jaccard twin, both directed ratios)
+    # asymmetric containment (same df-capped posting-list core as the
+    # jaccard twin, both directed ratios)
     "ngram_containment_pairs",
-    # round-9 session 2: pairwise KMV set-operation estimates — one
-    # distinct-hash shuffle, then metadata-sized sketch expansion
+    # pairwise KMV set-operation estimates — one distinct-hash
+    # shuffle, then metadata-sized sketch expansion
     "kmv_source_overlap_pairs",
-    # round-9 session 2: the KMV store LIFECYCLE (create, two sketch
-    # ingests, a deliberate crash replay, compact, serve) — unlike the
-    # neardup-store rows this cost IS the operator (three bottom-k
-    # ingest passes), not scaffolding
+    # the KMV store LIFECYCLE (create, two sketch ingests, a deliberate
+    # crash replay, compact, serve) — unlike the neardup-store rows
+    # this cost IS the operator (three bottom-k ingest passes), not
+    # scaffolding
     "kmv_store_incremental_estimate",
-    # round-9 session 2: CCNet terciles — one bigram explode shared by
-    # corpus counts and per-doc aggs, then a per-lang window
+    # CCNet terciles — one bigram explode shared by corpus counts and
+    # per-doc aggs, then a per-lang window
     "ccnet_bucket_documents",
-    # round-9 session 2: the unigram-LM tokenizer twin of the BPE
-    # fertility row — EM train (Arrow E-steps over the distinct-word
-    # table) + Viterbi encode + one integer aggregation
+    # the unigram-LM tokenizer twin of the BPE fertility row — EM
+    # train (Arrow E-steps over the distinct-word table) + Viterbi
+    # encode + one integer aggregation
     "unigram_fertility_by_source",
-    # round-9 session-2 capstone: the v4 funnel + containment
-    # fragments + KMV diversity + bootstrap CI in ONE per-source
-    # report (one shared posting join feeds both pair consumers)
+    # the v4 funnel + containment fragments + KMV diversity + bootstrap
+    # CI in ONE per-source report (one shared posting join feeds both
+    # pair consumers)
     "llm_corpus_prep_v5",
-    # round-9 session 2: Aho-Corasick blocklist scan — the
-    # shuffle-free single-pass Python-automaton Arrow shape
+    # Aho-Corasick blocklist scan — the shuffle-free single-pass
+    # Python-automaton Arrow shape
     "blocklist_scan_documents",
-    # round-10: real video keyframe decode, manifest-driven (MJPEG
-    # synth + container parse + per-keyframe JPEG decode in one Arrow
-    # pass) — isolated best-of-2 at sf0.1: 3.6 s
+    # real video keyframe decode, manifest-driven (MJPEG synth +
+    # container parse + per-keyframe JPEG decode in one Arrow pass)
     "video_keyframe_decode_stats",
-    # round-10: video near-dup end to end (decode+hash pass + twins +
-    # 4-band hamming join + per-clip score) — isolated 7.7 s; the
-    # synthesis (8 JPEG encodes/doc) dominates, the pair machinery is
-    # the shared star-capped band join
+    # video near-dup end to end (decode+hash pass + twins + 4-band
+    # hamming join + per-clip score); the synthesis (8 JPEG
+    # encodes/doc) dominates, the pair machinery is the shared
+    # star-capped band join
     "video_keyframe_neardup_pairs",
-    # round-10: the md5-mode MinHash-LSH pipeline (now hash-oracled
-    # and gate-sampled) — signatures, band join, exact-Jaccard verify
+    # the md5-mode MinHash-LSH pipeline (hash-oracled and
+    # gate-sampled) — signatures, band join, exact-Jaccard verify
     "minhash_near_dup_pairs",
-    # round-10 streaming twins: blocklist scan at admission and the
-    # chi-square drift statistic streamed — both share their batch
-    # oracles (two micro-batches each; scaffolding memoized)
+    # streaming twins: blocklist scan at admission and the chi-square
+    # drift statistic streamed — both share their batch oracles (two
+    # micro-batches each; scaffolding memoized)
     "streaming_blocklist_scan",
     "streaming_chi_square_drift",
-    # round-10 capstone, +video round 11: ALL SIX ingest gates in one
-    # admission decision + attrition accounting — deliberately the
-    # heaviest streaming row (one full stream round trip through exact
-    # dedup, image AND clip content-verify, strip-at-admission,
-    # budgets, KMV fold)
+    # ALL SIX ingest gates in one admission decision + attrition
+    # accounting — deliberately the heaviest streaming row (one full
+    # stream round trip through exact dedup, image AND clip
+    # content-verify, strip-at-admission, budgets, KMV fold)
     "streaming_unified_admission",
-    # round-11: inter-frame video decode (delta-coded clips, chain
+    # inter-frame video decode (delta-coded clips, chain
     # reconstruction, error recovery) — hash-oracled and gate-sampled
     "video_delta_decode_stats",
-    # round-12: presentation-time frame sampling over variable-
-    # duration (run-length stts) containers — hash-oracled
+    # presentation-time frame sampling over variable-duration
+    # (run-length stts) containers — hash-oracled
     "video_time_indexed_manifest",
-    # round-13 (verdict r12 #7): the Hadamard-rotated PQ row was
-    # registered + oracled in round 12 but never benched — every
-    # query path needs perf accountability
+    # the Hadamard-rotated PQ row: every query path needs perf
+    # accountability
     "ann_cosine_topk_hpq",
 ]
 
 
-#: host-state yardstick: pure-JVM scan-agg queries untouched since
-#: round 2 — their subtotal moves with the box, not with this repo's
-#: round-over-round changes (see module docstring)
+#: host-state yardstick: pure-JVM scan-agg queries whose plans stay
+#: frozen — their subtotal moves with the box, not with this repo's
+#: changes (see module docstring)
 _BOX_FACTOR_QUERIES = (
     "q1_pricing_summary",
     "q6_forecast_revenue",
     "token_count_bpe_documents",
 )
+
+#: floor-breaching rows rechecked, beyond the three most expensive
+RECHECK_CAP = 15
+#: rows the low-core scaling block re-times (5 rows fit the compact line)
+SCALING_TOP = 5
+
+
+def _floors(sf: float | None) -> tuple[dict[str, float], float | None]:
+    """The frozen per-query floors and their box_factor reference,
+    empty at any SF other than the floors' own (the flag would be
+    spurious; the top-3-by-cost recheck still runs)."""
+    path = os.environ.get(
+        "SPARK_GRAFT_BENCH_FLOORS", os.path.join(_REPO_ROOT, "bench_floors.json")
+    )
+    try:
+        with open(path) as fh:
+            doc = json.load(fh)
+        if sf == float(doc.get("sf", 0.1)):
+            floors = {k: float(v) for k, v in doc.get("floors", {}).items()}
+            return floors, float(doc.get("box_factor_ref") or 0) or None
+    except (OSError, ValueError):
+        pass
+    return {}, None
 
 
 def main() -> None:
@@ -323,366 +330,133 @@ def main() -> None:
     except ValueError:
         sf = None
 
+    from etl_procedure_codes_crawler_spark import harness
     from etl_procedure_codes_crawler_spark.session import get_spark
-    from etl_procedure_codes_crawler_spark.plans.relational import QUERIES
 
     spark = get_spark(app_name="etl-procedure-codes-crawler-spark-bench")
-    try:
-        from etl_procedure_codes_crawler_spark.llm import queries as _llm  # noqa: F401
-    except ImportError:
-        pass
-
-    names = [n for n in HEADLINE if n in QUERIES]
-    extra = os.environ.get("SPARK_GRAFT_BENCH_EXTRA", "")
-    names += [n for n in extra.split(",") if n and n in QUERIES and n not in names]
-
-    # warmup: JVM + codegen + parquet footer caches, plus the Python
-    # UDF worker pool + Arrow serialization paths (process-level
-    # startup that would otherwise be charged to whichever benched
-    # query happens to touch a pandas UDF first). The warmup query's
-    # own plan and every benched plan still compile cold.
-    try:
-        QUERIES[names[0]](spark, sf_dir).count()
-    except Exception:  # noqa: BLE001 — the timed loop will report it
-        pass
-    from pyspark.sql import functions as F
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("double")
-    def _warm(s):
-        return s * 1.0
-
-    # aggregate the UDF output so Catalyst cannot column-prune the
-    # ArrowEvalPython stage away (select(udf).count() would). Runs
-    # SEVERAL passes: the session-2 bisects showed Python-worker +
-    # JIT state keeps deepening over executions (the "warm depth"
-    # residual on heavy Arrow rows), so one token pass leaves the
-    # first benched Arrow query paying part of that ramp.
-    for _ in range(4):
-        spark.range(4096).select(
-            _warm(F.col("id").cast("double")).alias("v")
-        ).agg(F.sum("v")).collect()
-
-    # Throwaway REAL-query warm-ups (round 11, verdict #7): the token
-    # UDF pass above warms the Python workers but not whole-stage
-    # codegen caches, parquet footer readers, or the band-join /
-    # window code paths — round 10 still saw a 1.6-3.5x in-suite vs
-    # isolated envelope on sub-second rows, forcing 15 recheck runs.
-    # Three cheap representative shapes (pure-JVM agg+join, Arrow
-    # decode, banded self-join), two passes each, untimed.
-    for _warm_name in (
-        "q1_pricing_summary",
-        "multimodal_payload_stats",
-        "simhash_near_dup_pairs",
-    ):
-        if _warm_name in QUERIES:
-            for _ in range(2):
-                try:
-                    QUERIES[_warm_name](spark, sf_dir).count()
-                except Exception:  # noqa: BLE001 — warm-up, never fatal
-                    break
+    names = [n for n in HEADLINE if n in harness.registry()]
+    harness.warm_up(spark, sf_dir)
 
     # One failing query must not take down the whole suite (a crashed
     # bench reports nothing — worse than reporting 35 good numbers and
     # 1 error). Failures land in "errors" with the exception head; the
     # process exits non-zero so the failure is still loud.
     runs = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "2")))
-    settle_s = float(os.environ.get("SPARK_GRAFT_BENCH_SETTLE", "0.3"))
-
-    def settle() -> None:
-        """Interference firebreak between timed units (untimed).
-
-        A 75-query single-JVM suite accrues GC debt and leaked cached
-        relations from whichever lifecycle query ran last; the NEXT
-        query then pays for them, which is how round 8's driver run
-        recorded dsir_importance_topk at 9.06 s when its isolated cost
-        is ~3.1 s (2-3x phantom tails box_factor cannot normalize —
-        it corrects host speed, not intra-suite neighbor effects).
-        Clearing the SQL cache, forcing a full JVM+Python collection,
-        and settling briefly puts every query on the same start line
-        an isolation run would give it.
-
-        GC runs TWICE with a drain gap: System.gc() is what triggers
-        Spark's ContextCleaner, whose asynchronous shuffle/broadcast
-        file deletion would otherwise land inside the NEXT query's
-        timed window — the first collection queues the cleanup, the
-        gap lets the cleaner thread drain it, the second collection
-        sweeps what the finalizers freed."""
-        import gc
-
-        for _ in range(2):
-            try:
-                spark.catalog.clearCache()
-                spark.sparkContext._jvm.System.gc()
-            except Exception:  # noqa: BLE001 — a yardstick, never a crash
-                pass
-            gc.collect()
-            if settle_s > 0:
-                time.sleep(settle_s / 2)
-
-    def timed_pass(name: str) -> float | None:
-        start = time.perf_counter()
-        try:
-            QUERIES[name](spark, sf_dir).count()
-        except Exception as exc:  # noqa: BLE001 — record and continue
-            errors[name] = (
-                f"{type(exc).__name__}: {str(exc).splitlines()[0][:200]}"
-            )
-            return None
-        return round(time.perf_counter() - start, 3)
-
     cold: dict[str, float] = {}
     warm: dict[str, float] = {}
     errors: dict[str, str] = {}
-    # Passes run as FULL SWEEPS (A B ... A B), not back-to-back per
-    # query: positional interference (whatever process state the
-    # preceding ~80 queries left — measured 3-4x tails on the heavy
-    # capstones that the GC firebreak does NOT clear, while the same
-    # query at suite end runs at isolation cost) hits both adjacent
-    # passes identically, so a per-query best-of-2 could not escape
-    # it. Sweep-separated passes sample two different process states;
-    # the min is then a genuine floor. Sweep 1 is still "cold"
-    # (per-plan compile + scaffold builds land there), identical to
-    # the old semantics.
-    failed: set[str] = set()
+
+    def record_error(name: str, exc: Exception) -> None:
+        head = str(exc).partition("\n")[0][:200]
+        errors[name] = f"{type(exc).__name__}: {head}"
+
+    # Sweep 1 is "cold" (per-plan compile + scaffold builds land there);
+    # the best over sweeps is the steady-state floor.
     for pass_no in range(runs):
         for name in names:
-            if name in failed:
+            if name in errors:
                 continue
-            settle()
-            elapsed = timed_pass(name)
-            if elapsed is None:
+            try:
+                elapsed = harness.time_query(spark, name, sf_dir)
+            except Exception as exc:  # noqa: BLE001 — record and continue
                 # a query that failed on ANY pass must not also report
-                # a timing — a pass-1 number for a query the same JSON
-                # declares failed would silently enter the regression
+                # a timing: it would silently enter the regression
                 # comparison
+                record_error(name, exc)
                 cold.pop(name, None)
                 warm.pop(name, None)
-                failed.add(name)
                 continue
             if pass_no == 0:
                 cold[name] = elapsed
-            # best pass = steady-state floor; == cold when runs=1
             warm[name] = min(warm.get(name, elapsed), elapsed)
 
-    # Self-check that the firebreak + sweep separation actually
-    # worked: rerun flagged queries under isolation conditions (fresh
-    # settle, best of `runs`) and record both numbers for each. A
-    # ratio well above 1 flags that row's suite value as still
-    # carrying neighbor/warm-depth effects — the isolated number is
-    # the regression floor in that case. Flagged = the three most
-    # expensive rows (always) PLUS every row whose box-normalized
-    # best exceeds 1.5x its frozen floor (bench_floors.json), so the
-    # artifact ships an in-run isolated floor for every row a
-    # frozen-table comparison would question — round 9 left 9 of 12
-    # breaching rows uncertified because only the top 3 were rechecked.
+    box = [warm[n] for n in _BOX_FACTOR_QUERIES if n in warm]
+    box_factor = round(sum(box), 3) if len(box) == len(_BOX_FACTOR_QUERIES) else None
+    floors, floors_ref = _floors(sf)
+
+    # Self-check that the firebreak + sweep separation worked: rerun
+    # the three most expensive rows (always) plus the most suspicious
+    # floor-breaching rows under isolation conditions, so the artifact
+    # ships an in-run isolated floor for every row a frozen-table
+    # comparison would question.
     recheck: list[dict] | None = None
-    box_factor = None
-    bf = [warm[n] for n in _BOX_FACTOR_QUERIES if n in warm]
-    if len(bf) == len(_BOX_FACTOR_QUERIES):
-        box_factor = round(sum(bf), 3)
-    floors: dict[str, float] = {}
-    floors_ref = None
-    floors_path = os.environ.get(
-        "SPARK_GRAFT_BENCH_FLOORS",
-        os.path.join(_REPO_ROOT, "bench_floors.json"),
-    )
-    try:
-        with open(floors_path) as fh:
-            fdoc = json.load(fh)
-        # floors are sf0.1 measurements — at any other SF the flag
-        # would be spurious (the top-3-by-cost recheck still runs)
-        if sf == float(fdoc.get("sf", 0.1)):
-            floors = {
-                k: float(v) for k, v in fdoc.get("floors", {}).items()
-            }
-            floors_ref = float(fdoc.get("box_factor_ref") or 0) or None
-    except (OSError, ValueError):
-        pass
     if warm:
-        norm = (
-            box_factor / floors_ref
-            if box_factor and floors_ref
-            else 1.0
-        )
-        # Flag on max(raw, normalized) excess (round 12, ADVICE r11):
-        # norm is computed from the same in-suite pass being judged,
-        # so a run where only the box-factor rows are slow skews norm
-        # for every other row. min() of the two views let a real
-        # regression hide behind an inflated norm (deflated normalized
-        # excess suppressed the flag); max() flags when EITHER view
-        # breaches, so skew can only ADD rechecks, never suppress one.
+        norm = box_factor / floors_ref if box_factor and floors_ref else 1.0
+
+        # Flag on max(raw, normalized) excess: norm comes from the same
+        # pass being judged, so a run where only the box-factor rows
+        # are slow skews it for every other row; max() lets that skew
+        # add rechecks, never suppress one.
         def _excess(n: str) -> float:
             fl = floors.get(n)
-            if not fl:
-                return 1.0
-            return max(warm[n] / fl, warm[n] / norm / fl)
+            return max(warm[n] / fl, warm[n] / norm / fl) if fl else 1.0
 
         top3 = sorted(warm, key=warm.get, reverse=True)[:3]
-        breaching = [
-            n for n in warm if _excess(n) > 1.5 and n not in top3
-        ]
-        # bound the recheck cost, most SUSPICIOUS rows first (largest
-        # conservative excess over floor — a stressed box breaches
-        # everything, and certifying by raw cost would spend the cap
-        # on heavy rows that are near their floors anyway). The top-3
-        # rows ride OUTSIDE the cap (round 12): the docstring promises
-        # they are always rechecked, but when >15 rows breached, the
-        # excess sort silently evicted them (r12 builder run: the
-        # 29 s unified row was never rechecked).
-        ordered = top3 + sorted(breaching, key=_excess, reverse=True)[:15]
+        breaching = [n for n in warm if _excess(n) > 1.5 and n not in top3]
+        # most suspicious first: a stressed box breaches everything, and
+        # ordering by raw cost would spend the cap on heavy rows that
+        # sit near their floors anyway. The top-3 ride outside the cap.
+        ordered = top3 + sorted(breaching, key=_excess, reverse=True)[:RECHECK_CAP]
+        # re-warm: the recheck runs after the whole suite's accrued
+        # process state, which otherwise makes the isolated session
+        # itself the artifact
+        harness.warm_up(spark, sf_dir)
         recheck = []
-        # Re-warm before the recheck block (round 12, verdict r11 #2):
-        # the recheck runs after ~190 timed passes of accrued process
-        # state — BENCH_r11 recorded isolated readings up to 2x the
-        # same row's in-suite best (dsir 8.85 vs 4.43) on rows that
-        # were bit-identical round-over-round in-suite, i.e. the
-        # recheck session itself was the artifact. Same three
-        # representative shapes as the suite pre-warm, untimed.
-        for _warm_name in (
-            "q1_pricing_summary",
-            "multimodal_payload_stats",
-            "simhash_near_dup_pairs",
-        ):
-            if _warm_name in QUERIES:
-                try:
-                    QUERIES[_warm_name](spark, sf_dir).count()
-                except Exception:  # noqa: BLE001 — warm-up, never fatal
-                    break
-        for worst in ordered:
-            settle()
-            # one untimed throwaway pass of the row itself: the
-            # in-suite value it certifies against is a sweep-2 best
-            # (plan compile + scaffold builds landed in sweep 1), so
-            # an unwarmed single-shot isolated pass measures a
-            # strictly colder state than the number it judges
+        for name in ordered:
             try:
-                QUERIES[worst](spark, sf_dir).count()
-            except Exception:  # noqa: BLE001 — timed loop reports it
-                pass
-            settle()
-            iso = None
-            for _ in range(runs):
-                t = timed_pass(worst)
-                if t is None:
-                    break
-                iso = t if iso is None else min(iso, t)
-            if iso is not None:
-                row = {
-                    "query": worst,
-                    "in_suite": warm[worst],
-                    "isolated": iso,
-                    "ratio": round(warm[worst] / iso, 3) if iso > 0 else None,
-                }
-                fl = floors.get(worst)
-                if fl:
-                    # the self-certifying numbers: isolated floor
-                    # against the frozen floor, both box-normalized
-                    # and raw — certification requires BOTH views
-                    # <= 1.5 (max(vs_floor, vs_floor_raw); round 12,
-                    # ADVICE r11: min() certified rows whose raw
-                    # regression hid behind an inflated norm)
-                    row["floor"] = fl
-                    row["vs_floor"] = round((iso / norm) / fl, 3)
-                    row["vs_floor_raw"] = round(iso / fl, 3)
-                recheck.append(row)
+                iso = harness.isolated_best(spark, name, sf_dir, runs)
+            except Exception as exc:  # noqa: BLE001 — record and continue
+                record_error(name, exc)
+                continue
+            row = {
+                "query": name,
+                "in_suite": warm[name],
+                "isolated": iso,
+                "ratio": round(warm[name] / iso, 3) if iso > 0 else None,
+            }
+            fl = floors.get(name)
+            if fl:
+                # certification requires BOTH views <= 1.5
+                row["floor"] = fl
+                row["vs_floor"] = round((iso / norm) / fl, 3)
+                row["vs_floor_raw"] = round(iso / fl, 3)
+            recheck.append(row)
         recheck = recheck or None
 
-    # Per-query SCALING block (round 13, verdict r12 #8): the full-
-    # suite 8c-vs-32c comparison is scheduler-overhead-bound at sf0.1
-    # (the 32c suite measured SLOWER than 8c in round 12), so it says
-    # nothing about per-operator parallelism. Instead the bench itself
-    # re-times its most expensive rows ISOLATED under a quarter of the
-    # run's core count (fresh local[N/4] session, same warm-up + settle
-    # discipline) and ships {query: {high, low}} pairs in the sidecar +
-    # compact line — real per-operator scaling ratios PERF can read.
-    # SPARK_GRAFT_BENCH_SCALING=0 skips it; the timed suite above is
-    # untouched (this runs after every timed number is in hand).
+    # Runs after every timed number is in hand, so the suite above is
+    # untouched by it.
     scaling = None
     cpus_hi = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
     cpus_lo = max(2, cpus_hi // 4)
-    scale_n = int(os.environ.get("SPARK_GRAFT_BENCH_SCALING_TOP", "5"))
-    if (
-        os.environ.get("SPARK_GRAFT_BENCH_SCALING", "1") != "0"
-        and warm
-        and cpus_lo < cpus_hi
-        and scale_n > 0
-    ):
+    if os.environ.get("SPARK_GRAFT_BENCH_SCALING", "1") != "0" and warm and cpus_lo < cpus_hi:
         try:
-            top_scale = sorted(warm, key=warm.get, reverse=True)[:scale_n]
             spark.stop()
             spark = get_spark(
                 app_name="etl-procedure-codes-crawler-spark-bench-lowcore",
                 master=f"local[{cpus_lo}]",
                 shuffle_partitions=cpus_lo,
             )
-            for _ in range(4):
-                spark.range(4096).select(
-                    _warm(F.col("id").cast("double")).alias("v")
-                ).agg(F.sum("v")).collect()
-            for _warm_name in (
-                "q1_pricing_summary", "multimodal_payload_stats",
-            ):
-                if _warm_name in QUERIES:
-                    try:
-                        QUERIES[_warm_name](spark, sf_dir).count()
-                    except Exception:  # noqa: BLE001 — warm-up only
-                        break
+            harness.warm_up(spark, sf_dir)
+            # "high" prefers the recheck's isolated reading, so the
+            # ratio compares isolated with isolated
+            isolated = {row["query"]: row["isolated"] for row in recheck or []}
             per_scale: dict[str, dict] = {}
-            for name in top_scale:
-                settle()
-                try:  # untimed throwaway, same discipline as the recheck
-                    QUERIES[name](spark, sf_dir).count()
-                except Exception:  # noqa: BLE001
+            for name in sorted(warm, key=warm.get, reverse=True)[:SCALING_TOP]:
+                try:
+                    low = harness.isolated_best(spark, name, sf_dir, 1)
+                except Exception:  # noqa: BLE001 — a low-core-only failure
+                    # drops the row; the suite's "errors" are final
                     continue
-                settle()
-                lo_best = None
-                for _ in range(
-                    max(
-                        1,
-                        int(os.environ.get(
-                            "SPARK_GRAFT_BENCH_SCALING_RUNS", "1"
-                        )),
-                    )
-                ):
-                    # local timing, NOT timed_pass: a low-core-only
-                    # failure must not enter "errors" (the suite
-                    # numbers above are already final) — it just
-                    # drops the row from the block
-                    start = time.perf_counter()
-                    try:
-                        QUERIES[name](spark, sf_dir).count()
-                    except Exception:  # noqa: BLE001
-                        lo_best = None
-                        break
-                    t = round(time.perf_counter() - start, 3)
-                    lo_best = t if lo_best is None else min(lo_best, t)
-                if lo_best is not None:
-                    # "high" prefers the recheck's ISOLATED reading
-                    # (the top rows always have one): the low-core
-                    # number is isolated, so the ratio must compare
-                    # like with like — in-suite values carry neighbor
-                    # effects the isolated ones do not
-                    hi = warm[name]
-                    for row in recheck or []:
-                        if row["query"] == name:
-                            hi = min(hi, row["isolated"])
-                            break
-                    per_scale[name] = {"high": hi, "low": lo_best}
+                per_scale[name] = {"high": min(warm[name], isolated.get(name, warm[name])), "low": low}
             if per_scale:
-                scaling = {
-                    "cpus": cpus_hi,
-                    "cpus_low": cpus_lo,
-                    "per_query": per_scale,
-                }
+                scaling = {"cpus": cpus_hi, "cpus_low": cpus_lo, "per_query": per_scale}
         except Exception as exc:  # noqa: BLE001 — diagnostics must not
             # take down the bench output: the suite numbers are final
             print(f"bench: scaling block failed: {exc}", file=sys.stderr)
             scaling = None
 
     result = {
-        "metric": "headline-suite wall time, local[%s]"
-        % os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8),
+        "metric": f"headline-suite wall time, local[{cpus_hi}]",
         "value": round(sum(warm.values()), 3),
         "unit": "sec",
         "queries": warm,
@@ -692,20 +466,17 @@ def main() -> None:
         result["queries_cold"] = cold
         result["value_cold"] = round(sum(cold.values()), 3)
         result["runs"] = runs
-    if box_factor is not None:
-        result["box_factor"] = box_factor
-    if recheck is not None:
-        result["isolation_recheck"] = recheck
-    if scaling is not None:
-        result["scaling"] = scaling
-    if errors:
-        result["errors"] = errors
-    # The harness captures the TAIL of stdout and parses the last JSON
-    # line. Round 6's single line carried two 46-query dicts and
-    # overflowed that capture (BENCH_r06.json: "parsed": null — the
-    # round shipped with no machine-verified number). So: full detail
-    # goes to a sidecar file + an EARLY stdout line, and the LAST line
-    # is a compact summary guaranteed to fit any tail window.
+    optional = {
+        "box_factor": box_factor,
+        "isolation_recheck": recheck,
+        "scaling": scaling,
+        "errors": errors or None,
+    }
+    result.update((k, v) for k, v in optional.items() if v is not None)
+    # A tail capture parses the last JSON line, and two full per-query
+    # dicts overflow it. So the full detail goes to a sidecar file + an
+    # EARLY stdout line, and the LAST line is a compact summary that
+    # fits a 2000-char tail window (the recheck list stays off it).
     out_path = os.environ.get(
         "SPARK_GRAFT_BENCH_OUT", os.path.join(_REPO_ROOT, "BENCH_FULL.json")
     )
@@ -715,24 +486,14 @@ def main() -> None:
     except OSError as exc:  # read-only checkout: detail still on stdout
         print(f"bench: could not write {out_path}: {exc}", file=sys.stderr)
     print(json.dumps(result))
-    # The recheck list does NOT ride the compact line (round 12):
-    # 15 recheck rows ≈ 2.5 KB pushed the final line past the
-    # harness's 2000-char tail window — BENCH_r10/r11 both recorded
-    # "parsed": null because of it. The full detail (including
-    # isolation_recheck) is on the early stdout line + the sidecar.
     compact = {
         k: result[k]
-        for k in (
-            "metric", "value", "unit", "value_cold", "runs", "sf",
-            "box_factor",
-        )
+        for k in ("metric", "value", "unit", "value_cold", "runs", "sf", "box_factor")
         if k in result
     }
     if recheck is not None:
         compact["n_recheck"] = len(recheck)
     if scaling is not None:
-        # 5 rows ≈ 350 chars — fits the harness's 2000-char tail
-        # window alongside the rest of the compact line
         compact["scaling"] = scaling
     if errors:
         compact["n_errors"] = len(errors)

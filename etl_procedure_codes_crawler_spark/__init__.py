@@ -7,6 +7,7 @@ this package re-expresses its relational/dataflow semantics Spark-first:
 - ``session``   — SparkSession factory (AQE, Arrow, shuffle sizing).
 - ``schemas``   — explicit StructType registry for every pipeline table.
 - ``config``    — validated env-var settings (reference: utils/config.py).
+- ``harness``   — query timing for bench.py and scripts/ (noop-sink writes).
 - ``sources``   — parquet / JDBC / fetcher / secrets inputs.
 - ``sinks``     — parquet dataset sink, JDBC sink, error-audit sink.
 - ``functions`` — pure HTML-extraction functions + Spark column helpers.

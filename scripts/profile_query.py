@@ -1,17 +1,18 @@
 #!/usr/bin/env python
 """Isolate one (or more) registry queries for optimization work.
 
-For each named query: bench-grade warm-up, N timed passes (same
-methodology as bench.py — count() the full plan, settle between
-passes), plus job/stage counts from the status tracker and an optional
-.explain("formatted") dump.
+For each named query: the bench's warm-up, N timed passes (the bench's
+methodology: ``harness.time_query`` settles, then materializes the full
+result through the noop sink), plus job/stage counts from the status
+tracker and an optional .explain("formatted") dump.
 
 Usage:
   python scripts/profile_query.py [--runs N] [--explain-dir DIR]
       [--sf-dir DIR] query [query ...]
 
 Prints one JSON line per query:
-  {"query": ..., "times": [...], "best": ..., "jobs": J, "stages": S}
+  {"query": ..., "times": [...], "best": ..., "jobs_last_pass": J,
+   "stages_last_pass": S}
 """
 
 from __future__ import annotations
@@ -20,7 +21,6 @@ import argparse
 import json
 import os
 import sys
-import time
 
 _REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, _REPO_ROOT)
@@ -44,88 +44,34 @@ def main() -> None:
         "--sf-dir",
         default=os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"),
     )
-    ap.add_argument(
-        "--noop",
-        action="store_true",
-        help="time the noop sink instead of count() (guide §1.4)",
-    )
     args = ap.parse_args()
 
+    from etl_procedure_codes_crawler_spark import harness
     from etl_procedure_codes_crawler_spark.session import get_spark
-    from etl_procedure_codes_crawler_spark.plans.relational import QUERIES
 
     spark = get_spark(app_name="profile-query")
-    try:
-        from etl_procedure_codes_crawler_spark.llm import queries as _llm  # noqa: F401
-    except ImportError:
-        pass
-
-    from pyspark.sql import functions as F
-    from pyspark.sql.functions import pandas_udf
-
-    # bench-identical warm-up
-    @pandas_udf("double")
-    def _warm(s):
-        return s * 1.0
-
-    for _ in range(4):
-        spark.range(4096).select(
-            _warm(F.col("id").cast("double")).alias("v")
-        ).agg(F.sum("v")).collect()
-    for _warm_name in (
-        "q1_pricing_summary",
-        "multimodal_payload_stats",
-        "simhash_near_dup_pairs",
-    ):
-        if _warm_name in QUERIES:
-            for _ in range(2):
-                QUERIES[_warm_name](spark, args.sf_dir).count()
-
-    def settle() -> None:
-        import gc
-
-        for _ in range(2):
-            spark.catalog.clearCache()
-            spark.sparkContext._jvm.System.gc()
-            gc.collect()
-            time.sleep(0.15)
-
+    queries = harness.registry()
+    harness.warm_up(spark, args.sf_dir)
     st = spark.sparkContext.statusTracker()
 
     def run_once(name: str) -> tuple[float, int, int]:
-        settle()
         jobs_before = set(st.getJobIdsForGroup(None) or [])
-        t0 = time.perf_counter()
-        df = QUERIES[name](spark, args.sf_dir)
-        if args.noop:
-            df.write.format("noop").mode("overwrite").save()
-        else:
-            df.count()
-        dt = time.perf_counter() - t0
-        jobs_after = set(st.getJobIdsForGroup(None) or [])
-        new_jobs = jobs_after - jobs_before
-        n_stages = 0
-        for j in new_jobs:
-            ji = st.getJobInfo(j)
-            if ji is not None:
-                n_stages += len(ji.stageIds)
-        return dt, len(new_jobs), n_stages
+        dt = harness.time_query(spark, name, args.sf_dir)
+        new_jobs = set(st.getJobIdsForGroup(None) or []) - jobs_before
+        infos = [st.getJobInfo(j) for j in new_jobs]
+        return dt, len(new_jobs), sum(len(ji.stageIds) for ji in infos if ji)
 
     for name in args.queries:
-        if name not in QUERIES:
+        if name not in queries:
             print(json.dumps({"query": name, "error": "not registered"}))
             continue
-        times = []
-        jobs = stages = 0
-        for i in range(args.runs):
-            dt, j, s = run_once(name)
-            times.append(round(dt, 3))
-            if i == args.runs - 1:
-                jobs, stages = j, s
+        passes = [run_once(name) for _ in range(args.runs)]
+        times = [dt for dt, _, _ in passes]
+        _, jobs, stages = passes[-1]
         if args.explain_dir:
             os.makedirs(args.explain_dir, exist_ok=True)
             try:
-                df = QUERIES[name](spark, args.sf_dir)
+                df = queries[name](spark, args.sf_dir)
                 txt = df._jdf.queryExecution().explainString(
                     spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
                         "formatted"

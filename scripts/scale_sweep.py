@@ -5,11 +5,12 @@ which through round 8 were extrapolations from sf0.1.
 
 Runs each family at sf0.1 (5k docs / 2k vectors) and at the
 sf1-equivalent scratch corpus (scripts/gen_scale_corpus.py: 50k docs /
-20k vectors, same statistical recipe), best of N passes, and prints a
-ratio table. A family scales linearly when wall_10x / wall_1x stays
-near the data ratio (10) or below; with 32 local cores, small-scale
-runs are scheduling-bound so ratios well UNDER 10 are expected until
-tasks saturate.
+20k vectors, same statistical recipe), best of N passes timed like the
+bench (``harness.time_query``: settle, then a noop-sink write of the
+full result), and prints a ratio table. A family scales linearly when
+wall_10x / wall_1x stays near the data ratio (10) or below; with 32
+local cores, small-scale runs are scheduling-bound so ratios well
+UNDER 10 are expected until tasks saturate.
 
 Usage:
   python scripts/gen_scale_corpus.py /tmp/scale10x 10
@@ -20,7 +21,6 @@ from __future__ import annotations
 
 import os
 import sys
-import time
 
 _REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, _REPO)
@@ -34,9 +34,8 @@ def main() -> None:
     passes = int(sys.argv[2]) if len(sys.argv) > 2 else 2
     small_dir = "/root/testdata/sf0.1"
 
+    from etl_procedure_codes_crawler_spark import harness
     from etl_procedure_codes_crawler_spark.session import get_spark
-    from etl_procedure_codes_crawler_spark.plans.relational import QUERIES
-    from etl_procedure_codes_crawler_spark.llm import queries as _llm  # noqa
 
     spark = get_spark(app_name="scale-sweep")
 
@@ -53,37 +52,21 @@ def main() -> None:
         "dsir_importance_topk",
         "llm_corpus_prep_v4",
     ]
-    # round-10: target list override for the 100x sweep (the r9 judge's
-    # suspects: v5, the KMV store, containment, margin-ANN, streaming
-    # gates, unigram EM, blocklist) — comma-separated query names
+    # target list override, comma-separated query names (SCALING.md's
+    # 100x sweep ran v5, the KMV store, containment, margin-ANN, the
+    # streaming gates, unigram EM and the blocklist through it)
     env_names = os.environ.get("SPARK_GRAFT_SWEEP_QUERIES", "")
     if env_names:
         names = [n for n in env_names.split(",") if n]
     small_dir = os.environ.get("SPARK_GRAFT_SWEEP_SMALL", small_dir)
 
-    import gc
-
-    def settle():
-        try:
-            spark.catalog.clearCache()
-            spark.sparkContext._jvm.System.gc()
-        except Exception:  # noqa: BLE001
-            pass
-        gc.collect()
-        time.sleep(0.3)
-
     def best(name: str, sf_dir: str) -> tuple[float, int]:
-        t_best, rows = None, -1
-        for _ in range(passes):
-            settle()
-            t0 = time.perf_counter()
-            rows = QUERIES[name](spark, sf_dir).count()
-            t = time.perf_counter() - t0
-            t_best = t if t_best is None else min(t_best, t)
+        t_best = min(harness.time_query(spark, name, sf_dir) for _ in range(passes))
+        # a row count, taken outside the timer
+        rows = harness.registry()[name](spark, sf_dir).count()
         return round(t_best, 2), rows
 
-    # warmup
-    QUERIES["simhash_near_dup_pairs"](spark, small_dir).count()
+    harness.warm_up(spark, small_dir)
 
     print(f"{'query':38s} {'1x sec':>8s} {'10x sec':>8s} "
           f"{'ratio':>6s} {'rows 1x':>9s} {'rows 10x':>9s}")
