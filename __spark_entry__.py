@@ -147,13 +147,12 @@ def _gate_order(mapping):
 
 
 def _registry():
-    from etl_procedure_codes_crawler_spark.plans import relational
+    # harness.registry imports every registering module, unguarded: a
+    # broken import fails the gate instead of shrinking it
+    from etl_procedure_codes_crawler_spark.harness import registry
+    from etl_procedure_codes_crawler_spark.plans.relational import ORACLES
 
-    try:  # beyond-reference operator families register on import
-        from etl_procedure_codes_crawler_spark.llm import queries as _llm  # noqa: F401
-    except ImportError:
-        pass
-    return relational.QUERIES, relational.ORACLES
+    return registry(), ORACLES
 
 
 def entry(spark: SparkSession) -> DataFrame:

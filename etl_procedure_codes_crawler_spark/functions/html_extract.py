@@ -482,7 +482,6 @@ STATUS_DELETED = "deleted"
 STATUS_404 = "error_404"
 STATUS_DELETED_LISTING = "deleted_listing"
 STATUS_PARSE_ERROR = "parse_error"
-STATUS_FETCH_ERROR = "fetch_error"
 
 _EMPTY_21 = {
     "main_interval": None,

@@ -1,4 +1,4 @@
-"""Distributed Bloom-filter membership store.
+"""Distributed Bloom-filter membership prefilter.
 
 The ingest gate's exact dedup anti-joins every batch against the full
 warehouse id/fingerprint set — correct, but at 100 TB the warehouse
@@ -33,10 +33,9 @@ tests in tests/test_bloom.py.
 
 from __future__ import annotations
 
-import json
 import math
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 _WORD = 64
@@ -147,144 +146,3 @@ def probe_bloom(
     seen = F.when(F.col("_b_val").isNull(), F.lit(False)).otherwise(seen)
     keep = [c for c in df.columns]
     return out.select(*keep, seen.alias("maybe_seen"))
-
-
-# ---------------------------------------------------------------------------
-# Persisted store: append-only segments, OR-idempotent under replay
-# ---------------------------------------------------------------------------
-#
-# Each accepted batch APPENDS its own (word_idx, bits) segment; the
-# read path folds all segments with one bit_or groupBy (m/64 rows out,
-# regardless of segment count). Because OR is idempotent, a crash-
-# replayed batch re-appending the same segment changes nothing — the
-# store needs no atomic swap on the hot path, only on compaction.
-
-
-def _meta_path(path: str) -> str:
-    return path.rstrip("/") + "/meta"
-
-
-def _segments_path(path: str) -> str:
-    return path.rstrip("/") + "/segments"
-
-
-def create_bloom_store(
-    spark: SparkSession,
-    path: str,
-    n_items: int,
-    fpr: float = 0.01,
-    seed_df: DataFrame | None = None,
-    col: str | None = None,
-) -> dict:
-    """Initialize a store sized for ``n_items`` at ``fpr``. If the
-    guarded warehouse already has rows, pass them as ``seed_df[col]``
-    — a bloom that under-covers its warehouse would wrongly wave
-    known keys through the definitely-new fast path."""
-    m_bits, k = bloom_parameters(n_items, fpr)
-    meta = {"m_bits": m_bits, "k": k, "fpr": fpr, "version": 2}
-    spark.createDataFrame([(json.dumps(meta),)], "meta string").repartition(
-        1
-    ).write.mode("overwrite").parquet(_meta_path(path))
-    if seed_df is not None:
-        if col is None:
-            raise ValueError("seed_df requires col")
-        build_bloom(seed_df, col, m_bits, k).write.mode("overwrite").parquet(
-            _segments_path(path)
-        )
-    return meta
-
-
-class BloomStoreVersionError(RuntimeError):
-    """Persisted store was built under an older probe scheme."""
-
-
-def load_bloom_meta(spark: SparkSession, path: str) -> dict:
-    """Store meta, REFUSING version-1 stores.
-
-    Version 2 changed the double-hash step to h2 = 1 + pmod(h, m−1)
-    (nonzero step), which redefines the probe positions of every key
-    with k ≥ 2. Probing a version-1 bit array with version-2 positions
-    yields FALSE NEGATIVES — the definitely-new fast path would
-    silently re-append keys the warehouse already holds, breaking
-    exactly-once — so a stale store is a hard error, not a warning.
-    Rebuild with ``create_bloom_store(..., seed_df=warehouse)``."""
-    meta = json.loads(
-        spark.read.parquet(_meta_path(path)).first()["meta"]
-    )
-    version = meta.get("version", 1)
-    if version != 2:
-        raise BloomStoreVersionError(
-            f"bloom store at {path!r} is version {version}; this code "
-            "probes with the version-2 nonzero double-hash step and "
-            "would return false negatives against its bit array. "
-            "Rebuild the store from the guarded warehouse: "
-            "create_bloom_store(spark, path, n_items, fpr, "
-            "seed_df=warehouse, col=key)."
-        )
-    return meta
-
-
-def read_bloom_store(spark: SparkSession, path: str) -> DataFrame:
-    """The folded filter relation (m/64 rows max). Empty store folds
-    to an empty relation — every probe returns definitely-new, which
-    is correct for a store with nothing inserted."""
-    from ..sources.parquet import read_table_or_empty
-    from pyspark.sql.types import LongType, StructField, StructType
-
-    schema = StructType(
-        [StructField("word_idx", LongType()), StructField("bits", LongType())]
-    )
-    segs = read_table_or_empty(spark, _segments_path(path), schema)
-    return segs.groupBy("word_idx").agg(F.bit_or("bits").alias("bits"))
-
-
-def append_to_bloom_store(
-    spark: SparkSession, path: str, items: DataFrame, col: str
-) -> None:
-    """Append one segment covering ``items[col]``. Idempotent under
-    replay (OR), safe to run BEFORE the guarded warehouse append —
-    over-approximation only routes rows to the exact check."""
-    meta = load_bloom_meta(spark, path)
-    build_bloom(items, col, meta["m_bits"], meta["k"]).write.mode(
-        "append"
-    ).parquet(_segments_path(path))
-
-
-def compact_bloom_store(spark: SparkSession, path: str) -> int:
-    """Fold accreted segments into one. Returns the folded row count.
-
-    Reader-safe by OR-idempotency rather than by swap: the folded
-    relation is APPENDED into the live segments directory as one more
-    segment, and only then are the pre-fold segment files deleted
-    individually. Every intermediate listing a concurrent reader can
-    observe — old segments alone, old + folded, folded + a shrinking
-    suffix of old, folded alone — ORs to the identical filter, and the
-    directory is never empty mid-compaction (round 7's rename-out/
-    rename-in swap had a window where a reader folded an EMPTY store,
-    answered definitely-new for everything, and a concurrent
-    bloom-gated ingest would have bypassed the exact check). A crash
-    mid-delete merely leaves redundant old segments for the next
-    compaction to clear."""
-    from ..sinks.fsutil import checked_rename, hadoop_fs, remove_stale
-
-    fs, hpath = hadoop_fs(spark, path)
-    seg = _segments_path(path)
-    src = hpath(seg)
-    backup = hpath(seg + "._precompact")
-    # heal the terminal states of the retired swap protocol, in case a
-    # pre-upgrade compaction crashed mid-swap
-    if (not fs.exists(src)) and fs.exists(backup):
-        checked_rename(fs, backup, src)
-    remove_stale(fs, hpath(seg + "._compacting"), backup)
-    if not fs.exists(src):
-        return 0
-    before = [
-        f.getPath() for f in fs.listStatus(src)
-        if f.getPath().getName() != "_SUCCESS"
-    ]
-    folded = read_bloom_store(spark, path).localCheckpoint(eager=True)
-    n = folded.count()
-    folded.repartition(1).write.mode("append").parquet(seg)
-    for p in before:
-        fs.delete(p, False)
-    return n

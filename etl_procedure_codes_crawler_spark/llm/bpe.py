@@ -72,31 +72,12 @@ def _adjacent_pairs(sym_col):
     )
 
 
-def _pair_entries(sym_col, delta_col):
-    """array<struct<l,r,d>> of adjacent pairs tagged with a count
-    delta — the flat single-transform twin of :func:`_adjacent_pairs`
-    (nesting a second transform over its output tripped expression
-    rewriting into binding one array's indices to the other's
-    elements)."""
-    entries = F.transform(
-        F.sequence(F.lit(1), F.size(sym_col) - 1),
-        lambda i: F.struct(
-            F.element_at(sym_col, i).alias("l"),
-            F.element_at(sym_col, i + 1).alias("r"),
-            delta_col.alias("d"),
-        ),
-    )
-    return F.when(F.size(sym_col) >= 2, entries).otherwise(
-        F.array().cast("array<struct<l:string,r:string,d:bigint>>")
-    )
-
-
 def _pair_entries_tagged(sym_col, delta_col, step: int):
-    """array<struct<m,l,r,d>> — :func:`_pair_entries` with a literal
-    batch-step tag baked into the SAME transform. The tag cannot be
-    added by a second transform over _pair_entries' output: nesting
-    transforms trips the same lambda-variable cross-binding the
-    _pair_entries docstring records (observed again in round 8 as
+    """array<struct<m,l,r,d>> — the (left, right) adjacent-symbol
+    pairs with their delta weight, plus a literal batch-step tag baked
+    into the SAME transform. The tag cannot be added by a second
+    transform over this one's output: nesting transforms trips
+    Spark's lambda-variable cross-binding (observed in round 8 as
     step tags taking the INNER sequence's index values)."""
     entries = F.transform(
         F.sequence(F.lit(1), F.size(sym_col) - 1),
@@ -552,27 +533,6 @@ def train_bpe_merges(
     return df.sparkSession.createDataFrame(
         [(r, a, b, a + b, c) for r, a, b, c in merges],
         "rank bigint, left string, right string, merged string, pair_freq bigint",
-    )
-
-
-def bpe_vocab(
-    df: DataFrame,
-    text_col: str = "text",
-    num_merges: int = 20,
-    min_pair_freq: int = 2,
-    max_driver_words: int = _MAX_DRIVER_WORDS,
-) -> DataFrame:
-    """(token, freq) of the post-merge symbol vocabulary — the
-    characters plus every learned merge, with corpus frequencies —
-    read straight off the trainer's final symbol table."""
-    _merges, syms = _train(
-        df, text_col, num_merges, min_pair_freq, "stop",
-        max_driver_words=max_driver_words,
-    )
-    return (
-        syms.select("freq", F.explode("sym").alias("token"))
-        .groupBy("token")
-        .agg(F.sum("freq").alias("freq"))
     )
 
 

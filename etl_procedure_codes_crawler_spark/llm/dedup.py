@@ -51,36 +51,6 @@ def exact_duplicate_groups(
     )
 
 
-def keep_best_exact(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
-    """Exact-dup survivor by QUALITY, not arrival: per normalized
-    fingerprint keep the copy with the longest RAW text (duplicates
-    that normalize equal can differ in case/whitespace — the longest
-    raw form preserves the most formatting), min-id tiebreak.
-
-    ``max_by`` over a (length, -id) ordering struct instead of a
-    row_number window: the aggregation partial-combines map-side, so
-    only one (fingerprint, best-so-far) row per group leaves each
-    task — a window would shuffle every duplicate row to sort it.
-    """
-    return (
-        df.select(
-            fingerprint_sha256(text_col).alias("fingerprint"),
-            F.col(id_col).cast("bigint").alias("id"),
-            F.length(text_col).cast("bigint").alias("_len"),
-        )
-        .groupBy("fingerprint")
-        .agg(
-            F.max_by(
-                F.col("id"),
-                F.struct(F.col("_len"), (-F.col("id")).alias("_negid")),
-            ).alias("keep_id"),
-            F.count(F.lit(1)).alias("n_copies"),
-        )
-    )
-
-
 def incremental_dedup_new_docs(
     batch: DataFrame,
     snapshot: DataFrame,
@@ -111,17 +81,6 @@ def incremental_dedup_new_docs(
     survivors = b.groupBy("fingerprint").agg(F.min("id").alias("first_id"))
     snap = snapshot.select(fingerprint_sha256(text_col).alias("fingerprint"))
     return survivors.join(snap, "fingerprint", "left_anti")
-
-
-def drop_exact_duplicates(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
-    """Keep the minimum-id representative of every content group —
-    dropDuplicates on a derived key, deterministic survivor choice."""
-    survivors = exact_duplicate_groups(df, text_col, id_col).select(
-        F.col("first_id").alias(id_col)
-    )
-    return df.join(survivors, on=id_col, how="left_semi")
 
 
 # ---------------------------------------------------------------------------
@@ -469,9 +428,11 @@ def duplicate_spans_for_pairs(
 
 
 def intra_doc_kept_blocks(text_col: str = "text", block: int = 8):
-    """(n_blocks, kept_blocks) Column pair for
-    :func:`remove_intra_doc_repeats` — exposed so funnel capstones can
-    ride the block-dedup signals inside a larger single-scan
+    """(n_blocks, kept_blocks) Column pair for WITHIN-document
+    repetition removal: each document splits into non-overlapping
+    ``block``-token blocks and keeps only each block's FIRST
+    occurrence, as per-row JVM array algebra (zero shuffle, no UDF).
+    Funnel capstones ride these signals inside a larger single-scan
     projection. ``kept_blocks`` is NULL for NULL text."""
     toks = F.split(F.trim(F.col(text_col)), r"\s+")
     n = F.size(toks)
@@ -489,50 +450,6 @@ def intra_doc_kept_blocks(text_col: str = "text", block: int = 8):
     )
     kept = F.when(F.col(text_col).isNull(), None).otherwise(kept)
     return n_blocks, kept
-
-
-def remove_intra_doc_repeats(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    block: int = 8,
-) -> DataFrame:
-    """WITHIN-document repetition removal: split each document into
-    non-overlapping ``block``-token blocks and keep only each block's
-    FIRST occurrence — the cheap kill for looped boilerplate, repeated
-    headers/footers, and template spam inside a single document (the
-    within-doc complement of :func:`remove_duplicate_spans`, which
-    works across documents).
-
-    Entirely per-row JVM array algebra — zero shuffle, no UDF: blocks
-    come from one ``transform`` over a ``sequence`` of block indexes,
-    and first-occurrence filtering is ``array_position(blocks, b) ==
-    i+1`` (explicit first-index semantics; array_distinct's ordering
-    guarantee is never relied on, so the DuckDB oracle is exact).
-    NULL text passes through NULL with 0 counts — removal must not
-    invent content.
-
-    Returns ``(id, n_blocks, n_kept, text_clean)``; text is re-joined
-    from kept blocks, so whitespace normalizes corpus-wide like the
-    span-removal pass.
-    """
-    n_blocks, out_blocks = intra_doc_kept_blocks(text_col, block)
-    return df.select(
-        F.col(id_col),
-        F.coalesce(F.size(out_blocks), F.lit(0)).cast("bigint").alias(
-            "n_blocks_kept"
-        ),
-        F.coalesce(
-            F.when(F.col(text_col).isNull(), F.lit(0)).otherwise(n_blocks),
-            F.lit(0),
-        ).cast("bigint").alias("n_blocks"),
-        F.array_join(out_blocks, " ").alias("text_clean"),
-    ).select(
-        id_col,
-        "n_blocks",
-        F.col("n_blocks_kept").alias("n_kept"),
-        "text_clean",
-    )
 
 
 def remove_duplicate_spans(
@@ -604,9 +521,6 @@ def remove_duplicate_spans(
 # MinHash + LSH (scale path)
 # ---------------------------------------------------------------------------
 
-#: mask for the double-hash stride: h2 < 2^55 keeps h1 + 31*h2 well
-#: inside int64 in BOTH engines (no modular reduction needed, so the
-#: arithmetic is trivially identical)
 #: md5-mode family geometry: member_i = rot_{a_i}(h1) XOR
 #: rot_{b_i}(h2) over two 60-bit md5 prefixes. The (a_i, b_i) pairs
 #: are distinct for every i any family here uses (a cycles mod 60, b
@@ -768,24 +682,6 @@ def _capped_bucket_pairs(
     return all_pairs.unionByName(star_pairs).distinct()
 
 
-def lsh_bucket_stats(buckets: DataFrame, max_bucket_size: int) -> DataFrame:
-    """Monitoring companion to :func:`_capped_bucket_pairs`: per-band
-    bucket-size histogram head plus how many buckets were star-capped
-    — run this (cheap: one groupBy) to see what the cap dropped."""
-    return (
-        buckets.groupBy("band", "bucket")
-        .agg(F.count(F.lit(1)).alias("bucket_size"))
-        .groupBy("band")
-        .agg(
-            F.count(F.lit(1)).alias("n_buckets"),
-            F.max("bucket_size").alias("max_bucket_size"),
-            F.sum(
-                F.when(F.col("bucket_size") > max_bucket_size, 1).otherwise(0)
-            ).alias("n_capped_buckets"),
-        )
-    )
-
-
 def minhash_buckets(
     df: DataFrame,
     text_col: str = "text",
@@ -839,8 +735,7 @@ def minhash_lsh_candidate_pairs(
     candidates. Pair generation is a self-join per (band, bucket) —
     each bucket is tiny in the non-adversarial case, and degenerate
     buckets are star-capped at ``max_bucket_size`` (see
-    :func:`_capped_bucket_pairs`; :func:`lsh_bucket_stats` reports
-    what got capped).
+    :func:`_capped_bucket_pairs`).
     """
     buckets = minhash_buckets(
         df, text_col, id_col, k, bands, rows_per_band, hash_fn
@@ -1134,7 +1029,7 @@ def remove_boilerplate_passages(
     fingerprint, reusing the exchange. Doc frequency is an exact
     countDistinct inside the fp group (a posting list read linearly —
     a degenerate boilerplate passage costs O(list), not O(list²)).
-    Complements :func:`remove_intra_doc_repeats` (within-doc) and
+    Complements :func:`intra_doc_kept_blocks` (within-doc) and
     :func:`remove_duplicate_spans` (pairwise spans): this is the
     corpus-frequency axis."""
     chunks = passage_rows(df, block, text_col, id_col)

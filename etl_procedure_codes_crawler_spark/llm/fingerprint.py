@@ -32,12 +32,10 @@ noise matches and bounds every posting list, exactly as
 
 from __future__ import annotations
 
-import json
-
 import numpy as np
 import pandas as pd
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
@@ -174,161 +172,3 @@ def winnow_overlap_pairs(
         .agg(F.count(F.lit(1)).alias("shared_fps"))
         .filter(F.col("shared_fps") >= min_shared)
     )
-
-
-# ---------------------------------------------------------------------------
-# Persisted eval-set decontamination store
-# ---------------------------------------------------------------------------
-
-
-def _fps_with_empty_markers(
-    df: DataFrame,
-    text_col: str,
-    id_col: str,
-    k: int,
-    window: int,
-    max_chars: int,
-) -> DataFrame:
-    """Store-side fingerprint rows: like :func:`winnow_fingerprints`
-    but a document yielding NO fingerprints (shorter than k, NULL
-    text) still gets one (id, NULL) marker row — without it the
-    append's id anti-join would classify such docs as never-seen and
-    re-fingerprint them on EVERY append, and the append count would
-    never converge. Queries filter the NULL markers out before
-    joining."""
-    winnow = _winnow_udf(k, window)
-    return df.select(
-        F.col(id_col).alias("id"),
-        winnow(_normalized_capped(text_col, max_chars)).alias("_fps"),
-    ).select("id", F.explode_outer("_fps").alias("fingerprint"))
-
-
-def build_winnow_store(
-    eval_docs: DataFrame,
-    path: str,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    k: int = KGRAM,
-    window: int = WINDOW,
-    max_chars: int = MAX_CHARS,
-    max_df: int = 20,
-) -> None:
-    """Persist the winnowing fingerprints of a BENCHMARK/EVAL corpus —
-    the decontamination workflow: every training batch is then checked
-    against the store (:func:`contamination_against_store`) so eval
-    material, quoted eval material, and lightly-edited eval material
-    never enter a training corpus.
-
-    Layout: <path>/meta (hashing params — queries must fingerprint
-    with the STORE's geometry or the join is silently empty) and
-    <path>/fps with raw (id, fingerprint) rows. Fingerprints are
-    persisted UNCAPPED; the stop-fingerprint df-cap (``max_df`` rides
-    in meta) is applied at query time over the store-side counts —
-    eval sets are curated and small, the recount is one cheap groupBy,
-    and applying the cap at build time would silently drift as
-    :func:`append_to_winnow_store` grows the store. Docs yielding no
-    fingerprints are recorded as (id, NULL) marker rows so appends
-    stay id-idempotent for them too."""
-    spark = eval_docs.sparkSession
-    _fps_with_empty_markers(
-        eval_docs, text_col, id_col, k, window, max_chars
-    ).write.mode("overwrite").parquet(path.rstrip("/") + "/fps")
-    meta = {
-        "k": k,
-        "window": window,
-        "max_chars": max_chars,
-        "max_df": max_df,
-    }
-    spark.createDataFrame([(json.dumps(meta),)], "meta string").repartition(
-        1
-    ).write.mode("overwrite").parquet(path.rstrip("/") + "/meta")
-
-
-def load_winnow_meta(spark: SparkSession, path: str) -> dict:
-    return json.loads(
-        spark.read.parquet(path.rstrip("/") + "/meta").first()["meta"]
-    )
-
-
-def append_to_winnow_store(
-    spark: SparkSession,
-    path: str,
-    new_eval_docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> int:
-    """Grow the eval store (new benchmark versions, new held-out
-    splits): fingerprint docs not already present (anti-join on id,
-    idempotent under replay) with the STORE's hashing geometry."""
-    meta = load_winnow_meta(spark, path)
-    existing = spark.read.parquet(path.rstrip("/") + "/fps").select(
-        F.col("id").alias(id_col)
-    ).distinct()
-    fresh = (
-        new_eval_docs.where(F.col(id_col).isNotNull())
-        .dropDuplicates([id_col])
-        .join(existing, id_col, "left_anti")
-    )
-    fps = _fps_with_empty_markers(
-        fresh, text_col, id_col, meta["k"], meta["window"], meta["max_chars"]
-    ).localCheckpoint(eager=True)  # lineage reads the path being appended
-    # count DOCS (the empty-marker rows make every fresh doc visible
-    # here), not fingerprints — the return value is docs appended
-    n = fps.select("id").distinct().count()
-    if n:
-        fps.write.mode("append").parquet(path.rstrip("/") + "/fps")
-    return n
-
-
-def contamination_against_store(
-    spark: SparkSession,
-    path: str,
-    batch: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    min_shared: int = 2,
-) -> DataFrame:
-    """(new_id, eval_id, shared_fps) for every batch document sharing
-    at least ``min_shared`` winnowing fingerprints with a stored eval
-    document — any shared normalized run of k+window-1 characters is
-    guaranteed to fingerprint, so verbatim and lightly-edited eval
-    leakage both surface. The batch is fingerprinted ONCE with the
-    store's geometry; the join shuffles 8-byte fingerprints; the
-    store-side df-cap (from meta) bounds every posting list."""
-    meta = load_winnow_meta(spark, path)
-    store = spark.read.parquet(path.rstrip("/") + "/fps").filter(
-        F.col("fingerprint").isNotNull()  # drop the empty-doc markers
-    )
-    df_ok = (
-        store.groupBy("fingerprint")
-        .agg(F.count(F.lit(1)).alias("_df"))
-        .filter(F.col("_df") <= meta["max_df"])
-        .select("fingerprint")
-    )
-    kept = store.join(df_ok, "fingerprint").select(
-        F.col("id").alias("eval_id"), "fingerprint"
-    )
-    batch_fps = winnow_fingerprints(
-        batch, text_col, id_col, meta["k"], meta["window"], meta["max_chars"]
-    ).select(F.col("id").alias("new_id"), "fingerprint")
-    return (
-        batch_fps.join(kept, "fingerprint")
-        .groupBy("new_id", "eval_id")
-        .agg(F.count(F.lit(1)).alias("shared_fps"))
-        .filter(F.col("shared_fps") >= min_shared)
-    )
-
-
-def compact_winnow_store(
-    spark: SparkSession, path: str, target_file_mb: int = 128
-) -> int:
-    """Restore a compact file layout after incremental appends — every
-    :func:`append_to_winnow_store` call adds a file set, and the store
-    scan in :func:`contamination_against_store` runs once per training
-    batch forever. Delegates to :func:`..sinks.parquet.compact_dataset`
-    (atomic swap, crash-healed on the next call); the fingerprint rows
-    are a set, so query results are unaffected. Returns the new file
-    count."""
-    from ..sinks.parquet import compact_dataset
-
-    return compact_dataset(spark, path.rstrip("/") + "/fps", target_file_mb)

@@ -2,13 +2,12 @@
 
 A takedown (GDPR/DMCA/opt-out) is not one delete — a document a
 pipeline ingested lives in the WAREHOUSE, its MinHash signature in the
-near-dup store, its winnowing fingerprints in the decontamination
-store, and its embedding in the ANN index. Deleting only the warehouse
+near-dup store, and its embedding in the ANN index. Deleting only the warehouse
 copy leaves the document's shadow influencing dedup and similarity
 decisions forever. :func:`forget_documents` removes a set of ids from
 every artifact it is given, each with the right rewrite strategy:
 
-- plain datasets (warehouse, signature store, fingerprint store):
+- plain datasets (warehouse, signature store):
   FILE-PRUNED rewrite — a semi-join against ``input_file_name()``
   locates the files actually holding doomed ids, only THOSE files are
   anti-joined and replaced, every other file stays byte-identical.
@@ -393,7 +392,6 @@ def forget_documents(
     ids: DataFrame,
     warehouse_path: str | None = None,
     neardup_store_path: str | None = None,
-    winnow_store_path: str | None = None,
     ann_index_path: str | None = None,
     id_col: str = "doc_id",
 ) -> dict[str, int]:
@@ -439,10 +437,6 @@ def forget_documents(
     if neardup_store_path is not None:
         removed["neardup_store"] = _forget_plain(
             spark, neardup_store_path.rstrip("/") + "/signatures", key_ids, "id"
-        )
-    if winnow_store_path is not None:
-        removed["winnow_store"] = _forget_plain(
-            spark, winnow_store_path.rstrip("/") + "/fps", key_ids, "id"
         )
     if ann_index_path is not None:
         removed["ann_index"] = _forget_index_cells(

@@ -1,9 +1,9 @@
-"""Persisted IVF+PQ vector index: build once, query many, append new.
+"""Persisted IVF+PQ vector index: build once, query many.
 
 The in-memory ANN operators (:mod:`.similarity`) train quantizers per
 call — right for ad-hoc analytics, wrong for serving: at corpus scale
 an index is BUILT once (train, encode, lay out), then queried many
-times and grown incrementally. This module persists the composed
+times. This module persists the composed
 IVF+PQ structure as plain parquet:
 
     <path>/meta/    one JSON row: centroids, codebook, m, sub, dims
@@ -42,9 +42,7 @@ from .similarity import (
     _kmeans_int,
     _kmeans_np,
     _md5_h60_py,
-    _pq_codes_udf,
     _pq_context,
-    _pq_int_codecs,
     _pq_int_context,
     _quantize_np,
     _sq_dists_np,
@@ -157,66 +155,6 @@ def build_ivfpq_index(
 def load_index_meta(spark: SparkSession, path: str) -> dict:
     row = spark.read.parquet(path.rstrip("/") + "/meta").first()
     return json.loads(row["meta"])
-
-
-def append_to_ivfpq_index(
-    spark: SparkSession, path: str, new_vectors: DataFrame,
-    vec_col: str = "embedding", id_col: str = "vec_id",
-) -> int:
-    """Grow the index without retraining: encode new vectors with the
-    STORED quantizers (quantizer drift is a rebuild decision, not an
-    append side effect), skip ids already present, append to the cell
-    partitions (dynamic partition append — existing files never
-    rewritten). Returns the number of vectors appended."""
-    from .text import spread_small_input
-
-    meta = load_index_meta(spark, path)
-    if meta.get("quant_mode", "float") == "md5":
-        # encode with the STORED integer quantizers — same grid the
-        # build used, so append == rebuild for identical inputs
-        codes_udf, _lut = _pq_int_codecs(
-            np.asarray(meta["codebook"], dtype=np.int64),
-            meta["m"], meta["sub"],
-        )
-        cell_udf = _ivf_cell_int_udf(
-            np.asarray(meta["centroids"], dtype=np.int64), normalize=True
-        )
-    else:
-        centroids = np.asarray(meta["centroids"])
-        codebook = np.asarray(meta["codebook"])
-        codes_udf = _pq_codes_udf(codebook, meta["m"], meta["sub"])
-        cell_udf = _ivf_cell_udf(centroids, normalize=True)
-
-    existing = spark.read.parquet(path.rstrip("/") + "/coded").select("id")
-    fresh = (
-        new_vectors.select(
-            F.col(id_col).alias("id"), F.col(vec_col).alias("vector")
-        )
-        .where(F.col("id").isNotNull())
-        # within-batch dedup: a replayed row concatenated into the same
-        # batch would otherwise pass the anti join twice and the
-        # duplicate coded rows would occupy multiple top-k slots at
-        # query time (conflicting vectors per id are an upstream
-        # integrity error — dq_integrity_report's territory)
-        .dropDuplicates(["id"])
-        .join(existing, "id", "left_anti")
-    )
-    coded = spread_small_input(fresh).select(
-        "id",
-        "vector",
-        F.coalesce(cell_udf(F.col("vector")), F.lit(-1)).alias("cell"),
-        codes_udf(F.col("vector")).alias("codes"),
-    ).localCheckpoint(eager=True)  # lineage reads the path being appended
-    n = coded.count()
-    if n:
-        # one file per cell per append (see build_ivfpq_index)
-        (
-            coded.repartition(meta["num_centroids"], "cell")
-            .write.mode("append")
-            .partitionBy("cell")
-            .parquet(path.rstrip("/") + "/coded")
-        )
-    return n
 
 
 def query_ivfpq_index(
@@ -351,345 +289,4 @@ def query_ivfpq_index(
             F.round("cosine", 4).alias("cosine"),
             "rank",
         )
-    )
-
-
-def query_ivfpq_index_distributed(
-    spark: SparkSession,
-    path: str,
-    queries: DataFrame,
-    k: int = 5,
-    nprobe: int = 4,
-    shortlist_factor: int = 10,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-) -> DataFrame:
-    """Top-k against the persisted index for a LARGE query batch
-    (offline re-ranking, corpus-vs-corpus linking): the query side
-    stays a DataFrame — probe cells and lookup tables come from the
-    same Arrow-batched UDFs the build used, with the stored quantizers
-    in their closures. No driver collect, so no static partition
-    pruning (every probed cell is data-dependent); the candidate join
-    is still the (cell) equi-join with the query side broadcast when
-    small, shuffled when not — AQE's call. Use
-    :func:`query_ivfpq_index` for serving-sized query sets, where the
-    driver-computed cell predicate prunes the scan to files."""
-    from .similarity import _ivf_probe_int_udf, _ivf_probe_udf, _pq_lut_udf
-
-    meta = load_index_meta(spark, path)
-    m, sub, K = meta["m"], meta["sub"], meta["codebook_size"]
-    if meta.get("quant_mode", "float") == "md5":
-        C = np.asarray(meta["codebook"], dtype=np.int64)
-        _codes, lut_udf = _pq_int_codecs(C, m, sub)
-        probe_udf = _ivf_probe_int_udf(
-            np.asarray(meta["centroids"], dtype=np.int64),
-            nprobe, normalize=True,
-        )
-    else:
-        G = np.asarray(meta["centroids"])
-        C = np.asarray(meta["codebook"])
-
-        lut_udf = _pq_lut_udf(C, m, sub)
-        probe_udf = _ivf_probe_udf(G, nprobe, normalize=True)
-    probes = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("qv"),
-        lut_udf(F.col(vec_col)).alias("lut"),
-        F.explode(probe_udf(F.col(vec_col))).alias("cell"),
-    )
-
-    coded = spark.read.parquet(path.rstrip("/") + "/coded")
-    terms = [
-        F.element_at(
-            F.col("lut"),
-            F.lit(j * K + 1) + F.element_at(F.col("codes"), j + 1),
-        )
-        for j in range(m)
-    ]
-    adc = terms[0]
-    for t in terms[1:]:
-        adc = adc + t
-    pairs = (
-        coded.select("id", "cell", "codes")
-        .join(probes.select("query_id", "lut", "cell"), "cell")
-        .filter(F.col("query_id") != F.col("id"))
-        .select(
-            "query_id", F.col("id").alias("neighbor_id"), adc.alias("adc_score")
-        )
-    )
-    w_adc = Window.partitionBy("query_id").orderBy(
-        F.desc("adc_score"), F.asc("neighbor_id")
-    )
-    short = (
-        pairs.withColumn("_arank", F.row_number().over(w_adc))
-        .filter(F.col("_arank") <= k * shortlist_factor)
-        .select("query_id", "neighbor_id")
-    )
-    cn = with_norm(
-        coded.select(F.col("id").alias("neighbor_id"), F.col("vector").alias("cv")),
-        "cv",
-    ).withColumnRenamed("_norm", "cn")
-    qn = with_norm(
-        queries.select(
-            F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv")
-        ),
-        "qv",
-    ).withColumnRenamed("_norm", "qn")
-    reranked = (
-        cn.join(short, "neighbor_id")
-        .join(qn, "query_id")
-        .select(
-            "query_id",
-            "neighbor_id",
-            (
-                _dot(F.col("qv"), F.col("cv")) / (F.col("qn") * F.col("cn"))
-            ).alias("cosine"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cosine"), F.asc("neighbor_id")
-    )
-    return (
-        reranked.withColumn("rank", F.row_number().over(w).cast("bigint"))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round("cosine", 4).alias("cosine"),
-            "rank",
-        )
-    )
-
-
-def compact_ivfpq_index(spark: SparkSession, path: str) -> int:
-    """Restore the one-file-per-cell layout after incremental appends.
-
-    :func:`append_to_ivfpq_index` deliberately never rewrites existing
-    files, so every append adds one file per touched cell; after N
-    ingest batches a "pruned" query still LISTS AND OPENS N files per
-    probed cell and the file-listing overhead dominates the scan.
-    Compaction reads the coded table once, repartitions on cell (each
-    cell's rows land in exactly one task → exactly one file per cell),
-    and atomically swaps via a temp path with the same crash contract
-    as :func:`..sinks.parquet.compact_dataset`: a crash between the
-    two renames is healed at the next call by restoring the backup.
-    Query results are bit-identical before/after (pinned in
-    tests/test_ann_index.py). Returns the new data-file count.
-    """
-    from ..sinks.fsutil import checked_rename, hadoop_fs, remove_stale
-
-    meta = load_index_meta(spark, path)
-    coded_path = path.rstrip("/") + "/coded"
-    fs, hpath = hadoop_fs(spark, coded_path)
-    src = hpath(coded_path)
-    tmp = coded_path + "._compacting"
-    tmp_p = hpath(tmp)
-    backup = hpath(coded_path + "._precompact")
-    # crash recovery first: a prior compaction that died between its
-    # renames left src missing and ._precompact holding the only copy
-    if (not fs.exists(src)) and fs.exists(backup):
-        checked_rename(fs, backup, src)
-    remove_stale(fs, tmp_p, backup)
-    from ..sinks.versions import _data_files, _versions_dir, record_rewrite
-
-    old_files = (
-        _data_files(fs, hpath, coded_path)
-        if fs.exists(hpath(_versions_dir(coded_path)))
-        else []
-    )
-
-    (
-        spark.read.parquet(coded_path)
-        .repartition(meta["num_centroids"], "cell")
-        .write.mode("overwrite")
-        .partitionBy("cell")
-        .parquet(tmp)
-    )
-    checked_rename(fs, src, backup)
-    checked_rename(fs, tmp_p, src)
-    fs.delete(backup, True)
-    # versioning stamp after the swap is durable (no-op unless the
-    # coded table has committed versions)
-    record_rewrite(spark, coded_path, "compact", old_files)
-
-    out_files = 0
-    it = fs.listFiles(src, True)
-    while it.hasNext():
-        if it.next().getPath().getName().endswith(".parquet"):
-            out_files += 1
-    return out_files
-
-
-def index_health(
-    spark: SparkSession,
-    path: str,
-    sample_size: int = 16,
-    k: int = 10,
-    nprobe: int = 4,
-) -> DataFrame:
-    """One-row health report for a persisted index — the number behind
-    the "rebuild decision" that appends with frozen quantizers defer:
-
-    - cell balance (min/max/avg rows per cell, imbalance = max/avg):
-      appends from a drifted distribution pile into few cells, which
-      both skews probe cost and starves recall;
-    - ``n_files``: append-accreted small files — when it grows well
-      past ``n_cells``, run :func:`compact_ivfpq_index`;
-    - ``mean_adc_overlap``: agreement between the PQ ADC top-k and the
-      exact-cosine top-k over the same probed cells, averaged over a
-      deterministic probe sample (the ``sample_size`` lowest-id
-      vectors). Frozen codebooks encode drifted vectors badly, so this
-      is the direct measure of quantizer staleness — when it sags,
-      rebuild.
-
-    Cost: one metadata-sized groupBy over (cell), one FS listing, and
-    one pruned ADC+exact pass for the sample — no full re-rank of the
-    corpus.
-    """
-    from ..sinks.fsutil import hadoop_fs
-
-    meta = load_index_meta(spark, path)
-    m, sub, K = meta["m"], meta["sub"], meta["codebook_size"]
-    G = np.asarray(meta["centroids"])
-    C = np.asarray(meta["codebook"])
-    coded_path = path.rstrip("/") + "/coded"
-    coded = spark.read.parquet(coded_path)
-
-    balance = (
-        coded.groupBy("cell")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .agg(
-            F.count(F.lit(1)).alias("n_cells"),
-            F.sum("n").alias("n_rows"),
-            F.min("n").alias("min_cell_rows"),
-            F.max("n").alias("max_cell_rows"),
-            F.avg("n").alias("avg_cell_rows"),
-        )
-        .first()
-    )
-
-    fs, hpath = hadoop_fs(spark, coded_path)
-    n_files = 0
-    it = fs.listFiles(hpath(coded_path), True)
-    while it.hasNext():
-        if it.next().getPath().getName().endswith(".parquet"):
-            n_files += 1
-
-    # deterministic probe sample: the lowest-id vectors
-    q_rows = (
-        coded.select("id", "vector").orderBy("id").limit(sample_size).collect()
-    )
-    qids = [r["id"] for r in q_rows]
-    Q = _unit_np(np.asarray([r["vector"] for r in q_rows], dtype=np.float64))
-    luts = (Q.reshape(len(Q), m, sub) @ C.T).reshape(len(Q), -1)
-    probe_cells = np.argsort(_sq_dists_np(Q, G), axis=1, kind="stable")[:, :nprobe]
-    id_type = dict(coded.select("id").dtypes)["id"]
-    probes = spark.createDataFrame(
-        [
-            (qid, [float(x) for x in lut], int(cell))
-            for qid, lut, cells in zip(qids, luts, probe_cells)
-            for cell in cells
-        ],
-        f"query_id {id_type}, lut array<double>, cell int",
-    )
-    cells_needed = sorted({int(c) for row in probe_cells for c in row})
-    pruned = coded.where(F.col("cell").isin(cells_needed))
-
-    terms = [
-        F.element_at(
-            F.col("lut"),
-            F.lit(j * K + 1) + F.element_at(F.col("codes"), j + 1),
-        )
-        for j in range(m)
-    ]
-    adc = terms[0]
-    for t in terms[1:]:
-        adc = adc + t
-    w_adc = Window.partitionBy("query_id").orderBy(
-        F.desc("adc_score"), F.asc("neighbor_id")
-    )
-    adc_topk = (
-        pruned.select("id", "cell", "codes")
-        .join(F.broadcast(probes), "cell")
-        .filter(F.col("query_id") != F.col("id"))
-        .select("query_id", F.col("id").alias("neighbor_id"), adc.alias("adc_score"))
-        .withColumn("_r", F.row_number().over(w_adc))
-        .filter(F.col("_r") <= k)
-        .select("query_id", "neighbor_id")
-        .collect()
-    )
-
-    qn = with_norm(
-        spark.createDataFrame(
-            [(qid, [float(x) for x in r["vector"]]) for qid, r in zip(qids, q_rows)],
-            f"query_id {id_type}, qv array<double>",
-        ),
-        "qv",
-    ).withColumnRenamed("_norm", "qn")
-    cn = with_norm(
-        pruned.select(
-            F.col("id").alias("neighbor_id"),
-            "cell",
-            F.col("vector").alias("cv"),
-        ),
-        "cv",
-    ).withColumnRenamed("_norm", "cn")
-    w_cos = Window.partitionBy("query_id").orderBy(
-        F.desc("cosine"), F.asc("neighbor_id")
-    )
-    # exact top-k over EACH QUERY'S OWN probed cells — joining on the
-    # (query_id, cell) probe pairs, exactly the candidate set the ADC
-    # pass ranked. Ranking the exact side over the UNION of all sample
-    # queries' cells would include neighbors the ADC pass never saw,
-    # deflating the overlap even for a perfect codebook (and making
-    # the metric shrink as sample_size grows).
-    exact_topk = (
-        cn.join(
-            F.broadcast(probes.select("query_id", "cell").distinct()), "cell"
-        )
-        .join(F.broadcast(qn), "query_id")
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            (_dot(F.col("qv"), F.col("cv")) / (F.col("qn") * F.col("cn"))).alias(
-                "cosine"
-            ),
-        )
-        .withColumn("_r", F.row_number().over(w_cos))
-        .filter(F.col("_r") <= k)
-        .select("query_id", "neighbor_id")
-        .collect()
-    )
-
-    adc_sets: dict = {}
-    for r in adc_topk:
-        adc_sets.setdefault(r["query_id"], set()).add(r["neighbor_id"])
-    exact_sets: dict = {}
-    for r in exact_topk:
-        exact_sets.setdefault(r["query_id"], set()).add(r["neighbor_id"])
-    overlaps = [
-        len(adc_sets.get(q, set()) & exact_sets.get(q, set()))
-        / max(len(exact_sets.get(q, set())), 1)
-        for q in qids
-    ]
-    mean_overlap = float(sum(overlaps) / max(len(overlaps), 1))
-
-    return spark.createDataFrame(
-        [
-            (
-                int(balance["n_rows"]),
-                int(balance["n_cells"]),
-                int(balance["min_cell_rows"]),
-                int(balance["max_cell_rows"]),
-                float(balance["avg_cell_rows"]),
-                float(balance["max_cell_rows"] / balance["avg_cell_rows"]),
-                int(n_files),
-                len(qids),
-                round(mean_overlap, 4),
-            )
-        ],
-        "n_rows bigint, n_cells bigint, min_cell_rows bigint, "
-        "max_cell_rows bigint, avg_cell_rows double, cell_imbalance double, "
-        "n_files bigint, probed_sample bigint, mean_adc_overlap double",
     )

@@ -2,8 +2,7 @@
 sketches with SET-OPERATION estimates — the capability HyperLogLog
 lacks.
 
-The HLL family (``source_cardinality_hll``, ``hll_sketch_union_users``)
-estimates |A| and |A∪B| but cannot estimate |A∩B| except by
+The HLL family (``source_cardinality_hll``) estimates |A| and |A∪B| but cannot estimate |A∩B| except by
 inclusion-exclusion, whose error explodes when the intersection is
 small relative to the sets. A KMV sketch (Bar-Yossef et al. 2002;
 Beyer et al. 2007 "On Synopses for Distinct-Value Estimation Under
@@ -243,30 +242,6 @@ def compact_kmv_store(
     group) so the overwrite never reads its own input."""
     merged = read_kmv_store(spark, path, meta=meta).select("grp", "h")
     rows = merged.collect()
-    spark.createDataFrame(rows, _kmv_schema()).repartition(1).write.mode(
-        "overwrite"
-    ).parquet(_kmv_minima_path(path))
-
-
-def rebuild_kmv_store(
-    spark: SparkSession,
-    path: str,
-    docs: DataFrame,
-    group_col: str = "source",
-    text_col: str = "text",
-) -> None:
-    """Re-sketch the store from an authoritative corpus snapshot —
-    the right-to-be-forgotten path: a bottom-k sketch cannot FORGET
-    (minima are aggregates; removing one document's contribution is
-    information-theoretically impossible from the sketch alone), so
-    deletion consistency for this artifact is re-derivation from the
-    post-deletion warehouse, same as the Bloom store's heal. One
-    sketch pass; the store's parameters are preserved from meta."""
-    meta = load_kmv_meta(spark, path)
-    minima = group_kmv_minima(
-        docs, group_col, text_col, int(meta["k"]), int(meta["shingle_k"])
-    )
-    rows = minima.select("grp", "h").collect()
     spark.createDataFrame(rows, _kmv_schema()).repartition(1).write.mode(
         "overwrite"
     ).parquet(_kmv_minima_path(path))

@@ -29,7 +29,7 @@ The scoring itself is registered rows-only: ln() is a transcendental
 (not guaranteed correctly rounded, so cross-engine hash parity would
 rest on libm coincidences — the repo's oracled queries stay rational
 on principle; the integer-exact corpus-fit relative, see
-``doc_bigram_typicality``, is hash-oracled). A numpy replica pins the
+``ccnet_bucket_documents``, is hash-oracled). A numpy replica pins the
 math in tests instead.
 """
 

@@ -1,8 +1,8 @@
 """Multimodal column plumbing: opaque binary payloads + typed metadata.
 
 Design (SURVEY §7 Phase 5): image/audio/video ride as ``binary``
-columns with a typed metadata struct; decode / feature-extraction /
-resize / frame-sampling run as Arrow-batched ``mapInPandas`` stages.
+columns with a typed metadata struct; decode and perceptual hashing
+run as Arrow-batched ``mapInPandas`` stages.
 
 Baseline JPEG (huffman + dequant + IDCT, :mod:`.jpeg`), PNG (zlib
 inflate + scanline un-filter), BMP, binary PPM, and PCM WAV decode
@@ -23,10 +23,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
-    ArrayType,
     BinaryType,
     BooleanType,
-    FloatType,
     LongType,
     StringType,
     StructField,
@@ -41,17 +39,6 @@ MEDIA_SCHEMA = StructType(
         StructField("mime", StringType()),
         StructField("n_bytes", LongType()),
         StructField("source", StringType()),
-    ]
-)
-
-FEATURE_DIM = 16
-
-FEATURES_SCHEMA = StructType(
-    [
-        StructField("media_id", LongType()),
-        StructField("mime", StringType()),
-        StructField("n_bytes", LongType()),
-        StructField("feature", ArrayType(FloatType(), containsNull=False)),
     ]
 )
 
@@ -292,22 +279,6 @@ def default_decoder(payload: bytes) -> tuple[int, int, int, bytes]:
     return _decode_stub(data)
 
 
-def identity_decoder(payload: bytes) -> tuple[int, int, int, bytes]:
-    """Deterministic no-codec decoder for gate/correctness runs: the
-    payload is a 1×n_bytes×1 'image' whose pixels are the raw bytes.
-    Real plumbing (batching, error capture, schema), fake codec — and
-    simple enough that a SQL oracle can mirror it exactly. Empty
-    payloads are corrupt (exercises the error-row path)."""
-    data = bytes(payload)
-    if not data:
-        raise ValueError("empty payload")
-    return 1, len(data), 1, data
-
-
-#: BMP synthesis geometry shared with the SQL oracle: 16 px × 3 B/px
-BMP_WIDTH = 16
-BMP_CORRUPT_EVERY = 50
-
 #: PNG synthesis geometry shared with the SQL oracle: 16 px × 1 B/px
 PNG_WIDTH = 16
 PNG_CORRUPT_EVERY = 50
@@ -451,62 +422,6 @@ def documents_as_jpeg(
     )
 
 
-def documents_as_bmp(
-    documents: DataFrame,
-    width: int = BMP_WIDTH,
-    corrupt_every: int = BMP_CORRUPT_EVERY,
-) -> DataFrame:
-    """Deterministic REAL-format media corpus: each document's utf-8
-    bytes become the pixel data of a valid 24-bpp BMP (width fixed,
-    height = ceil(bytes / (width*3)), zero-padded; width=16 keeps the
-    row stride 4-byte aligned so padded length == width*3*height).
-    Every ``corrupt_every``-th doc is truncated mid-file to exercise
-    the decode-error path. The geometry is closed-form in doc_id and
-    byte length, so a SQL oracle can mirror the decoded stats exactly.
-    """
-    import struct
-
-    row_bytes = width * 3
-    assert row_bytes % 4 == 0, "width must keep BMP stride aligned"
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            ids, payloads, mimes, sizes, sources = [], [], [], [], []
-            for doc_id, text, source in zip(
-                batch["doc_id"], batch["text"], batch["source"]
-            ):
-                data = (text or "").encode("utf-8")
-                height = max(1, -(-len(data) // row_bytes))
-                pix = data.ljust(row_bytes * height, b"\x00")
-                header = struct.pack(
-                    "<2sIHHI", b"BM", 54 + len(pix), 0, 0, 54
-                ) + struct.pack(
-                    "<IiiHHIIiiII",
-                    40, width, height, 1, 24, 0, len(pix), 2835, 2835, 0, 0,
-                )
-                payload = header + pix
-                if corrupt_every and doc_id % corrupt_every == 0:
-                    payload = payload[: max(2, len(payload) // 2)]
-                ids.append(doc_id)
-                payloads.append(payload)
-                mimes.append("image/bmp")
-                sizes.append(len(payload))
-                sources.append(source)
-            yield pd.DataFrame(
-                {
-                    "media_id": ids,
-                    "payload": payloads,
-                    "mime": mimes,
-                    "n_bytes": sizes,
-                    "source": sources,
-                }
-            )
-
-    return documents.select("doc_id", "text", "source").mapInPandas(
-        run, schema=MEDIA_SCHEMA
-    )
-
-
 DECODED_SCHEMA = StructType(
     [
         StructField("media_id", LongType()),
@@ -574,132 +489,6 @@ def decode_media(media: DataFrame, decoder=default_decoder) -> DataFrame:
             yield pd.DataFrame(out)
 
     return media.mapInPandas(run, schema=DECODED_SCHEMA)
-
-
-def _fake_features(payload: bytes, dim: int = FEATURE_DIM) -> list[float]:
-    """Deterministic stand-in for model features: byte-histogram
-    moments. Same payload → same vector, any environment."""
-    if not payload:
-        return [0.0] * dim
-    counts = [0] * dim
-    for byte in payload:
-        counts[byte % dim] += 1
-    total = float(len(payload))
-    return [c / total for c in counts]
-
-
-FRAME_BYTES = 1024
-
-FRAMES_SCHEMA = StructType(
-    [
-        StructField("media_id", LongType()),
-        StructField("frame_idx", LongType()),
-        StructField("frame_payload", BinaryType()),
-        StructField("frame_bytes", LongType()),
-    ]
-)
-
-RESIZED_SCHEMA = StructType(
-    [
-        StructField("media_id", LongType()),
-        StructField("mime", StringType()),
-        StructField("width", LongType()),
-        StructField("height", LongType()),
-        StructField("payload", BinaryType()),
-        StructField("n_bytes", LongType()),
-    ]
-)
-
-
-def sample_frames(media: DataFrame, frame_bytes: int = FRAME_BYTES) -> DataFrame:
-    """Frame sampling: one media row fans out into N frame rows —
-    the UDTF shape (same as the crawl extractor's 1→3-relations fan-out)
-    over mapInPandas. A real implementation decodes the container and
-    emits every k-th video frame; the deterministic stand-in slices the
-    payload into ``frame_bytes`` chunks so the fan-out arithmetic
-    (row multiplication, batch shapes, downstream explode-free schema)
-    is fully testable: n_frames = ceil(n_bytes / frame_bytes)."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            ids, idxs, payloads, sizes = [], [], [], []
-            for media_id, payload in zip(batch["media_id"], batch["payload"]):
-                data = payload if payload is not None else b""
-                for i in range(0, max(len(data), 1), frame_bytes):
-                    chunk = data[i : i + frame_bytes]
-                    ids.append(media_id)
-                    idxs.append(i // frame_bytes)
-                    payloads.append(chunk)
-                    sizes.append(len(chunk))
-            yield pd.DataFrame(
-                {
-                    "media_id": ids,
-                    "frame_idx": idxs,
-                    "frame_payload": payloads,
-                    "frame_bytes": sizes,
-                }
-            )
-
-    return media.mapInPandas(run, schema=FRAMES_SCHEMA)
-
-
-def resize_media(
-    media: DataFrame, width: int = 64, height: int = 64
-) -> DataFrame:
-    """Resize stage: decode → scale → re-encode per payload, Arrow
-    batched. The real decoder is stubbed (``_decode_stub``); the
-    deterministic stand-in caps the payload at width*height bytes so
-    output sizing, schema, and batch behavior are real. Swapping in
-    PIL changes only the body of ``shrink``."""
-    cap = width * height
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        def shrink(payload):
-            data = payload if payload is not None else b""
-            return data[:cap]
-
-        for batch in batches:
-            resized = [shrink(p) for p in batch["payload"]]
-            yield pd.DataFrame(
-                {
-                    "media_id": batch["media_id"],
-                    "mime": batch["mime"],
-                    "width": width,
-                    "height": height,
-                    "payload": resized,
-                    "n_bytes": [len(r) for r in resized],
-                }
-            )
-
-    return media.mapInPandas(run, schema=RESIZED_SCHEMA)
-
-
-def extract_features(
-    media: DataFrame, batch_size_hint: int | None = None
-) -> DataFrame:
-    """Arrow-batched feature extraction over the payload column.
-
-    ``mapInPandas`` so a real implementation can batch payloads into a
-    model (GPU-friendly: one forward pass per Arrow batch). The fake
-    extractor preserves exactly the structure a real one needs: bytes
-    in → fixed-dim float vector out, metadata passed through.
-    """
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            yield pd.DataFrame(
-                {
-                    "media_id": batch["media_id"],
-                    "mime": batch["mime"],
-                    "n_bytes": batch["n_bytes"],
-                    "feature": [
-                        _fake_features(p if p is not None else b"")
-                        for p in batch["payload"]
-                    ],
-                }
-            )
-
-    return media.mapInPandas(run, schema=FEATURES_SCHEMA)
 
 
 # ---------------------------------------------------------------------------
@@ -1181,8 +970,6 @@ MP4_TIMESCALE = 1000
 MP4_SAMPLE_DUR = 40
 MP4_KEYFRAME_EVERY = 5
 MP4_CORRUPT_EVERY = 50
-
-_MP4_CONTAINERS = {b"moov", b"trak", b"mdia", b"minf", b"stbl"}
 
 
 def _walk_boxes(data: bytes, start: int, end: int):
@@ -1795,243 +1582,6 @@ def documents_as_mp4(
     )
 
 
-#: audio-track geometry for the MULTI-TRACK corpus (round 12): 8 kHz
-#: media timescale, one sample per 8 payload bytes, 200 ticks (25 ms)
-#: per sample — all closed-form in the text like the video track
-MP4_AUDIO_TIMESCALE = 8000
-MP4_AUDIO_BYTES_PER_SAMPLE = 8
-MP4_AUDIO_SAMPLE_DUR = 200
-
-
-def build_mp4_multitrack(
-    text_bytes: bytes,
-    timescale: int = MP4_TIMESCALE,
-    sample_dur: int = MP4_SAMPLE_DUR,
-    keyframe_every: int = MP4_KEYFRAME_EVERY,
-    width: int = 320,
-    height: int = 240,
-) -> bytes:
-    """A valid TWO-track ISO BMFF container — real media is one
-    container, N tracks, not parallel single-track corpora (the r11
-    verdict's multi-track gap). Track 1 is the video track with
-    :func:`build_mp4`'s exact geometry (n = token count, 40 ms
-    samples, keyframe every 5th); track 2 is a 'soun' track over a
-    second copy of the payload — one sample per
-    :data:`MP4_AUDIO_BYTES_PER_SAMPLE` bytes at the 8 kHz media
-    timescale, 25 ms per sample, no stss (audio samples are all sync
-    by spec when the box is absent). The mdat is the two tracks' byte
-    regions laid contiguously (video first), each track's stco
-    anchored at its own region — a per-track demuxer walk is the only
-    way to read either. Everything is closed-form in the text."""
-    import struct
-
-    n_v = max(1, len(text_bytes.decode("utf-8", "replace").split()))
-    v_sizes = _mp4_sample_sizes(len(text_bytes), n_v)
-    L = len(text_bytes)
-    n_a = max(1, L // MP4_AUDIO_BYTES_PER_SAMPLE)
-    a_sizes = _mp4_sample_sizes(L, n_a)
-    keyframes = list(range(1, n_v + 1, keyframe_every))
-    dur_v = n_v * sample_dur                       # movie-timescale ticks
-    dur_a_media = n_a * MP4_AUDIO_SAMPLE_DUR       # 8 kHz ticks
-    dur_a_movie = (dur_a_media * timescale) // MP4_AUDIO_TIMESCALE
-    movie_dur = max(dur_v, dur_a_movie)
-
-    def box(btype: bytes, *parts: bytes) -> bytes:
-        body = b"".join(parts)
-        return struct.pack(">I", len(body) + 8) + btype + body
-
-    def full(btype: bytes, version: int, flags: int, *parts: bytes) -> bytes:
-        return box(
-            btype, struct.pack(">I", (version << 24) | flags), *parts
-        )
-
-    matrix = struct.pack(
-        ">9I", 0x10000, 0, 0, 0, 0x10000, 0, 0, 0, 0x40000000
-    )
-
-    def trak_common(
-        track_id: int,
-        track_dur: int,
-        media_timescale: int,
-        media_dur: int,
-        handler: bytes,
-        hdlr_name: bytes,
-        stsd_entry: bytes,
-        entry_4cc: bytes,
-        n_samples: int,
-        s_dur: int,
-        sizes: list[int],
-        chunk_off: int,
-        stss_box: bytes | None,
-        media_header: bytes,
-        dims: tuple[int, int] | None,
-    ) -> bytes:
-        tkhd = full(
-            b"tkhd", 0, 7,
-            struct.pack(">II", 0, 0),
-            struct.pack(">I", track_id),
-            b"\x00" * 4,
-            struct.pack(">I", track_dur),
-            b"\x00" * 8,
-            struct.pack(">HHHH", 0, 0, 0, 0),
-            matrix,
-            struct.pack(
-                ">II",
-                (dims[0] if dims else 0) << 16,
-                (dims[1] if dims else 0) << 16,
-            ),
-        )
-        mdhd = full(
-            b"mdhd", 0, 0,
-            struct.pack(">II", 0, 0),
-            struct.pack(">II", media_timescale, media_dur),
-            struct.pack(">HH", 0x55C4, 0),
-        )
-        hdlr = full(
-            b"hdlr", 0, 0,
-            b"\x00" * 4, handler, b"\x00" * 12, hdlr_name,
-        )
-        stsd = full(
-            b"stsd", 0, 0,
-            struct.pack(">I", 1),
-            struct.pack(">I", len(stsd_entry) + 8) + entry_4cc + stsd_entry,
-        )
-        stts = full(
-            b"stts", 0, 0,
-            struct.pack(">I", 1),
-            struct.pack(">II", n_samples, s_dur),
-        )
-        stsz = full(
-            b"stsz", 0, 0,
-            struct.pack(">II", 0, n_samples),
-            struct.pack(f">{n_samples}I", *sizes),
-        )
-        stsc = full(
-            b"stsc", 0, 0,
-            struct.pack(">I", 1),
-            struct.pack(">III", 1, n_samples, 1),
-        )
-        stco = full(
-            b"stco", 0, 0,
-            struct.pack(">I", 1),
-            struct.pack(">I", chunk_off),
-        )
-        stbl_parts = [stsd, stts]
-        if stss_box is not None:
-            stbl_parts.append(stss_box)
-        stbl_parts += [stsz, stsc, stco]
-        dref = full(
-            b"dref", 0, 0,
-            struct.pack(">I", 1),
-            full(b"url ", 0, 1),
-        )
-        minf = box(
-            b"minf", media_header, box(b"dinf", dref), box(b"stbl", *stbl_parts)
-        )
-        return box(b"trak", tkhd, box(b"mdia", mdhd, hdlr, minf))
-
-    visual_entry = (
-        b"\x00" * 6
-        + struct.pack(">H", 1)
-        + struct.pack(">HH", 0, 0)
-        + b"\x00" * 12
-        + struct.pack(">HH", width, height)
-        + struct.pack(">II", 0x00480000, 0x00480000)
-        + b"\x00" * 4
-        + struct.pack(">H", 1)
-        + b"\x00" * 32
-        + struct.pack(">Hh", 24, -1)
-    )
-    # minimal SoundSampleEntry ('twos' = 16-bit big-endian PCM):
-    # 6 reserved + data_ref_index, 8 reserved, channels, samplesize,
-    # pre_defined + reserved, samplerate as 16.16 fixed
-    audio_entry = (
-        b"\x00" * 6
-        + struct.pack(">H", 1)
-        + b"\x00" * 8
-        + struct.pack(">HH", 2, 16)
-        + struct.pack(">HH", 0, 0)
-        + struct.pack(">I", MP4_AUDIO_TIMESCALE << 16)
-    )
-
-    def moov(mdat_data_off: int) -> bytes:
-        mvhd = full(
-            b"mvhd", 0, 0,
-            struct.pack(">II", 0, 0),
-            struct.pack(">II", timescale, movie_dur),
-            struct.pack(">I", 0x00010000),
-            struct.pack(">H", 0x0100),
-            b"\x00" * 10,
-            matrix,
-            b"\x00" * 24,
-            struct.pack(">I", 3),
-        )
-        stss = full(
-            b"stss", 0, 0,
-            struct.pack(">I", len(keyframes)),
-            struct.pack(f">{len(keyframes)}I", *keyframes),
-        )
-        v_trak = trak_common(
-            1, dur_v, timescale, dur_v, b"vide", b"SparkGraftVideo\x00",
-            visual_entry, b"mp4v", n_v, sample_dur, v_sizes,
-            mdat_data_off, stss,
-            full(b"vmhd", 0, 1, struct.pack(">HHHH", 0, 0, 0, 0)),
-            (width, height),
-        )
-        a_trak = trak_common(
-            2, dur_a_movie, MP4_AUDIO_TIMESCALE, dur_a_media, b"soun",
-            b"SparkGraftAudio\x00", audio_entry, b"twos", n_a,
-            MP4_AUDIO_SAMPLE_DUR, a_sizes,
-            mdat_data_off + L, None,
-            full(b"smhd", 0, 0, struct.pack(">HH", 0, 0)),
-            None,
-        )
-        return box(b"moov", mvhd, v_trak, a_trak)
-
-    ftyp = box(b"ftyp", b"isom", struct.pack(">I", 512), b"isomiso2mp41")
-    probe = moov(0)
-    mdat_data_off = len(ftyp) + len(probe) + 8
-    return ftyp + moov(mdat_data_off) + box(b"mdat", text_bytes + text_bytes)
-
-
-def documents_as_multitrack_mp4(
-    documents: DataFrame,
-    corrupt_every: int = MP4_CORRUPT_EVERY,
-) -> DataFrame:
-    """Deterministic REAL-format media corpus #9 (round 12): each
-    document becomes a TWO-track MP4 (video + audio in one container
-    — :func:`build_mp4_multitrack`), every ``corrupt_every``-th doc
-    truncated mid-container."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            ids, payloads, mimes, sizes, sources = [], [], [], [], []
-            for doc_id, text, source in zip(
-                batch["doc_id"], batch["text"], batch["source"]
-            ):
-                payload = build_mp4_multitrack((text or "").encode("utf-8"))
-                if corrupt_every and doc_id % corrupt_every == 0:
-                    payload = payload[: max(12, len(payload) // 2)]
-                ids.append(doc_id)
-                payloads.append(payload)
-                mimes.append("video/mp4")
-                sizes.append(len(payload))
-                sources.append(source)
-            yield pd.DataFrame(
-                {
-                    "media_id": ids,
-                    "payload": payloads,
-                    "mime": mimes,
-                    "n_bytes": sizes,
-                    "source": sources,
-                }
-            )
-
-    return documents.select("doc_id", "text", "source").mapInPandas(
-        run, schema=MEDIA_SCHEMA
-    )
-
-
 #: per-sample duration grid for the TIMED corpus: token i plays for
 #: MP4_SAMPLE_DUR * (1 + len(token_i) % 3) ticks — variable durations
 #: closed-form in the text, with natural runs (consecutive same-length
@@ -2171,79 +1721,6 @@ def mp4_container_stats(media: DataFrame) -> DataFrame:
     )
 
 
-MP4_KEYFRAME_SCHEMA = StructType(
-    [
-        StructField("media_id", LongType()),
-        StructField("sample_no", LongType()),
-        StructField("rel_offset", LongType()),
-        StructField("sample_bytes", LongType()),
-    ]
-)
-
-
-MP4_TRACK_SCHEMA = StructType(
-    [
-        StructField("media_id", LongType()),
-        StructField("source", StringType()),
-        StructField("track_no", LongType()),
-        StructField("handler", StringType()),
-        StructField("timescale", LongType()),
-        StructField("duration_ms", LongType()),
-        StructField("n_samples", LongType()),
-        StructField("n_keyframes", LongType()),
-        StructField("sample_bytes", LongType()),
-    ]
-)
-
-
-def mp4_track_stats(media: DataFrame) -> DataFrame:
-    """PER-TRACK container metadata (round 12 — the multi-track twin
-    of :func:`mp4_container_stats`, which reports track[0] only): one
-    row per (clip, track) with handler, media timescale, duration
-    rebased to ms, sample/keyframe counts, and byte accounting from
-    that track's own sample table. Corrupt containers contribute no
-    rows (the single-track stats query owns the error plane)."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            out: dict[str, list] = {
-                k.name: [] for k in MP4_TRACK_SCHEMA.fields
-            }
-            for media_id, source, payload in zip(
-                batch["media_id"], batch["source"], batch["payload"]
-            ):
-                try:
-                    info = parse_mp4(payload if payload is not None else b"")
-                except Exception:  # noqa: BLE001 — stats query reports it
-                    continue
-                for tno, t in enumerate(info["tracks"], start=1):
-                    ts = t.get("timescale") or 0
-                    dur = t.get("samples_duration") or 0
-                    out["media_id"].append(media_id)
-                    out["source"].append(source)
-                    out["track_no"].append(tno)
-                    out["handler"].append(t.get("handler"))
-                    out["timescale"].append(ts)
-                    out["duration_ms"].append(
-                        (dur * 1000) // ts if ts else None
-                    )
-                    out["n_samples"].append(t.get("n_samples_stts", 0))
-                    out["n_keyframes"].append(len(t.get("keyframes") or []))
-                    out["sample_bytes"].append(
-                        sum(t.get("sample_sizes") or [])
-                    )
-            for name in (
-                "media_id", "track_no", "timescale", "duration_ms",
-                "n_samples", "n_keyframes", "sample_bytes",
-            ):
-                out[name] = pd.array(out[name], dtype="Int64")
-            yield pd.DataFrame(out)
-
-    return media.select("media_id", "source", "payload").mapInPandas(
-        run, schema=MP4_TRACK_SCHEMA
-    )
-
-
 MP4_TIME_MANIFEST_SCHEMA = StructType(
     [
         StructField("media_id", LongType()),
@@ -2325,56 +1802,4 @@ def mp4_time_indexed_manifest(
 
     return media.select("media_id", "payload").mapInPandas(
         run, schema=MP4_TIME_MANIFEST_SCHEMA
-    )
-
-
-def mp4_keyframe_manifest(media: DataFrame) -> DataFrame:
-    """(media_id, sample_no, rel_offset, sample_bytes) for every
-    KEYFRAME — the sampling manifest a frame-extraction stage consumes
-    ("seek to offset, read bytes, decode"): rel_offset is the
-    keyframe's byte position inside the mdat payload, from the real
-    demuxer walk (sample_file_offsets) rebased to the mdat data
-    start — identical to the old stsz-prefix-sum arithmetic on the
-    single-chunk layout, correct on multi-chunk ones. Corrupt
-    containers contribute no rows (their error is the stats query's
-    job). At 100 TB this relation is what ships to the decode fleet —
-    tiny integer rows, never the video bytes."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            ids, nos, offs, szs = [], [], [], []
-            for media_id, payload in zip(
-                batch["media_id"], batch["payload"]
-            ):
-                try:
-                    info = parse_mp4(payload if payload is not None else b"")
-                except Exception:  # noqa: BLE001 — stats query reports it
-                    continue
-                mdat0 = info["mdat_offset"]
-                if mdat0 is None:
-                    continue
-                for t in info["tracks"]:
-                    sizes = t.get("sample_sizes") or []
-                    try:
-                        abs_offs = sample_file_offsets(t)
-                    except ValueError:
-                        continue
-                    for kf in t.get("keyframes") or []:
-                        if not 1 <= kf <= len(sizes):
-                            continue
-                        ids.append(media_id)
-                        nos.append(kf)
-                        offs.append(abs_offs[kf - 1] - mdat0)
-                        szs.append(sizes[kf - 1])
-            yield pd.DataFrame(
-                {
-                    "media_id": pd.array(ids, dtype="Int64"),
-                    "sample_no": pd.array(nos, dtype="Int64"),
-                    "rel_offset": pd.array(offs, dtype="Int64"),
-                    "sample_bytes": pd.array(szs, dtype="Int64"),
-                }
-            )
-
-    return media.select("media_id", "payload").mapInPandas(
-        run, schema=MP4_KEYFRAME_SCHEMA
     )

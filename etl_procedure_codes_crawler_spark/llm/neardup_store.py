@@ -24,8 +24,7 @@ buckets (boilerplate corpora: thousands of near-identical pages in
 ONE bucket) are CAPPED to ``max_store_bucket_size`` store rows per
 (band, bucket), so a hot bucket emits |batch|×cap candidate rows
 instead of |batch|×|store| — linear in the batch, never quadratic
-inside a task (:func:`store_bucket_stats` reports what the cap
-truncated). Capping store rows is sound for the gate's question
+inside a task. Capping store rows is sound for the gate's question
 ("does this batch doc near-dup ANYTHING held?"): a bucket only
 degenerates when its members are near-identical, so the ranked
 survivors are representative of the members dropped.
@@ -135,10 +134,8 @@ def build_minhash_store(
     hash_fn: str = "xx",
 ) -> None:
     """Sign the snapshot corpus (one shingle pass) and persist the
-    signatures + pre-derived band buckets (v2 layout). The store is
-    append-grown by :func:`append_to_minhash_store` as batches are
-    accepted. ``hash_fn`` is pinned in meta — every future append and
-    probe derives the SAME family ('md5' makes the whole store
+    signatures + pre-derived band buckets (v2 layout). ``hash_fn`` is
+    pinned in meta — every probe derives the SAME family ('md5' makes the whole store
     lifecycle engine-deterministic and hash-oracle-able; 'xx' stays
     the throughput default)."""
     spark = docs.sparkSession
@@ -158,46 +155,6 @@ def load_store_meta(spark: SparkSession, path: str) -> dict:
     return json.loads(
         spark.read.parquet(path.rstrip("/") + "/meta").first()["meta"]
     )
-
-
-def append_to_minhash_store(
-    spark: SparkSession,
-    path: str,
-    new_docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> int:
-    """Sign and append docs not already in the store (anti-join on
-    id). Idempotent under batch replay; banding parameters come from
-    the store's meta, never the caller. Appends match the store's
-    layout version: a v1 store keeps receiving (id, sig) rows — mixed
-    schemas within one dataset would corrupt the scan."""
-    meta = load_store_meta(spark, path)
-    bands, rpb = meta["bands"], meta["rows_per_band"]
-    hash_fn = meta.get("hash_fn", "xx")
-    existing = spark.read.parquet(path.rstrip("/") + "/signatures").select("id")
-    fresh = (
-        new_docs.where(F.col(id_col).isNotNull())
-        # one row per id BEFORE signing: minhash groups shingles by id,
-        # so two different texts sharing an id would otherwise merge
-        # into one garbage signature (the min over the UNION of both
-        # shingle sets) that matches neither document
-        .dropDuplicates([id_col])
-        .join(existing.withColumnRenamed("id", id_col), id_col, "left_anti")
-    )
-    if meta.get("version", 1) >= 2:
-        signed = _signed_with_buckets(
-            fresh, text_col, id_col, meta["k"], bands, rpb, hash_fn
-        )
-    else:
-        signed = _sig_array(
-            fresh, text_col, id_col, meta["k"], bands * rpb, hash_fn
-        )
-    signed = signed.localCheckpoint(eager=True)  # lineage reads the path being appended
-    n = signed.count()
-    if n:
-        signed.write.mode("append").parquet(path.rstrip("/") + "/signatures")
-    return n
 
 
 def _store_bucket_rows(
@@ -243,8 +200,7 @@ def near_dups_against_store(
     no extra wide stage). A boilerplate bucket holding thousands of
     near-identical snapshots therefore costs |batch|×cap rows, not
     |batch|×|store|; for the gate's any-match semantics the truncated
-    members are interchangeable with the survivors. What got capped is
-    observable via :func:`store_bucket_stats`.
+    members are interchangeable with the survivors.
     """
     meta = load_store_meta(spark, path)
     bands, rpb = meta["bands"], meta["rows_per_band"]
@@ -291,55 +247,6 @@ def near_dups_against_store(
         .groupBy("new_id", "snapshot_id")
         .agg(F.max("est_jaccard").alias("est_jaccard"))
         .filter(F.col("est_jaccard") >= threshold)
-    )
-
-
-def store_bucket_stats(
-    spark: SparkSession,
-    path: str,
-    max_store_bucket_size: int = DEFAULT_MAX_STORE_BUCKET,
-) -> DataFrame:
-    """Monitoring companion to the store-join cap (same contract as
-    :func:`.dedup.lsh_bucket_stats`): per-band bucket count, largest
-    bucket, and how many buckets the candidate join truncates at
-    ``max_store_bucket_size`` — one cheap groupBy over the persisted
-    bucket assignments, no signatures or text read."""
-    meta = load_store_meta(spark, path)
-    snap = spark.read.parquet(path.rstrip("/") + "/signatures")
-    rows = _store_bucket_rows(snap, meta["bands"], meta["rows_per_band"])
-    return (
-        rows.groupBy("band", "bucket")
-        .agg(F.count(F.lit(1)).alias("bucket_size"))
-        .groupBy("band")
-        .agg(
-            F.count(F.lit(1)).alias("n_buckets"),
-            F.max("bucket_size").alias("max_bucket_size"),
-            F.sum(
-                F.when(
-                    F.col("bucket_size") > max_store_bucket_size, 1
-                ).otherwise(0)
-            ).alias("n_capped_buckets"),
-        )
-    )
-
-
-def compact_minhash_store(
-    spark: SparkSession, path: str, target_file_mb: int = 128
-) -> int:
-    """Restore a compact file layout after incremental appends.
-
-    Every accepted ingest micro-batch appends one signature file, so a
-    long-running gate accretes thousands of small files and the store
-    scan in :func:`near_dups_against_store` — executed once per batch,
-    forever — pays the listing/open overhead each time. Delegates to
-    :func:`..sinks.parquet.compact_dataset` (atomic swap, crash-healed
-    on the next call); query results are unaffected — signatures are a
-    set, the layout carries no ordering contract. Returns the new file
-    count."""
-    from ..sinks.parquet import compact_dataset
-
-    return compact_dataset(
-        spark, path.rstrip("/") + "/signatures", target_file_mb
     )
 
 

@@ -257,41 +257,6 @@ def bestfit_packing_stats(
     )
 
 
-def sequence_manifest(
-    df: DataFrame,
-    seq_len: int,
-    shard_col: str = "source",
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
-    """Per-sequence writer manifest: the ordered ``doc_id:token_count``
-    span list a shard writer task materializes into one training
-    sequence. String-typed (``"12:512,13:91"``) so the manifest is
-    byte-stable across engines and safe to hash-compare; ordering is
-    by doc_id inside the sequence — the same order the concatenation
-    defined. One extra aggregation over pack_sequences' assignment;
-    group width is bounded by seq_len (a sequence can hold at most
-    seq_len documents), so collect_list cannot blow up a task."""
-    packed = pack_sequences(df, seq_len, shard_col, id_col, text_col)
-    spans = F.array_sort(
-        F.collect_list(F.struct("doc_id", "tokens_in_seq"))
-    )
-    return packed.groupBy("shard", "seq_id").agg(
-        F.array_join(
-            F.transform(
-                spans,
-                lambda s: F.concat_ws(
-                    ":",
-                    s["doc_id"].cast("string"),
-                    s["tokens_in_seq"].cast("string"),
-                ),
-            ),
-            ",",
-        ).alias("manifest"),
-        F.count(F.lit(1)).alias("n_docs"),
-    )
-
-
 def sequence_stats(
     df: DataFrame,
     seq_len: int,
@@ -379,60 +344,6 @@ def training_shuffle(
         id_col,
         "shard",
         F.row_number().over(w).cast("bigint").alias("pos"),
-    )
-
-
-def upsample_manifest(
-    df: DataFrame,
-    weights: dict[str, float],
-    source_col: str = "source",
-    id_col: str = "doc_id",
-    seed: int = 7,
-    default: float = 1.0,
-) -> DataFrame:
-    """Deterministic fractional upsampling for corpus mixing: a doc
-    from a source with weight ``w`` appears ``floor(w)`` times, plus
-    one more with probability ``frac(w)`` — decided by the doc's own
-    Lehmer key, so the choice is reproducible (no rand()) and
-    cross-engine checkable. Output is one row per (doc, copy).
-
-    Scale shape: a map-side CASE over the broadcast weight table and a
-    bounded explode (``ceil(max weight)`` copies max) — no shuffle at
-    all. To spread a doc's repeats across shards, feed the downstream
-    :func:`training_shuffle` a synthetic id folding the copy in (e.g.
-    ``doc_id * ceil(max_weight) + copy`` — still a bigint, still
-    deterministic)."""
-    key = shuffle_key(F.col(id_col), seed)
-
-    # thresholds are exact integers so Spark and an external oracle
-    # agree bit-for-bit: key < round(frac * M)
-    def _copies(w: float):
-        whole, fr = int(w), w - int(w)
-        extra = (
-            (key < F.lit(int(round(fr * _SHUFFLE_M)))).cast("int")
-            if fr > 0
-            else F.lit(0)
-        )
-        return F.lit(whole) + extra
-
-    n_copies = F.coalesce(
-        *[
-            F.when(F.col(source_col) == s, _copies(w))
-            for s, w in weights.items()
-        ],
-        _copies(default),
-    ).alias("n_copies") if weights else _copies(default).alias("n_copies")
-    return (
-        df.select(F.col(id_col), F.col(source_col), n_copies)
-        .filter(F.col("n_copies") > 0)
-        .select(
-            id_col,
-            source_col,
-            "n_copies",
-            F.explode(
-                F.sequence(F.lit(1), F.col("n_copies"))
-            ).alias("copy"),
-        )
     )
 
 
@@ -551,510 +462,4 @@ def cluster_holdout_split(
         F.col(id_col),
         F.col("cluster_id"),
         _split_case(key, fractions).alias("split"),
-    )
-
-
-def training_shuffle_incremental(
-    new_df: DataFrame,
-    snapshot: DataFrame,
-    id_col: str = "doc_id",
-    num_shards: int = 8,
-    seed: int = 1,
-) -> DataFrame:
-    """Extend an existing training-shard manifest with newly arrived
-    documents (the production shape for a corpus growing by crawl
-    runs — same pattern as llm/dedup.dedup_incremental): each new doc
-    gets its shard from the SAME permutation key as the original
-    shuffle, and its ``pos`` continues after the shard's current max,
-    so already-written shard files never move.
-
-    Docs already present in the snapshot are skipped (left-anti on
-    id). Scale shape: the snapshot contributes only a per-shard MAX —
-    num_shards rows, broadcast — plus an id anti-join that shares the
-    new batch's hash partitioning; the heavy relation shuffles once."""
-    key = shuffle_key(F.col(id_col), seed)
-    # NULL ids can never match the anti join and would re-enter the
-    # manifest on every call — drop them (a manifest slot requires an
-    # identity)
-    fresh = (
-        new_df.select(F.col(id_col))
-        .where(F.col(id_col).isNotNull())
-        .join(snapshot.select(id_col), id_col, "left_anti")
-    )
-    keyed = fresh.select(
-        F.col(id_col), key.alias("_key")
-    ).withColumn("shard", F.pmod(F.col("_key"), F.lit(num_shards)))
-    base = snapshot.groupBy("shard").agg(F.max("pos").alias("_base"))
-    w = Window.partitionBy("shard").orderBy("_key", id_col)
-    return (
-        keyed.withColumn("_rank", F.row_number().over(w).cast("bigint"))
-        .join(F.broadcast(base), "shard", "left")
-        .select(
-            id_col,
-            "shard",
-            (F.coalesce(F.col("_base"), F.lit(0)) + F.col("_rank")).alias(
-                "pos"
-            ),
-        )
-    )
-
-
-def budget_select(
-    df: DataFrame,
-    quality_col: str,
-    tokens_col: str,
-    budget: int,
-    id_col: str = "doc_id",
-    num_bins: int | None = None,
-) -> DataFrame:
-    """Select documents in quality order (best first, id tiebreak)
-    until the running token total reaches ``budget`` — "fill a
-    10B-token training budget with the best docs", the selection step
-    between quality scoring and packing.
-
-    Scale shape (same two-phase trick as the deciles query, cumsum
-    instead of rank): a global ORDER BY cumsum would funnel the corpus
-    through one window task, so rows are binned by broadcast
-    quantile-edge literals on the quality key (a pure function of the
-    row — deterministic in every job), each bin computes a LOCAL
-    running sum in parallel, and the per-bin totals (metadata-sized)
-    are collected once, turned into cumulative offsets, and added
-    back. ``global_cum = offset[bin] + local_cum`` is exact because
-    binning respects the quality order (ties share a bin).
-
-    The scored input is localCheckpoint'ed: three jobs consume it
-    (edges, bin totals, final selection) and re-scoring the corpus 3×
-    would triple the heavy scan.
-
-    NULL contract: a NULL quality or token count would otherwise
-    propagate through the bin expression and the ``cum_tokens <=
-    budget`` filter and the row would *silently vanish* (and a NULL
-    token count additionally skews the per-bin offsets). Like
-    merge_upsert's NULL-key rule, that is an upstream data-integrity
-    error, so this raises rather than guessing — score/count first,
-    or filter explicitly before calling."""
-    spark = df.sparkSession
-    scored = df.select(
-        F.col(id_col),
-        F.col(quality_col).cast("double").alias("_q"),
-        F.col(tokens_col).cast("bigint").alias("_n"),
-    ).localCheckpoint(eager=True)
-    # ascending order key: negated quality (best doc = smallest key)
-    keyed = scored.withColumn("_neg", -F.col("_q"))
-    if num_bins is None:
-        num_bins = max(spark.sparkContext.defaultParallelism, 16)
-    fracs = [i / num_bins for i in range(1, num_bins)]
-    # the NULL audit rides the quantile-edge aggregation (which scans
-    # everything anyway) — proving "no NULLs" any other way costs a
-    # whole extra job in the healthy steady state
-    edge_row = keyed.select(
-        F.percentile_approx(
-            F.col("_neg"), F.array(*[F.lit(f) for f in fracs]), F.lit(10_000)
-        ).alias("edges"),
-        F.sum(
-            (F.col("_q").isNull() | F.col("_n").isNull()).cast("int")
-        ).alias("n_null"),
-    ).first()
-    if (edge_row["n_null"] or 0) > 0:
-        raise ValueError(
-            f"budget_select: {edge_row['n_null']} rows with NULL "
-            f"{quality_col!r} or {tokens_col!r} — they would be dropped "
-            "silently; filter or impute upstream"
-        )
-    edges = sorted(set(edge_row["edges"] or []))
-    bin_col = F.lit(0)
-    for e in edges:
-        bin_col = bin_col + (F.col("_neg") > F.lit(float(e))).cast("int")
-    binned = keyed.withColumn("_bin", bin_col)
-    w = (
-        Window.partitionBy("_bin")
-        .orderBy(F.col("_neg").asc(), F.col(id_col).asc())
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    local = binned.withColumn("_local_cum", F.sum("_n").over(w))
-    totals = sorted(
-        (r["_bin"], r["tot"])
-        for r in binned.groupBy("_bin")
-        .agg(F.sum("_n").alias("tot"))
-        .collect()
-    )
-    offsets, acc = {}, 0
-    for b, t in totals:
-        offsets[b] = acc
-        acc += t
-    # token-sum offsets exceed int32 almost immediately at corpus
-    # scale; cast every map value so the map type is uniformly BIGINT
-    # (a mixed int/long literal map fails analysis)
-    offset_map = F.create_map(
-        *[
-            x
-            for b, off in offsets.items()
-            for x in (F.lit(b), F.lit(off).cast("bigint"))
-        ]
-    )
-    cum = F.element_at(offset_map, F.col("_bin")) + F.col("_local_cum")
-    return (
-        local.withColumn("cum_tokens", cum.cast("bigint"))
-        .filter(F.col("cum_tokens") <= budget)
-        .select(
-            id_col,
-            F.col("_q").alias("quality"),
-            F.col("_n").alias("n_tokens"),
-            "cum_tokens",
-        )
-    )
-
-
-def pps_systematic_sample(
-    df: DataFrame,
-    tokens_col: str,
-    n_picks: int = 50,
-    id_col: str = "doc_id",
-    num_bins: int | None = None,
-) -> DataFrame:
-    """Systematic probability-proportional-to-size sampling: lay every
-    document's tokens end to end on an integer line in ``id_col``
-    order, drop ``n_picks`` equally spaced pins, and keep each document
-    once per pin it contains — the classic survey-statistics PPS
-    design (Madow 1949), the zero-randomness way to draw "documents
-    weighted by token count" for corpus QA panels and eval slices.
-    Inclusion probability is exactly proportional to size, and unlike
-    rand()-weighted draws the selection is a pure function of the
-    data: identical across runs, engines, partitions, and retries
-    (the same property ``deterministic_sample_documents`` pins for
-    uniform sampling).
-
-    Pin p_i sits at position ⌊i·W/n⌋ (integer arithmetic only — the
-    hit count per doc is ⌊cum·n/W⌋ − ⌊(cum−w)·n/W⌋, never a float, so
-    the relation hash-matches the DuckDB oracle bit-for-bit). Docs
-    spanning several pins return n_hits > 1 — PPS multiplicity, which
-    downstream weighting must honor.
-
-    Scale shape: the global running sum uses the same two-phase trick
-    as :func:`budget_select` (bin by broadcast quantile edges on the
-    order key, LOCAL window cumsum per bin in parallel, metadata-sized
-    per-bin totals collected once and added back as offsets) — never a
-    single global-ORDER-BY window task. ``cum·n_picks`` stays within
-    int64 for any corpus where total_tokens·n_picks < 2^63 (~10^14
-    tokens at n=100k — beyond a 100 TB text corpus).
-
-    NULL/zero-weight rows get zero pins and drop out of the output (a
-    NULL weight contributes nothing to the line, matching the oracle's
-    COALESCE-to-0 contract).
-
-    ``id_col`` must be numeric: the bin edges come from the column
-    cast to double while the within-bin window orders by the raw
-    column — for a string id the cast is NULL (every edge NULL, the
-    binning silently collapsing to the single global-window task this
-    function exists to avoid) and for numeric-string ids numeric bin
-    order would disagree with lexicographic window order, corrupting
-    the cumulative sums.
-    """
-    from pyspark.sql.types import NumericType
-
-    id_type = df.schema[id_col].dataType
-    if not isinstance(id_type, NumericType):
-        raise TypeError(
-            f"pps_systematic_sample requires a numeric id_col; "
-            f"{id_col!r} is {id_type.simpleString()}"
-        )
-    spark = df.sparkSession
-    w = df.select(
-        F.col(id_col),
-        F.coalesce(F.col(tokens_col).cast("bigint"), F.lit(0)).alias("_n"),
-    ).localCheckpoint(eager=True)
-    if num_bins is None:
-        num_bins = max(spark.sparkContext.defaultParallelism, 16)
-    fracs = [i / num_bins for i in range(1, num_bins)]
-    edge_row = w.select(
-        F.percentile_approx(
-            F.col(id_col).cast("double"),
-            F.array(*[F.lit(f) for f in fracs]),
-            F.lit(10_000),
-        ).alias("edges")
-    ).first()
-    edges = sorted(set(edge_row["edges"] or []))
-    bin_col = F.lit(0)
-    for e in edges:
-        bin_col = bin_col + (F.col(id_col).cast("double") > F.lit(float(e))).cast("int")
-    binned = w.withColumn("_bin", bin_col)
-    win = (
-        Window.partitionBy("_bin")
-        .orderBy(F.col(id_col).asc())
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    local = binned.withColumn("_local_cum", F.sum("_n").over(win))
-    totals = sorted(
-        (r["_bin"], r["tot"])
-        for r in binned.groupBy("_bin").agg(F.sum("_n").alias("tot")).collect()
-    )
-    offsets, acc = {}, 0
-    for b, t in totals:
-        offsets[b] = acc
-        acc += t
-    total = acc
-    if total <= 0:
-        return local.filter(F.lit(False)).select(
-            id_col,
-            F.col("_n").alias("n_tokens"),
-            F.lit(0).cast("bigint").alias("n_hits"),
-        )
-    offset_map = F.create_map(
-        *[
-            x
-            for b, off in offsets.items()
-            for x in (F.lit(b), F.lit(off).cast("bigint"))
-        ]
-    )
-    cum = (F.element_at(offset_map, F.col("_bin")) + F.col("_local_cum")).cast(
-        "bigint"
-    )
-    hits = F.expr(
-        f"CAST((_cum * {int(n_picks)}) DIV {int(total)} AS BIGINT)"
-    ) - F.expr(
-        f"CAST(((_cum - _n) * {int(n_picks)}) DIV {int(total)} AS BIGINT)"
-    )
-    return (
-        local.withColumn("_cum", cum)
-        .withColumn("n_hits", hits)
-        .filter(F.col("n_hits") > 0)
-        .select(id_col, F.col("_n").alias("n_tokens"), "n_hits")
-    )
-
-
-def curriculum_manifest(
-    df: DataFrame,
-    score_col: str,
-    id_col: str = "doc_id",
-    num_shards: int = 8,
-    seed: int = 1,
-    ascending: bool = True,
-) -> DataFrame:
-    """Curriculum read order: shards are still assigned by the Lehmer
-    permutation (each shard stays a diverse corpus sample), but WITHIN
-    a shard documents are ordered by ``score_col`` (easy→hard for
-    ascending difficulty curricula) instead of the shuffle key — the
-    standard curriculum-learning layout where every worker sees the
-    same difficulty ramp over its own shard.
-
-    Same scale shape as :func:`training_shuffle`: one hash exchange on
-    shard + a per-shard local sort; deterministic (score ties break on
-    id)."""
-    key = shuffle_key(F.col(id_col), seed)
-    keyed = df.select(
-        F.col(id_col),
-        F.col(score_col).cast("double").alias("_score"),
-    ).withColumn("shard", F.pmod(key, F.lit(num_shards)))
-    order = [
-        F.col("_score").asc() if ascending else F.col("_score").desc(),
-        F.col(id_col).asc(),
-    ]
-    w = Window.partitionBy("shard").orderBy(*order)
-    return keyed.select(
-        id_col,
-        "shard",
-        F.row_number().over(w).cast("bigint").alias("pos"),
-        F.col("_score").alias("score"),
-    )
-
-
-def _quantile_edge_bin(df: DataFrame, value_col: str, num_bins: int):
-    """(binned_df, n_null) — append ``_bin`` from broadcast
-    quantile-edge LITERALS on the value (a pure function of the row,
-    deterministic in every job — repartitionByRange's sampled bounds
-    are not). The NULL count rides the same aggregation because a
-    NULL value makes ``_bin`` NULL and silently corrupts any
-    downstream offset arithmetic; callers must raise or filter. One
-    job. :func:`budget_select` and the deciles query keep inline
-    variants — budget_select's audit covers a second column and the
-    deciles binning is interleaved with its decile arithmetic — but
-    any new two-phase rank should build on this."""
-    fracs = [i / num_bins for i in range(1, num_bins)]
-    v = F.col(value_col).cast("double")
-    row = df.select(
-        F.percentile_approx(
-            v, F.array(*[F.lit(f) for f in fracs]), F.lit(10_000)
-        ).alias("edges"),
-        F.sum(F.col(value_col).isNull().cast("int")).alias("n_null"),
-    ).first()
-    edges = sorted(set(row["edges"] or []))
-    bin_col = F.lit(0)
-    for e in edges:
-        bin_col = bin_col + (v > F.lit(float(e))).cast("int")
-    return df.withColumn("_bin", bin_col), int(row["n_null"] or 0)
-
-
-def _offsets_map(counts: list[tuple[int, int]]):
-    """Cumulative-offset literal map from (bin, count) pairs — values
-    cast to BIGINT: at the corpus sizes this machinery exists for,
-    offsets exceed int32 and a 32-bit ``offset + row_number`` would
-    wrap (non-ANSI) or throw (ANSI) BEFORE any outer cast could help."""
-    offsets, acc = {}, 0
-    for b, c in counts:
-        offsets[b] = acc
-        acc += c
-    return F.create_map(
-        *[
-            x
-            for b, off in offsets.items()
-            for x in (F.lit(b), F.lit(off).cast("bigint"))
-        ]
-    )
-
-
-def exact_global_rank(
-    df: DataFrame,
-    value_col: str,
-    tiebreak_col: str,
-    num_bins: int | None = None,
-    skew_factor: int = 4,
-) -> DataFrame:
-    """Append ``_rank`` = exact ROW_NUMBER() OVER (ORDER BY value,
-    tiebreak) WITHOUT a single-partition window: quantile-edge literal
-    binning on the value, a per-bin row_number window in parallel,
-    plus broadcast cumulative offsets (metadata-sized, collected
-    once). All rank arithmetic is BIGINT end-to-end.
-
-    Value-only edges cannot split ties, so a dominant repeated value
-    (truncation caps, boilerplate lengths) would re-create the
-    single-task window this function exists to avoid. A fat bin
-    (more than ``skew_factor``× the average) whose rows all share ONE
-    value — the tie-skew case — is therefore SUB-BINNED on the
-    tiebreak's quantile edges: with the value constant, in-bin order
-    is by tiebreak alone, so tiebreak sub-bins respect the global
-    (value, tiebreak) order and every window partition is bounded.
-    Sub-binning a MIXED-value fat bin on the tiebreak would NOT
-    respect that order (a smaller value with a large tiebreak must
-    still sort first), so mixed fat bins and non-numeric tiebreaks
-    fall back to the single fat bin — correct, just not balanced.
-
-    NULL values raise — they would silently rank first or crash the
-    offset collection, the same contract budget_select enforces.
-
-    The input should already be materialized (localCheckpoint) if it
-    is expensive — two to three jobs consume it."""
-    spark = df.sparkSession
-    if num_bins is None:
-        num_bins = max(spark.sparkContext.defaultParallelism, 16)
-    binned, n_null = _quantile_edge_bin(df, value_col, num_bins)
-    if n_null:
-        raise ValueError(
-            f"exact_global_rank: {n_null} NULL {value_col!r} rows — a NULL "
-            "has no rank; filter or impute upstream"
-        )
-    counts = sorted(
-        (r["_bin"], r["cnt"])
-        for r in binned.groupBy("_bin").agg(F.count(F.lit(1)).alias("cnt")).collect()
-    )
-    total = sum(c for _, c in counts)
-    threshold = max(
-        1, skew_factor * total // max(len(counts), 1)
-    )
-    fat = [b for b, c in counts if c > threshold]
-    tb_dtype = dict(df.dtypes).get(tiebreak_col) or ""
-    numeric_tb = tb_dtype in (
-        "tinyint", "smallint", "int", "bigint", "float", "double",
-        "date", "timestamp", "timestamp_ntz",
-    ) or tb_dtype.startswith("decimal")  # df.dtypes says 'decimal(p,s)'
-    if fat and numeric_tb:
-        # second level: quantile edges on the TIEBREAK, but only for
-        # fat bins holding a single distinct value (see docstring for
-        # why mixed-value bins must not be tiebreak-split)
-        tb = F.col(tiebreak_col).cast("double")
-        sub_fracs = [i / num_bins for i in range(1, num_bins)]
-        sub_edges = {
-            r["_bin"]: sorted(set(r["edges"] or []))
-            for r in binned.filter(F.col("_bin").isin(fat))
-            .groupBy("_bin")
-            .agg(
-                F.percentile_approx(
-                    tb, F.array(*[F.lit(f) for f in sub_fracs]), F.lit(10_000)
-                ).alias("edges"),
-                F.min(F.col(value_col)).alias("_vmin"),
-                F.max(F.col(value_col)).alias("_vmax"),
-            )
-            .collect()
-            if r["_vmin"] == r["_vmax"]  # pure tie bin only
-        }
-        if sub_edges:
-            sub_col = F.lit(0)
-            for b, edges in sub_edges.items():
-                inc = F.lit(0)
-                for e in edges:
-                    inc = inc + (tb > F.lit(float(e))).cast("int")
-                sub_col = F.when(F.col("_bin") == b, inc).otherwise(sub_col)
-            binned = binned.withColumn(
-                "_bin", F.col("_bin") * (num_bins + 1) + sub_col
-            )
-            counts = sorted(
-                (r["_bin"], r["cnt"])
-                for r in binned.groupBy("_bin")
-                .agg(F.count(F.lit(1)).alias("cnt"))
-                .collect()
-            )
-    w = Window.partitionBy("_bin").orderBy(
-        F.col(value_col).asc(), F.col(tiebreak_col).asc()
-    )
-    offset_map = _offsets_map(counts)
-    return binned.withColumn(
-        "_rank",
-        F.element_at(offset_map, F.col("_bin"))
-        + F.row_number().over(w).cast("bigint"),
-    ).drop("_bin")
-
-
-def length_bucketed_batches(
-    df: DataFrame,
-    tokens_col: str = "n_tokens",
-    id_col: str = "doc_id",
-    batch_size: int = 32,
-) -> DataFrame:
-    """Padding-efficient inference/training batches: sort documents by
-    token length (id tiebreak), slice consecutive runs of
-    ``batch_size`` into batches, and report each batch's padding waste
-    — every batch pads to ITS OWN max length, so batching
-    length-neighbors minimizes wasted compute (the standard bucketed
-    batching used for inference serving and packed finetuning).
-
-    Scale shape: the global length order comes from
-    :func:`exact_global_rank` (two-phase literal-edge binning — no
-    single-task window at any corpus size); the batch stats are one
-    groupBy on batch_id. Output: (batch_id, n_docs, min_tokens,
-    max_tokens, sum_tokens, padded_tokens, padding_waste)."""
-    scored = df.select(
-        F.col(id_col),
-        F.col(tokens_col).cast("bigint").alias("_n"),
-    ).localCheckpoint(eager=True)  # edges + counts + final all read it
-    ranked = exact_global_rank(scored, "_n", id_col)
-    return (
-        ranked.withColumn(
-            # integer `div`, same discipline as pack_sequences: the
-            # `/` operator promotes to double, which loses exactness
-            # past 2^53 ranks
-            "batch_id",
-            F.expr(f"(_rank - 1) div {int(batch_size)}").cast("bigint"),
-        )
-        .groupBy("batch_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.min("_n").alias("min_tokens"),
-            F.max("_n").alias("max_tokens"),
-            F.sum("_n").alias("sum_tokens"),
-            (F.count(F.lit(1)) * F.max("_n")).alias("padded_tokens"),
-            # floor grid, not round(): waste is a small rational that
-            # can land exactly on .00005 boundaries where Spark's and
-            # DuckDB's round() implementations disagree (see
-            # quality.score_documents for the measured case)
-            (
-                F.floor(
-                    (
-                        F.lit(1)
-                        - F.sum("_n")
-                        / (F.count(F.lit(1)) * F.max("_n")).cast("double")
-                    )
-                    * F.lit(10000.0)
-                )
-                / F.lit(10000.0)
-            ).alias("padding_waste"),
-        )
     )

@@ -21,12 +21,10 @@ persists mergeable per-batch count segments:
                       EXACTLY ONCE (the ingest gates' id anti-join
                       provides this).
 
-Counts are additive, so the store is mergeable like the HLL/Bloom
-stores but EXACT; 32-byte fingerprints + one long per distinct
-passage per segment. Compaction is file-layout-only
-(:func:`..sinks.parquet.compact_dataset` — row-preserving atomic
-swap); the read-side sum handles segment multiplicity, so folding is
-an optimization, not a correctness need.
+Counts are additive, so the store is mergeable like HLL/Bloom
+sketches but EXACT; 32-byte fingerprints + one long per distinct
+passage per segment. The read-side sum handles segment multiplicity,
+so the store needs no compaction for correctness.
 """
 
 from __future__ import annotations
@@ -238,19 +236,3 @@ def strip_rebuilt_against_store(
     # the identical aggregation _rebuild_cleaned uses — shared code,
     # so the generic and attach-it-yourself paths cannot drift
     return _rebuilt_per_doc(judged, min_doc_freq)
-
-
-def compact_passage_freq_store(
-    spark: SparkSession, path: str, target_file_mb: int = 128
-) -> int:
-    """File-layout compaction (row-preserving atomic swap via
-    :func:`..sinks.parquet.compact_dataset`); the read-side sum is
-    layout-invariant. Folding segments into one row per fingerprint
-    would ALSO be sound (sums are associative) but is deliberately not
-    done on the hot path: a crash between writing a folded segment and
-    deleting its inputs would double-count, so folding would need the
-    swap protocol anyway — which compact_dataset already provides for
-    the layout problem that actually hurts (file-count growth)."""
-    from ..sinks.parquet import compact_dataset
-
-    return compact_dataset(spark, _segments_path(path), target_file_mb)

@@ -60,12 +60,6 @@ def create_phash_store(
     return meta
 
 
-def load_phash_meta(spark: SparkSession, path: str) -> dict:
-    return json.loads(
-        spark.read.parquet(_meta_path(path)).first()["meta"]
-    )
-
-
 def read_phash_store(spark: SparkSession, path: str) -> DataFrame:
     from ..sources.parquet import read_table_or_empty
 
@@ -145,15 +139,3 @@ def near_dups_against_phash_store(
         max_hamming=max_hamming,
         bands=4,
     )
-
-
-def compact_phash_store(
-    spark: SparkSession, path: str, target_file_mb: int = 128
-) -> int:
-    """Restore a compact file layout after incremental appends (one
-    file per accepted batch, forever). Delegates to
-    :func:`..sinks.parquet.compact_dataset` (atomic swap,
-    crash-healed); hashes are a set — no ordering contract."""
-    from ..sinks.parquet import compact_dataset
-
-    return compact_dataset(spark, _hashes_path(path), target_file_mb)

@@ -14,7 +14,7 @@ from pyspark.sql import Window as SparkWindow
 from pyspark.sql import functions as F
 
 from ..functions.timestamps import epoch_micros
-from ..plans.relational import ORACLES, load, register
+from ..plans.relational import load, register
 from . import dedup as D
 from . import dsir as DS
 from . import fingerprint as FP
@@ -80,17 +80,6 @@ def _memo_scaffold(key: str, build) -> str:
 # text analysis
 # ---------------------------------------------------------------------------
 
-@register(
-    "token_count_documents",
-    oracle=f"""
-    SELECT doc_id, CAST(len({_TOKS}) AS BIGINT) AS n_tokens
-    FROM documents
-    """,
-)
-def token_count_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
-    documents = load(spark, sf_dir, "documents")
-    return documents.select("doc_id", T.token_count("text").alias("n_tokens"))
-
 
 @register(
     "token_count_bpe_documents",
@@ -151,140 +140,6 @@ def text_quality_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register(
-    "quality_model_filter",
-    oracle=f"""
-    WITH t AS (SELECT doc_id, {_TOKS} AS toks FROM documents),
-    f AS (
-        SELECT doc_id,
-               CAST(LEAST(len(toks), 256) AS DOUBLE) / 256.0 AS len_sat,
-               CAST(len(list_distinct(toks)) AS DOUBLE) / len(toks) AS ttr,
-               CAST(list_sum([len(x) for x in toks]) AS DOUBLE) / len(toks)
-                   AS avg_token_len,
-               CAST(len(list_filter(toks, x -> x IN
-                   ('the','and','of','to','in','is','you','that','it','was')))
-                   AS DOUBLE) / len(toks) AS stop_ratio
-        FROM t
-    ),
-    s AS (
-        SELECT doc_id,
-               -1.2 + 1.1 * len_sat + 0.6 * ttr
-                    + -0.18 * avg_token_len + 6.5 * stop_ratio AS score
-        FROM f
-    )
-    SELECT doc_id,
-           FLOOR(score * 10000.0) / 10000.0 AS quality_score,
-           score > 0.0 AS keep
-    FROM s
-    """,
-)
-def quality_model_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Trained-classifier-style quality filtering as model-as-data: a
-    linear margin over JVM-computed features with the coefficients
-    folded into the plan as literals; raw margin, not sigmoid, so the
-    arithmetic is rational and cross-engine bit-identical
-    (llm/quality.py)."""
-    from . import quality as Q
-
-    documents = load(spark, sf_dir, "documents")
-    return Q.score_documents(documents)
-
-
-@register(
-    "streaming_quality_gated_ingest",
-    oracle=f"""
-    WITH t AS (SELECT doc_id, {_TOKS} AS toks FROM documents),
-    f AS (
-        SELECT doc_id,
-               CAST(LEAST(len(toks), 256) AS DOUBLE) / 256.0 AS len_sat,
-               CAST(len(list_distinct(toks)) AS DOUBLE) / len(toks) AS ttr,
-               CAST(list_sum([len(x) for x in toks]) AS DOUBLE) / len(toks)
-                   AS avg_token_len,
-               CAST(len(list_filter(toks, x -> x IN
-                   ('the','and','of','to','in','is','you','that','it','was')))
-                   AS DOUBLE) / len(toks) AS stop_ratio
-        FROM t
-    )
-    SELECT doc_id
-    FROM f
-    WHERE -1.2 + 1.1 * len_sat + 0.6 * ttr
-              + -0.18 * avg_token_len + 6.5 * stop_ratio > -1.28
-    """,
-)
-def streaming_quality_gated_ingest(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """The quality-gated STREAMING ingest, end to end and hash-checked:
-    the corpus arrives as one micro-batch through the full
-    ``stream_ingest_with_neardup`` pipeline with the default linear
-    quality model active and the near-dup threshold set above 1.0
-    (estimated Jaccard never exceeds 1, so the near-dup stages pass
-    everything — isolating the id-gate + quality-gate composition the
-    oracle can replicate exactly). The warehouse the gate writes must
-    contain precisely the above-cutoff documents (the cutoff sits at
-    the synthetic corpus's median margin so both branches carry real
-    weight at every SF — and an all-rejected batch writes NO warehouse
-    at all, which the empty-safe read below must survive); the oracle
-    recomputes that set from the same rational feature math the
-    ``quality_model_filter`` oracle proved cross-engine-exact."""
-    import os as _os
-    import shutil
-    import tempfile
-
-    from ..streaming.incremental import stream_ingest_with_neardup
-    from . import neardup_store as NS
-    from . import quality as Q
-
-    root = tempfile.mkdtemp(prefix="qgate_")
-    try:
-        src = _os.path.join(root, "incoming")
-        _os.makedirs(src)
-        shutil.copy(
-            _os.path.join(sf_dir, "documents.parquet"),
-            _os.path.join(src, "b1.parquet"),
-        )
-        schema = spark.read.parquet(src).schema
-        NS.build_minhash_store(
-            spark.createDataFrame([], schema),
-            _os.path.join(root, "store"),
-        )
-        wh = _os.path.join(root, "wh")
-        q = stream_ingest_with_neardup(
-            spark,
-            src,
-            schema,
-            wh,
-            _os.path.join(root, "store"),
-            _os.path.join(root, "ckpt"),
-            threshold=1.01,
-            metrics_path=_os.path.join(root, "metrics"),
-            quality_model=dict(Q.DEFAULT_MODEL),
-            quality_cutoff=-1.28,
-        )
-        q.awaitTermination()
-        from ..sources.parquet import read_table_or_empty
-
-        metrics = spark.read.parquet(_os.path.join(root, "metrics")).first()
-        accepted = (
-            read_table_or_empty(spark, wh, schema)
-            .select("doc_id")
-            .localCheckpoint(eager=True)  # outlives the temp dir
-        )
-        # the audit row must reconcile with what actually landed —
-        # a gate that miscounts its own funnel is a broken audit
-        n_wh = accepted.count()
-        if metrics.n_accepted != n_wh or (
-            metrics.n_quality_rejected
-            != metrics.n_fresh - n_wh
-        ):
-            raise AssertionError(
-                f"gate audit does not reconcile: {metrics} vs {n_wh} rows"
-            )
-        return accepted
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
-
-
-@register(
     "gopher_quality_filter",
     oracle=f"""
     WITH t AS (
@@ -332,7 +187,7 @@ def gopher_quality_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     as one map-only JVM projection — word-count bounds, mean word
     length, symbol/bullet/ellipsis ratios, alphabetic-word ratio, and
     the stopword-presence rule (llm/quality.py:gopher_rules). The
-    trained-scorer complement is ``quality_model_filter``.
+    trained-scorer complement is ``quality_model_distilled``.
 
     Gate knobs: ``min_stop_hits=1`` — the synthetic corpus vocabulary
     contains exactly one of the paper's 8 required stopwords ("the"),
@@ -1095,38 +950,6 @@ def token_drift_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     return DR.token_drift_by_source(documents)
 
 
-def _lang_oracle() -> str:
-    return f"""
-    WITH t AS (SELECT doc_id, {_TOKS} AS toks FROM documents)
-    SELECT doc_id, {T.lang_id_sql_case('toks')} AS lang_pred FROM t
-    """
-
-
-@register("lang_id_documents", oracle=_lang_oracle())
-def lang_id_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Stopword-argmax language ID (deterministic CASE chain)."""
-    documents = load(spark, sf_dir, "documents")
-    return documents.select(
-        "doc_id", T.lang_id(T.tokens("text")).alias("lang_pred")
-    )
-
-
-@register(
-    "doc_fingerprints",
-    oracle="""
-    SELECT doc_id,
-           sha256(trim(regexp_replace(lower(text), '\\s+', ' ', 'g')))
-               AS fingerprint
-    FROM documents
-    """,
-)
-def doc_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
-    documents = load(spark, sf_dir, "documents")
-    return documents.select(
-        "doc_id", T.fingerprint_sha256("text").alias("fingerprint")
-    )
-
-
 #: winnowing geometry for the registered queries: guarantee = any
 #: shared normalized run of k + window - 1 = 23 chars fingerprints;
 #: cap 1024 keeps the oracle's per-char list_reduce affordable at the
@@ -1199,60 +1022,6 @@ def rag_chunk_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register(
-    "decontaminate_against_eval",
-    oracle=f"""
-    WITH fps AS ({_WINNOW_SQL}),
-    eval_fps AS (SELECT * FROM fps WHERE id % 2 = 0),
-    batch_fps AS (SELECT * FROM fps WHERE id % 2 = 1),
-    df_ok AS (
-        SELECT fingerprint FROM eval_fps
-        GROUP BY fingerprint HAVING COUNT(*) <= 20
-    ),
-    kept AS (SELECT id, fingerprint FROM eval_fps JOIN df_ok USING (fingerprint))
-    SELECT b.id AS new_id, kept.id AS eval_id, COUNT(*) AS shared_fps
-    FROM batch_fps b JOIN kept USING (fingerprint)
-    GROUP BY 1, 2
-    HAVING COUNT(*) >= 2
-    """,
-)
-def decontaminate_against_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The decontamination workflow end-to-end THROUGH the persisted
-    store: even doc_ids act as the benchmark/eval corpus (fingerprints
-    built and persisted once), odd doc_ids as an arriving training
-    batch; batch docs sharing >= 2 winnowing fingerprints with an eval
-    doc are flagged. Fully hash-oracled — the store round-trip must
-    change nothing (llm/fingerprint.py)."""
-    import shutil
-    import tempfile
-
-    documents = load(spark, sf_dir, "documents")
-    root = tempfile.mkdtemp(prefix="wstore_")
-    try:
-        FP.build_winnow_store(
-            documents.filter(F.col("doc_id") % 2 == 0), root, max_chars=1024
-        )
-        out = FP.contamination_against_store(
-            spark,
-            root,
-            documents.filter(F.col("doc_id") % 2 == 1),
-            min_shared=2,
-        ).localCheckpoint()
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
-    return out
-
-
-@register("winnowing_fingerprints", oracle=_WINNOW_SQL)
-def winnowing_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Rolling-hash LOCAL fingerprints (winnowing, MOSS): polynomial
-    k-gram hashes + per-window minima, cross-engine bit-identical —
-    the oracle recomputes the identical Horner-mod arithmetic with
-    DuckDB list lambdas (llm/fingerprint.py)."""
-    documents = load(spark, sf_dir, "documents")
-    return FP.winnow_fingerprints(documents, max_chars=1024)
-
-
-@register(
     "winnow_overlap_pairs",
     oracle=f"""
     WITH fps AS ({_WINNOW_SQL}),
@@ -1296,39 +1065,6 @@ def winnow_overlap_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 def dedup_exact_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     documents = load(spark, sf_dir, "documents")
     return D.exact_duplicate_groups(documents)
-
-
-@register(
-    "dedup_exact_keep_longest",
-    oracle="""
-    WITH fp AS (
-        SELECT doc_id, text,
-               sha256(trim(regexp_replace(lower(text), '\\s+', ' ', 'g')))
-                   AS fingerprint
-        FROM documents
-    ),
-    r AS (
-        SELECT fingerprint, doc_id,
-               ROW_NUMBER() OVER (
-                   PARTITION BY fingerprint
-                   ORDER BY len(text) DESC, doc_id ASC
-               ) AS rn,
-               COUNT(*) OVER (PARTITION BY fingerprint) AS n_copies
-        FROM fp
-    )
-    SELECT fingerprint, CAST(doc_id AS BIGINT) AS keep_id, n_copies
-    FROM r WHERE rn = 1
-    """,
-)
-def dedup_exact_keep_longest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Quality-based survivor choice for exact-dup groups: keep the
-    longest raw copy (min-id tiebreak) via a partial-aggregatable
-    max_by instead of a window — see
-    :func:`llm.dedup.keep_best_exact`. The oracle expresses the same
-    choice as a ROW_NUMBER window, proving the aggregation form and
-    the window form agree."""
-    documents = load(spark, sf_dir, "documents")
-    return D.keep_best_exact(documents)
 
 
 _DOC_STREAM_SEQ = [0]
@@ -1445,37 +1181,6 @@ def dedup_incremental_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch = documents.filter(F.col("doc_id") % 2 == 1)
     snapshot = documents.filter(F.col("doc_id") % 2 == 0)
     return D.incremental_dedup_new_docs(batch, snapshot)
-
-
-@register(
-    "ngram_jaccard_pairs",
-    oracle=f"""
-    WITH toks AS (SELECT doc_id, {_TOKS} AS t FROM documents),
-    sh AS (
-        SELECT doc_id,
-               UNNEST(CASE WHEN len(t) >= 3 THEN
-                   list_distinct([t[i] || ' ' || t[i+1] || ' ' || t[i+2]
-                                  for i in generate_series(1, len(t)-2)])
-                   ELSE [array_to_string(t, ' ')] END) AS shingle
-        FROM toks
-    ),
-    sizes AS (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY doc_id),
-    shared AS (
-        SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS c
-        FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-        GROUP BY 1, 2
-    )
-    SELECT doc_a, doc_b,
-           CAST(c AS DOUBLE) / (x.n + y.n - c) AS jaccard
-    FROM shared
-      JOIN sizes x ON x.doc_id = doc_a
-      JOIN sizes y ON y.doc_id = doc_b
-    WHERE CAST(c AS DOUBLE) / (x.n + y.n - c) >= 0.05
-    """,
-)
-def ngram_jaccard_pairs_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
-    documents = load(spark, sf_dir, "documents")
-    return D.ngram_jaccard_pairs(documents, threshold=0.05)
 
 
 @register(
@@ -1712,7 +1417,6 @@ def _minhash_sig_bucket_ctes(
     )"""
 
 
-
 @register(
     "duplicate_spans_lsh_scoped",
     oracle=f"""
@@ -1809,53 +1513,6 @@ def _all_shingles(text_col: str = "text", k: int = 3):
     )
     return F.when(n >= k, windowed).otherwise(
         F.array(F.concat_ws(" ", toks))
-    )
-
-
-@register(
-    "doc_repetition_metrics",
-    oracle=f"""
-    WITH x AS (
-        SELECT doc_id, {_TOKS} AS t FROM documents
-    ),
-    y AS (
-        SELECT doc_id,
-               len(t) AS n_tokens,
-               len(list_distinct(t)) AS n_uniq_tokens,
-               len({_SQL_ALL_SHINGLES}) AS n_3grams,
-               len(list_distinct({_SQL_ALL_SHINGLES})) AS n_uniq_3grams
-        FROM x
-    )
-    SELECT doc_id,
-           CAST(n_3grams AS BIGINT) AS n_3grams,
-           1.0 - CAST(n_uniq_3grams AS DOUBLE) / n_3grams
-               AS dup_3gram_frac,
-           1.0 - CAST(n_uniq_tokens AS DOUBLE) / n_tokens
-               AS dup_token_frac
-    FROM y
-    """,
-)
-def doc_repetition_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Gopher-style intra-document repetition signals: the fraction of
-    duplicate 3-gram shingles and duplicate tokens. High values mark
-    boilerplate/spam for quality filtering. Pure higher-order array
-    expressions — per-row, no shuffle at all, scan-bound at any
-    scale."""
-    documents = load(spark, sf_dir, "documents")
-    toks = T.tokens("text")
-    sh = _all_shingles("text")
-    n_3g = F.size(sh)
-    return documents.select(
-        "doc_id",
-        n_3g.cast("bigint").alias("n_3grams"),
-        (
-            F.lit(1.0)
-            - F.size(F.array_distinct(sh)).cast("double") / n_3g
-        ).alias("dup_3gram_frac"),
-        (
-            F.lit(1.0)
-            - F.size(F.array_distinct(toks)).cast("double") / F.size(toks)
-        ).alias("dup_token_frac"),
     )
 
 
@@ -1967,59 +1624,6 @@ def pii_scan_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register(
-    "source_mixing_weights",
-    oracle=f"""
-    WITH per_source AS (
-        SELECT source,
-               COUNT(*) AS n_docs,
-               CAST(SUM(len({_TOKS})) AS BIGINT) AS n_tokens
-        FROM documents GROUP BY source
-    ),
-    total AS (
-        SELECT CAST(SUM(n_tokens) AS BIGINT) AS total_tokens,
-               COUNT(*) AS n_sources
-        FROM per_source
-    )
-    SELECT source, n_docs, n_tokens,
-           CAST(n_tokens AS DOUBLE) / total_tokens AS natural_frac,
-           CAST(total_tokens AS DOUBLE) / (n_sources * n_tokens)
-               AS uniform_upweight
-    FROM per_source, total
-    """,
-)
-def source_mixing_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Domain-mixture bookkeeping for training-data sampling: each
-    source's natural token share and the per-example upweight that
-    would equalize sources (the degenerate DoReMi initialization).
-    The 1-row total broadcasts back onto the per-source relation."""
-    documents = load(spark, sf_dir, "documents")
-    per_source = documents.groupBy("source").agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        F.sum(F.size(T.tokens("text"))).cast("bigint").alias("n_tokens"),
-    )
-    total = per_source.agg(
-        F.sum("n_tokens").cast("bigint").alias("total_tokens"),
-        F.count(F.lit(1)).alias("n_sources"),
-    ).withColumn("_k", F.lit(1))
-    return (
-        per_source.withColumn("_k", F.lit(1))
-        .join(F.broadcast(total), "_k")
-        .select(
-            "source",
-            "n_docs",
-            "n_tokens",
-            (F.col("n_tokens").cast("double") / F.col("total_tokens")).alias(
-                "natural_frac"
-            ),
-            (
-                F.col("total_tokens").cast("double")
-                / (F.col("n_sources") * F.col("n_tokens"))
-            ).alias("uniform_upweight"),
-        )
-    )
-
-
-@register(
     "unimax_source_budgets",
     oracle=f"""
     WITH per_source AS (
@@ -2074,81 +1678,6 @@ def unimax_source_budgets(spark: SparkSession, sf_dir: str) -> DataFrame:
     return MX.unimax_budgets(
         MX.source_token_stats(documents), max_epochs=4, budget_frac_pct=360
     )
-
-
-@register(
-    "unimax_mixture_manifest",
-    oracle=f"""
-    WITH per_source AS (
-        SELECT source, COUNT(*) AS n_docs,
-               CAST(SUM(len({_TOKS})) AS BIGINT) AS n_tokens
-        FROM documents GROUP BY source
-    ),
-    tot AS (
-        SELECT CAST(SUM(n_tokens) AS BIGINT) AS total, COUNT(*) AS n
-        FROM per_source
-    ),
-    ordered AS (
-        SELECT source, n_tokens,
-               CAST(ROW_NUMBER() OVER (ORDER BY n_tokens, source)
-                    AS BIGINT) AS i,
-               CAST(SUM(n_tokens) OVER (ORDER BY n_tokens, source
-                    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-                    AS BIGINT) AS p
-        FROM per_source
-    ),
-    flags AS (
-        SELECT o.source, o.n_tokens,
-               ((t.total * 360) // 100) AS b, t.n,
-               (4 * o.n_tokens * (t.n - o.i + 1) + 4 * (o.p - o.n_tokens)
-                   <= ((t.total * 360) // 100)) AS capped
-        FROM ordered o CROSS JOIN tot t
-    ),
-    kk AS (
-        SELECT COUNT(*) FILTER (WHERE capped) AS k,
-               COALESCE(SUM(n_tokens) FILTER (WHERE capped), 0) AS ck
-        FROM flags
-    ),
-    budgets AS (
-        SELECT f.source, f.n_tokens,
-               CAST(CASE WHEN f.capped THEN 4 * f.n_tokens
-                         ELSE (f.b - 4 * kk.ck) // (f.n - kk.k) END
-                    AS BIGINT) AS alloc
-        FROM flags f CROSS JOIN kk
-    ),
-    keyed AS (
-        SELECT d.doc_id, d.source,
-               ((((d.doc_id % 2147483647) + 7) % 2147483647)
-                   * 48271 % 2147483647) * 48271 % 2147483647 AS key,
-               (b.alloc // b.n_tokens) AS whole,
-               CAST(FLOOR(CAST(b.alloc % b.n_tokens AS DOUBLE)
-                    * 2147483647.0 / CAST(b.n_tokens AS DOUBLE))
-                    AS BIGINT) AS thr
-        FROM documents d JOIN budgets b USING (source)
-    ),
-    copies AS (
-        SELECT doc_id, source,
-               CAST(whole + (CASE WHEN key < thr THEN 1 ELSE 0 END)
-                    AS INT) AS n_copies
-        FROM keyed
-    )
-    SELECT doc_id, source, n_copies,
-           CAST(unnest(generate_series(1, n_copies)) AS INT) AS copy
-    FROM copies WHERE n_copies > 0
-    """,
-)
-def unimax_mixture_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The UniMax allocation MATERIALIZED: every document appears its
-    source's whole-epoch count, plus one more copy for the Lehmer-
-    keyed doc subset sized to the fractional epoch — the manifest a
-    shard writer would consume. Broadcast budget join + map-side key
-    + bounded explode; the only shuffles are the allocation's own
-    per-source aggregation (see llm/mixture.unimax_manifest)."""
-    documents = load(spark, sf_dir, "documents")
-    budgets = MX.unimax_budgets(
-        MX.source_token_stats(documents), max_epochs=4, budget_frac_pct=360
-    )
-    return MX.unimax_manifest(documents, budgets, seed=7)
 
 
 def _minhash_oracle_ctes(
@@ -2372,39 +1901,6 @@ def simhash_near_dup_pairs_documents(spark: SparkSession, sf_dir: str) -> DataFr
     return D.simhash_near_dup_pairs(documents, max_hamming=3, hash_fn="md5")
 
 
-@register(
-    "near_dup_clusters",
-    oracle=f"""
-    WITH RECURSIVE {_minhash_oracle_ctes()},
-    edges AS (
-        SELECT doc_a AS x, doc_b AS y FROM p
-        UNION ALL
-        SELECT doc_b AS x, doc_a AS y FROM p
-    ),
-    reach(v, label) AS (
-        SELECT doc_id, doc_id FROM documents
-        UNION
-        SELECT eg.y, r.label FROM reach r JOIN edges eg ON r.v = eg.x
-    )
-    SELECT v AS doc_id, CAST(MIN(label) AS BIGINT) AS cluster_id
-    FROM reach GROUP BY v
-    """,
-)
-def near_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MinHash pairs → connected components → (doc_id, cluster_id)
-    partition of the corpus; survivors are doc_id == cluster_id.
-    HASH-ORACLED (round 10): with md5-mode signatures the pair set is
-    engine-deterministic, and the driver-controlled label-propagation
-    fixpoint equals the recursive-CTE min-label closure (the
-    cluster_aware_holdout precedent) — the full LSH-to-components
-    dedup pipeline now hashes end to end."""
-    from .cluster import duplicate_clusters
-
-    documents = load(spark, sf_dir, "documents")
-    pairs = D.minhash_near_dup_pairs(documents, threshold=0.5, hash_fn="md5")
-    return duplicate_clusters(pairs, documents, id_col="doc_id")
-
-
 # ---------------------------------------------------------------------------
 # similarity search
 # ---------------------------------------------------------------------------
@@ -2414,37 +1910,6 @@ _COS = (
     " / (sqrt(list_sum([qe[i]*qe[i] for i in generate_series(1, len(qe))]))"
     " * sqrt(list_sum([ce[i]*ce[i] for i in generate_series(1, len(ce))])))"
 )
-
-
-@register(
-    "ann_cosine_topk",
-    oracle=f"""
-    WITH q AS (SELECT vec_id AS query_id, CAST(embedding AS DOUBLE[]) AS qe
-               FROM embeddings WHERE vec_id < 20),
-    c AS (SELECT vec_id AS neighbor_id, CAST(embedding AS DOUBLE[]) AS ce
-          FROM embeddings),
-    pairs AS (
-        SELECT query_id, neighbor_id, {_COS} AS cos
-        FROM q, c WHERE query_id <> neighbor_id
-    ),
-    ranked AS (
-        SELECT query_id, neighbor_id, cos,
-               ROW_NUMBER() OVER (
-                   PARTITION BY query_id ORDER BY cos DESC, neighbor_id
-               ) AS rn
-        FROM pairs
-    )
-    SELECT query_id, neighbor_id, ROUND(cos, 4) AS cosine,
-           CAST(rn AS BIGINT) AS rank
-    FROM ranked WHERE rn <= 5
-    """,
-)
-def ann_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Brute-force cosine top-5 for the first 20 vectors (the exact
-    baseline the LSH variant is measured against)."""
-    embeddings = load(spark, sf_dir, "embeddings")
-    queries = embeddings.filter(F.col("vec_id") < 20)
-    return S.cosine_topk_bruteforce(embeddings, queries, k=5)
 
 
 #: md5-mode hyperplane-LSH bucket CTEs shared by both float-LSH
@@ -2517,36 +1982,6 @@ def ann_cosine_topk_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     embeddings = load(spark, sf_dir, "embeddings")
     queries = embeddings.filter(F.col("vec_id") < 20)
     return S.cosine_topk_lsh(embeddings, queries, k=5, plane_mode="md5")
-
-
-@register(
-    "embedding_similar_pairs_lsh",
-    oracle=f"""
-    WITH {_LSH_MD5_BUCKETS},
-    cand AS (
-        SELECT DISTINCT a.vec_id AS vec_a, b.vec_id AS vec_b
-        FROM bk a JOIN bk b
-          ON a.tbl = b.tbl AND a.bucket = b.bucket AND a.vec_id < b.vec_id
-    ),
-    pairs AS (
-        SELECT c.vec_a, c.vec_b, {_COS} AS cos
-        FROM cand c
-        JOIN (SELECT vec_id, v AS qe FROM e) ea ON ea.vec_id = c.vec_a
-        JOIN (SELECT vec_id, v AS ce FROM e) eb ON eb.vec_id = c.vec_b
-    )
-    SELECT vec_a, vec_b, ROUND(cos, 4) AS cosine
-    FROM pairs WHERE cos >= 0.45
-    """,
-)
-def embedding_similar_pairs_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Scale path for embedding near-dup pair mining: bucket-local
-    self-join + exact verify (vs the O(n²) oracled baseline) —
-    HASH-ORACLED via md5-mode ±1 planes (round 11): the bucket
-    relation, candidate join, and cosine verify all replay in SQL.
-    Candidates the LSH recall misses are missed identically in both
-    engines, so the output hashes exactly."""
-    embeddings = load(spark, sf_dir, "embeddings")
-    return S.similar_pairs_lsh(embeddings, threshold=0.45, plane_mode="md5")
 
 
 #: fixed-point quantization CTE shared by the md5-int ANN oracles —
@@ -3020,27 +2455,6 @@ def ann_cosine_topk_opq(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register(
-    "embedding_similar_pairs",
-    oracle=f"""
-    WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-    pairs AS (
-        SELECT a.vec_id AS vec_a, b.vec_id AS vec_b,
-               list_sum([a.v[i]*b.v[i] for i in generate_series(1, len(a.v))])
-               / (sqrt(list_sum([a.v[i]*a.v[i] for i in generate_series(1, len(a.v))]))
-                  * sqrt(list_sum([b.v[i]*b.v[i] for i in generate_series(1, len(b.v))])))
-                   AS cos
-        FROM e a JOIN e b ON a.vec_id < b.vec_id
-    )
-    SELECT vec_a, vec_b, ROUND(cos, 4) AS cosine
-    FROM pairs WHERE cos >= 0.45
-    """,
-)
-def embedding_similar_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    embeddings = load(spark, sf_dir, "embeddings")
-    return S.similar_pairs_bruteforce(embeddings, threshold=0.45)
-
-
-@register(
     "semantic_dedup_exact",
     oracle="""
     WITH RECURSIVE
@@ -3077,44 +2491,6 @@ def semantic_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     = min id that reaches v), so clusters hash-match cross-engine."""
     embeddings = load(spark, sf_dir, "embeddings")
     return SD.semantic_dedup(embeddings, threshold=0.45)
-
-
-@register(
-    "source_overlap_exact",
-    oracle=f"""
-    WITH toks AS (SELECT source, {_TOKS} AS t FROM documents
-                  WHERE source IS NOT NULL),
-    sh AS (
-        SELECT DISTINCT source,
-               UNNEST(CASE WHEN len(t) >= 3 THEN
-                   list_distinct([t[i] || ' ' || t[i+1] || ' ' || t[i+2]
-                                  for i in generate_series(1, len(t)-2)])
-                   ELSE [array_to_string(t, ' ')] END) AS shingle
-        FROM toks
-    ),
-    sizes AS (SELECT source, COUNT(*) AS n FROM sh GROUP BY source),
-    shared AS (
-        SELECT a.source AS group_a, b.source AS group_b, COUNT(*) AS c
-        FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.source < b.source
-        GROUP BY 1, 2
-    )
-    SELECT group_a, group_b,
-           CAST(x.n AS BIGINT) AS n_a, CAST(y.n AS BIGINT) AS n_b,
-           CAST(c AS BIGINT) AS n_shared,
-           CAST(c AS DOUBLE) / (x.n + y.n - c) AS jaccard
-    FROM shared
-      JOIN sizes x ON x.source = group_a
-      JOIN sizes y ON y.source = group_b
-    """,
-)
-def source_overlap_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Corpus mixture design input: exact shingle-set Jaccard between
-    every pair of SOURCES (feeds) — two feeds carrying mostly the same
-    content should not both get full sampling weight. Posting-list
-    join (quadratic per shingle's source list, bounded by the source
-    count), integer counts, one final division (llm/overlap.py)."""
-    documents = load(spark, sf_dir, "documents")
-    return OV.group_shingle_overlap(documents)
 
 
 def _source_minhash_oracle(num_hashes: int = 64) -> str:
@@ -3274,28 +2650,6 @@ def dsir_importance_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register("dsir_resample_documents")  # rows-only (float Gumbel keys)
-def dsir_resample_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """DSIR's sampled variant: Gumbel-top-k over the same importance
-    weights draws 200 documents without replacement with probability
-    ∝ exp(weight/temperature). Noise comes from a deterministic
-    integer hash of the id (reruns and AQE re-plans see identical
-    samples — ``rand()`` would not survive either). Rows-only: the
-    perturbed sort key is float."""
-    documents = load(spark, sf_dir, "documents").withColumn(
-        "text_c", F.substring("text", 1, 1024)
-    )
-    target = documents.where(F.col("doc_id") % 7 == 0)
-    raw = documents.where(F.col("doc_id") % 7 != 0)
-    ratios = DS.bucket_log_ratios(
-        target, raw, text_col="text_c", num_buckets=2048
-    )
-    return DS.dsir_resample(
-        raw, ratios, n=200, seed=7, temperature=2.0,
-        text_col="text_c", num_buckets=2048,
-    )
-
-
 @register("embedding_pca_whiten_stats")  # rows-only (LAPACK eigh)
 def embedding_pca_whiten_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distributed PCA lifecycle in one plan: fit moments in a single
@@ -3386,33 +2740,6 @@ def multimodal_payload_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "multimodal_frame_counts",
-    oracle="""
-    SELECT doc_id AS media_id,
-           CAST(CEIL(octet_length(encode(text)) / 1024.0) AS BIGINT)
-               AS n_frames,
-           CAST(octet_length(encode(text)) AS BIGINT) AS total_frame_bytes
-    FROM documents
-    WHERE octet_length(encode(text)) > 0
-    """,
-)
-def multimodal_frame_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Frame-sampling fan-out through mapInPandas, then re-aggregated —
-    the oracle checks the fan-out arithmetic exactly:
-    ceil(bytes/1024) frames per media, byte-preserving slicing."""
-    documents = load(spark, sf_dir, "documents")
-    frames = M.sample_frames(M.documents_as_media(documents))
-    return (
-        frames.groupBy("media_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_frames"),
-            F.sum("frame_bytes").cast("bigint").alias("total_frame_bytes"),
-        )
-        .filter(F.col("total_frame_bytes") > 0)
-    )
-
-
 #: the MP4 synthesis arithmetic shared by both oracles: n_samples =
 #: max(1, whitespace tokens), payload = utf-8 text bytes, every 50th
 #: doc truncated mid-container (multimodal.build_mp4 geometry)
@@ -3472,131 +2799,6 @@ def multimodal_mp4_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("bigint").alias("n_keyframes"),
         F.sum(F.when(ok, F.col("mdat_bytes")).otherwise(0))
         .cast("bigint").alias("mdat_bytes"),
-    )
-
-
-@register(
-    "multimodal_mp4_keyframe_manifest",
-    oracle=f"""
-    WITH d AS ({_MP4_DOC}),
-    kf AS (
-        SELECT doc_id AS media_id, L // n AS base, L % n AS rem, i
-        FROM d, LATERAL unnest(generate_series(1, n, 5)) AS t(i)
-        WHERE NOT corrupt
-    )
-    SELECT media_id,
-           CAST(i AS BIGINT) AS sample_no,
-           CAST((i - 1) * base + LEAST(i - 1, rem) AS BIGINT) AS rel_offset,
-           CAST(base + CASE WHEN i <= rem THEN 1 ELSE 0 END AS BIGINT)
-               AS sample_bytes
-    FROM kf
-    """,
-)
-def multimodal_mp4_keyframe_manifest(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """The SAMPLING MANIFEST a frame-decode fleet consumes: for every
-    keyframe of every parseable MP4, its sample number, byte offset
-    inside the mdat payload (stsz prefix sums anchored at the stco
-    chunk offset) and byte length — "seek here, read this many bytes,
-    decode" without ever shipping the video bytes through a shuffle.
-    Hash-oracled: the synthesized sample table is an even byte split,
-    so offset arithmetic is closed-form ((i-1)*base + min(i-1, rem)),
-    and the Spark side must reproduce it from the PARSED boxes.
-    Payload-pointing correctness (offset slices reassemble the exact
-    mdat bytes) is pinned in tests/test_multimodal.py."""
-    documents = load(spark, sf_dir, "documents")
-    return M.mp4_keyframe_manifest(M.documents_as_mp4(documents))
-
-
-@register(
-    "multimodal_mp4_multichunk_manifest",
-    oracle=f"""
-    WITH d AS ({_MP4_DOC}),
-    kf AS (
-        SELECT doc_id AS media_id, L // n AS base, L % n AS rem, i
-        FROM d, LATERAL unnest(generate_series(1, n, 5)) AS t(i)
-        WHERE NOT corrupt
-    )
-    SELECT media_id,
-           CAST(i AS BIGINT) AS sample_no,
-           CAST((i - 1) * base + LEAST(i - 1, rem) AS BIGINT) AS rel_offset,
-           CAST(base + CASE WHEN i <= rem THEN 1 ELSE 0 END AS BIGINT)
-               AS sample_bytes
-    FROM kf
-    """,
-)
-def multimodal_mp4_multichunk_manifest(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """The keyframe manifest over MULTI-CHUNK containers (round 11 —
-    the demuxer walk proven in the driver gate): the same corpus
-    packed with samples_per_chunk=2, so every container carries
-    ceil(n/2) chunks, per-chunk stco offsets, and compressed stsc
-    runs. The chunks still lie contiguously inside one mdat, so the
-    CORRECT mdat-relative offsets equal the single-chunk layout's
-    closed form — but only a real stsc/stco expansion
-    (multimodal.sample_file_offsets) can know that; the round-10
-    chunk-1-anchored arithmetic would emit the same numbers for the
-    wrong reason on chunk 1 and collapse entirely had the chunks been
-    laid non-contiguously (the rejected-layout tests in
-    tests/test_multimodal.py::TestDemuxerWalk cover that plane). One
-    oracle therefore pins stsc parsing, run expansion, per-chunk
-    anchoring, and the mdat rebase end to end."""
-    documents = load(spark, sf_dir, "documents")
-    return M.mp4_keyframe_manifest(
-        M.documents_as_mp4(documents, samples_per_chunk=2)
-    )
-
-
-@register(
-    "multimodal_multitrack_stats",
-    oracle=f"""
-    WITH d0 AS ({_MP4_DOC}),
-    d AS (SELECT source, n, L FROM d0 WHERE NOT corrupt),
-    tr AS (
-        SELECT source, 'vide' AS handler, n AS n_samples,
-               (n + 4) // 5 AS n_keyframes, L AS sample_bytes,
-               n * 40 AS duration_ms
-        FROM d
-        UNION ALL
-        SELECT source, 'soun', GREATEST(1, L // 8), 0, L,
-               GREATEST(1, L // 8) * 25
-        FROM d
-    )
-    SELECT source, handler,
-           CAST(COUNT(*) AS BIGINT) AS n_tracks,
-           CAST(SUM(n_samples) AS BIGINT) AS n_samples,
-           CAST(SUM(n_keyframes) AS BIGINT) AS n_keyframes,
-           CAST(SUM(sample_bytes) AS BIGINT) AS sample_bytes,
-           CAST(SUM(duration_ms) AS BIGINT) AS duration_ms
-    FROM tr GROUP BY source, handler
-    """,
-)
-def multimodal_multitrack_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MULTI-TRACK containers (round 12 — real media is one
-    container, N tracks): the corpus synthesizes into TWO-track MP4s
-    (video track with build_mp4's exact geometry + a 'soun' PCM track
-    over its own mdat region — multimodal.build_mp4_multitrack), and
-    one Arrow pass box-walks every payload into PER-TRACK rows
-    (multimodal.mp4_track_stats: handler, media timescale, duration
-    rebased to ms, sample/keyframe/byte accounting from each track's
-    OWN sample table — mp4_container_stats reports track[0] only,
-    which silently drops the audio of every real crawled clip). Both
-    tracks' geometry is closed-form in the text (video: token count
-    at 40 ms; audio: one sample per 8 payload bytes at 25 ms), so
-    DuckDB pins every per-handler aggregate exactly."""
-    documents = load(spark, sf_dir, "documents")
-    target = spark.sparkContext.defaultParallelism
-    if documents.rdd.getNumPartitions() < target:
-        documents = documents.repartition(target)
-    st = M.mp4_track_stats(M.documents_as_multitrack_mp4(documents))
-    return st.groupBy("source", "handler").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_tracks"),
-        F.sum("n_samples").cast("bigint").alias("n_samples"),
-        F.sum("n_keyframes").cast("bigint").alias("n_keyframes"),
-        F.sum("sample_bytes").cast("bigint").alias("sample_bytes"),
-        F.sum("duration_ms").cast("bigint").alias("duration_ms"),
     )
 
 
@@ -3723,10 +2925,7 @@ def user_value_trends_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     arithmetic (x = microseconds since the user's first event), the
     decimal→double conversions go through strings, and the final
     floating-point expression tree is identical on both engines. One
-    shuffle on user_id (the window min reuses the groupBy exchange).
-    The applyInPandas/polyfit formulation of the same regression stays
-    registered as user_value_trends_grouped_map (rows-only) and is
-    pinned to agree with this one in tests/test_trends.py."""
+    shuffle on user_id (the window min reuses the groupBy exchange)."""
     events = load(spark, sf_dir, "events")
     w = SparkWindow.partitionBy("user_id")
     e = events.select(
@@ -3766,95 +2965,6 @@ def user_value_trends_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .otherwise(F.col("sy") / F.col("n"))
         .alias("intercept"),
-    )
-
-
-@register("user_value_trends_grouped_map")  # rows-only (numpy polyfit per group)
-def user_value_trends_grouped_map(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Batch applyInPandas grouped-map: the same per-user regression
-    via numpy polyfit (llm/trends.py) — deterministic run-to-run;
-    keeps the Arrow grouped-map surface in the gate."""
-    from .trends import user_value_trends
-
-    events = load(spark, sf_dir, "events")
-    return user_value_trends(events)
-
-
-@register(
-    "multimodal_decode_stats",
-    oracle="""
-    SELECT doc_id AS media_id,
-           CASE WHEN octet_length(encode(text)) > 0
-                THEN CAST(1 AS BIGINT) END AS width,
-           CASE WHEN octet_length(encode(text)) > 0
-                THEN CAST(octet_length(encode(text)) AS BIGINT) END
-               AS height,
-           CASE WHEN octet_length(encode(text)) > 0
-                THEN CAST(1 AS BIGINT) END AS channels,
-           CASE WHEN octet_length(encode(text)) > 0
-                THEN CAST(octet_length(encode(text)) AS BIGINT) END
-               AS n_pixel_bytes,
-           octet_length(encode(text)) > 0 AS decoded_ok
-    FROM documents
-    """,
-)
-def multimodal_decode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """decode_media end-to-end through the injectable decoder seam
-    (identity_decoder: payload = 1×n×1 image) — the mapInPandas decode
-    stage with a SQL-mirrorable codec, so the plumbing (batch
-    iteration, error-row capture, schema) is correctness-gated, not
-    just unit-tested."""
-    documents = load(spark, sf_dir, "documents")
-    decoded = M.decode_media(
-        M.documents_as_media(documents), decoder=M.identity_decoder
-    )
-    return decoded.select(
-        "media_id",
-        F.col("width").cast("long").alias("width"),
-        F.col("height").cast("long").alias("height"),
-        F.col("channels").cast("long").alias("channels"),
-        F.length("pixels").cast("long").alias("n_pixel_bytes"),
-        F.col("decode_error").isNull().alias("decoded_ok"),
-    )
-
-
-@register(
-    "multimodal_bmp_decode_stats",
-    oracle="""
-    WITH geom AS (
-        SELECT doc_id,
-               doc_id % 50 = 0 AS corrupt,
-               GREATEST(1, CAST(CEIL(octet_length(encode(text)) / 48.0)
-                                AS BIGINT)) AS h
-        FROM documents
-    )
-    SELECT CAST(doc_id AS BIGINT) AS media_id,
-           CASE WHEN NOT corrupt THEN CAST(16 AS BIGINT) END AS width,
-           CASE WHEN NOT corrupt THEN h END AS height,
-           CASE WHEN NOT corrupt THEN CAST(3 AS BIGINT) END AS channels,
-           CASE WHEN NOT corrupt THEN 48 * h END AS n_pixel_bytes,
-           NOT corrupt AS decoded_ok
-    FROM geom
-    """,
-)
-def multimodal_bmp_decode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL-codec decode end-to-end: documents are synthesized into
-    valid 24-bpp BMP files (width 16 → row stride 48 == width*3, so
-    decoded pixel length is closed-form), decoded by the pure-stdlib
-    BMP parser through the default magic-dispatch decoder — no
-    injected fake anywhere in this path. Every 50th doc is truncated
-    mid-file and must surface as an error ROW (decode_error non-null,
-    null geometry), not a task failure; the oracle mirrors the
-    geometry arithmetic from doc_id and utf-8 byte length."""
-    documents = load(spark, sf_dir, "documents")
-    decoded = M.decode_media(M.documents_as_bmp(documents))
-    return decoded.select(
-        "media_id",
-        F.col("width").cast("long").alias("width"),
-        F.col("height").cast("long").alias("height"),
-        F.col("channels").cast("long").alias("channels"),
-        F.length("pixels").cast("long").alias("n_pixel_bytes"),
-        F.col("decode_error").isNull().alias("decoded_ok"),
     )
 
 
@@ -4177,54 +3287,6 @@ def neardup_store_cluster_survivors(
     )
 
 
-@register(
-    "multimodal_feature_stats",
-    oracle="""
-    WITH nonempty AS (
-        SELECT doc_id, text, octet_length(encode(text)) AS L
-        FROM documents WHERE octet_length(encode(text)) > 0
-    ),
-    counted AS (
-        SELECT doc_id, MAX(L) AS L,
-               CAST(SUM(CASE WHEN ascii(substr(text, i, 1)) % 16 = 0
-                             THEN 1 ELSE 0 END) AS BIGINT) AS c0
-        FROM nonempty,
-             LATERAL unnest(generate_series(1, L)) AS t(i)
-        GROUP BY doc_id
-    )
-    SELECT d.doc_id AS media_id,
-           CAST(16 AS BIGINT) AS dim,
-           -- the feature column is FLOAT32 (Arrow float vector): the
-           -- oracle must round through float32 before the micro snap
-           -- or c/L = 0.19 floors to 189999 on one side only
-           CAST(FLOOR(CAST(CAST(COALESCE(c.c0, 0)
-                       / CAST(GREATEST(COALESCE(c.L, 1), 1) AS DOUBLE)
-                       AS FLOAT) AS DOUBLE)
-                      * 1000000) AS BIGINT) AS f0_micro
-    FROM documents d LEFT JOIN counted c USING (doc_id)
-    """,
-)
-def multimodal_feature_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The Arrow-batched feature-extraction surface (bytes in →
-    fixed-dim vector out via mapInPandas — the GPU-batching shape a
-    real model slots into). HASH-ORACLED since round 9: the
-    deterministic stand-in features are byte-histogram fractions, so
-    f0 = |bytes ≡ 0 mod 16| / n_bytes is one IEEE division both
-    engines perform on identical integers, FLOOR-snapped to
-    micro-units. Corpus calibration (docstring contract): the oracle
-    reads bytes as ascii(char), exact because the synthetic corpus is
-    pure ASCII — a non-ASCII corpus would need a byte-level oracle."""
-    documents = load(spark, sf_dir, "documents")
-    features = M.extract_features(M.documents_as_media(documents))
-    return features.select(
-        "media_id",
-        F.size("feature").cast("bigint").alias("dim"),
-        F.floor(
-            F.element_at("feature", 1).cast("double") * F.lit(1000000)
-        ).cast("bigint").alias("f0_micro"),
-    )
-
-
 def _corpus_prep_oracle() -> str:
     return f"""
     WITH scored AS (
@@ -4261,8 +3323,7 @@ def llm_corpus_prep(spark: SparkSession, sf_dir: str) -> DataFrame:
     one SQL oracle.
 
     The dedup is a min-id row_number window over the content
-    fingerprint rather than :func:`llm.dedup.drop_exact_duplicates`'s
-    generic semi-join: the semi-join plan evaluates the (expensive)
+    fingerprint rather than a generic semi-join: the semi-join plan evaluates the (expensive)
     scoring projection twice — once per join side — and shuffles by
     doc_id besides, while the window shape scores the corpus once,
     shuffles once on the fingerprint, and carries only
@@ -4291,7 +3352,7 @@ def llm_corpus_prep(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# corpus statistics: tf-idf, inverted index, n-gram LM counts, sampling
+# corpus statistics: tf-idf
 # ---------------------------------------------------------------------------
 
 @register(
@@ -4362,237 +3423,19 @@ def tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "inverted_index_postings",
-    oracle=f"""
-    WITH tok AS (
-        SELECT DISTINCT doc_id, unnest({_TOKS}) AS token FROM documents
-    )
-    SELECT token,
-           CAST(COUNT(*) AS BIGINT) AS df,
-           array_to_string(list(CAST(doc_id AS VARCHAR) ORDER BY doc_id), ',')
-               AS postings
-    FROM tok GROUP BY token
-    """,
-)
-def inverted_index_postings(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Inverted index: token → sorted posting list of containing docs.
-    Per-document dedup happens map-side via array_distinct *before* the
-    explode, so the shuffle carries each (doc, token) once — the cheap
-    half of an index build. Postings are emitted as a comma-joined
-    string (canonical across engines); sort_array makes the aggregation
-    order-insensitive and therefore deterministic under any partitioning."""
-    documents = load(spark, sf_dir, "documents")
-    tok = documents.select(
-        "doc_id",
-        F.explode(F.array_distinct(T.tokens("text"))).alias("token"),
-    )
-    return tok.groupBy("token").agg(
-        F.count(F.lit(1)).cast("bigint").alias("df"),
-        F.array_join(
-            F.transform(
-                F.sort_array(F.collect_list("doc_id")),
-                lambda d: d.cast("string"),
-            ),
-            ",",
-        ).alias("postings"),
-    )
-
-
-@register(
-    "bigram_counts_documents",
-    oracle=f"""
-    WITH t AS (SELECT doc_id, {_TOKS} AS toks FROM documents),
-    bg AS (
-        SELECT unnest(list_transform(
-            generate_series(1, len(toks) - 1),
-            i -> toks[i] || ' ' || toks[i + 1]
-        )) AS bigram
-        FROM t
-    )
-    SELECT bigram, COUNT(*) AS n
-    FROM bg GROUP BY bigram
-    ORDER BY n DESC, bigram ASC LIMIT 20
-    """,
-)
-def bigram_counts_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Top-20 corpus bigrams — the n-gram language-model counting
-    pattern. Adjacent pairs come from zip_with over two offset slices
-    (pure column ops, no UDF); single-token and empty docs yield empty
-    slices, matching generate_series(1,0) = [] on the oracle side. The
-    count is one shuffled aggregation; top-k carries the (n, bigram)
-    total order so LIMIT is deterministic."""
-    documents = load(spark, sf_dir, "documents")
-    toks = T.tokens("text")
-    bigrams = F.zip_with(
-        F.slice(toks, 1, F.greatest(F.size(toks) - 1, F.lit(0))),
-        F.slice(toks, 2, F.greatest(F.size(toks) - 1, F.lit(0))),
-        lambda a, b: F.concat(a, F.lit(" "), b),
-    )
-    return (
-        documents.select(F.explode(bigrams).alias("bigram"))
-        .groupBy("bigram")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .orderBy(F.col("n").desc(), F.col("bigram").asc())
-        .limit(20)
-    )
-
-
-@register(
-    "doc_bigram_typicality",
-    oracle=f"""
-    WITH t AS (SELECT doc_id, {_TOKS} AS toks FROM documents),
-    bg AS (
-        SELECT doc_id, unnest(list_transform(
-            generate_series(1, len(toks) - 1),
-            i -> toks[i] || ' ' || toks[i + 1]
-        )) AS bigram
-        FROM t
-    ),
-    corpus AS (SELECT bigram, COUNT(*) AS cnt FROM bg GROUP BY bigram)
-    SELECT bg.doc_id,
-           COUNT(*) AS n_bigrams,
-           CAST(SUM(cnt) AS BIGINT) AS sum_corpus_counts,
-           CAST(SUM(cnt) AS DOUBLE) / COUNT(*) AS typicality
-    FROM bg JOIN corpus USING (bigram)
-    GROUP BY bg.doc_id
-    """,
-)
-def doc_bigram_typicality(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """LM-style quality scoring without the LM: each document's mean
-    corpus frequency of its bigrams (a KenLM-perplexity stand-in —
-    low typicality ≈ gibberish/OCR noise, absurdly high ≈ boilerplate;
-    quality filters cut both tails). Arithmetic stays exact (integer
-    counts, one final double division) so it hash-matches the oracle —
-    the reason this uses raw frequencies and not log-probs: ln() is
-    not guaranteed identically rounded across engines. Scale shape:
-    corpus counts come from the SAME exploded relation the per-doc agg
-    consumes (one explode, one groupBy, one co-keyed join)."""
-    documents = load(spark, sf_dir, "documents")
-    toks = T.tokens("text")
-    bigrams = F.zip_with(
-        F.slice(toks, 1, F.greatest(F.size(toks) - 1, F.lit(0))),
-        F.slice(toks, 2, F.greatest(F.size(toks) - 1, F.lit(0))),
-        lambda a, b: F.concat(a, F.lit(" "), b),
-    )
-    bg = T.spread_small_input(documents).select(
-        "doc_id", F.explode(bigrams).alias("bigram")
-    )
-    corpus = bg.groupBy("bigram").agg(F.count(F.lit(1)).alias("cnt"))
-    return (
-        bg.join(corpus, "bigram")
-        .groupBy("doc_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_bigrams"),
-            F.sum("cnt").cast("bigint").alias("sum_corpus_counts"),
-            (F.sum("cnt").cast("double") / F.count(F.lit(1))).alias(
-                "typicality"
-            ),
-        )
-    )
-
-
 @register("lm_perplexity_documents")  # rows-only (ln() — see llm/lm.py)
 def lm_perplexity_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CCNet-style corpus filtering: per-doc log-perplexity under an
     add-k bigram LM trained on the corpus itself, and the keep/drop
     decision at the cutoff. The LM's transcendental log keeps this
     rows-only; a numpy replica pins the math (tests/test_lm.py) and
-    the integer-exact relative `doc_bigram_typicality` stays oracled."""
+    the integer-exact bigram typicality (ccnet_bucket_documents) stays
+    oracled."""
     documents = load(spark, sf_dir, "documents")
     # cutoff sits inside the synthetic corpus's score range (3.26-3.84
     # across SFs) so the keep column exercises both branches
     return LM.bigram_lm_perplexity(
         T.spread_small_input(documents), k=0.5, cutoff=3.4
-    )
-
-
-@register(
-    "stratified_sample_by_lang",
-    oracle="""
-    WITH ranked AS (
-        SELECT doc_id, lang,
-               ROW_NUMBER() OVER (
-                   PARTITION BY lang
-                   ORDER BY md5(CAST(doc_id AS VARCHAR)), doc_id
-               ) AS rk,
-               COUNT(*) OVER (PARTITION BY lang) AS n_lang
-        FROM documents
-    )
-    SELECT doc_id, lang, CAST(rk AS BIGINT) AS rk
-    FROM ranked
-    WHERE rk <= CAST(ceil(n_lang / 10.0) AS BIGINT)
-    """,
-)
-def stratified_sample_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact-quota stratified sampling: ⌈10%⌉ of each language stratum,
-    selected by ranking on a key-derived md5 — a pure function of the
-    row, so membership is stable across runs, engines, partitionings,
-    and retries (unlike rand()-based sampleBy, whose quotas are only
-    expected values). One shuffle on the stratum key; each stratum
-    ranks independently, so skew is bounded by the largest stratum."""
-    documents = load(spark, sf_dir, "documents")
-    h = F.md5(F.col("doc_id").cast("string"))
-    w = SparkWindow.partitionBy("lang").orderBy(h, F.col("doc_id"))
-    c = SparkWindow.partitionBy("lang")
-    return (
-        documents.select(
-            "doc_id",
-            "lang",
-            F.row_number().over(w).cast("bigint").alias("rk"),
-            F.count(F.lit(1)).over(c).alias("n_lang"),
-        )
-        .filter(F.col("rk") <= F.ceil(F.col("n_lang") / 10.0).cast("bigint"))
-        .select("doc_id", "lang", "rk")
-    )
-
-
-@register(
-    "embedding_dimension_means",
-    oracle="""
-    WITH x AS (
-        SELECT label,
-               unnest(generate_series(1, len(embedding))) AS dim,
-               unnest(embedding) AS v
-        FROM embeddings
-    ),
-    a AS (
-        SELECT CAST(label AS BIGINT) AS label, CAST(dim AS BIGINT) AS dim,
-               COUNT(*) AS n,
-               SUM(CAST(round(CAST(v AS DOUBLE) * 1000000) AS BIGINT)) AS s
-        FROM x GROUP BY 1, 2
-    )
-    SELECT label, dim, n AS n_vectors,
-           CAST(s AS DOUBLE) / n / 1000000.0 AS mean_val
-    FROM a
-    """,
-)
-def embedding_dimension_means(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-label centroid, one row per embedding dimension — the
-    columnar profile of a vector corpus. Summing floats in double is
-    partition-order-dependent, so values are first snapped to 1e-6
-    fixed point (round() on the identical IEEE product is exact and
-    half-away-from-zero in both engines) and summed as integers —
-    exact, associative, and map-side combinable; the division back to
-    a mean happens once per group. posexplode here mirrors the
-    oracle's zipped double-unnest (DuckDB 1.0 has no WITH ORDINALITY)."""
-    emb = load(spark, sf_dir, "embeddings")
-    x = emb.select(
-        F.col("label").cast("bigint").alias("label"),
-        F.posexplode("embedding").alias("pos", "v"),
-    ).select(
-        "label",
-        (F.col("pos") + 1).cast("bigint").alias("dim"),
-        F.round(F.col("v").cast("double") * 1000000).cast("bigint").alias("v6"),
-    )
-    a = x.groupBy("label", "dim").agg(
-        F.count(F.lit(1)).alias("n"), F.sum("v6").alias("s")
-    )
-    return a.select(
-        "label",
-        "dim",
-        F.col("n").alias("n_vectors"),
-        (F.col("s").cast("double") / F.col("n") / 1000000.0).alias("mean_val"),
     )
 
 
@@ -4851,55 +3694,6 @@ def sequence_packing_bestfit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register(
-    "sequence_manifest",
-    oracle=f"""
-    WITH sized AS (
-        SELECT source AS shard, doc_id, len({_TOKS}) AS n_tokens
-        FROM documents
-    ),
-    spans AS (
-        SELECT shard, doc_id, n_tokens,
-               SUM(n_tokens) OVER (
-                   PARTITION BY shard ORDER BY doc_id
-                   ROWS UNBOUNDED PRECEDING
-               ) AS e
-        FROM sized
-    ),
-    bounds AS (
-        SELECT shard, doc_id, e - n_tokens AS s, e,
-               CAST((e - n_tokens) // 512 AS BIGINT) AS first_seq,
-               CAST((e - 1) // 512 AS BIGINT) AS last_seq
-        FROM spans
-    ),
-    packed AS (
-        SELECT shard, doc_id, s, e,
-               unnest(generate_series(first_seq, last_seq)) AS seq_id
-        FROM bounds
-    ),
-    slots AS (
-        SELECT shard, CAST(seq_id AS BIGINT) AS seq_id, doc_id,
-               LEAST(e, (seq_id + 1) * 512)
-                   - GREATEST(s, seq_id * 512) AS tokens_in_seq
-        FROM packed
-    )
-    SELECT shard, seq_id,
-           string_agg(doc_id || ':' || tokens_in_seq, ','
-                      ORDER BY doc_id) AS manifest,
-           COUNT(*) AS n_docs
-    FROM slots
-    GROUP BY shard, seq_id
-    """,
-)
-def sequence_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The packed-sequence writer manifest at seq_len=512: per
-    sequence, the ordered doc_id:token_count span list a shard writer
-    materializes (string-typed for byte-stable cross-engine compare).
-    """
-    documents = load(spark, sf_dir, "documents")
-    return PK.sequence_manifest(documents, seq_len=512, shard_col="source")
-
-
-@register(
     "vocab_top_terms",
     oracle=f"""
     WITH tok AS (
@@ -5046,7 +3840,6 @@ def passage_dedup_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-
 @register(
     "training_shuffle_manifest",
     oracle="""
@@ -5072,48 +3865,6 @@ def training_shuffle_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     sort; no global-order window (see llm/packing.training_shuffle)."""
     documents = load(spark, sf_dir, "documents")
     return PK.training_shuffle(documents, num_shards=8, seed=1)
-
-
-@register(
-    "corpus_upsample_manifest",
-    oracle="""
-    WITH keyed AS (
-        SELECT doc_id, source,
-               ((((doc_id % 2147483647) + 7) % 2147483647) * 48271 % 2147483647)
-                   * 48271 % 2147483647 AS key
-        FROM documents
-    ),
-    copies AS (
-        SELECT doc_id, source,
-               CASE source
-                   WHEN 'src1' THEN 2 + (
-                       CASE WHEN key < CAST(ROUND(0.5 * 2147483647) AS BIGINT)
-                            THEN 1 ELSE 0 END)
-                   WHEN 'src2' THEN (
-                       CASE WHEN key < CAST(ROUND(0.25 * 2147483647) AS BIGINT)
-                            THEN 1 ELSE 0 END)
-                   WHEN 'src3' THEN 0
-                   ELSE 1
-               END AS n_copies
-        FROM keyed
-    )
-    SELECT doc_id, source, CAST(n_copies AS INT) AS n_copies,
-           CAST(unnest(generate_series(1, n_copies)) AS INT) AS copy
-    FROM copies WHERE n_copies > 0
-    """,
-)
-def corpus_upsample_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deterministic fractional upsampling for training-mix epochs:
-    weight 2.5 for src1, 0.25 for src2, 0 for src3 (dropped), default
-    1.0 — a doc's fractional extra
-    copy is decided by its own Lehmer key (no rand(), reproducible,
-    oracle-checkable). Map-side CASE + bounded explode; zero shuffles
-    (see llm/packing.upsample_manifest)."""
-    documents = load(spark, sf_dir, "documents")
-    return PK.upsample_manifest(
-        documents, {"src1": 2.5, "src2": 0.25, "src3": 0.0}, seed=7
-    )
-
 
 
 @register(
@@ -5225,269 +3976,6 @@ def cluster_aware_holdout(spark: SparkSession, sf_dir: str) -> DataFrame:
         pairs,
         {"train": 0.90, "val": 0.05, "test": 0.05},
         seed=3,
-    )
-
-
-@register(
-    "streaming_budget_capped_ingest",
-    oracle=f"""
-    WITH t AS (SELECT doc_id, source, len({_TOKS}) AS n FROM documents),
-    c AS (
-        SELECT doc_id, source,
-               SUM(n) OVER (PARTITION BY source ORDER BY doc_id
-                            ROWS UNBOUNDED PRECEDING) AS cum
-        FROM t
-    )
-    SELECT doc_id FROM c
-    WHERE source NOT IN ('src0', 'src1', 'src2') OR cum <= 800
-    """,
-)
-def streaming_budget_capped_ingest(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Budget-capped STREAMING ingest end to end
-    (streaming/incremental.stream_ingest_with_budget): the corpus
-    arrives as one micro-batch with three sources capped at 800
-    accepted tokens each (≈half their totals, so the cut lands
-    mid-source at every SF) and the rest uncapped. The warehouse must
-    contain exactly the prefix-by-id documents whose running token sum
-    fits — the oracle recomputes the identical per-source cumulative
-    window."""
-    import os as _os
-    import shutil
-    import tempfile
-
-    from ..streaming.incremental import stream_ingest_with_budget
-
-    root = tempfile.mkdtemp(prefix="budget_")
-    try:
-        src = _os.path.join(root, "incoming")
-        _os.makedirs(src)
-        shutil.copy(
-            _os.path.join(sf_dir, "documents.parquet"),
-            _os.path.join(src, "b1.parquet"),
-        )
-        schema = spark.read.parquet(src).schema
-        wh = _os.path.join(root, "wh")
-        q = stream_ingest_with_budget(
-            spark,
-            src,
-            schema,
-            wh,
-            _os.path.join(root, "ckpt"),
-            budgets={"src0": 800, "src1": 800, "src2": 800},
-        )
-        q.awaitTermination()
-        from ..sources.parquet import read_table_or_empty
-
-        return (
-            read_table_or_empty(spark, wh, schema)
-            .select("doc_id")
-            .localCheckpoint(eager=True)  # outlives the temp dir
-        )
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
-
-
-@register(
-    "embedding_qa_report",
-    oracle="""
-    WITH flags AS (
-        SELECT label, embedding,
-               embedding IS NULL AS is_null,
-               COALESCE(len(list_filter(embedding,
-                   v -> v IS NULL
-                     OR isnan(CAST(v AS DOUBLE))
-                     OR isinf(CAST(v AS DOUBLE)))) > 0, FALSE) AS has_bad,
-               COALESCE(len(list_filter(embedding,
-                   v -> v <> 0)) = 0, FALSE) AS is_zero
-        FROM embeddings
-    ),
-    per_vec AS (
-        SELECT label, is_null, has_bad, is_zero,
-               -- NULL and non-finite vectors contribute 0 to the norm
-               -- sum (casting NaN/Inf to BIGINT is an error in both
-               -- engines, and a poisoned mean helps nobody)
-               CASE WHEN is_null OR has_bad THEN 0 ELSE
-                   CAST(list_sum([CAST(round(CAST(v AS DOUBLE)
-                       * CAST(v AS DOUBLE) * 1000000) AS BIGINT)
-                       for v in embedding]) AS BIGINT)
-               END AS sq6
-        FROM flags
-    )
-    SELECT CAST(label AS BIGINT) AS label,
-           COUNT(*) AS n_vectors,
-           CAST(SUM(CASE WHEN is_null THEN 1 ELSE 0 END) AS BIGINT)
-               AS n_null,
-           CAST(SUM(CASE WHEN has_bad THEN 1 ELSE 0 END) AS BIGINT)
-               AS n_nonfinite,
-           CAST(SUM(CASE WHEN is_zero AND NOT is_null THEN 1 ELSE 0 END)
-                AS BIGINT) AS n_zero,
-           CAST(SUM(sq6) AS DOUBLE) / COUNT(*) / 1000000.0
-               AS mean_sq_norm
-    FROM per_vec GROUP BY label
-    """,
-)
-def embedding_qa_report(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Vector-corpus health per label: NULL embeddings, non-finite
-    elements (NaN/Inf — the classic training-crash landmine), all-zero
-    vectors, and the mean squared norm (1e-6 fixed-point exact sums,
-    the embedding_dimension_means discipline — no libm sqrt, so the
-    oracle hash-matches). Map-side only; one tiny groupBy."""
-    emb = load(spark, sf_dir, "embeddings")
-    v = F.col("v")
-    sq6 = F.aggregate(
-        F.col("embedding"),
-        F.lit(0).cast("bigint"),
-        lambda acc, e: acc
-        + F.round(e.cast("double") * e.cast("double") * 1000000).cast(
-            "bigint"
-        ),
-    )
-    flags = emb.select(
-        F.col("label").cast("bigint").alias("label"),
-        "embedding",
-        F.col("embedding").isNull().alias("is_null"),
-        F.coalesce(
-            F.size(
-                F.filter(
-                    "embedding",
-                    # NULL ELEMENTS count as bad: F.aggregate would
-                    # propagate them into a NULL sq6 (silently dropping
-                    # the row from SUM while COUNT keeps it) where
-                    # DuckDB's list_sum skips them — flagging the
-                    # vector and zeroing its sq6 keeps both engines
-                    # exact and surfaces the corruption in n_nonfinite
-                    lambda e: e.isNull()
-                    | F.isnan(e.cast("double"))
-                    | (e.cast("double") == float("inf"))
-                    | (e.cast("double") == float("-inf")),
-                )
-            )
-            > 0,
-            F.lit(False),
-        ).alias("has_bad"),
-        F.coalesce(
-            F.size(F.filter("embedding", lambda e: e != 0)) == 0,
-            F.lit(False),
-        ).alias("is_zero"),
-    )
-    per_vec = flags.select(
-        "label",
-        "is_null",
-        "has_bad",
-        "is_zero",
-        # NULL and non-finite vectors contribute 0 (NaN→BIGINT is an
-        # ANSI error, and a poisoned mean helps nobody)
-        F.when(
-            F.col("is_null") | F.col("has_bad"), F.lit(0).cast("bigint")
-        )
-        .otherwise(sq6)
-        .alias("sq6"),
-    )
-    return per_vec.groupBy("label").agg(
-        F.count(F.lit(1)).alias("n_vectors"),
-        F.sum(F.when(F.col("is_null"), 1).otherwise(0))
-        .cast("bigint")
-        .alias("n_null"),
-        F.sum(F.when(F.col("has_bad"), 1).otherwise(0))
-        .cast("bigint")
-        .alias("n_nonfinite"),
-        F.sum(
-            F.when(F.col("is_zero") & ~F.col("is_null"), 1).otherwise(0)
-        )
-        .cast("bigint")
-        .alias("n_zero"),
-        (
-            F.sum("sq6").cast("double")
-            / F.count(F.lit(1))
-            / F.lit(1000000.0)
-        ).alias("mean_sq_norm"),
-    )
-
-
-@register(
-    "boilerplate_prefix_groups",
-    oracle=r"""
-    WITH p AS (
-        SELECT doc_id,
-               array_to_string(
-                   (string_split_regex(trim(text), '\s+'))[1:3], ' ')
-                   AS prefix
-        FROM documents
-    )
-    SELECT prefix,
-           COUNT(*) AS n_docs,
-           CAST(MIN(doc_id) AS BIGINT) AS first_id
-    FROM p GROUP BY prefix HAVING COUNT(*) > 1
-    """,
-)
-def boilerplate_prefix_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Shared-prefix boilerplate detection: documents opening with the
-    same first-k tokens (crawl templates, injected headers) grouped
-    with counts — the cheap precursor to span-level dedup (group by a
-    prefix hash, one shuffle of (prefix, id) pairs). Gate knob: k=3 —
-    the synthetic docs are short, so a realistic k=16 would find
-    nothing; a production corpus would use 16+."""
-    documents = load(spark, sf_dir, "documents")
-    prefix = F.array_join(F.slice(T.tokens("text"), 1, 3), " ")
-    return (
-        documents.select("doc_id", prefix.alias("prefix"))
-        .groupBy("prefix")
-        .agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.min("doc_id").alias("first_id"),
-        )
-        .filter(F.col("n_docs") > 1)
-    )
-
-
-@register(
-    "source_length_outliers",
-    oracle="""
-    WITH s AS (
-        SELECT source, COUNT(*) AS n,
-               SUM(n_chars) AS sm,
-               SUM(n_chars * n_chars) AS sq
-        FROM documents GROUP BY source
-    )
-    SELECT d.doc_id, d.source, d.n_chars,
-           CAST((d.n_chars * s.n - s.sm) AS DECIMAL(38,0))
-               * CAST((d.n_chars * s.n - s.sm) AS DECIMAL(38,0))
-             > 4 * (CAST(s.n AS DECIMAL(38,0)) * CAST(s.sq AS DECIMAL(38,0))
-                    - CAST(s.sm AS DECIMAL(38,0))
-                      * CAST(s.sm AS DECIMAL(38,0)))
-               AS is_outlier
-    FROM documents d JOIN s USING (source)
-    """,
-)
-def source_length_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-source length-anomaly flags: |len − μ_src| > 2σ_src, tested
-    ENTIRELY in integer arithmetic — (x·n − Σx)² > 4·(n·Σx² − (Σx)²)
-    — so no sqrt, no float accumulation, and the oracle hash-matches
-    bit-exactly (products ride DECIMAL(38,0) against overflow). The
-    per-source moments are one tiny broadcast; flagging is map-side."""
-    documents = load(spark, sf_dir, "documents")
-    s = documents.groupBy("source").agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum("n_chars").alias("sm"),
-        F.sum(F.col("n_chars") * F.col("n_chars")).alias("sq"),
-    )
-    dev = (F.col("n_chars") * F.col("n") - F.col("sm")).cast(
-        "decimal(38,0)"
-    )
-    var_n2 = F.col("n").cast("decimal(38,0)") * F.col("sq").cast(
-        "decimal(38,0)"
-    ) - F.col("sm").cast("decimal(38,0)") * F.col("sm").cast(
-        "decimal(38,0)"
-    )
-    return documents.join(F.broadcast(s), "source").select(
-        "doc_id",
-        "source",
-        "n_chars",
-        (dev * dev > F.lit(4).cast("decimal(38,0)") * var_n2).alias(
-            "is_outlier"
-        ),
     )
 
 
@@ -5911,94 +4399,6 @@ def streaming_token_drift_monitor(
 
 
 @register(
-    "intra_doc_block_dedup",
-    oracle=r"""
-    WITH t AS (SELECT doc_id, text,
-                      string_split_regex(trim(text), '\s+') AS tk
-               FROM documents),
-    blk AS (
-        SELECT doc_id, text,
-               CASE WHEN text IS NULL THEN NULL ELSE
-                   [array_to_string(tk[((i-1)*2+1):(i*2)], ' ')
-                    for i in generate_series(1,
-                        CAST(ceil(len(tk) / 2.0) AS BIGINT))]
-               END AS blocks
-        FROM t
-    ),
-    kept AS (
-        SELECT doc_id, blocks,
-               CASE WHEN blocks IS NULL THEN NULL ELSE
-                   [blocks[i] for i in generate_series(1, len(blocks))
-                    if list_position(blocks, blocks[i]) = i]
-               END AS keep
-        FROM blk
-    )
-    SELECT doc_id,
-           CAST(CASE WHEN blocks IS NULL THEN 0
-                ELSE len(blocks) END AS BIGINT) AS n_blocks,
-           CAST(CASE WHEN keep IS NULL THEN 0
-                ELSE len(keep) END AS BIGINT) AS n_kept,
-           array_to_string(keep, ' ') AS text_clean
-    FROM kept
-    """,
-)
-def intra_doc_block_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Within-document repeated-block removal at block=2
-    (llm/dedup.remove_intra_doc_repeats) — first occurrence survives,
-    later copies are cut; zero shuffle, pure JVM array algebra with
-    explicit array_position first-index semantics so the oracle is
-    exact. Gate knob: block=2 — the synthetic corpus has no repeated
-    runs longer than 3 tokens, so the paper-ish default 8 would keep
-    every document untouched; at 2 the removal branch carries real
-    weight (180/500 docs at sf0.001)."""
-    documents = load(spark, sf_dir, "documents")
-    return D.remove_intra_doc_repeats(documents, block=2)
-
-
-@register(
-    "tokenizer_fertility_by_lang",
-    oracle=rf"""
-    SELECT lang,
-           COUNT(*) AS n_docs,
-           CAST(SUM(len(regexp_extract_all(text,
-               ' ?\p{{L}}+| ?\p{{N}}+| ?[^\s\p{{L}}\p{{N}}]+')))
-               AS BIGINT) AS n_bpe_tokens,
-           CAST(SUM(len({_TOKS})) AS BIGINT) AS n_words,
-           CAST(SUM(len(regexp_extract_all(text,
-               ' ?\p{{L}}+| ?\p{{N}}+| ?[^\s\p{{L}}\p{{N}}]+')))
-               AS DOUBLE)
-             / SUM(len({_TOKS})) AS fertility
-    FROM documents
-    GROUP BY lang
-    """,
-)
-def tokenizer_fertility_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Tokenizer fertility (subword tokens per word) per language —
-    the standard multilingual-tokenizer health metric: a language
-    whose fertility balloons is under-served by the vocabulary and
-    its token budget silently shrinks. Exact integer sums + one IEEE
-    division; single scan, one tiny groupBy."""
-    documents = load(spark, sf_dir, "documents")
-    return (
-        documents.groupBy("lang")
-        .agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.sum(T.bpe_pretoken_count("text")).alias("n_bpe_tokens"),
-            F.sum(T.token_count("text")).alias("n_words"),
-        )
-        .select(
-            "lang",
-            "n_docs",
-            "n_bpe_tokens",
-            "n_words",
-            (
-                F.col("n_bpe_tokens").cast("double") / F.col("n_words")
-            ).alias("fertility"),
-        )
-    )
-
-
-@register(
     "bloom_prefilter_documents",
     oracle=r"""
     WITH fp AS (
@@ -6073,127 +4473,6 @@ def bloom_prefilter_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register(
-    "training_shuffle_incremental",
-    oracle="""
-    WITH old_keyed AS (
-        SELECT doc_id,
-               ((((doc_id % 2147483647) + 1) % 2147483647) * 48271 % 2147483647)
-                   * 48271 % 2147483647 AS key
-        FROM documents WHERE doc_id < 300
-    ),
-    snapshot AS (
-        SELECT doc_id, CAST(key % 8 AS BIGINT) AS shard,
-               ROW_NUMBER() OVER (
-                   PARTITION BY key % 8 ORDER BY key, doc_id
-               ) AS pos
-        FROM old_keyed
-    ),
-    new_keyed AS (
-        SELECT doc_id,
-               ((((doc_id % 2147483647) + 1) % 2147483647) * 48271 % 2147483647)
-                   * 48271 % 2147483647 AS key
-        FROM documents WHERE doc_id >= 300
-    ),
-    base AS (
-        SELECT shard, MAX(pos) AS b FROM snapshot GROUP BY shard
-    ),
-    ranked AS (
-        SELECT doc_id, CAST(key % 8 AS BIGINT) AS shard,
-               ROW_NUMBER() OVER (
-                   PARTITION BY key % 8 ORDER BY key, doc_id
-               ) AS r
-        FROM new_keyed
-    )
-    SELECT ranked.doc_id, ranked.shard,
-           COALESCE(base.b, 0) + ranked.r AS pos
-    FROM ranked LEFT JOIN base ON ranked.shard = base.shard
-    """,
-)
-def training_shuffle_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Incremental manifest growth: docs >= 300 (the "new crawl") are
-    appended to the shard manifest of docs < 300 (the "snapshot") —
-    same permutation key, pos continuing after each shard's max, so
-    written shard files never move (llm/packing
-    .training_shuffle_incremental; same production shape as
-    dedup_incremental_documents)."""
-    documents = load(spark, sf_dir, "documents")
-    snapshot = PK.training_shuffle(
-        documents.filter(F.col("doc_id") < 300), num_shards=8, seed=1
-    )
-    return PK.training_shuffle_incremental(
-        documents.filter(F.col("doc_id") >= 300),
-        snapshot,
-        num_shards=8,
-        seed=1,
-    )
-
-
-
-@register(
-    "streaming_training_shuffle_documents",
-    oracle=ORACLES["training_shuffle_incremental"],
-)
-def streaming_training_shuffle_documents(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """STREAMING manifest growth: the new docs (>= 300) arrive as a
-    file stream and are assigned (shard, pos) slots extending the
-    pre-seeded manifest of docs < 300 via foreachBatch (rank windows
-    are unsupported on streams; see
-    streaming/incremental.stream_training_shuffle). Hash-matches the
-    SAME oracle as the batch ``training_shuffle_incremental`` —
-    batch/stream parity for the training-layout family, the same twin
-    structure as the dedup family."""
-    import os as _os
-    import shutil
-    import tempfile
-
-    from pyspark.sql.types import LongType, StringType, StructField, StructType
-
-    from ..streaming.incremental import stream_training_shuffle
-
-    documents = load(spark, sf_dir, "documents")
-    root = tempfile.mkdtemp(prefix="shuffle_stream_")
-    try:
-        source = _os.path.join(root, "incoming")
-        manifest = _os.path.join(root, "manifest")
-        ckpt = _os.path.join(root, "ckpt")
-        _os.makedirs(source)
-        # pre-seed the manifest with the snapshot (docs < 300)
-        PK.training_shuffle(
-            documents.filter(F.col("doc_id") < 300), num_shards=8, seed=1
-        ).write.parquet(manifest)
-        # stage the arriving batch as one flat file
-        staging = _os.path.join(root, "staging")
-        documents.filter(F.col("doc_id") >= 300).select(
-            "doc_id", "text"
-        ).repartition(1).write.parquet(staging)
-        import glob as _glob
-
-        part = _glob.glob(_os.path.join(staging, "part-*.parquet"))[0]
-        shutil.copy(part, _os.path.join(source, "batch.parquet"))
-        schema = StructType(
-            [
-                StructField("doc_id", LongType()),
-                StructField("text", StringType()),
-            ]
-        )
-        q = stream_training_shuffle(
-            spark, source, schema, manifest, ckpt, num_shards=8, seed=1
-        )
-        q.awaitTermination()
-        out = (
-            spark.read.parquet(manifest)
-            .filter(F.col("doc_id") >= 300)
-            .localCheckpoint()
-        )
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
-    return out
-
-
-
-@register(
     "pii_redact_documents",
     oracle=f"""
     WITH red AS (
@@ -6248,185 +4527,6 @@ def pii_redact_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-
-@register(
-    "corpus_token_budget_selection",
-    oracle=f"""
-    WITH t AS (SELECT doc_id, {_TOKS} AS toks FROM documents),
-    scored AS (
-        SELECT doc_id,
-               CAST(len(list_distinct(toks)) AS DOUBLE) / len(toks)
-                   AS quality,
-               CAST(len(toks) AS BIGINT) AS n_tokens
-        FROM t
-    ),
-    running AS (
-        SELECT doc_id, quality, n_tokens,
-               SUM(n_tokens) OVER (
-                   ORDER BY quality DESC, doc_id ASC
-                   ROWS UNBOUNDED PRECEDING
-               ) AS cum_tokens
-        FROM scored
-    )
-    SELECT doc_id, quality, n_tokens, CAST(cum_tokens AS BIGINT) AS cum_tokens
-    FROM running WHERE cum_tokens <= 10000
-    """,
-)
-def corpus_token_budget_selection(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Fill a 10k-token training budget with the highest-quality
-    documents (quality = type-token ratio, doc_id tiebreak): the
-    selection step between scoring and packing. The oracle's global
-    ORDER BY cumsum window is reproduced scale-safely by
-    llm/packing.budget_select — quantile-edge binning + per-bin local
-    running sums + broadcast offsets, no single-partition window."""
-    documents = load(spark, sf_dir, "documents")
-    toks = T.tokens("text")
-    n = F.size(toks).cast("bigint")
-    scored = documents.select(
-        "doc_id",
-        (F.size(F.array_distinct(toks)).cast("double") / n).alias("quality"),
-        n.alias("n_tokens"),
-    )
-    return PK.budget_select(
-        scored, "quality", "n_tokens", budget=10_000
-    )
-
-
-
-@register(
-    "dq_integrity_report",
-    oracle="""
-    SELECT 'customer_pk_dups' AS check_name,
-           CAST(COALESCE(SUM(n - 1), 0) AS BIGINT) AS n_violations
-    FROM (SELECT COUNT(*) AS n FROM customer GROUP BY c_custkey) d
-    WHERE n > 1
-    UNION ALL
-    SELECT 'orders_pk_dups',
-           CAST(COALESCE(SUM(n - 1), 0) AS BIGINT)
-    FROM (SELECT COUNT(*) AS n FROM orders GROUP BY o_orderkey) d
-    WHERE n > 1
-    UNION ALL
-    SELECT 'lineitem_pk_dups',
-           CAST(COALESCE(SUM(n - 1), 0) AS BIGINT)
-    FROM (SELECT COUNT(*) AS n FROM lineitem
-          GROUP BY l_orderkey, l_linenumber) d
-    WHERE n > 1
-    UNION ALL
-    SELECT 'orders_orphan_custkey',
-           CAST(COUNT(*) AS BIGINT)
-    FROM orders o
-    WHERE NOT EXISTS (SELECT 1 FROM customer c
-                      WHERE c.c_custkey = o.o_custkey)
-    UNION ALL
-    SELECT 'lineitem_orphan_orderkey',
-           CAST(COUNT(*) AS BIGINT)
-    FROM lineitem l
-    WHERE NOT EXISTS (SELECT 1 FROM orders o
-                      WHERE o.o_orderkey = l.l_orderkey)
-    UNION ALL
-    SELECT 'orders_null_orderdate',
-           CAST(COUNT(*) AS BIGINT)
-    FROM orders WHERE o_orderdate IS NULL
-    UNION ALL
-    SELECT 'customer_null_nationkey',
-           CAST(COUNT(*) AS BIGINT)
-    FROM customer WHERE c_nationkey IS NULL
-    """,
-)
-def dq_integrity_report(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Warehouse data-quality audit in one result set: duplicate
-    primary keys (excess rows beyond the first), orphan foreign keys
-    (anti joins), and null-rate checks — the report a pipeline runs
-    before trusting a load. Non-vacuous on the driver testdata: the
-    generator does not enforce line-number uniqueness, so
-    ``lineitem_pk_dups`` reports thousands of excess rows (both
-    engines agree on the exact count).
-
-    Scale shape: each PK check is a groupBy on the key (partial
-    count map-side, only keys with n>1 survive to the tiny agg);
-    each FK check is a LEFT ANTI join where the dimension side
-    broadcasts (customer) or shares the fact's key partitioning
-    (orders⋈lineitem on l_orderkey); null checks are scan-local
-    counts. Seven independent checks union into one metadata-sized
-    result."""
-    customer = load(spark, sf_dir, "customer")
-    orders = load(spark, sf_dir, "orders")
-    lineitem = load(spark, sf_dir, "lineitem")
-
-    def pk_dups(name: str, df: DataFrame, keys: list[str]):
-        return (
-            df.groupBy(*keys)
-            .agg(F.count(F.lit(1)).alias("n"))
-            .filter(F.col("n") > 1)
-            .agg(
-                F.lit(name).alias("check_name"),
-                F.coalesce(F.sum(F.col("n") - 1), F.lit(0))
-                .cast("bigint")
-                .alias("n_violations"),
-            )
-        )
-
-    def orphans(name: str, child: DataFrame, ck: str, parent: DataFrame, pk: str):
-        return (
-            child.join(
-                parent.select(F.col(pk).alias(ck)), ck, "left_anti"
-            ).agg(
-                F.lit(name).alias("check_name"),
-                F.count(F.lit(1)).cast("bigint").alias("n_violations"),
-            )
-        )
-
-    def nulls(name: str, df: DataFrame, col: str):
-        return df.filter(F.col(col).isNull()).agg(
-            F.lit(name).alias("check_name"),
-            F.count(F.lit(1)).cast("bigint").alias("n_violations"),
-        )
-
-    checks = [
-        pk_dups("customer_pk_dups", customer, ["c_custkey"]),
-        pk_dups("orders_pk_dups", orders, ["o_orderkey"]),
-        pk_dups("lineitem_pk_dups", lineitem, ["l_orderkey", "l_linenumber"]),
-        orphans("orders_orphan_custkey", orders, "o_custkey", customer, "c_custkey"),
-        orphans("lineitem_orphan_orderkey", lineitem, "l_orderkey", orders, "o_orderkey"),
-        nulls("orders_null_orderdate", orders, "o_orderdate"),
-        nulls("customer_null_nationkey", customer, "c_nationkey"),
-    ]
-    out = checks[0]
-    for c in checks[1:]:
-        out = out.unionByName(c)
-    return out
-
-
-
-@register(
-    "training_curriculum_manifest",
-    oracle="""
-    WITH keyed AS (
-        SELECT doc_id, n_chars,
-               ((((doc_id % 2147483647) + 1) % 2147483647) * 48271 % 2147483647)
-                   * 48271 % 2147483647 AS key
-        FROM documents
-    )
-    SELECT doc_id,
-           CAST(key % 8 AS BIGINT) AS shard,
-           ROW_NUMBER() OVER (
-               PARTITION BY key % 8 ORDER BY n_chars ASC, doc_id ASC
-           ) AS pos,
-           CAST(n_chars AS DOUBLE) AS score
-    FROM keyed
-    """,
-)
-def training_curriculum_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Curriculum layout: Lehmer-permuted shards (diverse samples),
-    short-to-long read order within each shard (n_chars as the
-    difficulty proxy) — see llm/packing.curriculum_manifest."""
-    documents = load(spark, sf_dir, "documents")
-    return PK.curriculum_manifest(
-        documents, "n_chars", num_shards=8, seed=1, ascending=True
-    )
-
-
-
 @register("ann_index_ivfpq_query", oracle=_pq_md5_oracle(ivf=True))
 def ann_index_ivfpq_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The SERVING shape of ANN: query a persisted IVF+PQ index
@@ -6438,9 +4538,7 @@ def ann_index_ivfpq_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     Round 11 (verdict item 4): the index BUILD is scaffolding, built
     once per (process, sf) via _memo_scaffold — the round-9 store
     precedent. The timed repeat path is serve-only (probe + ADC scan
-    + exact re-rank), which is what a query row should measure; the
-    build+append+compact lifecycle keeps its own timed row
-    (ann_index_health).
+    + exact re-rank), which is what a query row should measure.
 
     Round 12: HASH-ORACLED — the index builds in quant_mode='md5'
     (integer quantizers persisted in meta), and because serve ==
@@ -6468,44 +4566,6 @@ def ann_index_ivfpq_query(spark: SparkSession, sf_dir: str) -> DataFrame:
         k=5,
         nprobe=6,
     )
-
-
-
-@register(
-    "length_bucketed_batches",
-    oracle=f"""
-    WITH sized AS (
-        SELECT doc_id, CAST(len({_TOKS}) AS BIGINT) AS _n
-        FROM documents
-    ),
-    ranked AS (
-        SELECT doc_id, _n,
-               ROW_NUMBER() OVER (ORDER BY _n, doc_id) AS rnk
-        FROM sized
-    ),
-    b AS (
-        SELECT *, CAST(FLOOR((rnk - 1) / 32) AS BIGINT) AS batch_id
-        FROM ranked
-    )
-    SELECT batch_id,
-           COUNT(*) AS n_docs,
-           MIN(_n) AS min_tokens,
-           MAX(_n) AS max_tokens,
-           CAST(SUM(_n) AS BIGINT) AS sum_tokens,
-           CAST(COUNT(*) * MAX(_n) AS BIGINT) AS padded_tokens,
-           FLOOR((1 - SUM(_n) / CAST(COUNT(*) * MAX(_n) AS DOUBLE)) * 10000.0)
-               / 10000.0 AS padding_waste
-    FROM b GROUP BY batch_id
-    """,
-)
-def length_bucketed_batches(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Padding-efficient batching: documents globally ordered by token
-    length (exact two-phase rank — the oracle's single ROW_NUMBER
-    window would be one task at scale), sliced into 32-doc batches,
-    per-batch padding waste reported (llm/packing.py)."""
-    documents = load(spark, sf_dir, "documents")
-    sized = documents.select("doc_id", T.token_count("text").alias("n_tokens"))
-    return PK.length_bucketed_batches(sized, "n_tokens", "doc_id", batch_size=32)
 
 
 @register("bpe_train_merges")  # rows-only (iterative driver loop)
@@ -6559,48 +4619,6 @@ def bpe_fertility_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
             / F.sum("n_words").cast("double")
         ).cast("bigint").alias("fertility_micro"),
     )
-
-
-@register("bpe_encode_documents")  # rows-only (trained-model tokenization)
-def bpe_encode_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Train-then-tokenize: learn the merge table on even-doc_id docs,
-    encode ALL docs with it — in-vocab words segment by joining the
-    trainer's own segmentation table (broadcast-ably vocab-sized),
-    OOV words replay the merges in an Arrow-batched UDF. Returns
-    (id, n_tokens, first_tokens) — compact, deterministic
-    (llm/bpe.py)."""
-    from . import bpe as B
-
-    documents = load(spark, sf_dir, "documents")
-    merges, seg = B.train_bpe(
-        documents.filter(F.col("doc_id") % 2 == 0), num_merges=12
-    )
-    enc = B.bpe_encode(documents, merges, seg)
-    return enc.select(
-        "id",
-        F.size("tokens").cast("bigint").alias("n_tokens"),
-        F.array_join(F.slice("tokens", 1, 8), "|").alias("first_tokens"),
-    )
-
-
-@register("bpe_bucketed_batches")  # rows-only (trained-model tokenization)
-def bpe_bucketed_batches(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The tokenize→batch composition on REAL learned-subword counts:
-    train BPE on half the corpus, encode everything, then
-    length-bucket into padding-efficient batches using the encoded
-    token counts (whitespace counts mis-size batches for subword
-    models — this is the count the serving system actually pads)."""
-    from . import bpe as B
-
-    documents = load(spark, sf_dir, "documents")
-    merges, seg = B.train_bpe(
-        documents.filter(F.col("doc_id") % 2 == 0), num_merges=12
-    )
-    sized = B.bpe_encode(documents, merges, seg).select(
-        F.col("id").alias("doc_id"),
-        F.size("tokens").cast("bigint").alias("n_tokens"),
-    )
-    return PK.length_bucketed_batches(sized, "n_tokens", "doc_id", batch_size=32)
 
 
 @register("llm_training_shards_bpe")  # rows-only (trained-model plan)
@@ -6838,35 +4856,6 @@ def forget_documents_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out
 
 
-@register("ann_index_health")  # rows-only (metrics over an approx structure)
-def ann_index_health(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The persisted-index LIFECYCLE in one plan: build on part of the
-    corpus, append the rest with the frozen quantizers, COMPACT the
-    append-accreted files back to one per cell, and report health —
-    cell balance, file count, and the ADC-vs-exact top-k agreement
-    that puts a number on the rebuild decision (llm/index.py)."""
-    import shutil
-    import tempfile
-
-    from . import index as IX
-
-    embeddings = load(spark, sf_dir, "embeddings")
-    root = tempfile.mkdtemp(prefix="annhx_")
-    try:
-        IX.build_ivfpq_index(
-            embeddings.filter(F.col("vec_id") % 2 == 0), root,
-            num_centroids=16, seed=42,
-        )
-        IX.append_to_ivfpq_index(
-            spark, root, embeddings.filter(F.col("vec_id") % 2 == 1)
-        )
-        IX.compact_ivfpq_index(spark, root)
-        out = IX.index_health(spark, root).localCheckpoint()
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
-    return out
-
-
 _STORE_AGREE = " + ".join(
     f"CASE WHEN sa.h{i} = sb.h{i} THEN 1 ELSE 0 END" for i in range(32)
 )
@@ -6943,11 +4932,9 @@ def neardup_incremental_documents(spark: SparkSession, sf_dir: str) -> DataFrame
     )
 
 
-
-
 # ---------------------------------------------------------------------------
 # round-9 session-2 families: containment, ratio-margin mining,
-# deterministic PPS sampling, CCNet bucketing, oracled KMV sketches
+# CCNet bucketing, oracled KMV sketches
 # ---------------------------------------------------------------------------
 
 @register(
@@ -6988,89 +4975,6 @@ def ngram_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register(
-    "embedding_margin_pairs",
-    oracle="""
-    WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
-               FROM embeddings WHERE vec_id IS NOT NULL),
-    cand AS (
-        SELECT a.vec_id AS vec_a, b.vec_id AS vec_b,
-               list_sum([a.v[i]*b.v[i] for i in generate_series(1, len(a.v))])
-               / (sqrt(list_sum([a.v[i]*a.v[i] for i in generate_series(1, len(a.v))]))
-                  * sqrt(list_sum([b.v[i]*b.v[i] for i in generate_series(1, len(b.v))])))
-                   AS cos
-        FROM e a JOIN e b ON a.vec_id < b.vec_id
-    ),
-    cf AS (SELECT * FROM cand WHERE cos >= 0.30),
-    directed AS (
-        SELECT vec_a AS id, vec_b AS nb, cos FROM cf
-        UNION ALL
-        SELECT vec_b AS id, vec_a AS nb, cos FROM cf
-    ),
-    ranked AS (
-        SELECT id, cos,
-               ROW_NUMBER() OVER (PARTITION BY id ORDER BY cos DESC, nb) AS rk
-        FROM directed
-    ),
-    knn AS (
-        -- fixed-order fold over the rank-sorted top-k, matching the
-        -- Spark side's aggregate(array_sort(collect_list)) exactly:
-        -- float addition is not associative, so SUM()'s unspecified
-        -- order would not be cross-engine-reproducible
-        SELECT id,
-               list_reduce(list(cos ORDER BY rk), (a, b) -> a + b) / 4.0
-                   AS mean_top
-        FROM ranked WHERE rk <= 4 GROUP BY id HAVING COUNT(*) = 4
-    )
-    SELECT vec_a, vec_b, ROUND(cos, 4) AS cosine,
-           ROUND(cos / ((x.mean_top + y.mean_top) / 2.0), 4) AS margin
-    FROM cf JOIN knn x ON x.id = vec_a JOIN knn y ON y.id = vec_b
-    WHERE cos / ((x.mean_top + y.mean_top) / 2.0) >= 1.1
-    """,
-)
-def embedding_margin_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Ratio-margin pair mining (Artetxe & Schwenk 2019): pairs scored
-    against their endpoints' neighborhood means, killing hub vectors
-    that drown absolute-cosine thresholds (llm/similarity.py)."""
-    embeddings = load(spark, sf_dir, "embeddings")
-    return S.margin_pairs_bruteforce(
-        embeddings, floor=0.30, k=4, margin_threshold=1.1
-    )
-
-
-@register(
-    "pps_systematic_sample_documents",
-    oracle=f"""
-    WITH w AS (
-        SELECT doc_id,
-               COALESCE(CAST(len({_TOKS}) AS BIGINT), 0) AS n
-        FROM documents
-    ),
-    cum AS (
-        SELECT doc_id, n,
-               SUM(n) OVER (ORDER BY doc_id
-                            ROWS UNBOUNDED PRECEDING) AS cw,
-               SUM(n) OVER () AS total
-        FROM w
-    )
-    SELECT doc_id, n AS n_tokens,
-           CAST((cw * 50) // total - ((cw - n) * 50) // total AS BIGINT)
-               AS n_hits
-    FROM cum
-    WHERE (cw * 50) // total - ((cw - n) * 50) // total > 0
-    """,
-)
-def pps_systematic_sample_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deterministic probability-proportional-to-size sample: 50
-    equally spaced pins on the corpus token line — integer-exact,
-    engine-independent, multiplicity-aware (llm/packing.py)."""
-    documents = load(spark, sf_dir, "documents")
-    docs = documents.select(
-        "doc_id", T.token_count("text").alias("_tc")
-    )
-    return PK.pps_systematic_sample(docs, tokens_col="_tc", n_picks=50)
-
-
-@register(
     "ccnet_bucket_documents",
     oracle=f"""
     WITH t AS (SELECT doc_id, lang, {_TOKS} AS toks FROM documents),
@@ -7101,8 +5005,7 @@ def ccnet_bucket_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     (Wenzek et al. 2020): rank docs by LM score within each language
     and cut into thirds — the standard pre-mixing quality
     stratification. The LM score here is the integer-exact bigram
-    typicality (`doc_bigram_typicality`'s rationale: raw corpus
-    frequencies, not log-probs, so the double ordering key is a
+    typicality (raw corpus frequencies, not log-probs, so the double ordering key is a
     single IEEE-exact division and the bucket assignment hash-matches
     cross-engine; real-perplexity ordering is available rows-only via
     lm_perplexity_documents). NTILE ties are broken by doc_id, so the
@@ -7172,30 +5075,6 @@ _KMV_SKETCH = f"""
 
 
 @register(
-    "kmv_distinct_shingles_by_source",
-    oracle=f"""
-    WITH {_KMV_SKETCH}
-    SELECT source AS "group",
-           CAST(COUNT(*) AS BIGINT) AS n_in_sketch,
-           ROUND(CASE WHEN COUNT(*) < 64 THEN CAST(COUNT(*) AS DOUBLE)
-                ELSE 63.0 * 1152921504606846976.0 / MAX(h) END, 4)
-               AS est_distinct
-    FROM minima GROUP BY source
-    """,
-)
-def kmv_distinct_shingles_by_source(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """KMV bottom-k distinct-shingle estimate per source — unlike the
-    HLL twin (`source_cardinality_hll`) this sketch is HASH-ORACLED:
-    md5 exists in both engines, so the estimate is a reproducible
-    function of the data, not an engine-internal sketch state
-    (llm/kmv.py)."""
-    documents = load(spark, sf_dir, "documents")
-    return KV.kmv_distinct_by_group(documents, k=64)
-
-
-@register(
     "kmv_source_overlap_pairs",
     oracle=f"""
     WITH {_KMV_SKETCH},
@@ -7236,7 +5115,7 @@ def kmv_source_overlap_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pairwise source-overlap ESTIMATES from merged KMV sketches —
     |A∪B|, Jaccard, and the |A∩B| HLL fundamentally cannot estimate
     (no intersection closure). Hash-oracled; accuracy floored against
-    source_overlap_exact in tests/test_r9s2_families.py (llm/kmv.py)."""
+    the exact overlap in tests/test_r9s2_families.py (llm/kmv.py)."""
     documents = load(spark, sf_dir, "documents")
     return KV.kmv_overlap_pairs(documents, k=64)
 
@@ -7286,143 +5165,6 @@ def kmv_store_incremental_estimate(
     finally:
         shutil.rmtree(root, ignore_errors=True)
     return out
-
-
-@register(
-    "streaming_kmv_source_cardinality",
-    oracle=f"""
-    WITH {_KMV_SKETCH}
-    SELECT source AS "group",
-           CAST(COUNT(*) AS BIGINT) AS n_in_sketch,
-           ROUND(CASE WHEN COUNT(*) < 64 THEN CAST(COUNT(*) AS DOUBLE)
-                ELSE 63.0 * 1152921504606846976.0 / MAX(h) END, 4)
-               AS est_distinct
-    FROM minima GROUP BY source
-    """,
-)
-def streaming_kmv_source_cardinality(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """The STREAMING twin of the KMV store lifecycle
-    (streaming/incremental.stream_ingest_with_kmv): the corpus arrives
-    through the ingest gate, each batch folds its per-source bottom-k
-    into the persisted sketch store inside the batch commit, and the
-    estimates are served off the store. Exact bottom-k merge means the
-    stored sketch equals the one-shot corpus sketch bit-for-bit, so
-    the streaming result shares the batch DuckDB oracle — and replay
-    safety needs NO bookkeeping (idempotent minima; multi-batch and
-    crash-replay interleavings pinned in
-    tests/test_streaming_incremental.py::TestKmvIngest). Staged source
-    files are process-shared scaffolding; the gate itself (store
-    create, stream round-trip, sketch + warehouse appends, serve) runs
-    every invocation."""
-    import os as _os
-    import shutil
-    import tempfile
-
-    from ..streaming.incremental import stream_ingest_with_kmv
-
-    documents = load(spark, sf_dir, "documents")
-
-    def build(memo_root: str) -> None:
-        import glob as _glob
-
-        src = _os.path.join(memo_root, "incoming")
-        _os.makedirs(src)
-        staging = _os.path.join(memo_root, "staging")
-        documents.repartition(
-            max(spark.sparkContext.defaultParallelism, 4)
-        ).write.mode("overwrite").parquet(staging)
-        for i, part in enumerate(
-            _glob.glob(_os.path.join(staging, "part-*.parquet"))
-        ):
-            shutil.copy(part, _os.path.join(src, f"b{i}.parquet"))
-
-    src = _os.path.join(
-        _memo_scaffold(f"docstage:{sf_dir}", build), "incoming"
-    )
-    root = tempfile.mkdtemp(prefix="kmv_gate_")
-    try:
-        store = _os.path.join(root, "store")
-        KV.create_kmv_store(spark, store, k=64, shingle_k=3)
-        q = stream_ingest_with_kmv(
-            spark,
-            src,
-            documents.schema,
-            _os.path.join(root, "wh"),
-            store,
-            _os.path.join(root, "ckpt"),
-        )
-        q.awaitTermination()
-        return KV.kmv_store_estimates(spark, store).localCheckpoint()
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
-
-
-def _bootstrap_oracle() -> str:
-    from .bootstrap import POISSON1_CUM
-
-    w_expr = " + ".join(
-        f"(CASE WHEN u > {t!r} THEN 1 ELSE 0 END)" for t in POISSON1_CUM
-    )
-    return f"""
-    WITH d AS (SELECT doc_id, source, CAST(len({_TOKS}) AS BIGINT) AS n
-               FROM documents
-               WHERE source IS NOT NULL AND doc_id IS NOT NULL),
-    rep AS (
-        SELECT d.*, b,
-               CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR) || ':' ||
-                                        CAST(b AS VARCHAR)), 1, 15))
-                    AS BIGINT) / 1152921504606846976.0 AS u
-        FROM d, LATERAL unnest(generate_series(0, 31)) AS t(b)
-    ),
-    w AS (SELECT source, b, n, {w_expr} AS w FROM rep),
-    means AS (
-        SELECT source, b,
-               CAST(SUM(w * n) AS DOUBLE) / SUM(w) AS m
-        FROM w GROUP BY source, b
-        HAVING SUM(w) > 0
-    ),
-    ranked AS (
-        SELECT source AS src, m,
-               ROW_NUMBER() OVER (PARTITION BY source ORDER BY m, b) AS rk
-        FROM means
-    ),
-    base AS (
-        SELECT source, CAST(SUM(n) AS DOUBLE) / COUNT(*) AS mean_value
-        FROM d GROUP BY source
-    )
-    SELECT source AS "group", ROUND(mean_value, 4) AS mean_value,
-           ROUND(MAX(CASE WHEN rk = 2 THEN m END), 4) AS ci_lo,
-           ROUND(MAX(CASE WHEN rk = 31 THEN m END), 4) AS ci_hi
-    FROM base JOIN ranked ON src = source
-    GROUP BY source, mean_value
-    """
-
-
-@register("bootstrap_ci_tokens_by_source", oracle=_bootstrap_oracle())
-def bootstrap_ci_tokens_by_source(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Poisson-bootstrap confidence interval for each source's mean
-    token count (llm/bootstrap.py — the Chamandy et al. 2012
-    map-reduce bootstrap): 32 resample multiplicities per row from
-    md5-derived uniforms through literal Poisson(1) CDF thresholds,
-    replicate means as single integer/integer IEEE divisions, ranks
-    2/31 as the ≈93.75% order-statistic interval. Fully hash-oracled —
-    a BOOTSTRAP the driver gate can hash, because no RNG and no libm
-    run at query time in either engine. Coverage behavior pinned in
-    tests/test_r9s2_families.py (interval brackets the mean; width
-    shrinks with group size)."""
-    documents = load(spark, sf_dir, "documents")
-    from . import bootstrap as BS
-
-    docs = documents.select(
-        "doc_id", "source", T.token_count("text").alias("_tc")
-    )
-    return BS.bootstrap_ci_by_group(
-        docs, group_col="source", value_col="_tc", n_replicates=32
-    )
 
 
 def _margin_ann_md5_oracle(
@@ -7530,8 +5272,7 @@ def _margin_ann_md5_oracle(
 
 @register("embedding_margin_pairs_ann", oracle=_margin_ann_md5_oracle())
 def embedding_margin_pairs_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Scale path for embedding_margin_pairs: identical margin scoring
-    over the IVF k-NN graph (llm/similarity.py — threshold-LSH is the
+    """Ratio-margin pair mining over the IVF k-NN graph (llm/similarity.py — threshold-LSH is the
     wrong candidate source at low floors; see margin_pairs_ann) —
     HASH-ORACLED (round 12): the kNN graph's cells come from md5-int
     Lloyd (dynamic cell count replicated as a scalar subquery), edges
@@ -7583,58 +5324,6 @@ _CHI2_ORACLE = f"""
     """
 
 
-@register("chi_square_source_drift", oracle=_CHI2_ORACLE)
-def chi_square_source_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Pearson two-sample χ² per source between the even-id half
-    (reference snapshot) and the odd-id half (current snapshot) of the
-    corpus token mass — the inferential companion to the exact-TV
-    drift report (token_drift_by_source measures the SIZE of the
-    shift; the χ² contribution measures how IMPROBABLE it is under
-    no-drift, which is what an alerting threshold wants). Each
-    contribution is (o−e)²/e summed over the two snapshots with
-    e = n_snapshot·rowtotal/N — integer observed counts, each expected
-    value one IEEE multiply-divide, each contribution a fixed-order
-    expression — so the statistic hash-matches the oracle with no
-    tolerance games. One corpus scan (conditional sums), metadata-
-    sized contingency math."""
-    documents = load(spark, sf_dir, "documents")
-    halves = (
-        documents.where(F.col("source").isNotNull())
-        .groupBy("source")
-        .agg(
-            F.sum(
-                F.when(F.col("doc_id") % 2 == 0, T.token_count("text"))
-                .otherwise(0)
-            ).cast("bigint").alias("o_ref"),
-            F.sum(
-                F.when(F.col("doc_id") % 2 == 1, T.token_count("text"))
-                .otherwise(0)
-            ).cast("bigint").alias("o_cur"),
-        )
-    )
-    tot = halves.agg(
-        F.sum("o_ref").cast("bigint").alias("n_ref"),
-        F.sum("o_cur").cast("bigint").alias("n_cur"),
-    ).withColumn("_k", F.lit(1))
-    row_tot = F.col("o_ref") + F.col("o_cur")
-    n = F.col("n_ref") + F.col("n_cur")
-    e_ref = F.col("n_ref").cast("double") * row_tot / n
-    e_cur = F.col("n_cur").cast("double") * row_tot / n
-    chi2 = (F.col("o_ref") - e_ref) * (F.col("o_ref") - e_ref) / e_ref + (
-        F.col("o_cur") - e_cur
-    ) * (F.col("o_cur") - e_cur) / e_cur
-    return (
-        halves.withColumn("_k", F.lit(1))
-        .join(F.broadcast(tot), "_k")
-        .select(
-            "source",
-            "o_ref",
-            "o_cur",
-            F.round(chi2, 6).alias("chi2_contrib"),
-        )
-    )
-
-
 #: the blocklist scan oracle — shared verbatim by the batch query and
 #: its streaming twin (per-doc scan rows accumulated across batches
 #: must equal the one-shot scan bit-for-bit)
@@ -7682,67 +5371,6 @@ def blocklist_scan_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     phrases = BL.top_trigram_phrases(documents, n=8)
     return BL.scan_blocklist(documents, phrases).select(
         F.col("id").alias("doc_id"), "n_hits", "n_phrases_hit"
-    )
-
-
-@register(
-    "temperature_mixture_weights",
-    oracle=f"""
-    WITH per_source AS (
-        SELECT source, CAST(SUM(len({_TOKS})) AS BIGINT) AS n_tokens
-        FROM documents WHERE source IS NOT NULL GROUP BY source
-    ),
-    scaled AS (SELECT source, n_tokens, sqrt(n_tokens) AS s
-               FROM per_source),
-    -- normalization via a FIXED-ORDER fold (source order): a plain
-    -- SUM over doubles has partition/engine-dependent addition order
-    z AS (
-        SELECT list_reduce(list(s ORDER BY source), (a, b) -> a + b) AS z
-        FROM scaled
-    )
-    SELECT source, n_tokens,
-           ROUND(s / z, 6) AS temp_weight,
-           CAST(FLOOR(s * 1000000.0 / z) AS BIGINT) AS budget_ppm
-    FROM scaled, z
-    """,
-)
-def temperature_mixture_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Temperature-scaled sampling weights at τ = 2 (Conneau &
-    Lample's multilingual recipe, XLM/XLM-R: p_s ∝ n_s^(1/τ) — flatten
-    the natural distribution toward low-resource sources without
-    going fully uniform). τ = 2 is the hash-oracle-able temperature:
-    x^(1/2) is IEEE-correctly-rounded sqrt (unlike pow/exp, which is
-    what keeps UniMax's general-τ twin rows-only), and the
-    normalization constant folds the 20 per-source sqrts in FIXED
-    source order — aggregate(array_sort(collect_list)) here,
-    list_reduce(list(... ORDER BY source)) in the oracle — so weight
-    and ppm budget hash-match cross-engine. The per-source relation is
-    metadata-sized; one corpus scan."""
-    documents = load(spark, sf_dir, "documents")
-    per_source = (
-        documents.where(F.col("source").isNotNull())
-        .groupBy("source")
-        .agg(F.sum(F.size(T.tokens("text"))).cast("bigint").alias("n_tokens"))
-    )
-    scaled = per_source.withColumn("s", F.sqrt(F.col("n_tokens")))
-    z = scaled.agg(
-        F.aggregate(
-            F.array_sort(F.collect_list(F.struct("source", "s"))),
-            F.lit(0.0),
-            lambda acc, x: acc + x["s"],
-        ).alias("z")
-    ).withColumn("_k", F.lit(1))
-    return (
-        scaled.withColumn("_k", F.lit(1))
-        .join(F.broadcast(z), "_k")
-        .select(
-            "source",
-            "n_tokens",
-            F.round(F.col("s") / F.col("z"), 6).alias("temp_weight"),
-            F.floor(F.col("s") * F.lit(1000000.0) / F.col("z"))
-            .cast("bigint")
-            .alias("budget_ppm"),
-        )
     )
 
 
@@ -7966,31 +5594,6 @@ def llm_corpus_prep_v5(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register("unigram_train_pieces")  # rows-only (trained-model plan, libm log)
-def unigram_train_pieces(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The SECOND tokenizer family: a SentencePiece-style unigram LM
-    (Kudo 2018) trained by hard EM — seed every substring, segment the
-    distinct-word table by Viterbi under current scores (one Arrow
-    pass per E-step), renormalize, prune lowest-count multi-char
-    pieces, repeat to the target vocabulary (llm/unigram.py; BPE grows
-    bottom-up, this prunes top-down — pipelines benchmark both).
-    Returns (rank, piece, piece_len) ordered by final count then
-    piece. Rows-only: scores are libm logs; determinism, closure,
-    round-trip and the learns-the-repeated-piece case are pinned in
-    tests/test_unigram.py."""
-    from . import unigram as UG
-
-    documents = load(spark, sf_dir, "documents")
-    scores = UG.train_unigram(documents, vocab_size=192)
-    rows = sorted(scores.items(), key=lambda kv: (-kv[1], kv[0]))
-    data = [
-        (i + 1, p, len(p)) for i, (p, _s) in enumerate(rows)
-    ]
-    return spark.createDataFrame(
-        data, "rank int, piece string, piece_len int"
-    )
-
-
 @register("unigram_fertility_by_source")  # rows-only (trained-model plan)
 def unigram_fertility_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     """bpe_fertility_by_source's unigram twin: train the unigram LM on
@@ -8021,51 +5624,6 @@ def unigram_fertility_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
             * F.lit(1000000.0)
             / F.sum("n_words").cast("double")
         ).cast("bigint").alias("fertility_micro"),
-    )
-
-
-@register("quality_tier_classifier_gd")  # rows-only (libm exp in softmax)
-def quality_tier_classifier_gd(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Iterative in-engine training: a 3-class softmax classifier fit
-    by 30 distributed full-batch gradient steps (llm/classifier.py),
-    distilling the corpus quality-margin TERCILES (low/mid/high tier)
-    into the four cheap quality features — the multiclass sibling of
-    quality_model_distilled's closed-form ridge, exercising the
-    capability ridge cannot (no closed form for softmax). The target
-    is linearly separable by construction (terciles of a linear score
-    are two parallel hyperplanes), so convergence is verifiable:
-    tests/test_classifier.py pins weights against an independent numpy
-    replica and requires >= 95% tier agreement here. Returns
-    (doc_id, tier, pred_tier, agree). The global ntile(3) label window
-    is gate-scale; at corpus scale the label comes from the two-phase
-    binned rank (budget_select's shape)."""
-    from . import classifier as CL
-    from . import quality as Q
-
-    documents = load(spark, sf_dir, "documents")
-    feats = Q.quality_features("text")
-    margin = Q.linear_margin()
-    base = (
-        documents.filter(T.token_count("text") >= 1)
-        .select(
-            "doc_id",
-            *[c.alias(name) for name, c in feats.items()],
-            margin.alias("_margin"),
-        )
-    )
-    w = SparkWindow.orderBy(F.asc("_margin"), F.asc("doc_id"))
-    labeled = base.withColumn(
-        "tier", (F.ntile(3).over(w) - 1).cast("int")
-    ).localCheckpoint(eager=True)
-    feature_cols = list(feats)
-    model = CL.softmax_train(labeled, feature_cols, "tier", n_classes=3)
-    return CL.softmax_predict(
-        labeled, model, feature_cols, pred_col="pred_tier"
-    ).select(
-        "doc_id",
-        "tier",
-        "pred_tier",
-        (F.col("tier") == F.col("pred_tier")).alias("agree"),
     )
 
 
@@ -8166,7 +5724,7 @@ def video_keyframe_neardup_pairs(
     planes are pinned in tests/test_video.py; rows-only because the
     hash is numpy-side. Twin offset 1_850_000_000 = 50*37*10^6 keeps
     original and twin on identical corruption schedules (10^9 ≡ 1
-    mod 37 would diverge — see video_all_frame_neardup_pairs)."""
+    mod 37 would diverge)."""
     documents = load(spark, sf_dir, "documents")
     from . import video as V
 
@@ -8277,45 +5835,6 @@ def video_delta_decode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register("video_all_frame_neardup_pairs")  # rows-only: phash = numpy
-def video_all_frame_neardup_pairs(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Video near-dup over ALL decodable frames, not just keyframes —
-    the capability keyframe-only scoring cannot deliver on an
-    H.264-class corpus (1-5%% keyframes): clips that differ ONLY in
-    predicted-frame content hash apart here and pair (wrongly) under
-    the keyframe family — the distinguishing contract pinned in
-    tests/test_video_delta.py. Corpus: delta-coded clips, every 7th
-    doc a byte-identical twin, the usual container/chain corruption
-    schedules. One Arrow pass decodes + hashes every reconstructable
-    frame; pairs ride the SAME star-capped 4-band hamming join;
-    min_match_frac=1 keeps full-clip duplicates. Rows-only because
-    the hash is numpy-side. Twin offset 1_850_000_000 is a multiple
-    of BOTH corruption moduli (50*37=1850), so original and twin
-    land on identical container/chain schedules — 10^9 ≡ 1 (mod 37)
-    would silently break the byte-identical-twin contract for any
-    doc_id ≥ 37*... (first divergence at the first doc ≡ 36 mod 37)."""
-    documents = load(spark, sf_dir, "documents")
-    from . import video as V
-
-    target = spark.sparkContext.defaultParallelism
-    if documents.rdd.getNumPartitions() < target:
-        documents = documents.repartition(target)
-    # twin rows derived, not re-decoded — byte-identical twins (the
-    # 1850-multiple offset argument above) hash to the originals'
-    # rows with the id shifted; see video_keyframe_neardup_pairs
-    fh = V.video_frame_hashes(
-        V.documents_as_delta_mp4(documents)
-    ).localCheckpoint(eager=True)
-    fh_twins = fh.filter(F.col("media_id") % 7 == 0).withColumn(
-        "media_id", F.col("media_id") + F.lit(1_850_000_000)
-    )
-    return V.video_near_dup_pairs(
-        fh.unionByName(fh_twins), max_hamming=3
-    )
-
-
 @register("streaming_blocklist_scan", oracle=_BLOCKLIST_ORACLE)
 def streaming_blocklist_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The blocklist scan AT ADMISSION (streaming/scan.py): the
@@ -8395,8 +5914,7 @@ def streaming_chi_square_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     under run-id partitions (integer sums — replay replaces, no other
     bookkeeping), and the serve path reproduces the batch query's
     fixed-order contingency expression over the summed counts. The
-    streamed statistic must hash-match the one-shot oracle, shared
-    verbatim with chi_square_source_drift."""
+    streamed statistic must hash-match the one-shot oracle."""
     import os as _os
     import shutil
     import tempfile
@@ -8660,73 +6178,3 @@ def streaming_unified_admission(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     finally:
         shutil.rmtree(root, ignore_errors=True)
-
-
-#: queries intentionally registered WITHOUT an oracle (rows-only check);
-#: includes relational approx-sketch queries (plans/relational.py) whose
-#: estimates are engine-specific by design
-ROWS_ONLY = {
-    # round-10: minhash_near_dup_pairs, near_dup_clusters,
-    # source_overlap_minhash, and simhash_near_dup_pairs left this
-    # set — md5-mode signatures made the LSH families hash-oracled
-    # round-11: ann_cosine_topk_lsh + embedding_similar_pairs_lsh left
-    # this set — md5-derived ±1 planes over fixed-point coordinates
-    # made the float-LSH signatures hash-oracled
-    # round-12: ann_cosine_topk_ivf, _pq, and _ivfpq left this set —
-    # md5-seeded integer k-means (cells AND codebooks) made the
-    # trained quantizers hash-oracled; OPQ stays (eigh is libm)
-    "ann_cosine_topk_opq",
-    "ann_index_health",
-    "bpe_train_merges",
-    "bpe_encode_documents",
-    "bpe_fertility_by_source",
-    "bpe_bucketed_batches",
-    # round-11: neardup_incremental_documents left this set — the
-    # md5-mode store family hash-oracled the persisted probe path
-    "semantic_dedup_cells",
-    "lm_perplexity_documents",
-    "embedding_pca_whiten_stats",
-    "dsir_resample_documents",
-    "source_cardinality_hll",
-    # round-11: duplicate_spans_lsh_scoped left this set — md5-mode
-    # candidates made the scoped span extraction hash-oracled
-    # round-12: its xx-mode production twin is the BENCHED row (r11
-    # verdict #1 — the md5 digest tax breached an xx-certified floor);
-    # rows-only because xxhash64 is JVM-side only, correctness covered
-    # by the structurally-identical md5 twin's hash oracle
-    "duplicate_spans_lsh_prod",
-    "user_value_trends_grouped_map",
-    "approx_distinct_users",
-    "hll_sketch_union_users",
-    "approx_quantiles_prices",
-    "heavy_hitter_tokens",
-    # round-8 additions: perceptual hashes and fingerprints are
-    # numpy-side, the store/cluster/shard lifecycles are trained or
-    # fs-bound artifacts — each carries planted-twin recall,
-    # incremental-equals-recompute, or byte-identity tests instead
-    "multimodal_image_neardup_pairs",
-    "multimodal_audio_neardup_pairs",
-    "neardup_store_cluster_survivors",
-    "llm_training_shards_bpe",
-    "streaming_media_neardup_ingest",
-    "quality_model_distilled",
-    # round-9: DoReMi excess-loss reweighting — ln() is libm;
-    # python-replica-pinned instead
-    "doremi_domain_weights",
-    # round-9 session 2: softmax training/inference runs libm exp();
-    # weights numpy-replica-pinned + agreement floor instead
-    "quality_tier_classifier_gd",
-    # round-9 session 2: unigram-LM tokenizer — trained-model plans
-    # (libm log scores); determinism/closure/round-trip pinned instead
-    "unigram_train_pieces",
-    "unigram_fertility_by_source",
-    # round-9 session 2: IVF k-NN candidate graph (trained centroids,
-    # recall < 1 by design); recall floored vs the oracled exact twin
-    # round-10: video keyframe dHash is numpy-side (like the image and
-    # audio twins); twin recall at hamming 0 pinned in tests/test_video.py
-    "video_keyframe_neardup_pairs",
-    # round-11: all-frame (delta-decoded) near-dup — numpy dHash like
-    # its keyframe twin; twin recall + the keyframe-vs-all-frame
-    # distinguishing contract pinned in tests/test_video_delta.py
-    "video_all_frame_neardup_pairs",
-}

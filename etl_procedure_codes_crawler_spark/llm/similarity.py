@@ -44,51 +44,6 @@ def with_norm(df: DataFrame, vec_col: str = "embedding") -> DataFrame:
     return df.withColumn("_norm", _norm(F.col(vec_col)))
 
 
-def cosine_topk_bruteforce(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int = 5,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-) -> DataFrame:
-    """Exact top-k cosine neighbors for each query vector.
-
-    The query side is broadcast (it is the small side by construction);
-    the corpus streams through map tasks — no shuffle of the corpus.
-    Ranking uses (cosine DESC, neighbor_id) so ties are deterministic.
-    """
-    q = with_norm(
-        queries.select(
-            F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv")
-        ),
-        "qv",
-    ).withColumnRenamed("_norm", "qn")
-    c = with_norm(
-        corpus.select(
-            F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cv")
-        ),
-        "cv",
-    ).withColumnRenamed("_norm", "cn")
-    pairs = (
-        c.join(F.broadcast(q), F.col("query_id") != F.col("neighbor_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            (_dot(F.col("qv"), F.col("cv")) / (F.col("qn") * F.col("cn"))).alias(
-                "cosine"
-            ),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cosine"), F.asc("neighbor_id")
-    )
-    return (
-        pairs.withColumn("rank", F.row_number().over(w).cast("bigint"))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", F.round("cosine", 4).alias("cosine"), "rank")
-    )
-
-
 def _pairs_above(
     df: DataFrame,
     threshold: float,
@@ -133,48 +88,6 @@ def similar_pairs_bruteforce(
     return _pairs_above(df, threshold, vec_col, id_col).select(
         "vec_a", "vec_b", F.round("cosine", 4).alias("cosine")
     )
-
-
-def margin_pairs_bruteforce(
-    df: DataFrame,
-    floor: float = 0.30,
-    k: int = 4,
-    margin_threshold: float = 1.1,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-) -> DataFrame:
-    """Ratio-margin neighbor mining (Artetxe & Schwenk 2019, "Margin-
-    based Parallel Corpus Mining with Multilingual Sentence
-    Embeddings"): a pair counts as a true match not when its cosine is
-    globally high but when it is high RELATIVE to what each endpoint's
-    neighborhood scores — margin(x, y) = cos(x, y) / ((mean_k(x) +
-    mean_k(y)) / 2), where mean_k(v) is the mean cosine of v's k
-    nearest candidates. This kills hub vectors (high cosine with
-    EVERYTHING — their margins hover near 1) that drown absolute-
-    threshold mining, and is the standard bitext/near-dup pair scorer
-    at corpus scale.
-
-    Neighborhoods are defined over the candidate relation itself
-    (pairs at cosine >= ``floor``); endpoints with fewer than ``k``
-    candidate neighbors are dropped — a margin against an undersized
-    neighborhood overstates the pair.  At 100 TB the same scoring runs
-    off the LSH/IVF candidate stream instead of the O(n²) scan; the
-    margin math is identical (it only consumes the pair relation).
-
-    Determinism contract (the reason this is hash-oracle-able): the
-    mean is a FIXED-ORDER fold over the rank-sorted top-k cosines —
-    float addition is not associative, so a groupBy SUM's partition-
-    dependent order would not reproduce across engines, but
-    ``aggregate(array_sort(collect_list(struct(rank, cos))))`` folds
-    in rank order everywhere.
-    """
-    # checkpoint: the O(n²) candidate scan would otherwise re-execute
-    # once per scorer consumer (no exchange under the NLJ to reuse);
-    # surfaced pairs are floor-pruned and small
-    pairs = _pairs_above(df, floor, vec_col, id_col).localCheckpoint(
-        eager=True
-    )
-    return margin_score_pairs(pairs, k=k, margin_threshold=margin_threshold)
 
 
 def margin_score_pairs(
@@ -240,82 +153,6 @@ def margin_score_pairs(
     )
 
 
-def similar_pairs_lsh(
-    df: DataFrame,
-    threshold: float,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    num_tables: int = 8,
-    planes_per_table: int = 5,
-    dim: int = 64,
-    seed: int = 42,
-    plane_mode: str = "gaussian",
-) -> DataFrame:
-    """Embedding near-dup pair mining at scale: LSH buckets generate
-    candidates (self-join within (table, bucket) — quadratic only
-    inside a bucket), exact cosine verifies. The scale path for
-    :func:`similar_pairs_bruteforce`'s O(n²) scan; recall < 1 by
-    design, tunable via num_tables. ``plane_mode='md5'`` swaps the
-    Gaussian planes for md5-derived ±1 planes over fixed-point
-    coordinates — integer-exact signatures a SQL oracle replays
-    (hash-oracled); 'gaussian' stays the float default."""
-    planes, signature = _resolve_planes(
-        plane_mode, num_tables, planes_per_table, dim, seed
-    )
-    b = lsh_table_buckets(
-        df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v")),
-        "id",
-        "v",
-        planes,
-        num_tables,
-        planes_per_table,
-        signature=signature,
-    )
-    # cache once: the self-join below consumes BOTH sides of this
-    # frame, and Spark plans the Arrow signature pass separately per
-    # side (no exchange reuse across the join's aliases) — the
-    # bucketing UDF ran twice over the corpus. persist() dedupes the
-    # Python work while staying RECOMPUTABLE — unlike localCheckpoint,
-    # a lost executor recomputes the blocks from lineage instead of
-    # failing the query (nothing here rewrites the input files, so
-    # cutting lineage buys nothing; contrast forget.py's swaps).
-    bn = with_norm(b, "v").persist()
-    lhs = bn.select(
-        "table",
-        "bucket",
-        F.col("id").alias("vec_a"),
-        F.col("v").alias("va"),
-        F.col("_norm").alias("na"),
-    )
-    rhs = bn.select(
-        "table",
-        "bucket",
-        F.col("id").alias("vec_b"),
-        F.col("v").alias("vb"),
-        F.col("_norm").alias("nb"),
-    )
-    # cosine per COLLISION row, then groupBy-max dedup: the multi-table
-    # dedup shuffles (vec_a, vec_b, cosine) — 24 bytes/row — instead of
-    # two 64-dim vectors; duplicates carry identical cosines so max()
-    # is exact (same rationale as cosine_topk_lsh). The threshold also
-    # prunes BEFORE the dedup shuffle, shrinking it further.
-    return (
-        lhs.join(rhs, ["table", "bucket"])
-        .filter(F.col("vec_a") < F.col("vec_b"))
-        .select(
-            "vec_a",
-            "vec_b",
-            (_dot(F.col("va"), F.col("vb")) / (F.col("na") * F.col("nb"))).alias(
-                "cosine"
-            ),
-        )
-        .filter(F.col("cosine") >= threshold)
-        .groupBy("vec_a", "vec_b")
-        .agg(F.max("cosine").alias("cosine"))
-        .select("vec_a", "vec_b", F.round("cosine", 4).alias("cosine"))
-    )
-
-
 def margin_pairs_ann(
     df: DataFrame,
     floor: float = 0.30,
@@ -331,8 +168,8 @@ def margin_pairs_ann(
     quant_mode: str = "float",
     max_iter: int = 5,
 ) -> DataFrame:
-    """The scale path for :func:`margin_pairs_bruteforce`: identical
-    margin scoring over an IVF k-NN GRAPH instead of the O(n²) scan —
+    """Ratio-margin pair mining (:func:`margin_score_pairs`) over an
+    IVF k-NN GRAPH instead of the O(n²) candidate scan —
     the production shape (Artetxe & Schwenk mine margins over FAISS
     neighborhoods, not exact search). Threshold-LSH is the wrong
     candidate source here: at a low candidate floor like 0.30 the
@@ -1128,36 +965,14 @@ def _md5_bucket_signatures(
     return buckets
 
 
-def lsh_bucket_column(vec_col, planes: list[list[float]]):
-    """Sign-pattern bucket id: bit i = 1 iff dot(v, plane_i) > 0.
-
-    The dot products are literal-weighted sums over the array column —
-    constant-folded plane values, JVM execution, no UDF."""
-    bucket = F.lit(0).cast("bigint")
-    for i, plane in enumerate(planes):
-        dot = F.aggregate(
-            F.zip_with(
-                vec_col,
-                F.array(*[F.lit(w) for w in plane]),
-                lambda x, w: x.cast("double") * w,
-            ),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-        bucket = bucket + F.when(dot > 0, F.lit(2**i).cast("bigint")).otherwise(
-            F.lit(0).cast("bigint")
-        )
-    return bucket
-
-
 def _all_bucket_signatures(
     planes: list[list[float]], num_tables: int, planes_per_table: int
 ):
     """Vectorized all-tables signature column: one Arrow-batched numpy
     matmul computes every table's bucket per vector.
 
-    The pure-expression alternative (:func:`lsh_bucket_column` per
-    table) is JVM-side but codegens num_tables × planes_per_table
+    A pure-expression alternative (one column expression per table)
+    would be JVM-side but codegens num_tables × planes_per_table
     chained lambda folds — measured ~7s of fixed plan/compile cost at
     40 planes regardless of data size. One (n,dim)@(dim,planes) matmul
     per batch is the right shape at every scale; this is the sanctioned

@@ -7,8 +7,7 @@ motion-JPEG videos — real baseline JPEG frames (llm/jpeg.py, a full
 SOF0 decoder/encoder) carried as video samples inside a valid ISO
 BMFF container with a ``'jpeg'`` VisualSampleEntry — and the decode
 stage is DRIVEN BY THE SAMPLE TABLE: parse the container, take the
-keyframe manifest (sample number, byte offset, byte length — the
-exact rows multimodal.mp4_keyframe_manifest ships to a decode fleet),
+keyframe manifest (sample number, byte offset, byte length),
 seek into the mdat, decode each keyframe with the real JPEG decoder,
 and perceptual-hash the pixels into the SAME hamming band-join
 machinery text SimHash and image dHash ride (dedup.hamming_band_pairs
@@ -574,39 +573,11 @@ CLIP_IDENTITY_SCHEMA = StructType(
 )
 
 
-def clip_identity_hashes(media: DataFrame, method: str = "dhash") -> DataFrame:
-    """One row per clip: (media_id, phash, content_sha, decode_error)
-    — the unified gate's video identity in ONE Arrow pass (round 11:
-    the first cut synthesized clips into a checkpoint, then joined a
-    payload-sha pass against a keyframe-decode aggregate — three
-    extra batch stages for what a single pipelined pass computes).
-
-    - content_sha = sha256 of the full payload (exact payload match
-      implies exact decoded content);
-    - phash = the FIRST keyframe's perceptual hash;
-    - identity exists ONLY if the container parses and EVERY keyframe
-      decodes — otherwise phash/content_sha are NULL and decode_error
-      carries the reason (the no-perceptual-identity admission path).
-    """
-    if method not in _PHASH_METHODS:
-        raise ValueError(
-            f"unknown method {method!r}; pick from {sorted(_PHASH_METHODS)}"
-        )
-    hasher = _PHASH_METHODS[method]
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        return _clip_identity_batches(batches, hasher)
-
-    return media.select("media_id", "payload").mapInPandas(
-        run, schema=CLIP_IDENTITY_SCHEMA
-    )
-
-
 def _clip_identity_batches(
     batches: Iterator[pd.DataFrame], hasher
 ) -> Iterator[pd.DataFrame]:
-    """The clip-identity pass as a plain batch generator — shared by
-    clip_identity_hashes and the fused clip_identity_from_documents."""
+    """The clip-identity pass as a plain batch generator, run fused
+    behind the synthesis pass by clip_identity_from_documents."""
     import hashlib
 
     from .jpeg import decode_jpeg
@@ -666,11 +637,9 @@ def clip_identity_from_documents(
     """FUSED synthesis + identity (round 13, guide §4.1): composing
     :func:`_mjpeg_synth_batches` and :func:`_clip_identity_batches`
     inside ONE mapInPandas keeps the clip payload bytes from ever
-    crossing the Python↔JVM boundary — the two-operator form
-    (``clip_identity_hashes(documents_as_mjpeg_mp4(df))``) pipelines
-    in one Spark stage but still Arrow-serializes every payload out
-    of the synth pass and back into the identity pass. Same row
-    functions, so the output is identical row-for-row."""
+    crossing the Python↔JVM boundary — a two-operator form would
+    pipeline in one Spark stage but still Arrow-serialize every
+    payload out of the synth pass and back into the identity pass."""
     if method not in _PHASH_METHODS:
         raise ValueError(
             f"unknown method {method!r}; pick from {sorted(_PHASH_METHODS)}"

@@ -323,31 +323,6 @@ def anti_join_customers_without_orders(spark: SparkSession, sf_dir: str) -> Data
     ).select("c_custkey", "c_name")
 
 
-@register(
-    "semi_join_active_customers_by_nation",
-    oracle="""
-    SELECT n_name, COUNT(*) AS n_customers
-    FROM customer c JOIN nation ON c_nationkey = n_nationkey
-    WHERE EXISTS (SELECT 1 FROM orders o WHERE o.o_custkey = c.c_custkey)
-    GROUP BY n_name
-    """,
-)
-def semi_join_active_customers_by_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    customer = load(spark, sf_dir, "customer")
-    nation = load(spark, sf_dir, "nation")
-    order_keys = load(spark, sf_dir, "orders").select("o_custkey").distinct()
-    return (
-        customer.join(
-            F.broadcast(order_keys),
-            customer.c_custkey == order_keys.o_custkey,
-            "left_semi",
-        )
-        .join(F.broadcast(nation), customer.c_nationkey == nation.n_nationkey)
-        .groupBy("n_name")
-        .agg(F.count(F.lit(1)).alias("n_customers"))
-    )
-
-
 # ---------------------------------------------------------------------------
 # Cleaning P1-P3 (reference: procedure_code.py:721-723) on testdata
 # ---------------------------------------------------------------------------
@@ -457,154 +432,6 @@ def grouped_topk_orders_per_customer(spark: SparkSession, sf_dir: str) -> DataFr
     ).select("o_custkey", "o_orderkey", "o_totalprice", "rn")
 
 
-@register(
-    "window_order_gap_days",
-    oracle="""
-    SELECT o_custkey, o_orderkey,
-           CAST(DATE_DIFF('day', prev_date, o_orderdate) AS BIGINT) AS gap_days
-    FROM (
-        SELECT o_custkey, o_orderkey, o_orderdate,
-               LAG(o_orderdate) OVER (
-                   PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey
-               ) AS prev_date
-        FROM orders
-    ) WHERE prev_date IS NOT NULL
-    """,
-)
-def window_order_gap_days(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = load(spark, sf_dir, "orders")
-    w = Window.partitionBy("o_custkey").orderBy("o_orderdate", "o_orderkey")
-    return (
-        orders.select(
-            "o_custkey",
-            "o_orderkey",
-            "o_orderdate",
-            F.lag("o_orderdate").over(w).alias("prev_date"),
-        )
-        .filter(F.col("prev_date").isNotNull())
-        .select(
-            "o_custkey",
-            "o_orderkey",
-            F.datediff(F.col("o_orderdate"), F.col("prev_date"))
-            .cast("bigint")
-            .alias("gap_days"),
-        )
-    )
-
-
-@register(
-    "window_function_breadth",
-    oracle="""
-    SELECT o_orderkey,
-           CAST(DENSE_RANK() OVER w AS BIGINT) AS drank,
-           CAST(NTILE(4) OVER w AS BIGINT) AS quartile,
-           LEAD(o_orderkey) OVER w AS next_key,
-           FIRST_VALUE(o_orderkey) OVER w AS first_key,
-           CAST(CUME_DIST() OVER w AS DOUBLE) AS cdist
-    FROM orders
-    WHERE o_custkey % 100 = 0
-    WINDOW w AS (PARTITION BY o_custkey
-                 ORDER BY o_totalprice DESC, o_orderkey)
-    """,
-)
-def window_function_breadth(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The rest of the window surface in one relation: dense_rank,
-    ntile, lead, first_value, cume_dist over a deterministic total
-    order (price desc, key asc breaks all ties)."""
-    orders = load(spark, sf_dir, "orders").filter(F.col("o_custkey") % 100 == 0)
-    w = Window.partitionBy("o_custkey").orderBy(
-        F.desc("o_totalprice"), F.asc("o_orderkey")
-    )
-    return orders.select(
-        "o_orderkey",
-        F.dense_rank().over(w).cast("bigint").alias("drank"),
-        F.ntile(4).over(w).cast("bigint").alias("quartile"),
-        F.lead("o_orderkey").over(w).alias("next_key"),
-        F.first("o_orderkey").over(w).alias("first_key"),
-        F.cume_dist().over(w).cast("double").alias("cdist"),
-    )
-
-
-@register(
-    "full_outer_customer_supplier_nations",
-    oracle="""
-    WITH c AS (SELECT c_nationkey AS nationkey, COUNT(*) AS n_customers
-               FROM customer GROUP BY 1),
-         s AS (SELECT s_nationkey AS nationkey, COUNT(*) AS n_suppliers
-               FROM supplier GROUP BY 1)
-    SELECT COALESCE(c.nationkey, s.nationkey) AS nationkey,
-           COALESCE(n_customers, 0) AS n_customers,
-           COALESCE(n_suppliers, 0) AS n_suppliers
-    FROM c FULL OUTER JOIN s ON c.nationkey = s.nationkey
-    """,
-)
-def full_outer_customer_supplier_nations(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Full outer join of two aggregates — both null sides must
-    survive and COALESCE to zero-counts."""
-    c = (
-        load(spark, sf_dir, "customer")
-        .groupBy(F.col("c_nationkey").alias("c_key"))
-        .agg(F.count(F.lit(1)).alias("n_customers"))
-    )
-    s = (
-        load(spark, sf_dir, "supplier")
-        .groupBy(F.col("s_nationkey").alias("s_key"))
-        .agg(F.count(F.lit(1)).alias("n_suppliers"))
-    )
-    return c.join(s, c.c_key == s.s_key, "full_outer").select(
-        F.coalesce("c_key", "s_key").alias("nationkey"),
-        F.coalesce("n_customers", F.lit(0)).alias("n_customers"),
-        F.coalesce("n_suppliers", F.lit(0)).alias("n_suppliers"),
-    )
-
-
-@register(
-    "cross_join_region_priority_grid",
-    oracle="""
-    SELECT r_name, o_orderpriority
-    FROM region CROSS JOIN (SELECT DISTINCT o_orderpriority FROM orders)
-    """,
-)
-def cross_join_region_priority_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Explicit cartesian of two small dims (the dimension-grid /
-    date-spine pattern). Only ever sane when at least one side is
-    broadcast-tiny — which is exactly how it plans here."""
-    region = load(spark, sf_dir, "region").select("r_name")
-    priorities = load(spark, sf_dir, "orders").select("o_orderpriority").distinct()
-    return region.crossJoin(F.broadcast(priorities))
-
-
-@register(
-    "levenshtein_similar_sources",
-    oracle="""
-    WITH s AS (SELECT DISTINCT source FROM documents)
-    SELECT a.source AS source_a, b.source AS source_b,
-           CAST(levenshtein(a.source, b.source) AS BIGINT) AS edit_dist
-    FROM s a JOIN s b ON a.source < b.source
-    WHERE levenshtein(a.source, b.source) <= 2
-    """,
-)
-def levenshtein_similar_sources(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Edit-distance pairing over a small distinct domain (fuzzy
-    source-name reconciliation). At scale the distinct() shrinks the
-    pair space before the quadratic comparison — never levenshtein a
-    raw fact table against itself."""
-    s = load(spark, sf_dir, "documents").select("source").distinct()
-    a = s.select(F.col("source").alias("source_a"))
-    b = s.select(F.col("source").alias("source_b"))
-    return (
-        a.join(F.broadcast(b), F.col("source_a") < F.col("source_b"))
-        .select(
-            "source_a",
-            "source_b",
-            F.levenshtein("source_a", "source_b").cast("bigint").alias("edit_dist"),
-        )
-        .filter(F.col("edit_dist") <= 2)
-    )
-
-
 # ---------------------------------------------------------------------------
 # Rollup (SURVEY §2.5 grouping sets)
 # ---------------------------------------------------------------------------
@@ -637,118 +464,6 @@ def rollup_revenue_by_flag_status(spark: SparkSession, sf_dir: str) -> DataFrame
     )
 
 
-@register(
-    "cube_order_stats",
-    oracle="""
-    SELECT COALESCE(o_orderstatus, 'ALL') AS orderstatus,
-           COALESCE(o_orderpriority, 'ALL') AS orderpriority,
-           COUNT(*) AS n_orders,
-           CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS revenue
-    FROM orders
-    GROUP BY CUBE (o_orderstatus, o_orderpriority)
-    """,
-)
-def cube_order_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """CUBE: all 2^k grouping-set combinations in one pass (Spark
-    expands to a single shuffle with grouping-id, same as rollup)."""
-    orders = load(spark, sf_dir, "orders")
-    return (
-        orders.cube("o_orderstatus", "o_orderpriority")
-        .agg(
-            F.count(F.lit(1)).alias("n_orders"),
-            F.sum(_dec("o_totalprice")).cast("double").alias("revenue"),
-        )
-        .select(
-            F.coalesce("o_orderstatus", F.lit("ALL")).alias("orderstatus"),
-            F.coalesce("o_orderpriority", F.lit("ALL")).alias("orderpriority"),
-            "n_orders",
-            "revenue",
-        )
-    )
-
-
-@register(
-    "pivot_event_counts_by_type",
-    oracle="""
-    SELECT user_id,
-           COUNT(*) FILTER (event_type = 'click')    AS click,
-           COUNT(*) FILTER (event_type = 'error')    AS error,
-           COUNT(*) FILTER (event_type = 'purchase') AS purchase,
-           COUNT(*) FILTER (event_type = 'signup')   AS signup,
-           COUNT(*) FILTER (event_type = 'view')     AS "view"
-    FROM events
-    GROUP BY user_id
-    """,
-)
-def pivot_event_counts_by_type(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Pivot with an EXPLICIT value list — at scale, never let pivot
-    run its implicit distinct-values job over 100 TB; declare the
-    domain and it's a single map-side conditional aggregation."""
-    events = load(spark, sf_dir, "events")
-    types = ["click", "error", "purchase", "signup", "view"]
-    return (
-        events.groupBy("user_id")
-        .pivot("event_type", types)
-        .agg(F.count(F.lit(1)))
-        .na.fill(0, types)
-    )
-
-
-@register(
-    "distinct_users_per_event_type",
-    oracle="""
-    SELECT event_type,
-           COUNT(DISTINCT user_id) AS n_users,
-           COUNT(*) AS n_events
-    FROM events
-    GROUP BY event_type
-    """,
-)
-def distinct_users_per_event_type(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact COUNT(DISTINCT) — Spark plans it as a two-phase expand +
-    partial distinct, no driver involvement. (The approximate HLL
-    variant is `approx_distinct_users` — rows-only, sketches differ
-    across engines by design.)"""
-    events = load(spark, sf_dir, "events")
-    return events.groupBy("event_type").agg(
-        F.count_distinct("user_id").alias("n_users"),
-        F.count(F.lit(1)).alias("n_events"),
-    )
-
-
-@register("approx_distinct_users")  # rows-only: HLL sketches are engine-specific
-def approx_distinct_users(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """approx_count_distinct (HyperLogLog++): the 100 TB path where an
-    exact distinct's expand-shuffle is too expensive; rsd=1%."""
-    events = load(spark, sf_dir, "events")
-    return events.groupBy("event_type").agg(
-        F.approx_count_distinct("user_id", rsd=0.01).alias("approx_users")
-    )
-
-
-@register("hll_sketch_union_users")  # rows-only: sketch bytes are engine-specific
-def hll_sketch_union_users(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MERGEABLE sketches — the property that matters at 100 TB:
-    per-group HLL sketches (datasketches, `hll_sketch_agg`) built in
-    one pass are re-aggregated with `hll_union_agg` WITHOUT touching
-    the raw data again. The per-type estimates and the unioned global
-    estimate come out of one scan; an exact global distinct would need
-    a second full shuffle. Accuracy vs exact is pinned in
-    tests/test_sketches.py."""
-    events = load(spark, sf_dir, "events")
-    per_type = events.groupBy("event_type").agg(
-        F.hll_sketch_agg("user_id").alias("sketch")
-    )
-    per_type_counts = per_type.select(
-        "event_type",
-        F.hll_sketch_estimate("sketch").alias("approx_users"),
-    )
-    global_count = per_type.agg(
-        F.hll_sketch_estimate(F.hll_union_agg("sketch")).alias("approx_users")
-    ).select(F.lit("_all_").alias("event_type"), "approx_users")
-    return per_type_counts.unionByName(global_count)
-
-
 @register("heavy_hitter_tokens")  # rows-only: top-k sketch estimates are engine-specific
 def heavy_hitter_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Heavy hitters via the MERGEABLE approx_top_k sketch family:
@@ -778,23 +493,8 @@ def heavy_hitter_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register("approx_quantiles_prices")  # rows-only: quantile sketches differ per engine
-def approx_quantiles_prices(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Quantile sketching (Greenwald-Khanna `percentile_approx`, 1%
-    accuracy): the scale path when an exact median's full sort is too
-    expensive. Exact counterpart in the gate: median_quantity_by_flag.
-    Accuracy vs exact percentiles is pinned in tests/test_sketches.py."""
-    li = load(spark, sf_dir, "lineitem")
-    q = F.percentile_approx(
-        "l_extendedprice", F.array(F.lit(0.5), F.lit(0.9), F.lit(0.99)), 10000
-    )
-    return li.groupBy("l_returnflag").agg(
-        q[0].alias("p50"), q[1].alias("p90"), q[2].alias("p99")
-    )
-
-
 # ---------------------------------------------------------------------------
-# Explode / lateral (SURVEY §2.7 fan-out shape) + set ops
+# Explode / lateral (SURVEY §2.7 fan-out shape)
 # ---------------------------------------------------------------------------
 
 @register(
@@ -816,323 +516,6 @@ def explode_token_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("token")
         .agg(F.count(F.lit(1)).alias("n"))
     )
-
-
-@register(
-    "explode_token_counts_salted",
-    oracle="""
-    SELECT token, COUNT(*) AS n
-    FROM (SELECT UNNEST(STRING_SPLIT(text, ' ')) AS token FROM documents)
-    WHERE token <> ''
-    GROUP BY token
-    """,
-)
-def explode_token_counts_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Same relation as ``explode_token_counts`` but through the salted
-    two-phase aggregate (operators/skew.py) — token frequencies are the
-    canonical Zipf-skewed key distribution, where at 100 TB the hot
-    tokens would pin single reducers without salting. Oracle identical
-    to the unsalted query: salting must be invisible in the result."""
-    from ..operators.skew import salted_agg
-
-    documents = load(spark, sf_dir, "documents")
-    tokens = documents.select(
-        F.explode(F.split("text", " ")).alias("token")
-    ).filter(F.col("token") != "")
-    return salted_agg(tokens, ["token"], {"n": ("count", "token")}, buckets=8)
-
-
-@register(
-    "window_trailing_90d_spend",
-    oracle="""
-    SELECT o_custkey, o_orderkey,
-           CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) OVER (
-               PARTITION BY o_custkey ORDER BY CAST(o_orderdate AS DATE)
-               RANGE BETWEEN INTERVAL 90 DAY PRECEDING AND CURRENT ROW
-           ) AS DOUBLE) AS spend_90d
-    FROM orders
-    """,
-)
-def window_trailing_90d_spend(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """RANGE frame (value-based, not row-based): trailing 90-day spend
-    per customer. Spark's rangeBetween needs a numeric ordering key, so
-    the date is ordered as unix_date (days since epoch) with the frame
-    expressed in days — the same frame DuckDB's INTERVAL 90 DAY RANGE
-    clause defines on a DATE ordering. Frames by value are tie-stable
-    (equal dates share a frame), so no tie-break column is needed."""
-    orders = load(spark, sf_dir, "orders")
-    w = (
-        Window.partitionBy("o_custkey")
-        .orderBy(F.unix_date(F.col("o_orderdate").cast("date")))
-        .rangeBetween(-90, 0)
-    )
-    return orders.select(
-        "o_custkey",
-        "o_orderkey",
-        F.sum(_dec("o_totalprice")).over(w).cast("double").alias("spend_90d"),
-    )
-
-
-@register(
-    "date_functions_breadth",
-    oracle="""
-    SELECT STRFTIME(date_trunc('month', o_orderdate), '%Y-%m-%d') AS month_start,
-           STRFTIME(last_day(o_orderdate), '%Y-%m-%d') AS month_end,
-           CAST(dayofweek(o_orderdate) + 1 AS BIGINT) AS dow,
-           STRFTIME(o_orderdate + INTERVAL 3 MONTH, '%Y-%m-%d') AS plus3m,
-           COUNT(*) AS n
-    FROM orders
-    GROUP BY 1, 2, 3, 4
-    """,
-)
-def date_functions_breadth(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Calendar-function surface: trunc, last_day, day-of-week
-    (normalized — Spark is 1-based Sunday, DuckDB 0-based), month
-    arithmetic. The shapes every date-partitioned warehouse query
-    leans on."""
-    orders = load(spark, sf_dir, "orders")
-    return (
-        orders.groupBy(
-            F.date_format(F.date_trunc("month", "o_orderdate"), "yyyy-MM-dd").alias(
-                "month_start"
-            ),
-            F.date_format(F.last_day("o_orderdate"), "yyyy-MM-dd").alias("month_end"),
-            F.dayofweek("o_orderdate").cast("bigint").alias("dow"),
-            F.date_format(F.add_months("o_orderdate", 3), "yyyy-MM-dd").alias(
-                "plus3m"
-            ),
-        )
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
-
-
-@register(
-    "grouping_id_rollup",
-    oracle="""
-    SELECT COALESCE(o_orderstatus, '(all)') AS orderstatus,
-           COALESCE(o_orderpriority, '(all)') AS orderpriority,
-           CAST(GROUPING(o_orderstatus) AS BIGINT) AS g_status,
-           CAST(GROUPING(o_orderpriority) AS BIGINT) AS g_priority,
-           COUNT(*) AS n
-    FROM orders
-    GROUP BY ROLLUP (o_orderstatus, o_orderpriority)
-    """,
-)
-def grouping_id_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """GROUPING() markers distinguish 'NULL because subtotal row' from
-    'NULL in the data' — the correct way to consume rollup output
-    (COALESCE alone conflates the two)."""
-    orders = load(spark, sf_dir, "orders")
-    return (
-        orders.rollup("o_orderstatus", "o_orderpriority")
-        .agg(
-            F.grouping("o_orderstatus").cast("bigint").alias("g_status"),
-            F.grouping("o_orderpriority").cast("bigint").alias("g_priority"),
-            F.count(F.lit(1)).alias("n"),
-        )
-        .select(
-            F.coalesce("o_orderstatus", F.lit("(all)")).alias("orderstatus"),
-            F.coalesce("o_orderpriority", F.lit("(all)")).alias("orderpriority"),
-            "g_status",
-            "g_priority",
-            "n",
-        )
-    )
-
-
-@register(
-    "string_agg_sources_by_lang",
-    oracle="""
-    SELECT lang,
-           string_agg(DISTINCT source, ',' ORDER BY source) AS sources,
-           COUNT(DISTINCT source) AS n_sources
-    FROM documents
-    GROUP BY lang
-    """,
-)
-def string_agg_sources_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Ordered string aggregation: collect_set is unordered (and
-    collect_list nondeterministic across retries), so the deterministic
-    form is sort_array(collect_set(...)) then join — pinned against
-    string_agg(DISTINCT ... ORDER BY)."""
-    documents = load(spark, sf_dir, "documents")
-    return documents.groupBy("lang").agg(
-        F.array_join(F.sort_array(F.collect_set("source")), ",").alias("sources"),
-        F.count_distinct("source").alias("n_sources"),
-    )
-
-
-@register(
-    "bool_aggregates_by_event_type",
-    oracle="""
-    SELECT event_type,
-           bool_and(value >= 0) AS all_nonneg,
-           bool_or(value > 99) AS any_large,
-           COUNT(*) FILTER (value > 99) AS n_large
-    FROM events
-    GROUP BY event_type
-    """,
-)
-def bool_aggregates_by_event_type(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Boolean aggregates (every/any) — the assertion-style rollups a
-    data-quality gate runs per partition before publishing."""
-    events = load(spark, sf_dir, "events")
-    return events.groupBy("event_type").agg(
-        F.bool_and(F.col("value") >= 0).alias("all_nonneg"),
-        F.bool_or(F.col("value") > 99).alias("any_large"),
-        F.count(F.when(F.col("value") > 99, 1)).alias("n_large"),
-    )
-
-
-@register(
-    "try_cast_safe_parsing",
-    oracle="""
-    SELECT COUNT(*) AS n_rows,
-           COUNT(TRY_CAST(SUBSTR(source, 4) AS BIGINT)) AS n_numeric_suffix,
-           CAST(SUM(COALESCE(TRY_CAST(SUBSTR(source, 4) AS BIGINT), 0))
-                AS BIGINT) AS suffix_sum,
-           COUNT(TRY_CAST(source AS BIGINT)) AS n_fully_numeric
-    FROM documents
-    """,
-)
-def try_cast_safe_parsing(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """try_cast semantics: malformed values become NULL instead of
-    failing the job — the difference between one bad record and a dead
-    100 TB pipeline (ANSI mode makes plain CAST throw)."""
-    documents = load(spark, sf_dir, "documents")
-    suffix = F.expr("try_cast(substring(source, 4) AS BIGINT)")
-    return documents.agg(
-        F.count(F.lit(1)).alias("n_rows"),
-        F.count(suffix).alias("n_numeric_suffix"),
-        F.sum(F.coalesce(suffix, F.lit(0))).cast("bigint").alias("suffix_sum"),
-        F.count(F.expr("try_cast(source AS BIGINT)")).alias("n_fully_numeric"),
-    )
-
-
-@register(
-    "median_quantity_by_flag",
-    oracle="""
-    SELECT l_returnflag,
-           CAST(quantile_cont(l_quantity, 0.5) AS DOUBLE) AS median_qty,
-           COUNT(*) AS n
-    FROM lineitem
-    GROUP BY l_returnflag
-    """,
-)
-def median_quantity_by_flag(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact interpolated median (percentile 0.5) — both engines use
-    the same linear-interpolation convention and quantities are small
-    integers, so the midpoint arithmetic is bit-exact. Higher
-    percentiles (0.9 etc.) can differ in the interpolation fraction's
-    last ulp and are left to approx sketches at scale."""
-    lineitem = load(spark, sf_dir, "lineitem")
-    return lineitem.groupBy("l_returnflag").agg(
-        F.percentile("l_quantity", 0.5).alias("median_qty"),
-        F.count(F.lit(1)).alias("n"),
-    )
-
-
-@register(
-    "union_by_name_mixed_sources",
-    oracle="""
-    SELECT kind, COUNT(*) AS n,
-           COUNT(balance) AS n_with_balance
-    FROM (
-        SELECT c_name AS name, c_acctbal AS balance, 'customer' AS kind
-        FROM customer
-        UNION ALL BY NAME
-        SELECT 'supplier' AS kind, s_name AS name
-        FROM supplier
-    )
-    GROUP BY kind
-    """,
-)
-def union_by_name_mixed_sources(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Position-independent union with missing-column NULL backfill
-    (unionByName allowMissingColumns) — the schema-evolution-tolerant
-    union an accreting 100 TB dataset needs; positional UNION would
-    silently misalign."""
-    customer = load(spark, sf_dir, "customer").select(
-        F.col("c_name").alias("name"),
-        F.col("c_acctbal").alias("balance"),
-        F.lit("customer").alias("kind"),
-    )
-    supplier = load(spark, sf_dir, "supplier").select(
-        F.lit("supplier").alias("kind"), F.col("s_name").alias("name")
-    )
-    return (
-        customer.unionByName(supplier, allowMissingColumns=True)
-        .groupBy("kind")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.count("balance").alias("n_with_balance"),
-        )
-    )
-
-
-@register(
-    "posexplode_token_positions",
-    oracle=r"""
-    WITH t AS (SELECT doc_id, string_split_regex(trim(text), '\s+') AS toks
-               FROM documents),
-    u AS (SELECT doc_id,
-                 UNNEST([{'pos': i, 'token': toks[i]}
-                         for i in generate_series(1, len(toks))]) AS s
-          FROM t)
-    SELECT doc_id, CAST(s.pos AS BIGINT) AS pos, s.token AS token
-    FROM u WHERE s.pos <= 3
-    """,
-)
-def posexplode_token_positions(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Ordinal fan-out (posexplode) — position-aware explode; Spark's
-    0-based pos normalized to the oracle's 1-based ordinality."""
-    documents = load(spark, sf_dir, "documents")
-    return (
-        documents.select(
-            "doc_id",
-            F.posexplode(F.split(F.trim("text"), r"\s+")).alias("pos0", "token"),
-        )
-        .select("doc_id", (F.col("pos0") + 1).cast("bigint").alias("pos"), "token")
-        .filter(F.col("pos") <= 3)
-    )
-
-
-@register(
-    "intersect_nations_with_both",
-    oracle="""
-    SELECT c_nationkey AS nationkey FROM customer
-    INTERSECT
-    SELECT s_nationkey FROM supplier
-    """,
-)
-def intersect_nations_with_both(spark: SparkSession, sf_dir: str) -> DataFrame:
-    customer = load(spark, sf_dir, "customer").select(
-        F.col("c_nationkey").alias("nationkey")
-    )
-    supplier = load(spark, sf_dir, "supplier").select(
-        F.col("s_nationkey").alias("nationkey")
-    )
-    return customer.intersect(supplier)
-
-
-@register(
-    "except_nations_customers_only",
-    oracle="""
-    SELECT c_nationkey AS nationkey FROM customer
-    EXCEPT
-    SELECT s_nationkey FROM supplier
-    """,
-)
-def except_nations_customers_only(spark: SparkSession, sf_dir: str) -> DataFrame:
-    customer = load(spark, sf_dir, "customer").select(
-        F.col("c_nationkey").alias("nationkey")
-    )
-    supplier = load(spark, sf_dir, "supplier").select(
-        F.col("s_nationkey").alias("nationkey")
-    )
-    # subtract() = EXCEPT DISTINCT (set semantics): a key present on the
-    # supplier side is removed entirely, regardless of multiplicity.
-    return customer.subtract(supplier)
 
 
 # ---------------------------------------------------------------------------
@@ -1197,124 +580,6 @@ def events_hourly_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register(
-    "monthly_order_revenue",
-    oracle="""
-    SELECT STRFTIME(o_orderdate, '%Y-%m') AS order_month,
-           CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS revenue,
-           COUNT(*) AS n_orders
-    FROM orders
-    GROUP BY 1
-    """,
-)
-def monthly_order_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = load(spark, sf_dir, "orders")
-    return (
-        orders.groupBy(
-            F.date_format("o_orderdate", "yyyy-MM").alias("order_month")
-        )
-        .agg(
-            F.sum(_dec("o_totalprice")).cast("double").alias("revenue"),
-            F.count(F.lit(1)).alias("n_orders"),
-        )
-    )
-
-
-@register(
-    "cohort_monthly_retention",
-    oracle="""
-    WITH e AS (SELECT user_id, CAST(ts AS TIMESTAMP) AS ts FROM events),
-    first_seen AS (
-        SELECT user_id, STRFTIME(MIN(ts), '%Y-%m') AS cohort FROM e GROUP BY 1
-    ),
-    activity AS (
-        SELECT DISTINCT user_id, STRFTIME(ts, '%Y-%m') AS act_month FROM e
-    )
-    SELECT cohort, act_month, COUNT(*) AS n_active_users
-    FROM first_seen JOIN activity USING (user_id)
-    GROUP BY cohort, act_month
-    """,
-)
-def cohort_monthly_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cohort retention grid: users keyed by first-seen month, counted
-    in every month they were active — two aggregations over one events
-    scan; the cohort side is per-user (small) and broadcasts back."""
-    events = load(spark, sf_dir, "events")
-    first_seen = events.groupBy("user_id").agg(
-        F.date_format(F.min("ts"), "yyyy-MM").alias("cohort")
-    )
-    activity = events.select(
-        "user_id", F.date_format("ts", "yyyy-MM").alias("act_month")
-    ).distinct()
-    return (
-        activity.join(F.broadcast(first_seen), "user_id")
-        .groupBy("cohort", "act_month")
-        .agg(F.count(F.lit(1)).alias("n_active_users"))
-    )
-
-
-@register(
-    "deterministic_sample_documents",
-    oracle="""
-    SELECT doc_id, lang
-    FROM documents
-    WHERE CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 4)) AS INTEGER)
-          % 10 = 0
-    """,
-)
-def deterministic_sample_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """~10% sample that is a pure function of the key — unlike
-    rand()-based sample(), identical across runs, engines, partitions,
-    and retries, and it composes with incremental processing (a doc's
-    membership never flips). md5 because both engines share it."""
-    documents = load(spark, sf_dir, "documents")
-    bucket = F.conv(
-        F.substring(F.md5(F.col("doc_id").cast("string")), 1, 4), 16, 10
-    ).cast("long")
-    return documents.filter(bucket % 10 == 0).select("doc_id", "lang")
-
-
-@register(
-    "null_semantics_showcase",
-    oracle="""
-    WITH t AS (
-        SELECT c_custkey,
-               NULLIF(c_mktsegment, 'BUILDING') AS seg_nb,
-               CASE WHEN c_acctbal < 0 THEN NULL ELSE c_mktsegment END AS seg_pos
-        FROM customer
-    )
-    SELECT COUNT(*) AS n_rows,
-           COUNT(seg_nb) AS n_seg_nb,
-           COUNT(*) FILTER (seg_nb IS NOT DISTINCT FROM seg_pos) AS n_nullsafe_eq,
-           COUNT(*) FILTER (seg_nb IS NULL AND seg_pos IS NULL) AS n_both_null,
-           COALESCE(MIN(seg_nb), 'none') AS min_seg
-    FROM t
-    """,
-)
-def null_semantics_showcase(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SQL NULL edge semantics in one relation: NULLIF sentinels (the
-    P1/P2 cleaning primitive), COUNT(col) vs COUNT(*), null-safe
-    equality (<=> / IS NOT DISTINCT FROM — the comparison dedup keys
-    need when keys can be NULL), COALESCE defaults."""
-    customer = load(spark, sf_dir, "customer")
-    t = customer.select(
-        "c_custkey",
-        F.expr("NULLIF(c_mktsegment, 'BUILDING')").alias("seg_nb"),
-        F.when(F.col("c_acctbal") < 0, F.lit(None))
-        .otherwise(F.col("c_mktsegment"))
-        .alias("seg_pos"),
-    )
-    return t.agg(
-        F.count(F.lit(1)).alias("n_rows"),
-        F.count("seg_nb").alias("n_seg_nb"),
-        F.count(F.when(F.expr("seg_nb <=> seg_pos"), 1)).alias("n_nullsafe_eq"),
-        F.count(
-            F.when(F.col("seg_nb").isNull() & F.col("seg_pos").isNull(), 1)
-        ).alias("n_both_null"),
-        F.coalesce(F.min("seg_nb"), F.lit("none")).alias("min_seg"),
-    )
-
-
-@register(
     "sessionize_user_events",
     oracle="""
     WITH e AS (SELECT user_id, CAST(ts AS TIMESTAMP) AS ts FROM events),
@@ -1364,139 +629,6 @@ def sessionize_user_events(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_events",
         )
     )
-
-
-@register(
-    "q9_product_revenue_by_nation_year",
-    oracle=f"""
-    SELECT n_name, CAST(YEAR(o_orderdate) AS BIGINT) AS o_year,
-           CAST(SUM({_SQL_DISC_PRICE}) AS DOUBLE) AS revenue
-    FROM lineitem JOIN part     ON p_partkey = l_partkey
-                  JOIN supplier ON s_suppkey = l_suppkey
-                  JOIN nation   ON s_nationkey = n_nationkey
-                  JOIN orders   ON o_orderkey = l_orderkey
-    WHERE p_name LIKE '%widget%'
-    GROUP BY n_name, o_year
-    """,
-)
-def q9_product_revenue_by_nation_year(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Q9 shape (profit → revenue; the testdata has no partsupp/
-    supplycost): substring part filter, supplier-nation attribution,
-    per-year rollup."""
-    part = load(spark, sf_dir, "part").filter(F.col("p_name").contains("widget"))
-    supplier = load(spark, sf_dir, "supplier")
-    nation = load(spark, sf_dir, "nation")
-    orders = load(spark, sf_dir, "orders")
-    lineitem = load(spark, sf_dir, "lineitem")
-    return (
-        lineitem.join(F.broadcast(part), lineitem.l_partkey == part.p_partkey)
-        .join(F.broadcast(supplier), lineitem.l_suppkey == supplier.s_suppkey)
-        .join(F.broadcast(nation), supplier.s_nationkey == nation.n_nationkey)
-        .join(orders, lineitem.l_orderkey == orders.o_orderkey)
-        .groupBy("n_name", F.year("o_orderdate").cast("bigint").alias("o_year"))
-        .agg(F.sum(_disc_price()).cast("double").alias("revenue"))
-    )
-
-
-@register(
-    "window_running_customer_spend",
-    oracle="""
-    SELECT o_custkey, o_orderkey,
-           CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) OVER (
-               PARTITION BY o_custkey
-               ORDER BY o_orderdate, o_orderkey
-               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW
-           ) AS DOUBLE) AS running_spend
-    FROM orders
-    """,
-)
-def window_running_customer_spend(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cumulative window frame (running total) — exact DECIMAL inside
-    the frame so every prefix sum is cross-engine identical, not just
-    the final one."""
-    orders = load(spark, sf_dir, "orders")
-    w = (
-        Window.partitionBy("o_custkey")
-        .orderBy("o_orderdate", "o_orderkey")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    return orders.select(
-        "o_custkey",
-        "o_orderkey",
-        F.sum(_dec("o_totalprice")).over(w).cast("double").alias("running_spend"),
-    )
-
-
-@register(
-    "array_functions_showcase",
-    oracle=r"""
-    WITH t AS (SELECT doc_id, string_split_regex(trim(text), '\s+') AS toks
-               FROM documents)
-    SELECT doc_id,
-           CAST(len(toks) AS BIGINT) AS n_tokens,
-           array_to_string(list_sort(toks)[1:3], '|') AS first3_sorted,
-           CAST(len(list_filter(toks, x -> len(x) > 3)) AS BIGINT) AS n_long,
-           CAST(list_sum([CASE WHEN len(x) > 3 THEN 1 ELSE 0 END
-                          for x in toks]) AS BIGINT) AS n_long_agg
-    FROM t
-    """,
-)
-def array_functions_showcase(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Higher-order array functions (transform/filter/aggregate/
-    sort/slice/join) staying entirely JVM-side — the column-native
-    toolkit the LLM operators build on, checked against DuckDB's list
-    comprehensions."""
-    documents = load(spark, sf_dir, "documents")
-    toks = F.split(F.trim("text"), r"\s+")
-    return documents.select(
-        "doc_id",
-        F.size(toks).cast("bigint").alias("n_tokens"),
-        F.array_join(F.slice(F.sort_array(toks), 1, 3), "|").alias("first3_sorted"),
-        F.size(F.filter(toks, lambda x: F.length(x) > 3))
-        .cast("bigint")
-        .alias("n_long"),
-        F.aggregate(
-            F.transform(toks, lambda x: (F.length(x) > 3).cast("long")),
-            F.lit(0).cast("long"),
-            lambda acc, x: acc + x,
-        ).alias("n_long_agg"),
-    )
-
-
-@register(
-    "profile_documents",
-    oracle="""
-    SELECT 'doc_id' AS "column", COUNT(*) AS n_rows,
-           COUNT(*) FILTER (doc_id IS NULL) AS n_nulls,
-           COUNT(DISTINCT doc_id) AS n_distinct,
-           CAST(MIN(doc_id) AS VARCHAR) AS min_value,
-           CAST(MAX(doc_id) AS VARCHAR) AS max_value
-    FROM documents
-    UNION ALL
-    SELECT 'lang', COUNT(*),
-           COUNT(*) FILTER (lang IS NULL),
-           COUNT(DISTINCT lang), MIN(lang), MAX(lang)
-    FROM documents
-    UNION ALL
-    SELECT 'source', COUNT(*),
-           COUNT(*) FILTER (source IS NULL),
-           COUNT(DISTINCT source), MIN(source), MAX(source)
-    FROM documents
-    UNION ALL
-    SELECT 'n_chars', COUNT(*),
-           COUNT(*) FILTER (n_chars IS NULL),
-           COUNT(DISTINCT n_chars),
-           CAST(MIN(n_chars) AS VARCHAR), CAST(MAX(n_chars) AS VARCHAR)
-    FROM documents
-    """,
-)
-def profile_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The single-pass profiler (operators/profile.py) over four
-    columns — one aggregation job however many columns are profiled."""
-    from ..operators.profile import profile
-
-    documents = load(spark, sf_dir, "documents")
-    return profile(documents, ["doc_id", "lang", "source", "n_chars"])
 
 
 @register(
@@ -1600,115 +732,6 @@ def _cleanup_staged(staged: str) -> None:
     import shutil
 
     shutil.rmtree(staged, ignore_errors=True)
-
-
-@register(
-    "streaming_sliding_value_averages",
-    oracle="""
-    WITH w AS (
-        SELECT event_type, value,
-               unnest([time_bucket(INTERVAL '30 minutes', ts),
-                       time_bucket(INTERVAL '30 minutes', ts)
-                           - INTERVAL 30 MINUTE]) AS wstart
-        FROM events
-    )
-    SELECT STRFTIME(wstart, '%Y-%m-%d %H:%M:%S') AS window_start,
-           event_type,
-           COUNT(*) AS n_events,
-           CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) / COUNT(*)
-               AS avg_value
-    FROM w GROUP BY 1, 2
-    """,
-)
-def streaming_sliding_value_averages(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """OVERLAPPING (sliding) windows through the streaming engine,
-    hash-matched against a batch oracle that materializes each event's
-    two member windows explicitly (1-hour window, 30-minute slide ⇒
-    every event belongs to exactly the two windows starting at
-    floor_30(ts) and floor_30(ts)−30min — no boundary ambiguity, since
-    window membership is [start, start+1h))."""
-    from ..streaming.events import (
-        read_events_stream,
-        run_to_memory,
-        sliding_value_averages,
-    )
-
-    staged = _stage_events(sf_dir)
-    _STREAM_SEQ[0] += 1
-    name = f"stream_sliding_{_STREAM_SEQ[0]}"
-    try:
-        query = run_to_memory(
-            sliding_value_averages(read_events_stream(spark, staged)), name
-        )
-        query.stop()
-    finally:
-        _cleanup_staged(staged)
-    return spark.table(name).select(
-        F.date_format("window_start", "yyyy-MM-dd HH:mm:ss").alias("window_start"),
-        "event_type",
-        "n_events",
-        "avg_value",
-    )
-
-
-@register(
-    "streaming_session_windows",
-    oracle="""
-    WITH o AS (
-        SELECT user_id, ts,
-               CASE WHEN lag(ts) OVER (PARTITION BY user_id ORDER BY ts)
-                         IS NULL
-                     OR ts - lag(ts) OVER (PARTITION BY user_id ORDER BY ts)
-                         > INTERVAL 30 MINUTE
-                    THEN 1 ELSE 0 END AS brk
-        FROM events
-    ),
-    s AS (
-        SELECT user_id, ts,
-               SUM(brk) OVER (PARTITION BY user_id ORDER BY ts
-                              ROWS UNBOUNDED PRECEDING) AS sid
-        FROM o
-    )
-    SELECT user_id,
-           STRFTIME(MIN(ts), '%Y-%m-%d %H:%M:%S') AS session_start,
-           COUNT(*) AS n_events
-    FROM s GROUP BY user_id, sid
-    """,
-)
-def streaming_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Dynamic session windows (30-minute gap) through the streaming
-    engine vs the batch gaps-and-islands oracle. Boundary semantics:
-    Spark merges an event at exactly gap distance (diff ≤ gap joins),
-    so the SQL breaks on diff > gap — the two agree at EVERY diff,
-    including the boundary (pinned empirically in
-    tests/test_session_boundary.py). Second of the three streaming
-    gate queries; state is
-    watermark-bounded so the same plan runs on an unbounded stream."""
-    from ..streaming.events import (
-        read_events_stream,
-        run_to_memory,
-        user_session_windows,
-    )
-
-    staged = _stage_events(sf_dir)
-    _STREAM_SEQ[0] += 1
-    name = f"stream_session_{_STREAM_SEQ[0]}"
-    try:
-        query = run_to_memory(
-            user_session_windows(read_events_stream(spark, staged)), name
-        )
-        query.stop()
-    finally:
-        _cleanup_staged(staged)
-    return spark.table(name).select(
-        "user_id",
-        F.date_format("session_start", "yyyy-MM-dd HH:mm:ss").alias(
-            "session_start"
-        ),
-        "n_events",
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -1942,117 +965,6 @@ def q13_customer_order_distribution(spark: SparkSession, sf_dir: str) -> DataFra
 
 
 @register(
-    "q14_promo_revenue",
-    oracle=f"""
-    SELECT CAST(100.0 * CAST(SUM(CASE WHEN p_type = 'PROMO' THEN {_SQL_DISC_PRICE}
-                                      ELSE CAST(0 AS DECIMAL(18,2)) END) AS DOUBLE)
-                / CAST(SUM({_SQL_DISC_PRICE}) AS DOUBLE) AS DOUBLE) AS promo_revenue,
-           COUNT(*) AS n_items
-    FROM lineitem JOIN part ON l_partkey = p_partkey
-    WHERE l_shipdate >= TIMESTAMP '1997-09-01'
-      AND l_shipdate <  TIMESTAMP '1997-10-01'
-    """,
-)
-def q14_promo_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    part = load(spark, sf_dir, "part")
-    lineitem = load(spark, sf_dir, "lineitem").filter(
-        (F.col("l_shipdate") >= F.lit("1997-09-01").cast("timestamp"))
-        & (F.col("l_shipdate") < F.lit("1997-10-01").cast("timestamp"))
-    )
-    zero = F.lit(0).cast(DEC)
-    return (
-        lineitem.join(F.broadcast(part), lineitem.l_partkey == part.p_partkey)
-        .agg(
-            F.sum(F.when(F.col("p_type") == "PROMO", _disc_price()).otherwise(zero))
-            .cast("double")
-            .alias("_promo"),
-            F.sum(_disc_price()).cast("double").alias("_total"),
-            F.count(F.lit(1)).alias("n_items"),
-        )
-        .select(
-            (F.lit(100.0) * F.col("_promo") / F.col("_total"))
-            .cast("double")
-            .alias("promo_revenue"),
-            "n_items",
-        )
-    )
-
-
-@register(
-    "q15_top_supplier",
-    oracle=f"""
-    WITH revenue AS (
-        SELECT l_suppkey AS supplier_no,
-               SUM({_SQL_DISC_PRICE}) AS total
-        FROM lineitem
-        WHERE l_shipdate >= TIMESTAMP '1997-01-01'
-          AND l_shipdate <  TIMESTAMP '1997-04-01'
-        GROUP BY l_suppkey
-    )
-    SELECT s_suppkey, s_name, CAST(total AS DOUBLE) AS total_revenue
-    FROM supplier JOIN revenue ON s_suppkey = supplier_no
-    WHERE total = (SELECT MAX(total) FROM revenue)
-    """,
-)
-def q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Q15: argmax over an aggregate. The max-comparison happens in
-    exact DECIMAL (double equality would be engine-dependent); the
-    1-row max broadcasts back onto the revenue relation."""
-    supplier = load(spark, sf_dir, "supplier")
-    lineitem = load(spark, sf_dir, "lineitem").filter(
-        (F.col("l_shipdate") >= F.lit("1997-01-01").cast("timestamp"))
-        & (F.col("l_shipdate") < F.lit("1997-04-01").cast("timestamp"))
-    )
-    revenue = lineitem.groupBy(F.col("l_suppkey").alias("supplier_no")).agg(
-        F.sum(_disc_price()).alias("total")
-    )
-    max_rev = revenue.agg(F.max("total").alias("max_total"))
-    return (
-        revenue.join(F.broadcast(max_rev), revenue.total == F.col("max_total"))
-        .join(F.broadcast(supplier), F.col("supplier_no") == supplier.s_suppkey)
-        .select(
-            "s_suppkey", "s_name", F.col("total").cast("double").alias("total_revenue")
-        )
-    )
-
-
-@register(
-    "q17_small_quantity_revenue",
-    oracle="""
-    SELECT CAST(CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) / 7.0
-                AS DOUBLE) AS avg_yearly,
-           COUNT(*) AS n_items
-    FROM lineitem JOIN part ON p_partkey = l_partkey
-    WHERE p_brand = 'Brand#1'
-      AND l_quantity < (
-          SELECT 0.2 * (SUM(l_quantity) / COUNT(*))
-          FROM lineitem l2 WHERE l2.l_partkey = lineitem.l_partkey
-      )
-    """,
-)
-def q17_small_quantity_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Q17: correlated scalar AVG decorrelated into a per-part
-    aggregate joined back — quantities are small integers so the
-    double sum is exact and the 0.2× threshold is engine-stable."""
-    part = load(spark, sf_dir, "part").filter(F.col("p_brand") == "Brand#1")
-    lineitem = load(spark, sf_dir, "lineitem")
-    per_part_avg = lineitem.groupBy(F.col("l_partkey").alias("avg_partkey")).agg(
-        (F.sum("l_quantity") / F.count(F.lit(1))).alias("avg_qty")
-    )
-    return (
-        lineitem.join(F.broadcast(part), lineitem.l_partkey == part.p_partkey)
-        .join(per_part_avg, lineitem.l_partkey == F.col("avg_partkey"))
-        .filter(F.col("l_quantity") < 0.2 * F.col("avg_qty"))
-        .agg(
-            (F.sum(_dec("l_extendedprice")).cast("double") / F.lit(7.0))
-            .cast("double")
-            .alias("avg_yearly"),
-            F.count(F.lit(1)).alias("n_items"),
-        )
-    )
-
-
-@register(
     "q18_large_volume_customers",
     oracle="""
     SELECT c_name, c_custkey, o_orderkey,
@@ -2152,61 +1064,6 @@ def q19_discounted_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "q22_global_sales_opportunity",
-    oracle="""
-    WITH threshold AS (
-        SELECT CAST(SUM(CAST(c_acctbal AS DECIMAL(18,2))) AS DOUBLE) / COUNT(*)
-                   AS avg_bal
-        FROM customer WHERE c_acctbal > 0.0
-    )
-    SELECT n_name,
-           COUNT(*) AS numcust,
-           CAST(SUM(CAST(c_acctbal AS DECIMAL(18,2))) AS DOUBLE) AS totacctbal
-    FROM customer JOIN nation ON c_nationkey = n_nationkey, threshold
-    WHERE CAST(c_acctbal AS DECIMAL(18,2)) > avg_bal
-      AND NOT EXISTS (
-          SELECT 1 FROM orders
-          WHERE o_custkey = c_custkey
-            AND o_orderdate >= TIMESTAMP '1999-01-01'
-      )
-    GROUP BY n_name
-    """,
-)
-def q22_global_sales_opportunity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Q22 shape (no phone column → nation name stands in for the
-    country code): scalar-aggregate threshold broadcast as a 1-row
-    cross join, anti join against lapsed-since-1999 orders (every
-    customer has some order in this testdata, so the unrestricted
-    anti join would be vacuously empty), then group."""
-    customer = load(spark, sf_dir, "customer")
-    nation = load(spark, sf_dir, "nation")
-    orders_keys = (
-        load(spark, sf_dir, "orders")
-        .filter(F.col("o_orderdate") >= F.lit("1999-01-01").cast("timestamp"))
-        .select("o_custkey")
-    )
-    threshold = (
-        customer.filter(F.col("c_acctbal") > 0.0)
-        .agg(
-            (F.sum(_dec("c_acctbal")).cast("double") / F.count(F.lit(1))).alias(
-                "avg_bal"
-            )
-        )
-    )
-    return (
-        customer.crossJoin(F.broadcast(threshold))
-        .filter(_dec("c_acctbal") > F.col("avg_bal"))
-        .join(orders_keys, customer.c_custkey == orders_keys.o_custkey, "left_anti")
-        .join(F.broadcast(nation), customer.c_nationkey == nation.n_nationkey)
-        .groupBy("n_name")
-        .agg(
-            F.count(F.lit(1)).alias("numcust"),
-            F.sum(_dec("c_acctbal")).cast("double").alias("totacctbal"),
-        )
-    )
-
-
 # ---------------------------------------------------------------------------
 # Range join (custom temporal operator, operators/rangejoin.py)
 # ---------------------------------------------------------------------------
@@ -2302,49 +1159,6 @@ def asof_last_view_before_purchase(spark: SparkSession, sf_dir: str) -> DataFram
 
 
 @register(
-    "date_spine_daily_revenue",
-    oracle="""
-    WITH o AS (SELECT CAST(o_orderdate AS DATE) AS d, o_totalprice FROM orders),
-    b AS (SELECT MIN(d) AS lo, MAX(d) AS hi FROM o),
-    spine AS (
-        SELECT unnest(generate_series(lo, hi, INTERVAL 1 DAY))::DATE AS d FROM b
-    ),
-    daily AS (
-        SELECT d, SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS rev,
-               COUNT(*) AS n
-        FROM o GROUP BY d
-    )
-    SELECT strftime(spine.d, '%Y-%m-%d') AS day,
-           CAST(COALESCE(rev, 0) AS DOUBLE) AS revenue,
-           CAST(COALESCE(n, 0) AS BIGINT) AS n_orders
-    FROM spine LEFT JOIN daily ON spine.d = daily.d
-    """,
-)
-def date_spine_daily_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Date-spine gap fill: a generated day dimension left-joined to
-    the daily aggregate so zero-order days appear explicitly (the
-    standard fix for time series with holes). The spine derives from a
-    1-row min/max aggregate via sequence+explode — no driver collect —
-    and both join sides are post-aggregation tiny (one row per day)
-    regardless of input scale, so the join cost is O(days), not O(rows)."""
-    orders = load(spark, sf_dir, "orders").withColumn(
-        "d", F.col("o_orderdate").cast("date")
-    )
-    spine = (
-        orders.agg(F.min("d").alias("lo"), F.max("d").alias("hi"))
-        .select(F.explode(F.sequence("lo", "hi")).alias("d"))
-    )
-    daily = orders.groupBy("d").agg(
-        F.sum(_dec("o_totalprice")).alias("rev"), F.count(F.lit(1)).alias("n")
-    )
-    return spine.join(daily, "d", "left").select(
-        F.date_format("d", "yyyy-MM-dd").alias("day"),
-        F.coalesce(F.col("rev"), F.lit(0).cast(DEC)).cast("double").alias("revenue"),
-        F.coalesce(F.col("n"), F.lit(0)).cast("bigint").alias("n_orders"),
-    )
-
-
-@register(
     "exact_moment_statistics",
     oracle="""
     WITH s AS (
@@ -2420,169 +1234,6 @@ def exact_moment_statistics(spark: SparkSession, sf_dir: str) -> DataFrame:
             - (F.col("dxy") / F.col("dx")) * (F.col("sx") / F.col("n"))
         ).alias("intercept"),
     )
-
-
-@register(
-    "unpivot_monthly_status_revenue",
-    oracle="""
-    WITH wide AS (
-        SELECT strftime(CAST(o_orderdate AS DATE), '%Y-%m') AS month,
-               CAST(COALESCE(SUM(CAST(o_totalprice AS DECIMAL(18,2)))
-                    FILTER (o_orderstatus = 'F'), 0) AS DOUBLE) AS rev_F,
-               CAST(COALESCE(SUM(CAST(o_totalprice AS DECIMAL(18,2)))
-                    FILTER (o_orderstatus = 'O'), 0) AS DOUBLE) AS rev_O,
-               CAST(COALESCE(SUM(CAST(o_totalprice AS DECIMAL(18,2)))
-                    FILTER (o_orderstatus = 'P'), 0) AS DOUBLE) AS rev_P
-        FROM orders GROUP BY 1
-    )
-    SELECT month, split_part(status_col, '_', 2) AS status, revenue
-    FROM (UNPIVOT wide ON rev_F, rev_O, rev_P
-          INTO NAME status_col VALUE revenue)
-    """,
-)
-def unpivot_monthly_status_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Wide→long melt (the inverse of pivot): conditional aggregation
-    builds one revenue column per order status, then unpivot restores
-    tidy (month, status, revenue) rows. NULL cells are coalesced to 0
-    *before* the melt because SQL UNPIVOT drops NULL measures while the
-    DataFrame unpivot keeps them — pre-coalescing makes both engines
-    agree. Unpivot itself is a zero-shuffle projection."""
-    orders = load(spark, sf_dir, "orders")
-
-    def rev(status: str):
-        return (
-            F.coalesce(
-                F.sum(F.when(F.col("o_orderstatus") == status, _dec("o_totalprice"))),
-                F.lit(0).cast(DEC),
-            )
-            .cast("double")
-            .alias(f"rev_{status}")
-        )
-
-    wide = orders.groupBy(
-        F.date_format("o_orderdate", "yyyy-MM").alias("month")
-    ).agg(rev("F"), rev("O"), rev("P"))
-    return wide.unpivot(
-        ["month"], ["rev_F", "rev_O", "rev_P"], "status_col", "revenue"
-    ).select(
-        "month",
-        F.substring_index("status_col", "_", -1).alias("status"),
-        "revenue",
-    )
-
-
-@register(
-    "customer_spend_deciles",
-    oracle="""
-    WITH spend AS (
-        SELECT o_custkey,
-               SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS spend
-        FROM orders GROUP BY o_custkey
-    ),
-    ranked AS (
-        SELECT o_custkey, spend,
-               NTILE(10) OVER (ORDER BY spend ASC, o_custkey ASC) AS decile
-        FROM spend
-    )
-    SELECT CAST(decile AS BIGINT) AS decile,
-           COUNT(*) AS n_customers,
-           CAST(SUM(spend) AS DOUBLE) AS total_spend,
-           CAST(MIN(spend) AS DOUBLE) AS min_spend,
-           CAST(MAX(spend) AS DOUBLE) AS max_spend
-    FROM ranked GROUP BY decile
-    """,
-)
-def customer_spend_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Equal-frequency binning: customers ranked into spend deciles,
-    then per-decile summary — SQL NTILE(10) semantics reproduced with a
-    two-phase distributed rank instead of a single-partition window
-    (per-customer cardinality at 100 TB is billions of rows; an
-    unpartitioned NTILE sort funnels all of them through one task).
-
-    Phase 1: bin rows by quantile-edge comparison — the edges come
-    from ONE approx_percentile job, collected and folded into the plan
-    as literals, so a row's bin is a pure function of its value and
-    identical in every job that evaluates it (repartitionByRange is
-    NOT usable here: its range bounds come from per-execution
-    reservoir sampling, and this query's counts job and final job
-    would re-execute the exchange with different bounds — rows near a
-    bound would shift blocks between jobs and silently corrupt
-    ranks). Binning by value respects the (spend, custkey) total
-    order: lower spend → same-or-lower bin, ties share a bin.
-    Phase 2: a per-bin row_number window gives local positions; the
-    per-bin counts (metadata-sized) are collected, turned into
-    cumulative offsets, and broadcast back as a literal map;
-    global_rank = offset[bin] + local_pos. The decile is then exact
-    NTILE arithmetic: with n rows, the first n%10 buckets take
-    ceil(n/10) rows, the rest floor(n/10).
-    """
-    orders = load(spark, sf_dir, "orders")
-    # materialize the per-customer aggregate ONCE: three downstream
-    # jobs consume it (quantile edges, per-bin counts, final ranks) —
-    # without the checkpoint each would re-scan and re-aggregate the
-    # orders fact (3× the heavy work at 100 TB); the checkpointed
-    # relation is per-customer, orders-of-magnitude smaller
-    spend = orders.groupBy("o_custkey").agg(
-        F.sum(_dec("o_totalprice")).alias("spend")
-    ).localCheckpoint(eager=True)
-    num_bins = max(spark.sparkContext.defaultParallelism, 16)
-    fracs = [i / num_bins for i in range(1, num_bins)]
-    edge_row = spend.select(
-        F.percentile_approx(
-            F.col("spend").cast("double"), F.array(*[F.lit(f) for f in fracs]),
-            F.lit(10_000),
-        ).alias("edges")
-    ).first()
-    edges = sorted(set(edge_row["edges"] or []))
-    spend_d = F.col("spend").cast("double")
-    bin_col = F.lit(0)
-    for e in edges:
-        bin_col = bin_col + (spend_d > F.lit(e)).cast("int")
-    w_bin = Window.partitionBy("_bin").orderBy(
-        F.col("spend").asc(), F.col("o_custkey").asc()
-    )
-    ranked = spend.withColumn("_bin", bin_col).withColumn(
-        "_pos", F.row_number().over(w_bin)
-    )
-    # metadata-sized: one row per bin; deterministic because _bin is a
-    # literal-edge comparison, not a sampled partitioner
-    counts = sorted(
-        (r["_bin"], r["cnt"])
-        for r in ranked.groupBy("_bin").agg(F.count(F.lit(1)).alias("cnt")).collect()
-    )
-    n = sum(c for _, c in counts)
-    offsets, acc = {}, 0
-    for b, c in counts:
-        offsets[b] = acc
-        acc += c
-    base, rem = divmod(n, 10)
-    cut = rem * (base + 1)  # rows in the first `rem` (larger) buckets
-    # offsets cast to BIGINT before the addition: past 2^31 customers
-    # an int32 offset + int32 row_number wraps (non-ANSI) or throws
-    # (ANSI) before any outer cast could help
-    offset_map = F.create_map(
-        *[
-            x
-            for b, off in offsets.items()
-            for x in (F.lit(b), F.lit(off).cast("bigint"))
-        ]
-    )
-    rank = F.element_at(offset_map, F.col("_bin")) + F.col("_pos").cast("bigint")
-    decile = F.when(
-        rank <= F.lit(cut),
-        F.floor((rank - 1) / F.lit(base + 1)) + 1,
-    ).otherwise(
-        # max(base,1) guards the n<10 degenerate case where this branch
-        # is never taken but ANSI mode would still reject a /0 literal
-        F.lit(rem) + F.floor((rank - F.lit(cut) - 1) / F.lit(max(base, 1))) + 1
-    )
-    return ranked.withColumn("decile", decile).groupBy("decile").agg(
-        F.count(F.lit(1)).alias("n_customers"),
-        F.sum("spend").cast("double").alias("total_spend"),
-        F.min("spend").cast("double").alias("min_spend"),
-        F.max("spend").cast("double").alias("max_spend"),
-    ).select(F.col("decile").cast("bigint").alias("decile"), "n_customers",
-             "total_spend", "min_spend", "max_spend")
 
 
 @register(
@@ -2688,12 +1339,9 @@ def funnel_signup_to_purchase(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# TPC-H completion: the remaining query shapes (Q2/Q11/Q12/Q16/Q20/Q21),
-# adapted to the testdata's simplified schema (no partsupp/commitdate/
-# shipmode — FIXTURES.md §B). With these, all 22 TPC-H query SHAPES have
-# a counterpart: correlated-min subquery, scalar-subquery threshold,
-# conditional aggregation, NOT-IN + distinct-count, semi-join on an
-# aggregate predicate, and the multi-party "last to act" pattern.
+# TPC-H completion: the correlated-min subquery (Q2) and the multi-party
+# "last to act" pattern (Q21), adapted to the testdata's simplified
+# schema (no partsupp/commitdate/shipmode — FIXTURES.md §B).
 # ---------------------------------------------------------------------------
 
 @register(
@@ -2779,180 +1427,6 @@ def q2_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy(F.desc("s_acctbal"), "s_name", "p_partkey")
         .limit(100)
-    )
-
-
-@register(
-    "q11_important_part_value",
-    oracle="""
-    WITH val AS (
-        SELECT l_partkey,
-               SUM(CAST(l_extendedprice AS DECIMAL(18,2))
-                   * CAST(l_quantity AS DECIMAL(18,2))) AS value
-        FROM lineitem GROUP BY l_partkey
-    ),
-    total AS (SELECT SUM(value) AS grand FROM val)
-    SELECT l_partkey AS partkey, CAST(value AS DOUBLE) AS part_value
-    FROM val, total
-    WHERE value > grand * CAST(0.005 AS DECIMAL(6,4))
-    """,
-)
-def q11_important_part_value(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Q11 shape — scalar-subquery threshold ("parts worth more than a
-    fraction of total inventory value"). The 1-row grand total joins
-    back on a constant key, so the plan is a BroadcastHashJoin (not a
-    nested-loop product) and the > comparison runs in exact DECIMAL on
-    both engines."""
-    li = load(spark, sf_dir, "lineitem")
-    val = li.groupBy("l_partkey").agg(
-        F.sum(_dec("l_extendedprice") * _dec("l_quantity")).alias("value")
-    )
-    total = val.agg(F.sum("value").alias("grand")).withColumn("_k", F.lit(1))
-    return (
-        val.withColumn("_k", F.lit(1))
-        .join(F.broadcast(total), "_k")
-        .filter(F.col("value") > F.col("grand") * F.lit("0.005").cast("decimal(6,4)"))
-        .select(
-            F.col("l_partkey").alias("partkey"),
-            F.col("value").cast("double").alias("part_value"),
-        )
-    )
-
-
-@register(
-    "q12_priority_by_linestatus",
-    oracle="""
-    SELECT l_linestatus,
-           CAST(SUM(CASE WHEN o_orderpriority IN ('1-URGENT', '2-HIGH')
-                    THEN 1 ELSE 0 END) AS BIGINT) AS high_line_count,
-           CAST(SUM(CASE WHEN o_orderpriority NOT IN ('1-URGENT', '2-HIGH')
-                    THEN 1 ELSE 0 END) AS BIGINT) AS low_line_count
-    FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-    WHERE l_shipdate > o_orderdate + INTERVAL 60 DAY
-      AND l_shipdate >= TIMESTAMP '1997-01-01'
-      AND l_shipdate <  TIMESTAMP '1998-01-01'
-    GROUP BY l_linestatus
-    ORDER BY l_linestatus
-    """,
-)
-def q12_priority_by_linestatus(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Q12 shape — conditional aggregation over a join ("slow" lines =
-    shipped >60 days after ordering; linestatus stands in for the
-    missing shipmode). Both date predicates push into the lineitem
-    scan; the orders join shuffles on orderkey once."""
-    li = load(spark, sf_dir, "lineitem").filter(
-        (F.col("l_shipdate") >= F.lit("1997-01-01").cast("timestamp"))
-        & (F.col("l_shipdate") < F.lit("1998-01-01").cast("timestamp"))
-    )
-    orders = load(spark, sf_dir, "orders")
-    high = F.col("o_orderpriority").isin("1-URGENT", "2-HIGH")
-    return (
-        li.join(orders, li.l_orderkey == orders.o_orderkey)
-        .filter(
-            F.col("l_shipdate")
-            > F.col("o_orderdate") + F.expr("INTERVAL 60 DAYS")
-        )
-        .groupBy("l_linestatus")
-        .agg(
-            F.sum(F.when(high, 1).otherwise(0)).alias("high_line_count"),
-            F.sum(F.when(~high, 1).otherwise(0)).alias("low_line_count"),
-        )
-        .orderBy("l_linestatus")
-    )
-
-
-@register(
-    "q16_supplier_part_counts",
-    oracle="""
-    SELECT p_brand, p_type, p_size,
-           COUNT(DISTINCT l_suppkey) AS supplier_cnt
-    FROM lineitem
-      JOIN part ON p_partkey = l_partkey
-    WHERE p_brand <> 'Brand#1'
-      AND p_type NOT LIKE 'PROMO%'
-      AND p_size IN (1, 4, 9, 14, 19, 24, 29, 34)
-      AND l_suppkey NOT IN (
-          SELECT s_suppkey FROM supplier WHERE s_acctbal < 0
-      )
-    GROUP BY p_brand, p_type, p_size
-    ORDER BY supplier_cnt DESC, p_brand, p_type, p_size
-    """,
-)
-def q16_supplier_part_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Q16 shape — NOT IN subquery + multi-key distinct count (negative
-    account balance stands in for the complaints filter). NOT IN
-    becomes a left_anti join (safe here: s_suppkey is non-null, so the
-    three-valued-logic trap of NOT IN doesn't bite); the distinct
-    count shuffles (brand,type,size,suppkey) once."""
-    part = load(spark, sf_dir, "part").filter(
-        (F.col("p_brand") != "Brand#1")
-        & (~F.col("p_type").startswith("PROMO"))
-        & (F.col("p_size").isin(1, 4, 9, 14, 19, 24, 29, 34))
-    )
-    li = load(spark, sf_dir, "lineitem").select("l_partkey", "l_suppkey")
-    bad = (
-        load(spark, sf_dir, "supplier")
-        .filter(F.col("s_acctbal") < 0)
-        .select(F.col("s_suppkey").alias("l_suppkey"))
-    )
-    return (
-        li.join(bad, "l_suppkey", "left_anti")
-        .join(F.broadcast(part), li.l_partkey == part.p_partkey)
-        .groupBy("p_brand", "p_type", "p_size")
-        .agg(F.count_distinct("l_suppkey").alias("supplier_cnt"))
-        .orderBy(F.desc("supplier_cnt"), "p_brand", "p_type", "p_size")
-    )
-
-
-@register(
-    "q20_dominant_suppliers",
-    oracle="""
-    WITH sp AS (
-        SELECT l_suppkey, l_partkey,
-               SUM(CAST(l_quantity AS DECIMAL(18,2))) AS qty
-        FROM lineitem
-        WHERE l_shipdate >= TIMESTAMP '1997-01-01'
-          AND l_shipdate <  TIMESTAMP '1998-01-01'
-        GROUP BY l_suppkey, l_partkey
-    ),
-    pt AS (SELECT l_partkey, SUM(qty) AS part_qty FROM sp GROUP BY l_partkey)
-    SELECT DISTINCT s_suppkey, s_name, n_name
-    FROM sp
-      JOIN pt ON sp.l_partkey = pt.l_partkey
-      JOIN part ON p_partkey = sp.l_partkey
-      JOIN supplier ON s_suppkey = sp.l_suppkey
-      JOIN nation ON n_nationkey = s_nationkey
-    WHERE p_name LIKE 'small%'
-      AND qty > part_qty * CAST(0.5 AS DECIMAL(2,1))
-    ORDER BY s_suppkey
-    """,
-)
-def q20_dominant_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Q20 shape — semi-join on an aggregate predicate: suppliers who
-    shipped more than half of a small-part's 1997 volume (availqty is
-    absent, so "dominates the part's flow" replaces "holds excess
-    stock"). Two aggregations reuse the same (suppkey,partkey) →
-    (partkey) shuffle chain; the comparison is exact DECIMAL."""
-    li = load(spark, sf_dir, "lineitem").filter(
-        (F.col("l_shipdate") >= F.lit("1997-01-01").cast("timestamp"))
-        & (F.col("l_shipdate") < F.lit("1998-01-01").cast("timestamp"))
-    )
-    sp = li.groupBy("l_suppkey", "l_partkey").agg(
-        F.sum(_dec("l_quantity")).alias("qty")
-    )
-    pt = sp.groupBy("l_partkey").agg(F.sum("qty").alias("part_qty"))
-    part = load(spark, sf_dir, "part").filter(F.col("p_name").startswith("small"))
-    supplier = load(spark, sf_dir, "supplier")
-    nation = load(spark, sf_dir, "nation")
-    return (
-        sp.join(pt, "l_partkey")
-        .join(F.broadcast(part), sp.l_partkey == part.p_partkey)
-        .filter(F.col("qty") > F.col("part_qty") * F.lit("0.5").cast("decimal(2,1)"))
-        .join(F.broadcast(supplier), sp.l_suppkey == supplier.s_suppkey)
-        .join(F.broadcast(nation), F.col("s_nationkey") == nation.n_nationkey)
-        .select("s_suppkey", "s_name", "n_name")
-        .distinct()
-        .orderBy("s_suppkey")
     )
 
 
@@ -3105,46 +1579,6 @@ def extract_procedure_pages_fixture(spark: SparkSession, sf_dir: str) -> DataFra
         codes, factory, base_url="https://example.test/cpt-codes/"
     )
     return extracted.select("code", "status")
-
-
-@register(
-    "streaming_distinct_user_event_types",
-    oracle="""
-    SELECT user_id, event_type
-    FROM events
-    GROUP BY user_id, event_type
-    """,
-)
-def streaming_distinct_user_event_types(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Streaming exact dedup in the gate: dropDuplicates over an
-    unbounded stream (state = one row per distinct key) must emit
-    exactly batch DISTINCT. Fourth streaming gate query — with
-    tumbling/sliding/session windows this covers every stateful
-    streaming primitive the engine claims."""
-    from ..streaming.events import read_events_stream, run_to_memory
-
-    staged = _stage_events(sf_dir)
-    _STREAM_SEQ[0] += 1
-    name = f"stream_distinct_{_STREAM_SEQ[0]}"
-    try:
-        stream = read_events_stream(spark, staged).select(
-            "user_id", "event_type"
-        )
-        query = (
-            stream.dropDuplicates(["user_id", "event_type"])
-            .writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        query.awaitTermination(60)
-        query.stop()
-    finally:
-        _cleanup_staged(staged)
-    return spark.table(name)
 
 
 @register(

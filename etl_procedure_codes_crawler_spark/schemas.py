@@ -16,7 +16,6 @@ from pyspark.sql.types import (
     StringType,
     StructField,
     StructType,
-    TimestampType,
 )
 
 
@@ -80,18 +79,6 @@ AIRFLOW_ERRORS_SCHEMA = StructType(
     [_s("dag_id"), _s("task_id"), _s("run_id"), _s("error")]
 )
 
-#: Raw fetched page, captured once per code so the parse layer is pure
-#: (fixes the mutable-page ordering hazard, SURVEY §3 entry point 2).
-RAW_PAGE_SCHEMA = StructType(
-    [
-        _s("code"),
-        _s("url"),
-        _s("html"),
-        StructField("fetched_at", TimestampType(), nullable=True),
-        _s("status"),  # 'ok' | 'error_404' | 'deleted_listing' | 'fetch_error'
-        _s("error"),
-    ]
-)
 
 #: Flat output of the mapInPandas extraction operator (SURVEY §2.7):
 #: one row per code; the three relations split out of it afterwards.
@@ -130,8 +117,6 @@ EXTRACT_RESULT_SCHEMA = StructType(
 )
 
 PROCEDURE_CODES_COLUMNS = [f.name for f in PROCEDURE_CODES_SCHEMA.fields]
-PROCEDURE_MODIFIERS_COLUMNS = [f.name for f in PROCEDURE_MODIFIERS_SCHEMA.fields]
-PROCEDURE_NDC_COLUMNS = [f.name for f in PROCEDURE_NDC_SCHEMA.fields]
 
 #: Driver-provided TPC-H-ish testdata tables (TESTDATA.md / FIXTURES.md §B).
 TESTDATA_TABLES = [

@@ -3,7 +3,7 @@
 Hadoop's ``FileSystem.rename`` reports failure by returning ``False``
 rather than raising (unlike ``delete``, which raises on I/O errors).
 The swap sequences in :mod:`..operators.merge` and
-:mod:`.parquet` are only atomic if every rename actually happened —
+:mod:`..llm.forget` are only atomic if every rename actually happened —
 a silently failed ``rename(dst, backup)`` cascades: the follow-up
 ``rename(tmp, dst)`` also returns ``False`` (destination occupied),
 the backup delete still runs, and the caller reports success while

@@ -37,11 +37,6 @@ def read_table_or_empty(
     return spark.createDataFrame([], schema)
 
 
-def read_testdata(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
-    """Load one driver testdata table (TESTDATA.md)."""
-    return spark.read.parquet(os.path.join(sf_dir, f"{table}.parquet"))
-
-
 def _exists(path: str) -> bool:
     if "://" not in path or path.startswith("file:"):
         return os.path.exists(path.removeprefix("file:"))

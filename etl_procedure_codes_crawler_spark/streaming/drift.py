@@ -84,8 +84,7 @@ def stream_token_drift(
 # The TV monitor above measures the SIZE of a batch's shift; the
 # chi-square twin measures how IMPROBABLE the accumulated current
 # snapshot's per-source token mass is under no-drift vs the persisted
-# reference — the alerting-threshold statistic (llm/queries.py's
-# chi_square_source_drift, streamed). Per batch only (source, token
+# reference — the alerting-threshold statistic, streamed. Per batch only (source, token
 # total) integer rows land, keyed by batch run-id (replay replaces,
 # never double-counts — integer sums need no other bookkeeping, the
 # KMV gate's zero-bookkeeping idea applied to counts); the serve path
@@ -150,11 +149,11 @@ def chi_square_report(
 ) -> DataFrame:
     """(source, o_ref, o_cur, chi2_contrib) from the persisted
     reference and the accumulated batch counts — the IDENTICAL
-    fixed-order contingency expression as the batch query
-    (llm/queries.py chi_square_source_drift), so the streamed
-    statistic hash-matches the one-shot oracle. Sources seen in only
+    fixed-order contingency expression as a one-shot batch
+    computation, so the streamed statistic hash-matches the one-shot
+    oracle (streaming_chi_square_drift). Sources seen in only
     one snapshot carry zero mass on the other side (full outer +
-    coalesce), matching the batch query's conditional sums."""
+    coalesce), matching the one-shot conditional sums."""
     ref = spark.read.parquet(reference_path)
     cur = (
         spark.read.parquet(counts_path)

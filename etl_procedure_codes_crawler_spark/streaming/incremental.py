@@ -1,6 +1,5 @@
-"""Streaming incremental append — the reference's batch-incremental
-pattern (read existing → dedup new keys → append) as a continuous
-pipeline.
+"""Streaming ingest gates — the reference's batch-incremental pattern
+(read existing → dedup new keys → append) as continuous pipelines.
 
 The reference reruns the whole job per LOGICAL_DATE
 (``crawler/src/procedure_code.py:686-691``, ``:745-811``); here the
@@ -22,132 +21,11 @@ Exactly-once story (two layers, both needed at scale):
 
 from __future__ import annotations
 
-from typing import Callable
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
-from ..operators.dedup import anti_join_on_key
 from ..sources.parquet import read_table_or_empty
-
-
-def stream_incremental_append(
-    spark: SparkSession,
-    source_dir: str,
-    schema: StructType,
-    warehouse_path: str,
-    key: str,
-    checkpoint_dir: str,
-    transform: Callable[[DataFrame], DataFrame] | None = None,
-    available_now: bool = True,
-    max_files_per_trigger: int | None = None,
-    bloom_store_path: str | None = None,
-):
-    """Stream files from ``source_dir`` into ``warehouse_path``,
-    appending only rows whose ``key`` is new (vs the warehouse AND
-    within the batch). Returns the StreamingQuery handle.
-
-    With ``bloom_store_path`` set (a store from
-    ``llm.bloom.create_bloom_store`` — create it alongside the
-    warehouse, or seeded from it), each batch probes the persisted
-    Bloom filter first: keys probing definitely-new skip the
-    warehouse anti-join entirely, and only the maybe-seen slice pays
-    the exact check. At 100 TB that turns a per-batch
-    full-warehouse-side shuffle into k broadcast joins plus an
-    anti-join over ~fpr·batch rows. Exactly-once is preserved by
-    ordering: the batch's segment is appended to the bloom store
-    BEFORE the warehouse append — a crash between the two leaves the
-    filter over-approximating, which only routes rows to the exact
-    check; segment re-appends on replay are OR-idempotent."""
-
-    def _sink(batch: DataFrame, batch_id: int) -> None:
-        rows = batch
-        if transform is not None:
-            rows = transform(rows)
-        # NULL keys can never match the anti join, so a NULL-key row
-        # would re-append on EVERY batch (and on crash replay) —
-        # breaking both dedup and the exactly-once story. Same guard
-        # as the batch path's incremental_new_rows.
-        rows = rows.filter(F.col(key).isNotNull())
-        rows = rows.dropDuplicates([key])
-        if bloom_store_path is not None:
-            from ..llm import bloom as B
-
-            meta = B.load_bloom_meta(spark, bloom_store_path)
-            flt = B.read_bloom_store(spark, bloom_store_path)
-            if flt.isEmpty():
-                # coverage guard: an EMPTY filter guarding a NON-EMPTY
-                # warehouse means the store was created without seeding
-                # (or its segments were lost) — every probe would answer
-                # definitely-new and the fast path would re-append known
-                # keys with no error. Refuse loudly; the operator seeds
-                # via create_bloom_store(seed_df=warehouse).
-                probe = read_table_or_empty(
-                    spark, warehouse_path, rows.schema
-                )
-                if not probe.isEmpty():
-                    raise ValueError(
-                        f"bloom store {bloom_store_path!r} is empty but "
-                        f"warehouse {warehouse_path!r} has rows — the "
-                        "definitely-new fast path would re-append known "
-                        "keys; recreate the store seeded from the "
-                        "warehouse (create_bloom_store(seed_df=...))"
-                    )
-            probed = B.probe_bloom(
-                rows, key, flt, meta["m_bits"], meta["k"]
-            ).localCheckpoint(eager=True)
-            definite = probed.filter(~F.col("maybe_seen")).drop("maybe_seen")
-            suspects = probed.filter(F.col("maybe_seen")).drop("maybe_seen")
-            if suspects.isEmpty():
-                # every key is definitely new — skip the warehouse
-                # entirely (no scan is scheduled this batch)
-                fresh = definite
-            else:
-                existing = read_table_or_empty(
-                    spark, warehouse_path, rows.schema
-                )
-                fresh = definite.unionByName(
-                    anti_join_on_key(suspects, existing, key)
-                )
-        else:
-            existing = read_table_or_empty(spark, warehouse_path, rows.schema)
-            fresh = anti_join_on_key(rows, existing, key)
-        # materialize once: isEmpty would otherwise run the whole
-        # anti-join plan and the write would run it AGAIN from scratch
-        fresh = fresh.localCheckpoint(eager=True)
-        if not fresh.isEmpty():
-            if bloom_store_path is not None:
-                from ..llm import bloom as B
-
-                # BEFORE the warehouse append — see the ordering note
-                # in the docstring
-                B.append_to_bloom_store(
-                    spark, bloom_store_path, fresh, key
-                )
-            fresh.write.mode("append").option(
-                "compression", "snappy"
-            ).parquet(warehouse_path)
-
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(source_dir)
-
-    writer = (
-        stream.writeStream.foreachBatch(_sink)
-        .option("checkpointLocation", checkpoint_dir)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
-def budget_stats_path(warehouse_path: str) -> str:
-    """Default location of the per-source consumed-token stats
-    artifact: a SIBLING directory of the warehouse (never inside it —
-    the warehouse scan must not pick the stats files up)."""
-    return warehouse_path.rstrip("/") + "_budget_stats"
 
 
 def _budget_stats_schema(source_col: str) -> StructType:
@@ -211,7 +89,7 @@ def read_consumed_tokens(
     is exact and dedup restores the true sum. With ``exclude`` set to
     the calling batch's own (gate_id, batch_id), the batch sees the
     world as of BEFORE its first attempt — the replay-determinism
-    contract (see :func:`stream_ingest_with_budget`)."""
+    contract of the unified gate's budget stage (:mod:`.unified`)."""
     stats = read_table_or_empty(
         spark, stats_path, _budget_stats_schema(source_col)
     )
@@ -228,38 +106,6 @@ def read_consumed_tokens(
         .groupBy(source_col)
         .agg(F.sum("n_tokens").alias("_used"))
     )
-
-
-def heal_budget_stats(
-    spark: SparkSession,
-    warehouse_path: str,
-    warehouse_schema: StructType,
-    stats_path: str,
-    source_col: str = "source",
-    text_col: str = "text",
-) -> None:
-    """Rebuild the stats artifact from the warehouse — the ONE
-    remaining O(corpus) aggregation, deliberately confined to the heal
-    path (stats lost/deleted, or a gate pointed at a pre-existing
-    warehouse). Overwrites the artifact with a single baseline row per
-    source under the reserved ``(gate_id='heal', batch_id=-1)`` key;
-    a crash mid-write is healed by the next call (parquet overwrite
-    commits via rename, and the auto-heal re-fires while the artifact
-    is empty)."""
-    from ..llm.text import token_count
-
-    wh = read_table_or_empty(spark, warehouse_path, warehouse_schema)
-    baseline = (
-        wh.groupBy(source_col)
-        .agg(F.sum(token_count(text_col)).alias("n_tokens"))
-        .select(
-            F.lit("heal").alias("gate_id"),
-            F.lit(-1).cast("bigint").alias("batch_id"),
-            F.col(source_col),
-            F.col("n_tokens").cast("bigint").alias("n_tokens"),
-        )
-    )
-    baseline.repartition(1).write.mode("overwrite").parquet(stats_path)
 
 
 def budget_filter(
@@ -315,594 +161,6 @@ def budget_filter(
     )
 
 
-def stream_ingest_with_budget(
-    spark: SparkSession,
-    source_dir: str,
-    schema: StructType,
-    warehouse_path: str,
-    checkpoint_dir: str,
-    budgets: dict[str, int],
-    key: str = "doc_id",
-    source_col: str = "source",
-    text_col: str = "text",
-    available_now: bool = True,
-    max_files_per_trigger: int | None = None,
-    stats_path: str | None = None,
-    bloom_store_path: str | None = None,
-):
-    """Ingest with PER-SOURCE TOKEN BUDGETS enforced at the gate — the
-    UniMax-style mixture cap applied online: once a source's accepted
-    token count reaches its budget, further documents from that source
-    are rejected (whole documents only; a partial doc is never split).
-
-    Scale shape (this is the 100 TB design, not the sf0.01 one): the
-    already-consumed count per source comes from a TINY transactional
-    stats artifact (``stats_path``, default a warehouse sibling —
-    O(batches × sources) rows), NOT from re-aggregating the warehouse;
-    the only remaining per-batch corpus-sized work is the id anti-join,
-    and with ``bloom_store_path`` set even that collapses: keys probing
-    definitely-new skip the warehouse entirely (a batch whose keys are
-    all new schedules ZERO warehouse reads — pinned by
-    tests/test_streaming_incremental.py's corrupt-warehouse-file test),
-    and only the maybe-seen slice pays the exact check.
-
-    Crash contract (write order is load-bearing — stats FIRST, then
-    bloom, then warehouse):
-
-    - The batch's stats delta is keyed ``(gate_id, batch_id)`` where
-      gate_id is the StreamingQuery id persisted in the checkpoint.
-      When computing consumed-before, a batch EXCLUDES its own key —
-      so a replay (same checkpoint → same gate_id+batch_id) sees the
-      identical consumed-before state and, decisions being
-      deterministic in ``key`` order, re-makes the identical
-      accept/reject set. Re-appended stats rows are byte-identical and
-      deduped on read.
-    - Crash after stats, before warehouse: the replay re-decides
-      identically and lands the data; nothing drifts.
-    - Crash after warehouse append: the replay's id anti-join empties
-      the batch; the stats row is already durable. (Stats-LAST would
-      instead lose the row forever here — the replay can no longer see
-      what the crashed attempt accepted.)
-    - Checkpoint wiped (outside the exactly-once contract but handled):
-      a new gate_id means old rows count as plain history; the id
-      anti-join still blocks re-appends, so the budget can only
-      under-fill, never overflow. ``heal_budget_stats`` restores
-      exactness.
-    - Stats artifact lost while the warehouse has data: auto-healed —
-      the sink detects the empty artifact and rebuilds it from the
-      warehouse ONCE (the heal path is the only O(corpus) aggregation
-      left; round 7 ran it every batch).
-    """
-    from ..operators.dedup import anti_join_on_key as _anti
-
-    if stats_path is None:
-        stats_path = budget_stats_path(warehouse_path)
-    gate_cache: dict[str, str] = {}
-
-    def _sink(batch: DataFrame, batch_id: int) -> None:
-        if "id" not in gate_cache:
-            gate_cache["id"] = _stream_gate_id(spark, checkpoint_dir)
-        gate_id = gate_cache["id"]
-        rows = batch.filter(F.col(key).isNotNull()).dropDuplicates([key])
-        stats_probe = read_table_or_empty(
-            spark, stats_path, _budget_stats_schema(source_col)
-        )
-        if stats_probe.isEmpty():
-            # empty stats + non-empty warehouse = unseeded gate (stats
-            # lost, or pointed at an existing corpus) — rebuild once
-            # rather than silently treating every budget as unspent
-            probe = read_table_or_empty(spark, warehouse_path, batch.schema)
-            if not probe.isEmpty():
-                heal_budget_stats(
-                    spark, warehouse_path, batch.schema, stats_path,
-                    source_col, text_col,
-                )
-        consumed = read_consumed_tokens(
-            spark, stats_path, source_col, exclude=(gate_id, batch_id)
-        )
-        if bloom_store_path is not None:
-            from ..llm import bloom as B
-
-            meta = B.load_bloom_meta(spark, bloom_store_path)
-            flt = B.read_bloom_store(spark, bloom_store_path)
-            if flt.isEmpty():
-                # same coverage guard as stream_incremental_append: an
-                # empty filter over a non-empty warehouse would wave
-                # every known key through the definitely-new fast path
-                probe = read_table_or_empty(
-                    spark, warehouse_path, batch.schema
-                )
-                if not probe.isEmpty():
-                    raise ValueError(
-                        f"bloom store {bloom_store_path!r} is empty but "
-                        f"warehouse {warehouse_path!r} has rows — seed "
-                        "the store from the warehouse first"
-                    )
-            probed = B.probe_bloom(
-                rows, key, flt, meta["m_bits"], meta["k"]
-            ).localCheckpoint(eager=True)
-            definite = probed.filter(~F.col("maybe_seen")).drop("maybe_seen")
-            suspects = probed.filter(F.col("maybe_seen")).drop("maybe_seen")
-            if suspects.isEmpty():
-                # every key is definitely new — the warehouse is not
-                # read AT ALL this batch
-                fresh = definite
-            else:
-                existing = read_table_or_empty(
-                    spark, warehouse_path, batch.schema
-                )
-                fresh = definite.unionByName(
-                    _anti(suspects, existing, key)
-                )
-        else:
-            existing = read_table_or_empty(spark, warehouse_path, batch.schema)
-            fresh = _anti(rows, existing, key)
-        accepted = budget_filter(
-            fresh, consumed, budgets, key, source_col, text_col
-        ).localCheckpoint(eager=True)
-        if not accepted.isEmpty():
-            # stats delta FIRST (see the crash contract above), from
-            # the _n_tok column budget_filter left attached — the
-            # batch is never re-tokenized
-            delta = (
-                accepted.groupBy(source_col)
-                .agg(F.sum("_n_tok").alias("n_tokens"))
-                .select(
-                    F.lit(gate_id).alias("gate_id"),
-                    F.lit(int(batch_id)).cast("bigint").alias("batch_id"),
-                    F.col(source_col),
-                    F.col("n_tokens").cast("bigint").alias("n_tokens"),
-                )
-            )
-            delta.repartition(1).write.mode("append").parquet(stats_path)
-            if bloom_store_path is not None:
-                from ..llm import bloom as B
-
-                # BEFORE the warehouse append — over-approximation only
-                # routes replayed keys to the exact check
-                B.append_to_bloom_store(
-                    spark, bloom_store_path, accepted, key
-                )
-            accepted.drop("_n_tok").write.mode("append").option(
-                "compression", "snappy"
-            ).parquet(warehouse_path)
-
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(source_dir)
-    writer = stream.writeStream.foreachBatch(_sink).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
-def stream_training_shuffle(
-    spark: SparkSession,
-    source_dir: str,
-    schema: StructType,
-    manifest_path: str,
-    checkpoint_dir: str,
-    id_col: str = "doc_id",
-    num_shards: int = 8,
-    seed: int = 1,
-    available_now: bool = True,
-    max_files_per_trigger: int | None = None,
-):
-    """Continuous manifest growth: newly arriving corpus files are
-    assigned (shard, pos) read-order slots that extend the live
-    manifest at ``manifest_path`` — the streaming twin of
-    ``llm.packing.training_shuffle_incremental``, with the same
-    written-files-never-move guarantee.
-
-    Rank windows are unsupported on streaming DataFrames, so the
-    assignment runs inside ``foreachBatch`` (the sanctioned escape
-    hatch, as in :func:`stream_incremental_append`): each micro-batch
-    anti-joins the manifest snapshot (skipping replayed ids — that is
-    also what makes a crash-replayed batch idempotent), takes each
-    shard's current MAX pos (num_shards rows, broadcast), and appends
-    only the new assignments. The checkpoint makes file progress
-    durable across restarts."""
-    from pyspark.sql.types import LongType, StructField
-
-    from ..llm.packing import training_shuffle_incremental
-
-    manifest_schema = StructType(
-        [
-            StructField(id_col, LongType()),
-            StructField("shard", LongType()),
-            StructField("pos", LongType()),
-        ]
-    )
-
-    def _sink(batch: DataFrame, batch_id: int) -> None:
-        snapshot = read_table_or_empty(spark, manifest_path, manifest_schema)
-        fresh = training_shuffle_incremental(
-            batch.select(id_col).dropDuplicates([id_col]),
-            snapshot,
-            id_col,
-            num_shards,
-            seed,
-        )
-        # materialize once (isEmpty + write would otherwise each run
-        # the anti-join + rank window + max-pos join from scratch)
-        fresh = fresh.localCheckpoint(eager=True)
-        if not fresh.isEmpty():
-            fresh.write.mode("append").option(
-                "compression", "snappy"
-            ).parquet(manifest_path)
-
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(source_dir)
-    writer = (
-        stream.writeStream.foreachBatch(_sink)
-        .option("checkpointLocation", checkpoint_dir)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
-def stream_ingest_with_neardup(
-    spark: SparkSession,
-    source_dir: str,
-    schema: StructType,
-    warehouse_path: str,
-    store_path: str,
-    checkpoint_dir: str,
-    threshold: float = 0.5,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    available_now: bool = True,
-    max_files_per_trigger: int | None = None,
-    eval_store_path: str | None = None,
-    eval_min_shared: int = 2,
-    metrics_path: str | None = None,
-    quality_model: dict | None = None,
-    quality_cutoff: float = 0.0,
-    version_each_batch: bool = False,
-    neardup_action: str = "reject",
-):
-    """The full corpus ingest gate as one continuous pipeline: each
-    arriving batch is (1) id-deduped against the warehouse (replay
-    safety + exact re-crawls), (2) near-dup-collapsed WITHIN the batch
-    (a crawl burst fetching the same boilerplate page under many URLs
-    arrives in one micro-batch — the store can't gate those because
-    none of them is in the store yet), (3) NEAR-dup-gated against the
-    persisted MinHash store (fuzzy re-crawls and boilerplate variants
-    never enter the corpus), and (4) survivors are appended to the
-    warehouse AND their signatures to the store — so the next batch
-    is judged against everything accepted so far.
-
-    Intra-batch collapse rule, deterministic and conservative: verify
-    LSH candidates with exact Jaccard (``minhash_near_dup_pairs``,
-    banding params from the store's meta) and drop every doc that is
-    the GREATER id of any qualifying pair. In a near-dup chain
-    a~b~c with a≁c this drops both b and c — acceptable for a gate
-    whose job is "never let two near-dups of one page into the
-    corpus"; the kept doc is always the cluster's minimum id, so a
-    replayed batch collapses identically.
-
-    With ``metrics_path`` set, each batch appends ONE observability
-    row — ``(batch_id, n_input, n_rows, n_fresh, n_quality_rejected,
-    n_intra_dropped, n_contaminated, n_neardup_rejected, n_accepted)``
-    — so rejection rates are queryable without log scraping. ``n_input`` counts raw
-    arrivals BEFORE the NULL-id filter and id-dedup (a feed gone bad
-    must show in the audit). Auditing is (almost) free: every count
-    rides an ``Observation`` on a localCheckpoint the sink already
-    executes — CollectMetrics accumulators on existing jobs, ZERO
-    extra count jobs (round 6 ran up to 6 ``count()`` jobs per
-    audited batch; a plan-shape test pins that audit-on adds only the
-    metric-row write). Callers without a metrics_path skip even the
-    observe nodes. The metric write happens LAST (a crash loses at
-    most the metric row, never the data); replayed batches re-emit
-    their row, so the audit shows the replay.
-
-    With ``eval_store_path`` set (a winnowing store built by
-    ``fingerprint.build_winnow_store`` over the benchmark/eval
-    corpus), the gate ALSO rejects batch docs sharing
-    ``eval_min_shared``+ winnowing fingerprints with any eval doc —
-    decontamination enforced at the corpus front door rather than as
-    a post-hoc sweep. The eval check is stateless per batch (the eval
-    store only changes when benchmarks are added), so it composes
-    with the crash contract unchanged.
-
-    With ``quality_model`` set (feature-name → coefficient, the
-    ``llm.quality.score_documents`` contract), docs whose linear
-    quality margin is <= ``quality_cutoff`` — or whose text is NULL
-    (no score means no admission) — are rejected right after the id
-    gate, BEFORE the near-dup machinery spends MinHash/winnowing work
-    on docs that were never going to enter the corpus.
-    The scorer is per-row column math (model-as-data, no UDF), so the
-    stage adds no shuffle; rejects show as ``n_quality_rejected``.
-    Like every other gate stage it only ever REMOVES batch docs, so
-    crash replay and store reconciliation are unchanged.
-
-    With ``version_each_batch`` set, every batch that appends rows
-    also commits a warehouse version (:mod:`..sinks.versions`, note
-    ``"ingest batch <id>"``) — training runs can pin "the corpus as
-    of batch N" and time-travel across ingest history for free
-    (manifests are metadata-only).
-
-    Build the store first (``neardup_store.build_minhash_store`` — an
-    empty corpus is fine). Crash semantics: the id anti-join makes a
-    replayed batch a no-op on the warehouse, and the store side is
-    RECONCILED rather than blindly appended — every batch doc the
-    warehouse already holds is offered to the store (whose own id
-    anti-join no-ops the already-signed ones) at the TOP of the sink,
-    BEFORE any gating. The ordering is load-bearing: a crash between
-    the warehouse write and the signature append leaves accepted docs
-    unsigned, and if the replay gated before healing, a near-dup of a
-    crashed doc (its intra-batch twin, or a fuzzy re-crawl) would
-    sail through the store gate and land in the warehouse next to it.
-    Heal-first closes that window: the replay back-fills the missing
-    signatures, THEN judges the remainder of the batch against them —
-    pinned by both crash tests in tests/test_neardup_store.py (a
-    naive accepted-only append would permanently lose the crashed
-    batch's signatures, because the replay's empty fresh set
-    short-circuits before reaching them).
-
-    ``neardup_action`` selects the corpus policy at the near-dup
-    stage: ``"reject"`` (default, everything above) drops near-dups at
-    the door; ``"label"`` ADMITS them and instead records the observed
-    pairs (intra-batch + vs-store) into the store's incremental
-    cluster labels (:func:`..llm.neardup_store.update_cluster_labels`)
-    — quality-argmax survivor selection then runs at ingest off the
-    persisted ``(id, cluster_id)`` relation
-    (:func:`..llm.neardup_store.store_cluster_labels` +
-    ``cluster.keep_best_in_cluster``) with no from-scratch component
-    recompute. The edge append rides BEFORE the warehouse append, so a
-    crash between them replays into duplicate edge rows (harmless to
-    components) rather than lost ones; a crash inside the label update
-    itself is healed by the update's own staleness token."""
-    if neardup_action not in ("reject", "label"):
-        raise ValueError(
-            f"neardup_action must be 'reject' or 'label', got "
-            f"{neardup_action!r}"
-        )
-    from ..llm.dedup import minhash_near_dup_pairs
-    from ..llm.neardup_store import (
-        append_to_minhash_store,
-        load_store_meta,
-        near_dups_against_store,
-        update_cluster_labels,
-    )
-
-    def _sink(batch: DataFrame, batch_id: int) -> None:
-        from pyspark.sql import Observation
-
-        audit = metrics_path is not None
-        m = {"n_input": 0, "n_rows": 0, "n_fresh": 0,
-             "n_quality_rejected": 0, "n_intra_dropped": 0,
-             "n_contaminated": 0, "n_neardup_rejected": 0, "n_accepted": 0}
-        _n = F.count(F.lit(1)).alias("n")
-
-        def observed(df: DataFrame, obs) -> DataFrame:
-            return df.observe(obs, _n) if obs is not None else df
-
-        # raw arrivals BEFORE the NULL-id filter and id-dedup (a feed
-        # suddenly full of NULL-id rows must be visible in the audit)
-        # and the post-dedup count both ride the SAME checkpoint job
-        # as accumulators — no extra scan of the batch
-        o_input = Observation() if audit else None
-        o_rows = Observation() if audit else None
-        rows = observed(
-            observed(batch, o_input)
-            .filter(F.col(id_col).isNotNull())
-            .dropDuplicates([id_col]),
-            o_rows,
-        ).localCheckpoint(eager=True)  # consumed up to three times
-        if audit:
-            m["n_input"] = int(o_input.get["n"])
-            m["n_rows"] = int(o_rows.get["n"])
-        existing = read_table_or_empty(spark, warehouse_path, rows.schema)
-        # crash-heal FIRST, before any gating: a prior run may have
-        # died between its warehouse write and its store append, so
-        # batch docs the warehouse already holds get their missing
-        # signatures back-filled NOW — if it happened after, a replayed
-        # batch's near-dups of the crashed docs would sail through the
-        # store gate unsigned (steady state: the store's own id
-        # anti-join makes this a no-op)
-        warehoused = rows.join(existing.select(id_col), id_col, "left_semi")
-        append_to_minhash_store(spark, store_path, warehoused, text_col, id_col)
-        o_fresh = Observation() if audit else None
-        fresh = observed(
-            rows.join(existing.select(id_col), id_col, "left_anti"), o_fresh
-        ).localCheckpoint(eager=True)  # two consumers below
-        if audit:
-            m["n_fresh"] = int(o_fresh.get["n"])
-        if quality_model is not None and not fresh.isEmpty():
-            from ..llm.quality import score_documents
-
-            # cheapest gate first: per-row column math drops docs that
-            # were never going to be accepted BEFORE MinHash/winnowing
-            # work is spent on them
-            # NULL text scores NULL -> keep NULL; a bare ~keep would
-            # silently ACCEPT those rows (NULL is excluded by where).
-            # A corpus gate must reject what it cannot score.
-            low_quality = (
-                score_documents(
-                    fresh,
-                    model=quality_model,
-                    text_col=text_col,
-                    id_col=id_col,
-                    threshold=quality_cutoff,
-                )
-                .where(~F.coalesce(F.col("keep"), F.lit(False)))
-                .select(id_col)
-            )
-            o_qual = Observation() if audit else None
-            fresh = observed(
-                fresh.join(low_quality, id_col, "left_anti"), o_qual
-            ).localCheckpoint(eager=True)
-            if audit:
-                m["n_quality_rejected"] = m["n_fresh"] - int(o_qual.get["n"])
-        if neardup_action == "reject" and not fresh.isEmpty():
-            # intra-batch collapse: two near-dups arriving in the SAME
-            # micro-batch both pass the store gate (neither is stored
-            # yet) — drop every greater-id member of a verified pair
-            # so at most one representative per near-dup cluster goes
-            # on to the store gate and the warehouse (label mode keeps
-            # them and records the pairs as cluster edges below)
-            meta = load_store_meta(spark, store_path)
-            intra_losers = (
-                minhash_near_dup_pairs(
-                    fresh,
-                    text_col,
-                    id_col,
-                    meta["k"],
-                    meta["bands"],
-                    meta["rows_per_band"],
-                    threshold,
-                )
-                .select(F.col("doc_b").alias(id_col))
-                .distinct()
-            )
-            o_intra = Observation() if audit else None
-            fresh = observed(
-                fresh.join(intra_losers, id_col, "left_anti"), o_intra
-            ).localCheckpoint(
-                eager=True  # two consumers below, and the pair scan above
-            )
-            if audit:
-                m["n_intra_dropped"] = (
-                    m["n_fresh"]
-                    - m["n_quality_rejected"]
-                    - int(o_intra.get["n"])
-                )
-        if eval_store_path is not None and not fresh.isEmpty():
-            from ..llm.fingerprint import contamination_against_store
-
-            contaminated = (
-                contamination_against_store(
-                    spark, eval_store_path, fresh, text_col, id_col,
-                    min_shared=eval_min_shared,
-                )
-                .select(F.col("new_id").alias(id_col))
-                .distinct()
-            )
-            o_surv = Observation() if audit else None
-            survivors = observed(
-                fresh.join(contaminated, id_col, "left_anti"), o_surv
-            ).localCheckpoint(eager=True)
-            if audit:
-                n_before = (
-                    m["n_fresh"]
-                    - m["n_quality_rejected"]
-                    - m["n_intra_dropped"]
-                )
-                m["n_contaminated"] = n_before - int(o_surv.get["n"])
-            fresh = survivors
-        if not fresh.isEmpty():
-            if neardup_action == "label":
-                # admit near-dups, persist their pair structure: the
-                # observed edges feed the store's incremental cluster
-                # labels BEFORE the warehouse append (a crash between
-                # replays into duplicate edges, never lost ones)
-                meta = load_store_meta(spark, store_path)
-                intra_pairs = minhash_near_dup_pairs(
-                    fresh,
-                    text_col,
-                    id_col,
-                    meta["k"],
-                    meta["bands"],
-                    meta["rows_per_band"],
-                    threshold,
-                ).select("doc_a", "doc_b")
-                store_pairs = near_dups_against_store(
-                    spark, store_path, fresh, threshold, text_col, id_col
-                ).select(
-                    F.col("new_id").alias("doc_a"),
-                    F.col("snapshot_id").alias("doc_b"),
-                )
-                update_cluster_labels(
-                    spark,
-                    store_path,
-                    intra_pairs.unionByName(store_pairs),
-                )
-                near = fresh.limit(0).select(id_col)  # nobody rejected
-            else:
-                near = (
-                    near_dups_against_store(
-                        spark, store_path, fresh, threshold, text_col, id_col
-                    )
-                    .select(F.col("new_id").alias(id_col))
-                    .distinct()
-                )
-            o_acc = Observation() if audit else None
-            accepted = observed(
-                fresh.join(near, id_col, "left_anti"), o_acc
-            ).localCheckpoint(
-                eager=True  # lineage reads the warehouse being appended
-            )
-            if audit:
-                m["n_accepted"] = int(o_acc.get["n"])
-                n_gate_in = (
-                    m["n_fresh"]
-                    - m["n_quality_rejected"]
-                    - m["n_intra_dropped"]
-                    - m["n_contaminated"]
-                )
-                m["n_neardup_rejected"] = n_gate_in - m["n_accepted"]
-            if not accepted.isEmpty():
-                accepted.write.mode("append").option(
-                    "compression", "snappy"
-                ).parquet(warehouse_path)
-                if version_each_batch:
-                    # stamp the warehouse AS OF this batch — a training
-                    # run can pin "the corpus after ingest batch N"
-                    # (sinks.versions manifests are metadata-only and
-                    # live in a SIBLING directory the stream never
-                    # reads). Committed right after the append so the
-                    # version exists even if the store append below
-                    # crashes; a crash BETWEEN append and commit loses
-                    # only this batch's version stamp (the data is safe
-                    # and the replay no-ops), visible as a gap in the
-                    # version notes.
-                    from ..sinks.versions import commit_version
-
-                    commit_version(
-                        spark,
-                        warehouse_path,
-                        note=f"ingest batch {int(batch_id)}",
-                    )
-                # sign the newly accepted docs; a crash between the
-                # two writes above is healed by the reconciliation at
-                # the TOP of the next replay
-                append_to_minhash_store(
-                    spark, store_path, accepted, text_col, id_col
-                )
-        if audit:
-            spark.createDataFrame(
-                [(
-                    int(batch_id), m["n_input"], m["n_rows"], m["n_fresh"],
-                    m["n_quality_rejected"], m["n_intra_dropped"],
-                    m["n_contaminated"], m["n_neardup_rejected"],
-                    m["n_accepted"],
-                )],
-                "batch_id bigint, n_input bigint, n_rows bigint, "
-                "n_fresh bigint, n_quality_rejected bigint, "
-                "n_intra_dropped bigint, n_contaminated bigint, "
-                "n_neardup_rejected bigint, n_accepted bigint",
-            ).repartition(1).write.mode("append").parquet(metrics_path)
-
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(source_dir)
-    writer = (
-        stream.writeStream.foreachBatch(_sink)
-        .option("checkpointLocation", checkpoint_dir)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
 def stream_ingest_media_neardup(
     spark: SparkSession,
     source_dir: str,
@@ -919,8 +177,7 @@ def stream_ingest_media_neardup(
     gate_shuffle_partitions: int | None = None,
 ):
     """The MEDIA ingest gate: perceptual near-dup dedup for
-    image/audio payloads at the corpus front door — the multimodal
-    twin of :func:`stream_ingest_with_neardup`. Each batch is
+    image/audio payloads at the corpus front door. Each batch is
     (1) id-deduped against the warehouse (replay safety), (2) decoded
     + perceptually hashed in ONE Arrow pass (``hasher`` maps a media
     frame to (media_id, phash, ...) — default
@@ -937,13 +194,13 @@ def stream_ingest_media_neardup(
     perceptual stages — an undecodable object has no perceptual
     identity to compare, and the exact-id gate already holds; the
     error is preserved in the store-less hash relation for auditing
-    upstream. Crash contract mirrors the text gate: heal-first (batch
+    upstream. Crash contract: heal-first (batch
     objects the warehouse already holds are offered to the store
     before any gating), store append BEFORE warehouse append
     (over-approximation only ever rejects a would-be duplicate
     earlier), id anti-join makes replays no-ops.
 
-    ``neardup_action="label"`` (same policy switch as the text gate):
+    ``neardup_action="label"``:
     perceptual copies are ADMITTED and the observed pairs (intra-batch
     + vs-store) land in the phash store's incremental cluster labels
     (the :mod:`..llm.neardup_store` edge-log/label machinery is
@@ -1213,99 +470,6 @@ def stream_ingest_with_boilerplate(
         stripped.write.mode("append").option(
             "compression", "snappy"
         ).parquet(warehouse_path)
-
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(source_dir)
-    writer = stream.writeStream.foreachBatch(_sink).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
-def compact_budget_stats(
-    spark: SparkSession, stats_path: str, target_file_mb: int = 16
-) -> int:
-    """Restore a compact layout for the budget-gate stats artifact —
-    every accepted batch appends one file, so a year-long gate
-    accretes tens of thousands of tiny files whose listing cost the
-    per-batch consumed read pays forever. Safe anytime the gate is not
-    mid-batch: rows are read through a (gate_id, batch_id, source)
-    dedup + sum, which is invariant under file re-layout. Delegates to
-    :func:`..sinks.parquet.compact_dataset` (atomic swap,
-    crash-healed on the next call)."""
-    from ..sinks.parquet import compact_dataset
-
-    return compact_dataset(spark, stats_path, target_file_mb)
-
-
-def stream_ingest_with_kmv(
-    spark: SparkSession,
-    source_dir: str,
-    schema: StructType,
-    warehouse_path: str,
-    store_path: str,
-    checkpoint_dir: str,
-    group_col: str = "source",
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    available_now: bool = True,
-    max_files_per_trigger: int | None = None,
-):
-    """Cardinality-tracking ingest: every admitted batch folds its
-    per-group KMV bottom-k into the persisted sketch store
-    (:mod:`..llm.kmv`) inside the batch commit, so per-source
-    distinct-content estimates are SERVED off k rows per group at any
-    moment of the stream's life — never by rescanning the warehouse.
-
-    This gate is deliberately the simplest of the family, because the
-    sketch erases the usual crash-replay machinery: bottom-k over a
-    hash set is idempotent under re-offer (llm/kmv.py module notes),
-    so unlike the budget gate (transactional stats artifact), the
-    passage gate (batch-keyed segments + read-side dedup), or the
-    media gate (id anti-join), a replayed KMV append needs NO
-    bookkeeping — the store converges to the same k minima in every
-    crash interleaving. The warehouse append keeps the standard
-    exactly-once anti-join; the store append keeps nothing.
-
-    Offered as one availableNow batch, the stored sketch equals the
-    one-shot corpus sketch BIT-FOR-BIT (exact merge), which is what
-    lets the streaming query share the batch DuckDB oracle. Across
-    many batches the estimates are exact-merge cumulative — unlike the
-    boilerplate gate there is no monotone approximation to document:
-    the sketch after batch N is exactly the sketch of batches 1..N.
-    """
-    from ..llm import kmv as KV
-
-    def _sink(batch: DataFrame, batch_id: int) -> None:
-        rows = (
-            batch.filter(F.col(id_col).isNotNull())
-            .dropDuplicates([id_col])
-            .localCheckpoint(eager=True)  # sketched + appended
-        )
-        from ..sinks.fsutil import hadoop_fs
-
-        fs, hpath = hadoop_fs(spark, warehouse_path)
-        if fs.exists(hpath(warehouse_path)):
-            existing_ids = spark.read.parquet(warehouse_path).select(id_col)
-            fresh = rows.join(
-                existing_ids, id_col, "left_anti"
-            ).localCheckpoint(eager=True)
-        else:
-            fresh = rows
-        if fresh.isEmpty():
-            return
-        # sketch BEFORE warehouse: a crash between the two re-offers
-        # the batch, the replayed sketch append is a semantic no-op
-        # (idempotent minima), and the warehouse anti-join drops the
-        # duplicate rows — both artifacts converge in every order.
-        KV.append_to_kmv_store(spark, store_path, fresh, group_col, text_col)
-        fresh.write.mode("append").option("compression", "snappy").parquet(
-            warehouse_path
-        )
 
     reader = spark.readStream.schema(schema)
     if max_files_per_trigger is not None:

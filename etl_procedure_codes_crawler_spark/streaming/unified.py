@@ -184,8 +184,6 @@ def mjpeg_prefix_video_hashes(
     # guide §4.1) — payloads never leave the Python worker, where the
     # round-11 two-operator chain still Arrow-serialized every clip
     # out of the synth pass and back into the identity pass
-    # (clip_identity_hashes' docstring has the older history: the
-    # checkpoint+join+agg first cut cost three extra batch stages)
     return V.clip_identity_from_documents(view)
 
 

@@ -29,12 +29,9 @@ FAMILIES: list[tuple[str, tuple[str, ...]]] = [
     (
         "Training-data pipeline",
         (
-            "llm_corpus", "token_count", "text_quality", "lang_id",
-            "doc_fingerprints", "tfidf", "inverted_index", "bigram",
-            "stratified_sample", "doc_repetition", "contamination",
-            "pii_scan", "source_mixing", "doc_bigram",
-            "sequence_packing", "sequence_manifest", "vocab_",
-            "passage_", "user_value_trends", "levenshtein",
+            "llm_corpus", "token_count", "text_quality", "tfidf",
+            "contamination", "pii_scan", "sequence_packing", "vocab_",
+            "passage_", "user_value_trends",
         ),
     ),
     ("Multimodal", ("multimodal_",)),
@@ -44,19 +41,11 @@ FAMILIES: list[tuple[str, tuple[str, ...]]] = [
     ),
     (
         "Windows / sessions / funnels",
-        (
-            "window_", "sessionize", "funnel_", "cohort_",
-            "customer_spend_deciles", "date_spine",
-        ),
+        ("window_", "sessionize", "funnel_"),
     ),
     (
         "Joins",
-        ("anti_join", "semi_join", "asof_", "range_join", "cross_join",
-         "full_outer",),
-    ),
-    (
-        "Sketches / approximation",
-        ("approx_", "hll_",),
+        ("anti_join", "asof_", "range_join"),
     ),
     (
         "Relational breadth",

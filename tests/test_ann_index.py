@@ -1,5 +1,5 @@
 """Persisted IVF+PQ index: build/query equality with the one-shot
-operator, incremental append, and partition pruning (llm/index.py)."""
+operator and partition pruning (llm/index.py)."""
 
 from __future__ import annotations
 
@@ -49,33 +49,6 @@ def test_query_scan_partition_prunes_to_probe_cells(spark, emb, tmp_path):
     assert m and len(m.group(1).split(",")) <= 6, plan
 
 
-def test_append_grows_without_retraining_and_is_idempotent(
-    spark, emb, tmp_path
-):
-    path = str(tmp_path / "ix")
-    first = emb.filter(F.col("vec_id") % 2 == 0)
-    rest = emb.filter(F.col("vec_id") % 2 == 1)
-    IX.build_ivfpq_index(first, path, num_centroids=8, seed=42)
-    n0 = spark.read.parquet(path + "/coded").count()
-
-    n_added = IX.append_to_ivfpq_index(spark, path, rest)
-    assert n_added == rest.count()
-    assert spark.read.parquet(path + "/coded").count() == n0 + n_added
-    # replaying the same batch appends nothing (anti-join on id)
-    assert IX.append_to_ivfpq_index(spark, path, rest) == 0
-
-    # appended vectors are findable: querying BY an appended vector
-    # must return its exact-duplicate-free neighborhood incl. at
-    # least one appended id among top-k (odd ids are half the corpus)
-    q = rest.filter(F.col("vec_id") < 10)
-    res = IX.query_ivfpq_index(spark, path, q, k=5, nprobe=4).collect()
-    assert len(res) > 0
-    per_q = {}
-    for r in res:
-        per_q.setdefault(r.query_id, []).append(r.neighbor_id)
-    assert all(len(v) == 5 for v in per_q.values())
-
-
 def test_empty_query_set_rejected(spark, emb, tmp_path):
     path = str(tmp_path / "ix")
     IX.build_ivfpq_index(emb, path, num_centroids=8, seed=42)
@@ -83,27 +56,6 @@ def test_empty_query_set_rejected(spark, emb, tmp_path):
         IX.query_ivfpq_index(
             spark, path, emb.filter(F.col("vec_id") < 0), k=3
         )
-
-
-def test_distributed_query_path_equals_driver_path(spark, emb, tmp_path):
-    """The DataFrame query path (large batches, no driver collect)
-    must return exactly what the collect-based serving path returns —
-    same quantizers, same tie rules."""
-    path = str(tmp_path / "ix")
-    IX.build_ivfpq_index(emb, path, num_centroids=16, seed=42)
-    queries = emb.filter(F.col("vec_id") < 20)
-    a = sorted(
-        map(tuple, IX.query_ivfpq_index(spark, path, queries, k=5, nprobe=6).collect())
-    )
-    b = sorted(
-        map(
-            tuple,
-            IX.query_ivfpq_index_distributed(
-                spark, path, queries, k=5, nprobe=6
-            ).collect(),
-        )
-    )
-    assert a == b
 
 
 def test_string_id_corpus_round_trips(spark, emb, tmp_path):
@@ -121,128 +73,11 @@ def test_string_id_corpus_round_trips(spark, emb, tmp_path):
     rows = out.collect()
     assert rows and all(isinstance(r.query_id, str) for r in rows)
     assert all(isinstance(r.neighbor_id, str) for r in rows)
-    # and it agrees with the id-type-agnostic distributed twin
-    dist = IX.query_ivfpq_index_distributed(spark, path, queries, k=3, nprobe=4)
-    assert sorted(map(tuple, rows)) == sorted(map(tuple, dist.collect()))
-
-
-# ---------------------------------------------------------------------------
-# Compaction: appends accrete one file per cell per batch; compaction
-# must restore one-file-per-cell with BIT-IDENTICAL query results
-# ---------------------------------------------------------------------------
-
-
-def _parquet_files(path):
-    import glob
-
-    return glob.glob(f"{path}/coded/cell=*/part-*.parquet")
-
-
-def test_compaction_restores_one_file_per_cell_query_identical(
-    spark, emb, tmp_path
-):
-    path = str(tmp_path / "ixc")
-    IX.build_ivfpq_index(
-        emb.filter(F.col("vec_id") < 300), path, num_centroids=8, seed=42
-    )
-    IX.append_to_ivfpq_index(
-        spark, path, emb.filter((F.col("vec_id") >= 300) & (F.col("vec_id") < 400))
-    )
-    IX.append_to_ivfpq_index(spark, path, emb.filter(F.col("vec_id") >= 400))
-    import glob
-
-    n_cells = len(glob.glob(f"{path}/coded/cell=*"))
-    assert len(_parquet_files(path)) > n_cells  # appends accreted files
-
-    queries = emb.filter(F.col("vec_id") < 10)
-    before = sorted(
-        map(tuple, IX.query_ivfpq_index(spark, path, queries, k=5).collect())
-    )
-    out_files = IX.compact_ivfpq_index(spark, path)
-    assert out_files == n_cells == len(_parquet_files(path))
-    after = sorted(
-        map(tuple, IX.query_ivfpq_index(spark, path, queries, k=5).collect())
-    )
-    assert before == after
-
-
-def test_compaction_crash_recovery_restores_backup(spark, emb, tmp_path):
-    """A crash between the two swap renames leaves coded missing and
-    ._precompact holding the only copy; the next call must heal."""
-    import os
-    import shutil
-
-    path = str(tmp_path / "ixr")
-    IX.build_ivfpq_index(
-        emb.filter(F.col("vec_id") < 200), path, num_centroids=8, seed=42
-    )
-    queries = emb.filter(F.col("vec_id") < 5)
-    before = sorted(
-        map(tuple, IX.query_ivfpq_index(spark, path, queries, k=5).collect())
-    )
-    # simulate the dangerous window: src renamed away, no replacement
-    os.rename(f"{path}/coded", f"{path}/coded._precompact")
-    # plus a stale staging dir from the dead run
-    os.makedirs(f"{path}/coded._compacting/junk")
-    IX.compact_ivfpq_index(spark, path)
-    after = sorted(
-        map(tuple, IX.query_ivfpq_index(spark, path, queries, k=5).collect())
-    )
-    assert before == after
-    assert not os.path.exists(f"{path}/coded._precompact")
-    assert not os.path.exists(f"{path}/coded._compacting")
-
-
-# ---------------------------------------------------------------------------
-# Health: balance + file count + ADC/exact agreement, and the metric
-# must MOVE when the quantizers are stale for the data they serve
-# ---------------------------------------------------------------------------
-
-
-def test_index_health_reports_sane_metrics(spark, emb, tmp_path):
-    path = str(tmp_path / "ixh")
-    IX.build_ivfpq_index(emb, path, num_centroids=8, seed=42)
-    h = IX.index_health(spark, path, sample_size=8, k=10).first()
-    assert h.n_rows == emb.count()
-    assert 1 <= h.n_cells <= 8
-    assert h.min_cell_rows >= 1 and h.max_cell_rows <= h.n_rows
-    assert h.cell_imbalance >= 1.0
-    assert h.n_files == h.n_cells  # fresh build: one file per cell
-    assert h.probed_sample == 8
-    assert 0.0 <= h.mean_adc_overlap <= 1.0
-
-
-def test_index_health_detects_quantizer_staleness(spark, emb, tmp_path):
-    """The rebuild-decision number: an index whose quantizers were
-    trained on a representative corpus must score higher ADC/exact
-    agreement than one whose frozen quantizers saw almost nothing
-    before the corpus was appended in."""
-    # codebook large enough that the GOOD index's agreement is clearly
-    # above quantization noise (cb=16 is noise-bound on this synthetic
-    # corpus and the direction inverts) — measured: 0.59 vs 0.37 here
-    good = str(tmp_path / "good")
-    IX.build_ivfpq_index(emb, good, num_centroids=8, codebook_size=256, seed=42)
-
-    stale = str(tmp_path / "stale")
-    IX.build_ivfpq_index(
-        emb.filter(F.col("vec_id") < 12), stale,
-        num_centroids=8, codebook_size=256, seed=42,
-    )
-    IX.append_to_ivfpq_index(spark, stale, emb.filter(F.col("vec_id") >= 12))
-
-    h_good = IX.index_health(spark, good, sample_size=12, k=10).first()
-    h_stale = IX.index_health(spark, stale, sample_size=12, k=10).first()
-    assert h_good.n_rows == h_stale.n_rows
-    assert h_stale.mean_adc_overlap < h_good.mean_adc_overlap, (
-        h_stale.mean_adc_overlap,
-        h_good.mean_adc_overlap,
-    )
 
 
 class TestMd5ModeIndex:
-    """Round 12: the md5-int index lifecycle — integer quantizers
-    persisted in meta; build/append/serve/distributed all dispatch on
-    the stored mode."""
+    """Round 12: the md5-int index — integer quantizers persisted in
+    meta; build and serve dispatch on the stored mode."""
 
     def test_md5_index_equals_md5_oneshot(self, spark, emb, tmp_path):
         path = str(tmp_path / "ixm")
@@ -255,43 +90,4 @@ class TestMd5ModeIndex:
         want = sorted(map(tuple, S.cosine_topk_ivfpq(
             emb, queries, k=5, nprobe=6, dim=64, max_iter=3,
             quant_mode="md5").collect()))
-        assert got == want
-
-    def test_md5_append_equals_rebuild(self, spark, emb, tmp_path):
-        """Appending with the STORED integer quantizers must produce
-        the same serve results as building on the full corpus with
-        the same training sample — the integer grid has no drift."""
-        path_a = str(tmp_path / "grown")
-        path_b = str(tmp_path / "whole")
-        first = emb.filter(F.col("vec_id") < 300)
-        rest = emb.filter(F.col("vec_id") >= 300)
-        # same deterministic training sample for both: lowest-id
-        # vectors — cap the sample at the first half's size
-        n_first = first.count()
-        IX.build_ivfpq_index(
-            path=path_a, corpus=first, num_centroids=16, max_iter=3,
-            quant_mode="md5", train_sample=n_first,
-        )
-        IX.append_to_ivfpq_index(spark, path_a, rest)
-        IX.build_ivfpq_index(
-            path=path_b, corpus=emb, num_centroids=16, max_iter=3,
-            quant_mode="md5", train_sample=n_first,
-        )
-        queries = emb.filter(F.col("vec_id") < 10)
-        got = sorted(map(tuple, IX.query_ivfpq_index(
-            spark, path_a, queries, k=5, nprobe=6).collect()))
-        want = sorted(map(tuple, IX.query_ivfpq_index(
-            spark, path_b, queries, k=5, nprobe=6).collect()))
-        assert got == want
-
-    def test_md5_distributed_equals_driver_path(self, spark, emb, tmp_path):
-        path = str(tmp_path / "ixd")
-        IX.build_ivfpq_index(
-            emb, path, num_centroids=16, max_iter=3, quant_mode="md5"
-        )
-        queries = emb.filter(F.col("vec_id") < 20)
-        got = sorted(map(tuple, IX.query_ivfpq_index_distributed(
-            spark, path, queries, k=5, nprobe=6).collect()))
-        want = sorted(map(tuple, IX.query_ivfpq_index(
-            spark, path, queries, k=5, nprobe=6).collect()))
         assert got == want

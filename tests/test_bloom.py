@@ -1,4 +1,4 @@
-"""Bloom membership store (llm/bloom.py): no false negatives, bounded
+"""Bloom membership filter (llm/bloom.py): no false negatives, bounded
 false positives, OR-mergeable, shuffle-free probe."""
 
 from __future__ import annotations
@@ -77,89 +77,3 @@ def test_probe_plan_never_shuffles_the_corpus(spark):
     )
     assert "Exchange hashpartitioning" not in plan
     assert plan.count("BroadcastHashJoin") == k
-
-
-class TestBloomStore:
-    def test_roundtrip_and_replay_idempotent(self, spark, tmp_path):
-        path = str(tmp_path / "bloom")
-        B.create_bloom_store(spark, path, n_items=1000, fpr=0.01)
-        meta = B.load_bloom_meta(spark, path)
-        items = _ids(spark, 0, 300)
-        B.append_to_bloom_store(spark, path, items, "fp")
-        # replayed segment append changes the folded filter not at all
-        before = {
-            r.word_idx: r.bits
-            for r in B.read_bloom_store(spark, path).collect()
-        }
-        B.append_to_bloom_store(spark, path, items, "fp")
-        after = {
-            r.word_idx: r.bits
-            for r in B.read_bloom_store(spark, path).collect()
-        }
-        assert before == after
-        flt = B.read_bloom_store(spark, path)
-        probed = B.probe_bloom(items, "fp", flt, meta["m_bits"], meta["k"])
-        assert probed.filter(~F.col("maybe_seen")).count() == 0
-
-    def test_empty_store_probes_all_new(self, spark, tmp_path):
-        path = str(tmp_path / "bloom")
-        meta = B.create_bloom_store(spark, path, n_items=100)
-        flt = B.read_bloom_store(spark, path)
-        probed = B.probe_bloom(
-            _ids(spark, 0, 50), "fp", flt, meta["m_bits"], meta["k"]
-        )
-        assert probed.filter("maybe_seen").count() == 0
-
-    def test_seeded_store_covers_warehouse(self, spark, tmp_path):
-        path = str(tmp_path / "bloom")
-        seed = _ids(spark, 0, 200)
-        meta = B.create_bloom_store(
-            spark, path, n_items=1000, seed_df=seed, col="fp"
-        )
-        flt = B.read_bloom_store(spark, path)
-        probed = B.probe_bloom(seed, "fp", flt, meta["m_bits"], meta["k"])
-        assert probed.filter(~F.col("maybe_seen")).count() == 0
-
-    def test_compaction_preserves_filter(self, spark, tmp_path):
-        path = str(tmp_path / "bloom")
-        B.create_bloom_store(spark, path, n_items=500)
-        for lo in (0, 100, 200):
-            B.append_to_bloom_store(
-                spark, path, _ids(spark, lo, lo + 100), "fp"
-            )
-        before = {
-            r.word_idx: r.bits
-            for r in B.read_bloom_store(spark, path).collect()
-        }
-        n = B.compact_bloom_store(spark, path)
-        after = {
-            r.word_idx: r.bits
-            for r in B.read_bloom_store(spark, path).collect()
-        }
-        assert after == before and n == len(before)
-        import glob
-
-        files = glob.glob(str(tmp_path / "bloom" / "segments" / "*.parquet"))
-        assert len(files) == 1
-
-    def test_version1_store_refused(self, spark, tmp_path):
-        """A store persisted under the version-1 probe scheme (zero-step
-        double hash) must be refused: probing its bit array with the
-        version-2 nonzero step yields false negatives, which would let
-        the definitely-new fast path re-append warehouse keys."""
-        import json
-
-        path = str(tmp_path / "bloom")
-        B.create_bloom_store(spark, path, n_items=100)
-        stale = {"m_bits": 1024, "k": 7, "fpr": 0.01, "version": 1}
-        spark.createDataFrame(
-            [(json.dumps(stale),)], "meta string"
-        ).repartition(1).write.mode("overwrite").parquet(path + "/meta")
-        with pytest.raises(B.BloomStoreVersionError, match="version 1"):
-            B.load_bloom_meta(spark, path)
-        # rebuild (create over the same path) heals it
-        meta = B.create_bloom_store(spark, path, n_items=100)
-        assert B.load_bloom_meta(spark, path) == meta == {
-            "m_bits": meta["m_bits"], "k": meta["k"],
-            "fpr": 0.01, "version": 2,
-        }

@@ -6,6 +6,7 @@ from __future__ import annotations
 from collections import Counter
 
 import pytest
+from pyspark.sql import functions as F
 
 from etl_procedure_codes_crawler_spark.llm import bpe as B
 
@@ -80,9 +81,22 @@ def test_merges_match_reference_exactly(spark):
     assert got == ref_merges
 
 
+def _vocab(df, num_merges, **kwargs):
+    """(token -> freq) of the trainer's final symbol table: the
+    characters plus every learned merge, with corpus frequencies."""
+    _, syms = B._train(df, "text", num_merges, 2, "stop", **kwargs)
+    return {
+        r.token: r.freq
+        for r in syms.select("freq", F.explode("sym").alias("token"))
+        .groupBy("token")
+        .agg(F.sum("freq").alias("freq"))
+        .collect()
+    }
+
+
 def test_vocab_matches_reference(spark):
     df = spark.createDataFrame(CORPUS, "doc_id bigint, text string")
-    got = {r.token: r.freq for r in B.bpe_vocab(df, num_merges=8).collect()}
+    got = _vocab(df, num_merges=8)
     _, ref_vocab = _ref_bpe(_spark_word_freqs(spark), 8, 2)
     assert got == ref_vocab
 
@@ -105,12 +119,7 @@ def test_distributed_loop_matches_driver_loop(spark):
     ref_merges, _ = _ref_bpe(_spark_word_freqs(spark), 12, 2)
     assert via_driver == via_cluster == ref_merges
     # the segment tables agree too (via the vocab they induce)
-    v_driver = {r.token: r.freq for r in B.bpe_vocab(df, num_merges=8).collect()}
-    v_cluster = {
-        r.token: r.freq
-        for r in B.bpe_vocab(df, num_merges=8, max_driver_words=0).collect()
-    }
-    assert v_driver == v_cluster
+    assert _vocab(df, num_merges=8) == _vocab(df, num_merges=8, max_driver_words=0)
 
 
 def test_incremental_counts_keep_job_count_flat(spark):

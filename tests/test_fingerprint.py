@@ -115,163 +115,3 @@ class TestWinnowOverlapPairs:
             _docs(spark, rows), min_shared=1, max_df=1000
         ).count()
         assert uncapped == 26 * 25 // 2
-
-
-class TestWinnowStore:
-    def test_store_roundtrip_flags_contamination(self, spark, tmp_path):
-        eval_docs = _docs(
-            spark,
-            [(0, PAD_A + SHARED), (2, "a clean benchmark question about "
-                                       "gravity and orbital mechanics")],
-        )
-        path = str(tmp_path / "wstore")
-        FP.build_winnow_store(eval_docs, path)
-        batch = _docs(
-            spark,
-            [
-                (1, PAD_B + SHARED),  # quotes eval doc 0
-                (3, "entirely original training text with no quoted "
-                    "benchmark content anywhere inside"),
-            ],
-        )
-        hits = {
-            (r.new_id, r.eval_id)
-            for r in FP.contamination_against_store(
-                spark, path, batch, min_shared=1
-            ).collect()
-        }
-        assert (1, 0) in hits
-        assert all(nid != 3 for nid, _ in hits)
-
-    def test_query_uses_store_geometry_not_defaults(self, spark, tmp_path):
-        """A store built with non-default k must still match — the
-        batch is fingerprinted with the STORE's params from meta."""
-        path = str(tmp_path / "wstore_k5")
-        FP.build_winnow_store(
-            _docs(spark, [(0, PAD_A + SHARED)]), path, k=5, window=8
-        )
-        hits = FP.contamination_against_store(
-            spark, path, _docs(spark, [(1, PAD_B + SHARED)]), min_shared=1
-        )
-        assert hits.count() >= 1
-
-    def test_append_is_idempotent_and_extends_coverage(self, spark, tmp_path):
-        path = str(tmp_path / "wstore_app")
-        FP.build_winnow_store(_docs(spark, [(0, PAD_A + SHARED)]), path)
-        newer = _docs(
-            spark,
-            [(2, "a freshly added benchmark prompt about tidal locking "
-                 "and resonance chains in exoplanet systems")],
-        )
-        assert FP.append_to_winnow_store(spark, path, newer) == 1
-        assert FP.append_to_winnow_store(spark, path, newer) == 0  # replay
-        hits = FP.contamination_against_store(
-            spark,
-            path,
-            _docs(spark, [(9, "students asked about tidal locking and "
-                              "resonance chains in exoplanet systems")]),
-            min_shared=1,
-        )
-        assert (9, 2) in {(r.new_id, r.eval_id) for r in hits.collect()}
-
-    def test_eval_boilerplate_capped_by_meta_max_df(self, spark, tmp_path):
-        """An eval suite whose every item carries the same preamble:
-        the preamble fingerprints exceed max_df and must not flag
-        every training doc that happens to quote the preamble."""
-        preamble = " please answer the following question carefully: "
-        evals = [(i * 2, "abcdefghijklm"[i] * 25 + preamble) for i in range(12)]
-        path = str(tmp_path / "wstore_cap")
-        FP.build_winnow_store(_docs(spark, evals), path, max_df=5)
-        batch = _docs(spark, [(99, "some training doc that merely says" + preamble)])
-        hits = FP.contamination_against_store(spark, path, batch, min_shared=1)
-        assert hits.count() == 0
-
-
-def test_ingest_gate_rejects_eval_contamination(spark, tmp_path):
-    """The composed front door: with an eval store attached, a batch
-    doc quoting benchmark material never reaches the warehouse."""
-    from etl_procedure_codes_crawler_spark.llm import neardup_store as NS
-    from etl_procedure_codes_crawler_spark.streaming.incremental import (
-        stream_ingest_with_neardup,
-    )
-    from pyspark.sql.types import LongType, StringType, StructField, StructType
-
-    source = tmp_path / "incoming"
-    source.mkdir()
-    wh, nd, ev, ck = (
-        str(tmp_path / "wh"), str(tmp_path / "nd"),
-        str(tmp_path / "ev"), str(tmp_path / "ck"),
-    )
-    schema_str = "doc_id bigint, text string"
-    NS.build_minhash_store(spark.createDataFrame([], schema_str), nd)
-    FP.build_winnow_store(_docs(spark, [(1000, PAD_A + SHARED)]), ev)
-
-    import glob, os, shutil, tempfile
-
-    staging = tempfile.mkdtemp()
-    batch = _docs(
-        spark,
-        [
-            (1, PAD_B + SHARED),  # quotes the eval doc → must be rejected
-            # min_shared=1: even ONE common 8-gram flags, so this text
-            # shares no 8-char substring with the eval doc (no common
-            # long words, no common phrases)
-            (2, "zq fresh corpus rows kept apart from bench suites, "
-                "wholly new words only, full stop here"),
-        ],
-    )
-    batch.repartition(1).write.mode("overwrite").parquet(staging)
-    shutil.copy(
-        glob.glob(os.path.join(staging, "part-*.parquet"))[0],
-        os.path.join(str(source), "b1.parquet"),
-    )
-    shutil.rmtree(staging, ignore_errors=True)
-
-    schema = StructType(
-        [StructField("doc_id", LongType()), StructField("text", StringType())]
-    )
-    q = stream_ingest_with_neardup(
-        spark, str(source), schema, wh, nd, ck,
-        threshold=0.5, eval_store_path=ev, eval_min_shared=1,
-    )
-    q.awaitTermination()
-    assert {r.doc_id for r in spark.read.parquet(wh).collect()} == {2}
-
-
-def test_append_records_zero_fingerprint_docs(spark, tmp_path):
-    """A doc too short to fingerprint must still be REMEMBERED: the
-    next append's anti-join skips it (id-idempotent) instead of
-    re-fingerprinting it forever."""
-    path = str(tmp_path / "wstore_short")
-    FP.build_winnow_store(_docs(spark, [(0, PAD_A + SHARED)]), path)
-    shorty = _docs(spark, [(7, "tiny")])  # < k=8 normalized chars
-    assert FP.append_to_winnow_store(spark, path, shorty) == 1
-    assert FP.append_to_winnow_store(spark, path, shorty) == 0  # remembered
-    # and the marker row never pollutes matching
-    hits = FP.contamination_against_store(
-        spark, path, _docs(spark, [(9, PAD_B + SHARED)]), min_shared=1
-    )
-    assert {r.eval_id for r in hits.collect()} == {0}
-
-
-def test_winnow_store_compaction_matches_unchanged(spark, tmp_path):
-    import glob
-
-    path = str(tmp_path / "wstore_comp")
-    FP.build_winnow_store(_docs(spark, [(0, PAD_A + SHARED)]), path)
-    for i in range(1, 4):
-        FP.append_to_winnow_store(
-            spark, path,
-            _docs(spark, [(i, f"{PAD_A}{SHARED} appended variant {i}")]),
-        )
-    assert len(glob.glob(f"{path}/fps/part-*.parquet")) >= 4
-    probe = _docs(spark, [(99, PAD_B + SHARED)])
-    before = sorted(
-        map(tuple, FP.contamination_against_store(spark, path, probe, min_shared=1).collect())
-    )
-    n_files = FP.compact_winnow_store(spark, path)
-    assert n_files == 1 == len(glob.glob(f"{path}/fps/part-*.parquet"))
-    after = sorted(
-        map(tuple, FP.contamination_against_store(spark, path, probe, min_shared=1).collect())
-    )
-    assert before == after and before

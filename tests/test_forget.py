@@ -7,7 +7,6 @@ import os
 
 from pyspark.sql import functions as F
 
-from etl_procedure_codes_crawler_spark.llm import fingerprint as FP
 from etl_procedure_codes_crawler_spark.llm import forget as FG
 from etl_procedure_codes_crawler_spark.llm import index as IX
 from etl_procedure_codes_crawler_spark.llm import neardup_store as NS
@@ -26,11 +25,9 @@ def test_forget_removes_from_every_artifact_idempotently(
     )
     wh = str(tmp_path / "wh")
     nd = str(tmp_path / "nd")
-    wn = str(tmp_path / "wn")
     ix = str(tmp_path / "ix")
     docs.write.parquet(wh)
     NS.build_minhash_store(docs, nd)
-    FP.build_winnow_store(docs, wn)
     IX.build_ivfpq_index(emb, ix, num_centroids=8, seed=42)
 
     doomed = [3, 7, 11]
@@ -38,16 +35,14 @@ def test_forget_removes_from_every_artifact_idempotently(
         _ids(spark, doomed),
         warehouse_path=wh,
         neardup_store_path=nd,
-        winnow_store_path=wn,
         ann_index_path=ix,
     )
     assert removed["warehouse"] == 3
     assert removed["neardup_store"] == 3  # one signature row per doc
-    assert removed["winnow_store"] >= 3  # many fingerprint rows per doc
     assert removed["ann_index"] == 3
 
     for path, col in [(wh, "doc_id"), (f"{nd}/signatures", "id"),
-                      (f"{wn}/fps", "id"), (f"{ix}/coded", "id")]:
+                      (f"{ix}/coded", "id")]:
         left = {r[col] for r in spark.read.parquet(path).select(col).collect()}
         assert not (left & set(doomed)), path
 
@@ -62,7 +57,6 @@ def test_forget_removes_from_every_artifact_idempotently(
         _ids(spark, doomed),
         warehouse_path=wh,
         neardup_store_path=nd,
-        winnow_store_path=wn,
         ann_index_path=ix,
     )
     assert set(again.values()) == {0}
@@ -457,9 +451,8 @@ def test_forget_partitioned_heals_precommit_crash(spark, tmp_path):
 def test_index_maintenance_stamps_versioned_coded_table(
     spark, sf_dir, tmp_path
 ):
-    """The ANN index's own maintenance ops (cell-scoped forget,
-    compaction) stamp their rewrites too, so a versioned coded table
-    explains its expiry like any warehouse."""
+    """The ANN index's cell-scoped forget stamps its rewrites too, so a
+    versioned coded table explains its expiry like any warehouse."""
     from etl_procedure_codes_crawler_spark.llm import index as IX
     from etl_procedure_codes_crawler_spark.sinks import versions as V
 
@@ -479,9 +472,6 @@ def test_index_maintenance_stamps_versioned_coded_table(
     # versioned read of the partitioned layout still carries `cell`
     v2 = V.commit_version(spark, coded)
     assert "cell" in V.read_version(spark, coded, v2).columns
-    IX.compact_ivfpq_index(spark, ix)
-    with _pytest.raises(ValueError, match="compact"):
-        V.read_version(spark, coded, v2)
 
 
 def test_forget_total_index_wipe_raises(spark, sf_dir, tmp_path):

@@ -68,14 +68,14 @@ def test_family_coverage_in_gate_sample(entry):
         "temporal_join": {"asof_last_view_before_purchase", "range_join_purchases_within_hour_of_signup"},
         "funnel": {"funnel_signup_to_purchase"},
         # round-9 session 2: CCNet terciles hold the sampled
-        # windowed-distribution row (deciles stays in the registry)
-        "distribution": {"customer_spend_deciles", "ccnet_bucket_documents"},
+        # windowed-distribution row
+        "distribution": {"ccnet_bucket_documents"},
         "extraction": {"extract_procedure_pages_fixture", "udtf_extract_modifiers_fixture"},
         # round-10: the unified five-gate admission capstone holds a
         # sampled streaming row (boilerplate ingest stays in registry)
         "streaming": {"streaming_hourly_event_counts", "streaming_incremental_dedup_documents",
                       "streaming_unified_admission"},
-        "text": {"token_count_bpe_documents", "lang_id_documents", "text_quality_documents"},
+        "text": {"token_count_bpe_documents", "text_quality_documents"},
         # round-10: md5-mode MinHash LSH holds a sampled dedup row
         # (incremental stays in the registry + parity replica)
         "dedup": {"dedup_exact_documents", "minhash_near_dup_pairs"},
@@ -83,12 +83,10 @@ def test_family_coverage_in_gate_sample(entry):
         # posting-list core plus both directed ratios
         "jaccard": {"ngram_jaccard_pairs_dfcap", "ngram_containment_pairs"},
         "safety": {"contamination_overlap", "pii_scan_documents"},
-        # round-9 session 2: margin mining covers the pairwise cosine
-        # math plus the neighborhood-mean fold; round-12: the ANN
-        # margin row holds the slot (trained md5-int k-means cells +
-        # the exact twin's margin CTEs in one sampled row)
-        "ann": {"ann_cosine_topk", "embedding_similar_pairs",
-                "embedding_margin_pairs", "embedding_margin_pairs_ann"},
+        # round-12: the ANN margin row holds the slot (trained md5-int
+        # k-means cells + the pairwise cosine math and neighborhood-mean
+        # fold of the margin CTEs in one sampled row)
+        "ann": {"embedding_margin_pairs_ann"},
         # round-9 rotation: the MP4 box-walk family holds the sampled
         # multimodal rows (payload/PNG/JPEG stats stay in the registry);
         # round-10: keyframe DECODE took the manifest slot; round-11:

@@ -31,11 +31,6 @@ def test_exact_duplicate_groups(spark):
     assert by_copies == [(1, 2), (1, 3), (1, 4), (3, 0)]
 
 
-def test_drop_exact_duplicates_keeps_min_id(spark):
-    kept = sorted(r.doc_id for r in D.drop_exact_duplicates(_docs(spark)).collect())
-    assert kept == [0, 2, 3, 4]
-
-
 def test_ngram_jaccard_finds_near_dup(spark):
     pairs = {
         (r.doc_a, r.doc_b): r.jaccard
@@ -146,14 +141,6 @@ def test_simhash_degenerate_bucket_is_star_capped(spark):
     assert all(r.hamming == 0 for r in pairs)
 
 
-def test_lsh_bucket_stats_reports_capped_buckets(spark):
-    docs = _identical_corpus(spark, 100)
-    buckets = D.minhash_buckets(docs)
-    stats = D.lsh_bucket_stats(buckets, max_bucket_size=10).collect()
-    assert len(stats) == 8  # one row per band
-    assert all(r.n_capped_buckets == 1 and r.max_bucket_size == 100 for r in stats)
-
-
 def test_jaccard_df_cap_drops_stop_shingles_keeps_true_pairs(spark):
     """A boilerplate shingle shared by every doc would emit n^2 rows;
     with the df cap it is dropped, while genuinely similar pairs
@@ -217,18 +204,6 @@ def test_incremental_dedup_new_docs(spark):
         for r in D.incremental_dedup_new_docs(batch, snapshot).collect()
     }
     assert kept == {201, 203}
-
-
-def test_keep_best_exact_prefers_longest_raw_copy(spark):
-    """Docs 0/1/5 normalize to the same fingerprint; doc 1 has the
-    longest raw text (double space + capitals), so it wins over the
-    lower ids."""
-    result = {
-        (r.keep_id, r.n_copies)
-        for r in D.keep_best_exact(_docs(spark)).collect()
-        if r.n_copies > 1
-    }
-    assert result == {(1, 3)}
 
 
 def test_pii_redact_transform(spark):
@@ -455,14 +430,22 @@ class TestDuplicateSpansForPairs:
 
 
 class TestIntraDocRepeats:
-    def _run(self, spark, rows, block=2):
-        from etl_procedure_codes_crawler_spark.llm import dedup as D
+    """The within-document block dedup columns
+    (dedup.intra_doc_kept_blocks) the funnel capstones project."""
 
+    @staticmethod
+    def _select(df, block=8):
+        n_blocks, kept = D.intra_doc_kept_blocks("text", block)
+        return df.select(
+            "doc_id",
+            F.when(F.col("text").isNull(), 0).otherwise(n_blocks).alias("n_blocks"),
+            F.coalesce(F.size(kept), F.lit(0)).alias("n_kept"),
+            F.array_join(kept, " ").alias("text_clean"),
+        )
+
+    def _run(self, spark, rows, block=2):
         df = spark.createDataFrame(rows, "doc_id bigint, text string")
-        return {
-            r.doc_id: r
-            for r in D.remove_intra_doc_repeats(df, block=block).collect()
-        }
+        return {r.doc_id: r for r in self._select(df, block).collect()}
 
     def test_repeats_removed_first_kept(self, spark):
         out = self._run(spark, [(1, "a b c d a b e f")])
@@ -488,11 +471,9 @@ class TestIntraDocRepeats:
         assert out[2].text_clean == "a b"
 
     def test_zero_shuffle_no_python(self, spark):
-        from etl_procedure_codes_crawler_spark.llm import dedup as D
-
         df = spark.createDataFrame([(1, "a b a b")], "doc_id bigint, text string")
         plan = (
-            D.remove_intra_doc_repeats(df)
+            self._select(df)
             ._jdf.queryExecution()
             .executedPlan()
             .toString()
@@ -594,28 +575,6 @@ class TestPassageFreqStore:
         ).first()
         assert out.n_removed == 0
         assert out.text_clean == "never seen words entirely new"
-
-    def test_compaction_preserves_frequencies(self, spark, tmp_path):
-        from etl_procedure_codes_crawler_spark.llm import passagefreq as PF
-
-        store = str(tmp_path / "store")
-        PF.create_passage_freq_store(spark, store, block=2)
-        for lo in (1, 4, 7):
-            docs = spark.createDataFrame(
-                [(i, "alpha beta shared tail") for i in range(lo, lo + 3)],
-                "doc_id long, text string",
-            )
-            PF.append_passage_counts(spark, store, docs)
-        before = sorted(
-            (r.fp, r.df)
-            for r in PF.read_passage_freqs(spark, store).collect()
-        )
-        PF.compact_passage_freq_store(spark, store)
-        after = sorted(
-            (r.fp, r.df)
-            for r in PF.read_passage_freqs(spark, store).collect()
-        )
-        assert before == after and after[0][1] == 9
 
     def test_replayed_append_does_not_inflate_counts(self, spark, tmp_path):
         """Crash-replay: the same batch re-offered (same derived or

@@ -2,7 +2,7 @@
 
 from __future__ import annotations
 
-import math
+import numpy as np
 
 from etl_procedure_codes_crawler_spark.llm import similarity as S
 
@@ -20,15 +20,25 @@ def _vecs(spark):
     return spark.createDataFrame(VECS, "vec_id long, embedding array<float>")
 
 
-def test_bruteforce_topk_exact_ordering(spark):
-    df = _vecs(spark)
-    out = S.cosine_topk_bruteforce(df, df.filter("vec_id = 0"), k=4).collect()
-    ranked = [(r.rank, r.neighbor_id, r.cosine) for r in sorted(out, key=lambda r: r.rank)]
-    assert [r[1] for r in ranked] == [2, 3, 1, 4]
-    assert ranked[0][2] == 1.0
-    expected_cos3 = 0.9 / math.sqrt(0.9**2 + 0.1**2)
-    assert abs(ranked[1][2] - round(expected_cos3, 4)) < 1e-9
-    assert ranked[2][2] == 0.0 and ranked[3][2] == -1.0
+def _exact_topk(corpus, queries, k):
+    """The exact top-``k`` cosine neighbours of each query vector, as
+    {(query_id, neighbor_id)}: the recall baseline, computed in numpy
+    (ties break to the lower neighbour id; a query is not its own
+    neighbour)."""
+    rows = corpus.select("vec_id", "embedding").collect()
+    ids = np.array([r.vec_id for r in rows])
+    vecs = np.array([r.embedding for r in rows], dtype=np.float64)
+    unit = vecs / np.linalg.norm(vecs, axis=1, keepdims=True)
+    position = {vid: i for i, vid in enumerate(ids)}
+    pairs = set()
+    for q in queries.select("vec_id").collect():
+        cos = unit @ unit[position[q.vec_id]]
+        order = sorted(
+            (j for j in range(len(ids)) if ids[j] != q.vec_id),
+            key=lambda j: (-cos[j], ids[j]),
+        )
+        pairs.update((q.vec_id, int(ids[j])) for j in order[:k])
+    return pairs
 
 
 def test_similar_pairs_threshold(spark):
@@ -56,12 +66,10 @@ def test_lsh_recall_on_testdata(spark, sf_dir):
     """LSH top-5 should recover a decent fraction of the exact top-5 —
     sanity floor, not a precision claim (8 planes, single table)."""
     import etl_procedure_codes_crawler_spark.llm.queries  # noqa: F401 — registers
-    from etl_procedure_codes_crawler_spark.plans.relational import QUERIES
+    from etl_procedure_codes_crawler_spark.plans.relational import QUERIES, load
 
-    exact = {
-        (r.query_id, r.neighbor_id)
-        for r in QUERIES["ann_cosine_topk"](spark, sf_dir).collect()
-    }
+    embeddings = load(spark, sf_dir, "embeddings")
+    exact = _exact_topk(embeddings, embeddings.filter("vec_id < 20"), k=5)
     approx = {
         (r.query_id, r.neighbor_id)
         for r in QUERIES["ann_cosine_topk_lsh"](spark, sf_dir).collect()
@@ -79,11 +87,10 @@ class TestIvf:
 
         embeddings = load(spark, sf_dir, "embeddings")
         queries = embeddings.filter(F.col("vec_id") < 10)
-        exact = S.cosine_topk_bruteforce(embeddings, queries, k=5)
+        exact_pairs = _exact_topk(embeddings, queries, k=5)
         ivf = S.cosine_topk_ivf(
             embeddings, queries, k=5, num_centroids=8, nprobe=4
         )
-        exact_pairs = {(r.query_id, r.neighbor_id) for r in exact.collect()}
         ivf_pairs = {(r.query_id, r.neighbor_id) for r in ivf.collect()}
         recall = len(exact_pairs & ivf_pairs) / len(exact_pairs)
         # probing half the cells must recover well over half the truth
@@ -105,26 +112,6 @@ class TestIvf:
         a = sorted(map(tuple, S.cosine_topk_ivf(embeddings, queries, k=3).collect()))
         b = sorted(map(tuple, S.cosine_topk_ivf(embeddings, queries, k=3).collect()))
         assert a == b
-
-
-class TestSimilarPairsLsh:
-    def test_lsh_pairs_recall_vs_bruteforce(self, spark, sf_dir):
-        from etl_procedure_codes_crawler_spark.llm import similarity as S
-        from etl_procedure_codes_crawler_spark.plans.relational import load
-
-        embeddings = load(spark, sf_dir, "embeddings")
-        exact = {
-            (r.vec_a, r.vec_b)
-            for r in S.similar_pairs_bruteforce(embeddings, 0.45).collect()
-        }
-        approx = {
-            (r.vec_a, r.vec_b)
-            for r in S.similar_pairs_lsh(embeddings, 0.45).collect()
-        }
-        assert approx <= exact  # verification step: no false positives
-        if exact:
-            recall = len(approx & exact) / len(exact)
-            assert recall >= 0.5, f"LSH pair recall {recall:.2f}"
 
 
 class TestMd5PlaneMode:
@@ -180,28 +167,6 @@ class TestMd5PlaneMode:
                 )
                 assert got[(vid, t)] == bucket, (vid, t)
 
-    def test_md5_pairs_are_verified_and_recall_floored(
-        self, spark, sf_dir
-    ):
-        from etl_procedure_codes_crawler_spark.llm import similarity as S
-        from etl_procedure_codes_crawler_spark.plans.relational import load
-
-        embeddings = load(spark, sf_dir, "embeddings")
-        exact = {
-            (r.vec_a, r.vec_b)
-            for r in S.similar_pairs_bruteforce(embeddings, 0.45).collect()
-        }
-        approx = {
-            (r.vec_a, r.vec_b)
-            for r in S.similar_pairs_lsh(
-                embeddings, 0.45, plane_mode="md5"
-            ).collect()
-        }
-        assert approx <= exact  # exact-cosine verify: no false positives
-        if exact:
-            recall = len(approx & exact) / len(exact)
-            assert recall >= 0.5, f"md5-mode pair recall {recall:.2f}"
-
     def test_md5_topk_recall_floor(self, spark, sf_dir):
         from pyspark.sql import functions as F
 
@@ -210,12 +175,7 @@ class TestMd5PlaneMode:
 
         embeddings = load(spark, sf_dir, "embeddings")
         queries = embeddings.filter(F.col("vec_id") < 20)
-        exact = {
-            (r.query_id, r.neighbor_id)
-            for r in S.cosine_topk_bruteforce(
-                embeddings, queries, k=5
-            ).collect()
-        }
+        exact = _exact_topk(embeddings, queries, k=5)
         approx = {
             (r.query_id, r.neighbor_id)
             for r in S.cosine_topk_lsh(
@@ -244,10 +204,7 @@ class TestPQ:
 
         emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
         qs = emb.filter(F.col("vec_id") < 20)
-        exact = {
-            (r.query_id, r.neighbor_id)
-            for r in S.cosine_topk_bruteforce(emb, qs, k=5).collect()
-        }
+        exact = _exact_topk(emb, qs, k=5)
         pq = {
             (r.query_id, r.neighbor_id)
             for r in S.cosine_topk_pq(emb, qs, k=5).collect()
@@ -303,10 +260,7 @@ class TestPQ:
 
         emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
         qs = emb.filter(F.col("vec_id") < 20)
-        exact = {
-            (r.query_id, r.neighbor_id)
-            for r in S.cosine_topk_bruteforce(emb, qs, k=5).collect()
-        }
+        exact = _exact_topk(emb, qs, k=5)
         opq = {
             (r.query_id, r.neighbor_id)
             for r in S.cosine_topk_pq(emb, qs, k=5, rotate=True).collect()
@@ -347,10 +301,7 @@ class TestPQ:
 
         emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
         qs = emb.filter(F.col("vec_id") < 20)
-        exact = {
-            (r.query_id, r.neighbor_id)
-            for r in S.cosine_topk_bruteforce(emb, qs, k=5).collect()
-        }
+        exact = _exact_topk(emb, qs, k=5)
         hpq = {
             (r.query_id, r.neighbor_id)
             for r in S.cosine_topk_pq(
@@ -385,10 +336,7 @@ class TestIVFPQ:
 
         emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
         qs = emb.filter(F.col("vec_id") < 20)
-        exact = {
-            (r.query_id, r.neighbor_id)
-            for r in S.cosine_topk_bruteforce(emb, qs, k=5).collect()
-        }
+        exact = _exact_topk(emb, qs, k=5)
         got = S.cosine_topk_ivfpq(emb, qs, k=5, nprobe=6)
         pairs = {(r.query_id, r.neighbor_id) for r in got.collect()}
         recall = len(exact & pairs) / len(exact)

@@ -1,12 +1,22 @@
-"""Every package module is reached from a non-test entry point.
+"""Every package module, top-level definition and registered query is
+reached from a non-test entry point.
 
-A module that no query, pipeline, bench or script imports is code only
-its own tests keep alive. This test walks imports statically (AST only,
-nothing is imported or run) from the entry points: ``bench.py``,
-``__spark_entry__.py``, ``scripts/*.py`` and perfbench's non-test
-modules, following module-level and function-local imports through the
-package. The query registry needs no entry of its own: ``bench.py`` and
-``__spark_entry__.py`` import it.
+Code that no query, pipeline, bench or script reaches is code only its
+own tests keep alive. The walks here are static (AST only; only the
+registry check imports the package): they start from the entry points
+``bench.py``, ``__spark_entry__.py``, ``scripts/*.py`` and perfbench's
+non-test modules.
+
+- Modules: module-level and function-local imports are followed
+  through the package.
+- Definitions: a function, class or constant is reached when a reached
+  statement names it, directly, through an import binding or as an
+  attribute of an imported package module. What runs on import (the
+  non-definition statements of a reached module, and every
+  ``@register``-ed query builder) is reached.
+- Queries: a registered query must be named by one of the lists that
+  choose what runs (headline bench, box factor, driver gate order,
+  harness warm-up) or by perfbench or a script.
 """
 
 from __future__ import annotations
@@ -26,6 +36,27 @@ UNREACHED_BY_DESIGN = {
     f"{PACKAGE}.sinks.jdbc": "the reference's Postgres writes and DDL",
     f"{PACKAGE}.sinks.errors": "the reference's error-audit row",
     f"{PACKAGE}.plans.parity": "the tests' oracle comparer",
+}
+
+# Top-level definitions of reached modules kept although no entry point
+# reaches them, one reason each. (A module in UNREACHED_BY_DESIGN is
+# exempt as a whole.)
+DEFINITIONS_UNREACHED_BY_DESIGN = {
+    f"{PACKAGE}.sinks.parquet.write_single_file_parquet": (
+        "the reference's single-file export (utils/s3.py:57-63)"
+    ),
+    f"{PACKAGE}.sinks.parquet.delete_path": (
+        "the reference's path cleanup (utils/s3.py:12-24)"
+    ),
+    f"{PACKAGE}.sinks.parquet.get_table_location": (
+        "the reference's catalog location lookup (utils/s3.py:65-69)"
+    ),
+    f"{PACKAGE}.sources.parquet.read_parquet": (
+        "the reference's plain parquet read (utils/s3.py:71-72)"
+    ),
+    f"{PACKAGE}.functions.html_extract.classify_code_type": (
+        "the reference's CPT/HCPCS rule (procedure_code.py:550,602)"
+    ),
 }
 
 
@@ -56,18 +87,27 @@ def _entry_points() -> list[Path]:
     ]
 
 
+def _parse(path: Path) -> ast.Module:
+    return ast.parse(path.read_text(encoding="utf-8"))
+
+
+def _import_base(node: ast.ImportFrom, package: str) -> str:
+    base = node.module or ""
+    if node.level:
+        anchor = package.rsplit(".", node.level - 1)[0]
+        base = f"{anchor}.{base}" if base else anchor
+    return base
+
+
 def _imported_names(path: Path, name: str) -> set[str]:
     """Dotted names each import in ``path`` may bind, absolute."""
     package = name if path.name == "__init__.py" else name.rpartition(".")[0]
     names = set()
-    for node in ast.walk(ast.parse(path.read_text(encoding="utf-8"))):
+    for node in ast.walk(_parse(path)):
         if isinstance(node, ast.Import):
             names.update(alias.name for alias in node.names)
         elif isinstance(node, ast.ImportFrom):
-            base = node.module or ""
-            if node.level:
-                anchor = package.rsplit(".", node.level - 1)[0]
-                base = f"{anchor}.{base}" if base else anchor
+            base = _import_base(node, package)
             names.add(base)
             # ``from pkg import mod`` binds a submodule
             names.update(f"{base}.{alias.name}" for alias in node.names)
@@ -103,3 +143,225 @@ def test_exemptions_name_existing_unreached_modules():
     modules = _package_modules()
     assert set(UNREACHED_BY_DESIGN) <= set(modules)
     assert set(UNREACHED_BY_DESIGN).isdisjoint(reached_modules())
+
+
+# ---------------------------------------------------------------------------
+# top-level definitions
+# ---------------------------------------------------------------------------
+
+
+def _is_register(decorator: ast.expr) -> bool:
+    func = decorator.func if isinstance(decorator, ast.Call) else decorator
+    return isinstance(func, ast.Name) and func.id == "register"
+
+
+def _defined_names(stmt: ast.stmt) -> list[str]:
+    """Names a top-level definition binds; none for code that runs."""
+    if isinstance(stmt, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+        return [stmt.name]
+    targets = (
+        stmt.targets if isinstance(stmt, ast.Assign)
+        else [stmt.target] if isinstance(stmt, ast.AnnAssign)
+        else []
+    )
+    names = []
+    for target in targets:
+        elts = target.elts if isinstance(target, ast.Tuple) else [target]
+        if not all(isinstance(e, ast.Name) for e in elts):
+            return []
+        names += [e.id for e in elts]
+    # dunders (``__version__``) are module metadata, not definitions
+    return [n for n in names if not n.startswith("__")]
+
+
+class _Source:
+    """One parsed file: its definitions and its import bindings."""
+
+    def __init__(self, path: Path):
+        self.name = _module_name(path)
+        self.package = (
+            self.name if path.name == "__init__.py" else self.name.rpartition(".")[0]
+        )
+        self.tree = _parse(path)
+        self.defs: dict[str, list[ast.stmt]] = {}
+        #: statements that run on import, and registered query builders
+        self.on_import: list[ast.stmt] = []
+        for stmt in self.tree.body:
+            names = _defined_names(stmt)
+            for name in names:
+                self.defs.setdefault(name, []).append(stmt)
+            if isinstance(stmt, (ast.Import, ast.ImportFrom)):
+                continue
+            if not names or any(
+                _is_register(d) for d in getattr(stmt, "decorator_list", ())
+            ):
+                self.on_import.append(stmt)
+        #: local name -> the dotted names it binds, in any scope
+        self.bindings: dict[str, set[str]] = {}
+        for node in ast.walk(self.tree):
+            if isinstance(node, ast.Import):
+                for alias in node.names:
+                    local = alias.asname or alias.name.partition(".")[0]
+                    target = alias.name if alias.asname else local
+                    self.bindings.setdefault(local, set()).add(target)
+            elif isinstance(node, ast.ImportFrom):
+                base = _import_base(node, self.package)
+                for alias in node.names:
+                    self.bindings.setdefault(
+                        alias.asname or alias.name, set()
+                    ).add(f"{base}.{alias.name}")
+
+
+class _Graph:
+    """Name-level references between the package's definitions."""
+
+    def __init__(self):
+        self.sources = {
+            name: _Source(path) for name, path in _package_modules().items()
+        }
+
+    def resolve(self, dotted: str, depth: int = 0) -> tuple[str, str] | None:
+        """The package definition ``module.name`` stands for, following
+        re-exports; None for a module or anything outside the package."""
+        module, _, name = dotted.rpartition(".")
+        source = self.sources.get(module)
+        if source is None or depth > 10:  # depth: re-export cycles
+            return None
+        if name in source.defs:
+            return module, name
+        for target in source.bindings.get(name, ()):
+            found = self.resolve(target, depth + 1)
+            if found:
+                return found
+        return None
+
+    def references(self, source: _Source, stmts) -> set[tuple[str, str]]:
+        """The package definitions that names in ``stmts`` refer to: a
+        bare name, or the head of an attribute chain, resolved through
+        ``source``'s own definitions and import bindings."""
+        found = set()
+        for stmt in stmts:
+            for node in ast.walk(stmt):
+                chain = []
+                while isinstance(node, ast.Attribute):
+                    chain.append(node.attr)
+                    node = node.value
+                if not isinstance(node, ast.Name):
+                    continue
+                head = node.id
+                if head in source.defs:
+                    if source.name in self.sources:
+                        found.add((source.name, head))
+                    continue
+                for dotted in source.bindings.get(head, ()):
+                    # ``a.b.c``: try the longest prefix first
+                    parts = [dotted, *reversed(chain)]
+                    for depth in range(len(parts), 0, -1):
+                        target = self.resolve(".".join(parts[:depth]))
+                        if target:
+                            found.add(target)
+                            break
+        return found
+
+    def reached(self, roots: set[tuple[str, str]]) -> set[tuple[str, str]]:
+        reached: set[tuple[str, str]] = set()
+        frontier = list(roots)
+        while frontier:
+            module, name = frontier.pop()
+            if (module, name) in reached:
+                continue
+            reached.add((module, name))
+            source = self.sources[module]
+            frontier += self.references(source, source.defs[name])
+        return reached
+
+
+def reached_definitions(extra_roots=()) -> set[str]:
+    """``module.name`` of every package definition an entry point, or
+    one of ``extra_roots`` (dotted names), reaches."""
+    graph = _Graph()
+    roots = {tuple(root.rsplit(".", 1)) for root in extra_roots}
+    for path in _entry_points():
+        entry = _Source(path)
+        roots |= graph.references(entry, entry.tree.body)
+    modules = reached_modules()
+    for name, source in graph.sources.items():
+        if name in modules:
+            roots |= graph.references(source, source.on_import)
+            roots |= {
+                (name, stmt.name)
+                for stmt in source.on_import
+                if hasattr(stmt, "name")
+            }
+        elif name in UNREACHED_BY_DESIGN:
+            roots |= {(name, d) for d in source.defs}
+    return {f"{module}.{name}" for module, name in graph.reached(roots)}
+
+
+def _package_definitions() -> set[str]:
+    """Top-level definitions of the modules not exempt as a whole."""
+    return {
+        f"{name}.{d}"
+        for name, path in _package_modules().items()
+        if name not in UNREACHED_BY_DESIGN
+        for d in _Source(path).defs
+    }
+
+
+def test_every_top_level_definition_is_reached():
+    reached = reached_definitions(DEFINITIONS_UNREACHED_BY_DESIGN)
+    dead = sorted(_package_definitions() - reached)
+    assert not dead, "reached by no entry point: " + ", ".join(dead)
+
+
+def test_exemptions_name_existing_unreached_definitions():
+    exempt = set(DEFINITIONS_UNREACHED_BY_DESIGN)
+    assert exempt <= _package_definitions(), exempt - _package_definitions()
+    assert exempt.isdisjoint(reached_definitions())
+
+
+# ---------------------------------------------------------------------------
+# registered queries
+# ---------------------------------------------------------------------------
+
+#: the lists that choose which registered queries run: file -> name
+_QUERY_LISTS = {
+    "bench.py": ("HEADLINE", "_BOX_FACTOR_QUERIES"),
+    "__spark_entry__.py": ("_GATE_PRIORITY",),
+    f"{PACKAGE}/harness.py": ("WARM_UP_QUERIES",),
+}
+
+
+def _strings(node: ast.AST) -> set[str]:
+    return {
+        n.value
+        for n in ast.walk(node)
+        if isinstance(n, ast.Constant) and isinstance(n.value, str)
+    }
+
+
+def entry_point_query_names() -> set[str]:
+    """Every string an entry point may name a query with: the members
+    of the lists above, and any string in perfbench's non-test modules
+    or in a script. The QUERIES.md generator is no such script: its
+    family patterns only sort what is registered."""
+    names: set[str] = set()
+    for file, lists in _QUERY_LISTS.items():
+        for stmt in _parse(ROOT / file).body:
+            if set(_defined_names(stmt)) & set(lists):
+                names |= _strings(stmt.value)
+    for path in _entry_points():
+        if path.parent.name in ("perfbench", "scripts") and (
+            path.name != "gen_queries_md.py"
+        ):
+            names |= _strings(_parse(path))
+    return names
+
+
+def test_every_registered_query_is_named_by_an_entry_point():
+    from etl_procedure_codes_crawler_spark.harness import registry
+
+    unnamed = sorted(set(registry()) - entry_point_query_names())
+    assert not unnamed, "registered but run by no entry point: " + ", ".join(
+        unnamed
+    )

@@ -24,72 +24,12 @@ def test_media_schema_and_payload_bytes(spark):
     assert rows[1].n_bytes == 11 and rows[2].n_bytes == 3
 
 
-def test_feature_extraction_batch_shape(spark):
-    features = M.extract_features(M.documents_as_media(_docs(spark)))
-    assert features.schema == M.FEATURES_SCHEMA
-    rows = {r.media_id: r for r in features.collect()}
-    assert len(rows[1].feature) == M.FEATURE_DIM
-    # deterministic: byte-histogram of 'abc' = bytes 97,98,99 → slots 1,2,3 of 16
-    feats = rows[2].feature
-    assert abs(feats[97 % 16] - 1 / 3) < 1e-6
-    assert sum(feats) == pytest.approx(1.0, abs=1e-6)
-
-
 def test_decode_stub_is_gated(spark):
     with pytest.raises(NotImplementedError):
         M._decode_stub(b"payload")
 
 
-def test_empty_payload_features(spark):
-    assert M._fake_features(b"") == [0.0] * M.FEATURE_DIM
-
-
-class TestFrameSampling:
-    def test_fanout_counts_and_roundtrip(self, spark, sf_dir):
-        from pyspark.sql import functions as F
-
-        from etl_procedure_codes_crawler_spark.llm import multimodal as M
-        from etl_procedure_codes_crawler_spark.plans.relational import load
-
-        media = M.documents_as_media(load(spark, sf_dir, "documents")).limit(50)
-        frames = M.sample_frames(media, frame_bytes=100)
-        stats = {
-            r.media_id: (r.n, r.total)
-            for r in frames.groupBy("media_id")
-            .agg(F.count(F.lit(1)).alias("n"), F.sum("frame_bytes").alias("total"))
-            .collect()
-        }
-        for row in media.collect():
-            n, total = stats[row.media_id]
-            expected_frames = max(1, -(-row.n_bytes // 100))  # ceil, min 1
-            assert n == expected_frames
-            assert total == row.n_bytes  # slicing loses no bytes
-
-    def test_frame_indices_contiguous(self, spark, sf_dir):
-        from etl_procedure_codes_crawler_spark.llm import multimodal as M
-        from etl_procedure_codes_crawler_spark.plans.relational import load
-
-        media = M.documents_as_media(load(spark, sf_dir, "documents")).limit(10)
-        frames = M.sample_frames(media, frame_bytes=64).collect()
-        by_media = {}
-        for r in frames:
-            by_media.setdefault(r.media_id, []).append(r.frame_idx)
-        for idxs in by_media.values():
-            assert sorted(idxs) == list(range(len(idxs)))
-
-
 class TestResize:
-    def test_resize_caps_payload(self, spark, sf_dir):
-        from etl_procedure_codes_crawler_spark.llm import multimodal as M
-        from etl_procedure_codes_crawler_spark.plans.relational import load
-
-        media = M.documents_as_media(load(spark, sf_dir, "documents")).limit(20)
-        out = M.resize_media(media, width=8, height=8).collect()
-        originals = {r.media_id: r.n_bytes for r in media.collect()}
-        for r in out:
-            assert r.width == 8 and r.height == 8
-            assert r.n_bytes == min(originals[r.media_id], 64)
-            assert len(r.payload or b"") == r.n_bytes
 
     def test_decode_stub_raises(self):
         import pytest as _pytest
@@ -300,20 +240,6 @@ class TestStdlibDecoders:
             M.default_decoder(b"\xff\xd8\xff\xe0 garbage jpeg body")
         with _pytest.raises(NotImplementedError):
             M.default_decoder(b"\x00\x00\x00\x18ftypmp42 an mp4 box")
-
-    def test_bmp_corpus_decodes_on_spark(self, spark, sf_dir):
-        from etl_procedure_codes_crawler_spark.plans.relational import load
-
-        docs = load(spark, sf_dir, "documents")
-        decoded = M.decode_media(M.documents_as_bmp(docs))
-        rows = decoded.collect()
-        assert len(rows) == docs.count()
-        ok = [r for r in rows if r.decode_error is None]
-        bad = [r for r in rows if r.decode_error is not None]
-        assert ok and bad  # both paths exercised
-        assert all(r.width == 16 and r.channels == 3 for r in ok)
-        assert all(len(r.pixels) == 48 * r.height for r in ok)
-        assert all(r.media_id % 50 == 0 for r in bad)
 
 
 class TestPngDecoder:
@@ -921,16 +847,6 @@ class TestMp4Container:
         assert ok.duration_ms == 4 * M.MP4_SAMPLE_DUR
         assert ok.mdat_bytes == len(b"i parse fine ok")
 
-    def test_keyframe_manifest_skips_corrupt(self, spark):
-        docs = spark.createDataFrame(
-            [(50, "corrupt me please", "s0"),
-             (51, " ".join(f"w{i}" for i in range(11)), "s0")],
-            "doc_id long, text string, source string",
-        )
-        rows = M.mp4_keyframe_manifest(M.documents_as_mp4(docs)).collect()
-        assert {r.media_id for r in rows} == {51}
-        assert sorted(r.sample_no for r in rows) == [1, 6, 11]
-
 
 class TestDemuxerWalk:
     """sample_file_offsets — the real stsc/stco expansion (round 11):
@@ -1005,28 +921,6 @@ class TestDemuxerWalk:
         assert payload.count(old) == 1
         with pytest.raises(ValueError, match="file ends at"):
             M.parse_mp4(payload.replace(old, new))
-
-    def test_keyframe_manifest_multi_chunk_offsets_rebased_to_mdat(
-        self, spark
-    ):
-        payload = M.build_mp4_samples(self.FRAMES, samples_per_chunk=2)
-        info = M.parse_mp4(payload)
-        (t,) = info["tracks"]
-        media = spark.createDataFrame(
-            [(1, payload, "video/mp4", len(payload), "s")],
-            M.MEDIA_SCHEMA,
-        )
-        rows = {
-            r.sample_no: r
-            for r in M.mp4_keyframe_manifest(media).collect()
-        }
-        offs = M.sample_file_offsets(t)
-        assert set(rows) == set(t["keyframes"])
-        for kf, r in rows.items():
-            assert r.rel_offset == offs[kf - 1] - info["mdat_offset"]
-            # the manifest contract: seek+read recovers the sample
-            lo = info["mdat_offset"] + r.rel_offset
-            assert payload[lo : lo + r.sample_bytes] == self.FRAMES[kf - 1]
 
 
 class TestContentVerify:
@@ -1201,66 +1095,3 @@ class TestTimedMp4:
             M.documents_as_timed_mp4(docs)
         )
         assert {r.media_id for r in out.collect()} == {51}
-
-
-class TestMultitrackMp4:
-    """Round 12: two-track containers (video + 'soun' PCM) — the
-    one-container-N-tracks shape of real crawled media."""
-
-    TEXT = "alpha beta gamma delta epsilon zeta eta theta " * 4
-
-    def test_two_tracks_parse_with_own_geometry(self):
-        data = self.TEXT.encode()
-        info = M.parse_mp4(M.build_mp4_multitrack(data))
-        assert len(info["tracks"]) == 2
-        v, a = info["tracks"]
-        assert v["handler"] == "vide" and a["handler"] == "soun"
-        assert v["timescale"] == M.MP4_TIMESCALE
-        assert a["timescale"] == M.MP4_AUDIO_TIMESCALE
-        n_v = len(self.TEXT.split())
-        n_a = max(1, len(data) // M.MP4_AUDIO_BYTES_PER_SAMPLE)
-        assert v["n_samples_stts"] == n_v
-        assert a["n_samples_stts"] == n_a
-        assert v["samples_duration"] == n_v * M.MP4_SAMPLE_DUR
-        assert a["samples_duration"] == n_a * M.MP4_AUDIO_SAMPLE_DUR
-        # audio has no stss: all samples sync by spec
-        assert v["keyframes"] and not a["keyframes"]
-        # both tracks' stsz cover one payload copy each
-        assert sum(v["sample_sizes"]) == len(data)
-        assert sum(a["sample_sizes"]) == len(data)
-
-    def test_per_track_demuxer_regions_are_disjoint_copies(self):
-        data = self.TEXT.encode()
-        payload = M.build_mp4_multitrack(data)
-        info = M.parse_mp4(payload)
-        v, a = info["tracks"]
-        v_offs = M.sample_file_offsets(v)
-        a_offs = M.sample_file_offsets(a)
-        # reassembling each track's samples yields the full payload copy
-        v_bytes = b"".join(
-            payload[o : o + s] for o, s in zip(v_offs, v["sample_sizes"])
-        )
-        a_bytes = b"".join(
-            payload[o : o + s] for o, s in zip(a_offs, a["sample_sizes"])
-        )
-        assert v_bytes == data and a_bytes == data
-        # audio region starts exactly where video's ends
-        assert a_offs[0] == v_offs[0] + len(data)
-
-    def test_track_stats_rows(self, spark):
-        docs = spark.createDataFrame(
-            [(1, self.TEXT, "s"), (50, self.TEXT, "s")],
-            "doc_id long, text string, source string",
-        )
-        rows = M.mp4_track_stats(
-            M.documents_as_multitrack_mp4(docs)
-        ).collect()
-        # doc 50 is corrupt -> only doc 1's two tracks
-        assert sorted((r.media_id, r.track_no, r.handler) for r in rows) == [
-            (1, 1, "vide"), (1, 2, "soun")
-        ]
-        by_h = {r.handler: r for r in rows}
-        data = self.TEXT.encode()
-        assert by_h["vide"].duration_ms == len(self.TEXT.split()) * 40
-        assert by_h["soun"].duration_ms == (len(data) // 8) * 25
-        assert by_h["soun"].n_keyframes == 0

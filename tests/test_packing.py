@@ -80,14 +80,6 @@ class TestSequenceStats:
         assert stats[1].n_tokens == 4
         assert stats[1].fill == 0.5
 
-    def test_manifest_spans_in_doc_order(self, spark):
-        # 6 + 6 tokens at seq_len=8: seq0 = "1:6,2:2", seq1 = "2:4"
-        df = _docs(spark, [(1, "a", _text(6)), (2, "a", _text(6))])
-        rows = {r.seq_id: r for r in PK.sequence_manifest(df, seq_len=8).collect()}
-        assert rows[0].manifest == "1:6,2:2"
-        assert rows[0].n_docs == 2
-        assert rows[1].manifest == "2:4"
-
     def test_token_conservation(self, spark):
         # every token lands in exactly one (doc, seq) slot
         df = _docs(
@@ -163,48 +155,6 @@ class TestTrainingShuffle:
             m = re.search(r"\bWindow\s+(\[.*)", line)
             if m:
                 assert len(re.findall(r"\], \[", m.group(1))) >= 2, line
-
-
-class TestUpsampleManifest:
-    def _docs(self, spark):
-        return spark.createDataFrame(
-            [(i, f"src{i % 4}") for i in range(200)],
-            "doc_id bigint, source string",
-        )
-
-    def test_copy_counts_follow_weights(self, spark):
-        from etl_procedure_codes_crawler_spark.llm import packing as PK
-
-        out = PK.upsample_manifest(
-            self._docs(spark),
-            {"src1": 2.5, "src2": 0.25, "src3": 0.0},
-            seed=7,
-        ).collect()
-        per_source: dict[str, int] = {}
-        for r in out:
-            per_source[r.source] = per_source.get(r.source, 0) + 1
-            assert 1 <= r.copy <= r.n_copies
-        # default weight 1.0: every src0 doc exactly once
-        assert per_source["src0"] == 50
-        # weight 0: dropped entirely
-        assert "src3" not in per_source
-        # weight 2.5: between 2x and 3x, near 2.5x for 50 docs
-        assert 2 * 50 <= per_source["src1"] <= 3 * 50
-        # weight 0.25: strict subset
-        assert 0 < per_source["src2"] < 50
-
-    def test_deterministic_and_shuffle_free(self, spark):
-        from etl_procedure_codes_crawler_spark.llm import packing as PK
-
-        docs = self._docs(spark)
-        out = PK.upsample_manifest(docs, {"src1": 2.5}, seed=7)
-        a = sorted(map(tuple, out.collect()))
-        b = sorted(map(tuple, PK.upsample_manifest(
-            docs, {"src1": 2.5}, seed=7).collect()))
-        assert a == b
-        plan = out._jdf.queryExecution().executedPlan().toString()
-        # map-side only: explode + project, no exchange anywhere
-        assert "Exchange" not in plan, plan
 
 
 class TestWriteTrainingShards:
@@ -407,266 +357,6 @@ class TestClusterHoldoutSplit:
         out = self._run(spark, 120, [(1, 2), (2, 3), (3, 4)]).collect()
         assert len(out) == 120
         assert len({r.doc_id for r in out}) == 120
-
-
-class TestIncrementalShuffle:
-    def test_extends_without_moving_snapshot(self, spark):
-        from etl_procedure_codes_crawler_spark.llm import packing as PK
-
-        docs = spark.createDataFrame(
-            [(i,) for i in range(400)], "doc_id bigint"
-        )
-        old = docs.filter("doc_id < 250")
-        new = docs.filter("doc_id >= 250")
-        snap = PK.training_shuffle(old, num_shards=4, seed=1)
-        inc = PK.training_shuffle_incremental(
-            new, snap, num_shards=4, seed=1
-        )
-        snap_rows = snap.collect()
-        inc_rows = inc.collect()
-        # new docs only, each exactly once
-        assert sorted(r.doc_id for r in inc_rows) == list(range(250, 400))
-        # same shard the full-shuffle would assign (same key)
-        full = {
-            r.doc_id: r.shard
-            for r in PK.training_shuffle(docs, num_shards=4, seed=1).collect()
-        }
-        assert all(full[r.doc_id] == r.shard for r in inc_rows)
-        # pos strictly continues after the snapshot max per shard
-        base = {}
-        for r in snap_rows:
-            base[r.shard] = max(base.get(r.shard, 0), r.pos)
-        by_shard = {}
-        for r in inc_rows:
-            by_shard.setdefault(r.shard, []).append(r.pos)
-        for shard, poss in by_shard.items():
-            lo = base.get(shard, 0)
-            assert sorted(poss) == list(range(lo + 1, lo + 1 + len(poss)))
-
-    def test_already_assigned_docs_skipped(self, spark):
-        from etl_procedure_codes_crawler_spark.llm import packing as PK
-
-        docs = spark.createDataFrame(
-            [(i,) for i in range(100)], "doc_id bigint"
-        )
-        snap = PK.training_shuffle(docs, num_shards=4, seed=1)
-        # replaying the same batch adds nothing
-        inc = PK.training_shuffle_incremental(docs, snap, num_shards=4, seed=1)
-        assert inc.count() == 0
-
-
-class TestBudgetSelect:
-    def test_boundary_order_and_exactness(self, spark):
-        from etl_procedure_codes_crawler_spark.llm import packing as PK
-
-        # quality descending: doc 3 (0.9), doc 1 (0.8), doc 2 (0.8),
-        # doc 0 (0.1); tokens 40 each; budget 100 → first TWO fit
-        # (cum 40, 80), doc 2 would hit 120 > 100 → excluded
-        docs = spark.createDataFrame(
-            [(0, 0.1, 40), (1, 0.8, 40), (2, 0.8, 40), (3, 0.9, 40)],
-            "doc_id bigint, quality double, n_tokens bigint",
-        )
-        got = {
-            r.doc_id: r.cum_tokens
-            for r in PK.budget_select(
-                docs, "quality", "n_tokens", budget=100
-            ).collect()
-        }
-        # tie at 0.8 broken by doc_id asc → doc 1 before doc 2
-        assert got == {3: 40, 1: 80}
-
-    def test_scales_without_unpartitioned_window(self, spark):
-        import re
-
-        from etl_procedure_codes_crawler_spark.llm import packing as PK
-
-        docs = spark.createDataFrame(
-            [(i, float(i % 97) / 97, 10 + i % 7) for i in range(500)],
-            "doc_id bigint, quality double, n_tokens bigint",
-        )
-        out = PK.budget_select(docs, "quality", "n_tokens", budget=1500)
-        plan = out._jdf.queryExecution().executedPlan().toString()
-        for line in plan.splitlines():
-            m = re.search(r"\bWindow\s+(\[.*)", line)
-            if m:
-                assert len(re.findall(r"\], \[", m.group(1))) >= 2, line
-        # selection is exactly the top-quality prefix
-        rows = sorted(out.collect(), key=lambda r: r.cum_tokens)
-        qualities = [r.quality for r in rows]
-        assert qualities == sorted(qualities, reverse=True) or len(set(qualities)) < len(qualities)
-        assert rows[-1].cum_tokens <= 1500
-
-
-class TestCurriculumManifest:
-    def test_within_shard_difficulty_order_and_shard_diversity(self, spark):
-        from etl_procedure_codes_crawler_spark.llm import packing as PK
-
-        docs = spark.createDataFrame(
-            [(i, (i * 37) % 101) for i in range(300)],
-            "doc_id bigint, difficulty bigint",
-        )
-        out = PK.curriculum_manifest(
-            docs, "difficulty", num_shards=4, seed=1
-        ).collect()
-        # shard assignment matches the plain shuffle (same key/seed) —
-        # curricula change READ ORDER, not shard membership
-        full = {
-            r.doc_id: r.shard
-            for r in PK.training_shuffle(docs, num_shards=4, seed=1).collect()
-        }
-        assert all(full[r.doc_id] == r.shard for r in out)
-        # within a shard: score ascending, contiguous pos from 1
-        by_shard = {}
-        for r in out:
-            by_shard.setdefault(r.shard, []).append(r)
-        for shard, rows in by_shard.items():
-            rows.sort(key=lambda r: r.pos)
-            scores = [r.score for r in rows]
-            assert scores == sorted(scores), shard
-            assert [r.pos for r in rows] == list(range(1, len(rows) + 1))
-
-    def test_descending_order(self, spark):
-        from etl_procedure_codes_crawler_spark.llm import packing as PK
-
-        docs = spark.createDataFrame(
-            [(i, i % 11) for i in range(100)],
-            "doc_id bigint, difficulty bigint",
-        )
-        out = PK.curriculum_manifest(
-            docs, "difficulty", num_shards=2, seed=1, ascending=False
-        ).collect()
-        by_shard = {}
-        for r in out:
-            by_shard.setdefault(r.shard, []).append(r)
-        for rows in by_shard.values():
-            rows.sort(key=lambda r: r.pos)
-            scores = [r.score for r in rows]
-            assert scores == sorted(scores, reverse=True)
-
-
-class TestBudgetSelectNullContract:
-    def test_null_quality_raises(self, spark):
-        from etl_procedure_codes_crawler_spark.llm import packing as PK
-
-        docs = spark.createDataFrame(
-            [(0, 0.5, 40), (1, None, 40)],
-            "doc_id bigint, quality double, n_tokens bigint",
-        )
-        with pytest.raises(ValueError, match="NULL 'quality'"):
-            PK.budget_select(docs, "quality", "n_tokens", budget=100)
-
-    def test_null_tokens_raises(self, spark):
-        from etl_procedure_codes_crawler_spark.llm import packing as PK
-
-        docs = spark.createDataFrame(
-            [(0, 0.5, 40), (1, 0.9, None)],
-            "doc_id bigint, quality double, n_tokens bigint",
-        )
-        with pytest.raises(ValueError, match="NULL"):
-            PK.budget_select(docs, "quality", "n_tokens", budget=100)
-
-
-class TestLengthBucketedBatches:
-    def test_batches_are_length_contiguous_and_waste_exact(self, spark):
-        # 70 docs with lengths 1..70 shuffled; batch_size 32
-        import random
-
-        rng = random.Random(5)
-        lens = list(range(1, 71))
-        rng.shuffle(lens)
-        docs = spark.createDataFrame(
-            [(i, n) for i, n in enumerate(lens)], "doc_id bigint, n_tokens bigint"
-        )
-        rows = {
-            r.batch_id: r
-            for r in PK.length_bucketed_batches(docs, batch_size=32).collect()
-        }
-        assert set(rows) == {0, 1, 2}
-        # global length order → batch 0 holds lengths 1..32, etc.
-        assert (rows[0].min_tokens, rows[0].max_tokens, rows[0].n_docs) == (1, 32, 32)
-        assert (rows[1].min_tokens, rows[1].max_tokens, rows[1].n_docs) == (33, 64, 32)
-        assert (rows[2].min_tokens, rows[2].max_tokens, rows[2].n_docs) == (65, 70, 6)
-        # exact waste arithmetic: batch 0 pads 32 docs to 32 tokens
-        assert rows[0].padded_tokens == 32 * 32
-        assert rows[0].sum_tokens == sum(range(1, 33))
-        # floor grid (not round) — cross-engine stable at .00005 ties
-        import math
-
-        assert rows[0].padding_waste == (
-            math.floor((1 - rows[0].sum_tokens / 1024) * 10000) / 10000
-        )
-
-    def test_no_unpartitioned_window_in_plan(self, spark):
-        import re
-
-        docs = spark.createDataFrame(
-            [(i, (i * 37) % 200 + 1) for i in range(500)],
-            "doc_id bigint, n_tokens bigint",
-        )
-        out = PK.length_bucketed_batches(docs, batch_size=32)
-        plan = out._jdf.queryExecution().executedPlan().toString()
-        for line in plan.splitlines():
-            m = re.search(r"\bWindow\s+(\[.*)", line)
-            if m:
-                assert len(re.findall(r"\], \[", m.group(1))) >= 2, line
-
-    def test_rank_is_exact_row_number_semantics(self, spark):
-        # ties on length broken by id: same semantics as the oracle's
-        # ROW_NUMBER() OVER (ORDER BY _n, doc_id)
-        docs = spark.createDataFrame(
-            [(i, 10) for i in range(40)] + [(100 + i, 20) for i in range(40)],
-            "doc_id bigint, n_tokens bigint",
-        )
-        ranked = PK.exact_global_rank(
-            docs.select("doc_id", F.col("n_tokens").cast("bigint").alias("_n")),
-            "_n",
-            "doc_id",
-        )
-        got = {r.doc_id: r._rank for r in ranked.collect()}
-        want = {
-            d: i + 1
-            for i, d in enumerate(
-                sorted(got, key=lambda d: (10 if d < 100 else 20, d))
-            )
-        }
-        assert got == want
-
-
-class TestExactGlobalRankHardening:
-    def test_null_values_raise(self, spark):
-        docs = spark.createDataFrame(
-            [(0, 10), (1, None)], "doc_id bigint, n_tokens bigint"
-        )
-        with pytest.raises(ValueError, match="NULL 'n_tokens'"):
-            PK.exact_global_rank(docs, "n_tokens", "doc_id").collect()
-
-    def test_tie_skew_splits_fat_bin_without_breaking_order(self, spark):
-        """1000 rows share ONE length (the tie-skew case): the fat bin
-        must sub-bin on the tiebreak — ranks stay exact ROW_NUMBER
-        semantics AND no window partition holds all the ties."""
-        import re
-
-        rows = [(i, 50) for i in range(1000)] + [(2000, 1), (2001, 99)]
-        docs = spark.createDataFrame(rows, "doc_id bigint, n_tokens bigint")
-        ranked = PK.exact_global_rank(docs, "n_tokens", "doc_id")
-        got = {r.doc_id: r._rank for r in ranked.collect()}
-        order = sorted(rows, key=lambda t: (t[1], t[0]))
-        want = {doc: i + 1 for i, (doc, _n) in enumerate(order)}
-        assert got == want
-        # the tie value's rows are spread over multiple sub-bins: the
-        # plan's window runs over _bin partitions, and the per-bin
-        # counts must show no bin holding all 1000 ties
-        binned, _ = PK._quantile_edge_bin(
-            docs.select("doc_id", F.col("n_tokens").cast("bigint").alias("_n")),
-            "_n",
-            16,
-        )
-        # sanity of the test construction: value-only binning DOES put
-        # all ties in one bin — the function must beat this
-        fat = (
-            binned.groupBy("_bin").count().agg(F.max("count")).first()[0]
-        )
-        assert fat >= 1000
 
 
 class TestWriteTrainingShards:

@@ -151,52 +151,6 @@ class TestStreamIngestMediaNearDup:
         assert again == [1, 2, 42]
 
 
-def test_compact_phash_store_changes_nothing(spark, tmp_path):
-    store = str(tmp_path / "store")
-    PS.create_phash_store(spark, store)
-    for i in range(4):  # 4 appended segments = 4+ files
-        PS.append_to_phash_store(
-            spark,
-            store,
-            spark.createDataFrame(
-                [(i * 10 + j, i * 1000 + j, None) for j in range(3)],
-                "media_id long, phash long, decode_error string",
-            ),
-        )
-    before = sorted(
-        (r.id, r.phash) for r in PS.read_phash_store(spark, store).collect()
-    )
-    PS.compact_phash_store(spark, store)
-    after = sorted(
-        (r.id, r.phash) for r in PS.read_phash_store(spark, store).collect()
-    )
-    assert before == after and len(after) == 12
-
-
-def test_compact_budget_stats_preserves_consumed_totals(spark, tmp_path):
-    from etl_procedure_codes_crawler_spark.streaming.incremental import (
-        compact_budget_stats,
-        read_consumed_tokens,
-    )
-
-    stats = str(tmp_path / "stats")
-    for b in range(3):
-        spark.createDataFrame(
-            [("g", b, "src0", 10 + b), ("g", b, "src1", 5)],
-            "gate_id string, batch_id long, source string, n_tokens long",
-        ).write.mode("append").parquet(stats)
-    before = {
-        r.source: r._used
-        for r in read_consumed_tokens(spark, stats).collect()
-    }
-    compact_budget_stats(spark, stats)
-    after = {
-        r.source: r._used
-        for r in read_consumed_tokens(spark, stats).collect()
-    }
-    assert before == after == {"src0": 33, "src1": 15}
-
-
 class TestMediaGateLabelMode:
     _drop = TestStreamIngestMediaNearDup._drop
 

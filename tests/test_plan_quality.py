@@ -8,73 +8,43 @@ from __future__ import annotations
 
 import pytest
 
-from etl_procedure_codes_crawler_spark.llm.queries import ROWS_ONLY  # noqa: F401 — registers
+from etl_procedure_codes_crawler_spark.llm import queries  # noqa: F401 — registers
 from etl_procedure_codes_crawler_spark.plans.relational import QUERIES
 
 #: queries ALLOWED to plan a broadcast nested-loop / cartesian, each
 #: with the reason it is deliberate. Everything else must not.
 NESTED_LOOP_EXEMPT = {
-    # explicit dimension grid: broadcast NLJ over two tiny dims IS the plan
-    "cross_join_region_priority_grid": "explicit broadcast dim-grid",
-    # documented O(n²) exact baselines (scale path = their LSH variants)
-    "embedding_similar_pairs": "brute-force pair baseline (vec_a < vec_b)",
-    "ann_cosine_topk": "brute-force top-k baseline (broadcast query side)",
     # non-IVF PQ = ADC FULL scan per query by definition (the pruned
     # member of the family is ann_cosine_topk_ivfpq); the md5/Hadamard
     # row has a static plan (integer training) so the scan is visible
     "ann_cosine_topk_hpq": "ADC full-scan baseline (broadcast query side)",
-    # margin scoring consumes only the pair relation; the brute-force
-    # candidate generator is the documented exact baseline (at scale
-    # the same margin math rides the LSH/IVF candidate stream)
-    "embedding_margin_pairs": "brute-force candidate baseline (vec_a < vec_b)",
     # group-count-sized sketch-pair expansion: k rows per group crossed
     # with the (bounded) group list — metadata-sized by construction
     "kmv_source_overlap_pairs": "group-count-sized sketch pair expansion",
-    # small distinct domain crossed deliberately after shrinking
-    "levenshtein_similar_sources": "distinct-shrunk fuzzy domain pairing",
     # pairwise sketch comparison over the GROUP-sized signature table
     # (one row per source) — non-equi by nature, tiny by construction
     "source_overlap_minhash": "group-count-sized signature pair join",
-    # scalar-aggregate threshold broadcast as a 1-row cross join
-    "q22_global_sales_opportunity": "1-row threshold cross join",
+    # scalar-aggregate thresholds broadcast as 1-row cross joins
     "tfidf_top_terms": "1-row doc-count scalar cross join",
     "vocab_top_terms": "1-row corpus-total scalar cross join",
-    # Catalyst constant-folds the literal join key away, leaving a
-    # 1-row grand-total broadcast with the non-equi threshold as the
-    # join condition — the right plan (a single-partition window
-    # alternative would funnel every part group through one task)
-    "q11_important_part_value": "1-row grand-total threshold broadcast",
-    "source_mixing_weights": "1-row corpus-total broadcast onto sources",
-    "temperature_mixture_weights": "1-row normalization-constant broadcast",
-    "chi_square_source_drift": "1-row contingency-margins broadcast",
     # the two 1-row corpus-total aggregates (target + raw) attach to
     # the bucket spine as scalar cross joins — deliberate, documented
     # in PLANS.md; the spine itself stays a broadcast HASH join
     "dsir_importance_topk": "1-row corpus-total scalar cross joins",
-    "dsir_resample_documents": "1-row corpus-total scalar cross joins",
 }
 
 #: iterative / streaming / ML-training queries where a single static
 #: plan string is not meaningful (driver loops, availableNow batches)
 SKIP = {
-    "near_dup_clusters",
     "bpe_train_merges",  # iterative driver loop, no single static plan
-    "bpe_encode_documents",  # trains first — plan depends on learned merges
-    "bpe_bucketed_batches",  # trains + driver-collected bin edges
     "forget_documents_roundtrip",  # multi-artifact side-effecting lifecycle
     "dataset_versioning_roundtrip",  # fs-lifecycle plan (manifest commits)
     "kmv_store_incremental_estimate",  # fs-lifecycle (store appends/compact)
-    "streaming_kmv_source_cardinality",  # stream round-trip lifecycle
     "streaming_hourly_event_counts",
-    "streaming_sliding_value_averages",
-    "streaming_session_windows",
-    "streaming_distinct_user_event_types",
     "ann_cosine_topk_ivf",  # plan depends on trained centroids
     "ann_cosine_topk_pq",  # plan depends on trained codebook
     "ann_cosine_topk_ivfpq",  # plan depends on trained cells + codebook
-    "quality_tier_classifier_gd",  # iterative GD loop; plan = learned weights
     "embedding_margin_pairs_ann",  # plan depends on trained IVF centroids
-    "unigram_train_pieces",  # iterative EM loop; result is a trained table
     "unigram_fertility_by_source",  # trains first — plan rides learned pieces
 }
 
@@ -145,6 +115,13 @@ SWEEP_FAST = {
 }
 
 
+def test_plan_sets_name_registered_queries():
+    """An entry for a query that is no longer registered exempts,
+    skips or samples nothing."""
+    stale = (set(NESTED_LOOP_EXEMPT) | SKIP | SWEEP_FAST) - set(QUERIES)
+    assert not stale, sorted(stale)
+
+
 @pytest.mark.parametrize(
     "name",
     [
@@ -181,14 +158,13 @@ def test_key_plan_properties(spark, sf_dir, name, expect):
 
 
 def test_deciles_no_range_exchange(spark, sf_dir):
-    """customer_spend_deciles must not use repartitionByRange: its
-    bounds come from per-execution reservoir sampling, and the query
-    evaluates its lineage in two jobs (counts collect + final agg) —
-    sampled bounds could differ between them and silently corrupt
-    ranks. Bins must be literal-edge comparisons (deterministic), and
-    the rank window must be partitioned by bin (checked by
+    """The NTILE quantile buckets (ccnet_bucket_documents' per-language
+    terciles) must not use repartitionByRange: its bounds come from
+    per-execution reservoir sampling, so bounds could differ between
+    two evaluations of the same lineage and silently corrupt ranks.
+    The NTILE window must be partitioned (checked by
     test_no_unpartitioned_window)."""
-    plan = _plan(QUERIES["customer_spend_deciles"](spark, sf_dir))
+    plan = _plan(QUERIES["ccnet_bucket_documents"](spark, sf_dir))
     assert "rangepartitioning" not in plan.lower(), plan
 
 
@@ -209,7 +185,7 @@ def _unpartitioned_window_count(plan: str) -> int:
 
 @pytest.mark.parametrize(
     "name",
-    ["vocab_top_terms", "customer_spend_deciles", "grouped_topk_orders_per_customer"],
+    ["vocab_top_terms", "ccnet_bucket_documents", "grouped_topk_orders_per_customer"],
 )
 def test_no_unpartitioned_window(spark, sf_dir, name):
     plan = _plan(QUERIES[name](spark, sf_dir))

@@ -1,5 +1,5 @@
 """Round-9 session-2 families: asymmetric containment, ratio-margin
-pair mining, systematic PPS sampling, CCNet bucketing, and the oracled
+pair mining, CCNet bucketing, and the oracled
 KMV sketch — planted-case behavior plus accuracy floors the parity
 replica cannot express (the oracle proves cross-engine equality, not
 that the estimate is any GOOD; these tests pin the latter)."""
@@ -12,7 +12,6 @@ from pyspark.sql import functions as F
 from etl_procedure_codes_crawler_spark.llm import dedup as D
 from etl_procedure_codes_crawler_spark.llm import kmv as KV
 from etl_procedure_codes_crawler_spark.llm import overlap as OV
-from etl_procedure_codes_crawler_spark.llm import packing as PK
 from etl_procedure_codes_crawler_spark.llm import queries  # noqa: F401 — registers
 from etl_procedure_codes_crawler_spark.llm import similarity as S
 from etl_procedure_codes_crawler_spark.plans.relational import QUERIES
@@ -68,6 +67,14 @@ class TestContainmentPairs:
 
 
 class TestMarginPairs:
+    @staticmethod
+    def _bruteforce(df, floor, k, margin_threshold):
+        """Margin scoring over the exhaustive candidate scan: every
+        pair at cosine >= ``floor``."""
+        return S.margin_score_pairs(
+            S._pairs_above(df, floor), k=k, margin_threshold=margin_threshold
+        )
+
     def test_hub_vector_suppressed_isolated_pair_kept(self, spark):
         # hub h correlates ~equally with everything (margin ~= 1);
         # pair (a, b) is a tight match in an otherwise-cold neighborhood
@@ -87,7 +94,7 @@ class TestMarginPairs:
             v = hub / np.linalg.norm(hub) + 0.8 * rng.randn(dim)
             rows.append((i, [float(x) for x in v]))
         df = spark.createDataFrame(rows, ["vec_id", "embedding"])
-        out = S.margin_pairs_bruteforce(
+        out = self._bruteforce(
             df, floor=0.1, k=3, margin_threshold=1.25
         ).collect()
         kept = {(r["vec_a"], r["vec_b"]) for r in out}
@@ -102,7 +109,7 @@ class TestMarginPairs:
         emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
         got = {
             (r["vec_a"], r["vec_b"]): (r["cosine"], r["margin"])
-            for r in S.margin_pairs_bruteforce(
+            for r in self._bruteforce(
                 emb, floor=0.30, k=4, margin_threshold=1.1
             ).collect()
         }
@@ -140,7 +147,7 @@ class TestMarginPairs:
         emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
         exact = {
             (r["vec_a"], r["vec_b"])
-            for r in S.margin_pairs_bruteforce(
+            for r in self._bruteforce(
                 emb, floor=0.30, k=4, margin_threshold=1.1
             ).collect()
         }
@@ -154,50 +161,6 @@ class TestMarginPairs:
         if exact:
             recall = len(exact & approx) / len(exact)
             assert recall >= 0.6, (recall, len(exact), len(approx))
-
-
-class TestPpsSystematicSample:
-    def test_total_hits_equals_n_picks_and_probability_proportional(self, spark):
-        # heavy docs first (a contiguous 10000-token block): with pins
-        # every 545 tokens, the block must catch ~18 of the 20 pins.
-        # (Interleaving heavy/light periodically would alias against
-        # the stride — the documented systematic-sampling caveat.)
-        df = spark.createDataFrame(
-            [(i, 1000 if i < 10 else 10) for i in range(100)],
-            ["doc_id", "w"],
-        )
-        out = PK.pps_systematic_sample(df, tokens_col="w", n_picks=20)
-        rows = out.collect()
-        assert sum(r["n_hits"] for r in rows) == 20
-        heavy = [r for r in rows if r["n_tokens"] == 1000]
-        assert sum(r["n_hits"] for r in heavy) >= 18
-        assert all(r["n_hits"] >= 1 for r in rows)
-
-    def test_deterministic_and_multiplicity(self, spark):
-        df = spark.createDataFrame(
-            [(1, 5), (2, 95)], ["doc_id", "w"]
-        )
-        out = sorted(
-            PK.pps_systematic_sample(df, tokens_col="w", n_picks=10).collect()
-        )
-        out2 = sorted(
-            PK.pps_systematic_sample(df, tokens_col="w", n_picks=10).collect()
-        )
-        assert out == out2
-        hits = {r["doc_id"]: r["n_hits"] for r in out}
-        # doc 2 holds 95% of the line -> 9 or 10 of the 10 pins
-        assert hits[2] >= 9
-        assert sum(hits.values()) == 10
-
-    def test_null_and_zero_weights_drop_out(self, spark):
-        df = spark.createDataFrame(
-            [(1, 50), (2, None), (3, 0), (4, 50)],
-            "doc_id bigint, w bigint",
-        )
-        rows = PK.pps_systematic_sample(df, tokens_col="w", n_picks=4).collect()
-        picked = {r["doc_id"] for r in rows}
-        assert picked == {1, 4}
-        assert sum(r["n_hits"] for r in rows) == 4
 
 
 class TestKmvSketch:
@@ -222,16 +185,15 @@ class TestKmvSketch:
             else:
                 assert abs(e - exact[g]) / exact[g] < 0.5, (g, e, exact[g])
 
-    def test_overlap_estimates_track_exact_overlap(self, spark, sf_dir):
+    def test_overlap_estimates_track_exact_overlap(
+        self, spark, sf_dir, exact_group_overlap
+    ):
         docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
         est = {
             (r["group_a"], r["group_b"]): r
             for r in KV.kmv_overlap_pairs(docs, k=64).collect()
         }
-        exact = {
-            (r["group_a"], r["group_b"]): r
-            for r in OV.group_shingle_overlap(docs).collect()
-        }
+        exact = exact_group_overlap(docs)
         # mean absolute jaccard error over pairs that exist in both
         common = set(est) & set(exact)
         assert common
@@ -383,55 +345,6 @@ class TestCcnetBuckets:
                 assert m >= agg[(lang, "tail")]
 
 
-class TestTemperatureMixture:
-    def test_weights_flatten_toward_small_sources(self, spark, sf_dir):
-        rows = QUERIES["temperature_mixture_weights"](spark, sf_dir).collect()
-        assert rows
-        total_tokens = sum(r["n_tokens"] for r in rows)
-        w_sum = sum(r["temp_weight"] for r in rows)
-        assert abs(w_sum - 1.0) < 1e-3
-        for r in rows:
-            natural = r["n_tokens"] / total_tokens
-            # tau=2 flattening: below-average sources gain weight,
-            # above-average sources lose it
-            if natural < 1 / len(rows):
-                assert r["temp_weight"] > natural
-            elif natural > 1 / len(rows):
-                assert r["temp_weight"] < natural
-        ppm = sum(r["budget_ppm"] for r in rows)
-        assert 1_000_000 - len(rows) <= ppm <= 1_000_000  # floor rounding
-
-
-class TestKmvStoreForget:
-    def test_rebuild_is_the_deletion_path(self, spark, tmp_path):
-        rows = [
-            (1, "alpha beta gamma delta epsilon", "s1"),
-            (2, "zeta eta theta iota kappa", "s1"),
-            (3, "lambda mu nu xi omicron", "s2"),
-        ]
-        df = spark.createDataFrame(rows, ["doc_id", "text", "source"])
-        root = str(tmp_path / "kmv")
-        KV.create_kmv_store(spark, root, k=64, shingle_k=3)
-        KV.append_to_kmv_store(spark, root, df)
-        # forget doc 2: rebuild from the post-deletion snapshot must
-        # equal a fresh sketch of the remaining corpus exactly
-        remaining = df.filter(F.col("doc_id") != 2)
-        KV.rebuild_kmv_store(spark, root, remaining)
-        got = sorted(map(tuple, KV.kmv_store_estimates(spark, root).collect()))
-        want = sorted(
-            map(tuple, KV.kmv_distinct_by_group(remaining, k=64).collect())
-        )
-        assert got == want
-        # and the forgotten doc's contribution is actually gone:
-        # s1's sketch shrank
-        before = {
-            r["group"]: r["n_in_sketch"]
-            for r in KV.kmv_distinct_by_group(df, k=64).collect()
-        }
-        after = dict((g, n) for g, n, _e in got)
-        assert after["s1"] < before["s1"]
-
-
 class TestBlocklist:
     def test_automaton_counts_overlaps_and_classic_cases(self):
         from etl_procedure_codes_crawler_spark.llm.blocklist import (
@@ -484,6 +397,9 @@ class TestBlocklist:
 
 
 class TestChiSquareDrift:
+    """The per-source chi-square contributions of the streamed drift
+    statistic (even-id reference half vs odd-id current half)."""
+
     def _run(self, spark, rows):
         from etl_procedure_codes_crawler_spark.plans.relational import QUERIES
         import tempfile, shutil, os
@@ -496,7 +412,7 @@ class TestChiSquareDrift:
             )
             return {
                 r["source"]: r
-                for r in QUERIES["chi_square_source_drift"](
+                for r in QUERIES["streaming_chi_square_drift"](
                     spark, tmp
                 ).collect()
             }

@@ -10,6 +10,7 @@ from fractions import Fraction
 
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
+from pyspark.sql import functions as F
 
 from etl_procedure_codes_crawler_spark.llm import bloom as B
 from etl_procedure_codes_crawler_spark.llm import dedup as D
@@ -47,9 +48,15 @@ def test_intra_doc_repeats_match_replica(spark, texts, block):
     df = spark.createDataFrame(
         [(i, t) for i, t in enumerate(texts)], "doc_id bigint, text string"
     )
+    n_blocks, kept = D.intra_doc_kept_blocks("text", block)
     got = {
         r.doc_id: (r.n_blocks, r.n_kept, r.text_clean)
-        for r in D.remove_intra_doc_repeats(df, block=block).collect()
+        for r in df.select(
+            "doc_id",
+            n_blocks.alias("n_blocks"),
+            F.size(kept).alias("n_kept"),
+            F.array_join(kept, " ").alias("text_clean"),
+        ).collect()
     }
     for i, t in enumerate(texts):
         assert got[i] == _block_replica(t, block), (t, block, got[i])

@@ -9,47 +9,6 @@ from pyspark.sql import functions as F
 from etl_procedure_codes_crawler_spark.plans.relational import QUERIES, load
 
 
-def test_hll_union_within_error_of_exact(spark, sf_dir):
-    got = {
-        r.event_type: r.approx_users
-        for r in QUERIES["hll_sketch_union_users"](spark, sf_dir).collect()
-    }
-    events = load(spark, sf_dir, "events")
-    exact = {
-        r.event_type: r.n
-        for r in events.groupBy("event_type")
-        .agg(F.count_distinct("user_id").alias("n"))
-        .collect()
-    }
-    exact["_all_"] = events.select("user_id").distinct().count()
-    assert set(got) == set(exact)
-    for key, approx in got.items():
-        rel_err = abs(approx - exact[key]) / max(exact[key], 1)
-        assert rel_err < 0.05, (key, approx, exact[key])
-
-
-def test_approx_quantiles_within_error_of_exact(spark, sf_dir):
-    got = {
-        r.l_returnflag: (r.p50, r.p90, r.p99)
-        for r in QUERIES["approx_quantiles_prices"](spark, sf_dir).collect()
-    }
-    li = load(spark, sf_dir, "lineitem")
-    exact = {
-        r.l_returnflag: r.qs
-        for r in li.groupBy("l_returnflag")
-        .agg(
-            F.expr(
-                "percentile(l_extendedprice, array(0.5, 0.9, 0.99))"
-            ).alias("qs")
-        )
-        .collect()
-    }
-    for flag, (p50, p90, p99) in got.items():
-        for approx, ex in zip((p50, p90, p99), exact[flag]):
-            # GK with accuracy 10000 on these group sizes: tight
-            assert abs(approx - ex) / max(abs(ex), 1) < 0.05, (flag, approx, ex)
-
-
 def test_heavy_hitters_within_error_of_exact(spark, sf_dir):
     got = {
         r.token: r.approx_count

@@ -1,5 +1,5 @@
-"""Streaming incremental append: checkpoint durability + replay
-idempotency (streaming/incremental.py)."""
+"""Streaming ingest gates: checkpoint durability + replay idempotency
+(streaming/incremental.py)."""
 
 from __future__ import annotations
 
@@ -8,15 +8,6 @@ import os
 import pytest
 
 from pyspark.sql.types import LongType, StringType, StructField, StructType
-
-from etl_procedure_codes_crawler_spark.streaming.incremental import (
-    stream_incremental_append,
-)
-
-SCHEMA = StructType(
-    [StructField("code", StringType()), StructField("payload", LongType())]
-)
-
 
 @pytest.fixture()
 def dirs(tmp_path):
@@ -27,480 +18,6 @@ def dirs(tmp_path):
         "warehouse": str(tmp_path / "warehouse"),
         "checkpoint": str(tmp_path / "ckpt"),
     }
-
-
-def _drop(spark, source_dir: str, name: str, rows):
-    # stage as a single flat file — the file stream lists files, it
-    # does not recurse into per-write dataset directories
-    import glob
-    import shutil
-    import tempfile
-
-    staging = tempfile.mkdtemp()
-    df = spark.createDataFrame(rows, SCHEMA)
-    df.coalesce(1).write.mode("overwrite").parquet(staging)
-    part = glob.glob(os.path.join(staging, "part-*.parquet"))[0]
-    shutil.copy(part, os.path.join(source_dir, f"{name}.parquet"))
-    shutil.rmtree(staging, ignore_errors=True)
-
-
-def _run(spark, dirs):
-    query = stream_incremental_append(
-        spark,
-        dirs["source"],
-        SCHEMA,
-        dirs["warehouse"],
-        key="code",
-        checkpoint_dir=dirs["checkpoint"],
-    )
-    query.awaitTermination(120)
-    query.stop()
-
-
-def test_first_run_dedups_within_batch(spark, dirs):
-    _drop(spark, dirs["source"], "f1", [("a", 1), ("b", 2), ("a", 3)])
-    _run(spark, dirs)
-    rows = spark.read.parquet(dirs["warehouse"]).collect()
-    assert sorted(r.code for r in rows) == ["a", "b"]
-
-
-def test_new_files_append_only_new_keys(spark, dirs):
-    _drop(spark, dirs["source"], "f1", [("a", 1), ("b", 2)])
-    _run(spark, dirs)
-    # overlap key 'b'; new key 'c'
-    _drop(spark, dirs["source"], "f2", [("b", 9), ("c", 3)])
-    _run(spark, dirs)
-    rows = {r.code: r.payload for r in spark.read.parquet(dirs["warehouse"]).collect()}
-    assert rows == {"a": 1, "b": 2, "c": 3}  # b kept its ORIGINAL payload
-
-
-def test_checkpoint_prevents_reprocessing(spark, dirs):
-    _drop(spark, dirs["source"], "f1", [("a", 1)])
-    _run(spark, dirs)
-    before = spark.read.parquet(dirs["warehouse"]).count()
-    # no new files: a restarted query with the same checkpoint is a no-op
-    _run(spark, dirs)
-    assert spark.read.parquet(dirs["warehouse"]).count() == before
-
-
-def test_replayed_batch_is_idempotent(spark, dirs):
-    """Simulate the crash-between-write-and-commit window: same data
-    processed twice (fresh checkpoint = full replay) must not
-    double-append thanks to the per-batch anti-join."""
-    _drop(spark, dirs["source"], "f1", [("a", 1), ("b", 2)])
-    _run(spark, dirs)
-    replay = dict(dirs, checkpoint=dirs["checkpoint"] + "_2")  # lost checkpoint
-    _run(spark, replay)
-    rows = spark.read.parquet(dirs["warehouse"]).collect()
-    assert sorted(r.code for r in rows) == ["a", "b"]
-
-
-class TestStreamTrainingShuffle:
-    DOC_SCHEMA = StructType(
-        [StructField("doc_id", LongType()), StructField("text", StringType())]
-    )
-
-    def _drop_docs(self, spark, source_dir, name, ids):
-        import glob
-        import shutil
-        import tempfile
-
-        staging = tempfile.mkdtemp()
-        df = spark.createDataFrame(
-            [(i, f"text {i}") for i in ids], self.DOC_SCHEMA
-        )
-        df.coalesce(1).write.mode("overwrite").parquet(staging)
-        part = glob.glob(os.path.join(staging, "part-*.parquet"))[0]
-        shutil.copy(part, os.path.join(source_dir, f"{name}.parquet"))
-        shutil.rmtree(staging, ignore_errors=True)
-
-    def _run(self, spark, dirs):
-        from etl_procedure_codes_crawler_spark.streaming.incremental import (
-            stream_training_shuffle,
-        )
-
-        q = stream_training_shuffle(
-            spark,
-            dirs["source"],
-            self.DOC_SCHEMA,
-            dirs["warehouse"],
-            dirs["checkpoint"],
-            num_shards=4,
-            seed=1,
-        )
-        q.awaitTermination()
-
-    def test_batches_extend_manifest_and_match_batch_twin(self, spark, dirs):
-        from etl_procedure_codes_crawler_spark.llm import packing as PK
-
-        self._drop_docs(spark, dirs["source"], "b1", range(0, 120))
-        self._run(spark, dirs)
-        self._drop_docs(spark, dirs["source"], "b2", range(120, 200))
-        self._run(spark, dirs)
-
-        manifest = spark.read.parquet(dirs["warehouse"]).collect()
-        # every doc exactly once, pos contiguous per shard
-        assert sorted(r.doc_id for r in manifest) == list(range(200))
-        by_shard = {}
-        for r in manifest:
-            by_shard.setdefault(r.shard, []).append(r.pos)
-        for shard, poss in by_shard.items():
-            assert sorted(poss) == list(range(1, len(poss) + 1)), shard
-        # shard assignment identical to the batch operator (same key)
-        docs = spark.createDataFrame(
-            [(i, f"text {i}") for i in range(200)], self.DOC_SCHEMA
-        )
-        full = {
-            r.doc_id: r.shard
-            for r in PK.training_shuffle(docs, num_shards=4, seed=1).collect()
-        }
-        assert all(full[r.doc_id] == r.shard for r in manifest)
-        # batch-1 docs kept the pos they were assigned before batch 2
-        # (written shard files never move): every batch-1 doc's pos is
-        # <= the batch-1 per-shard count
-        b1_counts = {}
-        for r in manifest:
-            if r.doc_id < 120:
-                b1_counts[r.shard] = b1_counts.get(r.shard, 0) + 1
-        for r in manifest:
-            if r.doc_id < 120:
-                assert r.pos <= b1_counts[r.shard]
-
-    def test_replayed_ids_are_skipped(self, spark, dirs):
-        self._drop_docs(spark, dirs["source"], "b1", range(0, 50))
-        self._run(spark, dirs)
-        # same ids arrive again in a new file (e.g. upstream re-crawl)
-        self._drop_docs(spark, dirs["source"], "b1_replay", range(0, 50))
-        self._run(spark, dirs)
-        manifest = spark.read.parquet(dirs["warehouse"]).collect()
-        assert sorted(r.doc_id for r in manifest) == list(range(50))
-
-
-def test_null_key_rows_do_not_reappend(spark, dirs):
-    """A NULL-key row can never match the anti join; without the
-    guard it would re-append on every micro-batch that carries one
-    (and on crash replay), breaking dedup and exactly-once."""
-    _drop(spark, dirs["source"], "b1", [("a", 1), (None, 99)])
-    _run(spark, dirs)
-    _drop(spark, dirs["source"], "b2", [("b", 2), (None, 99)])
-    _run(spark, dirs)
-    rows = spark.read.parquet(dirs["warehouse"]).collect()
-    codes = sorted((r.code or "<null>") for r in rows)
-    # NULL-key rows dropped entirely (matching incremental_new_rows);
-    # real keys appended exactly once
-    assert codes == ["a", "b"]
-
-
-class TestBloomGatedIngest:
-    """stream_incremental_append with bloom_store_path: identical
-    dedup semantics, probe fast path + store growth + replay safety."""
-
-    def _run(self, spark, dirs):
-        q = stream_incremental_append(
-            spark,
-            dirs["source"],
-            SCHEMA,
-            dirs["warehouse"],
-            key="code",
-            checkpoint_dir=dirs["checkpoint"],
-            bloom_store_path=dirs["bloom"],
-        )
-        q.awaitTermination(120)
-        q.stop()
-
-    def test_semantics_match_plain_gate_and_store_grows(
-        self, spark, dirs, tmp_path
-    ):
-        from etl_procedure_codes_crawler_spark.llm import bloom as B
-
-        dirs["bloom"] = str(tmp_path / "bloom")
-        B.create_bloom_store(spark, dirs["bloom"], n_items=10_000)
-        _drop(spark, dirs["source"], "b1", [("a", 1), ("b", 2), ("a", 3)])
-        self._run(spark, dirs)
-        # overlapping second batch: 'b' must be caught by the bloom →
-        # exact-check route; 'c' rides the definitely-new fast path
-        _drop(spark, dirs["source"], "b2", [("b", 9), ("c", 4)])
-        self._run(spark, dirs)
-        rows = spark.read.parquet(dirs["warehouse"]).collect()
-        assert sorted(r.code for r in rows) == ["a", "b", "c"]
-        meta = B.load_bloom_meta(spark, dirs["bloom"])
-        flt = B.read_bloom_store(spark, dirs["bloom"])
-        ingested = spark.createDataFrame(
-            [("a",), ("b",), ("c",)], "code string"
-        )
-        probed = B.probe_bloom(
-            ingested, "code", flt, meta["m_bits"], meta["k"]
-        )
-        assert probed.filter("NOT maybe_seen").count() == 0
-
-    def test_replay_with_stale_checkpoint_is_idempotent(
-        self, spark, dirs, tmp_path
-    ):
-        from etl_procedure_codes_crawler_spark.llm import bloom as B
-
-        dirs["bloom"] = str(tmp_path / "bloom")
-        B.create_bloom_store(spark, dirs["bloom"], n_items=10_000)
-        _drop(spark, dirs["source"], "b1", [("a", 1), ("b", 2)])
-        self._run(spark, dirs)
-        # simulate the crash-replay: wipe the checkpoint so the SAME
-        # file reprocesses — the bloom routes both keys to the exact
-        # check, which skips them
-        import shutil
-
-        shutil.rmtree(dirs["checkpoint"])
-        self._run(spark, dirs)
-        rows = spark.read.parquet(dirs["warehouse"]).collect()
-        assert sorted(r.code for r in rows) == ["a", "b"]
-
-
-class TestBudgetCappedIngest:
-    """stream_ingest_with_budget: per-source token budgets enforced
-    across batches, consumed count derived from the warehouse."""
-
-    SCHEMA_DOCS = StructType(
-        [
-            StructField("doc_id", LongType()),
-            StructField("text", StringType()),
-            StructField("source", StringType()),
-        ]
-    )
-
-    def _drop_docs(self, spark, source_dir, name, rows):
-        import glob
-        import shutil
-        import tempfile
-
-        staging = tempfile.mkdtemp()
-        spark.createDataFrame(rows, self.SCHEMA_DOCS).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(staging)
-        part = glob.glob(os.path.join(staging, "part-*.parquet"))[0]
-        shutil.copy(part, os.path.join(source_dir, f"{name}.parquet"))
-
-    def _run(self, spark, dirs, ck):
-        from etl_procedure_codes_crawler_spark.streaming.incremental import (
-            stream_ingest_with_budget,
-        )
-
-        q = stream_ingest_with_budget(
-            spark,
-            dirs["source"],
-            self.SCHEMA_DOCS,
-            dirs["warehouse"],
-            ck,
-            budgets={"capped": 6},
-        )
-        q.awaitTermination(120)
-        q.stop()
-
-    def test_budget_spans_batches_and_replay(self, spark, dirs):
-        # batch 1: 4 tokens accepted from 'capped' (budget 6)
-        self._drop_docs(
-            spark,
-            dirs["source"],
-            "b1",
-            [(1, "a b", "capped"), (2, "c d", "capped"), (50, "x y z", "free")],
-        )
-        self._run(spark, dirs, dirs["checkpoint"])
-        # batch 2: doc 3 (2 tokens) fits exactly; doc 4 would exceed;
-        # 'free' stays uncapped
-        self._drop_docs(
-            spark,
-            dirs["source"],
-            "b2",
-            [(3, "e f", "capped"), (4, "g h", "capped"), (51, "w", "free")],
-        )
-        self._run(spark, dirs, dirs["checkpoint"])
-        got = sorted(
-            r.doc_id for r in spark.read.parquet(dirs["warehouse"]).collect()
-        )
-        assert got == [1, 2, 3, 50, 51]
-        # crash-replay of batch 2 (fresh checkpoint): anti-join skips
-        # everything already landed; budget decisions are unchanged
-        import shutil
-
-        shutil.rmtree(dirs["checkpoint"])
-        self._run(spark, dirs, dirs["checkpoint"])
-        again = sorted(
-            r.doc_id for r in spark.read.parquet(dirs["warehouse"]).collect()
-        )
-        assert again == [1, 2, 3, 50, 51]
-
-
-class TestBudgetGateScaleSafe:
-    """Round-8 scale contract for stream_ingest_with_budget: consumed
-    tokens come from the tiny stats artifact (never a per-batch
-    warehouse aggregation), the bloom prefilter can skip the warehouse
-    scan entirely, and every crash window replays to the identical
-    accept/reject decisions."""
-
-    SCHEMA_DOCS = StructType(
-        [
-            StructField("doc_id", LongType()),
-            StructField("text", StringType()),
-            StructField("source", StringType()),
-        ]
-    )
-
-    def _drop_docs(self, spark, source_dir, name, rows):
-        import glob
-        import shutil
-        import tempfile
-
-        staging = tempfile.mkdtemp()
-        spark.createDataFrame(rows, self.SCHEMA_DOCS).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(staging)
-        part = glob.glob(os.path.join(staging, "part-*.parquet"))[0]
-        shutil.copy(part, os.path.join(source_dir, f"{name}.parquet"))
-        shutil.rmtree(staging, ignore_errors=True)
-
-    def _run(self, spark, dirs, bloom=None):
-        from etl_procedure_codes_crawler_spark.streaming.incremental import (
-            stream_ingest_with_budget,
-        )
-
-        q = stream_ingest_with_budget(
-            spark,
-            dirs["source"],
-            self.SCHEMA_DOCS,
-            dirs["warehouse"],
-            dirs["checkpoint"],
-            budgets={"capped": 6},
-            bloom_store_path=bloom,
-        )
-        q.awaitTermination(120)
-        q.stop()
-
-    def _ids(self, spark, dirs):
-        return sorted(
-            r.doc_id
-            for r in spark.read.schema(self.SCHEMA_DOCS)
-            .parquet(dirs["warehouse"])
-            .collect()
-        )
-
-    def test_crash_after_stats_before_warehouse_replays_identically(
-        self, spark, dirs, monkeypatch
-    ):
-        """The gate's write order is stats → bloom → warehouse. A crash
-        between the stats write and the warehouse append (simulated by
-        exploding the bloom append that sits between them) must leave a
-        replay that re-makes the IDENTICAL decisions — and the durable
-        stats row from the crashed attempt must not double-count
-        against the budget in later batches."""
-        import pytest as _pytest
-        from pyspark.errors.exceptions.captured import (
-            StreamingQueryException,
-        )
-
-        import etl_procedure_codes_crawler_spark.llm.bloom as Bmod
-
-        bloom = str(os.path.join(os.path.dirname(dirs["warehouse"]), "bloom"))
-        Bmod.create_bloom_store(spark, bloom, n_items=10_000)
-        # budget 6: cum 2, 4, 7 -> accept docs 1, 2; reject doc 3
-        self._drop_docs(
-            spark,
-            dirs["source"],
-            "b1",
-            [(1, "a b", "capped"), (2, "c d", "capped"),
-             (3, "e f g", "capped")],
-        )
-        real_append = Bmod.append_to_bloom_store
-
-        def exploding(*a, **k):
-            raise RuntimeError("crash after stats, before warehouse")
-
-        monkeypatch.setattr(Bmod, "append_to_bloom_store", exploding)
-        with _pytest.raises(StreamingQueryException):
-            self._run(spark, dirs, bloom=bloom)
-        # the stats delta is durable, the data never landed
-        stats_dir = dirs["warehouse"].rstrip("/") + "_budget_stats"
-        stats = spark.read.parquet(stats_dir).collect()
-        assert [(r[2], r[3]) for r in stats] == [("capped", 4)]
-        assert not os.path.exists(
-            os.path.join(dirs["warehouse"], "_SUCCESS")
-        )
-        # replay with the same checkpoint: identical decisions land
-        monkeypatch.setattr(Bmod, "append_to_bloom_store", real_append)
-        self._run(spark, dirs, bloom=bloom)
-        assert self._ids(spark, dirs) == [1, 2]
-        # the re-appended stats row dedups: batch 2 sees consumed=4,
-        # not 8 — doc 4 (2 tokens) fits exactly, doc 5 would overflow
-        self._drop_docs(
-            spark,
-            dirs["source"],
-            "b2",
-            [(4, "e f", "capped"), (5, "g h", "capped")],
-        )
-        self._run(spark, dirs, bloom=bloom)
-        assert self._ids(spark, dirs) == [1, 2, 4]
-
-    def test_all_new_batch_schedules_no_warehouse_scan(self, spark, dirs):
-        """With the bloom prefilter and stats artifact in steady state,
-        a batch whose keys all probe definitely-new must not read the
-        warehouse AT ALL — pinned by planting a corrupt file in the
-        warehouse directory: any scan would throw, so the stream
-        completing proves no scan was scheduled."""
-        import pytest as _pytest
-
-        import etl_procedure_codes_crawler_spark.llm.bloom as Bmod
-
-        bloom = str(os.path.join(os.path.dirname(dirs["warehouse"]), "bloom"))
-        Bmod.create_bloom_store(spark, bloom, n_items=10_000)
-        self._drop_docs(
-            spark,
-            dirs["source"],
-            "b1",
-            [(1, "a b", "free"), (2, "c d", "free")],
-        )
-        self._run(spark, dirs, bloom=bloom)
-        poison = os.path.join(dirs["warehouse"], "zz_poison.parquet")
-        with open(poison, "wb") as fh:
-            fh.write(b"this is not a parquet file")
-        # control: the poison file DOES break any warehouse read
-        with _pytest.raises(Exception):
-            spark.read.schema(self.SCHEMA_DOCS).parquet(
-                dirs["warehouse"]
-            ).collect()
-        self._drop_docs(
-            spark,
-            dirs["source"],
-            "b2",
-            [(11, "w x", "free"), (12, "y z", "free")],
-        )
-        self._run(spark, dirs, bloom=bloom)  # would raise on any scan
-        os.remove(poison)
-        assert self._ids(spark, dirs) == [1, 2, 11, 12]
-
-    def test_stats_loss_auto_heals_from_warehouse(self, spark, dirs):
-        """Deleting the stats artifact mid-history triggers the heal
-        path: the next batch rebuilds consumed-per-source from the
-        warehouse once, and decisions match the never-crashed run
-        (consumed=4, so doc 3 fits and doc 4 does not — a gate that
-        silently reset to consumed=0 would accept both)."""
-        import shutil
-
-        self._drop_docs(
-            spark,
-            dirs["source"],
-            "b1",
-            [(1, "a b", "capped"), (2, "c d", "capped")],
-        )
-        self._run(spark, dirs)
-        stats_dir = dirs["warehouse"].rstrip("/") + "_budget_stats"
-        shutil.rmtree(stats_dir)
-        self._drop_docs(
-            spark,
-            dirs["source"],
-            "b2",
-            [(3, "e f", "capped"), (4, "g h", "capped")],
-        )
-        self._run(spark, dirs)
-        assert self._ids(spark, dirs) == [1, 2, 3]
-        # the heal baseline is visible in the rebuilt artifact
-        stats = spark.read.parquet(stats_dir).collect()
-        assert ("heal", -1) in {(r[0], r[1]) for r in stats}
 
 
 class TestBoilerplateIngest:
@@ -715,112 +232,3 @@ class TestBoilerplateIngest:
             )
             == before_freqs
         )
-
-
-class TestKmvIngest:
-    """Cardinality-tracking ingest gate (stream_ingest_with_kmv):
-    per-batch bottom-k folds into the persisted sketch store with ZERO
-    replay bookkeeping — idempotent minima make every crash
-    interleaving converge (llm/kmv.py module notes)."""
-
-    DOC_SCHEMA = StructType(
-        [
-            StructField("doc_id", LongType()),
-            StructField("text", StringType()),
-            StructField("source", StringType()),
-        ]
-    )
-
-    def _drop_docs(self, spark, source_dir, name, rows):
-        import glob
-        import shutil
-        import tempfile
-
-        staging = tempfile.mkdtemp()
-        spark.createDataFrame(rows, self.DOC_SCHEMA).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(staging)
-        part = glob.glob(os.path.join(staging, "part-*.parquet"))[0]
-        shutil.copy(part, os.path.join(source_dir, f"{name}.parquet"))
-        shutil.rmtree(staging, ignore_errors=True)
-
-    def _run(self, spark, dirs, store):
-        from etl_procedure_codes_crawler_spark.streaming.incremental import (
-            stream_ingest_with_kmv,
-        )
-
-        q = stream_ingest_with_kmv(
-            spark,
-            dirs["source"],
-            self.DOC_SCHEMA,
-            dirs["warehouse"],
-            store,
-            dirs["checkpoint"],
-        )
-        q.awaitTermination(120)
-        q.stop()
-
-    ROWS_A = [
-        (1, "alpha beta gamma delta epsilon zeta", "s1"),
-        (2, "eta theta iota kappa lambda mu", "s2"),
-    ]
-    ROWS_B = [
-        (3, "nu xi omicron pi rho sigma", "s1"),
-        (4, "tau upsilon phi chi psi omega", "s2"),
-    ]
-
-    def test_multi_batch_equals_one_shot_sketch(self, spark, dirs, tmp_path):
-        from etl_procedure_codes_crawler_spark.llm import kmv as KV
-
-        store = str(tmp_path / "kmv")
-        KV.create_kmv_store(spark, store, k=64, shingle_k=3)
-        self._drop_docs(spark, dirs["source"], "b1", self.ROWS_A)
-        self._run(spark, dirs, store)
-        self._drop_docs(spark, dirs["source"], "b2", self.ROWS_B)
-        self._run(spark, dirs, store)
-        got = sorted(
-            map(tuple, KV.kmv_store_estimates(spark, store).collect())
-        )
-        want = sorted(
-            map(
-                tuple,
-                KV.kmv_distinct_by_group(
-                    spark.createDataFrame(
-                        self.ROWS_A + self.ROWS_B, self.DOC_SCHEMA
-                    ),
-                    k=64,
-                ).collect(),
-            )
-        )
-        assert got == want
-        # warehouse holds every doc exactly once
-        ids = sorted(
-            r.doc_id for r in spark.read.parquet(dirs["warehouse"]).collect()
-        )
-        assert ids == [1, 2, 3, 4]
-
-    def test_lost_checkpoint_replay_corrupts_nothing(
-        self, spark, dirs, tmp_path
-    ):
-        import shutil
-
-        from etl_procedure_codes_crawler_spark.llm import kmv as KV
-
-        store = str(tmp_path / "kmv")
-        KV.create_kmv_store(spark, store, k=64, shingle_k=3)
-        self._drop_docs(spark, dirs["source"], "b1", self.ROWS_A)
-        self._run(spark, dirs, store)
-        before = sorted(
-            map(tuple, KV.kmv_store_estimates(spark, store).collect())
-        )
-        # lose the checkpoint -> the whole source re-offers on restart
-        shutil.rmtree(dirs["checkpoint"], ignore_errors=True)
-        self._run(spark, dirs, store)
-        after = sorted(
-            map(tuple, KV.kmv_store_estimates(spark, store).collect())
-        )
-        assert before == after  # idempotent minima, no bookkeeping
-        ids = sorted(
-            r.doc_id for r in spark.read.parquet(dirs["warehouse"]).collect()
-        )
-        assert ids == [1, 2]  # warehouse anti-join kept exactly-once

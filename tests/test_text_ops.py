@@ -61,89 +61,3 @@ class TestChunkDocuments:
         df = spark.createDataFrame([(1, "a b c")], "doc_id bigint, text string")
         with pytest.raises(ValueError, match="overlap"):
             T.chunk_documents(df, chunk_size=10, overlap=10)
-
-
-class TestEmbeddingQaAndOutliers:
-    def test_embedding_qa_flags_bad_vectors(self, spark):
-        import math
-
-        from etl_procedure_codes_crawler_spark.llm.queries import (
-            embedding_qa_report,
-        )
-
-        rows = [
-            (1, [1.0, 0.0], 0),
-            (2, None, 0),
-            (3, [float("nan"), 1.0], 0),
-            (4, [0.0, 0.0], 0),
-            (5, [float("inf"), 1.0], 1),
-            # NULL ELEMENT (not a NULL vector): Spark's F.aggregate
-            # would propagate it into a NULL sum while DuckDB's
-            # list_sum skips it — the report must flag it as
-            # non-finite and zero its norm contribution IN BOTH
-            # ENGINES (round-8 ADVICE fix)
-            (6, [None, 1.0], 2),
-        ]
-        df = spark.createDataFrame(
-            rows, "vec_id bigint, embedding array<float>, label int"
-        )
-        import tempfile
-
-        with tempfile.TemporaryDirectory() as d:
-            # single FLAT file, like the driver's testdata layout —
-            # DuckDB's read_parquet needs a file path, not a dataset dir
-            import glob as _glob
-            import shutil as _shutil
-
-            staging = d + "/_staging"
-            df.coalesce(1).write.parquet(staging)
-            _shutil.copy(
-                _glob.glob(staging + "/part-*.parquet")[0],
-                d + "/embeddings.parquet",
-            )
-            out = {
-                r.label: r
-                for r in embedding_qa_report(spark, d).collect()
-            }
-            # cross-engine pin on the synthesized corruption: the real
-            # testdata has no NULL elements, so the driver's gate
-            # would never exercise this divergence — replicate its
-            # compare here on data that does
-            from etl_procedure_codes_crawler_spark.plans.parity import (
-                compare_query,
-            )
-            from etl_procedure_codes_crawler_spark.llm.queries import ORACLES
-
-            report = compare_query(
-                spark, d, embedding_qa_report, ORACLES["embedding_qa_report"]
-            )
-            assert report["values_match"], report
-        assert out[0].n_vectors == 4 and out[0].n_null == 1
-        assert out[0].n_nonfinite == 1  # the NaN vector
-        assert out[0].n_zero == 1
-        assert math.isclose(out[0].mean_sq_norm, 0.25)  # only v1: 1.0/4
-        assert out[1].n_nonfinite == 1  # the Inf vector
-        assert out[2].n_nonfinite == 1  # the NULL-element vector
-        assert out[2].mean_sq_norm == 0.0
-
-    def test_length_outliers_flag_extremes(self, spark):
-        import tempfile
-
-        from etl_procedure_codes_crawler_spark.llm.queries import (
-            source_length_outliers,
-        )
-
-        # 20 docs at 100 chars + one at 10000: the spike is >2 sigma
-        rows = [(i, "x", "s", 100) for i in range(20)]
-        rows.append((99, "x", "s", 10_000))
-        df = spark.createDataFrame(
-            rows, "doc_id bigint, text string, source string, n_chars bigint"
-        )
-        with tempfile.TemporaryDirectory() as d:
-            df.write.parquet(d + "/documents.parquet")
-            out = {
-                r.doc_id: r.is_outlier
-                for r in source_length_outliers(spark, d).collect()
-            }
-        assert out[99] is True
-        assert sum(1 for v in out.values() if v) == 1

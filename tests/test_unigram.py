@@ -94,12 +94,6 @@ class TestUnigramEncode:
 
 
 class TestUnigramQueries:
-    def test_train_pieces_query(self, spark, sf_dir):
-        rows = QUERIES["unigram_train_pieces"](spark, sf_dir).collect()
-        assert len(rows) > 0
-        ranks = [r["rank"] for r in rows]
-        assert ranks == sorted(ranks) and ranks[0] == 1
-        assert any(r["piece_len"] > 1 for r in rows)
 
     def test_fertility_query_integrity(self, spark, sf_dir):
         rows = QUERIES["unigram_fertility_by_source"](spark, sf_dir).collect()

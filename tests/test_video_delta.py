@@ -183,9 +183,7 @@ class TestClipIdentityHashes:
         )
         rows = {
             r.media_id: r
-            for r in V.clip_identity_hashes(
-                V.documents_as_mjpeg_mp4(docs)
-            ).collect()
+            for r in V.clip_identity_from_documents(docs).collect()
         }
         assert all(rows[i].decode_error is None for i in (1, 2, 3))
         # identical text => identical payload => identical identity
@@ -218,9 +216,7 @@ class TestClipIdentityHashes:
         )
         rows = {
             r.media_id: r
-            for r in V.clip_identity_hashes(
-                V.documents_as_mjpeg_mp4(docs)
-            ).collect()
+            for r in V.clip_identity_from_documents(docs).collect()
         }
         assert set(rows) == {37, 50}
         for r in rows.values():
