@@ -51,6 +51,36 @@ def exact_duplicate_groups(
     )
 
 
+def keep_best_exact(
+    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
+) -> DataFrame:
+    """Exact-dup survivor by QUALITY, not arrival: per normalized
+    fingerprint keep the copy with the longest RAW text (duplicates
+    that normalize equal can differ in case/whitespace — the longest
+    raw form preserves the most formatting), min-id tiebreak.
+
+    ``max_by`` over a (length, -id) ordering struct instead of a
+    row_number window: the aggregation partial-combines map-side, so
+    only one (fingerprint, best-so-far) row per group leaves each
+    task — a window would shuffle every duplicate row to sort it.
+    """
+    return (
+        df.select(
+            fingerprint_sha256(text_col).alias("fingerprint"),
+            F.col(id_col).cast("bigint").alias("id"),
+            F.length(text_col).cast("bigint").alias("_len"),
+        )
+        .groupBy("fingerprint")
+        .agg(
+            F.max_by(
+                F.col("id"),
+                F.struct(F.col("_len"), (-F.col("id")).alias("_negid")),
+            ).alias("keep_id"),
+            F.count(F.lit(1)).alias("n_copies"),
+        )
+    )
+
+
 def incremental_dedup_new_docs(
     batch: DataFrame,
     snapshot: DataFrame,
@@ -81,6 +111,17 @@ def incremental_dedup_new_docs(
     survivors = b.groupBy("fingerprint").agg(F.min("id").alias("first_id"))
     snap = snapshot.select(fingerprint_sha256(text_col).alias("fingerprint"))
     return survivors.join(snap, "fingerprint", "left_anti")
+
+
+def drop_exact_duplicates(
+    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
+) -> DataFrame:
+    """Keep the minimum-id representative of every content group —
+    dropDuplicates on a derived key, deterministic survivor choice."""
+    survivors = exact_duplicate_groups(df, text_col, id_col).select(
+        F.col("first_id").alias(id_col)
+    )
+    return df.join(survivors, on=id_col, how="left_semi")
 
 
 # ---------------------------------------------------------------------------
@@ -682,6 +723,24 @@ def _capped_bucket_pairs(
     return all_pairs.unionByName(star_pairs).distinct()
 
 
+def lsh_bucket_stats(buckets: DataFrame, max_bucket_size: int) -> DataFrame:
+    """Monitoring companion to :func:`_capped_bucket_pairs`: per-band
+    bucket-size histogram head plus how many buckets were star-capped
+    — run this (cheap: one groupBy) to see what the cap dropped."""
+    return (
+        buckets.groupBy("band", "bucket")
+        .agg(F.count(F.lit(1)).alias("bucket_size"))
+        .groupBy("band")
+        .agg(
+            F.count(F.lit(1)).alias("n_buckets"),
+            F.max("bucket_size").alias("max_bucket_size"),
+            F.sum(
+                F.when(F.col("bucket_size") > max_bucket_size, 1).otherwise(0)
+            ).alias("n_capped_buckets"),
+        )
+    )
+
+
 def minhash_buckets(
     df: DataFrame,
     text_col: str = "text",
@@ -735,7 +794,8 @@ def minhash_lsh_candidate_pairs(
     candidates. Pair generation is a self-join per (band, bucket) —
     each bucket is tiny in the non-adversarial case, and degenerate
     buckets are star-capped at ``max_bucket_size`` (see
-    :func:`_capped_bucket_pairs`).
+    :func:`_capped_bucket_pairs`; :func:`lsh_bucket_stats` reports
+    what got capped).
     """
     buckets = minhash_buckets(
         df, text_col, id_col, k, bands, rows_per_band, hash_fn

@@ -8,8 +8,8 @@ corpora and scoring every raw document with its importance log-ratio
     w(doc) = sum over n-gram occurrences g of
              log p_target(bucket(g)) - log p_raw(bucket(g))
 
-then keeping the top-k (the deterministic variant of the paper's
-importance resampling). The feature space is
+then keeping the top-k (deterministic variant) or Gumbel-top-k
+resampling (the paper's sampled variant). The feature space is
 hashed unigrams+bigrams folded into ``num_buckets`` buckets — the
 distributions are metadata-sized (one row per bucket) no matter how
 large the corpora are, which is the whole trick: fitting is one
@@ -218,3 +218,56 @@ def importance_topk(
     shuffle at k rows per partition."""
     w = importance_weights(raw, ratios, id_col, text_col, num_buckets, n_max)
     return w.orderBy(F.col("weight_micro").desc(), F.col("id").asc()).limit(k)
+
+
+def dsir_resample(
+    raw: DataFrame,
+    ratios: DataFrame,
+    n: int,
+    seed: int = 0,
+    temperature: float = 1.0,
+    id_col: str = "doc_id",
+    text_col: str = "text",
+    num_buckets: int = 4096,
+    n_max: int = 2,
+) -> DataFrame:
+    """The paper's SAMPLED variant via the Gumbel-top-k trick: keep
+    the ``n`` documents maximizing ``weight/temperature + Gumbel``,
+    which draws WITHOUT replacement with probability proportional to
+    ``exp(weight/temperature)``. The Gumbel noise is derived from a
+    deterministic integer hash of the document id (Knuth
+    multiplicative step mod the family modulus) — reruns and
+    stragglers see identical samples, unlike ``rand()`` whose
+    partition-seeded streams shift under AQE re-planning. Higher
+    ``temperature`` flattens toward uniform; lower sharpens toward
+    :func:`importance_topk`."""
+    w = importance_weights(raw, ratios, id_col, text_col, num_buckets, n_max)
+    # seed mixes BEFORE the multiplicative step (an additive-only
+    # seed would shift u by ~1e-9 and every seed would draw the same
+    # sample); the inner pmod keeps the product under 2^63 — no
+    # overflow even with ANSI arithmetic
+    u01 = (
+        (
+            F.pmod(
+                F.pmod(
+                    F.col("id").cast("long") + F.lit(int(seed)), F.lit(_MOD)
+                )
+                * F.lit(2654435761),
+                F.lit(_MOD),
+            )
+            + 1
+        ).cast("double")
+        / F.lit(float(_MOD + 2))
+    )
+    gumbel = -F.log(-F.log(u01))
+    key = (
+        F.col("weight_micro").cast("double")
+        / F.lit(1e6 * float(temperature))
+        + gumbel
+    )
+    return (
+        w.select("id", "n_grams", "weight_micro", key.alias("_key"))
+        .orderBy(F.col("_key").desc(), F.col("id").asc())
+        .limit(n)
+        .drop("_key")
+    )

@@ -157,6 +157,71 @@ def unimax_budgets(
     )
 
 
+def unimax_manifest(
+    df: DataFrame,
+    budgets: DataFrame,
+    source_col: str = "source",
+    id_col: str = "doc_id",
+    seed: int = 7,
+) -> DataFrame:
+    """Materialize a :func:`unimax_budgets` allocation as a training
+    manifest: one row per (doc, copy), where each document of a source
+    appears ``alloc_tokens div n_tokens`` times (the whole epochs)
+    plus one more for a deterministic subset of docs sized so the
+    source's EXPECTED token mass equals the fractional remainder. The
+    fractional membership is each doc's own Lehmer key against an
+    integer threshold (the repo's no-``rand()`` discipline —
+    reproducible under retries/AQE and bit-checkable in SQL). The
+    threshold is ``floor(rem/n_tokens * M)`` computed in double —
+    ``rem * M`` as integers could exceed 2^63 for multi-billion-token
+    sources, while the double expression is the same IEEE result on
+    every engine.
+
+    Scale shape: the metadata-sized budget table broadcasts onto the
+    corpus, the key and copy count are map-side column math, and the
+    explode is bounded by ``max_epochs + 1`` — zero shuffles beyond
+    the allocation's own aggregation. Sources allocated zero tokens
+    drop out (``n_copies = 0`` filtered before the explode)."""
+    from .packing import _SHUFFLE_M, shuffle_key
+
+    b = F.broadcast(
+        budgets.select(
+            F.col("source").alias(source_col),
+            F.expr("alloc_tokens div n_tokens").alias("_whole"),
+            F.floor(
+                F.pmod(F.col("alloc_tokens"), F.col("n_tokens")).cast(
+                    "double"
+                )
+                * F.lit(float(_SHUFFLE_M))
+                / F.col("n_tokens").cast("double")
+            )
+            .cast("long")
+            .alias("_thr"),
+        )
+    )
+    key = shuffle_key(F.col(id_col), seed)
+    return (
+        df.select(id_col, source_col)
+        .join(b, source_col)
+        .select(
+            id_col,
+            source_col,
+            (F.col("_whole") + (key < F.col("_thr")).cast("int"))
+            .cast("int")
+            .alias("n_copies"),
+        )
+        .filter(F.col("n_copies") > 0)
+        .select(
+            id_col,
+            source_col,
+            "n_copies",
+            F.explode(F.sequence(F.lit(1), F.col("n_copies"))).alias(
+                "copy"
+            ),
+        )
+    )
+
+
 # ---------------------------------------------------------------------------
 # DoReMi-style domain reweighting (Xie et al., NeurIPS 2023,
 # arXiv:2305.10429 — public paper)

@@ -257,6 +257,41 @@ def bestfit_packing_stats(
     )
 
 
+def sequence_manifest(
+    df: DataFrame,
+    seq_len: int,
+    shard_col: str = "source",
+    id_col: str = "doc_id",
+    text_col: str = "text",
+) -> DataFrame:
+    """Per-sequence writer manifest: the ordered ``doc_id:token_count``
+    span list a shard writer task materializes into one training
+    sequence. String-typed (``"12:512,13:91"``) so the manifest is
+    byte-stable across engines and safe to hash-compare; ordering is
+    by doc_id inside the sequence — the same order the concatenation
+    defined. One extra aggregation over pack_sequences' assignment;
+    group width is bounded by seq_len (a sequence can hold at most
+    seq_len documents), so collect_list cannot blow up a task."""
+    packed = pack_sequences(df, seq_len, shard_col, id_col, text_col)
+    spans = F.array_sort(
+        F.collect_list(F.struct("doc_id", "tokens_in_seq"))
+    )
+    return packed.groupBy("shard", "seq_id").agg(
+        F.array_join(
+            F.transform(
+                spans,
+                lambda s: F.concat_ws(
+                    ":",
+                    s["doc_id"].cast("string"),
+                    s["tokens_in_seq"].cast("string"),
+                ),
+            ),
+            ",",
+        ).alias("manifest"),
+        F.count(F.lit(1)).alias("n_docs"),
+    )
+
+
 def sequence_stats(
     df: DataFrame,
     seq_len: int,
@@ -344,6 +379,60 @@ def training_shuffle(
         id_col,
         "shard",
         F.row_number().over(w).cast("bigint").alias("pos"),
+    )
+
+
+def upsample_manifest(
+    df: DataFrame,
+    weights: dict[str, float],
+    source_col: str = "source",
+    id_col: str = "doc_id",
+    seed: int = 7,
+    default: float = 1.0,
+) -> DataFrame:
+    """Deterministic fractional upsampling for corpus mixing: a doc
+    from a source with weight ``w`` appears ``floor(w)`` times, plus
+    one more with probability ``frac(w)`` — decided by the doc's own
+    Lehmer key, so the choice is reproducible (no rand()) and
+    cross-engine checkable. Output is one row per (doc, copy).
+
+    Scale shape: a map-side CASE over the broadcast weight table and a
+    bounded explode (``ceil(max weight)`` copies max) — no shuffle at
+    all. To spread a doc's repeats across shards, feed the downstream
+    :func:`training_shuffle` a synthetic id folding the copy in (e.g.
+    ``doc_id * ceil(max_weight) + copy`` — still a bigint, still
+    deterministic)."""
+    key = shuffle_key(F.col(id_col), seed)
+
+    # thresholds are exact integers so Spark and an external oracle
+    # agree bit-for-bit: key < round(frac * M)
+    def _copies(w: float):
+        whole, fr = int(w), w - int(w)
+        extra = (
+            (key < F.lit(int(round(fr * _SHUFFLE_M)))).cast("int")
+            if fr > 0
+            else F.lit(0)
+        )
+        return F.lit(whole) + extra
+
+    n_copies = F.coalesce(
+        *[
+            F.when(F.col(source_col) == s, _copies(w))
+            for s, w in weights.items()
+        ],
+        _copies(default),
+    ).alias("n_copies") if weights else _copies(default).alias("n_copies")
+    return (
+        df.select(F.col(id_col), F.col(source_col), n_copies)
+        .filter(F.col("n_copies") > 0)
+        .select(
+            id_col,
+            source_col,
+            "n_copies",
+            F.explode(
+                F.sequence(F.lit(1), F.col("n_copies"))
+            ).alias("copy"),
+        )
     )
 
 
@@ -462,4 +551,85 @@ def cluster_holdout_split(
         F.col(id_col),
         F.col("cluster_id"),
         _split_case(key, fractions).alias("split"),
+    )
+
+
+def training_shuffle_incremental(
+    new_df: DataFrame,
+    snapshot: DataFrame,
+    id_col: str = "doc_id",
+    num_shards: int = 8,
+    seed: int = 1,
+) -> DataFrame:
+    """Extend an existing training-shard manifest with newly arrived
+    documents (the production shape for a corpus growing by crawl
+    runs — same pattern as llm/dedup.dedup_incremental): each new doc
+    gets its shard from the SAME permutation key as the original
+    shuffle, and its ``pos`` continues after the shard's current max,
+    so already-written shard files never move.
+
+    Docs already present in the snapshot are skipped (left-anti on
+    id). Scale shape: the snapshot contributes only a per-shard MAX —
+    num_shards rows, broadcast — plus an id anti-join that shares the
+    new batch's hash partitioning; the heavy relation shuffles once."""
+    key = shuffle_key(F.col(id_col), seed)
+    # NULL ids can never match the anti join and would re-enter the
+    # manifest on every call — drop them (a manifest slot requires an
+    # identity)
+    fresh = (
+        new_df.select(F.col(id_col))
+        .where(F.col(id_col).isNotNull())
+        .join(snapshot.select(id_col), id_col, "left_anti")
+    )
+    keyed = fresh.select(
+        F.col(id_col), key.alias("_key")
+    ).withColumn("shard", F.pmod(F.col("_key"), F.lit(num_shards)))
+    base = snapshot.groupBy("shard").agg(F.max("pos").alias("_base"))
+    w = Window.partitionBy("shard").orderBy("_key", id_col)
+    return (
+        keyed.withColumn("_rank", F.row_number().over(w).cast("bigint"))
+        .join(F.broadcast(base), "shard", "left")
+        .select(
+            id_col,
+            "shard",
+            (F.coalesce(F.col("_base"), F.lit(0)) + F.col("_rank")).alias(
+                "pos"
+            ),
+        )
+    )
+
+
+def curriculum_manifest(
+    df: DataFrame,
+    score_col: str,
+    id_col: str = "doc_id",
+    num_shards: int = 8,
+    seed: int = 1,
+    ascending: bool = True,
+) -> DataFrame:
+    """Curriculum read order: shards are still assigned by the Lehmer
+    permutation (each shard stays a diverse corpus sample), but WITHIN
+    a shard documents are ordered by ``score_col`` (easy→hard for
+    ascending difficulty curricula) instead of the shuffle key — the
+    standard curriculum-learning layout where every worker sees the
+    same difficulty ramp over its own shard.
+
+    Same scale shape as :func:`training_shuffle`: one hash exchange on
+    shard + a per-shard local sort; deterministic (score ties break on
+    id)."""
+    key = shuffle_key(F.col(id_col), seed)
+    keyed = df.select(
+        F.col(id_col),
+        F.col(score_col).cast("double").alias("_score"),
+    ).withColumn("shard", F.pmod(key, F.lit(num_shards)))
+    order = [
+        F.col("_score").asc() if ascending else F.col("_score").desc(),
+        F.col(id_col).asc(),
+    ]
+    w = Window.partitionBy("shard").orderBy(*order)
+    return keyed.select(
+        id_col,
+        "shard",
+        F.row_number().over(w).cast("bigint").alias("pos"),
+        F.col("_score").alias("score"),
     )

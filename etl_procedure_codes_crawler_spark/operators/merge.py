@@ -1,19 +1,68 @@
-"""Crash-safe whole-dataset swap for parquet warehouse rewrites.
+"""Key-merge (upsert) maintenance for parquet warehouses.
 
-Plain parquet has no transactional overwrite; a rewrite (the
-right-to-be-forgotten fallback in llm/forget.py) writes the new
-dataset beside the target and renames it into place, so readers never
-see a half-written dataset. A rewrite whose lineage reads the very
-path being replaced must be localCheckpoint'ed before the swap
-(collecting after the overwrite would re-scan the new files — the same
-mutated-snapshot hazard plans/pipeline.py guards against).
+Plain parquet has no MERGE INTO; this operator supplies the
+latest-wins upsert every warehouse eventually needs (the reference
+only ever appends — corrections were impossible without manual S3
+surgery):
+
+    target ⟕anti updates  ∪  updates(not deleted)  → atomic swap
+
+Scale shape: one anti-join shuffle on the key + a union — no
+per-row driver work. The merged result is localCheckpoint'ed BEFORE
+the swap because its lineage reads the very path being replaced
+(collecting after the overwrite would re-scan the new files — the
+same mutated-snapshot hazard plans/pipeline.py guards against); the
+swap itself is rename-based so readers never see a half-written
+dataset.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 from ..sinks.fsutil import checked_rename, hadoop_fs, remove_stale
+from ..sources.parquet import read_table_or_empty
+
+
+def merge_upsert(
+    spark: SparkSession,
+    target_path: str,
+    updates: DataFrame,
+    key: str,
+    delete_col: str | None = None,
+) -> int:
+    """Upsert ``updates`` into the parquet dataset at ``target_path``:
+    rows with existing keys are replaced, new keys inserted; when
+    ``delete_col`` is given, update rows with it true remove the key.
+    Updates must be unique per key (enforced). Returns the row count
+    of the merged dataset."""
+    recover_interrupted_swap(spark, target_path)
+    dup = updates.groupBy(key).count().filter(F.col("count") > 1)
+    if not dup.isEmpty():
+        sample = [r[key] for r in dup.limit(5).collect()]
+        raise ValueError(f"updates contain duplicate keys, e.g. {sample}")
+    if not updates.filter(F.col(key).isNull()).isEmpty():
+        # an anti-join can never match a NULL key, so a NULL-key update
+        # would APPEND on every apply instead of replacing — reject it
+        # rather than silently accumulate duplicates
+        raise ValueError("updates contain a NULL merge key")
+
+    survivors = updates
+    if delete_col is not None:
+        survivors = updates.filter(
+            ~F.coalesce(F.col(delete_col), F.lit(False))
+        ).drop(delete_col)
+
+    target = read_table_or_empty(spark, target_path, survivors.schema)
+    merged = target.join(
+        updates.select(key), on=key, how="left_anti"
+    ).unionByName(survivors)
+
+    pinned = merged.localCheckpoint(eager=True)
+    n = pinned.count()
+    replace_dataset_atomically(spark, target_path, pinned, op="merge")
+    return n
 
 
 def recover_interrupted_swap(spark: SparkSession, target_path: str) -> bool:

@@ -1,11 +1,19 @@
-"""Deterministic salting for skew mitigation.
+"""Skew-mitigation operators: salted two-phase aggregation and
+salted broadcast-replicated joins.
 
 At 100 TB a handful of hot keys (the token "the", a null-ish default
 user id, one viral document) turn a single reducer into the job's
 critical path. AQE's skew-join splitting handles *joins* at runtime;
-for pre-planned salting, :func:`with_salt` spreads each hot key over N
-sub-keys (the two-phase grouped top-k in ``operators/topk.py`` ranks
-per (key, salt) first).
+for *aggregations* and for deterministic pre-planned salting these
+operators spread each hot key over N sub-keys:
+
+- ``salted_agg``: groupBy(key, salt) partial-aggregate → groupBy(key)
+  merge. Both phases are map-side combinable; the first shuffle
+  carries (key × N) groups so no single task owns a hot key.
+- ``salted_join``: replicate the SMALL side N× (one copy per salt
+  value), salt the big side deterministically, join on (key, salt).
+  Only for when the small side is too big to broadcast outright but
+  the key histogram is skewed.
 
 Salts are deterministic (xxhash64 of payload columns), so plans stay
 replayable — no rand() nondeterminism under task retry.
@@ -13,8 +21,17 @@ replayable — no rand() nondeterminism under task retry.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+#: aggregate spec name → (partial fn, merge fn). Two-phase algebraic
+#: aggregates: partial runs per (key, salt), merge combines partials.
+_ALGEBRAIC = {
+    "sum": (F.sum, F.sum),
+    "count": (lambda c: F.count(c), F.sum),
+    "min": (F.min, F.min),
+    "max": (F.max, F.max),
+}
 
 SALT_COLUMN = "_salt"
 
@@ -25,4 +42,79 @@ def with_salt(df: DataFrame, buckets: int, from_cols: list[str] | None = None) -
     cols = from_cols or df.columns
     return df.withColumn(
         SALT_COLUMN, F.pmod(F.xxhash64(*cols), F.lit(buckets)).cast("int")
+    )
+
+
+def salted_agg(
+    df: DataFrame,
+    keys: list[str],
+    aggs: dict[str, tuple[str, str]],
+    buckets: int = 16,
+) -> DataFrame:
+    """Two-phase aggregation: ``aggs`` maps output column → (spec, input
+    column) with spec in sum/count/min/max.
+
+    Equivalent to ``df.groupBy(keys).agg(...)`` but no reducer ever
+    sees more than ~1/buckets of a hot key's rows in phase one.
+    """
+    partials = []
+    merges = []
+    for out_name, (spec, in_col) in aggs.items():
+        if spec not in _ALGEBRAIC:
+            raise ValueError(
+                f"unsupported agg {spec!r}; algebraic only: {sorted(_ALGEBRAIC)}"
+            )
+        partial_fn, merge_fn = _ALGEBRAIC[spec]
+        partials.append(partial_fn(F.col(in_col)).alias(out_name))
+        merges.append(merge_fn(F.col(out_name)).alias(out_name))
+    salted = with_salt(df, buckets)
+    return (
+        salted.groupBy(*keys, SALT_COLUMN)
+        .agg(*partials)
+        .groupBy(*keys)
+        .agg(*merges)
+    )
+
+
+def salted_join(
+    big: DataFrame,
+    small: DataFrame,
+    on: str | list[str],
+    buckets: int = 16,
+    how: str = "inner",
+) -> DataFrame:
+    """Join with the big side's hot keys spread over ``buckets``
+    sub-partitions; the small side is replicated once per salt value
+    (size × buckets — keep buckets modest).
+
+    Only ``inner`` and ``left`` (big-side-preserving) joins are
+    supported: with right/full outer, every unmatched small-side row
+    would be emitted once per replica — ``buckets`` copies — silently
+    inflating row counts.
+    """
+    if how not in ("inner", "left", "left_outer", "leftouter"):
+        raise ValueError(
+            f"salted_join supports how='inner'/'left' only, got {how!r}: "
+            "outer joins would emit each unmatched small-side row once "
+            "per salt replica"
+        )
+    keys = [on] if isinstance(on, str) else list(on)
+    payload = [c for c in big.columns if c not in keys]
+    big_salted = with_salt(big, buckets, from_cols=payload or keys)
+    salts = F.explode(
+        F.array(*[F.lit(i) for i in range(buckets)])
+    ).alias(SALT_COLUMN)
+    small_replicated = small.select("*", salts)
+    joined = big_salted.join(small_replicated, [*keys, SALT_COLUMN], how)
+    return joined.drop(SALT_COLUMN)
+
+
+def top_keys(df: DataFrame, keys: list[str], n: int = 20) -> DataFrame:
+    """Diagnostic: the key histogram head — what to look at before
+    deciding a join/agg needs salting."""
+    return (
+        df.groupBy(*keys)
+        .agg(F.count(F.lit(1)).alias("n_rows"))
+        .orderBy(F.desc("n_rows"), *[F.asc(k) for k in keys])
+        .limit(n)
     )

@@ -19,7 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .fsutil import hadoop_fs
+from .fsutil import checked_rename, hadoop_fs, remove_stale
 
 LOAD_DATE_COLUMN = "load_date"
 
@@ -127,3 +127,74 @@ def write_idempotent_run(
     finally:
         spark.conf.set("spark.sql.sources.partitionOverwriteMode", previous)
     return True
+
+
+def compact_dataset(
+    spark,
+    path: str,
+    target_file_mb: int = 128,
+    partition_by: list[str] | None = None,
+) -> int:
+    """Rewrite a parquet dataset into ~``target_file_mb`` files.
+
+    Incremental appends (this engine's write mode) accrete one small
+    file per run per partition; at 100 TB the resulting
+    millions-of-tiny-files listing/open overhead dominates scan time.
+    Compaction reads the dataset, repartitions to the target size from
+    the dataset's true byte size, and atomically swaps via a temp path
+    (readers never observe a partial rewrite). Returns the new file
+    count."""
+    fs, hpath = hadoop_fs(spark, path)
+    src = hpath(path)
+    tmp = path.rstrip("/") + "._compacting"
+    tmp_p = hpath(tmp)
+    backup = hpath(path.rstrip("/") + "._precompact")
+    # Crash recovery first: a prior compaction that died between its
+    # two renames left src MISSING and ._precompact holding the only
+    # original — restore it before any cleanup (conservative choice:
+    # the original, not the half-swapped compacted copy).
+    if (not fs.exists(src)) and fs.exists(backup):
+        checked_rename(fs, backup, src)
+    # Remaining leftovers would occupy the rename destinations below;
+    # src exists again, so they are safe to discard.
+    remove_stale(fs, tmp_p, backup)
+    from .versions import _data_files, _versions_dir, record_rewrite
+
+    # list the vanishing files only when the dataset has versions —
+    # no listing tax on unversioned warehouses
+    old_files = (
+        _data_files(fs, hpath, path)
+        if fs.exists(hpath(_versions_dir(path)))
+        else []
+    )
+    total_bytes = fs.getContentSummary(src).getLength()
+    n_files = max(1, int(total_bytes // (target_file_mb * 1024 * 1024)) + 1)
+
+    df = spark.read.parquet(path)
+    writer = (
+        df.repartition(n_files)
+        .write.mode("overwrite")
+        .option("compression", "snappy")
+    )
+    if partition_by:
+        writer = writer.partitionBy(*partition_by)
+    writer.parquet(tmp)
+
+    # The dangerous window (src renamed away, replacement not yet in
+    # place) mirrors replace_dataset_atomically; a crash here is
+    # healed by the recovery block at the top of the next call.
+    checked_rename(fs, src, backup)
+    checked_rename(fs, tmp_p, src)
+    fs.delete(backup, True)
+    # stamp after the swap is durable (a pre-swap stamp would falsely
+    # expire versions if the compaction crashed before committing)
+    record_rewrite(spark, path, "compact", old_files)
+    # listStatus is non-recursive: with partition_by the data files
+    # live under partition directories, so walk with listFiles(...,
+    # recursive) for a correct count
+    out_files = 0
+    it = fs.listFiles(src, True)
+    while it.hasNext():
+        if it.next().getPath().getName().endswith(".parquet"):
+            out_files += 1
+    return out_files

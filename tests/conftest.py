@@ -1,6 +1,5 @@
 from __future__ import annotations
 
-import itertools
 import os
 import sys
 import uuid
@@ -105,31 +104,3 @@ def module_pickled_by_value(request):
         yield
     finally:
         cloudpickle.unregister_pickle_by_value(request.module)
-
-
-@pytest.fixture()
-def exact_group_overlap():
-    """``exact_group_overlap(docs)`` maps each pair of sources sharing
-    a 3-shingle, ``(group_a, group_b)`` with ``group_a < group_b``, to
-    its exact ``n_a``, ``n_b``, ``n_shared`` and ``jaccard``: the
-    baseline the overlap sketches are measured against, computed in
-    Python over the sketches' own shingle relation."""
-    from etl_procedure_codes_crawler_spark.llm.overlap import _group_shingles
-
-    def exact(docs):
-        sets: dict[str, set[str]] = {}
-        for r in _group_shingles(docs, "source", "text", 3).collect():
-            sets.setdefault(r.grp, set()).add(r.shingle)
-        pairs = {}
-        for a, b in itertools.combinations(sorted(sets), 2):
-            shared = len(sets[a] & sets[b])
-            if shared:
-                pairs[(a, b)] = {
-                    "n_a": len(sets[a]),
-                    "n_b": len(sets[b]),
-                    "n_shared": shared,
-                    "jaccard": shared / len(sets[a] | sets[b]),
-                }
-        return pairs
-
-    return exact

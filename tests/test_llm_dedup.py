@@ -31,6 +31,11 @@ def test_exact_duplicate_groups(spark):
     assert by_copies == [(1, 2), (1, 3), (1, 4), (3, 0)]
 
 
+def test_drop_exact_duplicates_keeps_min_id(spark):
+    kept = sorted(r.doc_id for r in D.drop_exact_duplicates(_docs(spark)).collect())
+    assert kept == [0, 2, 3, 4]
+
+
 def test_ngram_jaccard_finds_near_dup(spark):
     pairs = {
         (r.doc_a, r.doc_b): r.jaccard
@@ -141,6 +146,14 @@ def test_simhash_degenerate_bucket_is_star_capped(spark):
     assert all(r.hamming == 0 for r in pairs)
 
 
+def test_lsh_bucket_stats_reports_capped_buckets(spark):
+    docs = _identical_corpus(spark, 100)
+    buckets = D.minhash_buckets(docs)
+    stats = D.lsh_bucket_stats(buckets, max_bucket_size=10).collect()
+    assert len(stats) == 8  # one row per band
+    assert all(r.n_capped_buckets == 1 and r.max_bucket_size == 100 for r in stats)
+
+
 def test_jaccard_df_cap_drops_stop_shingles_keeps_true_pairs(spark):
     """A boilerplate shingle shared by every doc would emit n^2 rows;
     with the df cap it is dropped, while genuinely similar pairs
@@ -204,6 +217,18 @@ def test_incremental_dedup_new_docs(spark):
         for r in D.incremental_dedup_new_docs(batch, snapshot).collect()
     }
     assert kept == {201, 203}
+
+
+def test_keep_best_exact_prefers_longest_raw_copy(spark):
+    """Docs 0/1/5 normalize to the same fingerprint; doc 1 has the
+    longest raw text (double space + capitals), so it wins over the
+    lower ids."""
+    result = {
+        (r.keep_id, r.n_copies)
+        for r in D.keep_best_exact(_docs(spark)).collect()
+        if r.n_copies > 1
+    }
+    assert result == {(1, 3)}
 
 
 def test_pii_redact_transform(spark):

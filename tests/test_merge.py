@@ -1,40 +1,85 @@
-"""The crash-safe dataset swap behind warehouse rewrites
-(operators/merge.py): stage beside the target, rename into place."""
+"""merge_upsert: latest-wins key merge with delete support."""
 
 from __future__ import annotations
 
-import os
-import shutil
-
 import pytest
 
-from etl_procedure_codes_crawler_spark.operators.merge import (
-    recover_interrupted_swap,
-    replace_dataset_atomically,
-)
+from etl_procedure_codes_crawler_spark.operators.merge import merge_upsert
 
 SCHEMA = "code string, value long"
+SCHEMA_DEL = "code string, value long, deleted boolean"
 
 
 def _read(spark, path):
     return {r.code: r.value for r in spark.read.parquet(path).collect()}
 
 
-def test_no_leftover_temp_dirs(spark, tmp_path):
+def test_insert_update_delete(spark, tmp_path):
+    path = str(tmp_path / "t")
+    spark.createDataFrame(
+        [("a", 1), ("b", 2), ("c", 3)], SCHEMA
+    ).write.parquet(path)
+
+    n = merge_upsert(
+        spark,
+        path,
+        spark.createDataFrame(
+            [("b", 20, False), ("d", 4, False), ("c", 0, True)], SCHEMA_DEL
+        ),
+        key="code",
+        delete_col="deleted",
+    )
+    assert n == 3
+    assert _read(spark, path) == {"a": 1, "b": 20, "d": 4}  # c deleted
+
+
+def test_merge_into_missing_target_is_insert_all(spark, tmp_path):
+    path = str(tmp_path / "fresh")
+    merge_upsert(
+        spark, path, spark.createDataFrame([("x", 1)], SCHEMA), key="code"
+    )
+    assert _read(spark, path) == {"x": 1}
+
+
+def test_merge_is_idempotent(spark, tmp_path):
     path = str(tmp_path / "t")
     spark.createDataFrame([("a", 1)], SCHEMA).write.parquet(path)
-    replace_dataset_atomically(
-        spark, path, spark.createDataFrame([("b", 2)], SCHEMA)
-    )
-    assert _read(spark, path) == {"b": 2}
+    updates = spark.createDataFrame([("a", 9), ("b", 2)], SCHEMA)
+    merge_upsert(spark, path, updates, key="code")
+    merge_upsert(spark, path, updates, key="code")  # replay
+    assert _read(spark, path) == {"a": 9, "b": 2}
+
+
+def test_duplicate_update_keys_rejected(spark, tmp_path):
+    path = str(tmp_path / "t")
+    spark.createDataFrame([("a", 1)], SCHEMA).write.parquet(path)
+    with pytest.raises(ValueError, match="duplicate keys"):
+        merge_upsert(
+            spark,
+            path,
+            spark.createDataFrame([("b", 1), ("b", 2)], SCHEMA),
+            key="code",
+        )
+    # target untouched after the rejected merge
+    assert _read(spark, path) == {"a": 1}
+
+
+def test_no_leftover_temp_dirs(spark, tmp_path):
+    import os
+
+    path = str(tmp_path / "t")
+    spark.createDataFrame([("a", 1)], SCHEMA).write.parquet(path)
+    merge_upsert(spark, path, spark.createDataFrame([("b", 2)], SCHEMA), "code")
     siblings = os.listdir(str(tmp_path))
     assert siblings == ["t"], siblings
 
 
 def test_merge_survives_stale_crash_leftovers(spark, tmp_path):
-    """A crashed prior swap leaving ._previous and ._staging behind must
-    not make the next swap silently keep old data (Hadoop rename()
+    """A crashed prior run leaving ._previous and ._staging behind must
+    not make the next merge silently keep old data (Hadoop rename()
     returns False on an occupied destination instead of raising)."""
+    import os
+
     path = str(tmp_path / "t")
     spark.createDataFrame([("a", 1)], SCHEMA).write.parquet(path)
     # Simulate the crash leftovers: a stale backup and a stale staging
@@ -46,15 +91,15 @@ def test_merge_survives_stale_crash_leftovers(spark, tmp_path):
         path + "._staging"
     )
 
-    replace_dataset_atomically(
-        spark, path, spark.createDataFrame([("a", 1), ("b", 2)], SCHEMA)
-    )
+    merge_upsert(spark, path, spark.createDataFrame([("b", 2)], SCHEMA), "code")
     assert _read(spark, path) == {"a": 1, "b": 2}
     assert os.listdir(str(tmp_path)) == ["t"]
 
 
 def test_failed_rename_raises_not_silent(spark, tmp_path):
     """checked_rename turns Hadoop's False return into an exception."""
+    import pytest
+
     from etl_procedure_codes_crawler_spark.sinks.fsutil import (
         checked_rename,
         hadoop_fs,
@@ -74,17 +119,37 @@ def test_failed_rename_raises_not_silent(spark, tmp_path):
 def test_crash_between_renames_recovers_from_backup(spark, tmp_path):
     """The one dangerous swap window: a crash AFTER dst was renamed to
     ._previous but BEFORE the staged result moved in leaves dst
-    missing and the backup holding the ONLY copy. Recovery must
-    restore it before anything reads the target — not read an empty
-    target and then delete the backup."""
+    missing and the backup holding the ONLY copy. The next merge must
+    restore it — not read an empty target and then delete the backup
+    (which would silently reduce the warehouse to the new batch)."""
+    import os
+    import shutil
+
     path = str(tmp_path / "t")
     spark.createDataFrame([("a", 1), ("b", 2)], SCHEMA).write.parquet(path)
     # simulate the crash window: dst moved aside, replacement missing
     shutil.move(path, path + "._previous")
     assert not os.path.exists(path)
 
-    assert recover_interrupted_swap(spark, path)
-    assert _read(spark, path) == {"a": 1, "b": 2}
+    n = merge_upsert(
+        spark, path, spark.createDataFrame([("c", 3)], SCHEMA), "code"
+    )
+    assert n == 3
+    assert _read(spark, path) == {"a": 1, "b": 2, "c": 3}
     assert os.listdir(str(tmp_path)) == ["t"]
-    # a healthy dataset has nothing to recover
-    assert not recover_interrupted_swap(spark, path)
+
+
+def test_null_update_key_rejected(spark, tmp_path):
+    """A NULL merge key can never match the anti join — it would
+    append a duplicate on every apply. Reject it loudly."""
+    path = str(tmp_path / "t")
+    spark.createDataFrame([("a", 1)], SCHEMA).write.parquet(path)
+    with pytest.raises(ValueError, match="NULL merge key"):
+        merge_upsert(
+            spark,
+            path,
+            spark.createDataFrame([(None, 9)], SCHEMA),
+            "code",
+        )
+    # and the warehouse is untouched
+    assert _read(spark, path) == {"a": 1}

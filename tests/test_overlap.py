@@ -1,24 +1,89 @@
-"""Source-overlap analytics (llm/overlap.py): MinHash sketch error
-floor against the exact overlap, mergeability shape, HLL cardinality."""
+"""Source-overlap analytics (llm/overlap.py): exact Jaccard vs a
+python replica, MinHash sketch error floor, mergeability shape."""
 
 from __future__ import annotations
 
+import re
+
+import pytest
 from pyspark.sql import functions as F
 
 from etl_procedure_codes_crawler_spark.llm.overlap import (
     group_minhash_signatures,
     group_overlap_minhash,
+    group_shingle_overlap,
 )
 from etl_procedure_codes_crawler_spark.plans.relational import load
 
 
+def _py_shingles(text: str, k: int = 3) -> set[str]:
+    toks = re.split(r"\s+", text.strip())
+    if len(toks) >= k:
+        return {" ".join(toks[i : i + k]) for i in range(len(toks) - k + 1)}
+    return {" ".join(toks)}
+
+
+CORPUS = [
+    (1, "alpha beta gamma delta epsilon zeta", "feedA"),
+    (2, "alpha beta gamma delta other words here", "feedB"),  # overlaps A
+    (3, "totally different content stream nothing shared", "feedC"),
+    (4, "delta epsilon zeta eta theta", "feedA"),
+    (5, None, "feedC"),  # NULL text: one empty-ish shingle, harmless
+    (6, "alpha beta gamma delta epsilon zeta", None),  # NULL group: out
+]
+
+
+class TestExactOverlap:
+    def _df(self, spark):
+        return spark.createDataFrame(
+            CORPUS, "doc_id long, text string, source string"
+        )
+
+    def test_matches_python_replica(self, spark):
+        sets: dict[str, set] = {}
+        for _, text, src in CORPUS:
+            if src is None:
+                continue
+            sets.setdefault(src, set()).update(
+                _py_shingles(text if text is not None else "")
+            )
+        got = {
+            (r["group_a"], r["group_b"]): r
+            for r in group_shingle_overlap(self._df(spark)).collect()
+        }
+        for a in sorted(sets):
+            for b in sorted(sets):
+                if a >= b:
+                    continue
+                inter = len(sets[a] & sets[b])
+                if inter == 0:
+                    assert (a, b) not in got
+                    continue
+                row = got[(a, b)]
+                assert row["n_a"] == len(sets[a])
+                assert row["n_b"] == len(sets[b])
+                assert row["n_shared"] == inter
+                assert row["jaccard"] == pytest.approx(
+                    inter / len(sets[a] | sets[b])
+                )
+        # NULL-group docs contribute to no pair
+        assert all(None not in pair for pair in got)
+
+    def test_overlapping_feeds_rank_above_disjoint(self, spark, sf_dir):
+        docs = load(spark, sf_dir, "documents")
+        rows = group_shingle_overlap(docs).collect()
+        assert rows, "testdata sources share no shingles?"
+        for r in rows:
+            assert 0.0 < r["jaccard"] <= 1.0
+            assert r["n_shared"] <= min(r["n_a"], r["n_b"])
+
+
 class TestMinhashOverlap:
-    def test_estimate_within_sketch_error_of_exact(
-        self, spark, sf_dir, exact_group_overlap
-    ):
+    def test_estimate_within_sketch_error_of_exact(self, spark, sf_dir):
         docs = load(spark, sf_dir, "documents")
         exact = {
-            pair: r["jaccard"] for pair, r in exact_group_overlap(docs).items()
+            (r["group_a"], r["group_b"]): r["jaccard"]
+            for r in group_shingle_overlap(docs).collect()
         }
         est = {
             (r["group_a"], r["group_b"]): r["est_jaccard"]
@@ -97,3 +162,27 @@ class TestHllCardinality:
         )
         assert plan.count("Relation") == 1
         assert "Expand" in plan  # the rollup grouping sets
+
+    def test_union_of_persisted_sketches_matches_rollup_row(
+        self, spark, sf_dir
+    ):
+        """Folding per-group sketches with hll_union_agg must land
+        within sketch error of the rollup's grand-total row (not bit-
+        equal: the Datasketches union operator carries a wider internal
+        register type than direct aggregation) — what makes per-batch
+        sketches safe to persist and merge later."""
+        from etl_procedure_codes_crawler_spark.llm.overlap import (
+            group_cardinality_estimates,
+            group_cardinality_sketches,
+            union_cardinality,
+        )
+
+        docs = load(spark, sf_dir, "documents")
+        rollup_total = {
+            r.group: r.est_distinct
+            for r in group_cardinality_estimates(docs).collect()
+        }[None]
+        merged = union_cardinality(
+            group_cardinality_sketches(docs)
+        ).collect()[0].est_distinct
+        assert abs(merged - rollup_total) / rollup_total <= 0.05

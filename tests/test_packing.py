@@ -80,6 +80,14 @@ class TestSequenceStats:
         assert stats[1].n_tokens == 4
         assert stats[1].fill == 0.5
 
+    def test_manifest_spans_in_doc_order(self, spark):
+        # 6 + 6 tokens at seq_len=8: seq0 = "1:6,2:2", seq1 = "2:4"
+        df = _docs(spark, [(1, "a", _text(6)), (2, "a", _text(6))])
+        rows = {r.seq_id: r for r in PK.sequence_manifest(df, seq_len=8).collect()}
+        assert rows[0].manifest == "1:6,2:2"
+        assert rows[0].n_docs == 2
+        assert rows[1].manifest == "2:4"
+
     def test_token_conservation(self, spark):
         # every token lands in exactly one (doc, seq) slot
         df = _docs(
@@ -155,6 +163,48 @@ class TestTrainingShuffle:
             m = re.search(r"\bWindow\s+(\[.*)", line)
             if m:
                 assert len(re.findall(r"\], \[", m.group(1))) >= 2, line
+
+
+class TestUpsampleManifest:
+    def _docs(self, spark):
+        return spark.createDataFrame(
+            [(i, f"src{i % 4}") for i in range(200)],
+            "doc_id bigint, source string",
+        )
+
+    def test_copy_counts_follow_weights(self, spark):
+        from etl_procedure_codes_crawler_spark.llm import packing as PK
+
+        out = PK.upsample_manifest(
+            self._docs(spark),
+            {"src1": 2.5, "src2": 0.25, "src3": 0.0},
+            seed=7,
+        ).collect()
+        per_source: dict[str, int] = {}
+        for r in out:
+            per_source[r.source] = per_source.get(r.source, 0) + 1
+            assert 1 <= r.copy <= r.n_copies
+        # default weight 1.0: every src0 doc exactly once
+        assert per_source["src0"] == 50
+        # weight 0: dropped entirely
+        assert "src3" not in per_source
+        # weight 2.5: between 2x and 3x, near 2.5x for 50 docs
+        assert 2 * 50 <= per_source["src1"] <= 3 * 50
+        # weight 0.25: strict subset
+        assert 0 < per_source["src2"] < 50
+
+    def test_deterministic_and_shuffle_free(self, spark):
+        from etl_procedure_codes_crawler_spark.llm import packing as PK
+
+        docs = self._docs(spark)
+        out = PK.upsample_manifest(docs, {"src1": 2.5}, seed=7)
+        a = sorted(map(tuple, out.collect()))
+        b = sorted(map(tuple, PK.upsample_manifest(
+            docs, {"src1": 2.5}, seed=7).collect()))
+        assert a == b
+        plan = out._jdf.queryExecution().executedPlan().toString()
+        # map-side only: explode + project, no exchange anywhere
+        assert "Exchange" not in plan, plan
 
 
 class TestWriteTrainingShards:
@@ -357,6 +407,99 @@ class TestClusterHoldoutSplit:
         out = self._run(spark, 120, [(1, 2), (2, 3), (3, 4)]).collect()
         assert len(out) == 120
         assert len({r.doc_id for r in out}) == 120
+
+
+class TestIncrementalShuffle:
+    def test_extends_without_moving_snapshot(self, spark):
+        from etl_procedure_codes_crawler_spark.llm import packing as PK
+
+        docs = spark.createDataFrame(
+            [(i,) for i in range(400)], "doc_id bigint"
+        )
+        old = docs.filter("doc_id < 250")
+        new = docs.filter("doc_id >= 250")
+        snap = PK.training_shuffle(old, num_shards=4, seed=1)
+        inc = PK.training_shuffle_incremental(
+            new, snap, num_shards=4, seed=1
+        )
+        snap_rows = snap.collect()
+        inc_rows = inc.collect()
+        # new docs only, each exactly once
+        assert sorted(r.doc_id for r in inc_rows) == list(range(250, 400))
+        # same shard the full-shuffle would assign (same key)
+        full = {
+            r.doc_id: r.shard
+            for r in PK.training_shuffle(docs, num_shards=4, seed=1).collect()
+        }
+        assert all(full[r.doc_id] == r.shard for r in inc_rows)
+        # pos strictly continues after the snapshot max per shard
+        base = {}
+        for r in snap_rows:
+            base[r.shard] = max(base.get(r.shard, 0), r.pos)
+        by_shard = {}
+        for r in inc_rows:
+            by_shard.setdefault(r.shard, []).append(r.pos)
+        for shard, poss in by_shard.items():
+            lo = base.get(shard, 0)
+            assert sorted(poss) == list(range(lo + 1, lo + 1 + len(poss)))
+
+    def test_already_assigned_docs_skipped(self, spark):
+        from etl_procedure_codes_crawler_spark.llm import packing as PK
+
+        docs = spark.createDataFrame(
+            [(i,) for i in range(100)], "doc_id bigint"
+        )
+        snap = PK.training_shuffle(docs, num_shards=4, seed=1)
+        # replaying the same batch adds nothing
+        inc = PK.training_shuffle_incremental(docs, snap, num_shards=4, seed=1)
+        assert inc.count() == 0
+
+
+class TestCurriculumManifest:
+    def test_within_shard_difficulty_order_and_shard_diversity(self, spark):
+        from etl_procedure_codes_crawler_spark.llm import packing as PK
+
+        docs = spark.createDataFrame(
+            [(i, (i * 37) % 101) for i in range(300)],
+            "doc_id bigint, difficulty bigint",
+        )
+        out = PK.curriculum_manifest(
+            docs, "difficulty", num_shards=4, seed=1
+        ).collect()
+        # shard assignment matches the plain shuffle (same key/seed) —
+        # curricula change READ ORDER, not shard membership
+        full = {
+            r.doc_id: r.shard
+            for r in PK.training_shuffle(docs, num_shards=4, seed=1).collect()
+        }
+        assert all(full[r.doc_id] == r.shard for r in out)
+        # within a shard: score ascending, contiguous pos from 1
+        by_shard = {}
+        for r in out:
+            by_shard.setdefault(r.shard, []).append(r)
+        for shard, rows in by_shard.items():
+            rows.sort(key=lambda r: r.pos)
+            scores = [r.score for r in rows]
+            assert scores == sorted(scores), shard
+            assert [r.pos for r in rows] == list(range(1, len(rows) + 1))
+
+    def test_descending_order(self, spark):
+        from etl_procedure_codes_crawler_spark.llm import packing as PK
+
+        docs = spark.createDataFrame(
+            [(i, i % 11) for i in range(100)],
+            "doc_id bigint, difficulty bigint",
+        )
+        out = PK.curriculum_manifest(
+            docs, "difficulty", num_shards=2, seed=1, ascending=False
+        ).collect()
+        by_shard = {}
+        for r in out:
+            by_shard.setdefault(r.shard, []).append(r)
+        for rows in by_shard.values():
+            rows.sort(key=lambda r: r.pos)
+            scores = [r.score for r in rows]
+            assert scores == sorted(scores, reverse=True)
 
 
 class TestWriteTrainingShards:

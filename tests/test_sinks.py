@@ -55,6 +55,49 @@ def test_single_file_write(spark, tmp_path):
     assert spark.read.parquet(path).count() == 2
 
 
+class TestCompaction:
+    def test_compact_reduces_file_count_preserves_rows(self, spark, sf_dir, tmp_path):
+        import os
+
+        from etl_procedure_codes_crawler_spark.sinks.parquet import compact_dataset
+        from etl_procedure_codes_crawler_spark.sources.parquet import read_parquet
+
+        path = str(tmp_path / "frag")
+        orders = read_parquet(spark, os.path.join(sf_dir, "orders.parquet"))
+        # simulate many small incremental appends
+        for _ in range(6):
+            orders.limit(50).repartition(4).write.mode("append").parquet(path)
+        before_files = len([f for f in os.listdir(path) if f.endswith(".parquet")])
+        before_rows = spark.read.parquet(path).count()
+
+        n_files = compact_dataset(spark, path, target_file_mb=128)
+
+        assert n_files < before_files
+        assert spark.read.parquet(path).count() == before_rows
+        assert not os.path.exists(path + "._compacting")
+        assert not os.path.exists(path + "._precompact")
+
+    def test_compact_survives_stale_crash_leftovers(self, spark, tmp_path):
+        """Stale ._compacting/._precompact from a crashed run must not
+        make the rename-swap silently fail (rename returns False on an
+        occupied destination)."""
+        import os
+
+        from etl_procedure_codes_crawler_spark.sinks.parquet import compact_dataset
+
+        path = str(tmp_path / "frag")
+        df = spark.range(100).withColumnRenamed("id", "v")
+        for _ in range(3):
+            df.repartition(4).write.mode("append").parquet(path)
+        df.limit(1).write.parquet(path + "._compacting")
+        df.limit(1).write.parquet(path + "._precompact")
+
+        compact_dataset(spark, path, target_file_mb=128)
+        assert spark.read.parquet(path).count() == 300
+        assert not os.path.exists(path + "._compacting")
+        assert not os.path.exists(path + "._precompact")
+
+
 class TestIdempotentRunWrites:
     def test_rerun_replaces_own_partition_only(self, spark, sf_dir, tmp_path):
         from pyspark.sql import functions as F
@@ -136,3 +179,48 @@ class TestSchemaEvolution:
         assert set(merged.columns) == {"code", "v1", "v2"}
         rows = {r.code: r.v2 for r in merged.collect()}
         assert rows == {"a": None, "b": "extra"}
+
+
+class TestCompactionRound5:
+    def test_partitioned_compaction_counts_files_recursively(
+        self, spark, tmp_path
+    ):
+        """listStatus is non-recursive: with partition_by the data
+        files live under partition dirs and the pre-fix count was 0."""
+        import os
+
+        from etl_procedure_codes_crawler_spark.sinks.parquet import compact_dataset
+
+        path = str(tmp_path / "frag")
+        df = spark.range(200).selectExpr("id AS v", "id % 3 AS part")
+        for _ in range(3):
+            df.repartition(4).write.mode("append").partitionBy(
+                "part"
+            ).parquet(path)
+
+        n_files = compact_dataset(
+            spark, path, target_file_mb=128, partition_by=["part"]
+        )
+        assert n_files >= 3  # at least one file per partition value
+        assert spark.read.parquet(path).count() == 600
+        assert sorted(
+            d for d in os.listdir(path) if d.startswith("part=")
+        ) == ["part=0", "part=1", "part=2"]
+
+    def test_compact_crash_window_recovers_original(self, spark, tmp_path):
+        """Crash after src was renamed to ._precompact but before the
+        compacted copy moved in: the next call must restore the
+        original, not fail or discard it."""
+        import shutil
+
+        from etl_procedure_codes_crawler_spark.sinks.parquet import compact_dataset
+
+        path = str(tmp_path / "frag")
+        df = spark.range(120).withColumnRenamed("id", "v")
+        for _ in range(3):
+            df.repartition(4).write.mode("append").parquet(path)
+        # simulate the window: dataset moved aside, replacement missing
+        shutil.move(path, path + "._precompact")
+
+        compact_dataset(spark, path, target_file_mb=128)
+        assert spark.read.parquet(path).count() == 360

@@ -13,17 +13,6 @@ def _write(spark, path, ids, mode="append"):
     ).write.mode(mode).parquet(path)
 
 
-def _rewrite(spark, path, op="rewrite"):
-    """Rewrite every file of ``path`` through the stamped atomic swap
-    (operators/merge.py) that warehouse maintenance uses."""
-    from etl_procedure_codes_crawler_spark.operators.merge import (
-        replace_dataset_atomically,
-    )
-
-    rows = spark.read.parquet(path).localCheckpoint(eager=True)
-    replace_dataset_atomically(spark, path, rows.coalesce(1), op=op)
-
-
 def test_versions_pin_the_file_set_across_appends(spark, tmp_path):
     path = str(tmp_path / "wh")
     _write(spark, path, [1, 2, 3])
@@ -103,11 +92,13 @@ def test_manifests_invisible_to_plain_reads(spark, tmp_path):
 
 
 def test_rewritten_files_expire_the_version_loudly(spark, tmp_path):
+    from etl_procedure_codes_crawler_spark.sinks.parquet import compact_dataset
+
     path = str(tmp_path / "wh")
     _write(spark, path, [1, 2, 3])
     _write(spark, path, [4])
     v = V.commit_version(spark, path)
-    _rewrite(spark, path)  # rewrites every file
+    compact_dataset(spark, path)  # rewrites every file
     with pytest.raises(ValueError, match="expired"):
         V.read_version(spark, path, v)
     # a fresh commit over the compacted layout works again
@@ -119,10 +110,12 @@ def test_expiry_error_names_the_maintenance_op(spark, tmp_path):
     """A rewrite stamp turns 'your version expired' into 'compaction
     at rw1 expired it' — the difference between re-materializing a
     version being fine and it violating a takedown."""
+    from etl_procedure_codes_crawler_spark.sinks.parquet import compact_dataset
+
     path = str(tmp_path / "wh")
     _write(spark, path, [1, 2, 3])
     v = V.commit_version(spark, path)
-    _rewrite(spark, path, op="compact")
+    compact_dataset(spark, path)
     with pytest.raises(ValueError, match=r"compact \(rw1\)"):
         V.read_version(spark, path, v)
     detail = V.list_versions(spark, path, detail=True)
@@ -135,6 +128,26 @@ def test_expiry_error_names_the_maintenance_op(spark, tmp_path):
             "note": "",
         }
     ]
+
+
+def test_merge_upsert_stamps_rewrites(spark, tmp_path):
+    from etl_procedure_codes_crawler_spark.operators.merge import merge_upsert
+
+    path = str(tmp_path / "wh")
+    spark.createDataFrame(
+        [(1, "a"), (2, "b")], "doc_id bigint, text string"
+    ).write.parquet(path)
+    v = V.commit_version(spark, path)
+    merge_upsert(
+        spark,
+        path,
+        spark.createDataFrame([(2, "B")], "doc_id bigint, text string"),
+        key="doc_id",
+    )
+    with pytest.raises(ValueError, match="merge"):
+        V.read_version(spark, path, v)
+    status = V.list_versions(spark, path, detail=True)[0]
+    assert not status["readable"] and "merge" in status["expired_by"]
 
 
 def test_unstamped_rewrite_reports_unknown(spark, tmp_path):
@@ -165,9 +178,11 @@ def test_stamps_noop_without_versions(spark, tmp_path):
     ._versions directory appears just because maintenance ran."""
     import os
 
+    from etl_procedure_codes_crawler_spark.sinks.parquet import compact_dataset
+
     path = str(tmp_path / "wh")
     _write(spark, path, [1, 2, 3])
-    _rewrite(spark, path)
+    compact_dataset(spark, path)
     assert not os.path.exists(path + "._versions")
 
 
