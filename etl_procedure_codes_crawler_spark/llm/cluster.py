@@ -18,8 +18,6 @@ GraphFrames' AQS-style CC), no graph library required.
 
 from __future__ import annotations
 
-import warnings
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -65,7 +63,6 @@ def connected_components(
     src: str = "doc_a",
     dst: str = "doc_b",
     max_iter: int = 20,
-    on_unconverged: str = "raise",
     small_edge_limit: int | None = None,
 ) -> DataFrame:
     """(vertex, component) with component = min vertex id reachable.
@@ -87,10 +84,8 @@ def connected_components(
 
     If labels are still changing after ``max_iter`` passes (graph
     diameter > max_iter — e.g. one long duplicate chain), the labels
-    are WRONG (a component would be split). ``on_unconverged``
-    controls the response: ``"raise"`` (default) raises
-    :class:`ComponentsNotConverged`; ``"warn"`` emits a warning and
-    returns the partial labels.
+    are WRONG (a component would be split), so it raises
+    :class:`ComponentsNotConverged` rather than return them.
     """
     fwd = edges.select(F.col(src).alias("v"), F.col(dst).alias("n"))
     rev = edges.select(F.col(dst).alias("v"), F.col(src).alias("n"))
@@ -172,15 +167,12 @@ def connected_components(
             break
     adj.unpersist()
     if changed > 0:
-        msg = (
+        raise ComponentsNotConverged(
             f"connected_components did not converge in {max_iter} "
             f"iterations ({changed} labels still changing) — component "
             "labels are incomplete; raise max_iter (graph diameter "
             "exceeds it)"
         )
-        if on_unconverged == "raise":
-            raise ComponentsNotConverged(msg)
-        warnings.warn(msg, RuntimeWarning, stacklevel=2)
     return labels.select(F.col("v").alias("vertex"), F.col("label").alias("component"))
 
 

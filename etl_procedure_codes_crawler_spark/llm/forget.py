@@ -226,7 +226,7 @@ def _forget_plain(
         remaining = current.join(doomed, key, "left_anti").localCheckpoint(
             eager=True  # the swap rewrites the path this lineage reads
         )
-        replace_dataset_atomically(spark, path, remaining, op="forget")
+        replace_dataset_atomically(spark, path, remaining)
         return n
 
     # basePath keeps partition columns in the pruned read, so

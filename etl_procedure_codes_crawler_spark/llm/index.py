@@ -19,7 +19,7 @@ compute level. The exact vectors ride along in the coded table but in
 a separate parquet column: the ADC scoring pass never reads them
 (column pruning), only the final shortlist re-rank scan does.
 
-Determinism contract: building with the same corpus/params/seed and
+Determinism contract: building with the same corpus/params and
 querying equals the one-shot :func:`..similarity.cosine_topk_ivfpq`
 output exactly (same sample, same Lloyd iterations, same tie rules) —
 pinned in tests/test_ann_index.py.
@@ -36,22 +36,18 @@ from pyspark.sql import functions as F
 
 from .similarity import (
     _FIXED_SHIFT,
+    _adc_score,
+    _dot,
+    _int_matmul,
     _int_sq_dists,
     _ivf_cell_int_udf,
-    _ivf_cell_udf,
     _kmeans_int,
-    _kmeans_np,
     _md5_h60_py,
-    _pq_context,
     _pq_int_context,
     _quantize_np,
-    _sq_dists_np,
-    _train_vectors,
     _train_vectors_by_id,
-    _unit_np,
     _unit_seq_np,
     with_norm,
-    _dot,
 )
 
 
@@ -63,49 +59,31 @@ def build_ivfpq_index(
     num_centroids: int = 16,
     m: int = 8,
     codebook_size: int = 64,
-    seed: int = 42,
     max_iter: int = 5,
     train_sample: int = 1 << 16,
     dim: int | None = None,
-    quant_mode: str = "float",
 ) -> None:
-    """Train quantizers (bounded driver-side sample, seeded numpy
-    Lloyd), encode the corpus in ONE pass (Arrow-batched cell+codes),
-    and lay it out partitioned by cell. The encode scan is the only
-    full pass over the corpus; everything else is metadata-sized.
+    """Train quantizers (bounded driver-side sample), encode the corpus
+    in ONE pass (Arrow-batched cell+codes), and lay it out partitioned
+    by cell. The encode scan is the only full pass over the corpus;
+    everything else is metadata-sized.
 
-    ``quant_mode='md5'`` (round 12): both quantizers run md5-seeded
-    INTEGER Lloyd (similarity._kmeans_int) and the meta stores the
-    integer centroids/codebook + the mode, so appends, serves, and a
-    SQL oracle all re-derive identical structures from the corpus."""
+    Both quantizers run md5-seeded INTEGER Lloyd
+    (similarity._kmeans_int) and the meta stores the integer
+    centroids/codebook, so serves and a SQL oracle all re-derive
+    identical structures from the corpus."""
     from .text import spread_small_input
 
-    if quant_mode == "md5":
-        ids, train_X = _train_vectors_by_id(
-            corpus, vec_col, id_col, train_sample
-        )
-        codebook, codes_udf, _lut_udf, _adc, _rot = _pq_int_context(
-            corpus, vec_col, id_col, m, codebook_size, max_iter,
-            dim=dim, train_data=(ids, train_X),
-        )
-        keys = [(_md5_h60_py(f"km:{int(i)}"), int(i)) for i in ids]
-        centroids = _kmeans_int(
-            _quantize_np(_unit_seq_np(train_X)), keys, num_centroids,
-            max_iter,
-        )
-        cell_udf = _ivf_cell_int_udf(centroids, normalize=True)
-    elif quant_mode == "float":
-        train_X = _train_vectors(corpus, vec_col, train_sample)
-        codebook, codes_udf, _lut_udf, _adc, _rot = _pq_context(
-            corpus, vec_col, m, codebook_size, seed, max_iter, dim=dim,
-            train_X=train_X,
-        )
-        centroids = _kmeans_np(
-            _unit_np(train_X), num_centroids, seed, max_iter
-        )
-        cell_udf = _ivf_cell_udf(centroids, normalize=True)
-    else:
-        raise ValueError(f"unknown quant_mode {quant_mode!r}")
+    ids, train_X = _train_vectors_by_id(corpus, vec_col, id_col, train_sample)
+    codebook, codes_udf, _lut_udf = _pq_int_context(
+        corpus, vec_col, id_col, m, codebook_size, max_iter,
+        dim=dim, train_data=(ids, train_X),
+    )
+    keys = [(_md5_h60_py(f"km:{int(i)}"), int(i)) for i in ids]
+    centroids = _kmeans_int(
+        _quantize_np(_unit_seq_np(train_X)), keys, num_centroids, max_iter
+    )
+    cell_udf = _ivf_cell_int_udf(centroids, normalize=True)
 
     coded = spread_small_input(
         corpus.select(
@@ -138,8 +116,6 @@ def build_ivfpq_index(
         "codebook_size": codebook_size,
         "num_centroids": num_centroids,
         "dim": int(train_X.shape[1]),
-        "seed": seed,
-        "quant_mode": quant_mode,
     }
     spark = corpus.sparkSession
     # repartition(1), not coalesce(1): a coalesced one-row local
@@ -178,7 +154,6 @@ def query_ivfpq_index(
     :func:`..similarity.cosine_topk_ivfpq`."""
     meta = load_index_meta(spark, path)
     m, sub, K = meta["m"], meta["sub"], meta["codebook_size"]
-    md5_mode = meta.get("quant_mode", "float") == "md5"
 
     q_side = queries.select(
         F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv")
@@ -193,52 +168,32 @@ def query_ivfpq_index(
         raise ValueError("empty query set")
     qids = [r["query_id"] for r in q_rows]
     raw_Q = np.asarray([r["qv"] for r in q_rows], dtype=np.float64)
-    if md5_mode:
-        # the stored quantizers are integer — probe and LUT in the
-        # same exact int64 arithmetic the build used
-        G = np.asarray(meta["centroids"], dtype=np.int64)
-        C = np.asarray(meta["codebook"], dtype=np.int64)
-        QU = _quantize_np(_unit_seq_np(raw_Q))
-        from .similarity import _int_matmul
-
-        luts = _int_matmul(
-            (QU - _FIXED_SHIFT).reshape(len(QU), m, sub),
-            (C - _FIXED_SHIFT).T,
-        ).reshape(len(QU), -1)
-        order = np.argsort(_int_sq_dists(QU, G), axis=1, kind="stable")
-    else:
-        G = np.asarray(meta["centroids"])
-        C = np.asarray(meta["codebook"])
-        Q = _unit_np(raw_Q)
-        luts = (Q.reshape(len(Q), m, sub) @ C.T).reshape(len(Q), -1)
-        order = np.argsort(_sq_dists_np(Q, G), axis=1, kind="stable")
+    # the stored quantizers are integer — probe and LUT in the same
+    # exact int64 arithmetic the build used
+    G = np.asarray(meta["centroids"], dtype=np.int64)
+    C = np.asarray(meta["codebook"], dtype=np.int64)
+    QU = _quantize_np(_unit_seq_np(raw_Q))
+    luts = _int_matmul(
+        (QU - _FIXED_SHIFT).reshape(len(QU), m, sub),
+        (C - _FIXED_SHIFT).T,
+    ).reshape(len(QU), -1)
+    order = np.argsort(_int_sq_dists(QU, G), axis=1, kind="stable")
     probe_cells = order[:, :nprobe]
 
-    lut_type = "array<bigint>" if md5_mode else "array<double>"
-    lut_py = int if md5_mode else float
     probes = spark.createDataFrame(
         [
-            (qid, [lut_py(x) for x in lut], int(cell))
+            (qid, [int(x) for x in lut], int(cell))
             for qid, lut, cells in zip(qids, luts, probe_cells)
             for cell in cells
         ],
-        f"query_id {id_type}, lut {lut_type}, cell int",
+        f"query_id {id_type}, lut array<bigint>, cell int",
     )
     cells_needed = sorted({int(c) for row in probe_cells for c in row})
 
     coded = spark.read.parquet(path.rstrip("/") + "/coded").where(
         F.col("cell").isin(cells_needed)  # static partition pruning
     )
-    terms = [
-        F.element_at(
-            F.col("lut"),
-            F.lit(j * K + 1) + F.element_at(F.col("codes"), j + 1),
-        )
-        for j in range(m)
-    ]
-    adc = terms[0]
-    for t in terms[1:]:
-        adc = adc + t
+    adc = _adc_score(F.col("codes"), "lut", m, K)
     pairs = (
         coded.select("id", "cell", "codes")
         .join(F.broadcast(probes), "cell")

@@ -492,7 +492,7 @@ def decode_media(media: DataFrame, decoder=default_decoder) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Perceptual image hashing (dHash / aHash) + hamming-LSH near-dup pairs
+# Perceptual image hashing (dHash) + hamming-LSH near-dup pairs
 # ---------------------------------------------------------------------------
 #
 # The image twin of text SimHash: a 64-bit signature that survives
@@ -501,8 +501,8 @@ def decode_media(media: DataFrame, decoder=default_decoder) -> DataFrame:
 # machinery text dedup uses (dedup.hamming_band_pairs), so multimodal
 # near-dup dedup composes with the existing connected-components /
 # keep-best pipeline unchanged. dHash (gradient sign over a 9x8
-# downsample) and aHash (mean threshold over 8x8) are the public
-# perceptual-hash formulations popularized by the pHash project.
+# downsample) is a public perceptual-hash formulation popularized by
+# the pHash project.
 
 PHASH_SCHEMA = StructType(
     [
@@ -588,27 +588,9 @@ def dhash64(pixels: bytes, width: int, height: int, channels: int) -> int:
     return _pack_bits(bits)
 
 
-def ahash64(pixels: bytes, width: int, height: int, channels: int) -> int:
-    """Average hash: 8x8 grayscale downsample, bit = cell > grid mean.
-    Cheaper but brightness-sensitive; kept as the second public
-    formulation for corpora where gradients are degenerate (flat
-    synthetic tiles)."""
-    sums, counts = _gray_grid(pixels, width, height, channels, 8, 8)
-    # bit = cell_mean > grid_mean, exact: sum_i/cnt_i > total/total_cnt
-    # <=> sum_i*total_cnt > total*cnt_i (all Python ints)
-    total = sums.sum()
-    total_cnt = counts.sum()
-    bits = (sums * total_cnt > total * counts).reshape(-1)
-    return _pack_bits(bits)
-
-
-_PHASH_METHODS = {"dhash": dhash64, "ahash": ahash64}
-
-
 def image_hashes(
     media: DataFrame,
     decoder=default_decoder,
-    method: str = "dhash",
     content_key: bool = False,
 ) -> DataFrame:
     """(media_id, mime, phash, decode_error): decode + perceptual-hash
@@ -623,14 +605,8 @@ def image_hashes(
     candidates→verify pipelines: perceptual candidates from the band
     join, EXACT content equality as the verification — the image twin
     of the text pipeline's LSH-candidates → jaccard-verify shape."""
-    if method not in _PHASH_METHODS:
-        raise ValueError(
-            f"unknown method {method!r}; pick from {sorted(_PHASH_METHODS)}"
-        )
-    hasher = _PHASH_METHODS[method]
-
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        return _image_hash_batches(batches, decoder, hasher, content_key)
+        return _image_hash_batches(batches, decoder, content_key)
 
     return media.mapInPandas(
         run, schema=PHASH_CONTENT_SCHEMA if content_key else PHASH_SCHEMA
@@ -638,7 +614,7 @@ def image_hashes(
 
 
 def _image_hash_batches(
-    batches: Iterator[pd.DataFrame], decoder, hasher, content_key: bool
+    batches: Iterator[pd.DataFrame], decoder, content_key: bool
 ) -> Iterator[pd.DataFrame]:
     """The decode+hash pass as a plain batch generator — shared by
     image_hashes and the fused image_hashes_from_documents."""
@@ -659,7 +635,7 @@ def _image_hash_batches(
                 w, h, c, pix = decoder(
                     payload if payload is not None else b""
                 )
-                phash = hasher(pix, w, h, c)
+                phash = dhash64(pix, w, h, c)
                 if content_key:
                     sha = hashlib.sha256(bytes(pix)).hexdigest()
             except NotImplementedError:
@@ -687,7 +663,6 @@ def image_hashes_from_documents(
     width: int = PNG_WIDTH,
     corrupt_every: int = PNG_CORRUPT_EVERY,
     decoder=default_decoder,
-    method: str = "dhash",
     content_key: bool = False,
 ) -> DataFrame:
     """FUSED PNG synthesis + decode/hash (round 13, guide §4.1):
@@ -698,17 +673,10 @@ def image_hashes_from_documents(
     pipelines in one Spark stage but still Arrow-serializes every
     payload out of the synth pass and back into the hash pass. Same
     row functions, so the output is identical row-for-row."""
-    if method not in _PHASH_METHODS:
-        raise ValueError(
-            f"unknown method {method!r}; pick from {sorted(_PHASH_METHODS)}"
-        )
-    hasher = _PHASH_METHODS[method]
-
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         return _image_hash_batches(
             _png_synth_batches(batches, width, corrupt_every),
             decoder,
-            hasher,
             content_key,
         )
 

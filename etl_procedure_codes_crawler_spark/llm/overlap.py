@@ -8,14 +8,6 @@ question (which rows to drop); this module measures GROUP-level set
 overlap: treat each source's k-word shingle set as one giant set and
 compare sources pairwise.
 
-Two paths, the family's usual pairing:
-
-- :func:`group_shingle_overlap` — EXACT Jaccard between the distinct
-  shingle sets. One explode + per-group distinct, then a shared-
-  shingle join: pairs are generated per posting list (a shingle in m
-  sources emits m² rows, and m is bounded by the number of sources),
-  never a global cross join. Hash-oracle-able — everything is integer
-  counts and one final division.
 - :func:`group_minhash_signatures` / :func:`group_overlap_minhash` —
   the sketch path. A group's signature is the slot-wise MIN of
   xxhash64(seed_i, shingle) over every shingle in the group: min is
@@ -26,7 +18,9 @@ Two paths, the family's usual pairing:
   also keep per ingest batch and fold into a running per-source
   sketch without rereading history. Estimated Jaccard = matching-slot
   fraction; standard error ≈ sqrt(J(1-J)/num_hashes), floored in
-  tests against the exact path.
+  tests against the exact overlap.
+- :func:`group_cardinality_estimates` — per-source and corpus-total
+  distinct-shingle HLL estimates in one rollup scan.
 
 The pairwise comparison joins the signature table to itself — the
 group count (sources, feeds, domains) is small by construction, so
@@ -54,45 +48,6 @@ def _group_shingles(
             F.explode(shingles_column(text_col, k)).alias("shingle"),
         )
         .distinct()
-    )
-
-
-def group_shingle_overlap(
-    df: DataFrame,
-    group_col: str = "source",
-    text_col: str = "text",
-    k: int = 3,
-) -> DataFrame:
-    """(group_a, group_b, n_a, n_b, n_shared, jaccard) for every pair
-    of groups sharing at least one shingle — exact set Jaccard over
-    the groups' distinct k-shingle sets."""
-    sh = _group_shingles(df, group_col, text_col, k)
-    sizes = sh.groupBy("grp").agg(F.count(F.lit(1)).alias("n"))
-    shared = (
-        sh.select(F.col("grp").alias("group_a"), "shingle")
-        .join(
-            sh.select(F.col("grp").alias("group_b"), "shingle"), "shingle"
-        )
-        .where(F.col("group_a") < F.col("group_b"))
-        .groupBy("group_a", "group_b")
-        .agg(F.count(F.lit(1)).alias("n_shared"))
-    )
-    a = sizes.select(F.col("grp").alias("group_a"), F.col("n").alias("n_a"))
-    b = sizes.select(F.col("grp").alias("group_b"), F.col("n").alias("n_b"))
-    return (
-        shared.join(a, "group_a")
-        .join(b, "group_b")
-        .select(
-            "group_a",
-            "group_b",
-            "n_a",
-            "n_b",
-            "n_shared",
-            (
-                F.col("n_shared").cast("double")
-                / (F.col("n_a") + F.col("n_b") - F.col("n_shared"))
-            ).alias("jaccard"),
-        )
     )
 
 
@@ -134,10 +89,9 @@ def group_overlap_minhash(
     num_hashes: int = 64,
     hash_fn: str = "xx",
 ) -> DataFrame:
-    """(group_a, group_b, est_jaccard) for EVERY group pair — the
-    sketch twin of :func:`group_shingle_overlap` (which omits pairs
-    sharing nothing; here disjoint pairs estimate ~0 and appear). The
-    estimate is the matching-slot fraction of the two sketches."""
+    """(group_a, group_b, est_jaccard) for EVERY group pair —
+    disjoint pairs estimate ~0 and appear. The estimate is the
+    matching-slot fraction of the two sketches."""
     sig = group_minhash_signatures(
         df, group_col, text_col, k, num_hashes, hash_fn
     )
@@ -168,29 +122,6 @@ def group_overlap_minhash(
     )
 
 
-def group_cardinality_sketches(
-    df: DataFrame,
-    group_col: str = "source",
-    text_col: str = "text",
-    k: int = 3,
-    lg_config_k: int = 12,
-) -> DataFrame:
-    """(group, sketch) — a Datasketches HLL per group over its
-    distinct k-shingles, built by ``hll_sketch_agg`` (JVM-side,
-    partially aggregated: per-partition sketches merge map-side, so
-    per group one ~2^lg_config_k-byte binary crosses the wire — the
-    same mergeable-state shape as the MinHash signatures, but
-    answering CARDINALITY instead of overlap). The sketch column is
-    the keepable artifact: persist it per ingest batch and
-    ``hll_union_agg`` folds history without rereading it."""
-    sh = _group_shingles(df, group_col, text_col, k)
-    return (
-        sh.groupBy("grp")
-        .agg(F.hll_sketch_agg("shingle", F.lit(lg_config_k)).alias("sketch"))
-        .select(F.col("grp").alias("group"), "sketch")
-    )
-
-
 def group_cardinality_estimates(
     df: DataFrame,
     group_col: str = "source",
@@ -203,12 +134,8 @@ def group_cardinality_estimates(
     the grand-total sketch a second grouping set of the SAME partial
     aggregation — never a second pass (HLL union is lossless on the
     registers, so merging the per-group sketches estimates the same
-    set; :func:`union_cardinality` is that fold over PERSISTED
-    sketches — the two paths agree to within sketch error, not bit-
-    exactly, because the Datasketches union operator carries a wider
-    internal register type than the direct aggregation). Standard error
-    ~1.04/sqrt(2^lg_config_k) ≈ 1.6% at the default; floored against
-    exact distinct counts in tests."""
+    set). Standard error ~1.04/sqrt(2^lg_config_k) ≈ 1.6% at the
+    default; floored against exact distinct counts in tests."""
     sh = _group_shingles(df, group_col, text_col, k)
     return (
         sh.rollup("grp")
@@ -218,19 +145,4 @@ def group_cardinality_estimates(
             ).alias("est_distinct")
         )
         .select(F.col("grp").alias("group"), "est_distinct")
-    )
-
-
-def union_cardinality(sketches: DataFrame) -> DataFrame:
-    """Fold a table of persisted per-group sketches
-    (:func:`group_cardinality_sketches` output — e.g. one per ingest
-    batch) into a single estimated distinct count WITHOUT touching the
-    data they summarize: ``hll_union_agg`` over kilobyte-sized state.
-    This is the incremental path — the rollup row in
-    :func:`group_cardinality_estimates` is the same algebra fused into
-    the fit scan."""
-    return sketches.agg(
-        F.hll_sketch_estimate(
-            F.hll_union_agg("sketch", F.lit(True))
-        ).alias("est_distinct")
     )

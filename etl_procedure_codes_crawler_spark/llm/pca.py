@@ -41,9 +41,7 @@ class PcaModel:
     """Fitted moments: projection = (x - mean) @ components[:, :k]
     (columns ordered by descending eigenvalue; optionally scaled by
     1/sqrt(eigenvalue) when whitening). The RAW moment sums ride
-    along because they are additive — :func:`update_pca` folds a new
-    batch's moments in without rereading history, the same
-    incremental shape as the dedup store and the ANN index."""
+    along because they are additive."""
 
     mean: np.ndarray  # (d,)
     components: np.ndarray  # (d, d), columns = eigenvectors
@@ -154,26 +152,6 @@ def fit_pca(
     if moments is None:
         raise ValueError(f"fit_pca: no non-NULL vectors in {vec_col!r}")
     return _model_from_moments(*moments)
-
-
-def update_pca(
-    df: DataFrame, model: PcaModel, vec_col: str = "embedding"
-) -> PcaModel:
-    """Fold a NEW batch into a fitted model: moments are additive, so
-    the incremental refit scans ONLY the new rows — the corpus the
-    model was fitted on is never reread. Matches a from-scratch fit
-    over old+new up to float-summation order (tests pin 1e-9). A
-    batch with no non-NULL vectors returns the model unchanged —
-    detected by return value, so a genuinely broken batch (mixed
-    vector dimensions → numpy broadcast ValueError) still raises
-    instead of being silently dropped."""
-    moments = _collect_moments(df, vec_col, None)
-    if moments is None:
-        return model
-    n2, s2, ss2 = moments
-    return _model_from_moments(
-        model.n + n2, model.moment_sum + s2, model.moment_sumsq + ss2
-    )
 
 
 def transform_pca(

@@ -5,7 +5,7 @@ A multimodal crawl re-fetches the same image under many URLs and the
 same audio re-mastered at different gains; byte-level dedup misses
 both. This store persists one row per accepted media object:
 ``(id, phash)`` where phash is the 64-bit perceptual signature
-(:func:`.multimodal.image_hashes` dHash/aHash, or
+(:func:`.multimodal.image_hashes` dHash, or
 :func:`.multimodal.audio_fingerprints`) — 16 bytes/object, so the
 store for a billion-image corpus is ~16 GB of parquet, scanned as 3
 small columns per probe.
@@ -47,13 +47,11 @@ def _hashes_schema():
     )
 
 
-def create_phash_store(
-    spark: SparkSession, path: str, method: str = "dhash"
-) -> dict:
-    """Initialize an empty store; ``method`` rides in meta so batches
-    hashed with a different algorithm cannot silently produce an
-    empty-looking probe."""
-    meta = {"method": method, "version": 1}
+def create_phash_store(spark: SparkSession, path: str) -> dict:
+    """Initialize an empty store; the hash method (dHash, the only one
+    the package computes) rides in meta so the stored format names
+    what its 64-bit values mean."""
+    meta = {"method": "dhash", "version": 1}
     spark.createDataFrame([(json.dumps(meta),)], "meta string").repartition(
         1
     ).write.mode("overwrite").parquet(_meta_path(path))

@@ -635,9 +635,8 @@ def llm_corpus_prep_multimodal(
         )
 
     img_rep = modality_report(
-        M.image_hashes(
-            M.documents_as_png(base_docs, corrupt_every=50),
-            content_key=True,
+        M.image_hashes_from_documents(
+            base_docs, corrupt_every=50, content_key=True
         ),
         "phash",
         "img",
@@ -1981,7 +1980,7 @@ def ann_cosine_topk_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     set is approximate BY DESIGN; its derivation no longer is)."""
     embeddings = load(spark, sf_dir, "embeddings")
     queries = embeddings.filter(F.col("vec_id") < 20)
-    return S.cosine_topk_lsh(embeddings, queries, k=5, plane_mode="md5")
+    return S.cosine_topk_lsh(embeddings, queries, k=5)
 
 
 #: fixed-point quantization CTE shared by the md5-int ANN oracles —
@@ -2119,13 +2118,10 @@ def ann_cosine_topk_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     unrolled CTEs; cell assignment, nprobe probing, and the exact
     cosine re-rank then replay bit-for-bit. Recall vs the exact
     baseline stays pinned in tests — the cells are approximate BY
-    DESIGN; their derivation no longer is. The float path
-    (quant_mode='float') stays the library throughput default."""
+    DESIGN; their derivation no longer is."""
     embeddings = load(spark, sf_dir, "embeddings")
     queries = embeddings.filter(F.col("vec_id") < 20)
-    return S.cosine_topk_ivf(
-        embeddings, queries, k=5, max_iter=3, quant_mode="md5"
-    )
+    return S.cosine_topk_ivf(embeddings, queries, k=5, max_iter=3)
 
 
 def _pq_md5_oracle(
@@ -2397,8 +2393,7 @@ def ann_cosine_topk_hpq(spark: SparkSession, sf_dir: str) -> DataFrame:
     embeddings = load(spark, sf_dir, "embeddings")
     queries = embeddings.filter(F.col("vec_id") < 20)
     return S.cosine_topk_pq(
-        embeddings, queries, k=5, dim=64, max_iter=3,
-        quant_mode="md5", rotate=True,
+        embeddings, queries, k=5, dim=64, max_iter=3, rotate=True
     )
 
 
@@ -2415,9 +2410,7 @@ def ann_cosine_topk_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     noise stays approximate BY DESIGN; its derivation no longer is."""
     embeddings = load(spark, sf_dir, "embeddings")
     queries = embeddings.filter(F.col("vec_id") < 20)
-    return S.cosine_topk_pq(
-        embeddings, queries, k=5, dim=64, max_iter=3, quant_mode="md5"
-    )
+    return S.cosine_topk_pq(embeddings, queries, k=5, dim=64, max_iter=3)
 
 
 @register("ann_cosine_topk_ivfpq", oracle=_pq_md5_oracle(ivf=True))
@@ -2432,8 +2425,7 @@ def ann_cosine_topk_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
     embeddings = load(spark, sf_dir, "embeddings")
     queries = embeddings.filter(F.col("vec_id") < 20)
     return S.cosine_topk_ivfpq(
-        embeddings, queries, k=5, nprobe=6, dim=64, max_iter=3,
-        quant_mode="md5",
+        embeddings, queries, k=5, nprobe=6, dim=64, max_iter=3
     )
 
 
@@ -3089,9 +3081,9 @@ def multimodal_image_neardup_pairs(
     # byte-identical (same text; 10^9 ≡ 0 mod the corruption modulus
     # 50), so twin hash rows derive from the originals' with the id
     # shifted — no second synthesis+decode of every 7th doc.
-    hashes = M.image_hashes(
-        M.documents_as_png(documents)
-    ).localCheckpoint(eager=True)
+    hashes = M.image_hashes_from_documents(documents).localCheckpoint(
+        eager=True
+    )
     twin_rows = hashes.filter(F.col("media_id") % 7 == 0).withColumn(
         "media_id", F.col("media_id") + F.lit(1_000_000_000)
     )
@@ -3198,11 +3190,6 @@ def streaming_media_neardup_ingest(
             wh,
             store,
             _os.path.join(root, "ckpt"),
-            # the gate's exchanges are batch-sized hash relations; at
-            # the session's corpus-width shuffle setting each tiny
-            # exchange pays pure scheduling latency (AQE still
-            # coalesces below this)
-            gate_shuffle_partitions=8,
         )
         q.awaitTermination()
         from ..sources.parquet import read_table_or_empty
@@ -4540,8 +4527,8 @@ def ann_index_ivfpq_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     precedent. The timed repeat path is serve-only (probe + ADC scan
     + exact re-rank), which is what a query row should measure.
 
-    Round 12: HASH-ORACLED — the index builds in quant_mode='md5'
-    (integer quantizers persisted in meta), and because serve ==
+    Round 12: HASH-ORACLED — the index builds md5-int quantizers
+    (integer centroids and codebook persisted in meta), and because serve ==
     one-shot cosine_topk_ivfpq by the determinism contract, the
     oracle IS the ivfpq oracle verbatim: DuckDB re-derives the
     trained structures from the corpus; the parquet layout is an
@@ -4555,7 +4542,7 @@ def ann_index_ivfpq_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     def build(memo_root: str) -> None:
         IX.build_ivfpq_index(
             embeddings, _os.path.join(memo_root, "ix"),
-            num_centroids=16, seed=42, max_iter=3, quant_mode="md5",
+            num_centroids=16, max_iter=3,
         )
 
     root = _memo_scaffold(f"annix_md5:{sf_dir}", build)
@@ -4826,7 +4813,7 @@ def forget_documents_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     try:
         documents.write.parquet(wh)
         NS.build_minhash_store(documents, nd)
-        IX.build_ivfpq_index(embeddings, ix, num_centroids=16, seed=42)
+        IX.build_ivfpq_index(embeddings, ix, num_centroids=16)
         doomed = spark.createDataFrame([(3,), (7,), (11,)], "doc_id bigint")
         removed = FG.forget_documents(
             doomed, warehouse_path=wh, neardup_store_path=nd,
@@ -5281,8 +5268,7 @@ def embedding_margin_pairs_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     floored in tests/test_r9s2_families.py."""
     embeddings = load(spark, sf_dir, "embeddings")
     return S.margin_pairs_ann(
-        embeddings, floor=0.30, k=4, margin_threshold=1.1,
-        quant_mode="md5", max_iter=3,
+        embeddings, floor=0.30, k=4, margin_threshold=1.1, max_iter=3
     )
 
 
@@ -6170,7 +6156,6 @@ def streaming_unified_admission(spark: SparkSession, sf_dir: str) -> DataFrame:
             _os.path.join(root, "ckpt"),
             budgets={"src0": 800, "src1": 800, "src2": 800},
             min_doc_freq=5,
-            gate_shuffle_partitions=8,
         )
         q.awaitTermination()
         return unified_attrition_report(spark, stores).localCheckpoint(

@@ -87,7 +87,7 @@ def _pairs_within_cells(
 
     sample = _unit_np(_train_vectors(df, vec_col, train_sample))
     centroids = _kmeans_np(sample, num_cells, seed=seed, max_iter=10)
-    probe_of = _ivf_probe_udf(centroids, nprobe=probes, normalize=True)
+    probe_of = _ivf_probe_udf(centroids, nprobe=probes)
     v = df.select(
         F.col(id_col).alias("id"), F.col(vec_col).alias("v")
     ).withColumn("cell", F.explode(probe_of(F.col("v"))))

@@ -8,8 +8,8 @@ Two tiers, per SURVEY §7 Phase 5:
   per query; at 100 TB this is the re-rank stage, not the scan.
 - random-hyperplane LSH — the scale path: 16-bit sign signatures
   bucket the corpus; candidates share a band; exact cosine re-ranks.
-  Hyperplanes are generated deterministically (seeded) on the driver
-  and folded into the plan as literals — no state on executors.
+  The ±1 hyperplanes derive from md5 on the driver and ride the
+  signature UDF's closure — no state on executors.
 """
 
 from __future__ import annotations
@@ -163,9 +163,7 @@ def margin_pairs_ann(
     id_col: str = "vec_id",
     num_centroids: int | None = None,
     nprobe: int = 6,
-    seed: int = 42,
     cell_target: int = 256,
-    quant_mode: str = "float",
     max_iter: int = 5,
 ) -> DataFrame:
     """Ratio-margin pair mining (:func:`margin_score_pairs`) over an
@@ -198,8 +196,7 @@ def margin_pairs_ann(
     edges = (
         cosine_topk_ivf(
             df, df, k=knn, vec_col=vec_col, id_col=id_col,
-            num_centroids=num_centroids, nprobe=nprobe, seed=seed,
-            quant_mode=quant_mode, max_iter=max_iter,
+            num_centroids=num_centroids, nprobe=nprobe, max_iter=max_iter,
         )
         .filter(F.col("cosine") >= floor)
         .select(
@@ -326,7 +323,7 @@ def _stack_np(vectors: pd.Series) -> np.ndarray:
 
 # ---------------------------------------------------------------------------
 # md5-int quantizer training (round 12): the trained-ANN conversion.
-# The same fixed-point discipline that hash-oracled the float-LSH
+# The same fixed-point discipline that hash-oracled the LSH
 # family, applied to k-means itself — md5-seeded init, a fixed number
 # of Lloyd iterations, and INTEGER centroid arithmetic make training
 # a pure function of (ids, quantized coordinates) that DuckDB replays
@@ -336,7 +333,7 @@ def _stack_np(vectors: pd.Series) -> np.ndarray:
 # keeps coordinates >= 0, so numpy // == SQL //); argmin ties break
 # to the lowest centroid id (numpy first-occurrence == ORDER BY d,
 # cid). Empty cells keep their previous centroid — deliberately NOT
-# the float path's farthest-point reseed, which is order-dependent
+# the float k-means' farthest-point reseed, which is order-dependent
 # and SQL-hostile.
 # ---------------------------------------------------------------------------
 
@@ -550,22 +547,7 @@ def _pq_int_context(
     ]
     CB = _kmeans_int(pooled, keys, codebook_size, max_iter)
     codes, lut = _pq_int_codecs(CB, m, sub)
-
-    def adc_score(codes_col, lut_colname):
-        # same unrolled element_at sum as _pq_context — long-typed
-        terms = [
-            F.element_at(
-                F.col(lut_colname),
-                F.lit(j * codebook_size + 1) + F.element_at(codes_col, j + 1),
-            )
-            for j in range(m)
-        ]
-        total = terms[0]
-        for t in terms[1:]:
-            total = total + t
-        return total
-
-    return CB, codes, lut, adc_score, None
+    return CB, codes, lut
 
 
 def _pq_int_codecs(codebook: np.ndarray, m: int, sub: int):
@@ -686,20 +668,7 @@ def _hpq_int_context(
         out = _int_matmul(rs.reshape(len(rs), m, sub), CBs.T)
         return pd.Series(list(out.reshape(len(rs), -1)))
 
-    def adc_score(codes_col, lut_colname):
-        terms = [
-            F.element_at(
-                F.col(lut_colname),
-                F.lit(j * codebook_size + 1) + F.element_at(codes_col, j + 1),
-            )
-            for j in range(m)
-        ]
-        total = terms[0]
-        for t in terms[1:]:
-            total = total + t
-        return total
-
-    return CB, codes, lut, adc_score, None
+    return CB, codes, lut
 
 
 def _int_matmul(A: np.ndarray, B: np.ndarray) -> np.ndarray:
@@ -763,14 +732,12 @@ def _opq_rotation(train_X: np.ndarray, m: int) -> np.ndarray:
     return np.ascontiguousarray(evecs[:, perm])
 
 
-def _pq_codes_udf(
-    codebook: np.ndarray, m: int, sub: int, R: np.ndarray | None = None
-):
-    """Arrow-batched PQ encode: unit-normalize, (optionally) rotate,
+def _pq_codes_udf(codebook: np.ndarray, m: int, sub: int, R: np.ndarray):
+    """Arrow-batched PQ encode: unit-normalize, rotate,
     slice into ``m`` subvectors, argmin against the closure codebook —
     one (n·m, sub) @ (sub, k) matmul per batch (the sanctioned
     pandas-UDF case, same rationale as
-    :func:`_all_bucket_signatures`)."""
+    :func:`_md5_bucket_signatures`)."""
     from pyspark.sql.functions import pandas_udf
     from pyspark.sql.types import ArrayType, IntegerType
 
@@ -778,20 +745,16 @@ def _pq_codes_udf(
 
     @pandas_udf(ArrayType(IntegerType()))
     def codes(vectors: pd.Series) -> pd.Series:
-        X = _unit_np(_stack_np(vectors))
-        if R is not None:
-            X = X @ R
+        X = _unit_np(_stack_np(vectors)) @ R
         lab = _sq_dists_np(X.reshape(-1, sub), C).argmin(axis=1)
         return pd.Series(list(lab.reshape(-1, m).astype(np.int32)))
 
     return codes
 
 
-def _pq_lut_udf(
-    codebook: np.ndarray, m: int, sub: int, R: np.ndarray | None = None
-):
+def _pq_lut_udf(codebook: np.ndarray, m: int, sub: int, R: np.ndarray):
     """Arrow-batched ADC lookup table: for each query, the dot of every
-    (rotated) subvector slice with every codebook entry — flattened
+    rotated subvector slice with every codebook entry — flattened
     (m·k,) so a candidate's score is ``m`` element_at adds."""
     from pyspark.sql.functions import pandas_udf
     from pyspark.sql.types import ArrayType, DoubleType
@@ -800,18 +763,16 @@ def _pq_lut_udf(
 
     @pandas_udf(ArrayType(DoubleType()))
     def lut(vectors: pd.Series) -> pd.Series:
-        X = _unit_np(_stack_np(vectors))
-        if R is not None:
-            X = X @ R
+        X = _unit_np(_stack_np(vectors)) @ R
         out = (X.reshape(len(X), m, sub) @ C.T).reshape(len(X), -1)
         return pd.Series(list(out))
 
     return lut
 
 
-def _ivf_cell_udf(centroids: np.ndarray, normalize: bool):
-    """Arrow-batched IVF cell assignment: argmin distance to the
-    closure centroids — the corpus-side replacement for a per-row
+def _ivf_cell_udf(centroids: np.ndarray):
+    """Arrow-batched IVF cell assignment in unit space: argmin distance
+    to the closure centroids — the corpus-side replacement for a per-row
     nested-lambda argmin expression (interpreted, ~µs/element) with
     one matmul per batch."""
     from pyspark.sql.functions import pandas_udf
@@ -821,9 +782,7 @@ def _ivf_cell_udf(centroids: np.ndarray, normalize: bool):
 
     @pandas_udf(IntegerType())
     def cell(vectors: pd.Series) -> pd.Series:
-        X = _stack_np(vectors)
-        if normalize:
-            X = _unit_np(X)
+        X = _unit_np(_stack_np(vectors))
         return pd.Series(_sq_dists_np(X, G).argmin(axis=1).astype(np.int32))
 
     return cell
@@ -863,10 +822,11 @@ def _probe_cells_col(vec, centroids: list[list[float]], nprobe: int):
 _PROBE_LITERAL_CAP = 4096
 
 
-def _ivf_probe_udf(centroids: np.ndarray, nprobe: int, normalize: bool):
+def _ivf_probe_udf(centroids: np.ndarray, nprobe: int):
     """Arrow-batched probe for large centroid tables: nprobe nearest
-    cells per query via one matmul + stable argsort (ties order by
-    cell asc — same contract as :func:`_probe_cells_col`)."""
+    cells per unit-normalized query via one matmul + stable argsort
+    (ties order by cell asc — same contract as
+    :func:`_probe_cells_col`)."""
     from pyspark.sql.functions import pandas_udf
     from pyspark.sql.types import ArrayType, IntegerType
 
@@ -874,38 +834,27 @@ def _ivf_probe_udf(centroids: np.ndarray, nprobe: int, normalize: bool):
 
     @pandas_udf(ArrayType(IntegerType()))
     def probe(vectors: pd.Series) -> pd.Series:
-        X = _stack_np(vectors)
-        if normalize:
-            X = _unit_np(X)
+        X = _unit_np(_stack_np(vectors))
         order = np.argsort(_sq_dists_np(X, G), axis=1, kind="stable")
         return pd.Series(list(order[:, :nprobe].astype(np.int32)))
 
     return probe
 
 
-def _probe_cells(vec, centers: np.ndarray, nprobe: int, normalize: bool):
-    """Adaptive IVF probe: the literal JVM expression for small
-    centroid tables (no Python worker round-trip for a tiny query
+def _probe_cells(vec, centers: np.ndarray, nprobe: int):
+    """Adaptive IVF probe in unit space: the literal JVM expression for
+    small centroid tables (no Python worker round-trip for a tiny query
     side), the Arrow matmul above :data:`_PROBE_LITERAL_CAP`. The
-    caller passes the RAW vector column; normalization (when the cell
-    geometry is unit-space) happens inside either branch."""
+    caller passes the RAW vector column; normalization happens inside
+    either branch."""
     if centers.size <= _PROBE_LITERAL_CAP:
-        if normalize:
-            n = _norm(vec)
-            vec = F.transform(
-                vec,
-                lambda x: F.when(n > 0, x.cast("double") / n).otherwise(0.0),
-            )
+        n = _norm(vec)
+        vec = F.transform(
+            vec,
+            lambda x: F.when(n > 0, x.cast("double") / n).otherwise(0.0),
+        )
         return _probe_cells_col(vec, centers.tolist(), nprobe)
-    return _ivf_probe_udf(centers, nprobe, normalize)(vec)
-
-
-def _hyperplanes(num_planes: int, dim: int, seed: int = 42) -> list[list[float]]:
-    """Deterministic Gaussian hyperplanes (driver-side, tiny)."""
-    import numpy as np
-
-    rng = np.random.RandomState(seed)
-    return rng.randn(num_planes, dim).tolist()
+    return _ivf_probe_udf(centers, nprobe)(vec)
 
 
 #: fixed-point scale for md5-mode signatures: quantizing each
@@ -936,12 +885,18 @@ def _md5_sign_planes(num_planes: int, dim: int) -> "np.ndarray":
 def _md5_bucket_signatures(
     num_tables: int, planes_per_table: int, dim: int
 ):
-    """Integer-exact twin of :func:`_all_bucket_signatures` (md5
-    mode): coordinates quantized to fixed-point int64, dots an int64
-    matmul against the ±1 plane matrix (associative — no float
-    order hazard), bucket = Σ 2^i·(dot_i > 0) per table. Every step
-    is replayable in ANSI SQL, which is what moves the float-LSH
-    queries from rows-only to hash-oracled."""
+    """Integer-exact all-tables signature column: coordinates
+    quantized to fixed-point int64, dots an int64 matmul against the
+    ±1 plane matrix (associative — no float order hazard), bucket =
+    Σ 2^i·(dot_i > 0) per table. Every step is replayable in ANSI SQL,
+    which is what makes the LSH queries hash-oracled.
+
+    One Arrow-batched matmul computes every table's bucket per vector.
+    A pure-expression alternative (one column expression per table)
+    would be JVM-side but codegens num_tables × planes_per_table
+    chained lambda folds — measured ~7s of fixed plan/compile cost at
+    40 planes regardless of data size; this is the sanctioned
+    pandas-UDF case (built-ins express it, but pathologically)."""
     from pyspark.sql.functions import pandas_udf
     from pyspark.sql.types import ArrayType, LongType
 
@@ -965,48 +920,12 @@ def _md5_bucket_signatures(
     return buckets
 
 
-def _all_bucket_signatures(
-    planes: list[list[float]], num_tables: int, planes_per_table: int
-):
-    """Vectorized all-tables signature column: one Arrow-batched numpy
-    matmul computes every table's bucket per vector.
-
-    A pure-expression alternative (one column expression per table)
-    would be JVM-side but codegens num_tables × planes_per_table
-    chained lambda folds — measured ~7s of fixed plan/compile cost at
-    40 planes regardless of data size. One (n,dim)@(dim,planes) matmul
-    per batch is the right shape at every scale; this is the sanctioned
-    pandas-UDF case (built-ins express it, but pathologically)."""
-    from pyspark.sql.functions import pandas_udf
-    from pyspark.sql.types import ArrayType, LongType
-
-    plane_matrix = np.asarray(planes, dtype=np.float64)  # (T*r, dim)
-    weights = (2 ** np.arange(planes_per_table)).astype(np.int64)
-
-    @pandas_udf(ArrayType(LongType()))
-    def buckets(vectors: pd.Series) -> pd.Series:
-        stacked = np.vstack(
-            [np.asarray(v, dtype=np.float64) for v in vectors]
-        )  # (n, dim)
-        signs = (stacked @ plane_matrix.T) > 0  # (n, T*r)
-        per_table = [
-            signs[:, t * planes_per_table : (t + 1) * planes_per_table] @ weights
-            for t in range(num_tables)
-        ]
-        return pd.Series(list(np.stack(per_table, axis=1)))
-
-    return buckets
-
-
 def lsh_table_buckets(
     df: DataFrame,
     id_alias: str,
     vec_col: str,
-    planes: list[list[float]],
-    num_tables: int,
-    planes_per_table: int,
+    signature,
     spread: bool = True,
-    signature=None,
 ) -> DataFrame:
     """(id, vec, table, bucket) rows — one row per LSH table.
 
@@ -1019,13 +938,10 @@ def lsh_table_buckets(
     and about to be broadcast anyway; paying a shuffle plus a 32-batch
     Arrow stage to fan out 20 rows costs more than the matmul saves.
 
-    ``signature`` overrides the bucket UDF (the md5-mode integer
-    signatures pass theirs; default = Gaussian-plane matmul).
+    ``signature`` is the bucket UDF (:func:`_md5_bucket_signatures`).
     """
     from .text import spread_small_input
 
-    if signature is None:
-        signature = _all_bucket_signatures(planes, num_tables, planes_per_table)
     # spread narrow inputs so the Arrow signature batches use every
     # core (a single parquet file otherwise pins the matmul to one)
     if spread:
@@ -1056,10 +972,8 @@ def cosine_topk_ivf(
     id_col: str = "vec_id",
     num_centroids: int = 16,
     nprobe: int = 4,
-    seed: int = 42,
     max_iter: int = 5,
     train_sample: int = 1 << 16,
-    quant_mode: str = "float",
 ) -> DataFrame:
     """IVF (inverted-file) approximate top-k: k-means partitions the
     corpus into cells; each query probes its ``nprobe`` nearest cells
@@ -1072,34 +986,17 @@ def cosine_topk_ivf(
     plan as literals; the corpus is scanned ONCE, assigning each vector
     its cell with a closed-form argmin — no ML model state on
     executors, ever. Per query the candidate set shrinks by
-    ~nprobe/num_centroids. Seeded k-means keeps runs reproducible.
+    ~nprobe/num_centroids.
 
-    ``quant_mode='md5'`` (round 12): md5-seeded FIXED-POINT integer
-    k-means (:func:`_kmeans_int`) — training, cell assignment, and
-    probes become engine-exact integer relations a SQL oracle replays
-    (``seed`` is ignored; the md5 init is the seed); 'float' stays
-    the throughput default."""
+    The k-means is md5-seeded and FIXED-POINT integer
+    (:func:`_kmeans_int`): training, cell assignment, and probes are
+    engine-exact integer relations a SQL oracle replays."""
     from .text import spread_small_input
 
-    if quant_mode == "md5":
-        ids, X = _train_vectors_by_id(
-            corpus, vec_col, id_col, train_sample
-        )
-        keys = [(_md5_h60_py(f"km:{i}"), int(i)) for i in ids]
-        centers = _kmeans_int(
-            _quantize_np(X), keys, num_centroids, max_iter
-        )
-        cell_udf = _ivf_cell_int_udf(centers, normalize=False)
-    elif quant_mode == "float":
-        centers = _kmeans_np(
-            _train_vectors(corpus, vec_col, train_sample),
-            num_centroids,
-            seed,
-            max_iter,
-        )
-        cell_udf = _ivf_cell_udf(centers, normalize=False)
-    else:
-        raise ValueError(f"unknown quant_mode {quant_mode!r}")
+    ids, X = _train_vectors_by_id(corpus, vec_col, id_col, train_sample)
+    keys = [(_md5_h60_py(f"km:{i}"), int(i)) for i in ids]
+    centers = _kmeans_int(_quantize_np(X), keys, num_centroids, max_iter)
+    cell_udf = _ivf_cell_int_udf(centers, normalize=False)
     # spread narrow inputs so the Arrow cell-assign batches use every
     # core (same rationale as lsh_table_buckets)
     assigned = spread_small_input(
@@ -1117,14 +1014,9 @@ def cosine_topk_ivf(
         # tests/test_plan_quality.py
         F.coalesce(cell_udf(F.col("cv")), F.lit(-1)).alias("cell"),
     )
-    if quant_mode == "md5":
-        probe_col = _ivf_probe_int_udf(centers, nprobe, normalize=False)(
-            F.col("qv")
-        )
-    else:
-        probe_col = _probe_cells(
-            F.col("qv"), centers, nprobe, normalize=False
-        )
+    probe_col = _ivf_probe_int_udf(centers, nprobe, normalize=False)(
+        F.col("qv")
+    )
     probes = (
         queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv"))
         .select(
@@ -1154,23 +1046,6 @@ def cosine_topk_ivf(
     )
 
 
-def _resolve_planes(
-    plane_mode: str,
-    num_tables: int,
-    planes_per_table: int,
-    dim: int,
-    seed: int,
-):
-    """(planes, signature_udf) for a plane mode: 'gaussian' = float
-    planes + BLAS matmul signatures (throughput default), 'md5' =
-    ±1 planes + integer-exact signatures (oracle-replayable)."""
-    if plane_mode == "gaussian":
-        return _hyperplanes(num_tables * planes_per_table, dim, seed), None
-    if plane_mode == "md5":
-        return None, _md5_bucket_signatures(num_tables, planes_per_table, dim)
-    raise ValueError(f"unknown plane_mode {plane_mode!r}")
-
-
 def cosine_topk_lsh(
     corpus: DataFrame,
     queries: DataFrame,
@@ -1180,8 +1055,6 @@ def cosine_topk_lsh(
     num_tables: int = 8,
     planes_per_table: int = 5,
     dim: int = 64,
-    seed: int = 42,
-    plane_mode: str = "gaussian",
 ) -> DataFrame:
     """Approximate top-k: multi-table random-hyperplane LSH generates
     candidates (union over tables), exact cosine re-ranks them.
@@ -1190,29 +1063,21 @@ def cosine_topk_lsh(
     corpus's similarity profile (more tables → recall↑ candidates↑).
     At 100 TB the (table, bucket) join replaces the full corpus scan
     per query; buckets partition evenly because hyperplane signs are
-    balanced. ``plane_mode='md5'``: integer-exact ±1 signatures a SQL
-    oracle replays (see :func:`_md5_bucket_signatures`)."""
-    planes, signature = _resolve_planes(
-        plane_mode, num_tables, planes_per_table, dim, seed
-    )
+    balanced. The signatures are integer-exact ±1 planes a SQL oracle
+    replays (see :func:`_md5_bucket_signatures`)."""
+    signature = _md5_bucket_signatures(num_tables, planes_per_table, dim)
     q = lsh_table_buckets(
         queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv")),
         "query_id",
         "qv",
-        planes,
-        num_tables,
-        planes_per_table,
+        signature,
         spread=False,
-        signature=signature,
     )
     c = lsh_table_buckets(
         corpus.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cv")),
         "neighbor_id",
         "cv",
-        planes,
-        num_tables,
-        planes_per_table,
-        signature=signature,
+        signature,
     )
     qn = with_norm(q, "qv").withColumnRenamed("_norm", "qn")
     cn = with_norm(c, "cv").withColumnRenamed("_norm", "cn")
@@ -1244,40 +1109,29 @@ def cosine_topk_lsh(
 
 
 def _pq_context(
-    corpus: DataFrame,
-    vec_col: str,
+    train_X: np.ndarray,
     m: int,
     codebook_size: int,
     seed: int,
     max_iter: int,
     dim: int | None = None,
-    train_sample: int = 1 << 16,
-    train_X: np.ndarray | None = None,
-    rotate: bool = False,
 ):
-    """Train the shared PQ codebook and return the column builders the
-    PQ variants compose: ``codes_udf`` (Arrow-batched argmin encode),
-    ``lut_udf`` (per-query lookup table), ``adc_score`` (sum of ``m``
-    LUT lookups for a (codes, lut) pair — a static, lambda-free
-    expression that participates in whole-stage codegen).
-
-    The codebook is fit driver-side on a bounded sample
-    (:func:`_train_vectors`, or a caller-provided ``train_X`` to share
-    one collect across quantizers) — one small job instead of an MLlib
-    fit whose per-iteration scheduling cost dwarfs the math. ``dim``
-    defaults to the sample's width; pass it to assert an expectation.
+    """Train the shared OPQ-rotated PQ codebook on the driver-side
+    sample ``train_X`` (collected once by the caller and shared with
+    the cell trainer) and return ``(codebook, codes_udf, lut_udf)``:
+    the Arrow-batched argmin encode and the per-query lookup table.
+    One small fit instead of an MLlib fit whose per-iteration
+    scheduling cost dwarfs the math. ``dim`` defaults to the sample's
+    width; pass it to assert an expectation.
 
     Encode and LUT are pandas UDFs, not higher-order-function
     expressions, for the same measured reason as
-    :func:`_all_bucket_signatures`: the pure-expression encode is
+    :func:`_md5_bucket_signatures`: the pure-expression encode is
     m × codebook_size nested lambda folds evaluated interpreted per
     row (plus a per-element norm recompute inside the normalize
     lambda) — ~15 s for 2k × 64-dim vectors vs milliseconds for one
     (n·m, sub) @ (sub, k) matmul per Arrow batch. The codebook rides
     the closure (a few KB), not a crossJoined relation."""
-    if train_X is None:
-        # an empty corpus raises _train_vectors' ValueError directly
-        train_X = _train_vectors(corpus, vec_col, train_sample)
     if dim is None:
         dim = train_X.shape[1]
     elif dim != train_X.shape[1]:
@@ -1288,18 +1142,17 @@ def _pq_context(
     sub = dim // m
 
     # ONE shared-codebook fit over all pooled m·n subvector slices of
-    # the (unit-normalized) training sample; reshape(-1, sub) lays the
-    # m slices of each row out consecutively — same pooling an
-    # explode would produce. Cap the pooled set so the Lloyd distance
-    # matrix stays small even at the full train_sample.
-    # optional OPQ rotation (``rotate=True``): decorrelate + balance
-    # variance across the m subspaces BEFORE pooling, so the shared
-    # codebook trains on the same geometry the encode path will see
-    # fully deterministic from the training sample (mean/cov/eigh +
-    # greedy allocation) — deliberately NOT seed-controlled
-    R = _opq_rotation(train_X, m) if rotate else None
-    rotated = _unit_np(train_X) @ R if R is not None else _unit_np(train_X)
-    pooled = rotated.reshape(-1, sub)
+    # the rotated unit-normalized training sample; reshape(-1, sub)
+    # lays the m slices of each row out consecutively — same pooling
+    # an explode would produce. Cap the pooled set so the Lloyd
+    # distance matrix stays small even at the full train_sample.
+    # The OPQ rotation decorrelates + balances variance across the m
+    # subspaces BEFORE pooling, so the shared codebook trains on the
+    # same geometry the encode path will see; it is fully
+    # deterministic from the training sample (mean/cov/eigh + greedy
+    # allocation) — deliberately NOT seed-controlled
+    R = _opq_rotation(train_X, m)
+    pooled = (_unit_np(train_X) @ R).reshape(-1, sub)
     pool_cap = 1 << 17
     if len(pooled) > pool_cap:
         idx = np.random.RandomState(seed).choice(
@@ -1307,26 +1160,29 @@ def _pq_context(
         )
         pooled = pooled[idx]
     codebook = _kmeans_np(pooled, codebook_size, seed, max_iter)
-    codes_udf = _pq_codes_udf(codebook, m, sub, R)
-    lut_udf = _pq_lut_udf(codebook, m, sub, R)
+    return (
+        codebook,
+        _pq_codes_udf(codebook, m, sub, R),
+        _pq_lut_udf(codebook, m, sub, R),
+    )
 
-    def adc_score(codes_col, lut_colname):
-        # unrolled, lambda-free: m element_at adds — whole-stage
-        # codegen keeps the per-pair hot loop JVM-compiled (this runs
-        # once per candidate pair, the widest relation in the plan)
-        terms = [
-            F.element_at(
-                F.col(lut_colname),
-                F.lit(j * codebook_size + 1) + F.element_at(codes_col, j + 1),
-            )
-            for j in range(m)
-        ]
-        total = terms[0]
-        for t in terms[1:]:
-            total = total + t
-        return total
 
-    return codebook, codes_udf, lut_udf, adc_score, R
+def _adc_score(codes_col, lut_col, m: int, codebook_size: int):
+    """The ADC score of a (codes, lut) pair: the sum of ``m`` LUT
+    lookups, unrolled and lambda-free — whole-stage codegen keeps the
+    per-pair hot loop JVM-compiled (this runs once per candidate pair,
+    the widest relation in the plan)."""
+    terms = [
+        F.element_at(
+            F.col(lut_col),
+            F.lit(j * codebook_size + 1) + F.element_at(codes_col, j + 1),
+        )
+        for j in range(m)
+    ]
+    total = terms[0]
+    for t in terms[1:]:
+        total = total + t
+    return total
 
 
 def _adc_shortlist_rerank(
@@ -1401,13 +1257,11 @@ def cosine_topk_pq(
     id_col: str = "vec_id",
     m: int = 8,
     codebook_size: int = 64,
-    seed: int = 42,
     max_iter: int = 5,
     shortlist_factor: int = 10,
     dim: int | None = None,
     train_sample: int = 1 << 16,
     rotate: bool = False,
-    quant_mode: str = "float",
 ) -> DataFrame:
     """Product-quantization ANN with ADC (asymmetric distance
     computation) scoring: the corpus is stored as ``m`` small codes
@@ -1420,36 +1274,29 @@ def cosine_topk_pq(
     Spark-first construction, no ML-model state on executors: one
     shared-codebook k-means over all pooled subvector slices of a
     bounded driver-side sample (a single fit instead of ``m`` — a
-    standard PQ simplification; see :func:`_train_vectors`); the
-    codebook rides the UDF closure (a few KB); encode/LUT are
-    Arrow-batched matmuls and the per-pair ADC score is a lambda-free
-    codegen-able sum — no ML model call at scoring time, no per-row
-    Python in the pair loop. The 100 TB win: the
-    corpus side of the score join carries 8-byte code arrays, not
+    standard PQ simplification; see :func:`_train_vectors_by_id`),
+    md5-seeded integer Lloyd (:func:`_pq_int_context`) so a SQL oracle
+    replays training, encoding and the shortlist; ``rotate=True``
+    pre-rotates with the ±1 Walsh-Hadamard matrix
+    (:func:`_hpq_int_context`). The codebook rides the UDF closure (a
+    few KB); encode/LUT are Arrow-batched matmuls and the per-pair ADC
+    score is a lambda-free codegen-able sum — no ML model call at
+    scoring time, no per-row Python in the pair loop. The 100 TB win:
+    the corpus side of the score join carries 8-byte code arrays, not
     256-byte float vectors (codes for 1e9×64-dim fit in ~8 GB).
 
     Brute ADC over all (query, candidate) pairs — see
     :func:`cosine_topk_ivfpq` for the cell-pruned composition.
-    Approximate by design (rows-only; recall floor pinned in
+    Approximate by design (recall floor pinned in
     tests/test_llm_similarity.py).
     """
     from .text import spread_small_input
 
-    if quant_mode == "md5":
-        # rotate in md5 mode = the Hadamard structured rotation (the
-        # integer-exact answer to OPQ's libm eigendecomposition)
-        ctx = _hpq_int_context if rotate else _pq_int_context
-        _, codes_udf, lut_udf, adc_score, _R = ctx(
-            corpus, vec_col, id_col, m, codebook_size, max_iter,
-            dim=dim, train_sample=train_sample,
-        )
-    elif quant_mode == "float":
-        _, codes_udf, lut_udf, adc_score, _R = _pq_context(
-            corpus, vec_col, m, codebook_size, seed, max_iter, dim=dim,
-            train_sample=train_sample, rotate=rotate,
-        )
-    else:
-        raise ValueError(f"unknown quant_mode {quant_mode!r}")
+    ctx = _hpq_int_context if rotate else _pq_int_context
+    _, codes_udf, lut_udf = ctx(
+        corpus, vec_col, id_col, m, codebook_size, max_iter,
+        dim=dim, train_sample=train_sample,
+    )
     coded = spread_small_input(
         corpus.select(
             F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cv")
@@ -1465,7 +1312,9 @@ def cosine_topk_pq(
         .select(
             "query_id",
             "neighbor_id",
-            adc_score(F.col("codes"), "lut").alias("adc_score"),
+            _adc_score(F.col("codes"), "lut", m, codebook_size).alias(
+                "adc_score"
+            ),
         )
     )
     return _adc_shortlist_rerank(
@@ -1489,7 +1338,6 @@ def cosine_topk_ivfpq(
     dim: int | None = None,
     train_sample: int = 1 << 16,
     rotate: bool = False,
-    quant_mode: str = "float",
 ) -> DataFrame:
     """IVF + PQ — the canonical billion-scale ANN pipeline, composed
     from this module's two halves:
@@ -1512,16 +1360,31 @@ def cosine_topk_ivfpq(
     design (recall floor pinned in tests/test_llm_similarity.py);
     recall knobs: ``nprobe`` (cell coverage) × ``shortlist_factor``
     (rank depth).
+
+    Unrotated, both quantizers are md5-seeded integer Lloyd on one
+    fixed-point grid (:func:`_pq_int_context`, :func:`_kmeans_int`),
+    so a SQL oracle replays the whole compose. ``rotate=True`` is OPQ
+    (:func:`_opq_rotation`): float quantizers seeded by ``seed``, since
+    the learned rotation is an eigendecomposition no SQL replays.
     """
     from .text import spread_small_input
 
-    if quant_mode == "md5":
-        if rotate:
-            raise ValueError("rotate (OPQ) has no md5-int mode — eigh is libm")
+    if rotate:
+        train_X = _train_vectors(corpus, vec_col, train_sample)
+        _, codes_udf, lut_udf = _pq_context(
+            train_X, m, codebook_size, seed, max_iter, dim=dim
+        )
+        # IVF cells on the unit vectors (cosine geometry)
+        centers = _kmeans_np(
+            _unit_np(train_X), num_centroids, seed, max_iter
+        )
+        cell_udf = _ivf_cell_udf(centers)
+        probe_col = _probe_cells(F.col("qv"), centers, nprobe)
+    else:
         ids, X = _train_vectors_by_id(
             corpus, vec_col, id_col, train_sample
         )
-        _, codes_udf, lut_udf, adc_score, _R = _pq_int_context(
+        _, codes_udf, lut_udf = _pq_int_context(
             corpus, vec_col, id_col, m, codebook_size, max_iter,
             dim=dim, train_sample=train_sample, train_data=(ids, X),
         )
@@ -1532,20 +1395,9 @@ def cosine_topk_ivfpq(
             _quantize_np(_unit_seq_np(X)), keys, num_centroids, max_iter
         )
         cell_udf = _ivf_cell_int_udf(centers, normalize=True)
-    elif quant_mode == "float":
-        train_X = _train_vectors(corpus, vec_col, train_sample)
-        _, codes_udf, lut_udf, adc_score, _R = _pq_context(
-            corpus, vec_col, m, codebook_size, seed, max_iter, dim=dim,
-            train_X=train_X, rotate=rotate,
+        probe_col = _ivf_probe_int_udf(centers, nprobe, normalize=True)(
+            F.col("qv")
         )
-
-        # IVF cells on the unit vectors (cosine geometry)
-        centers = _kmeans_np(
-            _unit_np(train_X), num_centroids, seed, max_iter
-        )
-        cell_udf = _ivf_cell_udf(centers, normalize=True)
-    else:
-        raise ValueError(f"unknown quant_mode {quant_mode!r}")
 
     # corpus side: Arrow-batched cell assignment + PQ codes in ONE pass
     # over the corpus (both UDFs run in the same ArrowEvalPython stage)
@@ -1562,16 +1414,8 @@ def cosine_topk_ivfpq(
         codes_udf(F.col("cv")).alias("codes"),
     )
 
-    # query side: nprobe nearest cells (adaptive probe in unit space —
-    # cell geometry is cosine) + the ADC LUT, in one pass
-    if quant_mode == "md5":
-        probe_col = _ivf_probe_int_udf(centers, nprobe, normalize=True)(
-            F.col("qv")
-        )
-    else:
-        probe_col = _probe_cells(
-            F.col("qv"), centers, nprobe, normalize=True
-        )
+    # query side: nprobe nearest cells (probed in unit space — cell
+    # geometry is cosine) + the ADC LUT, in one pass
     probes = (
         queries.select(
             F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv")
@@ -1588,7 +1432,9 @@ def cosine_topk_ivfpq(
         .select(
             "query_id",
             "neighbor_id",
-            adc_score(F.col("codes"), "lut").alias("adc_score"),
+            _adc_score(F.col("codes"), "lut", m, codebook_size).alias(
+                "adc_score"
+            ),
         )
     )
     return _adc_shortlist_rerank(

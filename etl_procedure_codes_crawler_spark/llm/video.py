@@ -47,8 +47,8 @@ from .multimodal import (
     MEDIA_SCHEMA,
     MP4_KEYFRAME_EVERY,
     _mp4_sample_sizes,
-    _PHASH_METHODS,
     build_mp4_samples,
+    dhash64,
     parse_mp4,
     sample_file_offsets,
 )
@@ -190,26 +190,19 @@ VIDEO_KF_HASH_SCHEMA = StructType(
 )
 
 
-def video_keyframe_hashes(
-    media: DataFrame, method: str = "dhash"
-) -> DataFrame:
+def video_keyframe_hashes(media: DataFrame) -> DataFrame:
     """(media_id, sample_no, width, height, phash, decode_error) for
     every KEYFRAME of every parseable container: parse the sample
     table, locate each keyframe's bytes with the REAL demuxer walk
     (multimodal.sample_file_offsets — stsc runs expanded over the
     stco chunk list, so multi-chunk layouts read the right bytes,
     not chunk-1-anchored guesses), slice the JPEG out of the mdat,
-    decode it with the real decoder (llm/jpeg.py) and dHash/aHash
+    decode it with the real decoder (llm/jpeg.py) and dHash
     the pixels — all in ONE Arrow pass, so video bytes never
     re-enter the plan. Undecodable samples flow as error rows (NULL
     phash + decode_error); unparseable containers contribute no rows
     (their error is mp4_container_stats' job, the manifest
     contract)."""
-    if method not in _PHASH_METHODS:
-        raise ValueError(
-            f"unknown method {method!r}; pick from {sorted(_PHASH_METHODS)}"
-        )
-    hasher = _PHASH_METHODS[method]
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         from .jpeg import decode_jpeg
@@ -240,7 +233,7 @@ def video_keyframe_hashes(
                         try:
                             fw, fh, fc, pix = decode_jpeg(blob)
                             w, h = fw, fh
-                            phash = hasher(pix, fw, fh, fc)
+                            phash = dhash64(pix, fw, fh, fc)
                         except NotImplementedError:
                             raise  # missing codec: loud, not a data error
                         except Exception as exc:  # noqa: BLE001
@@ -432,7 +425,7 @@ VIDEO_FRAME_HASH_SCHEMA = StructType(
 )
 
 
-def video_frame_hashes(media: DataFrame, method: str = "dhash") -> DataFrame:
+def video_frame_hashes(media: DataFrame) -> DataFrame:
     """(media_id, sample_no, is_sync, width, height, phash,
     decode_error) for EVERY sample of every parseable container — the
     all-frame twin of :func:`video_keyframe_hashes`: walk the sample
@@ -452,11 +445,6 @@ def video_frame_hashes(media: DataFrame, method: str = "dhash") -> DataFrame:
     input video_near_dup_pairs consumes."""
     import struct
 
-    if method not in _PHASH_METHODS:
-        raise ValueError(
-            f"unknown method {method!r}; pick from {sorted(_PHASH_METHODS)}"
-        )
-    hasher = _PHASH_METHODS[method]
     hdr = len(DELTA_MAGIC) + 4
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -541,7 +529,7 @@ def video_frame_hashes(media: DataFrame, method: str = "dhash") -> DataFrame:
                             w, h = rdims
                             emit(
                                 media_id, no, sync, w, h,
-                                hasher(recon.tobytes(), w, h, 1), None,
+                                dhash64(recon.tobytes(), w, h, 1), None,
                             )
                         except NotImplementedError:
                             raise  # missing codec: loud, not a data error
@@ -574,7 +562,7 @@ CLIP_IDENTITY_SCHEMA = StructType(
 
 
 def _clip_identity_batches(
-    batches: Iterator[pd.DataFrame], hasher
+    batches: Iterator[pd.DataFrame],
 ) -> Iterator[pd.DataFrame]:
     """The clip-identity pass as a plain batch generator, run fused
     behind the synthesis pass by clip_identity_from_documents."""
@@ -608,7 +596,7 @@ def _clip_identity_batches(
                         )
                         n_kf += 1
                         if first is None:
-                            first = hasher(pix, fw, fh, fc)
+                            first = dhash64(pix, fw, fh, fc)
                 if n_kf == 0:
                     raise ValueError("no keyframes: no identity")
                 phash = first
@@ -632,7 +620,6 @@ def clip_identity_from_documents(
     max_frames: int = VIDEO_MAX_FRAMES,
     corrupt_container_every: int = VIDEO_CORRUPT_CONTAINER_EVERY,
     corrupt_sample_every: int = VIDEO_CORRUPT_SAMPLE_EVERY,
-    method: str = "dhash",
 ) -> DataFrame:
     """FUSED synthesis + identity (round 13, guide §4.1): composing
     :func:`_mjpeg_synth_batches` and :func:`_clip_identity_batches`
@@ -640,19 +627,13 @@ def clip_identity_from_documents(
     crossing the Python↔JVM boundary — a two-operator form would
     pipeline in one Spark stage but still Arrow-serialize every
     payload out of the synth pass and back into the identity pass."""
-    if method not in _PHASH_METHODS:
-        raise ValueError(
-            f"unknown method {method!r}; pick from {sorted(_PHASH_METHODS)}"
-        )
-    hasher = _PHASH_METHODS[method]
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         return _clip_identity_batches(
             _mjpeg_synth_batches(
                 batches, width, max_frames,
                 corrupt_container_every, corrupt_sample_every,
-            ),
-            hasher,
+            )
         )
 
     return documents.select("doc_id", "text", "source").mapInPandas(

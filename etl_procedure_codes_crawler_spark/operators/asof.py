@@ -1,9 +1,8 @@
 """As-of (nearest-timestamp) join — a custom operator Spark lacks.
 
 Semantics: for every left row, attach the right row with the greatest
-``right_ts <= left_ts`` (direction="backward", inclusive) or the
-smallest ``right_ts >= left_ts`` ("forward") for the same key —
-DuckDB's ``ASOF JOIN`` / pandas ``merge_asof``.
+``right_ts <= left_ts`` (backward, inclusive) for the same key —
+DuckDB's ``ASOF JOIN`` / pandas ``merge_asof`` defaults.
 
 Scale-first implementation: NOT a range-condition join (a non-equi
 join degenerates to a per-key cross product that explodes on hot
@@ -29,8 +28,6 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructField, StructType
 
-from ..functions.timestamps import epoch_micros
-
 
 def asof_join(
     left: DataFrame,
@@ -39,17 +36,9 @@ def asof_join(
     left_ts: str = "ts",
     right_ts: str | None = None,
     prefix: str = "right_",
-    direction: str = "backward",
-    tolerance_seconds: float | None = None,
 ) -> DataFrame:
     """Left as-of join; right columns (other than keys) come back
-    ``prefix``-renamed, NULL where no row qualifies.
-
-    ``tolerance_seconds`` nulls out matches farther than the tolerance
-    from the left timestamp (pandas ``merge_asof(tolerance=...)``).
-    """
-    if direction not in ("backward", "forward"):
-        raise ValueError(f"direction must be backward|forward, got {direction!r}")
+    ``prefix``-renamed, NULL where no row qualifies."""
     keys = [on] if isinstance(on, str) else list(on)
     right_ts = right_ts or left_ts
     payload_cols = [c for c in right.columns if c not in keys]
@@ -74,13 +63,10 @@ def asof_join(
     )
     unioned = left_tagged.unionByName(right_tagged)
 
-    # backward: ascending ts, right-before-left at equal ts, look back.
-    # forward: descending ts — "preceding" rows then hold ts >= current,
-    # and last() picks the closest (smallest) qualifying right ts.
-    ts_order = F.col("_ts").asc() if direction == "backward" else F.col("_ts").desc()
+    # ascending ts, right-before-left at equal ts, look back
     w = (
         Window.partitionBy(*keys)
-        .orderBy(ts_order, F.col("_is_left").asc())
+        .orderBy(F.col("_ts").asc(), F.col("_is_left").asc())
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
     matched = unioned.select(
@@ -90,18 +76,6 @@ def asof_join(
         *left_cols,
         F.last("_rpay", ignorenulls=True).over(w).alias("_rpay"),
     ).filter(F.col("_is_left") == 1)
-
-    if tolerance_seconds is not None:
-        tol_us = int(tolerance_seconds * 1_000_000)
-        matched_ts = F.col("_rpay").getField(right_ts)
-        gap = (
-            epoch_micros(F.col("_ts")) - epoch_micros(matched_ts)
-            if direction == "backward"
-            else epoch_micros(matched_ts) - epoch_micros(F.col("_ts"))
-        )
-        matched = matched.withColumn(
-            "_rpay", F.when(gap <= tol_us, F.col("_rpay"))
-        )
 
     return matched.select(
         *keys,

@@ -28,6 +28,7 @@ from pyspark.sql.types import StructType
 
 from ..llm import drift as DR
 from ..sinks.parquet import write_idempotent_run
+from .incremental import start_file_stream
 
 
 def build_token_reference(
@@ -45,7 +46,6 @@ def stream_token_drift(
     metrics_path: str,
     checkpoint_dir: str,
     text_col: str = "text",
-    available_now: bool = True,
     max_files_per_trigger: int | None = None,
 ):
     """Monitor arriving document files against the persisted
@@ -65,16 +65,10 @@ def stream_token_drift(
         )
         write_idempotent_run(metric, metrics_path, run_id=str(batch_id))
 
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(source_dir)
-    writer = stream.writeStream.foreachBatch(_sink).option(
-        "checkpointLocation", checkpoint_dir
+    return start_file_stream(
+        spark, schema, source_dir, checkpoint_dir, _sink,
+        max_files_per_trigger,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 # ---------------------------------------------------------------------------
@@ -114,7 +108,6 @@ def stream_chi_square_counts(
     counts_path: str,
     checkpoint_dir: str,
     text_col: str = "text",
-    available_now: bool = True,
     max_files_per_trigger: int | None = None,
 ):
     """Accumulate the CURRENT snapshot's per-source token totals, one
@@ -132,16 +125,10 @@ def stream_chi_square_counts(
         )
         write_idempotent_run(counts, counts_path, run_id=str(batch_id))
 
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(source_dir)
-    writer = stream.writeStream.foreachBatch(_sink).option(
-        "checkpointLocation", checkpoint_dir
+    return start_file_stream(
+        spark, schema, source_dir, checkpoint_dir, _sink,
+        max_files_per_trigger,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def chi_square_report(

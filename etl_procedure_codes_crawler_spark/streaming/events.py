@@ -120,53 +120,6 @@ def hourly_event_counts(
     )
 
 
-def sliding_value_averages(
-    events: DataFrame, watermark: str = "2 hours"
-) -> DataFrame:
-    """30-minute slide over 1-hour windows — overlapping windows, the
-    other standard windowed-agg shape."""
-    return (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", "1 hour", "30 minutes").alias("w"), "event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            (
-                F.sum(F.col("value").cast("decimal(18,2)")).cast("double")
-                / F.count(F.lit(1))
-            ).alias("avg_value"),
-        )
-        .select(
-            F.col("w.start").alias("window_start"),
-            "event_type",
-            "n_events",
-            "avg_value",
-        )
-    )
-
-
-def user_session_windows(
-    events: DataFrame, gap: str = "30 minutes", watermark: str = "2 hours"
-) -> DataFrame:
-    """Sessionization with a dynamic session_window (gap-based) —
-    custom stateful semantics expressed declaratively; state is bounded
-    by the watermark, no applyInPandasWithState needed."""
-    return (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.session_window("ts", gap).alias("s"), "user_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.min("ts").alias("first_event"),
-            F.max("ts").alias("last_event"),
-        )
-        .select(
-            "user_id",
-            F.col("s.start").alias("session_start"),
-            F.col("s.end").alias("session_end"),
-            "n_events",
-        )
-    )
-
-
 def run_to_memory(
     stream_df: DataFrame, name: str, timeout_sec: int = 60
 ):

@@ -76,6 +76,58 @@ def _stream_gate_id(spark: SparkSession, checkpoint_dir: str) -> str:
     return str(_json.loads("".join(chunks))["id"])
 
 
+#: shuffle width of the ingest gates' sink bodies: their exchanges are
+#: BATCH-sized (hash relations, per-source aggregates), not
+#: corpus-sized, so at a wide session default (e.g. 32+ for the corpus
+#: queries) each tiny exchange pays pure task-scheduling latency. AQE
+#: still coalesces below it.
+GATE_SHUFFLE_PARTITIONS = 8
+
+
+def narrow_shuffle(spark: SparkSession):
+    """Decorate a ``foreachBatch`` sink to run under
+    :data:`GATE_SHUFFLE_PARTITIONS`, restoring the session's setting
+    after each batch."""
+
+    def wrap(body):
+        def sink(batch: DataFrame, batch_id: int) -> None:
+            prev = spark.conf.get("spark.sql.shuffle.partitions")
+            spark.conf.set(
+                "spark.sql.shuffle.partitions", str(GATE_SHUFFLE_PARTITIONS)
+            )
+            try:
+                body(batch, batch_id)
+            finally:
+                spark.conf.set("spark.sql.shuffle.partitions", prev)
+
+        return sink
+
+    return wrap
+
+
+def start_file_stream(
+    spark: SparkSession,
+    schema: StructType,
+    source_dir: str,
+    checkpoint_dir: str,
+    sink,
+    max_files_per_trigger: int | None = None,
+):
+    """Start ``sink`` over the parquet files in ``source_dir`` as a
+    ``foreachBatch`` stream that processes every file present and
+    stops (``availableNow``); returns the StreamingQuery handle."""
+    reader = spark.readStream.schema(schema)
+    if max_files_per_trigger is not None:
+        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
+    return (
+        reader.parquet(source_dir)
+        .writeStream.foreachBatch(sink)
+        .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
+    )
+
+
 def read_consumed_tokens(
     spark: SparkSession,
     stats_path: str,
@@ -170,19 +222,12 @@ def stream_ingest_media_neardup(
     checkpoint_dir: str,
     max_hamming: int = 3,
     id_col: str = "media_id",
-    hasher=None,
-    available_now: bool = True,
     max_files_per_trigger: int | None = None,
-    neardup_action: str = "reject",
-    gate_shuffle_partitions: int | None = None,
 ):
-    """The MEDIA ingest gate: perceptual near-dup dedup for
-    image/audio payloads at the corpus front door. Each batch is
-    (1) id-deduped against the warehouse (replay safety), (2) decoded
-    + perceptually hashed in ONE Arrow pass (``hasher`` maps a media
-    frame to (media_id, phash, ...) — default
-    :func:`..llm.multimodal.image_hashes`; pass
-    ``audio_fingerprints``-based hashers for audio corpora),
+    """The MEDIA ingest gate: perceptual near-dup dedup for image
+    payloads at the corpus front door. Each batch is (1) id-deduped
+    against the warehouse (replay safety), (2) decoded + perceptually
+    hashed in ONE Arrow pass (:func:`..llm.multimodal.image_hashes`),
     (3) collapsed WITHIN the batch (the greater id of any pair within
     ``max_hamming`` drops — a crawl burst carrying one image under
     many URLs), (4) gated against the persisted phash store (a
@@ -198,50 +243,14 @@ def stream_ingest_media_neardup(
     objects the warehouse already holds are offered to the store
     before any gating), store append BEFORE warehouse append
     (over-approximation only ever rejects a would-be duplicate
-    earlier), id anti-join makes replays no-ops.
-
-    ``neardup_action="label"``:
-    perceptual copies are ADMITTED and the observed pairs (intra-batch
-    + vs-store) land in the phash store's incremental cluster labels
-    (the :mod:`..llm.neardup_store` edge-log/label machinery is
-    store-layout-agnostic), so per-cluster survivor selection runs at
-    serving time off persisted ``(id, cluster_id)`` rows — e.g. keep
-    the highest-resolution copy of each image cluster rather than
-    whichever URL was crawled first.
-
-    ``gate_shuffle_partitions``: the gate's exchanges are BATCH-sized
-    (64-bit hash rows), not corpus-sized — on a wide session default
-    (e.g. 32+ for the corpus queries) each tiny exchange pays pure
-    task-scheduling latency. When set, the sink body runs under this
-    shuffle width (restored after each batch); AQE still coalesces
-    below it. Leave None to inherit the session setting."""
-    if neardup_action not in ("reject", "label"):
-        raise ValueError(
-            f"neardup_action must be 'reject' or 'label', got "
-            f"{neardup_action!r}"
-        )
+    earlier), id anti-join makes replays no-ops. The sink body runs at
+    :data:`GATE_SHUFFLE_PARTITIONS`."""
     from ..llm import multimodal as MM
     from ..llm import phash_store as PS
     from ..llm.dedup import hamming_band_pairs
-    from ..llm.neardup_store import update_cluster_labels
 
-    hash_fn = hasher if hasher is not None else MM.image_hashes
-
+    @narrow_shuffle(spark)
     def _sink(batch: DataFrame, batch_id: int) -> None:
-        if gate_shuffle_partitions is not None:
-            prev = spark.conf.get("spark.sql.shuffle.partitions")
-            spark.conf.set(
-                "spark.sql.shuffle.partitions",
-                str(int(gate_shuffle_partitions)),
-            )
-            try:
-                _gate_body(batch)
-            finally:
-                spark.conf.set("spark.sql.shuffle.partitions", prev)
-        else:
-            _gate_body(batch)
-
-    def _gate_body(batch: DataFrame) -> None:
         # decode + hash FIRST: the whole gate then runs on the 4-column
         # hash relation, and the payload bytes are only read once more
         # at the final warehouse append (semi-join against accepted
@@ -254,7 +263,7 @@ def stream_ingest_media_neardup(
         # them costs no second decode.
         raw = batch.filter(F.col(id_col).isNotNull())
         hashes_all = (
-            hash_fn(raw)
+            MM.image_hashes(raw)
             .dropDuplicates([id_col])
             .localCheckpoint(eager=True)  # small: ids + 64-bit hashes
         )
@@ -290,39 +299,22 @@ def stream_ingest_media_neardup(
             id_col,
             max_hamming=max_hamming,
         )
-        if neardup_action == "label":
-            # admit everything; record the observed pair structure as
-            # cluster edges BEFORE the warehouse append (a crash
-            # between replays into duplicate edges, never lost ones)
-            store_pairs = PS.near_dups_against_phash_store(
-                spark, store_path, hashes, max_hamming, id_col=id_col
-            ).select(
-                F.col("new_id").alias("doc_a"),
-                F.col("existing_id").alias("doc_b"),
+        # intra-batch collapse: drop the greater id of any pair
+        intra_losers = (
+            intra_pairs.select(F.col("doc_b").alias(id_col)).distinct()
+        )
+        survivors_h = hashes.join(intra_losers, id_col, "left_anti")
+        # store gate: reject anything perceptually held already
+        near = (
+            PS.near_dups_against_phash_store(
+                spark, store_path, survivors_h, max_hamming, id_col=id_col
             )
-            update_cluster_labels(
-                spark,
-                store_path,
-                intra_pairs.select("doc_a", "doc_b").unionByName(store_pairs),
-            )
-            accepted_ids = hashes.select(id_col)
-        else:
-            # intra-batch collapse: drop the greater id of any pair
-            intra_losers = (
-                intra_pairs.select(F.col("doc_b").alias(id_col)).distinct()
-            )
-            survivors_h = hashes.join(intra_losers, id_col, "left_anti")
-            # store gate: reject anything perceptually held already
-            near = (
-                PS.near_dups_against_phash_store(
-                    spark, store_path, survivors_h, max_hamming, id_col=id_col
-                )
-                .select(F.col("new_id").alias(id_col))
-                .distinct()
-            )
-            accepted_ids = survivors_h.select(id_col).join(
-                near, id_col, "left_anti"
-            )
+            .select(F.col("new_id").alias(id_col))
+            .distinct()
+        )
+        accepted_ids = survivors_h.select(id_col).join(
+            near, id_col, "left_anti"
+        )
         accepted_ids = accepted_ids.localCheckpoint(eager=True)
         if accepted_ids.isEmpty():
             return
@@ -343,16 +335,10 @@ def stream_ingest_media_neardup(
             "compression", "snappy"
         ).parquet(warehouse_path)
 
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(source_dir)
-    writer = stream.writeStream.foreachBatch(_sink).option(
-        "checkpointLocation", checkpoint_dir
+    return start_file_stream(
+        spark, schema, source_dir, checkpoint_dir, _sink,
+        max_files_per_trigger,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def stream_ingest_with_boilerplate(
@@ -365,7 +351,6 @@ def stream_ingest_with_boilerplate(
     min_doc_freq: int = 50,
     text_col: str = "text",
     id_col: str = "doc_id",
-    available_now: bool = True,
     max_files_per_trigger: int | None = None,
 ):
     """Passage-frequency-aware ingest: boilerplate is stripped AT
@@ -471,13 +456,7 @@ def stream_ingest_with_boilerplate(
             "compression", "snappy"
         ).parquet(warehouse_path)
 
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(source_dir)
-    writer = stream.writeStream.foreachBatch(_sink).option(
-        "checkpointLocation", checkpoint_dir
+    return start_file_stream(
+        spark, schema, source_dir, checkpoint_dir, _sink,
+        max_files_per_trigger,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

@@ -28,6 +28,7 @@ from pyspark.sql.types import StructType
 
 from ..llm import blocklist as BL
 from ..sinks.parquet import write_idempotent_run
+from .incremental import start_file_stream
 
 
 def stream_blocklist_scan(
@@ -39,7 +40,6 @@ def stream_blocklist_scan(
     checkpoint_dir: str,
     text_col: str = "text",
     id_col: str = "doc_id",
-    available_now: bool = True,
     max_files_per_trigger: int | None = None,
 ):
     """Scan every arriving document against the fixed blocklist; one
@@ -56,13 +56,7 @@ def stream_blocklist_scan(
         )
         write_idempotent_run(rows, results_path, run_id=str(batch_id))
 
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(source_dir)
-    writer = stream.writeStream.foreachBatch(_sink).option(
-        "checkpointLocation", checkpoint_dir
+    return start_file_stream(
+        spark, schema, source_dir, checkpoint_dir, _sink,
+        max_files_per_trigger,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

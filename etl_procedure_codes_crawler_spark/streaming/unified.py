@@ -75,7 +75,9 @@ from ..sources.parquet import read_table_or_empty
 from .incremental import (
     _stream_gate_id,
     budget_filter,
+    narrow_shuffle,
     read_consumed_tokens,
+    start_file_stream,
 )
 
 #: media-view geometry shared with the SQL oracle: the PNG carries the
@@ -276,38 +278,20 @@ def stream_ingest_unified(
     id_col: str = "doc_id",
     text_col: str = "text",
     source_col: str = "source",
-    available_now: bool = True,
     max_files_per_trigger: int | None = None,
-    gate_shuffle_partitions: int | None = None,
 ):
     """Run the five-gate admission pipeline over arriving document
     files. Call :func:`create_unified_stores` on ``stores_root``
     first. Returns the StreamingQuery handle; read the per-batch
-    per-source funnel with :func:`unified_attrition_report`.
-
-    ``gate_shuffle_partitions``: the sink's ~15 exchanges are all
-    BATCH-sized (hash relations, per-source aggregates) — on a wide
-    session default each one pays pure task-scheduling latency; when
-    set, the sink body runs under this shuffle width (restored after
-    each batch), the same knob as the media gate."""
+    per-source funnel with :func:`unified_attrition_report`. The
+    sink's ~15 exchanges are all batch-sized, so its body runs at
+    :data:`.incremental.GATE_SHUFFLE_PARTITIONS`, like the media
+    gate's."""
     paths = unified_store_paths(stores_root)
     gate_cache: dict[str, str] = {}
 
+    @narrow_shuffle(spark)
     def _sink(batch: DataFrame, batch_id: int) -> None:
-        if gate_shuffle_partitions is not None:
-            prev = spark.conf.get("spark.sql.shuffle.partitions")
-            spark.conf.set(
-                "spark.sql.shuffle.partitions",
-                str(int(gate_shuffle_partitions)),
-            )
-            try:
-                _gate_body(batch, batch_id)
-            finally:
-                spark.conf.set("spark.sql.shuffle.partitions", prev)
-        else:
-            _gate_body(batch, batch_id)
-
-    def _gate_body(batch: DataFrame, batch_id: int) -> None:
         from ..sinks.fsutil import hadoop_fs
 
         if "id" not in gate_cache:
@@ -673,16 +657,10 @@ def stream_ingest_unified(
             ).parquet(warehouse_path)
         spark.sparkContext.setJobDescription(None)
 
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(source_dir)
-    writer = stream.writeStream.foreachBatch(_sink).option(
-        "checkpointLocation", checkpoint_dir
+    return start_file_stream(
+        spark, schema, source_dir, checkpoint_dir, _sink,
+        max_files_per_trigger,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def unified_attrition_report(

@@ -17,24 +17,26 @@ def emb(spark, sf_dir):
 
 
 def test_index_query_equals_oneshot_operator(spark, emb, tmp_path):
-    """Same corpus, params and seed: the persisted index must return
-    EXACTLY the one-shot cosine_topk_ivfpq result (same sample, same
-    Lloyd iterations, same tie rules)."""
+    """Same corpus and params: the persisted index (integer quantizers
+    in meta) must return EXACTLY the one-shot cosine_topk_ivfpq result
+    (same sample, same Lloyd iterations, same tie rules)."""
     path = str(tmp_path / "ix")
-    IX.build_ivfpq_index(emb, path, num_centroids=16, seed=42)
+    IX.build_ivfpq_index(emb, path, num_centroids=16, max_iter=3)
     queries = emb.filter(F.col("vec_id") < 20)
     got = sorted(
         map(tuple, IX.query_ivfpq_index(spark, path, queries, k=5, nprobe=6).collect())
     )
     want = sorted(
-        map(tuple, S.cosine_topk_ivfpq(emb, queries, k=5, nprobe=6, dim=64).collect())
+        map(tuple, S.cosine_topk_ivfpq(
+            emb, queries, k=5, nprobe=6, dim=64, max_iter=3
+        ).collect())
     )
     assert got == want
 
 
 def test_query_scan_partition_prunes_to_probe_cells(spark, emb, tmp_path):
     path = str(tmp_path / "ix")
-    IX.build_ivfpq_index(emb, path, num_centroids=16, seed=42)
+    IX.build_ivfpq_index(emb, path, num_centroids=16)
     out = IX.query_ivfpq_index(
         spark, path, emb.filter(F.col("vec_id") < 3), k=3, nprobe=2
     )
@@ -51,43 +53,8 @@ def test_query_scan_partition_prunes_to_probe_cells(spark, emb, tmp_path):
 
 def test_empty_query_set_rejected(spark, emb, tmp_path):
     path = str(tmp_path / "ix")
-    IX.build_ivfpq_index(emb, path, num_centroids=8, seed=42)
+    IX.build_ivfpq_index(emb, path, num_centroids=8)
     with pytest.raises(ValueError, match="empty query set"):
         IX.query_ivfpq_index(
             spark, path, emb.filter(F.col("vec_id") < 0), k=3
         )
-
-
-def test_string_id_corpus_round_trips(spark, emb, tmp_path):
-    """The serving path must carry the CALLER's id type end-to-end —
-    it rebuilds the probe/re-rank relations driver-side, and a
-    hard-coded bigint schema would crash a string-id corpus."""
-    semb = emb.select(
-        F.concat(F.lit("doc-"), F.col("vec_id")).alias("vec_id"),
-        "embedding",
-    )
-    path = str(tmp_path / "ix_str")
-    IX.build_ivfpq_index(semb, path, num_centroids=8, seed=42)
-    queries = semb.limit(5)
-    out = IX.query_ivfpq_index(spark, path, queries, k=3, nprobe=4)
-    rows = out.collect()
-    assert rows and all(isinstance(r.query_id, str) for r in rows)
-    assert all(isinstance(r.neighbor_id, str) for r in rows)
-
-
-class TestMd5ModeIndex:
-    """Round 12: the md5-int index — integer quantizers persisted in
-    meta; build and serve dispatch on the stored mode."""
-
-    def test_md5_index_equals_md5_oneshot(self, spark, emb, tmp_path):
-        path = str(tmp_path / "ixm")
-        IX.build_ivfpq_index(
-            emb, path, num_centroids=16, max_iter=3, quant_mode="md5"
-        )
-        queries = emb.filter(F.col("vec_id") < 20)
-        got = sorted(map(tuple, IX.query_ivfpq_index(
-            spark, path, queries, k=5, nprobe=6).collect()))
-        want = sorted(map(tuple, S.cosine_topk_ivfpq(
-            emb, queries, k=5, nprobe=6, dim=64, max_iter=3,
-            quant_mode="md5").collect()))
-        assert got == want

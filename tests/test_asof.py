@@ -51,26 +51,6 @@ def test_backward_matches_latest_not_later(spark, quotes_and_trades):
     assert out.count() == trades.count()  # left join: every left row kept
 
 
-def test_forward_matches_earliest_not_earlier(spark, quotes_and_trades):
-    quotes, trades = quotes_and_trades
-    out = asof_join(trades, quotes, on="sym", prefix="q_", direction="forward")
-    got = {(r.sym, r.qty): r.q_px for r in out.collect()}
-    assert got[("A", 10)] == 101.0  # next quote at 10:00:05
-    assert got[("A", 20)] == 101.0  # inclusive at equal ts
-    assert got[("A", 30)] == 100.0
-    assert got[("B", 40)] is None  # no quote after 10:01
-    assert got[("C", 50)] is None
-
-
-def test_tolerance_nulls_stale_matches(spark, quotes_and_trades):
-    quotes, trades = quotes_and_trades
-    out = asof_join(trades, quotes, on="sym", prefix="q_", tolerance_seconds=2)
-    got = {(r.sym, r.qty): r.q_px for r in out.collect()}
-    assert got[("A", 20)] == 101.0  # 0s gap, inside tolerance
-    assert got[("A", 10)] is None  # 4s gap > 2s tolerance
-    assert got[("B", 40)] is None  # 57s gap
-
-
 def test_payload_struct_keeps_columns_from_same_row(spark):
     # right payload has nulls in some columns: per-column last() would
     # stitch values from different rows; the struct must not.

@@ -44,7 +44,7 @@ def test_long_chain_converges(spark):
 
 def test_unconverged_raises_instead_of_wrong_labels(spark):
     """Diameter > max_iter used to return silently-split components;
-    now it raises (or warns when asked to)."""
+    now it raises."""
     chain = spark.createDataFrame(
         [(i, i + 1) for i in range(1, 9)], "doc_a long, doc_b long"
     )
@@ -52,11 +52,6 @@ def test_unconverged_raises_instead_of_wrong_labels(spark):
     # iteration bound (union-find always converges)
     with pytest.raises(ComponentsNotConverged, match="did not converge"):
         connected_components(chain, max_iter=2, small_edge_limit=0)
-    with pytest.warns(RuntimeWarning, match="did not converge"):
-        partial = connected_components(
-            chain, max_iter=2, on_unconverged="warn", small_edge_limit=0
-        )
-    assert partial.count() == 9  # partial labels still returned on warn
 
 
 def test_duplicate_clusters_with_singletons(spark):

@@ -106,11 +106,12 @@ class TestMd5PairParity:
 
 
 class TestMd5GroupSketch:
-    def test_md5_sketch_estimate_within_error_floor(self, spark):
+    def test_md5_sketch_estimate_within_error_floor(
+        self, spark, exact_group_overlap
+    ):
         docs = _corpus(spark)
         exact = {
-            (r.group_a, r.group_b): r.jaccard
-            for r in OV.group_shingle_overlap(docs).collect()
+            pair: r["jaccard"] for pair, r in exact_group_overlap(docs).items()
         }
         est = {
             (r.group_a, r.group_b): r.est_jaccard

@@ -1,5 +1,5 @@
 """DSIR importance weighting (llm/dsir.py): weights vs a pure-Python
-replica, full-spine ratios, deterministic top-k and Gumbel resample,
+replica, full-spine ratios, deterministic top-k,
 selection bias toward the target domain."""
 
 from __future__ import annotations
@@ -13,7 +13,6 @@ from pyspark.sql import functions as F
 from etl_procedure_codes_crawler_spark.llm.dsir import (
     _MOD,
     bucket_log_ratios,
-    dsir_resample,
     importance_topk,
     importance_weights,
     ngram_bucket_rows,
@@ -158,39 +157,3 @@ class TestWeights:
         # descending weight, schema stable
         assert top[0].weight_micro >= top[1].weight_micro
         assert set(top[0].asDict()) == {"id", "n_grams", "weight_micro"}
-
-
-class TestResample:
-    def test_deterministic_and_sized(self, frames):
-        target, raw = frames
-        ratios = bucket_log_ratios(target, raw, num_buckets=B)
-        a = dsir_resample(raw, ratios, n=3, seed=11, num_buckets=B).collect()
-        b = dsir_resample(raw, ratios, n=3, seed=11, num_buckets=B).collect()
-        assert [r.id for r in a] == [r.id for r in b]
-        assert len(a) == 3
-        assert set(a[0].asDict()) == {"id", "n_grams", "weight_micro"}
-
-    def test_low_temperature_approaches_topk(self, frames):
-        target, raw = frames
-        ratios = bucket_log_ratios(target, raw, num_buckets=B)
-        # weights are separated by thousands of micro-units; at a
-        # sharp temperature the O(1) Gumbel noise cannot reorder them
-        picked = {
-            r.id
-            for r in dsir_resample(
-                raw, ratios, n=2, seed=3, temperature=1e-3, num_buckets=B
-            ).collect()
-        }
-        assert picked == {1, 2}
-
-    def test_seed_changes_sample(self, frames):
-        target, raw = frames
-        ratios = bucket_log_ratios(target, raw, num_buckets=B)
-        ids = lambda s: tuple(  # noqa: E731
-            r.id
-            for r in dsir_resample(
-                raw, ratios, n=3, seed=s, temperature=50.0, num_buckets=B
-            ).collect()
-        )
-        # at a flat temperature the noise dominates; some seed differs
-        assert len({ids(s) for s in range(6)}) > 1

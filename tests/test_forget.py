@@ -28,7 +28,7 @@ def test_forget_removes_from_every_artifact_idempotently(
     ix = str(tmp_path / "ix")
     docs.write.parquet(wh)
     NS.build_minhash_store(docs, nd)
-    IX.build_ivfpq_index(emb, ix, num_centroids=8, seed=42)
+    IX.build_ivfpq_index(emb, ix, num_centroids=8)
 
     doomed = [3, 7, 11]
     removed = FG.forget_documents(
@@ -70,7 +70,7 @@ def test_forget_drops_emptied_index_cells(spark, sf_dir, tmp_path):
         F.col("vec_id") < 80
     )
     ix = str(tmp_path / "ix")
-    IX.build_ivfpq_index(emb, ix, num_centroids=8, seed=42)
+    IX.build_ivfpq_index(emb, ix, num_centroids=8)
     coded = spark.read.parquet(f"{ix}/coded")
     # pick one whole cell to erase
     cell = coded.groupBy("cell").count().orderBy("count").first()["cell"]
@@ -121,7 +121,7 @@ def test_forget_recovers_interrupted_cell_swap(spark, sf_dir, tmp_path):
         F.col("vec_id") < 60
     )
     ix = str(tmp_path / "ix")
-    IX.build_ivfpq_index(emb, ix, num_centroids=8, seed=42)
+    IX.build_ivfpq_index(emb, ix, num_centroids=8)
     coded = spark.read.parquet(f"{ix}/coded")
     cell = coded.groupBy("cell").count().orderBy(F.desc("count")).first()["cell"]
     victim = coded.filter(F.col("cell") == cell).first()["id"]
@@ -460,7 +460,7 @@ def test_index_maintenance_stamps_versioned_coded_table(
         F.col("vec_id") < 60
     )
     ix = str(tmp_path / "ix")
-    IX.build_ivfpq_index(emb, ix, num_centroids=8, seed=42)
+    IX.build_ivfpq_index(emb, ix, num_centroids=8)
     coded = f"{ix}/coded"
     v = V.commit_version(spark, coded)
     victim = spark.read.parquet(coded).first()["id"]
@@ -479,7 +479,7 @@ def test_forget_total_index_wipe_raises(spark, sf_dir, tmp_path):
         F.col("vec_id") < 30
     )
     ix = str(tmp_path / "ix")
-    IX.build_ivfpq_index(emb, ix, num_centroids=4, seed=42)
+    IX.build_ivfpq_index(emb, ix, num_centroids=4)
     all_ids = [r.id for r in spark.read.parquet(f"{ix}/coded").select("id").collect()]
     import pytest as _pytest
 

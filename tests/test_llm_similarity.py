@@ -115,10 +115,10 @@ class TestIvf:
 
 
 class TestMd5PlaneMode:
-    """md5-mode hyperplane LSH (round 11): ±1 planes from md5 parity
-    over fixed-point int64 coordinates — the signature relation is
-    engine-deterministic, which is what moved ann_cosine_topk_lsh and
-    embedding_similar_pairs_lsh from rows-only to hash-oracled."""
+    """Hyperplane LSH signatures: ±1 planes from md5 parity over
+    fixed-point int64 coordinates — the signature relation is
+    engine-deterministic, which is what makes ann_cosine_topk_lsh
+    hash-oracled."""
 
     def test_signatures_match_pure_python_replica(self, spark, sf_dir):
         import hashlib
@@ -136,7 +136,7 @@ class TestMd5PlaneMode:
             (r.id, r.table): r.bucket
             for r in S.lsh_table_buckets(
                 embeddings.selectExpr("vec_id AS id", "embedding AS v"),
-                "id", "v", None, 8, 5, signature=sig,
+                "id", "v", sig,
             ).collect()
         }
         vecs = {
@@ -166,32 +166,6 @@ class TestMd5PlaneMode:
                     ) > 0
                 )
                 assert got[(vid, t)] == bucket, (vid, t)
-
-    def test_md5_topk_recall_floor(self, spark, sf_dir):
-        from pyspark.sql import functions as F
-
-        from etl_procedure_codes_crawler_spark.llm import similarity as S
-        from etl_procedure_codes_crawler_spark.plans.relational import load
-
-        embeddings = load(spark, sf_dir, "embeddings")
-        queries = embeddings.filter(F.col("vec_id") < 20)
-        exact = _exact_topk(embeddings, queries, k=5)
-        approx = {
-            (r.query_id, r.neighbor_id)
-            for r in S.cosine_topk_lsh(
-                embeddings, queries, k=5, plane_mode="md5"
-            ).collect()
-        }
-        recall = len(exact & approx) / len(exact)
-        assert recall >= 0.2, f"md5-mode topk recall {recall:.2f}"
-
-    def test_unknown_plane_mode_rejected(self):
-        import pytest as _pytest
-
-        from etl_procedure_codes_crawler_spark.llm import similarity as S
-
-        with _pytest.raises(ValueError, match="plane_mode"):
-            S._resolve_planes("xx", 8, 5, 64, 42)
 
 
 class TestPQ:
@@ -251,9 +225,10 @@ class TestPQ:
         assert log_product_spread(U @ R) < log_product_spread(U) / 4
 
     def test_opq_recall_at_least_matches_pq(self, spark, sf_dir):
-        """rotate=True must keep the recall floor (the rotation is
-        orthonormal, the exact re-rank is identical) — and the OPQ
-        result set stays k-per-query well-formed."""
+        """The OPQ-rotated IVF+PQ must keep the unrotated compose's
+        recall floor (the rotation is orthonormal, the exact re-rank is
+        identical) — and its result set stays k-per-query
+        well-formed."""
         from pyspark.sql import functions as F
 
         from etl_procedure_codes_crawler_spark.llm import similarity as S
@@ -261,15 +236,12 @@ class TestPQ:
         emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
         qs = emb.filter(F.col("vec_id") < 20)
         exact = _exact_topk(emb, qs, k=5)
-        opq = {
-            (r.query_id, r.neighbor_id)
-            for r in S.cosine_topk_pq(emb, qs, k=5, rotate=True).collect()
-        }
-        recall = len(exact & opq) / len(exact)
-        assert recall >= 0.6, f"OPQ recall {recall:.2f}"
         ivfpq = S.cosine_topk_ivfpq(
             emb, qs, k=5, nprobe=6, rotate=True
         ).collect()
+        opq = {(r.query_id, r.neighbor_id) for r in ivfpq}
+        recall = len(exact & opq) / len(exact)
+        assert recall >= 0.5, f"OPQ IVF+PQ recall {recall:.2f}"
         per_q: dict[int, int] = {}
         for r in ivfpq:
             per_q[r.query_id] = per_q.get(r.query_id, 0) + 1
@@ -305,8 +277,7 @@ class TestPQ:
         hpq = {
             (r.query_id, r.neighbor_id)
             for r in S.cosine_topk_pq(
-                emb, qs, k=5, dim=64, max_iter=3,
-                quant_mode="md5", rotate=True,
+                emb, qs, k=5, dim=64, max_iter=3, rotate=True
             ).collect()
         }
         recall = len(exact & hpq) / len(exact)
@@ -362,25 +333,24 @@ def test_pq_dim_param_and_empty_corpus_error(spark):
     empty = spark.createDataFrame([], "vec_id bigint, embedding array<float>")
     # training on an empty corpus: explicit error, not a numpy crash
     with _pytest.raises(ValueError, match="empty corpus"):
-        S._pq_context(empty, "embedding", 8, 4, 42, 1)
+        S._pq_int_context(empty, "embedding", "vec_id", 8, 4, 1)
     tiny = spark.createDataFrame(
         [(i, [float(i * j % 7) for j in range(64)]) for i in range(8)],
         "vec_id bigint, embedding array<float>",
     )
-    codebook, codes_udf, lut_udf, adc_score, _rot = S._pq_context(
-        tiny, "embedding", 8, 4, 42, 1, dim=64
+    codebook, codes_udf, lut_udf = S._pq_int_context(
+        tiny, "embedding", "vec_id", 8, 4, 1, dim=64
     )
     assert codebook.shape == (4, 8)
     # a dim that contradicts the corpus is an explicit error
     with _pytest.raises(ValueError, match="dim=32"):
-        S._pq_context(tiny, "embedding", 8, 4, 42, 1, dim=32)
+        S._pq_int_context(tiny, "embedding", "vec_id", 8, 4, 1, dim=32)
 
 
 def test_adaptive_probe_paths_agree(spark):
     """The literal-expression probe (small centroid tables) and the
     Arrow probe (above _PROBE_LITERAL_CAP) must pick identical cells —
-    including the tie contract (cell asc) — in both raw and unit
-    geometry."""
+    including the tie contract (cell asc) — in unit geometry."""
     import numpy as np
 
     from pyspark.sql import functions as F
@@ -393,25 +363,20 @@ def test_adaptive_probe_paths_agree(spark):
         [(i, [float(x) for x in rng.randn(64)]) for i in range(20)],
         "vec_id bigint, embedding array<float>",
     )
-    for normalize in (False, True):
-        lit_cells = vecs.select(
-            "vec_id",
-            S._probe_cells(
-                F.col("embedding"), centers, 4, normalize=normalize
-            ).alias("cells"),
-        )
-        udf_cells = vecs.select(
-            "vec_id",
-            S._ivf_probe_udf(centers, 4, normalize=normalize)(
-                F.col("embedding")
-            ).alias("cells"),
-        )
-        a = {r.vec_id: list(r.cells) for r in lit_cells.collect()}
-        b = {r.vec_id: list(r.cells) for r in udf_cells.collect()}
-        assert a == b, f"probe paths diverge (normalize={normalize})"
+    lit_cells = vecs.select(
+        "vec_id",
+        S._probe_cells(F.col("embedding"), centers, 4).alias("cells"),
+    )
+    udf_cells = vecs.select(
+        "vec_id",
+        S._ivf_probe_udf(centers, 4)(F.col("embedding")).alias("cells"),
+    )
+    a = {r.vec_id: list(r.cells) for r in lit_cells.collect()}
+    b = {r.vec_id: list(r.cells) for r in udf_cells.collect()}
+    assert a == b, "probe paths diverge"
     # the adaptive switch actually takes the Arrow path above the cap
     big = np.zeros((80, 64))  # 5120 literals > _PROBE_LITERAL_CAP
-    col = S._probe_cells(F.col("embedding"), big, 4, normalize=False)
+    col = S._probe_cells(F.col("embedding"), big, 4)
     # a pandas-UDF column stringifies with the udf name, a literal
     # expression with array_sort — cheap structural check
     assert "probe" in str(col).lower()

@@ -126,70 +126,6 @@ class TestUnimax:
             unimax_budgets(ps, budget_tokens=10, budget_frac_pct=50)
 
 
-class TestUnimaxManifest:
-    def _docs(self, spark):
-        # 3 sources x 8 docs, 10 tokens each → per-source n_tokens=80
-        rows = [
-            (s * 100 + i, f"s{s}", " ".join(["w"] * 10))
-            for s in range(3)
-            for i in range(8)
-        ]
-        return spark.createDataFrame(
-            rows, "doc_id long, source string, text string"
-        )
-
-    def test_whole_epochs_replicated_exactly(self, spark):
-        from etl_procedure_codes_crawler_spark.llm.mixture import (
-            source_token_stats,
-            unimax_manifest,
-        )
-
-        docs = self._docs(spark)
-        stats = source_token_stats(docs)
-        # budget = 2x the ceilinged corpus → everything capped at 2.0
-        # epochs → every doc appears exactly twice, no fractional copy
-        budgets = unimax_budgets(stats, max_epochs=2, budget_tokens=480)
-        out = unimax_manifest(docs, budgets).collect()
-        per_doc = {}
-        for r in out:
-            per_doc[r.doc_id] = per_doc.get(r.doc_id, 0) + 1
-            assert r.n_copies == 2 and r.copy in (1, 2)
-        assert set(per_doc.values()) == {2} and len(per_doc) == 24
-
-    def test_fractional_epoch_hits_expected_token_mass(self, spark):
-        from etl_procedure_codes_crawler_spark.llm.mixture import (
-            source_token_stats,
-            unimax_manifest,
-        )
-
-        docs = self._docs(spark)
-        stats = source_token_stats(docs)
-        # 120 tokens/source → 1.5 epochs: every doc once, ~half twice
-        budgets = unimax_budgets(stats, max_epochs=4, budget_tokens=360)
-        rows = unimax_manifest(docs, budgets).collect()
-        assert all(r.n_copies in (1, 2) for r in rows)
-        base = {r.doc_id for r in rows if r.copy == 1}
-        assert len(base) == 24  # every doc keeps its whole epoch
-        # determinism: same seed → identical manifest
-        again = unimax_manifest(docs, budgets).collect()
-        assert sorted(map(tuple, rows)) == sorted(map(tuple, again))
-
-    def test_zero_alloc_source_drops_out(self, spark):
-        from etl_procedure_codes_crawler_spark.llm.mixture import (
-            unimax_manifest,
-        )
-
-        docs = self._docs(spark)
-        budgets = spark.createDataFrame(
-            [("s0", 80, 160), ("s1", 80, 0), ("s2", 80, 80)],
-            "source string, n_tokens long, alloc_tokens long",
-        )
-        out = unimax_manifest(docs, budgets).collect()
-        assert {r.source for r in out} == {"s0", "s2"}
-        assert all(r.n_copies == 2 for r in out if r.source == "s0")
-        assert all(r.n_copies == 1 for r in out if r.source == "s2")
-
-
 class TestSourceTokenStats:
     def test_counts_whitespace_tokens_per_source(self, spark):
         docs = spark.createDataFrame(

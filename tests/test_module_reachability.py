@@ -59,37 +59,6 @@ DEFINITIONS_UNREACHED_BY_DESIGN = {
     ),
 }
 
-# Test-only definitions whose retirement is staged: each later change
-# deletes a few of them together with their tests, so that no single
-# change drops a large block of tests at once (ROADMAP item 5). Every
-# entry is reached by its own tests only.
-RETIREMENT_DEFERRED = {
-    f"{PACKAGE}.{name}": "test-only; retire with its tests"
-    for name in (
-        "llm.dedup.drop_exact_duplicates",
-        "llm.dedup.keep_best_exact",
-        "llm.dedup.lsh_bucket_stats",
-        "llm.dsir.dsir_resample",
-        "llm.mixture.unimax_manifest",
-        "llm.overlap.group_cardinality_sketches",
-        "llm.overlap.group_shingle_overlap",
-        "llm.overlap.union_cardinality",
-        "llm.packing.curriculum_manifest",
-        "llm.packing.sequence_manifest",
-        "llm.packing.training_shuffle_incremental",
-        "llm.packing.upsample_manifest",
-        "llm.pca.update_pca",
-        "operators.merge.merge_upsert",
-        "operators.skew.salted_agg",
-        "operators.skew.salted_join",
-        "operators.skew.top_keys",
-        "sinks.parquet.compact_dataset",
-        "streaming.events.sliding_value_averages",
-        "streaming.events.user_session_windows",
-    )
-}
-
-
 def _module_name(path: Path) -> str:
     parts = list(path.relative_to(ROOT).with_suffix("").parts)
     if parts[-1] == "__init__":
@@ -339,15 +308,13 @@ def _package_definitions() -> set[str]:
 
 
 def test_every_top_level_definition_is_reached():
-    reached = reached_definitions(
-        {**DEFINITIONS_UNREACHED_BY_DESIGN, **RETIREMENT_DEFERRED}
-    )
+    reached = reached_definitions(DEFINITIONS_UNREACHED_BY_DESIGN)
     dead = sorted(_package_definitions() - reached)
     assert not dead, "reached by no entry point: " + ", ".join(dead)
 
 
 def test_exemptions_name_existing_unreached_definitions():
-    exempt = set(DEFINITIONS_UNREACHED_BY_DESIGN) | set(RETIREMENT_DEFERRED)
+    exempt = set(DEFINITIONS_UNREACHED_BY_DESIGN)
     assert exempt <= _package_definitions(), exempt - _package_definitions()
     assert exempt.isdisjoint(reached_definitions())
 

@@ -576,7 +576,7 @@ class TestJpegCodec:
 
 
 class TestPerceptualHash:
-    """dHash/aHash + hamming-LSH image near-dup (round 8)."""
+    """dHash + hamming-LSH image near-dup (round 8)."""
 
     def _noise_img(self, seed, w=64, h=48, channels=3):
         import numpy as np
@@ -609,7 +609,6 @@ class TestPerceptualHash:
         # below the 9x8 grid: nearest-neighbor path, must not crash
         tiny = bytes(range(12))  # 4x3 gray
         assert isinstance(M.dhash64(tiny, 4, 3, 1), int)
-        assert isinstance(M.ahash64(tiny, 4, 3, 1), int)
         # 1-pixel image: every gradient equal -> all-zero hash, fine
         assert M.dhash64(b"\x80", 1, 1, 1) == 0
 
@@ -684,11 +683,6 @@ class TestPerceptualHash:
         lab = {r.doc_id: r.cluster_id for r in clusters.collect()}
         for t in (7, 14, 21):
             assert lab[t] == lab[t + 1000]
-
-    def test_unknown_method_rejected(self, spark):
-        df = spark.createDataFrame([(1, b"x", "image/png", 1, "s")], M.MEDIA_SCHEMA)
-        with pytest.raises(ValueError, match="method"):
-            M.image_hashes(df, method="md5")
 
 
 class TestAudioFingerprint:

@@ -4,12 +4,10 @@ from __future__ import annotations
 
 import numpy as np
 import pytest
-from pyspark.sql import functions as F
 
 from etl_procedure_codes_crawler_spark.llm.pca import (
     fit_pca,
     transform_pca,
-    update_pca,
 )
 from etl_procedure_codes_crawler_spark.plans.relational import load
 
@@ -51,57 +49,6 @@ class TestFitPca:
         emb = load(spark, sf_dir, "embeddings")
         model = fit_pca(emb, sample_limit=100)
         assert model.n == 100
-
-
-class TestUpdatePca:
-    def test_incremental_update_matches_full_refit(self, spark, sf_dir):
-        emb = load(spark, sf_dir, "embeddings")
-        old = emb.filter(F.col("vec_id") % 2 == 0)
-        new = emb.filter(F.col("vec_id") % 2 == 1)
-        updated = update_pca(new, fit_pca(old))
-        full = fit_pca(emb)
-        assert updated.n == full.n
-        np.testing.assert_allclose(updated.mean, full.mean, atol=1e-9)
-        np.testing.assert_allclose(
-            updated.eigenvalues, full.eigenvalues, atol=1e-9
-        )
-        np.testing.assert_allclose(
-            np.abs(updated.components), np.abs(full.components), atol=1e-6
-        )
-
-    def test_empty_batch_returns_model_unchanged(self, spark, sf_dir):
-        emb = load(spark, sf_dir, "embeddings")
-        model = fit_pca(emb)
-        empty = spark.createDataFrame(
-            [], "vec_id long, embedding array<double>"
-        )
-        assert update_pca(empty, model) is model
-
-    def test_broken_batch_raises_instead_of_silent_drop(self, spark, sf_dir):
-        """Mixed vector dimensions in a batch must RAISE, not be
-        mistaken for 'empty batch' and silently dropped (the empty
-        case is signalled by return value, not exception)."""
-        from py4j.protocol import Py4JJavaError
-        from pyspark.errors import PythonException
-
-        emb = load(spark, sf_dir, "embeddings")
-        model = fit_pca(emb)
-        bad = spark.createDataFrame(
-            [(1, [1.0] * 32), (2, [1.0] * 64)],
-            "vec_id long, embedding array<double>",
-        ).coalesce(1)
-        with pytest.raises((PythonException, Py4JJavaError)):
-            update_pca(bad, model)
-
-    def test_update_never_rereads_the_fitted_corpus(self, spark, sf_dir):
-        """The incremental scan must touch only the new batch: moments
-        are carried in the model, so update's n grows by exactly the
-        batch size."""
-        emb = load(spark, sf_dir, "embeddings")
-        model = fit_pca(emb)
-        batch = emb.limit(10)
-        updated = update_pca(batch, model)
-        assert updated.n == model.n + 10
 
 
 class TestTransformPca:

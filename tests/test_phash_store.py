@@ -149,78 +149,3 @@ class TestStreamIngestMediaNearDup:
             for r in spark.read.parquet(dirs["warehouse"]).collect()
         )
         assert again == [1, 2, 42]
-
-
-class TestMediaGateLabelMode:
-    _drop = TestStreamIngestMediaNearDup._drop
-
-    def test_label_mode_admits_and_clusters_media(self, spark, tmp_path):
-        """neardup_action='label' on the media gate: perceptual copies
-        are ADMITTED and the phash store's persisted cluster labels
-        tie them to their originals across batches — keep-best-copy
-        runs off the store, no component recompute."""
-        import os
-
-        from etl_procedure_codes_crawler_spark.llm.neardup_store import (
-            store_cluster_labels,
-        )
-        from etl_procedure_codes_crawler_spark.streaming.incremental import (
-            stream_ingest_media_neardup,
-        )
-
-        src = tmp_path / "in"
-        src.mkdir()
-        dirs = {
-            "source": str(src),
-            "warehouse": str(tmp_path / "wh"),
-            "store": str(tmp_path / "store"),
-            "checkpoint": str(tmp_path / "ck"),
-        }
-        PS.create_phash_store(spark, dirs["store"])
-
-        def run():
-            q = stream_ingest_media_neardup(
-                spark,
-                dirs["source"],
-                M.MEDIA_SCHEMA,
-                dirs["warehouse"],
-                dirs["store"],
-                dirs["checkpoint"],
-                neardup_action="label",
-            )
-            q.awaitTermination(180)
-            q.stop()
-
-        # batch 1: image 1 + its in-batch twin 31 — BOTH admitted
-        self._drop(
-            spark, dirs["source"], "b1",
-            [(1, "the quick brown fox " * 8), (31, "the quick brown fox " * 8)],
-        )
-        run()
-        got1 = sorted(
-            r.media_id
-            for r in spark.read.parquet(dirs["warehouse"]).collect()
-        )
-        assert got1 == [1, 31]
-        # batch 2: a re-hosted copy of 1 — admitted and labeled too
-        self._drop(
-            spark, dirs["source"], "b2",
-            [(41, "the quick brown fox " * 8), (42, "other content " * 9)],
-        )
-        run()
-        got2 = sorted(
-            r.media_id
-            for r in spark.read.parquet(dirs["warehouse"]).collect()
-        )
-        assert got2 == [1, 31, 41, 42]
-        labels = {
-            (r.id, r.cluster_id)
-            for r in store_cluster_labels(
-                spark,
-                dirs["store"],
-                all_ids=spark.read.parquet(dirs["warehouse"]).select(
-                    "media_id"
-                ),
-            ).collect()
-        }
-        assert labels == {(1, 1), (31, 1), (41, 1), (42, 42)}

@@ -6,6 +6,8 @@ join collapsing to a nested loop) fails CI rather than surfacing as a
 
 from __future__ import annotations
 
+import re
+
 import pytest
 
 from etl_procedure_codes_crawler_spark.llm import queries  # noqa: F401 — registers
@@ -225,8 +227,10 @@ class TestAnnPlans:
         plan = self._plan(out)
         # ONE Arrow stage for the corpus cell assignment — a second one
         # means the join's null filter re-extracted the UDF and the
-        # whole corpus makes two Python round-trips
-        assert plan.count("ArrowEvalPython") == 1, plan
+        # whole corpus makes two Python round-trips; the other stage is
+        # the query side's integer probe
+        assert plan.count("ArrowEvalPython [cell(") == 1, plan
+        assert plan.count("ArrowEvalPython") == 2, plan
         assert "SortMergeJoin" not in plan
         assert "BroadcastNestedLoopJoin" not in plan
         assert "CartesianProduct" not in plan
@@ -260,8 +264,10 @@ class TestAnnPlans:
             dim=64,
         )
         plan = self._plan(out)
-        # corpus (cell+codes batched together) + query (lut): two
-        assert plan.count("ArrowEvalPython") == 2, plan
+        # corpus (cell+codes batched together) + query (integer probe,
+        # then lut per probed cell): three
+        assert plan.count("ArrowEvalPython") == 3, plan
+        assert re.search(r"ArrowEvalPython \[cell\([^\]]*, codes\(", plan), plan
         # cell-probe candidate join and both rerank joins are hash joins
         assert "SortMergeJoin" not in plan, plan
         assert "BroadcastNestedLoopJoin" not in plan, plan

@@ -185,16 +185,15 @@ class TestKmvSketch:
             else:
                 assert abs(e - exact[g]) / exact[g] < 0.5, (g, e, exact[g])
 
-    def test_overlap_estimates_track_exact_overlap(self, spark, sf_dir):
+    def test_overlap_estimates_track_exact_overlap(
+        self, spark, sf_dir, exact_group_overlap
+    ):
         docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
         est = {
             (r["group_a"], r["group_b"]): r
             for r in KV.kmv_overlap_pairs(docs, k=64).collect()
         }
-        exact = {
-            (r["group_a"], r["group_b"]): r
-            for r in OV.group_shingle_overlap(docs).collect()
-        }
+        exact = exact_group_overlap(docs)
         # mean absolute jaccard error over pairs that exist in both
         common = set(est) & set(exact)
         assert common

@@ -1,4 +1,4 @@
-"""Structured Streaming over events: windows, watermark, sessions.
+"""Structured Streaming over events: hourly windows.
 
 The stream is driven with availableNow over the real testdata parquet,
 and the windowed result is cross-checked against the BATCH version of
@@ -9,9 +9,7 @@ from __future__ import annotations
 
 import pytest
 
-from pyspark.sql import functions as F
-
-from etl_procedure_codes_crawler_spark.plans.relational import QUERIES, load
+from etl_procedure_codes_crawler_spark.plans.relational import QUERIES
 from etl_procedure_codes_crawler_spark.streaming import events as E
 
 
@@ -42,42 +40,5 @@ def test_stream_hourly_matches_batch(spark, sf_dir, events_dir):
             for r in batch
         }
         assert s == b
-    finally:
-        query.stop()
-
-
-def test_sliding_windows_overlap(spark, events_dir):
-    stream = E.read_events_stream(spark, events_dir)
-    query = E.run_to_memory(E.sliding_value_averages(stream), "sliding_test")
-    try:
-        rows = spark.sql("SELECT * FROM sliding_test").collect()
-        # every event lands in exactly 2 overlapping 1h/30m windows →
-        # total n_events across sliding windows = 2 × event count
-        total = sum(r.n_events for r in rows)
-        n_events = spark.sql(
-            "SELECT count(*) AS n FROM parquet.`{}`".format(events_dir)
-        ).collect()[0].n
-        assert total == 2 * n_events
-    finally:
-        query.stop()
-
-
-def test_session_windows(spark, sf_dir, events_dir):
-    stream = E.read_events_stream(spark, events_dir)
-    query = E.run_to_memory(E.user_session_windows(stream), "session_test")
-    try:
-        rows = spark.sql("SELECT * FROM session_test").collect()
-        assert len(rows) > 0
-        # sessions are per-user, non-overlapping, and cover all events
-        by_user: dict[int, list] = {}
-        for r in rows:
-            by_user.setdefault(r.user_id, []).append(r)
-        for sessions in by_user.values():
-            sessions.sort(key=lambda r: r.session_start)
-            for prev, cur in zip(sessions, sessions[1:]):
-                assert prev.session_end <= cur.session_start
-        total = sum(r.n_events for r in rows)
-        batch_events = load(spark, sf_dir, "events")
-        assert total == batch_events.count()
     finally:
         query.stop()

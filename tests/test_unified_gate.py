@@ -87,7 +87,7 @@ def _run_gate(spark, src, schema, root, budgets, ckpt, **kw):
                                kmv_shingle_k=3)
     q = U.stream_ingest_unified(
         spark, src, schema, os.path.join(root, "wh"), stores, ckpt,
-        budgets=budgets, min_doc_freq=2, gate_shuffle_partitions=4, **kw
+        budgets=budgets, min_doc_freq=2, **kw
     )
     q.awaitTermination(300)
     q.stop()
@@ -236,7 +236,7 @@ class TestCrashReplay:
         q = U.stream_ingest_unified(
             spark, src_b, docs.schema, os.path.join(root_b, "wh"),
             stores_b, str(tmp_path / "ckB"), budgets=budgets,
-            min_doc_freq=2, gate_shuffle_partitions=4,
+            min_doc_freq=2,
         )
         with pytest.raises(Exception):
             q.awaitTermination(300)
@@ -276,7 +276,7 @@ def test_store_commit_jobs_stay_in_the_streams_job_group(
         runs.append(U.stream_ingest_unified(
             spark, src, docs.schema, os.path.join(root, "wh"),
             os.path.join(root, "stores"), str(tmp_path / "ck"), budgets={},
-            min_doc_freq=2, gate_shuffle_partitions=4,
+            min_doc_freq=2,
         ))
         runs[0].awaitTermination(300)
         runs[0].stop()

@@ -13,6 +13,16 @@ def _write(spark, path, ids, mode="append"):
     ).write.mode(mode).parquet(path)
 
 
+def _forget(spark, path, ids):
+    """Take ``ids`` down through forget's stamped rewrite."""
+    from etl_procedure_codes_crawler_spark.llm.forget import forget_documents
+
+    ids_df = spark.createDataFrame([(i,) for i in ids], "doc_id bigint")
+    assert forget_documents(ids_df, warehouse_path=path) == {
+        "warehouse": len(ids)
+    }
+
+
 def test_versions_pin_the_file_set_across_appends(spark, tmp_path):
     path = str(tmp_path / "wh")
     _write(spark, path, [1, 2, 3])
@@ -86,68 +96,56 @@ def test_manifests_invisible_to_plain_reads(spark, tmp_path):
     _write(spark, path, [1, 2])
     V.commit_version(spark, path)
     # manifests live in a SIBLING directory (inside the dataset they
-    # would be destroyed by compaction's whole-directory swap) — a
-    # plain read is unaffected
+    # would be destroyed by a whole-dataset swap) — a plain read is
+    # unaffected
     assert spark.read.parquet(path).count() == 2
 
 
 def test_rewritten_files_expire_the_version_loudly(spark, tmp_path):
-    from etl_procedure_codes_crawler_spark.sinks.parquet import compact_dataset
-
     path = str(tmp_path / "wh")
     _write(spark, path, [1, 2, 3])
     _write(spark, path, [4])
     v = V.commit_version(spark, path)
-    compact_dataset(spark, path)  # rewrites every file
+    _forget(spark, path, [1])  # rewrites the first batch's file
     with pytest.raises(ValueError, match="expired"):
         V.read_version(spark, path, v)
-    # a fresh commit over the compacted layout works again
+    # a fresh commit over the rewritten layout works again
     v2 = V.commit_version(spark, path)
-    assert V.read_version(spark, path, v2).count() == 4
+    assert V.read_version(spark, path, v2).count() == 3
 
 
 def test_expiry_error_names_the_maintenance_op(spark, tmp_path):
-    """A rewrite stamp turns 'your version expired' into 'compaction
+    """A rewrite stamp turns 'your version expired' into 'the takedown
     at rw1 expired it' — the difference between re-materializing a
     version being fine and it violating a takedown."""
-    from etl_procedure_codes_crawler_spark.sinks.parquet import compact_dataset
-
     path = str(tmp_path / "wh")
     _write(spark, path, [1, 2, 3])
     v = V.commit_version(spark, path)
-    compact_dataset(spark, path)
-    with pytest.raises(ValueError, match=r"compact \(rw1\)"):
+    _forget(spark, path, [1])  # every file affected: whole-dataset swap
+    with pytest.raises(ValueError, match=r"forget \(rw1\)"):
         V.read_version(spark, path, v)
     detail = V.list_versions(spark, path, detail=True)
     assert detail == [
         {
             "version": v,
             "readable": False,
-            "expired_by": "compact (rw1)",
+            "expired_by": "forget (rw1)",
             "n_files": 1,
             "note": "",
         }
     ]
 
 
-def test_merge_upsert_stamps_rewrites(spark, tmp_path):
-    from etl_procedure_codes_crawler_spark.operators.merge import merge_upsert
-
+def test_file_pruned_forget_stamps_rewrites(spark, tmp_path):
     path = str(tmp_path / "wh")
-    spark.createDataFrame(
-        [(1, "a"), (2, "b")], "doc_id bigint, text string"
-    ).write.parquet(path)
+    _write(spark, path, [1])
+    _write(spark, path, [2])
     v = V.commit_version(spark, path)
-    merge_upsert(
-        spark,
-        path,
-        spark.createDataFrame([(2, "B")], "doc_id bigint, text string"),
-        key="doc_id",
-    )
-    with pytest.raises(ValueError, match="merge"):
+    _forget(spark, path, [2])  # one of two files: the pruned swap
+    with pytest.raises(ValueError, match="forget"):
         V.read_version(spark, path, v)
     status = V.list_versions(spark, path, detail=True)[0]
-    assert not status["readable"] and "merge" in status["expired_by"]
+    assert not status["readable"] and "forget" in status["expired_by"]
 
 
 def test_unstamped_rewrite_reports_unknown(spark, tmp_path):
@@ -178,11 +176,9 @@ def test_stamps_noop_without_versions(spark, tmp_path):
     ._versions directory appears just because maintenance ran."""
     import os
 
-    from etl_procedure_codes_crawler_spark.sinks.parquet import compact_dataset
-
     path = str(tmp_path / "wh")
     _write(spark, path, [1, 2, 3])
-    compact_dataset(spark, path)
+    _forget(spark, path, [1])
     assert not os.path.exists(path + "._versions")
 
 

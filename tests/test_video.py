@@ -114,12 +114,6 @@ class TestVideoKeyframeHashes:
             == 0
         )
 
-    def test_unknown_method_raises(self, spark):
-        with pytest.raises(ValueError):
-            V.video_keyframe_hashes(
-                V.documents_as_mjpeg_mp4(_docs(spark, 3)), method="md5"
-            )
-
 
 class TestVideoNearDup:
     def test_planted_twins_found_at_full_score(self, spark):
