@@ -455,7 +455,7 @@ def extract_cpt_code_symbols(doc: HtmlNode, url: str) -> list[str] | None:
     elif "hcpcs-codes" in url:
         title = doc.find("p", class_="box-detail-head", string="HCPCS Code Symbols")
         if title:
-            box = title.find_parent("div", class_="box-detail box-blue")
+            box = title.find_parent()
             if box:
                 symbols = _icon_symbols(box, drop_images=True)
                 if symbols:

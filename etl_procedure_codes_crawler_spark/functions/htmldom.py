@@ -83,7 +83,6 @@ class HtmlNode:
         class_: str | None,
         id: str | None,
         string: Pattern[str] | str | None,
-        attrs: dict[str, str] | None,
     ) -> bool:
         if tag is not None and self.tag != tag:
             return False
@@ -96,13 +95,6 @@ class HtmlNode:
                 return False
         if id is not None and self.attrs.get("id") != id:
             return False
-        if attrs:
-            for key, value in attrs.items():
-                if value is True:
-                    if key not in self.attrs:
-                        return False
-                elif self.attrs.get(key) != value:
-                    return False
         if string is not None:
             text = self.get_text(strip=True)
             if isinstance(string, str):
@@ -116,14 +108,11 @@ class HtmlNode:
         self,
         tag: str | None = None,
         class_: str | None = None,
-        id: str | None = None,
-        string: Pattern[str] | str | None = None,
-        attrs: dict[str, str] | None = None,
     ) -> list["HtmlNode"]:
         return [
             node
             for node in self.iter_elements()
-            if node._matches(tag, class_, id, string, attrs)
+            if node._matches(tag, class_, None, None)
         ]
 
     def find(
@@ -132,19 +121,20 @@ class HtmlNode:
         class_: str | None = None,
         id: str | None = None,
         string: Pattern[str] | str | None = None,
-        attrs: dict[str, str] | None = None,
     ) -> "HtmlNode | None":
         for node in self.iter_elements():
-            if node._matches(tag, class_, id, string, attrs):
+            if node._matches(tag, class_, id, string):
                 return node
         return None
 
-    def find_parent(
-        self, tag: str | None = None, class_: str | None = None
-    ) -> "HtmlNode | None":
+    def find_parent(self) -> "HtmlNode | None":
+        """The nearest enclosing ``div.box-detail.box-blue``, the
+        reference's symbol-box container."""
         node = self.parent
         while node is not None:
-            if node.tag != "[document]" and node._matches(tag, class_, None, None, None):
+            if node.tag != "[document]" and node._matches(
+                "div", "box-detail box-blue", None, None
+            ):
                 return node
             node = node.parent
         return None
@@ -198,7 +188,7 @@ def parse_html(text: str) -> HtmlNode:
     return builder.root
 
 
-def compile_word(word: str, flags: int = re.IGNORECASE) -> Pattern[str]:
+def compile_word(word: str) -> Pattern[str]:
     """Whole-word regex, the reference's span-match idiom
     (``procedure_code.py:62``)."""
-    return re.compile(rf"\b{re.escape(word)}\b", flags)
+    return re.compile(rf"\b{re.escape(word)}\b", re.IGNORECASE)

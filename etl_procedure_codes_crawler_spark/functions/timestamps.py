@@ -37,12 +37,12 @@ from pyspark.sql import functions as F
 __all__ = ["normalize_event_ts", "epoch_micros", "parquet_ts_unit"]
 
 
-def parquet_ts_unit(path: str, col: str = "ts") -> str | None:
+def parquet_ts_unit(path: str) -> str | None:
     """Driver-side footer peek: the parquet logical-type unit ('ns',
-    'us', 'ms', 's') of ``col`` in the first parquet file under
+    'us', 'ms', 's') of column ``ts`` in the first parquet file under
     ``path``, or None when the column is a plain integer (no logical
     type) or absent. One footer read, no Spark job — and cached per
-    (file, mtime, col): the unit is a schema property, so repeated
+    (file, mtime): the unit is a schema property, so repeated
     loads of the same file (every event query in a session) skip the
     pyarrow open. An appended file with a DIFFERENT encoding than its
     siblings is already outside the file-source contract; the mtime
@@ -61,11 +61,11 @@ def parquet_ts_unit(path: str, col: str = "ts") -> str | None:
         mtime = os.stat(f).st_mtime_ns
     except OSError:
         return None
-    return _ts_unit_read(f, mtime, col)
+    return _ts_unit_read(f, mtime)
 
 
 @lru_cache(maxsize=256)
-def _ts_unit_read(f: str, mtime_ns: int, col: str) -> str | None:
+def _ts_unit_read(f: str, mtime_ns: int) -> str | None:
     import pyarrow as pa
     import pyarrow.parquet as pq
 
@@ -73,18 +73,18 @@ def _ts_unit_read(f: str, mtime_ns: int, col: str) -> str | None:
         schema = pq.read_schema(f)
     except Exception:
         return None
-    if col in schema.names:
-        t = schema.field(col).type
+    if "ts" in schema.names:
+        t = schema.field("ts").type
         if pa.types.is_timestamp(t):
             return t.unit
     return None
 
 
 def normalize_event_ts(
-    df: DataFrame, col: str = "ts", bigint_unit: str | None = None
+    df: DataFrame, bigint_unit: str | None = None
 ) -> DataFrame:
-    """Normalize an event-timestamp column to TIMESTAMP, whatever the
-    file encoding produced. Works on batch and streaming DataFrames
+    """Normalize the event-timestamp column ``ts`` to TIMESTAMP, whatever
+    the file encoding produced. Works on batch and streaming DataFrames
     (only the analyzed schema is consulted).
 
     - ``bigint``        → epoch integer. When the caller knows the unit
@@ -104,12 +104,12 @@ def normalize_event_ts(
     - ``timestamp``     → already correct, untouched;
     - column absent     → untouched (caller's schema has no event ts).
     """
-    dtype = dict(df.dtypes).get(col)
+    dtype = dict(df.dtypes).get("ts")
     if dtype == "bigint":
-        v = F.col(col)
+        v = F.col("ts")
         if bigint_unit is not None:
             micros = {
-                "ns": F.expr(f"`{col}` div 1000"),
+                "ns": F.expr("`ts` div 1000"),
                 "us": v,
                 "ms": v * F.lit(1000),
                 "s": v * F.lit(1_000_000),
@@ -117,14 +117,14 @@ def normalize_event_ts(
         else:
             mag = F.abs(v)
             micros = (
-                F.when(mag >= F.lit(10**17), F.expr(f"`{col}` div 1000"))
+                F.when(mag >= F.lit(10**17), F.expr("`ts` div 1000"))
                 .when(mag >= F.lit(10**14), v)
                 .when(mag >= F.lit(10**11), v * F.lit(1000))
                 .otherwise(v * F.lit(1_000_000))
             )
-        return df.withColumn(col, F.timestamp_micros(micros))
+        return df.withColumn("ts", F.timestamp_micros(micros))
     if dtype == "timestamp_ntz":
-        return df.withColumn(col, F.col(col).cast("timestamp"))
+        return df.withColumn("ts", F.col("ts").cast("timestamp"))
     return df
 
 

@@ -97,8 +97,6 @@ def scan_text(text: str, auto: dict) -> list[int]:
 def scan_blocklist(
     df: DataFrame,
     phrases: list[str],
-    text_col: str = "text",
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """(id, n_hits, n_phrases_hit) — total overlapping blocklist
     matches and distinct phrases matched per document; NULL text
@@ -119,7 +117,7 @@ def scan_blocklist(
         return pd.DataFrame({"n_hits": hits, "n_phrases_hit": distinct})
 
     scanned = df.select(
-        F.col(id_col).alias("id"), scan(F.col(text_col)).alias("_s")
+        F.col("doc_id").alias("id"), scan(F.col("text")).alias("_s")
     )
     return scanned.select(
         "id",
@@ -129,14 +127,14 @@ def scan_blocklist(
 
 
 def top_trigram_phrases(
-    df: DataFrame, n: int = 8, text_col: str = "text"
+    df: DataFrame
 ) -> list[str]:
     """A deterministic corpus-derived phrase list (the self-contained
-    stand-in for an external blocklist): the n most frequent word
+    stand-in for an external blocklist): the 8 most frequent word
     trigrams, ties broken lexicographically."""
     from .text import tokens
 
-    toks = tokens(text_col)
+    toks = tokens("text")
     tri = F.zip_with(
         F.slice(toks, 1, F.greatest(F.size(toks) - 2, F.lit(0))),
         F.zip_with(
@@ -151,7 +149,7 @@ def top_trigram_phrases(
         .groupBy("p")
         .agg(F.count(F.lit(1)).alias("c"))
         .orderBy(F.desc("c"), F.asc("p"))
-        .limit(int(n))
+        .limit(8)
         .collect()
     )
     return [r["p"] for r in rows]

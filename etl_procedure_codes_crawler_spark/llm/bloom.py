@@ -73,18 +73,18 @@ def _positions(col, m_bits: int, k: int) -> list:
 
 
 def build_bloom(
-    df: DataFrame, col: str, m_bits: int, k: int
+    df: DataFrame, m_bits: int, k: int
 ) -> DataFrame:
-    """(word_idx, bits) filter relation over ``df[col]`` (NULLs are
+    """(word_idx, bits) filter relation over ``df.fp`` (NULLs are
     skipped — NULL is not a member). One corpus-sized explode + one
     bit_or groupBy; output is m/64 rows regardless of input size."""
     if m_bits % _WORD:
         raise ValueError(f"m_bits must be a multiple of {_WORD}")
-    pos = F.explode(F.array(*_positions(F.col(col), m_bits, k))).alias(
+    pos = F.explode(F.array(*_positions(F.col("fp"), m_bits, k))).alias(
         "_pos"
     )
     return (
-        df.where(F.col(col).isNotNull())
+        df.where(F.col("fp").isNotNull())
         .select(pos)
         .select(
             F.expr(f"_pos div {_WORD}").alias("word_idx"),
@@ -111,13 +111,14 @@ def merge_blooms(a: DataFrame, b: DataFrame) -> DataFrame:
 
 
 def probe_bloom(
-    df: DataFrame, col: str, bloom: DataFrame, m_bits: int, k: int
+    df: DataFrame, bloom: DataFrame, m_bits: int, k: int
 ) -> DataFrame:
-    """``df`` plus a ``maybe_seen`` column: true iff all k probed bits
-    are set. False means DEFINITELY not inserted (the dedup-safe
+    """``df`` plus a ``maybe_seen`` column: true iff all k bits probed
+    for ``df.fp`` are set. False
+ means DEFINITELY not inserted (the dedup-safe
     direction); NULL values probe to false. k broadcast joins against
     the m/64-row filter — the probed relation never shuffles."""
-    out = df.withColumn("_b_val", F.col(col))
+    out = df.withColumn("_b_val", F.col("fp"))
     checks = []
     for i, p in enumerate(_positions(F.col("_b_val"), m_bits, k)):
         out = out.withColumn(f"_p{i}", p)

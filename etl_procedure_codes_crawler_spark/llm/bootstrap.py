@@ -15,7 +15,7 @@ sampling distribution.
 
 Determinism (what makes this family hash-oracle-able — engines do not
 share an RNG): the uniform draw is md5-derived (u = md5-60(doc_id:b)
-/ 2^60, the cross-engine hash trick from llm/kmv.py), and the
+/ 2^60, the cross-engine hash llm/text.py md5_h60), and the
 Poisson(1) inverse CDF is applied via PRECOMPUTED decimal literal
 thresholds (cumulative e⁻¹·Σ1/k!) — libm's exp never runs at query
 time in either engine, so the weights are bit-reproducible. Replicate
@@ -37,6 +37,9 @@ import math
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from .text import md5_h60
+
 
 #: cumulative Poisson(1) CDF at k = 0..6, as exact double literals —
 #: shared verbatim with the DuckDB oracle (see queries.py)
@@ -61,36 +64,28 @@ def poisson1_weight(u: Column) -> Column:
 
 def u60(*cols: Column) -> Column:
     """Cross-engine uniform in (0, 1): md5-60 of the concatenated key
-    over 2^60 (llm/kmv.py hash trick)."""
+    over 2^60 (:func:`.text.md5_h60`)."""
     key = F.concat_ws(":", *cols)
-    h = F.conv(F.substring(F.md5(key), 1, 15), 16, 10).cast("long")
-    return h / F.lit(float(1 << 60))
+    return md5_h60(key) / F.lit(float(1 << 60))
 
 
 def bootstrap_ci_by_group(
     df: DataFrame,
-    group_col: str,
     value_col: str,
-    id_col: str = "doc_id",
-    n_replicates: int = 32,
-    lo_rank: int = 2,
-    hi_rank: int | None = None,
 ) -> DataFrame:
-    """(group, mean, ci_lo, ci_hi): the group mean of ``value_col``
-    (must be integer-typed — replicate sums stay exact) with its
+    """(group, mean, ci_lo, ci_hi): the per-``source`` mean of
+    ``value_col`` (must be integer-typed — replicate sums stay exact) with its
     order-statistic Poisson-bootstrap interval.
 
     Scale shape: the ×B explode is the only inflation and it carries
     three small columns, not the corpus; one groupBy computes all
     B·|groups| replicate means map-side-combined; ranking runs on the
     metadata-sized replicate relation."""
-    if hi_rank is None:
-        hi_rank = n_replicates - 1
     d = df.select(
-        F.col(group_col).alias("grp"),
-        F.col(id_col).alias("_id"),
+        F.col("source").alias("grp"),
+        F.col("doc_id").alias("_id"),
         F.col(value_col).cast("bigint").alias("_n"),
-    ).where(F.col(group_col).isNotNull() & F.col(id_col).isNotNull())
+    ).where(F.col("source").isNotNull() & F.col("doc_id").isNotNull())
     # the id filter pins the NULL contract cross-engine: Spark's
     # concat_ws SKIPS a NULL argument (a NULL id would still draw a
     # real uniform) while SQL '||' propagates NULL (weight 0) — so
@@ -99,7 +94,7 @@ def bootstrap_ci_by_group(
         "grp",
         "_id",
         "_n",
-        F.explode(F.sequence(F.lit(0), F.lit(n_replicates - 1))).alias("b"),
+        F.explode(F.sequence(F.lit(0), F.lit(31))).alias("b"),
     )
     w = rep.withColumn(
         "w", poisson1_weight(u60(F.col("_id").cast("string"), F.col("b").cast("string")))
@@ -122,8 +117,8 @@ def bootstrap_ci_by_group(
     )
     ranked = means.withColumn("rk", rk)
     ci = ranked.groupBy("grp").agg(
-        F.max(F.when(F.col("rk") == lo_rank, F.col("m"))).alias("_lo"),
-        F.max(F.when(F.col("rk") == hi_rank, F.col("m"))).alias("_hi"),
+        F.max(F.when(F.col("rk") == 2, F.col("m"))).alias("_lo"),
+        F.max(F.when(F.col("rk") == 31, F.col("m"))).alias("_hi"),
     )
     base = d.groupBy("grp").agg(
         (F.sum("_n").cast("double") / F.count(F.lit(1))).alias("_mean")

@@ -511,23 +511,17 @@ def _merge_loop(
 
 def train_bpe_merges(
     df: DataFrame,
-    text_col: str = "text",
     num_merges: int = 20,
-    min_pair_freq: int = 2,
-    on_exhausted: str = "stop",
     max_driver_words: int = _MAX_DRIVER_WORDS,
 ) -> DataFrame:
     """Learn the BPE merge table: (rank, left, right, merged,
     pair_freq), rank = merge order. Deterministic: the argmax
     tie-breaks on (freq desc, left asc, right asc).
 
-    ``on_exhausted`` controls what happens when no pair reaches
-    ``min_pair_freq`` before ``num_merges``: ``"stop"`` (default)
-    returns the merges learned so far; ``"raise"`` raises
-    :class:`BpeNotProgressing` for pipelines where a short vocabulary
-    must be loud."""
+    When no pair reaches frequency 2 before ``num_merges``, the
+    merges learned so far are returned."""
     merges, _syms = _train(
-        df, text_col, num_merges, min_pair_freq, on_exhausted,
+        df, "text", num_merges, 2, "stop",
         max_driver_words=max_driver_words,
     )
     return df.sparkSession.createDataFrame(
@@ -538,18 +532,15 @@ def train_bpe_merges(
 
 def train_bpe(
     df: DataFrame,
-    text_col: str = "text",
     num_merges: int = 20,
-    min_pair_freq: int = 2,
-    max_driver_words: int = _MAX_DRIVER_WORDS,
 ):
     """(merge list as (left, right) in rank order, segmentation table
     (word, tokens)) — the two artifacts encoding needs. The
     segmentation table is the trainer's OWN final symbol state, so
     encoding a word the trainer saw is a LOOKUP, not a recomputation."""
     merges, syms = _train(
-        df, text_col, num_merges, min_pair_freq, "stop",
-        max_driver_words=max_driver_words,
+        df, "text", num_merges, 2, "stop",
+        max_driver_words=_MAX_DRIVER_WORDS,
     )
     return (
         [(a, b) for _r, a, b, _c in merges],
@@ -595,8 +586,6 @@ def bpe_encode(
     df: DataFrame,
     merges: list[tuple[str, str]],
     segment_table: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """(id, tokens) — tokenize the corpus with a trained merge table.
 
@@ -609,8 +598,8 @@ def bpe_encode(
     (position, tokens) structs — one exchange on the doc id, no
     global sort."""
     words = df.select(
-        F.col(id_col).alias("id"),
-        F.posexplode(bpe_pretokens(text_col)).alias("pos", "word"),
+        F.col("doc_id").alias("id"),
+        F.posexplode(bpe_pretokens("text")).alias("pos", "word"),
     ).where(F.length("word") > 0)
     joined = words.join(segment_table, "word", "left")
     known = joined.filter(F.col("tokens").isNotNull())
@@ -636,7 +625,7 @@ def bpe_encode(
     # tokenizer must return (id, []) so downstream joins (packing,
     # manifests) keep every document
     return (
-        df.select(F.col(id_col).alias("id"))
+        df.select(F.col("doc_id").alias("id"))
         .dropDuplicates(["id"])
         .join(grouped, "id", "left")
         .select(

@@ -203,7 +203,6 @@ def duplicate_clusters(
 def keep_best_in_cluster(
     clusters: DataFrame,
     scored: DataFrame,
-    id_col: str = "doc_id",
     score_col: str = "score",
 ) -> DataFrame:
     """Survivor selection with a QUALITY argmax instead of min-id:
@@ -221,14 +220,14 @@ def keep_best_in_cluster(
     cluster's rows."""
     from pyspark.sql import Window
 
-    joined = clusters.join(scored.select(id_col, score_col), id_col)
+    joined = clusters.join(scored.select("doc_id", score_col), "doc_id")
     w = Window.partitionBy("cluster_id").orderBy(
-        F.col(score_col).desc(), F.col(id_col).asc()
+        F.col(score_col).desc(), F.col("doc_id").asc()
     )
     return (
         joined.withColumn("_rn", F.row_number().over(w))
         .select(
-            id_col,
+            "doc_id",
             "cluster_id",
             score_col,
             (F.col("_rn") == 1).alias("keep"),
@@ -237,7 +236,7 @@ def keep_best_in_cluster(
 
 
 def soft_dedup_weights(
-    clusters: DataFrame, id_col: str = "doc_id"
+    clusters: DataFrame
 ) -> DataFrame:
     """SlimPajama-style SOFT deduplication: instead of dropping
     near-dups, every document gets sampling weight 1/|cluster|, so
@@ -253,7 +252,7 @@ def soft_dedup_weights(
 
     w = Window.partitionBy("cluster_id")
     return clusters.select(
-        id_col,
+        "doc_id",
         "cluster_id",
         F.count(F.lit(1)).over(w).cast("bigint").alias("cluster_size"),
     ).withColumn(

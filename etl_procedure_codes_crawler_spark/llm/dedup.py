@@ -19,10 +19,10 @@ functions, and joins keep everything in Tungsten.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from .text import fingerprint_sha256, spread_small_input, tokens
+from .text import fingerprint_sha256, md5_h60, spread_small_input, tokens
 
 
 # ---------------------------------------------------------------------------
@@ -30,7 +30,7 @@ from .text import fingerprint_sha256, spread_small_input, tokens
 # ---------------------------------------------------------------------------
 
 def exact_duplicate_groups(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
+    df: DataFrame
 ) -> DataFrame:
     """Group documents by normalized-content fingerprint.
 
@@ -40,8 +40,8 @@ def exact_duplicate_groups(
     """
     return (
         df.select(
-            fingerprint_sha256(text_col).alias("fingerprint"),
-            F.col(id_col).cast("bigint").alias("id"),
+            fingerprint_sha256("text").alias("fingerprint"),
+            F.col("doc_id").cast("bigint").alias("id"),
         )
         .groupBy("fingerprint")
         .agg(
@@ -54,8 +54,6 @@ def exact_duplicate_groups(
 def incremental_dedup_new_docs(
     batch: DataFrame,
     snapshot: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """Survivors of a NEW document batch against an existing corpus
     snapshot — the production shape of exact dedup for a corpus that
@@ -75,11 +73,11 @@ def incremental_dedup_new_docs(
     Returns (fingerprint, first_id) — the batch rows to ingest.
     """
     b = batch.select(
-        fingerprint_sha256(text_col).alias("fingerprint"),
-        F.col(id_col).cast("bigint").alias("id"),
+        fingerprint_sha256("text").alias("fingerprint"),
+        F.col("doc_id").cast("bigint").alias("id"),
     )
     survivors = b.groupBy("fingerprint").agg(F.min("id").alias("first_id"))
-    snap = snapshot.select(fingerprint_sha256(text_col).alias("fingerprint"))
+    snap = snapshot.select(fingerprint_sha256("text").alias("fingerprint"))
     return survivors.join(snap, "fingerprint", "left_anti")
 
 
@@ -103,11 +101,11 @@ def shingles_column(text_col: str = "text", k: int = 3):
 
 
 def shingle_rows(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id", k: int = 3
+    df: DataFrame, k: int = 3
 ) -> DataFrame:
     return spread_small_input(df).select(
-        F.col(id_col).cast("bigint").alias("id"),
-        F.explode(shingles_column(text_col, k)).alias("shingle"),
+        F.col("doc_id").cast("bigint").alias("id"),
+        F.explode(shingles_column("text", k)).alias("shingle"),
     )
 
 
@@ -117,16 +115,13 @@ def shingle_rows(
 
 def _shared_shingle_counts(
     df: DataFrame,
-    text_col: str,
-    id_col: str,
-    k: int,
     max_doc_freq: int | None,
 ) -> DataFrame:
     """(doc_a, doc_b, shared, na, nb) for every doc pair sharing at
     least one (df-cap-surviving) shingle — the common core of the
     Jaccard and containment pair miners. See :func:`ngram_jaccard_pairs`
     for the shuffle/df-cap rationale; the shapes are identical."""
-    sh = shingle_rows(df, text_col, id_col, k)
+    sh = shingle_rows(df, 3)
     # Explicit partition count on the join key: the posting-list
     # self-join's OUTPUT is quadratic per shingle while its INPUT is
     # small, so AQE's byte-based coalescing collapses it into one
@@ -172,9 +167,6 @@ def _shared_shingle_counts(
 
 def ngram_jaccard_pairs(
     df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    k: int = 3,
     threshold: float = 0.05,
     max_doc_freq: int | None = None,
 ) -> DataFrame:
@@ -196,7 +188,7 @@ def ngram_jaccard_pairs(
     tests/test_llm_dedup.py adversarial cases).
     """
     return (
-        _shared_shingle_counts(df, text_col, id_col, k, max_doc_freq)
+        _shared_shingle_counts(df, max_doc_freq)
         .select(
             "doc_a",
             "doc_b",
@@ -211,9 +203,6 @@ def ngram_jaccard_pairs(
 
 def ngram_containment_pairs(
     df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    k: int = 3,
     threshold: float = 0.3,
     max_doc_freq: int | None = 50,
 ) -> DataFrame:
@@ -234,7 +223,7 @@ def ngram_containment_pairs(
     the final ratio differs. One row per unordered pair carrying BOTH
     directed containments; kept when the larger clears ``threshold``.
     """
-    pairs = _shared_shingle_counts(df, text_col, id_col, k, max_doc_freq)
+    pairs = _shared_shingle_counts(df, max_doc_freq)
     c_ab = F.col("shared").cast("double") / F.col("na")
     c_ba = F.col("shared").cast("double") / F.col("nb")
     return pairs.select(
@@ -251,8 +240,6 @@ def ngram_containment_pairs(
 
 def duplicate_spans(
     df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     min_len: int = 8,
     max_gram_freq: int = 64,
 ) -> DataFrame:
@@ -283,7 +270,7 @@ def duplicate_spans(
     rides the repartition the join needs anyway. At 100 TB this is
     the verify/extract stage after LSH candidate generation, not the
     all-corpus candidate generator."""
-    grams = _positioned_grams(df, text_col, id_col, min_len)
+    grams = _positioned_grams(df, min_len)
     # one exchange on the gram feeds the cap window AND both join
     # sides (ReuseExchange); explicit count exempts it from AQE
     # coalescing — the join's OUTPUT is quadratic per gram while its
@@ -318,14 +305,14 @@ def duplicate_spans(
 
 
 def _positioned_grams(
-    df: DataFrame, text_col: str, id_col: str, min_len: int
+    df: DataFrame, min_len: int
 ) -> DataFrame:
     """(id, pos, g): every doc's ``min_len``-token grams with their
     1-based start positions — one row per token, the shingle
     families' cardinality."""
     base = (
         spread_small_input(df)
-        .select(F.col(id_col).alias("id"), tokens(text_col).alias("t"))
+        .select(F.col("doc_id").alias("id"), tokens("text").alias("t"))
         .where(F.size("t") >= min_len)
     )
     return base.select(
@@ -360,8 +347,6 @@ def _spans_from_matches(m: DataFrame, min_len: int) -> DataFrame:
 def duplicate_spans_for_pairs(
     df: DataFrame,
     pairs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     min_len: int = 8,
 ) -> DataFrame:
     """The 100 TB path for :func:`duplicate_spans`: extract maximal
@@ -378,7 +363,7 @@ def duplicate_spans_for_pairs(
     list is ever self-joined, so a boilerplate gram shared by a
     million docs costs nothing unless LSH actually paired those docs
     (the reason the cap parameter does not exist here)."""
-    grams = _positioned_grams(df, text_col, id_col, min_len)
+    grams = _positioned_grams(df, min_len)
     a0 = F.col("doc_a").cast("long")
     b0 = F.col("doc_b").cast("long")
     p = (
@@ -421,14 +406,14 @@ def duplicate_spans_for_pairs(
     return _spans_from_matches(m, min_len)
 
 
-def intra_doc_kept_blocks(text_col: str = "text", block: int = 8):
+def intra_doc_kept_blocks(block: int = 8):
     """(n_blocks, kept_blocks) Column pair for WITHIN-document
     repetition removal: each document splits into non-overlapping
     ``block``-token blocks and keeps only each block's FIRST
     occurrence, as per-row JVM array algebra (zero shuffle, no UDF).
     Funnel capstones ride these signals inside a larger single-scan
     projection. ``kept_blocks`` is NULL for NULL text."""
-    toks = F.split(F.trim(F.col(text_col)), r"\s+")
+    toks = F.split(F.trim(F.col("text")), r"\s+")
     n = F.size(toks)
     b = int(block)
     # token counts are int32-bounded per doc, so floor of one IEEE
@@ -442,15 +427,13 @@ def intra_doc_kept_blocks(text_col: str = "text", block: int = 8):
     kept = F.filter(
         blocks, lambda blk, i: F.array_position(blocks, blk) == i + 1
     )
-    kept = F.when(F.col(text_col).isNull(), None).otherwise(kept)
+    kept = F.when(F.col("text").isNull(), None).otherwise(kept)
     return n_blocks, kept
 
 
 def remove_duplicate_spans(
     df: DataFrame,
     spans: DataFrame | None = None,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     min_len: int = 8,
     max_gram_freq: int = 64,
 ) -> DataFrame:
@@ -473,11 +456,11 @@ def remove_duplicate_spans(
     doc alone."""
     if spans is None:
         spans = duplicate_spans(
-            df, text_col, id_col, min_len=min_len, max_gram_freq=max_gram_freq
+            df, min_len=min_len, max_gram_freq=max_gram_freq
         )
     doomed = (
         spans.select(
-            F.col("doc_b").alias(id_col),
+            F.col("doc_b").alias("doc_id"),
             F.explode(
                 F.sequence(
                     F.col("b_start"),
@@ -485,19 +468,19 @@ def remove_duplicate_spans(
                 )
             ).alias("p"),
         )
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(F.collect_set("p").alias("_doomed"))
     )
-    toks = tokens(text_col)
+    toks = tokens("text")
     d = F.coalesce(F.col("_doomed"), F.array().cast("array<bigint>"))
     kept = F.filter(
         toks, lambda t, i: ~F.array_contains(d, (i + 1).cast("long"))
     )
-    null_text = F.col(text_col).isNull()
+    null_text = F.col("text").isNull()
     return (
-        df.join(doomed, id_col, "left")
+        df.join(doomed, "doc_id", "left")
         .select(
-            id_col,
+            "doc_id",
             # NULL text stays NULL (concat_ws would fabricate '') and
             # removes nothing — unscoreable rows pass through intact
             F.when(null_text, F.lit(None).cast("string"))
@@ -566,14 +549,8 @@ def _minhash_member(i: int, shingle, hash_fn: str):
     if hash_fn == "xx":
         return F.xxhash64(F.lit(i), shingle)
     if hash_fn == "md5":
-        h1 = F.conv(F.substring(F.md5(shingle), 1, 15), 16, 10).cast(
-            "long"
-        )
-        h2 = F.conv(
-            F.substring(F.md5(F.concat(F.lit("kh2:"), shingle)), 1, 15),
-            16,
-            10,
-        ).cast("long")
+        h1 = md5_h60(shingle)
+        h2 = md5_h60(F.concat(F.lit("kh2:"), shingle))
         ra, rb = _minhash_rots(i)
         return _rot_col(h1, ra).bitwiseXOR(_rot_col(h2, rb))
     raise ValueError(f"unknown minhash hash_fn {hash_fn!r} (xx|md5)")
@@ -581,8 +558,6 @@ def _minhash_member(i: int, shingle, hash_fn: str):
 
 def minhash_signatures(
     df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     k: int = 3,
     num_hashes: int = 32,
     hash_fn: str = "xx",
@@ -597,7 +572,7 @@ def minhash_signatures(
     the run needs engine-reproducible signatures (audits, the DuckDB
     correctness gate, cross-system handoffs).
     """
-    sh = shingle_rows(df, text_col, id_col, k)
+    sh = shingle_rows(df, k)
     aggs = [
         F.min(_minhash_member(i, F.col("shingle"), hash_fn)).alias(f"h{i}")
         for i in range(num_hashes)
@@ -676,39 +651,32 @@ def _capped_bucket_pairs(
     return all_pairs.unionByName(star_pairs).distinct()
 
 
+def band_bucket(slots: list[Column], hash_fn: str) -> Column:
+    """One LSH band's bucket key: xxhash64 of the band's minhash
+    slots, or in ``md5`` mode the md5-60 of their colon-joined values
+    (longs render identically as decimal strings in Spark and DuckDB,
+    so bucket membership is engine-deterministic too)."""
+    if hash_fn == "md5":
+        return md5_h60(F.concat_ws(":", *slots))
+    return F.xxhash64(*slots)
+
+
 def minhash_buckets(
     df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    k: int = 3,
-    bands: int = 8,
-    rows_per_band: int = 4,
     hash_fn: str = "xx",
 ) -> DataFrame:
-    """(id, band, bucket) LSH band-bucket assignment. In ``md5`` mode
-    the bucket key is the md5-60 of the band's colon-joined minhash
-    values (longs render identically as decimal strings in Spark and
-    DuckDB), so bucket membership is engine-deterministic too."""
-    sig = minhash_signatures(
-        df, text_col, id_col, k, bands * rows_per_band, hash_fn
-    )
-
-    def bucket_of(band: int):
-        cols = [
-            F.col(f"h{band * rows_per_band + r}") for r in range(rows_per_band)
-        ]
-        if hash_fn == "md5":
-            return F.conv(
-                F.substring(F.md5(F.concat_ws(":", *cols)), 1, 15), 16, 10
-            ).cast("long")
-        return F.xxhash64(*cols)
-
+    """(id, band, bucket) LSH band-bucket assignment: 8 bands of 4
+    rows over 32 minhashes of 3-word shingles, each keyed by
+    :func:`band_bucket`."""
+    sig = minhash_signatures(df, 3, 32, hash_fn)
     band_structs = [
         F.struct(
             F.lit(band).alias("band"),
-            bucket_of(band).alias("bucket"),
+            band_bucket(
+                [F.col(f"h{band * 4 + r}") for r in range(4)], hash_fn
+            ).alias("bucket"),
         )
-        for band in range(bands)
+        for band in range(8)
     ]
     return sig.select(
         "id", F.explode(F.array(*band_structs)).alias("bb")
@@ -717,11 +685,6 @@ def minhash_buckets(
 
 def minhash_lsh_candidate_pairs(
     df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    k: int = 3,
-    bands: int = 8,
-    rows_per_band: int = 4,
     max_bucket_size: int = 5000,
     hash_fn: str = "xx",
 ) -> DataFrame:
@@ -731,24 +694,16 @@ def minhash_lsh_candidate_pairs(
     buckets are star-capped at ``max_bucket_size`` (see
     :func:`_capped_bucket_pairs`).
     """
-    buckets = minhash_buckets(
-        df, text_col, id_col, k, bands, rows_per_band, hash_fn
-    )
+    buckets = minhash_buckets(df, hash_fn)
     return _capped_bucket_pairs(buckets, max_bucket_size)
 
 
 def minhash_near_dup_pairs(
     df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    k: int = 3,
-    bands: int = 8,
-    rows_per_band: int = 4,
-    threshold: float = 0.5,
     hash_fn: str = "xx",
 ) -> DataFrame:
     """The full near-dup pipeline: LSH candidates → exact-Jaccard
-    verification → threshold filter. Verification joins shingle sets
+    verification → Jaccard >= 0.5. Verification joins shingle sets
     only for candidate pairs (broadcast the candidate list when small).
 
     The shingle explode is deliberately recomputed per consumer
@@ -762,9 +717,9 @@ def minhash_near_dup_pairs(
     scan pipelines map-side into each consumer's own single shuffle.
     """
     candidates = minhash_lsh_candidate_pairs(
-        df, text_col, id_col, k, bands, rows_per_band, hash_fn=hash_fn
+        df, hash_fn=hash_fn
     )
-    sh = shingle_rows(df, text_col, id_col, k)
+    sh = shingle_rows(df, 3)
     sizes = sh.groupBy("id").agg(F.count(F.lit(1)).alias("n"))
     a_sh = sh.select(F.col("id").alias("doc_a"), F.col("shingle"))
     b_sh = sh.select(F.col("id").alias("doc_b"), F.col("shingle"))
@@ -802,7 +757,7 @@ def minhash_near_dup_pairs(
                 / (F.col("na") + F.col("nb") - F.col("shared"))
             ).alias("jaccard"),
         )
-        .filter(F.col("jaccard") >= threshold)
+        .filter(F.col("jaccard") >= 0.5)
     )
 
 
@@ -812,9 +767,6 @@ def minhash_near_dup_pairs(
 
 def simhash_signatures(
     df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    bits: int = 64,
     hash_fn: str = "xx",
 ) -> DataFrame:
     """64-bit SimHash per document, pure column expressions.
@@ -825,26 +777,21 @@ def simhash_signatures(
     (id, 64 small ints).
 
     ``hash_fn="md5"`` hashes tokens with the 60-bit md5 prefix of
-    "s:token" (and caps ``bits`` at 60): DuckDB computes the identical
+    "s:token" (so the signature has 60 bits): DuckDB computes the identical
     token hashes and bit votes, making the SimHash family — signature
     AND hamming pairs — engine-deterministic and hash-oracle-able.
     xxhash64 stays the default for raw throughput."""
     if hash_fn == "md5":
-        bits = min(bits, 60)
-        th = F.conv(
-            F.substring(
-                F.md5(F.concat(F.lit("s:"), F.col("token"))), 1, 15
-            ),
-            16,
-            10,
-        ).cast("long")
+        bits = 60
+        th = md5_h60(F.concat(F.lit("s:"), F.col("token")))
     elif hash_fn == "xx":
+        bits = 64
         th = F.xxhash64("token")
     else:
         raise ValueError(f"unknown simhash hash_fn {hash_fn!r} (xx|md5)")
     tok = spread_small_input(df).select(
-        F.col(id_col).cast("bigint").alias("id"),
-        F.explode(tokens(text_col)).alias("token"),
+        F.col("doc_id").cast("bigint").alias("id"),
+        F.explode(tokens("text")).alias("token"),
     ).withColumn("th", th)
     votes = tok.groupBy("id").agg(
         *[
@@ -870,21 +817,18 @@ def hamming_band_pairs(
     id_col: str = "id",
     max_hamming: int = 3,
     max_bucket_size: int = 5000,
-    bands: int = 4,
 ) -> DataFrame:
     """(doc_a, doc_b, hamming) pairs of 64-bit signatures within
-    ``max_hamming``, via a ``bands``-way band join (each band is
-    64/bands bits) + exact popcount verification with ``bit_count``.
-    EXACT by pigeonhole when ``max_hamming < bands``: fewer flipped
+    ``max_hamming``, via a 4-way band join (each band is
+    16 bits) + exact popcount verification with ``bit_count``.
+    EXACT by pigeonhole when ``max_hamming < 4``: fewer flipped
     bits than bands forces at least one band to agree verbatim, so
     every qualifying pair shares a bucket. Degenerate buckets (the
     all-zero signature of empty inputs) are star-capped at
     ``max_bucket_size`` — see :func:`_capped_bucket_pairs`. Shared by
     text SimHash and image perceptual hashes (multimodal.image_hashes):
     any 64-bit locality-sensitive signature rides the same machinery."""
-    if 64 % bands:
-        raise ValueError(f"bands must divide 64, got {bands}")
-    width = 64 // bands
+    width = 16  # 64 bits in 4 bands
     mask = (1 << width) - 1
     band_structs = [
         F.struct(
@@ -893,7 +837,7 @@ def hamming_band_pairs(
             .bitwiseAND(F.lit(mask))
             .alias("bucket"),
         )
-        for band in range(bands)
+        for band in range(4)
     ]
     buckets = sig.select(
         F.col(id_col).cast("bigint").alias("id"),
@@ -919,23 +863,18 @@ def hamming_band_pairs(
 def hamming_band_pairs_between(
     new: DataFrame,
     existing: DataFrame,
-    sig_col: str,
-    id_col: str = "id",
-    max_hamming: int = 3,
-    bands: int = 4,
 ) -> DataFrame:
-    """(new_id, existing_id, hamming) pairs ACROSS two relations —
+    """(new_id, existing_id, hamming) pairs within hamming 3 ACROSS
+    two relations of (id, phash) —
     the store-probe shape: a small batch of signatures against a
     persisted corpus-sized signature relation. Same band construction
     and pigeonhole-exactness as :func:`hamming_band_pairs`; both
-    sides explode to ``bands`` rows and equi-join on (band, bucket),
+    sides explode to 4 rows and equi-join on (band, bucket),
     so the persisted side shuffles 3 small columns and the batch side
     is broadcast-sized by construction. Self-matches (same id on both
     sides) are excluded — replayed batches are the exact-id path's
     job."""
-    if 64 % bands:
-        raise ValueError(f"bands must divide 64, got {bands}")
-    width = 64 // bands
+    width = 16  # 64 bits in 4 bands
     mask = (1 << width) - 1
 
     def _banded(df: DataFrame, id_out: str, sig_out: str) -> DataFrame:
@@ -946,11 +885,11 @@ def hamming_band_pairs_between(
                 .bitwiseAND(F.lit(mask))
                 .alias("bucket"),
             )
-            for band in range(bands)
+            for band in range(4)
         ]
         return df.select(
-            F.col(id_col).cast("bigint").alias(id_out),
-            F.col(sig_col).cast("bigint").alias(sig_out),
+            F.col("id").cast("bigint").alias(id_out),
+            F.col("phash").cast("bigint").alias(sig_out),
         ).select(
             id_out, sig_out, F.explode(F.array(*structs)).alias("bb")
         ).select(
@@ -972,7 +911,7 @@ def hamming_band_pairs_between(
             .cast("bigint")
             .alias("hamming"),
         )
-        .filter(F.col("hamming") <= max_hamming)
+        .filter(F.col("hamming") <= 3)
         .groupBy("new_id", "existing_id")
         .agg(F.min("hamming").alias("hamming"))
     )
@@ -980,8 +919,6 @@ def hamming_band_pairs_between(
 
 def simhash_near_dup_pairs(
     df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     max_hamming: int = 3,
     max_bucket_size: int = 5000,
     hash_fn: str = "xx",
@@ -993,9 +930,9 @@ def simhash_near_dup_pairs(
     at ``max_bucket_size`` — see :func:`_capped_bucket_pairs`. In
     ``md5`` mode the signature is 60-bit (top band carries 12 live
     bits — the pigeonhole exactness argument is unchanged)."""
-    sig = simhash_signatures(df, text_col, id_col, hash_fn=hash_fn)
+    sig = simhash_signatures(df, hash_fn=hash_fn)
     return hamming_band_pairs(
-        sig, "simhash", "id", max_hamming, max_bucket_size, bands=4
+        sig, "simhash", "id", max_hamming, max_bucket_size
     )
 
 
@@ -1003,8 +940,6 @@ def remove_boilerplate_passages(
     df: DataFrame,
     min_doc_freq: int = 50,
     block: int = 16,
-    text_col: str = "text",
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """CCNet-style CROSS-document boilerplate strip: split every
     document into consecutive ``block``-token passages; a passage
@@ -1026,12 +961,12 @@ def remove_boilerplate_passages(
     Complements :func:`intra_doc_kept_blocks` (within-doc) and
     :func:`remove_duplicate_spans` (pairwise spans): this is the
     corpus-frequency axis."""
-    chunks = passage_rows(df, block, text_col, id_col)
+    chunks = passage_rows(df, block, "text", "doc_id")
     freq = chunks.groupBy("fp").agg(
         F.countDistinct("id").alias("_df")
     )
     judged = chunks.join(freq, "fp")
-    return _rebuild_cleaned(df, judged, min_doc_freq, id_col)
+    return _rebuild_cleaned(df, judged, min_doc_freq)
 
 
 def passage_rows(
@@ -1101,14 +1036,14 @@ def _rebuilt_per_doc(judged: DataFrame, min_doc_freq: int) -> DataFrame:
 
 
 def _rebuild_cleaned(
-    df: DataFrame, judged: DataFrame, min_doc_freq: int, id_col: str
+    df: DataFrame, judged: DataFrame, min_doc_freq: int
 ) -> DataFrame:
     """Reassemble kept passages in order from a ``judged`` relation of
     (id, pos, passage, _df) rows; every input row of ``df`` survives —
     NULL/empty text re-enters with NULL text_clean and zero counts."""
     rebuilt = _rebuilt_per_doc(judged, min_doc_freq)
     return (
-        df.select(F.col(id_col).alias("id")).dropDuplicates(["id"])
+        df.select(F.col("doc_id").alias("id")).dropDuplicates(["id"])
         .join(rebuilt, "id", "left")
         .select(
             "id",

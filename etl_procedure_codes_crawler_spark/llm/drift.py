@@ -37,12 +37,12 @@ from pyspark.sql import functions as F
 from . import text as T
 
 
-def token_counts(df: DataFrame, text_col: str = "text") -> DataFrame:
+def token_counts(df: DataFrame) -> DataFrame:
     """(token, cnt) unigram counts — the persistable reference
     distribution for :func:`tv_between` (vocabulary-sized output,
     map-side combined)."""
     return (
-        df.select(F.explode(T.tokens(text_col)).alias("token"))
+        df.select(F.explode(T.tokens("text")).alias("token"))
         .groupBy("token")
         .agg(F.count(F.lit(1)).alias("cnt"))
     )
@@ -109,8 +109,6 @@ def tv_between(a_counts: DataFrame, b_counts: DataFrame) -> DataFrame:
 
 def token_drift_by_source(
     df: DataFrame,
-    text_col: str = "text",
-    group_col: str = "source",
 ) -> DataFrame:
     """Per-source unigram drift vs the whole corpus.
 
@@ -120,8 +118,8 @@ def token_drift_by_source(
     token string, so the output is deterministic).
     """
     toks = df.select(
-        F.col(group_col).alias("source"),
-        F.explode(T.tokens(text_col)).alias("token"),
+        F.col("source"),
+        F.explode(T.tokens("text")).alias("token"),
     )
     # corpus-sized shuffle #1 (and the only one): per-(source, token)
     # counts with map-side partial aggregation

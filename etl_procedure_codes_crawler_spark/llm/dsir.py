@@ -68,22 +68,20 @@ def _horner_hash(col: Column) -> Column:
 
 
 def ngram_buckets_column(
-    text_col: Column | str, num_buckets: int, n_max: int = 2
+    text_col: Column | str, num_buckets: int
 ) -> Column:
-    """Array of hashed n-gram buckets (unigrams and, for
-    ``n_max >= 2``, word bigrams) — one element per OCCURRENCE;
-    multiplicity is the feature count DSIR weights by."""
+    """Array of hashed n-gram buckets (unigrams and word bigrams) —
+    one element per OCCURRENCE; multiplicity is the feature count
+    DSIR weights by."""
     toks = tokens(text_col)
-    grams = toks
-    if n_max >= 2:
-        bigrams = F.when(
-            F.size(toks) >= 2,
-            F.transform(
-                F.sequence(F.lit(0), F.size(toks) - 2),
-                lambda i: F.concat_ws(" ", F.slice(toks, i + 1, 2)),
-            ),
-        ).otherwise(F.array().cast("array<string>"))
-        grams = F.concat(toks, bigrams)
+    bigrams = F.when(
+        F.size(toks) >= 2,
+        F.transform(
+            F.sequence(F.lit(0), F.size(toks) - 2),
+            lambda i: F.concat_ws(" ", F.slice(toks, i + 1, 2)),
+        ),
+    ).otherwise(F.array().cast("array<string>"))
+    grams = F.concat(toks, bigrams)
     return F.transform(
         grams, lambda g: F.pmod(_horner_hash(g), F.lit(num_buckets))
     )
@@ -91,16 +89,14 @@ def ngram_buckets_column(
 
 def ngram_bucket_rows(
     df: DataFrame,
-    id_col: str = "doc_id",
     text_col: str = "text",
     num_buckets: int = 4096,
-    n_max: int = 2,
 ) -> DataFrame:
     """(id, bucket) — one row per n-gram occurrence."""
     return spread_small_input(df).select(
-        F.col(id_col).alias("id"),
+        F.col("doc_id").alias("id"),
         F.explode(
-            ngram_buckets_column(text_col, num_buckets, n_max)
+            ngram_buckets_column(text_col, num_buckets)
         ).alias("bucket"),
     )
 
@@ -108,10 +104,8 @@ def ngram_bucket_rows(
 def bucket_log_ratios(
     target: DataFrame,
     raw: DataFrame,
-    id_col: str = "doc_id",
     text_col: str = "text",
     num_buckets: int = 4096,
-    n_max: int = 2,
 ) -> DataFrame:
     """(bucket, ratio_micro) for EVERY bucket in [0, num_buckets) —
     the Laplace-smoothed importance log-ratio
@@ -139,7 +133,7 @@ def bucket_log_ratios(
 
     def counts(df: DataFrame, name: str) -> DataFrame:
         return (
-            ngram_bucket_rows(df, id_col, text_col, num_buckets, n_max)
+            ngram_bucket_rows(df, text_col, num_buckets)
             .groupBy("bucket")
             .agg(F.count(F.lit(1)).alias(name))
         )
@@ -182,17 +176,15 @@ def bucket_log_ratios(
 def importance_weights(
     raw: DataFrame,
     ratios: DataFrame,
-    id_col: str = "doc_id",
     text_col: str = "text",
     num_buckets: int = 4096,
-    n_max: int = 2,
 ) -> DataFrame:
     """(id, n_grams, weight_micro) per raw document: the exact
     integer sum of per-occurrence bucket log-ratios (micro-units).
     ``ratios`` must come from :func:`bucket_log_ratios` with the same
-    ``num_buckets``/``n_max`` — the full spine guarantees every
+    ``num_buckets`` — the full spine guarantees every
     occurrence joins; the join broadcasts (num_buckets rows)."""
-    occ = ngram_bucket_rows(raw, id_col, text_col, num_buckets, n_max)
+    occ = ngram_bucket_rows(raw, text_col, num_buckets)
     return (
         occ.join(F.broadcast(ratios), "bucket")
         .groupBy("id")
@@ -207,14 +199,12 @@ def importance_topk(
     raw: DataFrame,
     ratios: DataFrame,
     k: int,
-    id_col: str = "doc_id",
     text_col: str = "text",
     num_buckets: int = 4096,
-    n_max: int = 2,
 ) -> DataFrame:
     """The deterministic DSIR variant: the ``k`` raw documents most
     target-like by importance weight, ties broken by id. Integer sort
     keys → stable cross-engine; TakeOrderedAndProject keeps the
     shuffle at k rows per partition."""
-    w = importance_weights(raw, ratios, id_col, text_col, num_buckets, n_max)
+    w = importance_weights(raw, ratios, text_col, num_buckets)
     return w.orderBy(F.col("weight_micro").desc(), F.col("id").asc()).limit(k)

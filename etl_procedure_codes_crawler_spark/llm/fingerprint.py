@@ -89,24 +89,20 @@ def _winnow_udf(k: int, window: int):
     return winnow
 
 
-def _normalized_capped(text_col: str, max_chars: int):
+def _normalized_capped(max_chars: int):
     from .text import normalized_text
 
-    return F.substring(normalized_text(text_col), 1, max_chars)
+    return F.substring(normalized_text("text"), 1, max_chars)
 
 
 def winnow_fingerprints(
     df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    k: int = KGRAM,
-    window: int = WINDOW,
     max_chars: int = MAX_CHARS,
 ) -> DataFrame:
     """(id, fingerprint) — one row per selected k-gram hash per doc,
-    ascending-distinct within a doc. Documents shorter than ``k``
+    ascending-distinct within a doc. Documents shorter than ``KGRAM``
     normalized characters yield no rows."""
-    winnow = _winnow_udf(k, window)
+    winnow = _winnow_udf(KGRAM, WINDOW)
     # explode_outer + null filter on the GENERATED column: a plain
     # explode adds an implicit size>0 predicate on the UDF output,
     # which splits the plan into two ArrowEvalPython stages — the
@@ -116,8 +112,8 @@ def winnow_fingerprints(
     # explode dropped.
     return (
         df.select(
-            F.col(id_col).alias("id"),
-            winnow(_normalized_capped(text_col, max_chars)).alias("_fps"),
+            F.col("doc_id").alias("id"),
+            winnow(_normalized_capped(max_chars)).alias("_fps"),
         )
         .select("id", F.explode_outer("_fps").alias("fingerprint"))
         .where(F.col("fingerprint").isNotNull())
@@ -126,10 +122,6 @@ def winnow_fingerprints(
 
 def winnow_overlap_pairs(
     df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    k: int = KGRAM,
-    window: int = WINDOW,
     max_chars: int = MAX_CHARS,
     min_shared: int = 2,
     max_df: int = 20,
@@ -154,7 +146,7 @@ def winnow_overlap_pairs(
     # relation is (id, 8-byte fingerprint) rows — the cheap thing —
     # while the text scan happens exactly once.
     fps = winnow_fingerprints(
-        df, text_col, id_col, k, window, max_chars
+        df, max_chars
     ).localCheckpoint(eager=True)
     df_ok = (
         fps.groupBy("fingerprint")

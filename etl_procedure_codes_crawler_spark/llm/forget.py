@@ -113,7 +113,7 @@ def _heal_pruned_forget(spark, fs, hpath, path: str) -> None:
         }
         unstamped = [f for f in healed_removed if f not in already]
         if unstamped:
-            record_rewrite(spark, path, "forget", unstamped)
+            record_rewrite(spark, path, unstamped)
         remove_stale(fs, prev, staging, marker)
     else:
         if fs.exists(prev):
@@ -263,7 +263,7 @@ def _forget_plain(
     # the expired versions permanently blame an "unknown rewrite".
     # A crash between marker and stamp is covered by the heal, which
     # stamps from ._forget_prev.
-    record_rewrite(spark, path, "forget", affected)
+    record_rewrite(spark, path, affected)
     # phase 2: move survivor files in at their partition-relative
     # paths (fresh writer UUID — no collision with surviving
     # originals)
@@ -360,7 +360,7 @@ def _forget_index_cells(
     # window (crash between the last rename and the stamp) in which
     # the versions this takedown expired blame an "unknown rewrite"
     # with the evidence already gone.
-    record_rewrite(spark, coded_path, "forget", removed_files)
+    record_rewrite(spark, coded_path, removed_files)
     staging = coded_path + "._forget_staging"
     prev_root = coded_path + "._forget_prev"
     if kept:
@@ -393,15 +393,14 @@ def forget_documents(
     warehouse_path: str | None = None,
     neardup_store_path: str | None = None,
     ann_index_path: str | None = None,
-    id_col: str = "doc_id",
 ) -> dict[str, int]:
-    """Remove every trace of ``ids`` (a one-column DataFrame, or any
-    DataFrame whose ``id_col`` holds the doomed ids) from the given
+    """Remove every trace of ``ids`` (a DataFrame whose ``doc_id``
+    column holds the doomed ids) from the given
     artifacts. Returns rows removed per artifact — re-run after a
     crash until every count is 0 (idempotent convergence)."""
     spark = ids.sparkSession
     key_ids = (
-        ids.select(F.col(id_col).alias("_doomed"))
+        ids.select(F.col("doc_id").alias("_doomed"))
         .where(F.col("_doomed").isNotNull())
         .dropDuplicates(["_doomed"])
         .localCheckpoint(eager=True)  # joined against every artifact
@@ -432,7 +431,7 @@ def forget_documents(
             )
     if warehouse_path is not None:
         removed["warehouse"] = _forget_plain(
-            spark, warehouse_path, key_ids, id_col
+            spark, warehouse_path, key_ids, "doc_id"
         )
     if neardup_store_path is not None:
         removed["neardup_store"] = _forget_plain(

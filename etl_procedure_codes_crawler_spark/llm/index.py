@@ -54,14 +54,8 @@ from .similarity import (
 def build_ivfpq_index(
     corpus: DataFrame,
     path: str,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
     num_centroids: int = 16,
-    m: int = 8,
-    codebook_size: int = 64,
     max_iter: int = 5,
-    train_sample: int = 1 << 16,
-    dim: int | None = None,
 ) -> None:
     """Train quantizers (bounded driver-side sample), encode the corpus
     in ONE pass (Arrow-batched cell+codes), and lay it out partitioned
@@ -74,10 +68,9 @@ def build_ivfpq_index(
     identical structures from the corpus."""
     from .text import spread_small_input
 
-    ids, train_X = _train_vectors_by_id(corpus, vec_col, id_col, train_sample)
+    ids, train_X = _train_vectors_by_id(corpus, 1 << 16)
     codebook, codes_udf, _lut_udf = _pq_int_context(
-        corpus, vec_col, id_col, m, codebook_size, max_iter,
-        dim=dim, train_data=(ids, train_X),
+        corpus, 64, max_iter, train_data=(ids, train_X)
     )
     keys = [(_md5_h60_py(f"km:{int(i)}"), int(i)) for i in ids]
     centroids = _kmeans_int(
@@ -87,7 +80,7 @@ def build_ivfpq_index(
 
     coded = spread_small_input(
         corpus.select(
-            F.col(id_col).alias("id"), F.col(vec_col).alias("vector")
+            F.col("vec_id").alias("id"), F.col("embedding").alias("vector")
         )
     ).select(
         "id",
@@ -111,9 +104,9 @@ def build_ivfpq_index(
     meta = {
         "centroids": centroids.tolist(),
         "codebook": np.asarray(codebook).tolist(),
-        "m": m,
+        "m": 8,
         "sub": int(np.asarray(codebook).shape[1]),
-        "codebook_size": codebook_size,
+        "codebook_size": 64,
         "num_centroids": num_centroids,
         "dim": int(train_X.shape[1]),
     }
@@ -139,9 +132,6 @@ def query_ivfpq_index(
     queries: DataFrame,
     k: int = 5,
     nprobe: int = 4,
-    shortlist_factor: int = 10,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
 ) -> DataFrame:
     """Top-k against the persisted index. The query side is collected
     (a serving query set is small by construction) and its probe
@@ -156,7 +146,7 @@ def query_ivfpq_index(
     m, sub, K = meta["m"], meta["sub"], meta["codebook_size"]
 
     q_side = queries.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv")
+        F.col("vec_id").alias("query_id"), F.col("embedding").alias("qv")
     )
     # the probe/re-rank relations are rebuilt driver-side, so they must
     # carry the CALLER's id type — hard-coding bigint would crash a
@@ -193,7 +183,7 @@ def query_ivfpq_index(
     coded = spark.read.parquet(path.rstrip("/") + "/coded").where(
         F.col("cell").isin(cells_needed)  # static partition pruning
     )
-    adc = _adc_score(F.col("codes"), "lut", m, K)
+    adc = _adc_score(F.col("codes"), m, K)
     pairs = (
         coded.select("id", "cell", "codes")
         .join(F.broadcast(probes), "cell")
@@ -207,7 +197,7 @@ def query_ivfpq_index(
     )
     short = (
         pairs.withColumn("_arank", F.row_number().over(w_adc))
-        .filter(F.col("_arank") <= k * shortlist_factor)
+        .filter(F.col("_arank") <= k * 10)
         .select("query_id", "neighbor_id")
     )
     cn = with_norm(

@@ -44,18 +44,12 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .overlap import _group_shingles
+from .text import md5_h60
 
 #: hash space size: 16^15 = 2^60 (15 md5 hex chars). Exactly
 #: representable as a double (one significant bit), so (k-1)*H_SPACE
 #: is exact for any k-1 that fits in 52-6 mantissa bits.
 H_SPACE = 1 << 60
-
-
-def md5_h60(col) -> Column:
-    """First 15 hex chars of md5 as a non-negative 60-bit BIGINT —
-    the cross-engine hash (DuckDB: CAST(('0x' || substr(md5(x), 1,
-    15)) AS BIGINT))."""
-    return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("long")
 
 
 def group_kmv_minima(
@@ -93,25 +87,21 @@ def group_kmv_minima(
     )
 
 
-def _estimate(hk_col, n_col, k: int) -> Column:
+def _estimate(n_col, k: int) -> Column:
     """(k-1)/u_k estimator with the exact-mode fallback: a sketch
     holding fewer than k values IS the value set, so the count is
     exact. (k-1)*H_SPACE is computed driver-side in exact float."""
     return F.when(
         F.col(n_col) < k, F.col(n_col).cast("double")
-    ).otherwise(F.lit(float((k - 1) * H_SPACE)) / F.col(hk_col).cast("double"))
+    ).otherwise(F.lit(float((k - 1) * H_SPACE)) / F.col("_hk").cast("double"))
 
 
 def kmv_distinct_by_group(
     df: DataFrame,
-    group_col: str = "source",
-    text_col: str = "text",
-    k: int = 64,
-    shingle_k: int = 3,
 ) -> DataFrame:
     """(group, n_in_sketch, est_distinct) — estimated distinct-shingle
     cardinality per group from a k-value sketch."""
-    minima = group_kmv_minima(df, group_col, text_col, k, shingle_k)
+    minima = group_kmv_minima(df, "source", "text", 64, 3)
     return (
         minima.groupBy("grp")
         .agg(
@@ -121,7 +111,7 @@ def kmv_distinct_by_group(
         .select(
             F.col("grp").alias("group"),
             "n_in_sketch",
-            F.round(_estimate("_hk", "n_in_sketch", k), 4).alias(
+            F.round(_estimate("n_in_sketch", 64), 4).alias(
                 "est_distinct"
             ),
         )
@@ -171,12 +161,12 @@ def _kmv_schema():
 
 
 def create_kmv_store(
-    spark: SparkSession, path: str, k: int = 64, shingle_k: int = 3
+    spark: SparkSession, path: str, k: int = 64
 ) -> dict:
     """Initialize an empty store; k and shingle_k ride in meta so a
     batch sketched with different parameters cannot silently merge
     (bottom-64 of bottom-32 segments would under-estimate)."""
-    meta = {"k": int(k), "shingle_k": int(shingle_k), "version": 1}
+    meta = {"k": int(k), "shingle_k": 3, "version": 1}
     spark.createDataFrame([(_json.dumps(meta),)], "meta string").repartition(
         1
     ).write.mode("overwrite").parquet(_kmv_meta_path(path))
@@ -265,7 +255,7 @@ def kmv_store_estimates(
         .select(
             F.col("grp").alias("group"),
             "n_in_sketch",
-            F.round(_estimate("_hk", "n_in_sketch", k), 4).alias(
+            F.round(_estimate("n_in_sketch", k), 4).alias(
                 "est_distinct"
             ),
         )
@@ -274,10 +264,6 @@ def kmv_store_estimates(
 
 def kmv_overlap_pairs(
     df: DataFrame,
-    group_col: str = "source",
-    text_col: str = "text",
-    k: int = 64,
-    shingle_k: int = 3,
 ) -> DataFrame:
     """(group_a, group_b, est_union, est_jaccard, est_intersection)
     for every group pair — the set-operation estimates HLL cannot
@@ -291,7 +277,7 @@ def kmv_overlap_pairs(
     cross-pair expansion — with g groups and k sketch rows the largest
     intermediate is g·(g-1)/2·2k rows of (group_a, group_b, h), still
     metadata-sized for any bounded group domain."""
-    minima = group_kmv_minima(df, group_col, text_col, k, shingle_k)
+    minima = group_kmv_minima(df, "source", "text", 64, 3)
     groups = minima.select(F.col("grp").alias("_g")).distinct()
     # (ga, gb, h, in_a, in_b): each sketch row fanned to every pair it
     # participates in, from either side
@@ -317,13 +303,13 @@ def kmv_overlap_pairs(
     w = Window.partitionBy("group_a", "group_b").orderBy("h")
     union_sketch = members.withColumn(
         "rk", F.row_number().over(w)
-    ).filter(F.col("rk") <= k)
+    ).filter(F.col("rk") <= 64)
     agg = union_sketch.groupBy("group_a", "group_b").agg(
         F.max("h").alias("_hk"),
         F.count(F.lit(1)).cast("bigint").alias("_n"),
         F.sum((F.col("in_a") * F.col("in_b")).cast("bigint")).alias("_both"),
     )
-    est_union = _estimate("_hk", "_n", k)
+    est_union = _estimate("_n", 64)
     rho = F.col("_both").cast("double") / F.col("_n")
     return agg.select(
         "group_a",

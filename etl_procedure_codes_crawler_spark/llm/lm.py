@@ -43,8 +43,6 @@ from . import text as T
 
 def bigram_lm_perplexity(
     docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     k: float = 0.5,
     cutoff: float | None = None,
 ) -> DataFrame:
@@ -61,8 +59,8 @@ def bigram_lm_perplexity(
     """
     if k <= 0:
         raise ValueError(f"add-k smoothing needs k > 0, got {k}")
-    toks = T.tokens(text_col)
-    base = docs.select(F.col(id_col), toks.alias("_toks"))
+    toks = T.tokens("text")
+    base = docs.select(F.col("doc_id"), toks.alias("_toks"))
     n_big = F.greatest(F.size(F.col("_toks")) - 1, F.lit(0))
     bigrams = F.zip_with(
         F.slice(F.col("_toks"), 1, n_big),
@@ -70,9 +68,9 @@ def bigram_lm_perplexity(
         lambda a, b: F.struct(a.alias("w1"), b.alias("w2")),
     )
     bg = base.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.posexplode(bigrams).alias("pos", "bg"),
-    ).select(id_col, "pos", F.col("bg.w1").alias("w1"), F.col("bg.w2").alias("w2"))
+    ).select("doc_id", "pos", F.col("bg.w1").alias("w1"), F.col("bg.w2").alias("w2"))
 
     # the model IS the corpus statistics: one scalar (vocab size) and
     # two COUNT windows riding the bigram rows' own exchanges
@@ -80,7 +78,7 @@ def bigram_lm_perplexity(
     c2 = F.count(F.lit(1)).over(Window.partitionBy("w1", "w2"))
     c1 = F.count(F.lit(1)).over(Window.partitionBy("w1"))
     scored = bg.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.col("pos"),
         F.log(
             (c2.cast("double") + F.lit(float(k)))
@@ -89,7 +87,7 @@ def bigram_lm_perplexity(
     )
 
     per_doc = (
-        scored.groupBy(id_col)
+        scored.groupBy("doc_id")
         .agg(
             F.count(F.lit(1)).alias("n_bigrams"),
             # fixed-order fold: position-sorted array, then one
@@ -106,16 +104,16 @@ def bigram_lm_perplexity(
             ).alias("_sum_logp"),
         )
         .select(
-            F.col(id_col),
+            F.col("doc_id"),
             F.col("n_bigrams"),
             (-F.col("_sum_logp") / F.col("n_bigrams")).alias("log_ppl"),
         )
     )
     out = (
-        docs.select(id_col)
-        .join(per_doc, id_col, "left")
+        docs.select("doc_id")
+        .join(per_doc, "doc_id", "left")
         .select(
-            F.col(id_col),
+            F.col("doc_id"),
             F.coalesce(F.col("n_bigrams"), F.lit(0)).alias("n_bigrams"),
             F.round(F.col("log_ppl"), 6).alias("log_ppl"),
         )

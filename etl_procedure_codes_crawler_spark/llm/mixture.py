@@ -47,15 +47,13 @@ from .text import tokens
 
 def source_token_stats(
     df: DataFrame,
-    source_col: str = "source",
-    text_col: str = "text",
 ) -> DataFrame:
     """(source, n_docs, n_tokens) per source — the corpus-sized pass
     feeding :func:`unimax_budgets`. Whitespace token counts, matching
     the corpus-stats family."""
-    return df.groupBy(F.col(source_col).alias("source")).agg(
+    return df.groupBy("source").agg(
         F.count(F.lit(1)).alias("n_docs"),
-        F.sum(F.size(tokens(text_col))).cast("long").alias("n_tokens"),
+        F.sum(F.size(tokens("text"))).cast("long").alias("n_tokens"),
     )
 
 
@@ -194,20 +192,15 @@ def unimax_budgets(
 
 def doremi_domain_stats(
     docs: DataFrame,
-    source_col: str = "source",
-    text_col: str = "text",
-    k: float = 0.5,
 ) -> DataFrame:
     """(source, n_bigrams, ref_nll_nano, own_nll_nano) per domain —
     the excess-loss substrate: total negative log-likelihood of the
     domain's bigram stream under the corpus-global reference LM and
-    under the domain's own LM, both add-``k`` smoothed, in exact
+    under the domain's own LM, both add-0.5 smoothed, in exact
     integer nano-nats (per-distinct-bigram FLOOR, multiplied by the
     bigram's count — order-independent integer sums)."""
-    if k <= 0:
-        raise ValueError(f"add-k smoothing needs k > 0, got {k}")
-    toks = tokens(text_col)
-    base = docs.select(F.col(source_col).alias("source"), toks.alias("_t"))
+    toks = tokens("text")
+    base = docs.select(F.col("source"), toks.alias("_t"))
     n_big = F.greatest(F.size("_t") - 1, F.lit(0))
     bigrams = F.zip_with(
         F.slice(F.col("_t"), 1, n_big),
@@ -229,9 +222,7 @@ def doremi_domain_stats(
     # global distinct counts (the per-(source, token) relation is
     # vocabulary-bounded)
     tokc = (
-        docs.select(
-            F.col(source_col).alias("source"), F.explode(toks).alias("t")
-        )
+        docs.select("source", F.explode(toks).alias("t"))
         .groupBy("source", "t")
         .agg(F.count(F.lit(1)).alias("_tc"))
         .localCheckpoint(eager=True)
@@ -244,7 +235,7 @@ def doremi_domain_stats(
     g2 = cnt.groupBy("w1", "w2").agg(F.sum("c").alias("gc2"))
     g1 = g2.groupBy("w1").agg(F.sum("gc2").alias("gc1"))
     d1 = cnt.groupBy("source", "w1").agg(F.sum("c").alias("dc1"))
-    kk = float(k)
+    kk = 0.5
     nano = F.lit(1_000_000_000.0)
     # g2/g1/d1 are distinct-bigram/-unigram relations: tiny on the
     # synthetic vocabulary but web-scale corpora have billions of
@@ -286,9 +277,6 @@ def doremi_domain_stats(
 
 def doremi_domain_weights(
     docs: DataFrame,
-    source_col: str = "source",
-    text_col: str = "text",
-    k: float = 0.5,
     step: float = 1.0,
     uniform_mix_pct: int = 20,
 ) -> DataFrame:
@@ -309,7 +297,7 @@ def doremi_domain_weights(
         )
     import math
 
-    stats = doremi_domain_stats(docs, source_col, text_col, k).collect()
+    stats = doremi_domain_stats(docs).collect()
     if not stats:
         spark = docs.sparkSession
         return spark.createDataFrame(

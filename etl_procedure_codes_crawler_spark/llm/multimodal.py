@@ -285,7 +285,7 @@ PNG_CORRUPT_EVERY = 50
 
 
 def _png_synth_batches(
-    batches: "Iterator[pd.DataFrame]", width: int, corrupt_every: int
+    batches: "Iterator[pd.DataFrame]", corrupt_every: int
 ) -> "Iterator[pd.DataFrame]":
     """The PNG synthesis as a plain batch generator - shared by
     documents_as_png and the fused image_hashes_from_documents
@@ -308,20 +308,20 @@ def _png_synth_batches(
                 batch["doc_id"], batch["text"], batch["source"]
             ):
                 data = (text or "").encode("utf-8")
-                height = max(1, -(-len(data) // width))
-                pix = data.ljust(width * height, b"\x00")
+                height = max(1, -(-len(data) // PNG_WIDTH))
+                pix = data.ljust(PNG_WIDTH * height, b"\x00")
                 scan = bytearray()
-                prev = bytes(width)
+                prev = bytes(PNG_WIDTH)
                 for r in range(height):
-                    line = pix[r * width : (r + 1) * width]
+                    line = pix[r * PNG_WIDTH : (r + 1) * PNG_WIDTH]
                     if r % 2 == 0:  # filter None
                         scan += b"\x00" + line
                     else:  # filter Up: stored as delta vs previous row
                         scan += b"\x02" + bytes(
-                            (line[i] - prev[i]) & 0xFF for i in range(width)
+                            (line[i] - prev[i]) & 0xFF for i in range(PNG_WIDTH)
                         )
                     prev = line
-                ihdr = struct.pack(">IIBBBBB", width, height, 8, 0, 0, 0, 0)
+                ihdr = struct.pack(">IIBBBBB", PNG_WIDTH, height, 8, 0, 0, 0, 0)
                 payload = (
                     _PNG_MAGIC
                     + _chunk(b"IHDR", ihdr)
@@ -349,12 +349,11 @@ def _png_synth_batches(
 
 def documents_as_png(
     documents: DataFrame,
-    width: int = PNG_WIDTH,
     corrupt_every: int = PNG_CORRUPT_EVERY,
 ) -> DataFrame:
     """Deterministic REAL-format media corpus #2: each document's
     utf-8 bytes become the pixel data of a valid 8-bit GRAYSCALE PNG
-    (width fixed, height = ceil(bytes / width), zero-padded). Rows
+    (``PNG_WIDTH`` wide, height = ceil(bytes / width), zero-padded). Rows
     alternate filter types None and Up so the gate exercises the
     un-filter path, not just the chunk walk + inflate. Every
     ``corrupt_every``-th doc is truncated mid-file to exercise the
@@ -363,7 +362,7 @@ def documents_as_png(
     round-trips are pinned byte-for-byte in tests/test_multimodal.py).
     """
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        return _png_synth_batches(batches, width, corrupt_every)
+        return _png_synth_batches(batches, corrupt_every)
 
     return documents.select("doc_id", "text", "source").mapInPandas(
         run, schema=MEDIA_SCHEMA
@@ -377,15 +376,13 @@ JPEG_CORRUPT_EVERY = 50
 
 def documents_as_jpeg(
     documents: DataFrame,
-    width: int = JPEG_WIDTH,
-    corrupt_every: int = JPEG_CORRUPT_EVERY,
 ) -> DataFrame:
     """Deterministic REAL-format media corpus #3: each document's
     utf-8 bytes become the pixels of a valid baseline GRAYSCALE JPEG
-    (width fixed, height = ceil(bytes / width), zero-padded; flat
+    (``JPEG_WIDTH`` wide, height = ceil(bytes / width), zero-padded; flat
     quantization so the DCT round-trip stays within ±2 of the source
     bytes — pinned in tests/test_multimodal.py). Every
-    ``corrupt_every``-th doc is truncated mid-file to exercise the
+    ``JPEG_CORRUPT_EVERY``-th doc is truncated mid-file to exercise the
     decode-error path. Geometry is closed-form in byte length, so a
     SQL oracle mirrors the decoded stats exactly."""
     from .jpeg import encode_jpeg
@@ -397,10 +394,10 @@ def documents_as_jpeg(
                 batch["doc_id"], batch["text"], batch["source"]
             ):
                 data = (text or "").encode("utf-8")
-                height = max(1, -(-len(data) // width))
-                pix = data.ljust(width * height, b"\x00")
-                payload = encode_jpeg(pix, width, height, channels=1)
-                if corrupt_every and doc_id % corrupt_every == 0:
+                height = max(1, -(-len(data) // JPEG_WIDTH))
+                pix = data.ljust(JPEG_WIDTH * height, b"\x00")
+                payload = encode_jpeg(pix, JPEG_WIDTH, height, channels=1)
+                if doc_id % JPEG_CORRUPT_EVERY == 0:
                     payload = payload[: max(4, len(payload) // 2)]
                 ids.append(doc_id)
                 payloads.append(payload)
@@ -520,9 +517,8 @@ PHASH_CONTENT_SCHEMA = StructType(
 )
 
 
-def _gray_grid(pixels: bytes, width: int, height: int, channels: int,
-               rows: int, cols: int):
-    """Grayscale ``rows x cols`` downsample as EXACT INTEGER
+def _gray_grid(pixels: bytes, width: int, height: int, channels: int):
+    """Grayscale 8 x 9 (rows x cols) downsample as EXACT INTEGER
     ``(sums, counts)`` object arrays (Python ints — no overflow, no
     rounding, ever).
 
@@ -548,16 +544,16 @@ def _gray_grid(pixels: bytes, width: int, height: int, channels: int,
         gray = arr[:, :, : min(channels, 3)].astype(np.int64).sum(axis=2)
     else:
         gray = arr.reshape(height, width).astype(np.int64)
-    if height >= rows and width >= cols:
-        r_edges = np.linspace(0, height, rows + 1).astype(np.int64)
-        c_edges = np.linspace(0, width, cols + 1).astype(np.int64)
+    if height >= 8 and width >= 9:
+        r_edges = np.linspace(0, height, 8 + 1).astype(np.int64)
+        c_edges = np.linspace(0, width, 9 + 1).astype(np.int64)
         summed = np.add.reduceat(
             np.add.reduceat(gray, r_edges[:-1], axis=0), c_edges[:-1], axis=1
         )
         counts = np.outer(np.diff(r_edges), np.diff(c_edges))
         return summed.astype(object), counts.astype(object)
-    r_idx = ((np.arange(rows) + 0.5) * height / rows).astype(np.int64)
-    c_idx = ((np.arange(cols) + 0.5) * width / cols).astype(np.int64)
+    r_idx = ((np.arange(8) + 0.5) * height / 8).astype(np.int64)
+    c_idx = ((np.arange(9) + 0.5) * width / 9).astype(np.int64)
     sampled = gray[r_idx][:, c_idx]
     return sampled.astype(object), np.ones_like(sampled, dtype=object)
 
@@ -579,7 +575,7 @@ def dhash64(pixels: bytes, width: int, height: int, channels: int) -> int:
     right cell, row-major. Gradient SIGNS survive uniform brightness /
     contrast shifts exactly and small local noise with low hamming
     cost — the standard dHash formulation."""
-    sums, counts = _gray_grid(pixels, width, height, channels, 8, 9)
+    sums, counts = _gray_grid(pixels, width, height, channels)
     # exact integer cross-multiplication: mean_l < mean_r without the
     # division that made float64 rounding brightness-sensitive
     bits = (
@@ -590,7 +586,6 @@ def dhash64(pixels: bytes, width: int, height: int, channels: int) -> int:
 
 def image_hashes(
     media: DataFrame,
-    decoder=default_decoder,
     content_key: bool = False,
 ) -> DataFrame:
     """(media_id, mime, phash, decode_error): decode + perceptual-hash
@@ -606,7 +601,7 @@ def image_hashes(
     join, EXACT content equality as the verification — the image twin
     of the text pipeline's LSH-candidates → jaccard-verify shape."""
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        return _image_hash_batches(batches, decoder, content_key)
+        return _image_hash_batches(batches, content_key)
 
     return media.mapInPandas(
         run, schema=PHASH_CONTENT_SCHEMA if content_key else PHASH_SCHEMA
@@ -614,7 +609,7 @@ def image_hashes(
 
 
 def _image_hash_batches(
-    batches: Iterator[pd.DataFrame], decoder, content_key: bool
+    batches: Iterator[pd.DataFrame], content_key: bool
 ) -> Iterator[pd.DataFrame]:
     """The decode+hash pass as a plain batch generator — shared by
     image_hashes and the fused image_hashes_from_documents."""
@@ -632,7 +627,7 @@ def _image_hash_batches(
             error = None
             sha = None
             try:
-                w, h, c, pix = decoder(
+                w, h, c, pix = default_decoder(
                     payload if payload is not None else b""
                 )
                 phash = dhash64(pix, w, h, c)
@@ -660,9 +655,7 @@ def _image_hash_batches(
 
 def image_hashes_from_documents(
     documents: DataFrame,
-    width: int = PNG_WIDTH,
     corrupt_every: int = PNG_CORRUPT_EVERY,
-    decoder=default_decoder,
     content_key: bool = False,
 ) -> DataFrame:
     """FUSED PNG synthesis + decode/hash (round 13, guide §4.1):
@@ -675,8 +668,7 @@ def image_hashes_from_documents(
     row functions, so the output is identical row-for-row."""
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         return _image_hash_batches(
-            _png_synth_batches(batches, width, corrupt_every),
-            decoder,
+            _png_synth_batches(batches, corrupt_every),
             content_key,
         )
 
@@ -687,8 +679,6 @@ def image_hashes_from_documents(
 
 def image_near_dup_pairs(
     hashes: DataFrame,
-    max_hamming: int = 3,
-    max_bucket_size: int = 5000,
 ) -> DataFrame:
     """(doc_a, doc_b, hamming) over :func:`image_hashes` output —
     EXACT for max_hamming <= 3 (4-band pigeonhole; see
@@ -704,9 +694,6 @@ def image_near_dup_pairs(
         hashes.filter(F.col("phash").isNotNull()),
         "phash",
         "media_id",
-        max_hamming=max_hamming,
-        max_bucket_size=max_bucket_size,
-        bands=4,
     )
 
 
@@ -784,7 +771,7 @@ AUDIO_FP_CONTENT_SCHEMA = StructType(
 
 
 def audio_fingerprints(
-    media: DataFrame, decoder=default_decoder, content_key: bool = False
+    media: DataFrame, content_key: bool = False
 ) -> DataFrame:
     """(media_id, mime, afp, decode_error): decode + fingerprint in one
     Arrow pass — the audio twin of :func:`image_hashes`, with the same
@@ -807,7 +794,7 @@ def audio_fingerprints(
                 error = None
                 sha = None
                 try:
-                    n_frames, _one, channels, frames = decoder(
+                    n_frames, _one, channels, frames = default_decoder(
                         payload if payload is not None else b""
                     )
                     afp = audio_fingerprint64(frames, n_frames, channels)
@@ -834,8 +821,6 @@ def audio_fingerprints(
 
 def audio_near_dup_pairs(
     fingerprints: DataFrame,
-    max_hamming: int = 3,
-    max_bucket_size: int = 5000,
 ) -> DataFrame:
     """(doc_a, doc_b, hamming) over :func:`audio_fingerprints` output —
     exact for hamming<=3 (4-band pigeonhole), decode-error rows
@@ -846,9 +831,6 @@ def audio_near_dup_pairs(
         fingerprints.filter(F.col("afp").isNotNull()),
         "afp",
         "media_id",
-        max_hamming=max_hamming,
-        max_bucket_size=max_bucket_size,
-        bands=4,
     )
 
 
@@ -1281,43 +1263,25 @@ def _mp4_sample_sizes(n_bytes: int, n_samples: int) -> list[int]:
 
 def build_mp4(
     text_bytes: bytes,
-    timescale: int = MP4_TIMESCALE,
-    sample_dur: int = MP4_SAMPLE_DUR,
-    keyframe_every: int = MP4_KEYFRAME_EVERY,
-    width: int = 320,
-    height: int = 240,
-    samples_per_chunk: int | None = None,
 ) -> bytes:
     """A minimal VALID single-track ISO BMFF container whose mdat is
     ``text_bytes``: n_samples = max(1, whitespace tokens of the text),
-    one sample every ``sample_dur`` ticks, a keyframe every
-    ``keyframe_every``-th sample, sample sizes the even split of the
-    payload (see _mp4_sample_sizes). Pure stdlib struct packing —
-    the geometry is what parse_mp4 + the oracles verify.
-    ``samples_per_chunk`` (round 11) threads through to
-    :func:`build_mp4_samples` for the multi-chunk stsc/stco layout."""
+    one sample every ``MP4_SAMPLE_DUR`` ticks, a keyframe every
+    ``MP4_KEYFRAME_EVERY``-th sample, sample sizes the even split of the
+    payload (see _mp4_sample_sizes), all in one chunk. Pure stdlib
+    struct packing — the geometry is what parse_mp4 + the oracles
+    verify."""
     n_samples = max(1, len(text_bytes.decode("utf-8", "replace").split()))
     sizes = _mp4_sample_sizes(len(text_bytes), n_samples)
     chunks, off = [], 0
     for sz in sizes:
         chunks.append(text_bytes[off : off + sz])
         off += sz
-    return build_mp4_samples(
-        chunks,
-        timescale=timescale,
-        sample_dur=sample_dur,
-        keyframe_every=keyframe_every,
-        width=width,
-        height=height,
-        samples_per_chunk=samples_per_chunk,
-    )
+    return build_mp4_samples(chunks)
 
 
 def build_mp4_samples(
     samples: list[bytes],
-    timescale: int = MP4_TIMESCALE,
-    sample_dur: int = MP4_SAMPLE_DUR,
-    keyframe_every: int = MP4_KEYFRAME_EVERY,
     width: int = 320,
     height: int = 240,
     codec: bytes = b"mp4v",
@@ -1328,7 +1292,7 @@ def build_mp4_samples(
     per-sample byte blobs (e.g. real JPEG frames for MJPEG-in-MP4 —
     'jpeg' is the registered motion-JPEG VisualSampleEntry type), the
     mdat is their concatenation and stsz carries their true lengths.
-    Same box grammar, keyframe every ``keyframe_every``-th sample.
+    Same box grammar, keyframe every ``MP4_KEYFRAME_EVERY``-th sample.
     ``samples_per_chunk=None`` keeps the one-chunk layout; an int
     splits the samples into ceil(n/spc) chunks with per-chunk stco
     offsets and compressed stsc runs — the layout that exercises the
@@ -1351,7 +1315,7 @@ def build_mp4_samples(
     n_samples = len(samples)
     sizes = [len(s) for s in samples]
     text_bytes = b"".join(samples)
-    keyframes = list(range(1, n_samples + 1, keyframe_every))
+    keyframes = list(range(1, n_samples + 1, MP4_KEYFRAME_EVERY))
     if sample_durations is not None:
         if len(sample_durations) != n_samples:
             raise ValueError(
@@ -1367,8 +1331,8 @@ def build_mp4_samples(
                 stts_runs.append([1, int(d)])
         duration = sum(sample_durations)
     else:
-        stts_runs = [[n_samples, sample_dur]]
-        duration = n_samples * sample_dur
+        stts_runs = [[n_samples, MP4_SAMPLE_DUR]]
+        duration = n_samples * MP4_SAMPLE_DUR
     spc = samples_per_chunk or n_samples
     # chunk layout: spc samples per chunk, remainder in the last one;
     # chunks lie contiguously in the mdat, so each chunk's RELATIVE
@@ -1403,7 +1367,7 @@ def build_mp4_samples(
         mvhd = full(
             b"mvhd", 0, 0,
             struct.pack(">II", 0, 0),          # ctime, mtime
-            struct.pack(">II", timescale, duration),
+            struct.pack(">II", MP4_TIMESCALE, duration),
             struct.pack(">I", 0x00010000),     # rate 1.0
             struct.pack(">H", 0x0100),         # volume 1.0
             b"\x00" * 10,                      # reserved
@@ -1425,7 +1389,7 @@ def build_mp4_samples(
         mdhd = full(
             b"mdhd", 0, 0,
             struct.pack(">II", 0, 0),
-            struct.pack(">II", timescale, duration),
+            struct.pack(">II", MP4_TIMESCALE, duration),
             struct.pack(">HH", 0x55C4, 0),     # language 'und'
         )
         hdlr = full(
@@ -1506,17 +1470,12 @@ def build_mp4_samples(
 
 def documents_as_mp4(
     documents: DataFrame,
-    corrupt_every: int = MP4_CORRUPT_EVERY,
-    samples_per_chunk: int | None = None,
 ) -> DataFrame:
     """Deterministic REAL-format media corpus #5: each document
     becomes a valid single-track MP4 whose mdat is the utf-8 text and
     whose sample table derives from the token count (see build_mp4).
-    Every ``corrupt_every``-th doc is truncated mid-container to
-    exercise the parse-error path. ``samples_per_chunk`` switches to
-    the multi-chunk stsc/stco layout (chunks still contiguous in one
-    mdat, so mdat-relative offsets are unchanged — but a consumer must
-    run the REAL demuxer walk to know that)."""
+    Every ``MP4_CORRUPT_EVERY``-th doc is truncated mid-container to
+    exercise the parse-error path."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for batch in batches:
@@ -1526,9 +1485,8 @@ def documents_as_mp4(
             ):
                 payload = build_mp4(
                     (text or "").encode("utf-8"),
-                    samples_per_chunk=samples_per_chunk,
                 )
-                if corrupt_every and doc_id % corrupt_every == 0:
+                if doc_id % MP4_CORRUPT_EVERY == 0:
                     payload = payload[: max(12, len(payload) // 2)]
                 ids.append(doc_id)
                 payloads.append(payload)
@@ -1569,7 +1527,6 @@ def _timed_sample_durations(text: str) -> list[int]:
 
 def documents_as_timed_mp4(
     documents: DataFrame,
-    corrupt_every: int = MP4_CORRUPT_EVERY,
 ) -> DataFrame:
     """Deterministic REAL-format media corpus #8 (round 12): the
     VARIABLE-frame-duration container — same text-as-mdat geometry as
@@ -1579,7 +1536,7 @@ def documents_as_timed_mp4(
     index frames by sample number alone: presentation time requires
     the stts expansion — which is exactly what a real frame-sampling
     fleet ("1 frame per second") must do on crawled video. Every
-    ``corrupt_every``-th doc is truncated mid-container."""
+    ``MP4_CORRUPT_EVERY``-th doc is truncated mid-container."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for batch in batches:
@@ -1598,7 +1555,7 @@ def documents_as_timed_mp4(
                     chunks,
                     sample_durations=_timed_sample_durations(text or ""),
                 )
-                if corrupt_every and doc_id % corrupt_every == 0:
+                if doc_id % MP4_CORRUPT_EVERY == 0:
                     payload = payload[: max(12, len(payload) // 2)]
                 ids.append(doc_id)
                 payloads.append(payload)
@@ -1702,7 +1659,7 @@ MP4_TIME_MANIFEST_SCHEMA = StructType(
 
 
 def mp4_time_indexed_manifest(
-    media: DataFrame, interval_ticks: int = MP4_TIMESCALE
+    media: DataFrame
 ) -> DataFrame:
     """The PRESENTATION-TIME sampling manifest (round 12): one row
     per (clip, interval) — "extract 1 frame per second" — naming the
@@ -1714,7 +1671,8 @@ def mp4_time_indexed_manifest(
     Presented sample at tick T = the last sample whose decode time
     <= T (stts run expansion via :func:`sample_decode_times` — sample
     numbers alone cannot answer this on variable-duration tracks).
-    Intervals run 0 <= k*interval < track duration. Corrupt
+    Intervals of ``MP4_TIMESCALE`` ticks (one second) run
+    0 <= k*interval < track duration. Corrupt
     containers and inconsistent sample tables contribute no rows (the
     stats query owns the error plane). Like the keyframe manifest,
     this relation is what ships to the decode fleet at 100 TB — tiny
@@ -1742,9 +1700,9 @@ def mp4_time_indexed_manifest(
                     total = t.get("samples_duration") or 0
                     kfs = sorted(t.get("keyframes") or [])
                     for k in range(
-                        (max(0, total - 1) // interval_ticks) + 1
+                        (max(0, total - 1) // MP4_TIMESCALE) + 1
                     ):
-                        tick = k * interval_ticks
+                        tick = k * MP4_TIMESCALE
                         j = bisect.bisect_right(times, tick) - 1
                         if j < 0:
                             continue

@@ -31,10 +31,8 @@ survivors are representative of the members dropped.
 
 Store layout (plain parquet):
     <path>/meta/        one JSON row: k, bands, rows_per_band, version
-    <path>/signatures/  v2: (id, sig array<bigint>,
-                             buckets array<struct<band int, bucket bigint>>)
-                        v1: (id, sig) — still queryable; buckets are
-                        derived map-side as they were written
+    <path>/signatures/  (id, sig array<bigint>,
+                         buckets array<struct<band int, bucket bigint>>)
 
 Parameters ride in meta so a batch signed with mismatched banding
 cannot silently produce an empty join.
@@ -48,7 +46,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import Window
 
-from .dedup import minhash_signatures
+from .dedup import band_bucket, minhash_signatures
 
 #: store rows kept per (band, bucket) in the candidate join — high
 #: enough that non-degenerate LSH buckets (a handful of members) are
@@ -58,7 +56,7 @@ DEFAULT_MAX_STORE_BUCKET = 64
 
 
 def _sig_array(
-    df: DataFrame, text_col: str, id_col: str, k: int, num_hashes: int,
+    df: DataFrame, k: int, num_hashes: int,
     hash_fn: str = "xx",
 ) -> DataFrame:
     # one row per id: minhash groups shingles by id, so duplicate ids
@@ -66,7 +64,7 @@ def _sig_array(
     # different texts sharing an id would merge into one garbage
     # signature matching neither
     sig = minhash_signatures(
-        df.dropDuplicates([id_col]), text_col, id_col, k, num_hashes,
+        df.dropDuplicates(["doc_id"]), k, num_hashes,
         hash_fn,
     )
     return sig.select(
@@ -78,27 +76,20 @@ def _band_buckets(
     sig_col, bands: int, rows_per_band: int, hash_fn: str = "xx"
 ):
     """(band, bucket) structs derived map-side from a signature array —
-    the same bucket construction as :func:`.dedup.minhash_buckets`
-    (xxhash64 of the band rows, or in ``md5`` mode the md5-60 of the
-    colon-joined slot values — engine-deterministic, round 11), so
-    buckets agree across batches AND with the SQL oracle."""
-
-    def bucket_of(band: int):
-        slots = [
-            F.element_at(sig_col, band * rows_per_band + r + 1)
-            for r in range(rows_per_band)
-        ]
-        if hash_fn == "md5":
-            return F.conv(
-                F.substring(F.md5(F.concat_ws(":", *slots)), 1, 15), 16, 10
-            ).cast("long")
-        return F.xxhash64(*slots)
-
+    the bucket key of :func:`.dedup.minhash_buckets`
+    (:func:`.dedup.band_bucket`), so buckets agree across batches AND
+    with the SQL oracle."""
     return F.array(
         *[
             F.struct(
                 F.lit(band).alias("band"),
-                bucket_of(band).alias("bucket"),
+                band_bucket(
+                    [
+                        F.element_at(sig_col, band * rows_per_band + r + 1)
+                        for r in range(rows_per_band)
+                    ],
+                    hash_fn,
+                ).alias("bucket"),
             )
             for band in range(bands)
         ]
@@ -107,9 +98,6 @@ def _band_buckets(
 
 def _signed_with_buckets(
     df: DataFrame,
-    text_col: str,
-    id_col: str,
-    k: int,
     bands: int,
     rows_per_band: int,
     hash_fn: str = "xx",
@@ -117,7 +105,7 @@ def _signed_with_buckets(
     """(id, sig, buckets) — the v2 store row: buckets are a pure
     map-side function of the signature, persisted once at write time
     so every future query skips re-deriving them for the store side."""
-    signed = _sig_array(df, text_col, id_col, k, bands * rows_per_band, hash_fn)
+    signed = _sig_array(df, 3, bands * rows_per_band, hash_fn)
     return signed.withColumn(
         "buckets", _band_buckets(F.col("sig"), bands, rows_per_band, hash_fn)
     )
@@ -126,9 +114,6 @@ def _signed_with_buckets(
 def build_minhash_store(
     docs: DataFrame,
     path: str,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    k: int = 3,
     bands: int = 8,
     rows_per_band: int = 4,
     hash_fn: str = "xx",
@@ -140,9 +125,9 @@ def build_minhash_store(
     the throughput default)."""
     spark = docs.sparkSession
     _signed_with_buckets(
-        docs, text_col, id_col, k, bands, rows_per_band, hash_fn
+        docs, bands, rows_per_band, hash_fn
     ).write.mode("overwrite").parquet(path.rstrip("/") + "/signatures")
-    meta = {"k": k, "bands": bands, "rows_per_band": rows_per_band,
+    meta = {"k": 3, "bands": bands, "rows_per_band": rows_per_band,
             "version": 2, "hash_fn": hash_fn}
     spark.createDataFrame(
         [(json.dumps(meta),)], "meta string"
@@ -157,23 +142,13 @@ def load_store_meta(spark: SparkSession, path: str) -> dict:
     )
 
 
-def _store_bucket_rows(
-    snap: DataFrame, bands: int, rpb: int, hash_fn: str = "xx"
-) -> DataFrame:
+def _store_bucket_rows(snap: DataFrame) -> DataFrame:
     """One (snapshot_id, snap_sig, band, bucket) row per store doc per
-    band — from the persisted buckets column when present (v2), else
-    derived map-side (v1; v1 stores predate hash_fn and are always
-    xx, but the parameter keeps the derivation honest)."""
-    if "buckets" in snap.columns:
-        bb = F.explode(F.col("buckets")).alias("bb")
-    else:
-        bb = F.explode(
-            _band_buckets(F.col("sig"), bands, rpb, hash_fn)
-        ).alias("bb")
+    band, from the persisted buckets column."""
     return snap.select(
         F.col("id").alias("snapshot_id"),
         F.col("sig").alias("snap_sig"),
-        bb,
+        F.explode(F.col("buckets")).alias("bb"),
     ).select("snapshot_id", "snap_sig", "bb.band", "bb.bucket")
 
 
@@ -182,8 +157,6 @@ def near_dups_against_store(
     path: str,
     new_docs: DataFrame,
     threshold: float = 0.5,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     max_store_bucket_size: int = DEFAULT_MAX_STORE_BUCKET,
 ) -> DataFrame:
     """(new_id, snapshot_id, est_jaccard) for every new document that
@@ -204,11 +177,11 @@ def near_dups_against_store(
     """
     meta = load_store_meta(spark, path)
     bands, rpb = meta["bands"], meta["rows_per_band"]
-    hash_fn = meta.get("hash_fn", "xx")
+    hash_fn = meta["hash_fn"]
     num_hashes = bands * rpb
 
     new_sig = _sig_array(
-        new_docs, text_col, id_col, meta["k"], num_hashes, hash_fn
+        new_docs, meta["k"], num_hashes, hash_fn
     )
     snap = spark.read.parquet(path.rstrip("/") + "/signatures")
 
@@ -219,7 +192,7 @@ def near_dups_against_store(
     ).select("new_id", "new_sig", "bb.band", "bb.bucket")
     w_cap = Window.partitionBy("band", "bucket").orderBy("snapshot_id")
     sb = (
-        _store_bucket_rows(snap, bands, rpb, hash_fn)
+        _store_bucket_rows(snap)
         .withColumn("_bkrank", F.row_number().over(w_cap))
         .filter(F.col("_bkrank") <= max_store_bucket_size)
         .drop("_bkrank")
@@ -364,8 +337,6 @@ def update_cluster_labels(
     spark: SparkSession,
     path: str,
     new_edges: DataFrame,
-    src: str = "doc_a",
-    dst: str = "doc_b",
 ) -> dict:
     """Append ``new_edges`` to the store's edge log and absorb them
     into the persisted labels. Returns ``{"mode": "incremental" |
@@ -377,8 +348,8 @@ def update_cluster_labels(
 
     e = (
         new_edges.select(
-            F.col(src).cast("bigint").alias("doc_a"),
-            F.col(dst).cast("bigint").alias("doc_b"),
+            F.col("doc_a").cast("bigint").alias("doc_a"),
+            F.col("doc_b").cast("bigint").alias("doc_b"),
         )
         .where(F.col("doc_a").isNotNull() & F.col("doc_b").isNotNull())
         .dropDuplicates(["doc_a", "doc_b"])
@@ -450,17 +421,17 @@ def update_cluster_labels(
 
 
 def store_cluster_labels(
-    spark: SparkSession, path: str, all_ids: DataFrame | None = None
+    spark: SparkSession, path: str
 ) -> DataFrame:
-    """(id, cluster_id) for every store id (or for ``all_ids`` if
-    given): edge-labeled ids get their component's min id, everyone
+    """(id, cluster_id) for every store id: edge-labeled ids get
+    their component's min id, everyone
     else is their own singleton — the duplicate_clusters view, served
     from the PERSISTED labels with no component computation."""
     ids = (
-        all_ids.select(F.col(all_ids.columns[0]).cast("bigint").alias("id"))
-        if all_ids is not None
-        else spark.read.parquet(path.rstrip("/") + "/signatures").select("id")
-    ).dropDuplicates(["id"])
+        spark.read.parquet(path.rstrip("/") + "/signatures")
+        .select("id")
+        .dropDuplicates(["id"])
+    )
     labels = read_cluster_labels(spark, path)
     return ids.join(labels, "id", "left").select(
         "id", F.coalesce(F.col("cluster_id"), F.col("id")).alias("cluster_id")
@@ -470,28 +441,25 @@ def store_cluster_labels(
 def near_dup_pairs_within_store(
     spark: SparkSession,
     path: str,
-    threshold: float = 0.5,
-    max_store_bucket_size: int = DEFAULT_MAX_STORE_BUCKET,
 ) -> DataFrame:
     """(doc_a, doc_b, est_jaccard) among the STORE's own members —
     candidate pairs from the PERSISTED bucket assignments (no
     re-shingling, no re-signing: the one corpus-sized pass already
-    happened at build/append time), verified by the signature-
-    agreement estimate. The self-join is (band, bucket)-local with the
+    happened at build/append time), kept at a signature-agreement
+    estimate of at least 0.9. The self-join
+ is (band, bucket)-local with the
     same deterministic ranked cap as :func:`near_dups_against_store`,
     so a degenerate boilerplate bucket costs cap² rows, never
     |bucket|². Feeds :func:`update_cluster_labels` /
     ``cluster.duplicate_clusters`` directly."""
     meta = load_store_meta(spark, path)
-    bands, rpb = meta["bands"], meta["rows_per_band"]
-    hash_fn = meta.get("hash_fn", "xx")
-    num_hashes = bands * rpb
+    num_hashes = meta["bands"] * meta["rows_per_band"]
     snap = spark.read.parquet(path.rstrip("/") + "/signatures")
     w_cap = Window.partitionBy("band", "bucket").orderBy("snapshot_id")
     rows = (
-        _store_bucket_rows(snap, bands, rpb, hash_fn)
+        _store_bucket_rows(snap)
         .withColumn("_bkrank", F.row_number().over(w_cap))
-        .filter(F.col("_bkrank") <= max_store_bucket_size)
+        .filter(F.col("_bkrank") <= DEFAULT_MAX_STORE_BUCKET)
         .drop("_bkrank")
     )
     a = rows.select(
@@ -523,5 +491,5 @@ def near_dup_pairs_within_store(
         )
         .groupBy("doc_a", "doc_b")
         .agg(F.max("est_jaccard").alias("est_jaccard"))
-        .filter(F.col("est_jaccard") >= threshold)
+        .filter(F.col("est_jaccard") >= 0.9)
     )

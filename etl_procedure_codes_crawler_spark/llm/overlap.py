@@ -53,13 +53,9 @@ def _group_shingles(
 
 def group_minhash_signatures(
     df: DataFrame,
-    group_col: str = "source",
-    text_col: str = "text",
-    k: int = 3,
-    num_hashes: int = 64,
     hash_fn: str = "xx",
 ) -> DataFrame:
-    """(group, sig) — the group's ``num_hashes``-slot MinHash sketch,
+    """(group, sig) — the group's 64-slot MinHash sketch,
     computed in ONE partially-aggregated pass (slot-wise min merges
     map-side; only per-group sketches shuffle). ``hash_fn="md5"``
     derives each slot from the 60-bit md5 prefix of "i:shingle"
@@ -68,12 +64,12 @@ def group_minhash_signatures(
     xxhash64 stays the default for raw 100 TB throughput."""
     from .dedup import _minhash_member
 
-    sh = _group_shingles(df, group_col, text_col, k)
+    sh = _group_shingles(df, "source", "text", 3)
     aggs = [
         F.min(_minhash_member(i, F.col("shingle"), hash_fn)).alias(f"h{i}")
-        for i in range(num_hashes)
+        for i in range(64)
     ]
-    sig = F.array(*[F.col(f"h{i}") for i in range(num_hashes)])
+    sig = F.array(*[F.col(f"h{i}") for i in range(64)])
     return (
         sh.groupBy("grp")
         .agg(*aggs)
@@ -83,18 +79,12 @@ def group_minhash_signatures(
 
 def group_overlap_minhash(
     df: DataFrame,
-    group_col: str = "source",
-    text_col: str = "text",
-    k: int = 3,
-    num_hashes: int = 64,
     hash_fn: str = "xx",
 ) -> DataFrame:
     """(group_a, group_b, est_jaccard) for EVERY group pair —
     disjoint pairs estimate ~0 and appear. The estimate is the
     matching-slot fraction of the two sketches."""
-    sig = group_minhash_signatures(
-        df, group_col, text_col, k, num_hashes, hash_fn
-    )
+    sig = group_minhash_signatures(df, hash_fn)
     a = sig.select(
         F.col("group").alias("group_a"), F.col("sig").alias("sig_a")
     )
@@ -115,7 +105,7 @@ def group_overlap_minhash(
         .select(
             "group_a",
             "group_b",
-            (matches.cast("double") / F.lit(float(num_hashes))).alias(
+            (matches.cast("double") / F.lit(64.0)).alias(
                 "est_jaccard"
             ),
         )
@@ -124,24 +114,20 @@ def group_overlap_minhash(
 
 def group_cardinality_estimates(
     df: DataFrame,
-    group_col: str = "source",
-    text_col: str = "text",
-    k: int = 3,
-    lg_config_k: int = 12,
 ) -> DataFrame:
     """Per-group estimated distinct-shingle counts PLUS the corpus
     total row (group NULL) in ONE corpus scan: ``rollup(group)`` makes
     the grand-total sketch a second grouping set of the SAME partial
     aggregation — never a second pass (HLL union is lossless on the
     registers, so merging the per-group sketches estimates the same
-    set). Standard error ~1.04/sqrt(2^lg_config_k) ≈ 1.6% at the
-    default; floored against exact distinct counts in tests."""
-    sh = _group_shingles(df, group_col, text_col, k)
+    set). Standard error ~1.04/sqrt(2^12) ≈ 1.6% (lg_config_k 12);
+    floored against exact distinct counts in tests."""
+    sh = _group_shingles(df, "source", "text", 3)
     return (
         sh.rollup("grp")
         .agg(
             F.hll_sketch_estimate(
-                F.hll_sketch_agg("shingle", F.lit(lg_config_k))
+                F.hll_sketch_agg("shingle", F.lit(12))
             ).alias("est_distinct")
         )
         .select(F.col("grp").alias("group"), "est_distinct")

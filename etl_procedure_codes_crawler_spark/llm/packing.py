@@ -31,15 +31,12 @@ from .text import token_count
 def pack_sequences(
     df: DataFrame,
     seq_len: int,
-    shard_col: str = "source",
-    id_col: str = "doc_id",
-    text_col: str = "text",
     n_tokens_col: str | None = None,
 ) -> DataFrame:
     """Per-document packing assignment: which sequences of a
     ``seq_len``-token stream each document occupies.
 
-    Documents are concatenated per shard in ``id_col`` order (ties are
+    Documents are concatenated per ``source`` shard in ``doc_id`` order (ties are
     impossible: ids are unique), then the stream is cut every
     ``seq_len`` tokens. Emits one row per (document, sequence) the
     document overlaps:
@@ -55,7 +52,7 @@ def pack_sequences(
     sees more than one shard's stream in a task.
 
     With ``n_tokens_col`` set, the counts come from that column
-    instead of whitespace-tokenizing ``text_col`` — the path for
+    instead of whitespace-tokenizing ``text`` — the path for
     packing on LEARNED subword counts (``bpe.bpe_encode`` →
     ``size(tokens)``), which is what the training run actually packs.
     """
@@ -86,11 +83,11 @@ def pack_sequences(
             ).cast("bigint"),
         ).otherwise(F.col(n_tokens_col).cast("bigint"))
         if n_tokens_col is not None
-        else token_count(text_col)
+        else token_count("text")
     )
     sized = df.select(
-        F.col(shard_col).alias("shard"),
-        F.col(id_col).alias("doc_id"),
+        F.col("source").alias("shard"),
+        F.col("doc_id"),
         count_expr.alias("n_tokens"),
     ).filter(F.col("n_tokens") > 0)
     # integer `div`, not `/`: Spark's `/` promotes to double, and past
@@ -128,9 +125,6 @@ def pack_sequences(
 def pack_sequences_bestfit(
     df: DataFrame,
     seq_len: int,
-    shard_col: str = "source",
-    id_col: str = "doc_id",
-    text_col: str = "text",
     n_tokens_col: str | None = None,
 ) -> DataFrame:
     """Whole-document packing by best-fit-decreasing bin packing —
@@ -169,11 +163,11 @@ def pack_sequences_bestfit(
             ).cast("bigint"),
         ).otherwise(F.col(n_tokens_col).cast("bigint"))
         if n_tokens_col is not None
-        else token_count(text_col)
+        else token_count("text")
     )
     sized = df.select(
-        F.col(shard_col).alias("shard"),
-        F.col(id_col).alias("doc_id"),
+        F.col("source").alias("shard"),
+        F.col("doc_id"),
         count_expr.alias("n_tokens"),
     ).filter(F.col("n_tokens") > 0)
     shard_type = sized.schema["shard"].dataType.simpleString()
@@ -260,9 +254,6 @@ def bestfit_packing_stats(
 def sequence_stats(
     df: DataFrame,
     seq_len: int,
-    shard_col: str = "source",
-    id_col: str = "doc_id",
-    text_col: str = "text",
 ) -> DataFrame:
     """Per-sequence packing summary: document count, boundary-crossing
     document count, and fill level of every packed sequence.
@@ -270,7 +261,7 @@ def sequence_stats(
     ``fill`` < 1 only for a shard's final sequence (the stream's tail);
     a low average fill across shards means the shard key is too fine.
     """
-    packed = pack_sequences(df, seq_len, shard_col, id_col, text_col)
+    packed = pack_sequences(df, seq_len)
     return packed.groupBy("shard", "seq_id").agg(
         F.count(F.lit(1)).alias("n_docs"),
         F.sum(F.when(F.col("crosses"), 1).otherwise(0))
@@ -318,7 +309,6 @@ def shuffle_key(id_col, seed: int = 1):
 
 def training_shuffle(
     df: DataFrame,
-    id_col: str = "doc_id",
     num_shards: int = 8,
     seed: int = 1,
 ) -> DataFrame:
@@ -334,14 +324,14 @@ def training_shuffle(
     corpus size. Epoch reshuffles are a seed change, not a data move:
     the manifest is tiny (id, shard, pos) and the heavy rows are
     joined to it lazily by the reader."""
-    key = shuffle_key(F.col(id_col), seed)
+    key = shuffle_key(F.col("doc_id"), seed)
     keyed = df.select(
-        F.col(id_col),
+        F.col("doc_id"),
         key.alias("_key"),
     ).withColumn("shard", F.pmod(F.col("_key"), F.lit(num_shards)))
-    w = Window.partitionBy("shard").orderBy("_key", id_col)
+    w = Window.partitionBy("shard").orderBy("_key", "doc_id")
     return keyed.select(
-        id_col,
+        "doc_id",
         "shard",
         F.row_number().over(w).cast("bigint").alias("pos"),
     )
@@ -350,57 +340,53 @@ def training_shuffle(
 def write_training_shards(
     df: DataFrame,
     path: str,
-    id_col: str = "doc_id",
-    num_shards: int = 8,
     seed: int = 1,
 ) -> int:
     """Materialize the :func:`training_shuffle` as a physical layout:
     one parquet partition directory per shard, rows stored in shard
     read order (``pos`` ascending) so a trainer streams each shard
-    sequentially with zero seek-time shuffling at read time. Returns
-    ``num_shards``.
+    sequentially with zero seek-time shuffling at read time, over 4
+    shards. Returns the shard count.
 
-    Scale shape — the write IS the shuffle: ``repartition(num_shards,
+    Scale shape — the write IS the shuffle: ``repartition(4,
     shard)`` is the single exchange and all of a shard's rows land in
     ONE task (same key → same partition), so each shard directory
     gets exactly one file and its parquet row order is the manifest
     order. Hash partitioning can COLLIDE shard values — a task may
     hold 2-3 shards while another sits empty — so writer parallelism
-    is less than num_shards at small shard counts; at corpus scale
+    is less than the shard count at small shard counts; at corpus scale
     runs use thousands of shards over hundreds of executors and the
     collisions average out (the per-directory file layout is
     unaffected either way). Epoch re-shuffles rewrite only (id,
     shard, pos) ordering — the seed is the epoch number."""
-    manifest = training_shuffle(df, id_col, num_shards, seed)
+    manifest = training_shuffle(df, 4, seed)
     (
-        df.join(manifest, id_col)
-        .repartition(num_shards, "shard")
+        df.join(manifest, "doc_id")
+        .repartition(4, "shard")
         .sortWithinPartitions("shard", "pos")
         .write.mode("overwrite")
         .option("compression", "snappy")
         .partitionBy("shard")
         .parquet(path)
     )
-    return num_shards
+    return 4
 
 
 def holdout_split(
     df: DataFrame,
     fractions: dict[str, float],
-    id_col: str = "doc_id",
-    seed: int = 3,
 ) -> DataFrame:
     """Deterministic train/val/test assignment by the document's own
-    Lehmer key — membership is a pure function of (id, seed), so the
+    Lehmer key — membership is a pure function of (id, seed 3), so the
     split survives reprocessing, corpus growth (existing docs never
     change split), and engine changes (bit-identical in SQL).
 
     ``fractions`` maps split name → target fraction, in priority
     order; thresholds are cumulative integer cut-points on the key
     space. Map-side only — no shuffle, no sampling state."""
-    key = shuffle_key(F.col(id_col), seed)
+    key = shuffle_key(F.col("doc_id"), 3)
     return df.select(
-        F.col(id_col), _split_case(key, fractions).alias("split")
+        F.col("doc_id"), _split_case(key, fractions).alias("split")
     )
 
 
@@ -428,10 +414,6 @@ def cluster_holdout_split(
     df: DataFrame,
     pairs: DataFrame,
     fractions: dict[str, float],
-    id_col: str = "doc_id",
-    seed: int = 3,
-    src: str = "doc_a",
-    dst: str = "doc_b",
 ) -> DataFrame:
     """Leakage-safe train/val/test split: the split unit is the
     NEAR-DUP CLUSTER, not the document — the split key is the cluster
@@ -455,11 +437,11 @@ def cluster_holdout_split(
     from .cluster import duplicate_clusters
 
     clusters = duplicate_clusters(
-        pairs, all_ids=df, id_col=id_col, src=src, dst=dst
+        pairs, all_ids=df
     )
-    key = shuffle_key(F.col("cluster_id"), seed)
+    key = shuffle_key(F.col("cluster_id"), 3)
     return clusters.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.col("cluster_id"),
         _split_case(key, fractions).alias("split"),
     )

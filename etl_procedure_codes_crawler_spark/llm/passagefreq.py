@@ -185,9 +185,6 @@ def strip_boilerplate_against_store(
     path: str,
     docs: DataFrame,
     min_doc_freq: int = 50,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    chunks: DataFrame | None = None,
 ) -> DataFrame:
     """Clean ``docs`` against the PERSISTED corpus-wide frequencies:
     passages whose stored document frequency exceeds ``min_doc_freq``
@@ -197,17 +194,15 @@ def strip_boilerplate_against_store(
     side never re-reads history (the store relation is
     distinct-passage-sized, and the join hashes 32-byte
     fingerprints). Passages absent from the store count as df=0
-    (never seen → never boilerplate). ``chunks``: precomputed
-    passage rows, same contract as :func:`append_passage_counts`."""
-    if chunks is None:
-        meta = load_passage_freq_meta(spark, path)
-        chunks = passage_rows(docs, meta["block"], text_col, id_col)
+    (never seen → never boilerplate)."""
+    meta = load_passage_freq_meta(spark, path)
+    chunks = passage_rows(docs, meta["block"], "text", "doc_id")
     judged = chunks.join(
         read_passage_freqs(spark, path).withColumnRenamed("df", "_df"),
         "fp",
         "left",
     ).withColumn("_df", F.coalesce(F.col("_df"), F.lit(0)))
-    return _rebuild_cleaned(docs, judged, min_doc_freq, id_col)
+    return _rebuild_cleaned(docs, judged, min_doc_freq)
 
 
 def strip_rebuilt_against_store(

@@ -58,14 +58,14 @@ class PcaModel:
 
 
 def _collect_moments(
-    df: DataFrame, vec_col: str, sample_limit: int | None
+    df: DataFrame, sample_limit: int | None
 ) -> tuple[int, np.ndarray, np.ndarray] | None:
     """ONE distributed pass → (n, Σx, Σxxᵀ); ``None`` when the input
     holds no non-NULL vectors. The empty case is signalled by return
     value, NOT an exception — real data errors (e.g. mixed vector
     dimensions raising ValueError inside the numpy combine) must
     propagate, not be mistaken for "empty batch" by callers."""
-    src = df.select(F.col(vec_col).alias("v")).where(F.col("v").isNotNull())
+    src = df.select(F.col("embedding").alias("v")).where(F.col("v").isNotNull())
     if sample_limit is not None:
         src = src.limit(int(sample_limit))
     src = src.withColumn("pid", F.spark_partition_id())
@@ -143,14 +143,14 @@ def _model_from_moments(n: int, s: np.ndarray, ss: np.ndarray) -> PcaModel:
 
 
 def fit_pca(
-    df: DataFrame, vec_col: str = "embedding", sample_limit: int | None = None
+    df: DataFrame, sample_limit: int | None = None
 ) -> PcaModel:
-    """Fit on every non-NULL vector (or the first ``sample_limit`` —
+    """Fit on every non-NULL ``embedding`` vector (or the first ``sample_limit`` —
     the quantizer-training trade: moments converge long before a
     100 TB corpus is fully read). One corpus pass, d²-sized result."""
-    moments = _collect_moments(df, vec_col, sample_limit)
+    moments = _collect_moments(df, sample_limit)
     if moments is None:
-        raise ValueError(f"fit_pca: no non-NULL vectors in {vec_col!r}")
+        raise ValueError("fit_pca: no non-NULL vectors in 'embedding'")
     return _model_from_moments(*moments)
 
 
@@ -158,13 +158,10 @@ def transform_pca(
     df: DataFrame,
     model: PcaModel,
     k: int,
-    vec_col: str = "embedding",
-    out_col: str = "projection",
     whiten: bool = False,
-    eps: float = 1e-12,
 ) -> DataFrame:
-    """Append ``out_col``: the k leading principal coordinates of
-    ``vec_col`` (whitened to unit variance per component when
+    """Append ``projection``: the k leading principal coordinates of
+    ``embedding`` (whitened to unit variance per component when
     ``whiten`` — the cosine-threshold-friendly frame). NULL vectors
     project to NULL. One Arrow pass; the (d×k) matrix ships inside
     the UDF closure (kilobytes)."""
@@ -174,7 +171,7 @@ def transform_pca(
         )
     W = model.components[:, :k].copy()
     if whiten:
-        W = W / np.sqrt(model.eigenvalues[:k] + eps)
+        W = W / np.sqrt(model.eigenvalues[:k] + 1e-12)
     mean = model.mean.copy()
 
     @F.pandas_udf(ArrayType(DoubleType()))
@@ -197,4 +194,4 @@ def transform_pca(
             [next(rows) if m else None for m in mask], dtype="object"
         )
 
-    return df.withColumn(out_col, project(F.col(vec_col)))
+    return df.withColumn("projection", project(F.col("embedding")))

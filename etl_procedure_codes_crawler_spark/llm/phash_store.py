@@ -68,16 +68,14 @@ def append_to_phash_store(
     spark: SparkSession,
     path: str,
     hashes: DataFrame,
-    id_col: str = "media_id",
-    phash_col: str = "phash",
 ) -> int:
     """Append hashes for ids not already stored (anti-join on id —
     replay-idempotent). NULL hashes (decode errors) are skipped: an
     undecodable payload has no perceptual identity to store."""
     fresh = (
         hashes.select(
-            F.col(id_col).cast("bigint").alias("id"),
-            F.col(phash_col).cast("bigint").alias("phash"),
+            F.col("media_id").cast("bigint").alias("id"),
+            F.col("phash").cast("bigint").alias("phash"),
         )
         .where(F.col("id").isNotNull() & F.col("phash").isNotNull())
         .dropDuplicates(["id"])
@@ -103,12 +101,9 @@ def near_dups_against_phash_store(
     spark: SparkSession,
     path: str,
     new_hashes: DataFrame,
-    max_hamming: int = 3,
-    id_col: str = "media_id",
-    phash_col: str = "phash",
 ) -> DataFrame:
     """(new_id, existing_id, hamming) for every new object within
-    ``max_hamming`` of a stored one — exact for max_hamming <= 3
+    hamming 3 of a stored one — exact for max_hamming <= 3
     (4-band pigeonhole). The store side shuffles (id, phash, band,
     bucket) rows only; payloads are never read."""
     # empty-store fast path: a store with no appended hashes yet (the
@@ -124,16 +119,12 @@ def near_dups_against_phash_store(
             [], "new_id bigint, existing_id bigint, hamming bigint"
         )
     new = new_hashes.select(
-        F.col(id_col).cast("bigint").alias("id"),
-        F.col(phash_col).cast("bigint").alias("phash"),
+        F.col("media_id").cast("bigint").alias("id"),
+        F.col("phash").cast("bigint").alias("phash"),
     ).where(F.col("phash").isNotNull())
     from .dedup import hamming_band_pairs_between
 
     return hamming_band_pairs_between(
         new,
         read_phash_store(spark, path),
-        "phash",
-        "id",
-        max_hamming=max_hamming,
-        bands=4,
     )

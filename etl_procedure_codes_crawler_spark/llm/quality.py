@@ -124,13 +124,13 @@ def gopher_columns(
     }
 
 
-def linear_margin(model: dict | None = None, text_col: str = "text"):
+def linear_margin(model: dict | None = None):
     """The raw linear quality margin as ONE Column expression (fixed
     term order — see :func:`score_documents` for why no sigmoid and
     no reordering)."""
     model = dict(DEFAULT_MODEL if model is None else model)
     bias = float(model.pop("bias", 0.0))
-    feats = quality_features(text_col)
+    feats = quality_features()
     unknown = set(model) - set(feats)
     if unknown:
         raise ValueError(f"unknown quality features: {sorted(unknown)}")
@@ -192,11 +192,11 @@ def gopher_rules(
     )
 
 
-def quality_features(text_col: str = "text") -> dict:
+def quality_features() -> dict:
     """The four feature columns, shared by the scorer and any future
     trainer; token math comes from :mod:`.text` (JVM higher-order
     functions, no Python)."""
-    toks = T.tokens(text_col)
+    toks = T.tokens("text")
     n = F.size(toks).cast("bigint")
     uniq = F.size(F.array_distinct(toks)).cast("bigint")
     return {
@@ -211,8 +211,6 @@ def quality_features(text_col: str = "text") -> dict:
 def score_documents(
     df: DataFrame,
     model: dict | None = None,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     threshold: float = 0.0,
 ) -> DataFrame:
     """(id, quality_score, keep) — linear quality margin per document
@@ -220,7 +218,7 @@ def score_documents(
     ``bias``) to coefficients; defaults to :data:`DEFAULT_MODEL`.
     Unknown feature names raise — silently ignoring a coefficient
     would score with a different model than the caller trained."""
-    score = linear_margin(model, text_col)
+    score = linear_margin(model)
     # 1e-4 grid by FLOOR, not round(): small-decimal weights times
     # simple token ratios land scores EXACTLY on .00005 boundaries,
     # where Spark's round (exact BigDecimal, HALF_UP) and DuckDB's
@@ -230,7 +228,7 @@ def score_documents(
         "quality_score"
     )
     return df.select(
-        F.col(id_col),
+        F.col("doc_id"),
         grid,
         (score > F.lit(float(threshold))).alias("keep"),
     )
@@ -239,7 +237,6 @@ def score_documents(
 def fit_linear_quality(
     df: DataFrame,
     label_col: str,
-    text_col: str = "text",
     ridge: float = 1e-6,
 ) -> dict:
     """Train the linear quality model IN the engine — the trainer half
@@ -265,7 +262,7 @@ def fit_linear_quality(
     """
     import numpy as np
 
-    feats = quality_features(text_col)
+    feats = quality_features()
     names = list(FEATURE_ORDER)
     k = len(names)
     x_cols = [F.lit(1.0).alias("_x0")] + [

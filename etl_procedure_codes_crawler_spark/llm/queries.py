@@ -1501,16 +1501,16 @@ _SQL_ALL_SHINGLES = f"""CASE WHEN len(t) >= 3 THEN
     ELSE [array_to_string(t, ' ')] END"""
 
 
-def _all_shingles(text_col: str = "text", k: int = 3):
+def _all_shingles():
     """k-word shingles INCLUDING repeats (cf. dedup.shingles_column,
     which dedups) — repetition analysis needs the multiplicities."""
-    toks = T.tokens(text_col)
+    toks = T.tokens("text")
     n = F.size(toks)
     windowed = F.transform(
-        F.sequence(F.lit(0), n - k),
-        lambda i: F.concat_ws(" ", F.slice(toks, i + 1, k)),
+        F.sequence(F.lit(0), n - 3),
+        lambda i: F.concat_ws(" ", F.slice(toks, i + 1, 3)),
     )
-    return F.when(n >= k, windowed).otherwise(
+    return F.when(n >= 3, windowed).otherwise(
         F.array(F.concat_ws(" ", toks))
     )
 
@@ -1547,7 +1547,7 @@ def contamination_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     every LLM training pipeline runs (cf. GPT-3 appendix C)."""
     documents = load(spark, sf_dir, "documents")
     shd = T.spread_small_input(documents).select(
-        "doc_id", F.explode(F.array_distinct(_all_shingles("text"))).alias("shingle")
+        "doc_id", F.explode(F.array_distinct(_all_shingles())).alias("shingle")
     )
     bench = (
         shd.filter(F.col("doc_id") % 97 == 0)
@@ -1739,7 +1739,7 @@ def minhash_near_dup_pairs_documents(spark: SparkSession, sf_dir: str) -> DataFr
     100 TB throughput; pair-set equality between the two modes on a
     planted corpus is pinned in tests/test_dedup_md5.py."""
     documents = load(spark, sf_dir, "documents")
-    return D.minhash_near_dup_pairs(documents, threshold=0.5, hash_fn="md5")
+    return D.minhash_near_dup_pairs(documents, hash_fn="md5")
 
 
 @register(
@@ -3088,7 +3088,7 @@ def multimodal_image_neardup_pairs(
         "media_id", F.col("media_id") + F.lit(1_000_000_000)
     )
     return M.image_near_dup_pairs(
-        hashes.unionByName(twin_rows), max_hamming=3
+        hashes.unionByName(twin_rows)
     )
 
 
@@ -3120,7 +3120,7 @@ def multimodal_audio_neardup_pairs(
     # one materialization for the five-branch band self-join — same
     # rationale as multimodal_image_neardup_pairs
     fps = M.audio_fingerprints(media).localCheckpoint(eager=True)
-    return M.audio_near_dup_pairs(fps, max_hamming=3)
+    return M.audio_near_dup_pairs(fps)
 
 
 @register("streaming_media_neardup_ingest")  # rows-only: phash gate
@@ -3252,7 +3252,7 @@ def neardup_store_cluster_survivors(
         # shingled+signed exactly once (at build), not re-signed for
         # pair generation (the round-8 bench showed the double pass)
         pairs = near_dup_pairs_within_store(
-            spark, store, threshold=0.9
+            spark, store
         ).select("doc_a", "doc_b").localCheckpoint(eager=True)
         update_cluster_labels(
             spark, store, pairs.filter(F.pmod(F.col("doc_b"), F.lit(2)) == 0)
@@ -3498,7 +3498,7 @@ def llm_corpus_prep_v2(spark: SparkSession, sf_dir: str) -> DataFrame:
     same shuffle the dedup already pays."""
     documents = T.spread_small_input(load(spark, sf_dir, "documents"))
     toks = T.tokens("text")
-    sh = _all_shingles("text")
+    sh = _all_shingles()
 
     def n_matches(pattern: str):
         return F.size(F.regexp_extract_all("text", F.lit(pattern), 0))
@@ -3591,7 +3591,7 @@ def sequence_packing_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     sharded by source (see llm/packing.py for the scale rationale:
     shards pack independently, so no global-order window exists)."""
     documents = load(spark, sf_dir, "documents")
-    return PK.sequence_stats(documents, seq_len=512, shard_col="source")
+    return PK.sequence_stats(documents, seq_len=512)
 
 
 @register(
@@ -3675,7 +3675,7 @@ def sequence_packing_bestfit(spark: SparkSession, sf_dir: str) -> DataFrame:
     replica-pinned in tests/test_packing.py."""
     documents = load(spark, sf_dir, "documents")
     packed = PK.pack_sequences_bestfit(
-        documents, seq_len=512, shard_col="source"
+        documents, seq_len=512
     )
     return PK.bestfit_packing_stats(packed, seq_len=512).orderBy("shard")
 
@@ -3881,7 +3881,7 @@ def corpus_holdout_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     (see llm/packing.holdout_split). Map-side, zero shuffles."""
     documents = load(spark, sf_dir, "documents")
     return PK.holdout_split(
-        documents, {"train": 0.90, "val": 0.05, "test": 0.05}, seed=3
+        documents, {"train": 0.90, "val": 0.05, "test": 0.05}
     )
 
 
@@ -3962,7 +3962,6 @@ def cluster_aware_holdout(spark: SparkSession, sf_dir: str) -> DataFrame:
         documents,
         pairs,
         {"train": 0.90, "val": 0.05, "test": 0.05},
-        seed=3,
     )
 
 
@@ -4098,7 +4097,7 @@ def llm_corpus_prep_v3(spark: SparkSession, sf_dir: str) -> DataFrame:
     g = Q.gopher_columns("text", min_stop_hits=1)
     margin = Q.linear_margin()
     qs = F.floor(margin * F.lit(10000.0)) / F.lit(10000.0)
-    _, kept = D.intra_doc_kept_blocks("text", block=2)
+    _, kept = D.intra_doc_kept_blocks(block=2)
     n_clean = F.aggregate(
         kept,
         F.lit(0).cast("bigint"),
@@ -4434,13 +4433,13 @@ def bloom_prefilter_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_seen = seen.count()
     m_bits, k = B.bloom_parameters(max(n_seen, 1), fpr=0.01)
     half_a = B.build_bloom(
-        seen.where(F.col("doc_id") % 4 == 0), "fp", m_bits, k
+        seen.where(F.col("doc_id") % 4 == 0), m_bits, k
     )
     half_b = B.build_bloom(
-        seen.where(F.col("doc_id") % 4 == 2), "fp", m_bits, k
+        seen.where(F.col("doc_id") % 4 == 2), m_bits, k
     )
     bloom = B.merge_blooms(half_a, half_b).localCheckpoint(eager=True)
-    probed = B.probe_bloom(fps, "fp", bloom, m_bits, k)
+    probed = B.probe_bloom(fps, bloom, m_bits, k)
     definite = probed.filter(~F.col("maybe_seen")).select("doc_id")
     suspects = probed.filter(F.col("maybe_seen")).select("doc_id", "fp")
     cleared = suspects.join(
@@ -4566,7 +4565,7 @@ def bpe_train_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     from . import bpe as B
 
     documents = load(spark, sf_dir, "documents")
-    return B.train_bpe_merges(documents, num_merges=12, min_pair_freq=2)
+    return B.train_bpe_merges(documents, num_merges=12)
 
 
 @register("bpe_fertility_by_source")  # rows-only (trained-model plan)
@@ -4639,7 +4638,6 @@ def llm_training_shards_bpe(spark: SparkSession, sf_dir: str) -> DataFrame:
     packed = PK.pack_sequences_bestfit(
         sized,
         seq_len=256,
-        shard_col="source",
         n_tokens_col="n_bpe_tokens",
     ).select(
         F.col("shard").alias("pack_shard"),
@@ -4651,7 +4649,7 @@ def llm_training_shards_bpe(spark: SparkSession, sf_dir: str) -> DataFrame:
     root = tempfile.mkdtemp(prefix="shards_")
     try:
         PK.write_training_shards(
-            packed, _os.path.join(root, "shards"), num_shards=4, seed=1
+            packed, _os.path.join(root, "shards"), seed=1
         )
         back = spark.read.parquet(_os.path.join(root, "shards"))
         return back.select(
@@ -5104,7 +5102,7 @@ def kmv_source_overlap_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     (no intersection closure). Hash-oracled; accuracy floored against
     the exact overlap in tests/test_r9s2_families.py (llm/kmv.py)."""
     documents = load(spark, sf_dir, "documents")
-    return KV.kmv_overlap_pairs(documents, k=64)
+    return KV.kmv_overlap_pairs(documents)
 
 
 @register(
@@ -5140,7 +5138,7 @@ def kmv_store_incremental_estimate(
         # meta threads through the lifecycle (round 13, guide §1.2):
         # it is immutable post-create, and a long-lived ingest daemon
         # caches it the same way — each load is a whole 1-task job
-        meta = KV.create_kmv_store(spark, root, k=64, shingle_k=3)
+        meta = KV.create_kmv_store(spark, root, k=64)
         even = documents.filter(F.col("doc_id") % 2 == 0)
         odd = documents.filter(F.col("doc_id") % 2 == 1)
         KV.append_to_kmv_store(spark, root, even, meta=meta)
@@ -5268,7 +5266,7 @@ def embedding_margin_pairs_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     floored in tests/test_r9s2_families.py."""
     embeddings = load(spark, sf_dir, "embeddings")
     return S.margin_pairs_ann(
-        embeddings, floor=0.30, k=4, margin_threshold=1.1, max_iter=3
+        embeddings, max_iter=3
     )
 
 
@@ -5354,7 +5352,7 @@ def blocklist_scan_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     from . import blocklist as BL
 
     documents = load(spark, sf_dir, "documents")
-    phrases = BL.top_trigram_phrases(documents, n=8)
+    phrases = BL.top_trigram_phrases(documents)
     return BL.scan_blocklist(documents, phrases).select(
         F.col("id").alias("doc_id"), "n_hits", "n_phrases_hit"
     )
@@ -5497,7 +5495,7 @@ def llm_corpus_prep_v5(spark: SparkSession, sf_dir: str) -> DataFrame:
     # checkpointed because the two consumers would otherwise each
     # re-run the shingle explode + self-join
     base_pairs = D._shared_shingle_counts(
-        documents, "text", "doc_id", 3, 50
+        documents, 50
     ).localCheckpoint(eager=True)
     jac = F.col("shared").cast("double") / (
         F.col("na") + F.col("nb") - F.col("shared")
@@ -5547,7 +5545,7 @@ def llm_corpus_prep_v5(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("source")
         .agg(F.count(F.lit(1)).cast("bigint").alias("n_fragment_docs"))
     )
-    kest = KV.kmv_distinct_by_group(documents, k=64).select(
+    kest = KV.kmv_distinct_by_group(documents).select(
         F.col("group").alias("source"),
         F.col("est_distinct").alias("est_distinct_shingles"),
     )
@@ -5555,9 +5553,7 @@ def llm_corpus_prep_v5(spark: SparkSession, sf_dir: str) -> DataFrame:
         documents.select(
             "doc_id", "source", T.token_count("text").alias("_tc")
         ),
-        group_col="source",
         value_col="_tc",
-        n_replicates=32,
     ).select(
         F.col("group").alias("source"),
         F.col("ci_lo").alias("tokens_ci_lo"),
@@ -5733,7 +5729,7 @@ def video_keyframe_neardup_pairs(
         "media_id", F.col("media_id") + F.lit(1_850_000_000)
     )
     return V.video_near_dup_pairs(
-        kf.unionByName(kf_twins), max_hamming=3
+        kf.unionByName(kf_twins)
     )
 
 
@@ -5844,7 +5840,7 @@ def streaming_blocklist_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     # derived once per corpus — scaffolding, not the timed operator
     memo_key = f"blphrases:{sf_dir}"
     if memo_key not in _INPUT_MEMO:
-        _INPUT_MEMO[memo_key] = BL.top_trigram_phrases(documents, n=8)
+        _INPUT_MEMO[memo_key] = BL.top_trigram_phrases(documents)
     phrases = _INPUT_MEMO[memo_key]
 
     def build(memo_root: str) -> None:
@@ -6145,8 +6141,7 @@ def streaming_unified_admission(spark: SparkSession, sf_dir: str) -> DataFrame:
     root = tempfile.mkdtemp(prefix="unified_gate_")
     try:
         stores = _os.path.join(root, "stores")
-        create_unified_stores(spark, stores, block=3, kmv_k=64,
-                              kmv_shingle_k=3)
+        create_unified_stores(spark, stores, kmv_k=64)
         q = stream_ingest_unified(
             spark,
             src,

@@ -58,11 +58,7 @@ from .similarity import (
 def _pairs_within_cells(
     df: DataFrame,
     threshold: float,
-    vec_col: str,
-    id_col: str,
     num_cells: int,
-    seed: int,
-    train_sample: int,
     probes: int,
 ) -> DataFrame:
     """(vec_a, vec_b, cosine) for shared-cell pairs clearing
@@ -85,11 +81,11 @@ def _pairs_within_cells(
     """
     import pandas as pd
 
-    sample = _unit_np(_train_vectors(df, vec_col, train_sample))
-    centroids = _kmeans_np(sample, num_cells, seed=seed, max_iter=10)
+    sample = _unit_np(_train_vectors(df, 65536))
+    centroids = _kmeans_np(sample, num_cells, seed=42, max_iter=10)
     probe_of = _ivf_probe_udf(centroids, nprobe=probes)
     v = df.select(
-        F.col(id_col).alias("id"), F.col(vec_col).alias("v")
+        F.col("vec_id").alias("id"), F.col("embedding").alias("v")
     ).withColumn("cell", F.explode(probe_of(F.col("v"))))
 
     def cell_pairs(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -127,11 +123,7 @@ def _pairs_within_cells(
 def semantic_dedup(
     df: DataFrame,
     threshold: float,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
     num_cells: int | None = None,
-    seed: int = 42,
-    train_sample: int = 65536,
     probes: int = 2,
 ) -> DataFrame:
     """(id, cluster_id, keep) for every row of ``df``: rows whose
@@ -153,11 +145,9 @@ def semantic_dedup(
     ``keep = NULL`` (NULL == NULL), a three-valued surprise for every
     downstream filter.
     """
-    df = df.where(F.col(id_col).isNotNull())
+    df = df.where(F.col("vec_id").isNotNull())
     if num_cells is None:
-        pairs = similar_pairs_bruteforce(
-            df, threshold, vec_col=vec_col, id_col=id_col
-        )
+        pairs = similar_pairs_bruteforce(df, threshold)
     else:
         if num_cells < 1:
             raise ValueError(f"num_cells must be >= 1, got {num_cells}")
@@ -166,24 +156,20 @@ def semantic_dedup(
             # that deduplicates nothing, with no error
             raise ValueError(f"probes must be >= 1, got {probes}")
         pairs = _pairs_within_cells(
-            df.where(F.col(vec_col).isNotNull()),
+            df.where(F.col("embedding").isNotNull()),
             threshold,
-            vec_col,
-            id_col,
             num_cells,
-            seed,
-            train_sample,
             probes=min(probes, num_cells),
         )
     clustered = duplicate_clusters(
         pairs,
-        all_ids=df.select(id_col),
-        id_col=id_col,
+        all_ids=df.select("vec_id"),
+        id_col="vec_id",
         src="vec_a",
         dst="vec_b",
     )
     return clustered.select(
-        F.col(id_col),
+        F.col("vec_id"),
         F.col("cluster_id"),
-        (F.col(id_col) == F.col("cluster_id")).alias("keep"),
+        (F.col("vec_id") == F.col("cluster_id")).alias("keep"),
     )

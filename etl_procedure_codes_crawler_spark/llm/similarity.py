@@ -47,15 +47,13 @@ def with_norm(df: DataFrame, vec_col: str = "embedding") -> DataFrame:
 def _pairs_above(
     df: DataFrame,
     threshold: float,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
 ) -> DataFrame:
     """(vec_a, vec_b, cosine) with UNROUNDED cosine for every unordered
     pair at cosine >= threshold — shared by the pair miner and the
     margin scorer (which must derive neighbor statistics from the raw
     values, not display-rounded ones)."""
     v = with_norm(
-        df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v")), "v"
+        df.select(F.col("vec_id").alias("id"), F.col("embedding").alias("v")), "v"
     )
     a = v.select(
         F.col("id").alias("vec_a"), F.col("v").alias("va"), F.col("_norm").alias("na")
@@ -79,13 +77,11 @@ def _pairs_above(
 def similar_pairs_bruteforce(
     df: DataFrame,
     threshold: float,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
 ) -> DataFrame:
     """All corpus pairs with cosine >= threshold (embedding-cosine
     near-dup detection). Exact baseline — use the LSH variant to
     pre-filter at scale."""
-    return _pairs_above(df, threshold, vec_col, id_col).select(
+    return _pairs_above(df, threshold).select(
         "vec_a", "vec_b", F.round("cosine", 4).alias("cosine")
     )
 
@@ -155,15 +151,6 @@ def margin_score_pairs(
 
 def margin_pairs_ann(
     df: DataFrame,
-    floor: float = 0.30,
-    k: int = 4,
-    margin_threshold: float = 1.1,
-    knn: int = 32,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    num_centroids: int | None = None,
-    nprobe: int = 6,
-    cell_target: int = 256,
     max_iter: int = 5,
 ) -> DataFrame:
     """Ratio-margin pair mining (:func:`margin_score_pairs`) over an
@@ -175,30 +162,28 @@ def margin_pairs_ann(
     the margin statistic COMPOUNDS misses (a lost candidate both drops
     a pair and biases both endpoints' neighborhood means), measured
     <20% pair recall — while the k-NN graph recovers each vector's
-    strongest ``knn`` neighbors at the IVF recall floor regardless of
-    how weak "strong" is. Candidate edges are top-``knn`` IVF
-    neighbors at cosine >= floor, symmetrized; unrounded cosines are
+    strongest 32 neighbors at the IVF recall floor regardless of
+    how weak "strong" is. Candidate edges are top-32 IVF
+    neighbors at cosine >= 0.30, symmetrized; unrounded cosines are
     re-derived pair-wise (the fold must not consume display-rounded
     values); scoring is :func:`margin_score_pairs`, shared with the
     exact twin. Recall floored against the exact variant in
     tests/test_r9s2_families.py.
 
-    Cell count TRACKS the corpus unless pinned: with every vector a
+    Cell count TRACKS the corpus: with every vector a
     query, fixed cells make the candidate join quadratic (each query
     scans nprobe/ncells of the corpus — measured 31.9x wall for 4x
-    vectors at 16 cells on the 10x sweep). ncells = n/cell_target
-    keeps ~cell_target·nprobe candidates per query, so total candidate
+    vectors at 16 cells on the 10x sweep). ncells = n/256 keeps
+    ~256·nprobe candidates per query (nprobe 6), so total candidate
     volume grows LINEARLY in n — the FAISS sizing rule applied to the
     kNN-graph case. The one extra count() job prices that decision."""
-    if num_centroids is None:
-        n = df.count()
-        num_centroids = max(16, min(4096, n // int(cell_target)))
+    num_centroids = max(16, min(4096, df.count() // 256))
     edges = (
         cosine_topk_ivf(
-            df, df, k=knn, vec_col=vec_col, id_col=id_col,
-            num_centroids=num_centroids, nprobe=nprobe, max_iter=max_iter,
+            df, df, k=32, num_centroids=num_centroids, nprobe=6,
+            max_iter=max_iter,
         )
-        .filter(F.col("cosine") >= floor)
+        .filter(F.col("cosine") >= 0.3)
         .select(
             F.least("query_id", "neighbor_id").alias("vec_a"),
             F.greatest("query_id", "neighbor_id").alias("vec_b"),
@@ -206,7 +191,7 @@ def margin_pairs_ann(
         .distinct()
     )
     v = with_norm(
-        df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v")), "v"
+        df.select(F.col("vec_id").alias("id"), F.col("embedding").alias("v")), "v"
     )
     a = v.select(F.col("id").alias("vec_a"), F.col("v").alias("va"),
                  F.col("_norm").alias("na"))
@@ -228,11 +213,11 @@ def margin_pairs_ann(
         # the 10x corpus; the floor-pruned edge relation itself is tiny
         .localCheckpoint(eager=True)
     )
-    return margin_score_pairs(raw, k=k, margin_threshold=margin_threshold)
+    return margin_score_pairs(raw)
 
 
 def _train_vectors(
-    corpus: DataFrame, vec_col: str, train_sample: int
+    corpus: DataFrame, train_sample: int
 ) -> np.ndarray:
     """Bounded driver-side training sample for k-means codebooks and
     coarse centroids — the FAISS approach: quantizers are trained on a
@@ -245,14 +230,14 @@ def _train_vectors(
     unrepresentative should be pre-sampled by the caller; for training
     a quantizer this is the standard trade."""
     rows = (
-        corpus.select(vec_col)
-        .where(F.col(vec_col).isNotNull())
+        corpus.select("embedding")
+        .where(F.col("embedding").isNotNull())
         .limit(train_sample)
         .collect()
     )
     if not rows:
         raise ValueError(
-            f"cannot train on an empty corpus (vector column: {vec_col!r})"
+            "cannot train on an empty corpus (vector column: 'embedding')"
         )
     return np.asarray([r[0] for r in rows], dtype=np.float64)
 
@@ -407,7 +392,7 @@ def _int_sq_dists(A: np.ndarray, B: np.ndarray) -> np.ndarray:
 
 
 def _train_vectors_by_id(
-    corpus: DataFrame, vec_col: str, id_col: str, train_sample: int
+    corpus: DataFrame, train_sample: int
 ) -> tuple[np.ndarray, np.ndarray]:
     """Deterministic training sample for md5-int quantizers: the
     ``train_sample`` LOWEST-id vectors — unlike :func:`_train_vectors`
@@ -415,16 +400,26 @@ def _train_vectors_by_id(
     oracle must re-derive the exact sample, so the cut is ORDER BY id
     LIMIT n. Same bounded-collect scale story: driver memory and scan
     cost are capped regardless of corpus size."""
+    from pyspark.sql.types import IntegralType
+
+    id_type = corpus.schema["vec_id"].dataType
+    if not isinstance(id_type, IntegralType):
+        # the md5-int quantizers key their init and the oracle replay
+        # on the integer id
+        raise ValueError(
+            "md5-int quantizers need integer vec_id values, got "
+            f"{id_type.simpleString()}"
+        )
     rows = (
-        corpus.select(F.col(id_col), F.col(vec_col))
-        .where(F.col(vec_col).isNotNull())
-        .orderBy(F.col(id_col))
+        corpus.select(F.col("vec_id"), F.col("embedding"))
+        .where(F.col("embedding").isNotNull())
+        .orderBy(F.col("vec_id"))
         .limit(train_sample)
         .collect()
     )
     if not rows:
         raise ValueError(
-            f"cannot train on an empty corpus (vector column: {vec_col!r})"
+            "cannot train on an empty corpus (vector column: 'embedding')"
         )
     ids = np.asarray([r[0] for r in rows], dtype=np.int64)
     X = np.asarray([list(r[1]) for r in rows], dtype=np.float64)
@@ -502,9 +497,6 @@ def _ivf_probe_int_udf(centers: np.ndarray, nprobe: int, normalize: bool):
 
 def _pq_int_context(
     corpus: DataFrame,
-    vec_col: str,
-    id_col: str,
-    m: int,
     codebook_size: int,
     max_iter: int,
     dim: int | None = None,
@@ -526,7 +518,7 @@ def _pq_int_context(
 
     if train_data is None:
         train_data = _train_vectors_by_id(
-            corpus, vec_col, id_col, train_sample
+            corpus, train_sample
         )
     ids, X = train_data
     if dim is None:
@@ -535,22 +527,22 @@ def _pq_int_context(
         raise ValueError(
             f"dim={dim} but corpus vectors have {X.shape[1]} elements"
         )
-    assert dim % m == 0, f"dim {dim} not divisible by m={m}"
-    sub = dim // m
+    assert dim % 8 == 0, f"dim {dim} not divisible by m=8"
+    sub = dim // 8
 
     QU = _quantize_np(_unit_seq_np(X))
-    pooled = QU.reshape(len(QU) * m, sub)
+    pooled = QU.reshape(len(QU) * 8, sub)
     keys = [
-        (_md5_h60_py(f"pq:{int(i)}:{s}"), int(i) * m + s)
+        (_md5_h60_py(f"pq:{int(i)}:{s}"), int(i) * 8 + s)
         for i in ids
-        for s in range(m)
+        for s in range(8)
     ]
     CB = _kmeans_int(pooled, keys, codebook_size, max_iter)
-    codes, lut = _pq_int_codecs(CB, m, sub)
+    codes, lut = _pq_int_codecs(CB, sub)
     return CB, codes, lut
 
 
-def _pq_int_codecs(codebook: np.ndarray, m: int, sub: int):
+def _pq_int_codecs(codebook: np.ndarray, sub: int):
     """(codes_udf, lut_udf) over a FIXED integer codebook — shared by
     the in-line trainer above and the persisted index, whose appends
     and serves must encode with the STORED quantizers."""
@@ -564,7 +556,7 @@ def _pq_int_codecs(codebook: np.ndarray, m: int, sub: int):
     def codes(vectors: pd.Series) -> pd.Series:
         q = _quantize_np(_unit_seq_np(_stack_np(vectors)))
         lab = _int_sq_dists(q.reshape(-1, sub), CB).argmin(axis=1)
-        return pd.Series(list(lab.reshape(-1, m).astype(np.int32)))
+        return pd.Series(list(lab.reshape(-1, 8).astype(np.int32)))
 
     @pandas_udf(ArrayType(LongType()))
     def lut(vectors: pd.Series) -> pd.Series:
@@ -572,7 +564,7 @@ def _pq_int_codecs(codebook: np.ndarray, m: int, sub: int):
             _quantize_np(_unit_seq_np(_stack_np(vectors)))
             - _FIXED_SHIFT
         )
-        out = _int_matmul(qs.reshape(len(qs), m, sub), CBs.T)
+        out = _int_matmul(qs.reshape(len(qs), 8, sub), CBs.T)
         return pd.Series(list(out.reshape(len(qs), -1)))
 
     return codes, lut
@@ -602,9 +594,6 @@ def _hadamard_signs(dim: int) -> np.ndarray:
 
 def _hpq_int_context(
     corpus: DataFrame,
-    vec_col: str,
-    id_col: str,
-    m: int,
     codebook_size: int,
     max_iter: int,
     dim: int | None = None,
@@ -627,7 +616,7 @@ def _hpq_int_context(
 
     if train_data is None:
         train_data = _train_vectors_by_id(
-            corpus, vec_col, id_col, train_sample
+            corpus, train_sample
         )
     ids, X = train_data
     if dim is None:
@@ -636,8 +625,8 @@ def _hpq_int_context(
         raise ValueError(
             f"dim={dim} but corpus vectors have {X.shape[1]} elements"
         )
-    assert dim % m == 0, f"dim {dim} not divisible by m={m}"
-    sub = dim // m
+    assert dim % 8 == 0, f"dim {dim} not divisible by m=8"
+    sub = dim // 8
     H = _hadamard_signs(dim)
 
     def rot_shifted(batch: np.ndarray) -> np.ndarray:
@@ -647,11 +636,11 @@ def _hpq_int_context(
         return _int_matmul(qs, H) + _HADAMARD_ROT_SHIFT
 
     R = rot_shifted(X)
-    pooled = R.reshape(len(R) * m, sub)
+    pooled = R.reshape(len(R) * 8, sub)
     keys = [
-        (_md5_h60_py(f"hpq:{int(i)}:{s}"), int(i) * m + s)
+        (_md5_h60_py(f"hpq:{int(i)}:{s}"), int(i) * 8 + s)
         for i in ids
-        for s in range(m)
+        for s in range(8)
     ]
     CB = _kmeans_int(pooled, keys, codebook_size, max_iter)
     CBs = CB - _HADAMARD_ROT_SHIFT
@@ -660,12 +649,12 @@ def _hpq_int_context(
     def codes(vectors: pd.Series) -> pd.Series:
         r = rot_shifted(_stack_np(vectors))
         lab = _int_sq_dists(r.reshape(-1, sub), CB).argmin(axis=1)
-        return pd.Series(list(lab.reshape(-1, m).astype(np.int32)))
+        return pd.Series(list(lab.reshape(-1, 8).astype(np.int32)))
 
     @pandas_udf(ArrayType(LongType()))
     def lut(vectors: pd.Series) -> pd.Series:
         rs = rot_shifted(_stack_np(vectors)) - _HADAMARD_ROT_SHIFT
-        out = _int_matmul(rs.reshape(len(rs), m, sub), CBs.T)
+        out = _int_matmul(rs.reshape(len(rs), 8, sub), CBs.T)
         return pd.Series(list(out.reshape(len(rs), -1)))
 
     return CB, codes, lut
@@ -732,7 +721,7 @@ def _opq_rotation(train_X: np.ndarray, m: int) -> np.ndarray:
     return np.ascontiguousarray(evecs[:, perm])
 
 
-def _pq_codes_udf(codebook: np.ndarray, m: int, sub: int, R: np.ndarray):
+def _pq_codes_udf(codebook: np.ndarray, sub: int, R: np.ndarray):
     """Arrow-batched PQ encode: unit-normalize, rotate,
     slice into ``m`` subvectors, argmin against the closure codebook —
     one (n·m, sub) @ (sub, k) matmul per batch (the sanctioned
@@ -747,12 +736,12 @@ def _pq_codes_udf(codebook: np.ndarray, m: int, sub: int, R: np.ndarray):
     def codes(vectors: pd.Series) -> pd.Series:
         X = _unit_np(_stack_np(vectors)) @ R
         lab = _sq_dists_np(X.reshape(-1, sub), C).argmin(axis=1)
-        return pd.Series(list(lab.reshape(-1, m).astype(np.int32)))
+        return pd.Series(list(lab.reshape(-1, 8).astype(np.int32)))
 
     return codes
 
 
-def _pq_lut_udf(codebook: np.ndarray, m: int, sub: int, R: np.ndarray):
+def _pq_lut_udf(codebook: np.ndarray, sub: int, R: np.ndarray):
     """Arrow-batched ADC lookup table: for each query, the dot of every
     rotated subvector slice with every codebook entry — flattened
     (m·k,) so a candidate's score is ``m`` element_at adds."""
@@ -764,7 +753,7 @@ def _pq_lut_udf(codebook: np.ndarray, m: int, sub: int, R: np.ndarray):
     @pandas_udf(ArrayType(DoubleType()))
     def lut(vectors: pd.Series) -> pd.Series:
         X = _unit_np(_stack_np(vectors)) @ R
-        out = (X.reshape(len(X), m, sub) @ C.T).reshape(len(X), -1)
+        out = (X.reshape(len(X), 8, sub) @ C.T).reshape(len(X), -1)
         return pd.Series(list(out))
 
     return lut
@@ -968,12 +957,9 @@ def cosine_topk_ivf(
     corpus: DataFrame,
     queries: DataFrame,
     k: int = 5,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
     num_centroids: int = 16,
     nprobe: int = 4,
     max_iter: int = 5,
-    train_sample: int = 1 << 16,
 ) -> DataFrame:
     """IVF (inverted-file) approximate top-k: k-means partitions the
     corpus into cells; each query probes its ``nprobe`` nearest cells
@@ -993,7 +979,7 @@ def cosine_topk_ivf(
     engine-exact integer relations a SQL oracle replays."""
     from .text import spread_small_input
 
-    ids, X = _train_vectors_by_id(corpus, vec_col, id_col, train_sample)
+    ids, X = _train_vectors_by_id(corpus, 1 << 16)
     keys = [(_md5_h60_py(f"km:{i}"), int(i)) for i in ids]
     centers = _kmeans_int(_quantize_np(X), keys, num_centroids, max_iter)
     cell_udf = _ivf_cell_int_udf(centers, normalize=False)
@@ -1001,7 +987,7 @@ def cosine_topk_ivf(
     # core (same rationale as lsh_table_buckets)
     assigned = spread_small_input(
         corpus.select(
-            F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cv")
+            F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("cv")
         )
     ).select(
         "neighbor_id",
@@ -1018,7 +1004,7 @@ def cosine_topk_ivf(
         F.col("qv")
     )
     probes = (
-        queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv"))
+        queries.select(F.col("vec_id").alias("query_id"), F.col("embedding").alias("qv"))
         .select(
             "query_id",
             "qv",
@@ -1050,8 +1036,6 @@ def cosine_topk_lsh(
     corpus: DataFrame,
     queries: DataFrame,
     k: int = 5,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
     num_tables: int = 8,
     planes_per_table: int = 5,
     dim: int = 64,
@@ -1067,14 +1051,18 @@ def cosine_topk_lsh(
     replays (see :func:`_md5_bucket_signatures`)."""
     signature = _md5_bucket_signatures(num_tables, planes_per_table, dim)
     q = lsh_table_buckets(
-        queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv")),
+        queries.select(
+            F.col("vec_id").alias("query_id"), F.col("embedding").alias("qv")
+        ),
         "query_id",
         "qv",
         signature,
         spread=False,
     )
     c = lsh_table_buckets(
-        corpus.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cv")),
+        corpus.select(
+            F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("cv")
+        ),
         "neighbor_id",
         "cv",
         signature,
@@ -1110,9 +1098,6 @@ def cosine_topk_lsh(
 
 def _pq_context(
     train_X: np.ndarray,
-    m: int,
-    codebook_size: int,
-    seed: int,
     max_iter: int,
     dim: int | None = None,
 ):
@@ -1138,8 +1123,8 @@ def _pq_context(
         raise ValueError(
             f"dim={dim} but corpus vectors have {train_X.shape[1]} elements"
         )
-    assert dim % m == 0, f"dim {dim} not divisible by m={m}"
-    sub = dim // m
+    assert dim % 8 == 0, f"dim {dim} not divisible by m=8"
+    sub = dim // 8
 
     # ONE shared-codebook fit over all pooled m·n subvector slices of
     # the rotated unit-normalized training sample; reshape(-1, sub)
@@ -1151,30 +1136,30 @@ def _pq_context(
     # same geometry the encode path will see; it is fully
     # deterministic from the training sample (mean/cov/eigh + greedy
     # allocation) — deliberately NOT seed-controlled
-    R = _opq_rotation(train_X, m)
+    R = _opq_rotation(train_X, 8)
     pooled = (_unit_np(train_X) @ R).reshape(-1, sub)
     pool_cap = 1 << 17
     if len(pooled) > pool_cap:
-        idx = np.random.RandomState(seed).choice(
+        idx = np.random.RandomState(42).choice(
             len(pooled), size=pool_cap, replace=False
         )
         pooled = pooled[idx]
-    codebook = _kmeans_np(pooled, codebook_size, seed, max_iter)
+    codebook = _kmeans_np(pooled, 64, 42, max_iter)
     return (
         codebook,
-        _pq_codes_udf(codebook, m, sub, R),
-        _pq_lut_udf(codebook, m, sub, R),
+        _pq_codes_udf(codebook, sub, R),
+        _pq_lut_udf(codebook, sub, R),
     )
 
 
-def _adc_score(codes_col, lut_col, m: int, codebook_size: int):
+def _adc_score(codes_col, m: int, codebook_size: int):
     """The ADC score of a (codes, lut) pair: the sum of ``m`` LUT
     lookups, unrolled and lambda-free — whole-stage codegen keeps the
     per-pair hot loop JVM-compiled (this runs once per candidate pair,
     the widest relation in the plan)."""
     terms = [
         F.element_at(
-            F.col(lut_col),
+            F.col("lut"),
             F.lit(j * codebook_size + 1) + F.element_at(codes_col, j + 1),
         )
         for j in range(m)
@@ -1189,13 +1174,10 @@ def _adc_shortlist_rerank(
     pairs: DataFrame,
     corpus: DataFrame,
     queries: DataFrame,
-    vec_col: str,
-    id_col: str,
     k: int,
-    shortlist_factor: int,
 ) -> DataFrame:
     """Standard PQ second stage: the quantized ADC score only
-    SHORTLISTS (``k × shortlist_factor`` per query); exact cosine
+    SHORTLISTS (``k × 10`` per query); exact cosine
     re-ranks the shortlist — quantization noise decides nothing final,
     and the exact math runs on k×factor rows per query, not the
     corpus. ``pairs`` must carry (query_id, neighbor_id, adc_score)."""
@@ -1204,18 +1186,18 @@ def _adc_shortlist_rerank(
     )
     short = (
         pairs.withColumn("_arank", F.row_number().over(w_adc))
-        .filter(F.col("_arank") <= k * shortlist_factor)
+        .filter(F.col("_arank") <= k * 10)
         .select("query_id", "neighbor_id")
     )
     cn = with_norm(
         corpus.select(
-            F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cv")
+            F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("cv")
         ),
         "cv",
     ).withColumnRenamed("_norm", "cn")
     qn = with_norm(
         queries.select(
-            F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv")
+            F.col("vec_id").alias("query_id"), F.col("embedding").alias("qv")
         ),
         "qv",
     ).withColumnRenamed("_norm", "qn")
@@ -1253,27 +1235,21 @@ def cosine_topk_pq(
     corpus: DataFrame,
     queries: DataFrame,
     k: int = 5,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    m: int = 8,
-    codebook_size: int = 64,
     max_iter: int = 5,
-    shortlist_factor: int = 10,
     dim: int | None = None,
-    train_sample: int = 1 << 16,
     rotate: bool = False,
 ) -> DataFrame:
     """Product-quantization ANN with ADC (asymmetric distance
-    computation) scoring: the corpus is stored as ``m`` small codes
-    per vector instead of ``d`` floats, each query scores a candidate
-    with ``m`` lookup-table adds instead of ``d`` multiplies, and the
-    quantized score shortlists ``k × shortlist_factor`` candidates
+    computation) scoring: the corpus is stored as 8 small codes (of a
+    64-entry codebook) per vector instead of ``d`` floats, each query
+    scores a candidate with 8 lookup-table adds instead of ``d``
+    multiplies, and the quantized score shortlists ``k × 10`` candidates
     that exact cosine re-ranks (quantization noise never decides the
     final ranking).
 
     Spark-first construction, no ML-model state on executors: one
     shared-codebook k-means over all pooled subvector slices of a
-    bounded driver-side sample (a single fit instead of ``m`` — a
+    bounded driver-side sample (a single fit instead of 8 — a
     standard PQ simplification; see :func:`_train_vectors_by_id`),
     md5-seeded integer Lloyd (:func:`_pq_int_context`) so a SQL oracle
     replays training, encoding and the shortlist; ``rotate=True``
@@ -1294,17 +1270,16 @@ def cosine_topk_pq(
 
     ctx = _hpq_int_context if rotate else _pq_int_context
     _, codes_udf, lut_udf = ctx(
-        corpus, vec_col, id_col, m, codebook_size, max_iter,
-        dim=dim, train_sample=train_sample,
+        corpus, 64, max_iter, dim=dim
     )
     coded = spread_small_input(
         corpus.select(
-            F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cv")
+            F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("cv")
         )
     ).select("neighbor_id", codes_udf(F.col("cv")).alias("codes"))
     q = queries.select(
-        F.col(id_col).alias("query_id"),
-        lut_udf(F.col(vec_col)).alias("lut"),
+        F.col("vec_id").alias("query_id"),
+        lut_udf(F.col("embedding")).alias("lut"),
     )
     pairs = (
         coded.crossJoin(F.broadcast(q))
@@ -1312,13 +1287,13 @@ def cosine_topk_pq(
         .select(
             "query_id",
             "neighbor_id",
-            _adc_score(F.col("codes"), "lut", m, codebook_size).alias(
+            _adc_score(F.col("codes"), 8, 64).alias(
                 "adc_score"
             ),
         )
     )
     return _adc_shortlist_rerank(
-        pairs, corpus, queries, vec_col, id_col, k, shortlist_factor
+        pairs, corpus, queries, k
     )
 
 
@@ -1326,17 +1301,9 @@ def cosine_topk_ivfpq(
     corpus: DataFrame,
     queries: DataFrame,
     k: int = 5,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    num_centroids: int = 16,
     nprobe: int = 4,
-    m: int = 8,
-    codebook_size: int = 64,
-    seed: int = 42,
     max_iter: int = 5,
-    shortlist_factor: int = 10,
     dim: int | None = None,
-    train_sample: int = 1 << 16,
     rotate: bool = False,
 ) -> DataFrame:
     """IVF + PQ — the canonical billion-scale ANN pipeline, composed
@@ -1345,12 +1312,12 @@ def cosine_topk_ivfpq(
     - **IVF prunes compute**: k-means cells partition the corpus; each
       query probes only its ``nprobe`` nearest cells, so the candidate
       join is an EQUI-join on ``cell`` (a plain shuffled/broadcast
-      hash join) touching ~``nprobe/num_centroids`` of the corpus —
+      hash join) touching ~``nprobe``/16 of the corpus's 16 cells —
       never an all-pairs scan;
     - **PQ prunes memory**: within probed cells, candidates are scored
       by ADC over 8-byte code arrays, not 256-byte float vectors;
     - **exact re-rank**: the quantized score shortlists
-      ``k × shortlist_factor``; exact cosine decides the final top-k.
+      ``k × 10``; exact cosine decides the final top-k.
 
     Cell centroids and the PQ codebook are both trained driver-side on
     one shared bounded sample (:func:`_train_vectors` — collected
@@ -1358,41 +1325,37 @@ def cosine_topk_ivfpq(
     scoring join has no ML state, no Python, no UDFs; the corpus is
     scanned ONCE, producing (cell, codes) per vector. Approximate by
     design (recall floor pinned in tests/test_llm_similarity.py);
-    recall knobs: ``nprobe`` (cell coverage) × ``shortlist_factor``
-    (rank depth).
+    recall knob: ``nprobe`` (cell coverage).
 
     Unrotated, both quantizers are md5-seeded integer Lloyd on one
     fixed-point grid (:func:`_pq_int_context`, :func:`_kmeans_int`),
     so a SQL oracle replays the whole compose. ``rotate=True`` is OPQ
-    (:func:`_opq_rotation`): float quantizers seeded by ``seed``, since
+    (:func:`_opq_rotation`): float quantizers seeded by 42, since
     the learned rotation is an eigendecomposition no SQL replays.
     """
     from .text import spread_small_input
 
     if rotate:
-        train_X = _train_vectors(corpus, vec_col, train_sample)
+        train_X = _train_vectors(corpus, 1 << 16)
         _, codes_udf, lut_udf = _pq_context(
-            train_X, m, codebook_size, seed, max_iter, dim=dim
+            train_X, max_iter, dim=dim
         )
         # IVF cells on the unit vectors (cosine geometry)
         centers = _kmeans_np(
-            _unit_np(train_X), num_centroids, seed, max_iter
+            _unit_np(train_X), 16, 42, max_iter
         )
         cell_udf = _ivf_cell_udf(centers)
         probe_col = _probe_cells(F.col("qv"), centers, nprobe)
     else:
-        ids, X = _train_vectors_by_id(
-            corpus, vec_col, id_col, train_sample
-        )
+        ids, X = _train_vectors_by_id(corpus, 1 << 16)
         _, codes_udf, lut_udf = _pq_int_context(
-            corpus, vec_col, id_col, m, codebook_size, max_iter,
-            dim=dim, train_sample=train_sample, train_data=(ids, X),
+            corpus, 64, max_iter, dim=dim, train_data=(ids, X)
         )
         # IVF cells on the QUANTIZED unit vectors (cosine geometry,
         # integer Lloyd — same grid as the PQ codebook)
         keys = [(_md5_h60_py(f"km:{int(i)}"), int(i)) for i in ids]
         centers = _kmeans_int(
-            _quantize_np(_unit_seq_np(X)), keys, num_centroids, max_iter
+            _quantize_np(_unit_seq_np(X)), keys, 16, max_iter
         )
         cell_udf = _ivf_cell_int_udf(centers, normalize=True)
         probe_col = _ivf_probe_int_udf(centers, nprobe, normalize=True)(
@@ -1403,7 +1366,7 @@ def cosine_topk_ivfpq(
     # over the corpus (both UDFs run in the same ArrowEvalPython stage)
     coded = spread_small_input(
         corpus.select(
-            F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cv")
+            F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("cv")
         )
     ).select(
         "neighbor_id",
@@ -1418,7 +1381,7 @@ def cosine_topk_ivfpq(
     # geometry is cosine) + the ADC LUT, in one pass
     probes = (
         queries.select(
-            F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv")
+            F.col("vec_id").alias("query_id"), F.col("embedding").alias("qv")
         )
         .select(
             "query_id",
@@ -1432,11 +1395,11 @@ def cosine_topk_ivfpq(
         .select(
             "query_id",
             "neighbor_id",
-            _adc_score(F.col("codes"), "lut", m, codebook_size).alias(
+            _adc_score(F.col("codes"), 8, 64).alias(
                 "adc_score"
             ),
         )
     )
     return _adc_shortlist_rerank(
-        pairs, corpus, queries, vec_col, id_col, k, shortlist_factor
+        pairs, corpus, queries, k
     )

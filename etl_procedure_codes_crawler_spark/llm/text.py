@@ -124,6 +124,13 @@ def fingerprint_sha256(col: Column | str) -> Column:
     return F.sha2(normalized_text(col), 256)
 
 
+def md5_h60(col: Column | str) -> Column:
+    """First 15 hex chars of md5 as a non-negative 60-bit BIGINT —
+    the cross-engine hash (DuckDB: CAST(('0x' || substr(md5(x), 1,
+    15)) AS BIGINT))."""
+    return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("long")
+
+
 def token_lengths_sum(token_col: Column) -> Column:
     return F.aggregate(
         F.transform(token_col, F.length),
@@ -134,8 +141,6 @@ def token_lengths_sum(token_col: Column) -> Column:
 
 def chunk_documents(
     df,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     chunk_size: int = 128,
     overlap: int = 32,
 ):
@@ -160,7 +165,7 @@ def chunk_documents(
             f"need 0 <= overlap < chunk_size, got {overlap} / {chunk_size}"
         )
     step = chunk_size - overlap
-    toks = tokens(text_col)
+    toks = tokens("text")
     n = F.size(toks)
     num = F.when(n <= chunk_size, F.lit(1)).otherwise(
         F.ceil((n - F.lit(chunk_size)).cast("double") / F.lit(step)).cast("int")
@@ -180,9 +185,9 @@ def chunk_documents(
         ),
     )
     return (
-        df.where(F.length(F.trim(_c(text_col))) > 0)
-        .select(F.col(id_col), F.explode(chunks).alias("c"))
+        df.where(F.length(F.trim(F.col("text"))) > 0)
+        .select(F.col("doc_id"), F.explode(chunks).alias("c"))
         .select(
-            id_col, "c.chunk_idx", "c.start_token", "c.n_tokens", "c.chunk_text"
+            "doc_id", "c.chunk_idx", "c.start_token", "c.n_tokens", "c.chunk_text"
         )
     )

@@ -51,16 +51,19 @@ from pyspark.sql.functions import pandas_udf
 from .bpe import word_frequencies
 from .text import bpe_pretokens
 
+#: the longest piece, in characters, the seed vocabulary and Viterbi
+#: segmentation consider
+MAX_PIECE_LEN = 8
 
 def seed_pieces(
-    words: DataFrame, max_piece_len: int = 8, seed_size: int = 2048
+    words: DataFrame, seed_size: int = 2048
 ) -> DataFrame:
     """(piece, freq) — the over-complete seed vocabulary: every
-    substring of every word up to ``max_piece_len``, weighted by word
+    substring of every word up to ``MAX_PIECE_LEN``, weighted by word
     frequency, truncated to the ``seed_size`` heaviest multi-char
     pieces PLUS every single character seen (closure; never truncated
     and never pruned later). One explode over the word table — the
-    substring fan-out is bounded by max_piece_len · word length per
+    substring fan-out is bounded by MAX_PIECE_LEN · word length per
     DISTINCT word, not per corpus token."""
     subs = F.expr(
         """
@@ -68,7 +71,7 @@ def seed_pieces(
             transform(sequence(i, least(length(word),
                                         i + {L} - 1)), j ->
                 substring(word, i, j - i + 1))))
-        """.format(L=int(max_piece_len))
+        """.format(L=MAX_PIECE_LEN)
     )
     exploded = (
         words.select(F.col("freq"), F.explode(subs).alias("piece"))
@@ -84,7 +87,7 @@ def seed_pieces(
     return chars.unionByName(multi)
 
 
-def _viterbi(word: str, scores: dict[str, float], max_len: int):
+def _viterbi(word: str, scores: dict[str, float]):
     """Best segmentation of ``word`` under piece log-scores.
 
     Deterministic tie-breaks: higher score wins; at equal score the
@@ -102,7 +105,7 @@ def _viterbi(word: str, scores: dict[str, float], max_len: int):
     for i in range(1, n + 1):
         cand = None  # (score, -n_pieces, neg_str(piece)); max wins
         cand_j = 0
-        for j in range(max(0, i - max_len), i):
+        for j in range(max(0, i - MAX_PIECE_LEN), i):
             if best_score[j] is None:
                 continue
             piece = word[j:i]
@@ -140,7 +143,7 @@ class _neg_str(str):
 
 
 def _estep_counts(
-    words: DataFrame, scores: dict[str, float], max_len: int
+    words: DataFrame, scores: dict[str, float]
 ) -> DataFrame:
     """(piece, count) expected piece counts under the current model —
     hard-EM: Viterbi path counts weighted by word frequency. One Arrow
@@ -151,7 +154,7 @@ def _estep_counts(
     @pandas_udf("array<string>")
     def seg(ws: pd.Series) -> pd.Series:
         return pd.Series(
-            [None if w is None else _viterbi(w, sc, max_len) for w in ws]
+            [None if w is None else _viterbi(w, sc) for w in ws]
         )
 
     return (
@@ -164,23 +167,19 @@ def _estep_counts(
 def train_unigram(
     df: DataFrame,
     vocab_size: int = 512,
-    text_col: str = "text",
-    max_piece_len: int = 8,
     seed_size: int = 2048,
-    em_rounds: int = 2,
-    prune_ratio: float = 0.75,
 ) -> dict[str, float]:
     """Train; returns {piece: log-score} of exactly ``vocab_size``
     entries (or fewer if the corpus cannot fill it — single chars +
     surviving multi-char pieces).
 
-    Loop: (EM × em_rounds) → prune to ``prune_ratio`` of the current
+    Loop: (EM × 2) → prune to 75% of the current
     multi-char pieces (by ascending count, lexicographic tiebreak) →
     repeat until vocab_size remains. Each EM round costs one
     distributed E-step job; everything else is driver math on the
     piece table."""
-    words = word_frequencies(df, text_col).localCheckpoint(eager=True)
-    seed = seed_pieces(words, max_piece_len, seed_size).collect()
+    words = word_frequencies(df, "text").localCheckpoint(eager=True)
+    seed = seed_pieces(words, seed_size).collect()
     counts = {r["piece"]: int(r["freq"]) for r in seed}
     chars = {p for p in counts if len(p) == 1}
 
@@ -191,8 +190,8 @@ def train_unigram(
 
     scores = to_scores(counts)
     while True:
-        for _ in range(em_rounds):
-            rows = _estep_counts(words, scores, max_piece_len).collect()
+        for _ in range(2):
+            rows = _estep_counts(words, scores).collect()
             counts = {p: 0 for p in scores}
             for r in rows:
                 counts[r["piece"]] = int(r["count"])
@@ -201,7 +200,7 @@ def train_unigram(
         n_target_multi = max(0, vocab_size - len(chars))
         if len(multi) <= n_target_multi:
             break
-        keep_n = max(n_target_multi, int(len(multi) * prune_ratio))
+        keep_n = max(n_target_multi, int(len(multi) * 0.75))
         if keep_n == len(multi):
             keep_n = n_target_multi
         survivors = sorted(
@@ -220,9 +219,6 @@ def train_unigram(
 def unigram_encode(
     df: DataFrame,
     scores: dict[str, float],
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    max_piece_len: int = 8,
 ) -> DataFrame:
     """(id, tokens) — Viterbi-tokenize the corpus with a trained
     piece table. Same distinct-word economics as bpe_encode: the
@@ -238,12 +234,12 @@ def unigram_encode(
     @pandas_udf("array<string>")
     def seg(ws: pd.Series) -> pd.Series:
         return pd.Series(
-            [None if w is None else _viterbi(w, sc, max_piece_len) for w in ws]
+            [None if w is None else _viterbi(w, sc) for w in ws]
         )
 
     words = df.select(
-        F.col(id_col).alias("id"),
-        F.posexplode(bpe_pretokens(text_col)).alias("pos", "word"),
+        F.col("doc_id").alias("id"),
+        F.posexplode(bpe_pretokens("text")).alias("pos", "word"),
     ).where(F.length("word") > 0)
     segment_table = (
         words.select("word")
@@ -263,7 +259,7 @@ def unigram_encode(
         )
     )
     return (
-        df.select(F.col(id_col).alias("id"))
+        df.select(F.col("doc_id").alias("id"))
         .dropDuplicates(["id"])
         .join(grouped, "id", "left")
         .select(

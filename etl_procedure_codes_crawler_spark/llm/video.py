@@ -78,23 +78,20 @@ def _frame_chunks(data: bytes, n_frames: int) -> list[bytes]:
     return chunks
 
 
-def encode_frame_jpeg(chunk: bytes, width: int = VIDEO_FRAME_WIDTH) -> bytes:
+def encode_frame_jpeg(chunk: bytes) -> bytes:
     """One text chunk -> one real grayscale baseline JPEG frame:
-    height = ceil(bytes/width) (min 1), zero-padded — the
+    ``VIDEO_FRAME_WIDTH`` wide, height = ceil(bytes/width) (min 1),
+    zero-padded — the
     documents_as_jpeg geometry, per frame."""
     from .jpeg import encode_jpeg
 
-    height = max(1, -(-len(chunk) // width))
-    pix = chunk.ljust(width * height, b"\x00")
-    return encode_jpeg(pix, width, height, channels=1)
+    height = max(1, -(-len(chunk) // VIDEO_FRAME_WIDTH))
+    pix = chunk.ljust(VIDEO_FRAME_WIDTH * height, b"\x00")
+    return encode_jpeg(pix, VIDEO_FRAME_WIDTH, height, channels=1)
 
 
 def _mjpeg_synth_batches(
     batches: Iterator[pd.DataFrame],
-    width: int,
-    max_frames: int,
-    corrupt_container_every: int,
-    corrupt_sample_every: int,
 ) -> Iterator[pd.DataFrame]:
     """The MJPEG-in-MP4 synthesis as a plain batch generator —
     shared by documents_as_mjpeg_mp4 and the fused
@@ -106,29 +103,29 @@ def _mjpeg_synth_batches(
         ):
             data = (text or "").encode("utf-8")
             n_frames = min(
-                max_frames, max(1, len((text or "").split()))
+                VIDEO_MAX_FRAMES, max(1, len((text or "").split()))
             )
             frames = [
-                encode_frame_jpeg(c, width)
+                encode_frame_jpeg(c)
                 for c in _frame_chunks(data, n_frames)
             ]
             if (
-                corrupt_sample_every
-                and doc_id % corrupt_sample_every == 0
+                doc_id % VIDEO_CORRUPT_SAMPLE_EVERY == 0
                 and not (
-                    corrupt_container_every
-                    and doc_id % corrupt_container_every == 0
+                    doc_id % VIDEO_CORRUPT_CONTAINER_EVERY == 0
                 )
             ):
                 # same length => identical sample table/offsets,
                 # but no SOI marker => decode_jpeg raises
                 frames[0] = b"\x00" * len(frames[0])
             payload = build_mp4_samples(
-                frames, width=width, height=width, codec=b"jpeg"
+                frames,
+                width=VIDEO_FRAME_WIDTH,
+                height=VIDEO_FRAME_WIDTH,
+                codec=b"jpeg",
             )
             if (
-                corrupt_container_every
-                and doc_id % corrupt_container_every == 0
+                doc_id % VIDEO_CORRUPT_CONTAINER_EVERY == 0
             ):
                 payload = payload[: max(12, len(payload) // 2)]
             ids.append(doc_id)
@@ -149,29 +146,22 @@ def _mjpeg_synth_batches(
 
 def documents_as_mjpeg_mp4(
     documents: DataFrame,
-    width: int = VIDEO_FRAME_WIDTH,
-    max_frames: int = VIDEO_MAX_FRAMES,
-    corrupt_container_every: int = VIDEO_CORRUPT_CONTAINER_EVERY,
-    corrupt_sample_every: int = VIDEO_CORRUPT_SAMPLE_EVERY,
 ) -> DataFrame:
     """Deterministic REAL-format media corpus #6: each document
-    becomes a motion-JPEG video — n_frames = min(max_frames, max(1,
-    whitespace tokens)), frame i the i-th even byte chunk of the
+    becomes a motion-JPEG video — n_frames = min(VIDEO_MAX_FRAMES,
+    max(1, whitespace tokens)), frame i the i-th even byte chunk of the
     utf-8 text encoded as a real grayscale JPEG, all frames packed as
     samples of a valid single-track ISO BMFF container ('jpeg' sample
     entry). Two planted corruption schedules: every
-    ``corrupt_container_every``-th doc is truncated mid-container
-    (parse error) and every ``corrupt_sample_every``-th doc's first
+    ``VIDEO_CORRUPT_CONTAINER_EVERY``-th doc is truncated mid-container
+    (parse error) and every ``VIDEO_CORRUPT_SAMPLE_EVERY``-th doc's first
     keyframe is overwritten with same-length zeros (container parses,
     that sample alone fails to decode). Identical text => identical
     payload bytes, so planted twin documents become byte-identical
     duplicate clips."""
 
     def run(batches):
-        return _mjpeg_synth_batches(
-            batches, width, max_frames,
-            corrupt_container_every, corrupt_sample_every,
-        )
+        return _mjpeg_synth_batches(batches)
 
     return documents.select("doc_id", "text", "source").mapInPandas(
         run, schema=MEDIA_SCHEMA
@@ -284,35 +274,37 @@ DELTA_MAGIC = b"DGRY"
 #: the delta family's planted corruption schedule: every 37th doc's
 #: FIRST NON-SYNC sample (sample 2) is zeroed — the container parses,
 #: the keyframe decodes, and the prediction chain breaks for samples
-#: 2..min(nf, keyframe_every) until the next keyframe resets it.
+#: 2..min(nf, MP4_KEYFRAME_EVERY) until the next keyframe resets it.
 VIDEO_CORRUPT_DELTA_EVERY = 37
 
 
 def padded_frame_pixels(
-    data: bytes, n_frames: int, width: int = VIDEO_FRAME_WIDTH
+    data: bytes, n_frames: int
 ) -> tuple[list[bytes], int, int]:
     """(frames, width, height) — the even byte split of the payload,
     every chunk zero-padded to ONE shared geometry (delta prediction
-    needs equal-size reference frames): height = ceil(max_chunk /
-    width), max_chunk = base + (1 if rem else 0) — closed form in
-    (len(data), n_frames), which the SQL oracle replays."""
+    needs equal-size reference frames): width ``VIDEO_FRAME_WIDTH``,
+    height = ceil(max_chunk / width), max_chunk = base + (1 if rem
+    else 0) — closed form in (len(data), n_frames), which the SQL
+    oracle replays."""
     sizes = _mp4_sample_sizes(len(data), n_frames)
-    height = max(1, -(-max(sizes) // width))
+    height = max(1, -(-max(sizes) // VIDEO_FRAME_WIDTH))
     frames, off = [], 0
     for sz in sizes:
-        frames.append(data[off : off + sz].ljust(width * height, b"\x00"))
+        frames.append(
+            data[off : off + sz].ljust(VIDEO_FRAME_WIDTH * height, b"\x00")
+        )
         off += sz
-    return frames, width, height
+    return frames, VIDEO_FRAME_WIDTH, height
 
 
 def encode_delta_clip(
     frames: list[bytes],
     width: int,
     height: int,
-    keyframe_every: int = MP4_KEYFRAME_EVERY,
 ) -> list[bytes]:
     """Pixel frames (equal geometry) -> sample blobs: sample i is a
-    real JPEG when (i-1) % keyframe_every == 0, else DGRY header +
+    real JPEG when (i-1) % MP4_KEYFRAME_EVERY == 0, else DGRY header +
     (frame - prev_reconstruction) mod 256. Closed-loop: the encoder
     tracks the decoder's reconstruction (decode its own JPEG output),
     so every delta frame reconstructs its source byte-exactly."""
@@ -329,7 +321,7 @@ def encode_delta_clip(
     header = DELTA_MAGIC + struct.pack(">HH", width, height)
     for i, frame in enumerate(frames):
         cur = np.frombuffer(frame, dtype=np.uint8)
-        if i % keyframe_every == 0:
+        if i % MP4_KEYFRAME_EVERY == 0:
             blob = encode_jpeg(frame, width, height, channels=1)
             _w, _h, _c, pix = decode_jpeg(blob)
             recon = np.frombuffer(pix, dtype=np.uint8)
@@ -343,19 +335,15 @@ def encode_delta_clip(
 
 def documents_as_delta_mp4(
     documents: DataFrame,
-    width: int = VIDEO_FRAME_WIDTH,
-    max_frames: int = VIDEO_MAX_FRAMES,
-    corrupt_container_every: int = VIDEO_CORRUPT_CONTAINER_EVERY,
-    corrupt_delta_every: int = VIDEO_CORRUPT_DELTA_EVERY,
 ) -> DataFrame:
     """Deterministic REAL-format media corpus #7: each document
-    becomes a delta-coded clip — n_frames = min(max_frames, max(1,
-    tokens)), all frames padded to one geometry, sync samples real
+    becomes a delta-coded clip — n_frames = min(VIDEO_MAX_FRAMES,
+    max(1, tokens)), all frames padded to one geometry, sync samples real
     JPEGs, non-sync samples closed-loop diffs (see
     :func:`encode_delta_clip`), packed as a valid ISO BMFF container
     with a ``'dgry'`` VisualSampleEntry. Every
-    ``corrupt_container_every``-th doc truncates mid-container (parse
-    error, no rows) and every other ``corrupt_delta_every``-th doc
+    ``VIDEO_CORRUPT_CONTAINER_EVERY``-th doc truncates mid-container
+    (parse error, no rows) and every other ``VIDEO_CORRUPT_DELTA_EVERY``-th doc
     with >= 2 frames zeroes its FIRST delta sample (the chain-break
     plane). Identical text => byte-identical clips."""
 
@@ -367,18 +355,14 @@ def documents_as_delta_mp4(
             ):
                 data = (text or "").encode("utf-8")
                 n_frames = min(
-                    max_frames, max(1, len((text or "").split()))
+                    VIDEO_MAX_FRAMES, max(1, len((text or "").split()))
                 )
-                frames, w, h = padded_frame_pixels(data, n_frames, width)
+                frames, w, h = padded_frame_pixels(data, n_frames)
                 samples = encode_delta_clip(frames, w, h)
                 if (
-                    corrupt_delta_every
-                    and doc_id % corrupt_delta_every == 0
+                    doc_id % VIDEO_CORRUPT_DELTA_EVERY == 0
                     and len(samples) >= 2
-                    and not (
-                        corrupt_container_every
-                        and doc_id % corrupt_container_every == 0
-                    )
+                    and doc_id % VIDEO_CORRUPT_CONTAINER_EVERY != 0
                 ):
                     # same length => identical sample table; no DGRY
                     # magic => the delta parse fails and the chain
@@ -388,8 +372,7 @@ def documents_as_delta_mp4(
                     samples, width=w, height=h, codec=b"dgry"
                 )
                 if (
-                    corrupt_container_every
-                    and doc_id % corrupt_container_every == 0
+                    doc_id % VIDEO_CORRUPT_CONTAINER_EVERY == 0
                 ):
                     payload = payload[: max(12, len(payload) // 2)]
                 ids.append(doc_id)
@@ -616,10 +599,6 @@ def _clip_identity_batches(
 
 def clip_identity_from_documents(
     documents: DataFrame,
-    width: int = VIDEO_FRAME_WIDTH,
-    max_frames: int = VIDEO_MAX_FRAMES,
-    corrupt_container_every: int = VIDEO_CORRUPT_CONTAINER_EVERY,
-    corrupt_sample_every: int = VIDEO_CORRUPT_SAMPLE_EVERY,
 ) -> DataFrame:
     """FUSED synthesis + identity (round 13, guide §4.1): composing
     :func:`_mjpeg_synth_batches` and :func:`_clip_identity_batches`
@@ -630,10 +609,7 @@ def clip_identity_from_documents(
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         return _clip_identity_batches(
-            _mjpeg_synth_batches(
-                batches, width, max_frames,
-                corrupt_container_every, corrupt_sample_every,
-            )
+            _mjpeg_synth_batches(batches)
         )
 
     return documents.select("doc_id", "text", "source").mapInPandas(
@@ -650,14 +626,12 @@ _FRAME_KEY_STRIDE = 64
 
 def video_near_dup_pairs(
     kf_hashes: DataFrame,
-    max_hamming: int = 3,
     min_match_frac: float = 1.0,
-    max_bucket_size: int = 5000,
 ) -> DataFrame:
     """(video_a, video_b, n_matched, n_kf_a, n_kf_b, score): video
     near-duplicates from keyframe perceptual hashes. Frame-level
     candidate pairs come from the SAME 4-band hamming join text
-    SimHash and image dHash use (exact for max_hamming <= 3 by
+    SimHash and image dHash use (within hamming 3, exact by
     pigeonhole), on a packed (media_id, sample_no) key; a video pair
     scores matched keyframes (distinct on each side, the smaller
     count wins — one frame matching twice cannot inflate it) against
@@ -698,9 +672,6 @@ def video_near_dup_pairs(
         ok.select("frame_key", "phash"),
         "phash",
         "frame_key",
-        max_hamming=max_hamming,
-        max_bucket_size=max_bucket_size,
-        bands=4,
     )
     vp = (
         frame_pairs.select(

@@ -1,7 +1,7 @@
 """As-of (nearest-timestamp) join — a custom operator Spark lacks.
 
 Semantics: for every left row, attach the right row with the greatest
-``right_ts <= left_ts`` (backward, inclusive) for the same key —
+``right.ts <= left.ts`` (backward, inclusive) for the same key —
 DuckDB's ``ASOF JOIN`` / pandas ``merge_asof`` defaults.
 
 Scale-first implementation: NOT a range-condition join (a non-equi
@@ -18,7 +18,7 @@ payload travels as a single struct so every output column comes from
 the SAME matched row (per-column last() could mix rows when payload
 columns contain nulls).
 
-Ties on (key, right_ts) are broken arbitrarily — pre-dedup the right
+Ties on (key, right.ts) are broken arbitrarily — pre-dedup the right
 side (e.g. max event_id per key+ts) when exact determinism matters.
 """
 
@@ -33,30 +33,28 @@ def asof_join(
     left: DataFrame,
     right: DataFrame,
     on: str | list[str],
-    left_ts: str = "ts",
-    right_ts: str | None = None,
     prefix: str = "right_",
 ) -> DataFrame:
-    """Left as-of join; right columns (other than keys) come back
+    """Left as-of join on column ``ts`` of both sides; right columns
+    (other than keys) come back
     ``prefix``-renamed, NULL where no row qualifies."""
     keys = [on] if isinstance(on, str) else list(on)
-    right_ts = right_ts or left_ts
     payload_cols = [c for c in right.columns if c not in keys]
-    left_cols = [c for c in left.columns if c not in keys and c != left_ts]
+    left_cols = [c for c in left.columns if c not in keys and c != "ts"]
 
     payload_struct = StructType(
         [StructField(c, right.schema[c].dataType) for c in payload_cols]
     )
     left_tagged = left.select(
         *keys,
-        F.col(left_ts).alias("_ts"),
+        F.col("ts").alias("_ts"),
         F.lit(1).alias("_is_left"),
         *[F.col(c) for c in left_cols],
         F.lit(None).cast(payload_struct).alias("_rpay"),
     )
     right_tagged = right.select(
         *keys,
-        F.col(right_ts).alias("_ts"),
+        F.col("ts").alias("_ts"),
         F.lit(0).alias("_is_left"),
         *[F.lit(None).cast(left.schema[c].dataType).alias(c) for c in left_cols],
         F.struct(*[F.col(c) for c in payload_cols]).alias("_rpay"),
@@ -79,7 +77,7 @@ def asof_join(
 
     return matched.select(
         *keys,
-        F.col("_ts").alias(left_ts),
+        F.col("_ts").alias("ts"),
         *left_cols,
         *[
             F.col("_rpay").getField(c).alias(prefix + c)

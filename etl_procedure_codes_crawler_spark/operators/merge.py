@@ -79,4 +79,4 @@ def replace_dataset_atomically(
     # happened would falsely expire readable versions; a crash before
     # stamping degrades to "unknown rewrite" in the expiry message,
     # never to wrong data
-    record_rewrite(spark, target_path, "forget", old_files)
+    record_rewrite(spark, target_path, old_files)

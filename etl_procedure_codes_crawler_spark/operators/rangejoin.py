@@ -33,14 +33,13 @@ def _bucket(col, bucket_seconds: int):
 def range_join(
     points: DataFrame,
     intervals: DataFrame,
-    point_ts: str,
     interval_start: str,
     interval_end: str,
     on: str | list[str] | None = None,
     bucket_seconds: int = 3600,
 ) -> DataFrame:
     """Inner join: every (point, interval) pair with
-    ``interval_start <= point_ts < interval_end`` (and equal ``on``
+    ``interval_start <= ts < interval_end`` (and equal ``on``
     keys, if given). Output carries all columns of both inputs except
     duplicated key columns.
 
@@ -51,7 +50,7 @@ def range_join(
     """
     keys = [] if on is None else ([on] if isinstance(on, str) else list(on))
 
-    pts = points.withColumn(BUCKET_COLUMN, _bucket(point_ts, bucket_seconds))
+    pts = points.withColumn(BUCKET_COLUMN, _bucket("ts", bucket_seconds))
     ivs = intervals.withColumn(
         BUCKET_COLUMN,
         F.explode(
@@ -63,6 +62,6 @@ def range_join(
     )
     joined = pts.join(ivs, [*keys, BUCKET_COLUMN], "inner")
     return joined.filter(
-        (F.col(point_ts) >= F.col(interval_start))
-        & (F.col(point_ts) < F.col(interval_end))
+        (F.col("ts") >= F.col(interval_start))
+        & (F.col("ts") < F.col(interval_end))
     ).drop(BUCKET_COLUMN)

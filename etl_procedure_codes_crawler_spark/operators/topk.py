@@ -43,7 +43,6 @@ def grouped_topk(
     order_col: str,
     tiebreak_col: str,
     k: int,
-    salt_buckets: int = 8,
 ) -> DataFrame:
     """Top-``k`` rows per key by (``order_col`` DESC, ``tiebreak_col``
     ASC) via two salted window passes (see module docstring).
@@ -52,7 +51,7 @@ def grouped_topk(
     1-based rank.
     """
     order = [F.desc(order_col), F.asc(tiebreak_col)]
-    salted = with_salt(df, salt_buckets, from_cols=[tiebreak_col])
+    salted = with_salt(df, 8, from_cols=[tiebreak_col])
     w1 = Window.partitionBy(*keys, SALT_COLUMN).orderBy(*order)
     survivors = (
         salted.withColumn("_rn1", F.row_number().over(w1))

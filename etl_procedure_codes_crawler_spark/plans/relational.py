@@ -1105,7 +1105,6 @@ def range_join_purchases_within_hour_of_signup(
         range_join(
             purchases,
             signups,
-            point_ts="ts",
             interval_start="s_start",
             interval_end="s_end",
             on="user_id",

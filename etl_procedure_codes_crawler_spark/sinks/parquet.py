@@ -102,7 +102,6 @@ def write_idempotent_run(
     df: DataFrame,
     path: str,
     run_id: str,
-    extra_partition_by: list[str] | None = None,
 ) -> bool:
     """Replay-safe incremental write: rows land in a ``run_id=<id>``
     partition via *dynamic* partition overwrite, so re-running the same
@@ -121,7 +120,7 @@ def write_idempotent_run(
             df.withColumn(RUN_ID_COLUMN, F.lit(run_id))
             .write.mode("overwrite")
             .option("compression", "snappy")
-            .partitionBy(RUN_ID_COLUMN, *(extra_partition_by or []))
+            .partitionBy(RUN_ID_COLUMN)
             .parquet(path)
         )
     finally:

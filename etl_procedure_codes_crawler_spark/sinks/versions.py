@@ -92,9 +92,9 @@ def _read_json(fs, hpath, path: str) -> dict:
 
 
 def record_rewrite(
-    spark: SparkSession, path: str, op: str, removed_files: list[str]
+    spark: SparkSession, path: str, removed_files: list[str]
 ) -> int | None:
-    """Stamp a maintenance rewrite (compaction, forget, merge swap) so
+    """Stamp a maintenance rewrite (a forget or a swap) as ``forget`` so
     a versioned read that finds its files gone can say WHAT expired it
     — "compaction at rw3" reads very differently from "takedown at
     rw4" when deciding whether re-materializing the version is even
@@ -119,7 +119,7 @@ def record_rewrite(
         fs, hpath, f"{rdir}/rw{seq}.json",
         {
             "seq": seq,
-            "op": op,
+            "op": "forget",
             "n_files": len(removed_files),
             "files": sorted(removed_files),
         },

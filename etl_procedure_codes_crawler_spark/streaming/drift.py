@@ -32,10 +32,10 @@ from .incremental import start_file_stream
 
 
 def build_token_reference(
-    df: DataFrame, path: str, text_col: str = "text"
+    df: DataFrame, path: str
 ) -> None:
     """Persist the reference unigram distribution (vocabulary-sized)."""
-    DR.token_counts(df, text_col).write.mode("overwrite").parquet(path)
+    DR.token_counts(df).write.mode("overwrite").parquet(path)
 
 
 def stream_token_drift(
@@ -45,8 +45,6 @@ def stream_token_drift(
     reference_path: str,
     metrics_path: str,
     checkpoint_dir: str,
-    text_col: str = "text",
-    max_files_per_trigger: int | None = None,
 ):
     """Monitor arriving document files against the persisted
     reference; one (batch_id, n_tokens_batch, n_tokens_reference,
@@ -55,7 +53,7 @@ def stream_token_drift(
 
     def _sink(batch: DataFrame, batch_id: int) -> None:
         reference = spark.read.parquet(reference_path)
-        row = DR.tv_between(DR.token_counts(batch, text_col), reference)
+        row = DR.tv_between(DR.token_counts(batch), reference)
         metric = row.select(
             F.lit(int(batch_id)).alias("batch_id"),
             F.col("n_tokens_a").alias("n_tokens_batch"),
@@ -66,8 +64,7 @@ def stream_token_drift(
         write_idempotent_run(metric, metrics_path, run_id=str(batch_id))
 
     return start_file_stream(
-        spark, schema, source_dir, checkpoint_dir, _sink,
-        max_files_per_trigger,
+        spark, schema, source_dir, checkpoint_dir, _sink
     )
 
 
@@ -87,7 +84,7 @@ def stream_token_drift(
 
 
 def build_source_token_reference(
-    df: DataFrame, path: str, text_col: str = "text"
+    df: DataFrame, path: str
 ) -> None:
     """Persist the reference per-source token totals (source-sized)."""
     from ..llm import text as T
@@ -95,7 +92,7 @@ def build_source_token_reference(
     (
         df.where(F.col("source").isNotNull())
         .groupBy("source")
-        .agg(F.sum(T.token_count(text_col)).cast("bigint").alias("o_ref"))
+        .agg(F.sum(T.token_count("text")).cast("bigint").alias("o_ref"))
         .write.mode("overwrite")
         .parquet(path)
     )
@@ -107,7 +104,6 @@ def stream_chi_square_counts(
     schema: StructType,
     counts_path: str,
     checkpoint_dir: str,
-    text_col: str = "text",
     max_files_per_trigger: int | None = None,
 ):
     """Accumulate the CURRENT snapshot's per-source token totals, one
@@ -120,7 +116,7 @@ def stream_chi_square_counts(
             batch.where(F.col("source").isNotNull())
             .groupBy("source")
             .agg(
-                F.sum(T.token_count(text_col)).cast("bigint").alias("o_cur")
+                F.sum(T.token_count("text")).cast("bigint").alias("o_cur")
             )
         )
         write_idempotent_run(counts, counts_path, run_id=str(batch_id))

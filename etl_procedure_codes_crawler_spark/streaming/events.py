@@ -49,7 +49,6 @@ EVENTS_RAW_SCHEMA = StructType(
 def read_events_stream(
     spark: SparkSession,
     events_dir: str,
-    max_files_per_trigger: int = 1,
 ) -> DataFrame:
     """File-source stream over a directory of events parquet files.
 
@@ -88,14 +87,14 @@ def read_events_stream(
     # so the backlog drains in a handful of micro-batches
     raw = (
         spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
+        .option("maxFilesPerTrigger", 1)
         .parquet(events_dir)
     )
     return normalize_event_ts(raw, bigint_unit=bigint_unit)
 
 
 def hourly_event_counts(
-    events: DataFrame, watermark: str = "2 hours"
+    events: DataFrame
 ) -> DataFrame:
     """Tumbling 1-hour windows with late-data watermark.
 
@@ -104,7 +103,7 @@ def hourly_event_counts(
     an unbounded stream (state per (window, type) only until the
     watermark passes the window end)."""
     return (
-        events.withWatermark("ts", watermark)
+        events.withWatermark("ts", "2 hours")
         .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
         .agg(
             F.count(F.lit(1)).alias("n_events"),
@@ -121,7 +120,7 @@ def hourly_event_counts(
 
 
 def run_to_memory(
-    stream_df: DataFrame, name: str, timeout_sec: int = 60
+    stream_df: DataFrame, name: str
 ):
     """Drain all available input into a memory sink (test/debug helper);
     returns the query handle after processing completes."""
@@ -132,5 +131,5 @@ def run_to_memory(
         .trigger(availableNow=True)
         .start()
     )
-    query.awaitTermination(timeout_sec)
+    query.awaitTermination(60)
     return query

@@ -220,16 +220,13 @@ def stream_ingest_media_neardup(
     warehouse_path: str,
     store_path: str,
     checkpoint_dir: str,
-    max_hamming: int = 3,
-    id_col: str = "media_id",
-    max_files_per_trigger: int | None = None,
 ):
     """The MEDIA ingest gate: perceptual near-dup dedup for image
     payloads at the corpus front door. Each batch is (1) id-deduped
     against the warehouse (replay safety), (2) decoded + perceptually
     hashed in ONE Arrow pass (:func:`..llm.multimodal.image_hashes`),
     (3) collapsed WITHIN the batch (the greater id of any pair within
-    ``max_hamming`` drops — a crawl burst carrying one image under
+    hamming 3 drops — a crawl burst carrying one image under
     many URLs), (4) gated against the persisted phash store (a
     re-hosted/re-encoded copy of anything accepted before is
     rejected), and (5) survivors append their payloads to the
@@ -261,10 +258,10 @@ def stream_ingest_media_neardup(
         # hashes-only gate exists to avoid. Heal path included: the
         # one decode pass covers warehoused rows too, so re-signing
         # them costs no second decode.
-        raw = batch.filter(F.col(id_col).isNotNull())
+        raw = batch.filter(F.col("media_id").isNotNull())
         hashes_all = (
             MM.image_hashes(raw)
-            .dropDuplicates([id_col])
+            .dropDuplicates(["media_id"])
             .localCheckpoint(eager=True)  # small: ids + 64-bit hashes
         )
         # missing-warehouse fast path: before the first accepted batch
@@ -278,42 +275,42 @@ def stream_ingest_media_neardup(
         else:
             existing = read_table_or_empty(
                 spark, warehouse_path, batch.schema
-            ).select(id_col)
+            ).select("media_id")
             # heal-first: re-offer already-warehoused batch objects to
             # the store (its id anti-join no-ops the steady state) so a
             # crash between a prior warehouse append and store append
             # cannot leave accepted objects unsigned
-            warehoused_h = hashes_all.join(existing, id_col, "left_semi")
+            warehoused_h = hashes_all.join(existing, "media_id", "left_semi")
             if not warehoused_h.isEmpty():
                 PS.append_to_phash_store(
-                    spark, store_path, warehoused_h, id_col=id_col
+                    spark, store_path, warehoused_h
                 )
             hashes = hashes_all.join(
-                existing, id_col, "left_anti"
+                existing, "media_id", "left_anti"
             ).localCheckpoint(eager=True)
         if hashes.isEmpty():
             return
         intra_pairs = hamming_band_pairs(
             hashes.filter(F.col("phash").isNotNull()),
             "phash",
-            id_col,
-            max_hamming=max_hamming,
+            "media_id",
+            max_hamming=3,
         )
         # intra-batch collapse: drop the greater id of any pair
         intra_losers = (
-            intra_pairs.select(F.col("doc_b").alias(id_col)).distinct()
+            intra_pairs.select(F.col("doc_b").alias("media_id")).distinct()
         )
-        survivors_h = hashes.join(intra_losers, id_col, "left_anti")
+        survivors_h = hashes.join(intra_losers, "media_id", "left_anti")
         # store gate: reject anything perceptually held already
         near = (
             PS.near_dups_against_phash_store(
-                spark, store_path, survivors_h, max_hamming, id_col=id_col
+                spark, store_path, survivors_h
             )
-            .select(F.col("new_id").alias(id_col))
+            .select(F.col("new_id").alias("media_id"))
             .distinct()
         )
-        accepted_ids = survivors_h.select(id_col).join(
-            near, id_col, "left_anti"
+        accepted_ids = survivors_h.select("media_id").join(
+            near, "media_id", "left_anti"
         )
         accepted_ids = accepted_ids.localCheckpoint(eager=True)
         if accepted_ids.isEmpty():
@@ -322,22 +319,20 @@ def stream_ingest_media_neardup(
         PS.append_to_phash_store(
             spark,
             store_path,
-            hashes.join(accepted_ids, id_col, "left_semi"),
-            id_col=id_col,
+            hashes.join(accepted_ids, "media_id", "left_semi"),
         )
         # payloads re-enter here and ONLY here: semi-join the raw
         # batch against the (small, checkpointed) accepted ids; the
         # dedup-by-id runs after the semi-join so only accepted
         # payload rows ever shuffle
-        raw.join(accepted_ids, id_col, "left_semi").dropDuplicates(
-            [id_col]
+        raw.join(accepted_ids, "media_id", "left_semi").dropDuplicates(
+            ["media_id"]
         ).write.mode("append").option(
             "compression", "snappy"
         ).parquet(warehouse_path)
 
     return start_file_stream(
-        spark, schema, source_dir, checkpoint_dir, _sink,
-        max_files_per_trigger,
+        spark, schema, source_dir, checkpoint_dir, _sink
     )
 
 
@@ -349,9 +344,6 @@ def stream_ingest_with_boilerplate(
     store_path: str,
     checkpoint_dir: str,
     min_doc_freq: int = 50,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    max_files_per_trigger: int | None = None,
 ):
     """Passage-frequency-aware ingest: boilerplate is stripped AT
     ADMISSION against the persisted passage-frequency store
@@ -392,8 +384,8 @@ def stream_ingest_with_boilerplate(
 
     def _sink(batch: DataFrame, batch_id: int) -> None:
         rows = (
-            batch.filter(F.col(id_col).isNotNull())
-            .dropDuplicates([id_col])
+            batch.filter(F.col("doc_id").isNotNull())
+            .dropDuplicates(["doc_id"])
             .localCheckpoint(eager=True)  # counted + stripped + joined
         )
         from ..sinks.fsutil import hadoop_fs
@@ -401,10 +393,10 @@ def stream_ingest_with_boilerplate(
         fs, hpath = hadoop_fs(spark, warehouse_path)
         if fs.exists(hpath(warehouse_path)):
             existing_ids = (
-                spark.read.parquet(warehouse_path).select(id_col)
+                spark.read.parquet(warehouse_path).select("doc_id")
             )
             fresh = rows.join(
-                existing_ids, id_col, "left_anti"
+                existing_ids, "doc_id", "left_anti"
             ).localCheckpoint(eager=True)
         else:
             fresh = rows
@@ -426,14 +418,14 @@ def stream_ingest_with_boilerplate(
             )
         meta = _cache["pf_meta"]
         chunks = passage_rows(
-            fresh, meta["block"], text_col, id_col
+            fresh, meta["block"], "text", "doc_id"
         ).localCheckpoint(eager=True)
         PF.append_passage_counts(
             spark,
             store_path,
             fresh,
-            text_col,
-            id_col,
+            "text",
+            "doc_id",
             batch_id=f"{gate_id}-{int(batch_id)}",
             chunks=chunks,
         )
@@ -444,9 +436,9 @@ def stream_ingest_with_boilerplate(
         # 0/0/NULL defaults for token-less docs
         rebuilt = PF.strip_rebuilt_against_store(
             spark, store_path, chunks, min_doc_freq
-        ).withColumnRenamed("id", id_col)
-        _cols = [id_col] + [c for c in fresh.columns if c != id_col]
-        stripped = fresh.join(rebuilt, id_col, "left").select(
+        ).withColumnRenamed("id", "doc_id")
+        _cols = ["doc_id"] + [c for c in fresh.columns if c != "doc_id"]
+        stripped = fresh.join(rebuilt, "doc_id", "left").select(
             *_cols,
             F.coalesce("n_passages", F.lit(0)).alias("n_passages"),
             F.coalesce("n_removed", F.lit(0)).alias("n_removed"),
@@ -457,6 +449,5 @@ def stream_ingest_with_boilerplate(
         ).parquet(warehouse_path)
 
     return start_file_stream(
-        spark, schema, source_dir, checkpoint_dir, _sink,
-        max_files_per_trigger,
+        spark, schema, source_dir, checkpoint_dir, _sink
     )

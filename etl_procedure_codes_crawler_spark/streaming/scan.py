@@ -38,8 +38,6 @@ def stream_blocklist_scan(
     phrases: list[str],
     results_path: str,
     checkpoint_dir: str,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     max_files_per_trigger: int | None = None,
 ):
     """Scan every arriving document against the fixed blocklist; one
@@ -50,9 +48,9 @@ def stream_blocklist_scan(
 
     def _sink(batch: DataFrame, batch_id: int) -> None:
         rows = BL.scan_blocklist(
-            batch, phrases, text_col=text_col, id_col=id_col
+            batch, phrases
         ).select(
-            F.col("id").alias(id_col), "n_hits", "n_phrases_hit"
+            F.col("id").alias("doc_id"), "n_hits", "n_phrases_hit"
         )
         write_idempotent_run(rows, results_path, run_id=str(batch_id))
 

@@ -114,18 +114,16 @@ def unified_store_paths(stores_root: str) -> dict[str, str]:
 def create_unified_stores(
     spark: SparkSession,
     stores_root: str,
-    block: int = 3,
     kmv_k: int = 64,
-    kmv_shingle_k: int = 3,
 ) -> dict[str, str]:
     """Initialize the persisted stores under one root. The
     fingerprint/media/attrition artifacts are plain parquet append
     dirs (created lazily on first write); the passage and KMV stores
     pin their parameters in meta so mismatched batches cannot merge."""
     paths = unified_store_paths(stores_root)
-    PF.create_passage_freq_store(spark, paths["passages"], block=block)
+    PF.create_passage_freq_store(spark, paths["passages"], block=3)
     KV.create_kmv_store(
-        spark, paths["kmv"], k=kmv_k, shingle_k=kmv_shingle_k
+        spark, paths["kmv"], k=kmv_k
     )
     return paths
 
@@ -664,7 +662,7 @@ def stream_ingest_unified(
 
 
 def unified_attrition_report(
-    spark: SparkSession, stores_root: str, source_col: str = "source"
+    spark: SparkSession, stores_root: str
 ) -> DataFrame:
     """(source, n_arrived, n_exact_rejected, n_media_rejected,
     n_video_rejected, n_budget_rejected, n_admitted, passages_removed,
@@ -676,7 +674,7 @@ def unified_attrition_report(
     paths = unified_store_paths(stores_root)
     att = (
         spark.read.parquet(paths["attrition"])
-        .groupBy(source_col)
+        .groupBy("source")
         .agg(
             F.sum("n_arrived").cast("bigint").alias("n_arrived"),
             F.sum("n_exact_rejected").cast("bigint")
@@ -695,7 +693,7 @@ def unified_attrition_report(
         )
     )
     est = KV.kmv_store_estimates(spark, paths["kmv"]).select(
-        F.col("group").alias(source_col),
+        F.col("group").alias("source"),
         F.col("est_distinct").alias("est_distinct_shingles"),
     )
-    return att.join(est, source_col, "left")
+    return att.join(est, "source", "left")

@@ -51,7 +51,14 @@ def test_query_scan_partition_prunes_to_probe_cells(spark, emb, tmp_path):
     assert m and len(m.group(1).split(",")) <= 6, plan
 
 
+def test_string_ids_rejected_with_the_integer_id_requirement(emb, tmp_path):
+    string_ids = emb.withColumn("vec_id", F.concat(F.lit("doc-"), "vec_id"))
+    with pytest.raises(ValueError, match="need integer vec_id values"):
+        IX.build_ivfpq_index(string_ids, str(tmp_path / "ix"))
+
+
 def test_empty_query_set_rejected(spark, emb, tmp_path):
+
     path = str(tmp_path / "ix")
     IX.build_ivfpq_index(emb, path, num_centroids=8)
     with pytest.raises(ValueError, match="empty query set"):

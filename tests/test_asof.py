@@ -6,8 +6,6 @@ import datetime as dt
 
 import pytest
 
-from pyspark.sql import functions as F
-
 from etl_procedure_codes_crawler_spark.operators.asof import asof_join
 
 

@@ -30,8 +30,8 @@ def test_parameters_standard_sizing():
 def test_no_false_negatives(spark):
     inserted = _ids(spark, 0, 2000)
     m, k = B.bloom_parameters(2000, 0.01)
-    bloom = B.build_bloom(inserted, "fp", m, k).localCheckpoint(eager=True)
-    probed = B.probe_bloom(inserted, "fp", bloom, m, k)
+    bloom = B.build_bloom(inserted, m, k).localCheckpoint(eager=True)
+    probed = B.probe_bloom(inserted, bloom, m, k)
     assert probed.filter(~F.col("maybe_seen")).count() == 0
 
 
@@ -39,8 +39,8 @@ def test_false_positive_rate_bounded(spark):
     inserted = _ids(spark, 0, 2000)
     fresh = _ids(spark, 1_000_000, 1_010_000)
     m, k = B.bloom_parameters(2000, 0.01)
-    bloom = B.build_bloom(inserted, "fp", m, k).localCheckpoint(eager=True)
-    fp = B.probe_bloom(fresh, "fp", bloom, m, k).filter("maybe_seen").count()
+    bloom = B.build_bloom(inserted, m, k).localCheckpoint(eager=True)
+    fp = B.probe_bloom(fresh, bloom, m, k).filter("maybe_seen").count()
     # 1% design point; allow 3x slack for hash variance on 10k probes
     assert fp / 10_000 < 0.03, fp
 
@@ -50,9 +50,9 @@ def test_merge_equals_single_build(spark):
     both = _ids(spark, 0, 1000)
     m, k = B.bloom_parameters(1000, 0.01)
     merged = B.merge_blooms(
-        B.build_bloom(a, "fp", m, k), B.build_bloom(b, "fp", m, k)
+        B.build_bloom(a, m, k), B.build_bloom(b, m, k)
     )
-    single = B.build_bloom(both, "fp", m, k)
+    single = B.build_bloom(both, m, k)
     assert merged.exceptAll(single).count() == 0
     assert single.exceptAll(merged).count() == 0
 
@@ -60,17 +60,17 @@ def test_merge_equals_single_build(spark):
 def test_null_values_skipped_and_probe_false(spark):
     df = spark.createDataFrame([("a",), (None,)], "fp string")
     m, k = B.bloom_parameters(10, 0.01)
-    bloom = B.build_bloom(df, "fp", m, k).localCheckpoint(eager=True)
-    out = {r.fp: r.maybe_seen for r in B.probe_bloom(df, "fp", bloom, m, k).collect()}
+    bloom = B.build_bloom(df, m, k).localCheckpoint(eager=True)
+    out = {r.fp: r.maybe_seen for r in B.probe_bloom(df, bloom, m, k).collect()}
     assert out["a"] is True and out[None] is False
 
 
 def test_probe_plan_never_shuffles_the_corpus(spark):
     inserted = _ids(spark, 0, 100)
     m, k = B.bloom_parameters(100, 0.01)
-    bloom = B.build_bloom(inserted, "fp", m, k).localCheckpoint(eager=True)
+    bloom = B.build_bloom(inserted, m, k).localCheckpoint(eager=True)
     plan = (
-        B.probe_bloom(inserted, "fp", bloom, m, k)
+        B.probe_bloom(inserted, bloom, m, k)
         ._jdf.queryExecution()
         .executedPlan()
         .toString()

@@ -73,7 +73,7 @@ def test_merges_match_reference_exactly(spark):
     df = spark.createDataFrame(CORPUS, "doc_id bigint, text string")
     got = [
         (r.left, r.right, r.pair_freq)
-        for r in B.train_bpe_merges(df, num_merges=12, min_pair_freq=2)
+        for r in B.train_bpe_merges(df, num_merges=12)
         .orderBy("rank")
         .collect()
     ]
@@ -188,7 +188,7 @@ def test_batched_merges_cut_jobs_on_diverse_vocab(spark):
     try:
         merges = (
             B.train_bpe_merges(
-                df, num_merges=n_fam, min_pair_freq=2, max_driver_words=0
+                df, num_merges=n_fam, max_driver_words=0
             )
             .orderBy("rank")
             .collect()
@@ -226,7 +226,7 @@ def test_greedy_merge_is_left_to_right_non_overlapping(spark):
 def test_stop_vs_raise_on_exhausted_corpus(spark):
     df = spark.createDataFrame([(1, "ab ab")], "doc_id bigint, text string")
     # only a handful of merges exist at freq >= 2
-    short = B.train_bpe_merges(df, num_merges=50, min_pair_freq=2).count()
+    short = B.train_bpe_merges(df, num_merges=50).count()
     assert short < 50
     with pytest.raises(B.BpeNotProgressing):
         B._train(df, "text", 50, 2, "raise")
@@ -236,7 +236,7 @@ def test_single_char_and_empty_words_are_safe(spark):
     df = spark.createDataFrame(
         [(1, "a b c a b c x")], "doc_id bigint, text string"
     )
-    merges = B.train_bpe_merges(df, num_merges=4, min_pair_freq=2)
+    merges = B.train_bpe_merges(df, num_merges=4)
     ref, _ = _ref_bpe(_spark_word_freqs_for(spark, "a b c a b c x"), 4, 2)
     got = [(r.left, r.right, r.pair_freq) for r in merges.orderBy("rank").collect()]
     assert got == ref

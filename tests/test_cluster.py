@@ -71,7 +71,7 @@ def test_clusters_from_real_minhash_pairs(spark, sf_dir):
     from etl_procedure_codes_crawler_spark.plans.relational import load
 
     documents = load(spark, sf_dir, "documents")
-    pairs = minhash_near_dup_pairs(documents, threshold=0.5)
+    pairs = minhash_near_dup_pairs(documents)
     clusters = duplicate_clusters(pairs, documents, id_col="doc_id")
     assert clusters.count() == documents.count()  # total partition of ids
     # cluster representative is always the min id of its cluster

@@ -69,13 +69,13 @@ class TestMd5PairParity:
         xx = {
             (r.doc_a, r.doc_b)
             for r in D.minhash_near_dup_pairs(
-                docs, threshold=0.5, hash_fn="xx"
+                docs, hash_fn="xx"
             ).collect()
         }
         md5 = {
             (r.doc_a, r.doc_b)
             for r in D.minhash_near_dup_pairs(
-                docs, threshold=0.5, hash_fn="md5"
+                docs, hash_fn="md5"
             ).collect()
         }
         assert md5 == xx
@@ -93,7 +93,7 @@ class TestMd5PairParity:
         lab = {}
         for mode in ("xx", "md5"):
             pairs = D.minhash_near_dup_pairs(
-                docs, threshold=0.5, hash_fn=mode
+                docs, hash_fn=mode
             )
             lab[mode] = {
                 r.doc_id: r.cluster_id

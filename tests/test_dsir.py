@@ -8,7 +8,6 @@ import math
 import re
 
 import pytest
-from pyspark.sql import functions as F
 
 from etl_procedure_codes_crawler_spark.llm.dsir import (
     _MOD,

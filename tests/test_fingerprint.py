@@ -3,8 +3,6 @@ MOSS guarantee, edit locality, stop-fingerprint capping."""
 
 from __future__ import annotations
 
-from pyspark.sql import functions as F
-
 from etl_procedure_codes_crawler_spark.llm import fingerprint as FP
 
 

@@ -224,7 +224,6 @@ def test_forget_plain_heals_postcommit_crash(spark, tmp_path):
     ).repartition(6).write.parquet(wh)
     # run a real pruned forget but crash it at the marker by invoking
     # the internals: easier — construct the post-commit state by hand
-    from etl_procedure_codes_crawler_spark.sinks.fsutil import hadoop_fs
 
     files = sorted(glob.glob(os.path.join(wh, "*.parquet")))
     affected = files[0]
@@ -337,7 +336,7 @@ def test_postcommit_heal_skips_already_stamped_files(spark, tmp_path):
     )
     open(wh + "._forget_commit", "w").close()
     # the crashed run got as far as its stamp — then died pre-cleanup
-    record_rewrite(spark, wh, "forget", qualified)
+    record_rewrite(spark, wh, qualified)
     removed = FG.forget_documents(_ids(spark, doomed), warehouse_path=wh)
     assert removed["warehouse"] == 0
     stamps = glob.glob(os.path.join(wh + "._versions", "_rewrites", "rw*.json"))

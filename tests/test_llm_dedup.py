@@ -47,7 +47,7 @@ def test_ngram_jaccard_finds_near_dup(spark):
 def test_minhash_catches_identical_and_near_pairs(spark):
     pairs = {
         (r.doc_a, r.doc_b): r.jaccard
-        for r in D.minhash_near_dup_pairs(_docs(spark), threshold=0.5).collect()
+        for r in D.minhash_near_dup_pairs(_docs(spark)).collect()
     }
     assert pairs[(0, 5)] == 1.0            # identical docs always collide
     assert (0, 2) in pairs                 # j=0.56 ≥ 0.5 and LSH found it
@@ -61,7 +61,7 @@ def test_minhash_lsh_is_subset_of_candidates_with_verification(spark):
     }
     verified = {
         (r.doc_a, r.doc_b)
-        for r in D.minhash_near_dup_pairs(_docs(spark), threshold=0.5).collect()
+        for r in D.minhash_near_dup_pairs(_docs(spark)).collect()
     }
     assert verified <= cands
 
@@ -128,7 +128,7 @@ def test_minhash_capped_pipeline_still_clusters_identicals(spark):
 
     n = 120
     docs = _identical_corpus(spark, n)
-    pairs = D.minhash_near_dup_pairs(docs, threshold=0.5, )
+    pairs = D.minhash_near_dup_pairs(docs)
     clusters = duplicate_clusters(pairs, docs, id_col="doc_id")
     assert {r.cluster_id for r in clusters.collect()} == {0}
 
@@ -435,7 +435,7 @@ class TestIntraDocRepeats:
 
     @staticmethod
     def _select(df, block=8):
-        n_blocks, kept = D.intra_doc_kept_blocks("text", block)
+        n_blocks, kept = D.intra_doc_kept_blocks(block)
         return df.select(
             "doc_id",
             F.when(F.col("text").isNull(), 0).otherwise(n_blocks).alias("n_blocks"),

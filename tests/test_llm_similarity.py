@@ -333,18 +333,18 @@ def test_pq_dim_param_and_empty_corpus_error(spark):
     empty = spark.createDataFrame([], "vec_id bigint, embedding array<float>")
     # training on an empty corpus: explicit error, not a numpy crash
     with _pytest.raises(ValueError, match="empty corpus"):
-        S._pq_int_context(empty, "embedding", "vec_id", 8, 4, 1)
+        S._pq_int_context(empty, 4, 1)
     tiny = spark.createDataFrame(
         [(i, [float(i * j % 7) for j in range(64)]) for i in range(8)],
         "vec_id bigint, embedding array<float>",
     )
     codebook, codes_udf, lut_udf = S._pq_int_context(
-        tiny, "embedding", "vec_id", 8, 4, 1, dim=64
+        tiny, 4, 1, dim=64
     )
     assert codebook.shape == (4, 8)
     # a dim that contradicts the corpus is an explicit error
     with _pytest.raises(ValueError, match="dim=32"):
-        S._pq_int_context(tiny, "embedding", "vec_id", 8, 4, 1, dim=32)
+        S._pq_int_context(tiny, 4, 1, dim=32)
 
 
 def test_adaptive_probe_paths_agree(spark):

@@ -3,7 +3,6 @@
 from __future__ import annotations
 
 import pytest
-from pyspark.sql import functions as F
 
 from etl_procedure_codes_crawler_spark.llm.mixture import (
     source_token_stats,

@@ -17,6 +17,9 @@ non-test modules.
 - Queries: a registered query must be named by one of the lists that
   choose what runs (headline bench, box factor, driver gate order,
   harness warm-up) or by perfbench or a script.
+- Options: a defaulted parameter of a package function must receive
+  more than one value across every call in the package, the entry
+  points and the tests; one value is a constant.
 """
 
 from __future__ import annotations
@@ -364,3 +367,300 @@ def test_every_registered_query_is_named_by_an_entry_point():
     assert not unnamed, "registered but run by no entry point: " + ", ".join(
         unnamed
     )
+
+
+# ---------------------------------------------------------------------------
+# option values
+# ---------------------------------------------------------------------------
+
+_ORACLE_SQL = "emits oracle SQL: that SQL is the reference"
+
+#: Defaulted package parameters kept although every call passes them
+#: one value, one reason each. A key names a module, a function or one
+#: parameter.
+ONE_VALUE_BY_DESIGN = {
+    f"{PACKAGE}.sources.login": UNREACHED_BY_DESIGN[f"{PACKAGE}.sources.login"],
+    f"{PACKAGE}.sinks.jdbc": UNREACHED_BY_DESIGN[f"{PACKAGE}.sinks.jdbc"],
+    f"{PACKAGE}.plans.pipeline.run_and_sink.base_url": (
+        "deployment setting: the address of the site the crawl fetches"
+    ),
+    # perfbench/workloads.py calls clean_codes(df, "code"); the
+    # benchmark's files change only in a change of their own
+    f"{PACKAGE}.operators.cleaning.clean_codes.column": (
+        "the benchmark's call names the key column"
+    ),
+    f"{PACKAGE}.operators.cleaning.clean_key_column.column": (
+        "clean_codes passes its key column through"
+    ),
+    **{
+        f"{PACKAGE}.llm.queries.{name}": _ORACLE_SQL
+        for name in (
+            "_minhash_sig_bucket_ctes",
+            "_minhash_oracle_ctes",
+            "_kmeans_int_ctes",
+            "_ivf_md5_oracle",
+            "_pq_md5_oracle",
+            "_hpq_md5_oracle",
+            "_source_minhash_oracle",
+            "_margin_ann_md5_oracle",
+        )
+    },
+}
+
+#: what an argument passes when the check cannot see its value
+_VARIES = object()
+
+
+def _call_sites() -> list[Path]:
+    """Every file whose calls count: the package, the entry points and
+    all tests."""
+    return [
+        *_package_modules().values(),
+        *_entry_points(),
+        *sorted((ROOT / "perfbench").glob("test_*.py")),
+        *sorted((ROOT / "tests").glob("*.py")),
+    ]
+
+
+def _params(fn: ast.FunctionDef) -> tuple[list[str], dict[str, str]]:
+    """The positional parameter names, and the source of each default."""
+    args = fn.args
+    positional = [a.arg for a in (*args.posonlyargs, *args.args)]
+    defaults = dict(
+        zip(positional[len(positional) - len(args.defaults):],
+            map(ast.unparse, args.defaults))
+    )
+    defaults.update(
+        (a.arg, ast.unparse(d))
+        for a, d in zip(args.kwonlyargs, args.kw_defaults)
+        if d is not None
+    )
+    return positional, defaults
+
+
+def _all_params(fn: ast.FunctionDef) -> list[str]:
+    return [*_params(fn)[0], *(a.arg for a in fn.args.kwonlyargs)]
+
+
+class _Scope:
+    """Where a call sits: its class, the parameters in reach (each
+    mapped to the package function that owns it, or None for a nested
+    function or lambda), and every name bound locally."""
+
+    def __init__(self, cls=None, params=None, local=frozenset()):
+        self.cls = cls
+        self.params: dict[str, str | None] = params or {}
+        self.local: frozenset[str] = local
+
+    def enter(self, node, owner: str | None) -> "_Scope":
+        args = node.args
+        names = {
+            a.arg
+            for a in (*args.posonlyargs, *args.args, *args.kwonlyargs,
+                      args.vararg, args.kwarg)
+            if a is not None
+        }
+        bound = set(names)
+        for n in ast.walk(node):
+            if isinstance(n, ast.Name) and isinstance(n.ctx, ast.Store):
+                bound.add(n.id)
+            elif isinstance(n, ast.ExceptHandler) and n.name:
+                bound.add(n.name)
+            elif n is not node and isinstance(
+                n, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
+            ):
+                bound.add(n.name)
+        return _Scope(
+            self.cls,
+            {**self.params, **dict.fromkeys(names, owner)},
+            self.local | bound,
+        )
+
+
+class _Options:
+    """The values each package function's parameters receive."""
+
+    def __init__(self):
+        self.graph = _Graph()
+        #: ``module.name`` or ``module.Class.name`` -> its definition
+        self.functions: dict[str, ast.FunctionDef] = {}
+        #: method name -> every package method so named
+        self.methods: dict[str, list[str]] = {}
+        for module, source in self.graph.sources.items():
+            for stmt in source.tree.body:
+                if isinstance(stmt, ast.FunctionDef):
+                    self.functions[f"{module}.{stmt.name}"] = stmt
+                elif isinstance(stmt, ast.ClassDef):
+                    for m in stmt.body:
+                        if isinstance(m, ast.FunctionDef):
+                            key = f"{module}.{stmt.name}.{m.name}"
+                            self.functions[key] = m
+                            self.methods.setdefault(m.name, []).append(key)
+        #: (function, parameter) -> what each call passes: the source
+        #: text of a value, _VARIES, or the (function, parameter) whose
+        #: values it passes through
+        self.passed: dict[tuple[str, str], list] = {}
+        for path in _call_sites():
+            source = _Source(path)
+            for stmt in source.tree.body:
+                if not isinstance(stmt, (ast.Import, ast.ImportFrom)):
+                    self._visit(source, stmt, _Scope(), source.name)
+
+    def _targets(self, source: _Source, node: ast.expr, scope: _Scope):
+        """(function, leading parameters a call binds implicitly) for
+        each package function a callee or value expression may name. A
+        method called on an object of unknown type matches by name."""
+        chain = []
+        while isinstance(node, ast.Attribute):
+            chain.append(node.attr)
+            node = node.value
+        chain.reverse()
+        by_name = (
+            [(key, 1) for key in self.methods.get(chain[-1], ())] if chain else []
+        )
+        if not isinstance(node, ast.Name) or node.id in scope.local:
+            return by_name
+        head = node.id
+        if head == "self" and scope.cls and len(chain) == 1:
+            key = f"{source.name}.{scope.cls}.{chain[0]}"
+            return [(key, 1)] if key in self.functions else []
+        found, rest = None, chain
+        if head in source.defs:
+            found = (source.name, head)
+        for dotted in () if found else source.bindings.get(head, ()):
+            parts = [dotted, *chain]
+            for depth in range(len(parts), 0, -1):
+                found = self.graph.resolve(".".join(parts[:depth]))
+                if found:
+                    rest = parts[depth:]
+                    break
+            if found:
+                break
+        if not found:
+            return by_name
+        key = ".".join(found)
+        if key in self.functions and not rest:
+            return [(key, 0)]
+        # ``Cls(...)`` runs ``Cls.__init__``; ``Cls.method`` is unbound
+        member = f"{key}.{rest[0] if rest else '__init__'}"
+        if len(rest) <= 1 and member in self.functions:
+            return [(member, 0 if rest else 1)]
+        return []
+
+    def _record(self, key: str, param: str, value) -> None:
+        self.passed.setdefault((key, param), []).append(value)
+
+    def _call(self, source: _Source, call: ast.Call, scope: _Scope) -> None:
+        for key, skip in self._targets(source, call.func, scope):
+            fn = self.functions[key]
+            positional, defaults = _params(fn)
+            if any(isinstance(a, ast.Starred) for a in call.args) or any(
+                k.arg is None for k in call.keywords
+            ):
+                for param in _all_params(fn):
+                    self._record(key, param, _VARIES)
+                continue
+            given = dict(zip(positional[skip:], call.args))
+            given.update((k.arg, k.value) for k in call.keywords)
+            for param in _all_params(fn)[skip:]:
+                if param in given:
+                    self._record(key, param, self._value(given[param], scope))
+                elif param in defaults:
+                    self._record(key, param, defaults[param])
+
+    @staticmethod
+    def _value(arg: ast.expr, scope: _Scope):
+        """A bare parameter name passes its own values through; an
+        expression over local names varies; anything else is its
+        source text."""
+        if isinstance(arg, ast.Name) and arg.id in scope.params:
+            owner = scope.params[arg.id]
+            return (owner, arg.id) if owner else _VARIES
+        names = {n.id for n in ast.walk(arg) if isinstance(n, ast.Name)}
+        return _VARIES if names & scope.local else ast.unparse(arg)
+
+    def _visit(self, source: _Source, node, scope: _Scope, prefix) -> None:
+        """Record the calls under ``node``; ``prefix`` is the dotted
+        name a definition here would have, or None inside a function."""
+        if isinstance(node, ast.ClassDef):
+            inner = _Scope(node.name, scope.params, scope.local)
+            name = f"{prefix}.{node.name}" if prefix else None
+            for child in node.body:
+                self._visit(source, child, inner, name)
+            return
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.Lambda)):
+            key = f"{prefix}.{getattr(node, 'name', '')}" if prefix else None
+            inner = scope.enter(node, key if key in self.functions else None)
+            for outer in (
+                *getattr(node, "decorator_list", ()),
+                *node.args.defaults,
+                *filter(None, node.args.kw_defaults),
+            ):
+                self._visit(source, outer, scope, None)
+            for child in node.body if isinstance(node.body, list) else [node.body]:
+                self._visit(source, child, inner, None)
+            return
+        children = list(ast.iter_child_nodes(node))
+        if isinstance(node, ast.Call):
+            self._call(source, node, scope)
+            # the callee is called, not passed around: skip its name
+            if isinstance(node.func, ast.Attribute):
+                children[0] = node.func.value
+            elif isinstance(node.func, ast.Name):
+                children.pop(0)
+        elif isinstance(node, (ast.Name, ast.Attribute)):
+            # a function passed around as a value is called unseen
+            for key, _ in self._targets(source, node, scope):
+                for param in _all_params(self.functions[key]):
+                    self._record(key, param, _VARIES)
+            children = [node.value] if isinstance(node, ast.Attribute) else []
+        for child in children:
+            self._visit(source, child, scope, None)
+
+    def values(self, key: str, param: str, seen=frozenset()) -> set:
+        """The values the parameter receives, pass-throughs followed."""
+        found = set()
+        for value in self.passed.get((key, param), ()):
+            if isinstance(value, tuple):
+                if value not in seen:
+                    found |= self.values(*value, seen | {(key, param)})
+            else:
+                found.add(value)
+        return found
+
+
+def one_value_options() -> dict[str, str]:
+    """``module.function.parameter`` -> the one value every call passes,
+    for each defaulted package parameter that receives exactly one."""
+    options = _Options()
+    found = {}
+    for key, fn in options.functions.items():
+        for param in _params(fn)[1]:
+            values = options.values(key, param)
+            if len(values) == 1 and _VARIES not in values:
+                found[f"{key}.{param}"] = values.pop()
+    return found
+
+
+def _exemption(name: str) -> str | None:
+    return next(
+        (key for key in ONE_VALUE_BY_DESIGN
+         if name == key or name.startswith(key + ".")),
+        None,
+    )
+
+
+def test_option_values():
+    """A defaulted parameter that every call, tests included, sets to
+    one value is a constant: each other value would be a code path no
+    caller runs."""
+    found = one_value_options()
+    flagged = sorted(
+        f"{name}={value}" for name, value in found.items() if not _exemption(name)
+    )
+    assert not flagged, "one value at every call; make it a constant: " + (
+        ", ".join(flagged)
+    )
+    # an exemption that covers no such parameter hides nothing
+    used = {_exemption(name) for name in found}
+    assert set(ONE_VALUE_BY_DESIGN) <= used, set(ONE_VALUE_BY_DESIGN) - used

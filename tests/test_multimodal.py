@@ -635,7 +635,7 @@ class TestPerceptualHash:
         df = spark.createDataFrame(sigs, "media_id long, phash long")
         got = {
             (r.doc_a, r.doc_b, r.hamming)
-            for r in M.image_near_dup_pairs(df, max_hamming=3).collect()
+            for r in M.image_near_dup_pairs(df).collect()
         }
         exact = set()
         for (ia, va), (ib, vb) in itertools.combinations(sigs, 2):

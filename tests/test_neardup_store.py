@@ -106,8 +106,8 @@ class TestMd5StoreMode:
         )
 
         docs = _docs(spark, [(7, BASE)])
-        got = NS._sig_array(docs, "text", "doc_id", 3, 32, "md5").collect()
-        ref = minhash_signatures(docs, "text", "doc_id", 3, 32, "md5").collect()
+        got = NS._sig_array(docs, 3, 32, "md5").collect()
+        ref = minhash_signatures(docs, 3, 32, "md5").collect()
         assert list(got[0].sig) == [ref[0][f"h{i}"] for i in range(32)]
 
 
@@ -164,31 +164,8 @@ class TestDegenerateBucketCap:
 
 
 # ---------------------------------------------------------------------------
-# v1 layout compatibility: stores written before the buckets column
-# existed must keep querying
+# store layout
 # ---------------------------------------------------------------------------
-
-
-def _build_v1_store(spark, path, docs):
-    import json as _json
-
-    NS._sig_array(docs, "text", "doc_id", 3, 32).write.mode(
-        "overwrite"
-    ).parquet(path + "/signatures")
-    meta = {"k": 3, "bands": 8, "rows_per_band": 4}  # no version key
-    spark.createDataFrame([( _json.dumps(meta),)], "meta string").repartition(
-        1
-    ).write.mode("overwrite").parquet(path + "/meta")
-
-
-def test_v1_store_queries_and_appends_without_buckets_column(spark, tmp_path):
-    path = str(tmp_path / "v1store")
-    _build_v1_store(spark, path, _docs(spark, [(0, BASE)]))
-
-    hits = NS.near_dups_against_store(
-        spark, path, _docs(spark, [(10, BASE.replace("lazy", "sleepy"))])
-    )
-    assert {(r.new_id, r.snapshot_id) for r in hits.collect()} == {(10, 0)}
 
 
 def test_v2_store_persists_buckets_and_append_matches(spark, store):
@@ -315,7 +292,7 @@ def test_within_store_pairs_use_persisted_buckets(spark, tmp_path):
         ],
     )
     NS.build_minhash_store(docs, store)
-    pairs = NS.near_dup_pairs_within_store(spark, store, threshold=0.9)
+    pairs = NS.near_dup_pairs_within_store(spark, store)
     got = {(r.doc_a, r.doc_b, r.est_jaccard) for r in pairs.collect()}
     assert got == {(1, 2, 1.0)}
     NS.update_cluster_labels(spark, store, pairs.select("doc_a", "doc_b"))

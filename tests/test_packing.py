@@ -169,7 +169,7 @@ class TestWriteTrainingShards:
             "doc_id bigint, text string, source string",
         )
         path = str(tmp_path / "shards")
-        PK.write_training_shards(docs, path, num_shards=4, seed=1)
+        PK.write_training_shards(docs, path, seed=1)
 
         shard_dirs = sorted(glob.glob(os.path.join(path, "shard=*")))
         assert len(shard_dirs) == 4
@@ -202,9 +202,9 @@ class TestHoldoutSplit:
         )
         fr = {"train": 0.9, "val": 0.05, "test": 0.05}
         a = {r.doc_id: r.split
-             for r in PK.holdout_split(small, fr, seed=3).collect()}
+             for r in PK.holdout_split(small, fr).collect()}
         b = {r.doc_id: r.split
-             for r in PK.holdout_split(grown, fr, seed=3).collect()}
+             for r in PK.holdout_split(grown, fr).collect()}
         # growth never reassigns an existing doc
         assert all(b[i] == a[i] for i in a)
         # proportions roughly honored on the grown corpus
@@ -316,7 +316,7 @@ class TestClusterHoldoutSplit:
             [(i,) for i in range(n_docs)], "doc_id bigint"
         )
         edges = spark.createDataFrame(pairs, "doc_a bigint, doc_b bigint")
-        return PK.cluster_holdout_split(docs, edges, self.FR, seed=3)
+        return PK.cluster_holdout_split(docs, edges, self.FR)
 
     def test_clusters_never_straddle_splits(self, spark):
         # chain 0-1-2, pair 10-11, transitive 20-21 + 21-22
@@ -338,7 +338,7 @@ class TestClusterHoldoutSplit:
         )
         plain = {
             r.doc_id: r.split
-            for r in PK.holdout_split(docs, self.FR, seed=3).collect()
+            for r in PK.holdout_split(docs, self.FR).collect()
         }
         clustered = {
             r.doc_id: r
@@ -368,7 +368,7 @@ class TestWriteTrainingShards:
             "doc_id bigint, text string",
         )
         path = str(tmp_path / "shards")
-        assert PK.write_training_shards(docs, path, num_shards=4, seed=3) == 4
+        assert PK.write_training_shards(docs, path, seed=3) == 4
         dirs = sorted(glob.glob(f"{path}/shard=*"))
         assert len(dirs) == 4
         manifest = {
@@ -464,10 +464,9 @@ def test_bpe_training_shards_byte_identical_across_runs(spark, tmp_path):
         )
         sized = docs.select("doc_id", "source").join(counts, "doc_id")
         packed = PK.pack_sequences_bestfit(
-            sized, seq_len=64, shard_col="source",
-            n_tokens_col="n_bpe_tokens",
+            sized, seq_len=64, n_tokens_col="n_bpe_tokens",
         ).withColumnRenamed("shard", "pack_shard")  # the shuffle owns "shard"
-        PK.write_training_shards(packed, out_dir, num_shards=4, seed=1)
+        PK.write_training_shards(packed, out_dir, seed=1)
         layout = {}
         for shard_dir in sorted(os.listdir(out_dir)):
             if not shard_dir.startswith("shard="):

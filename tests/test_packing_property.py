@@ -167,7 +167,6 @@ def test_holdout_split_is_order_independent(spark):
         for r in PK.holdout_split(
             spark.createDataFrame([(i,) for i in ids], "doc_id bigint"),
             fr,
-            seed=3,
         ).collect()
     }
     b = {
@@ -177,7 +176,6 @@ def test_holdout_split_is_order_independent(spark):
                 [(i,) for i in reversed(ids)], "doc_id bigint"
             ).repartition(7),
             fr,
-            seed=3,
         ).collect()
     }
     assert a == b

@@ -7,8 +7,6 @@ import os
 
 import pytest
 
-from pyspark.sql import functions as F
-
 import etl_procedure_codes_crawler_spark.llm.multimodal as M
 import etl_procedure_codes_crawler_spark.llm.phash_store as PS
 

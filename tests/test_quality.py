@@ -62,7 +62,7 @@ class TestFitLinearQuality:
             (F.col("doc_id") % 5).cast("double") / 5.0,
         )
         model = Q.fit_linear_quality(labeled, "label", ridge=0.0)
-        feats = Q.quality_features("text")
+        feats = Q.quality_features()
         mat = labeled.select(
             F.lit(1.0).alias("x0"),
             *[feats[n].alias(n) for n in Q.FEATURE_ORDER],

@@ -163,8 +163,6 @@ def _budget_replica(docs, budgets, consumed):
     used0=st.integers(min_value=0, max_value=10),
 )
 def test_budget_filter_matches_prefix_replica(spark, docs, caps, used0):
-    from pyspark.sql import functions as F
-
     from etl_procedure_codes_crawler_spark.streaming.incremental import (
         budget_filter,
     )

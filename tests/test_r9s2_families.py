@@ -153,9 +153,7 @@ class TestMarginPairs:
         }
         approx = {
             (r["vec_a"], r["vec_b"])
-            for r in S.margin_pairs_ann(
-                emb, floor=0.30, k=4, margin_threshold=1.1
-            ).collect()
+            for r in S.margin_pairs_ann(emb).collect()
         }
         assert approx  # non-degenerate at this SF
         if exact:
@@ -168,7 +166,7 @@ class TestKmvSketch:
         docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
         est = {
             r["group"]: r["est_distinct"]
-            for r in KV.kmv_distinct_by_group(docs, k=64).collect()
+            for r in KV.kmv_distinct_by_group(docs).collect()
         }
         exact = {
             r["grp"]: r["n"]
@@ -191,7 +189,7 @@ class TestKmvSketch:
         docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
         est = {
             (r["group_a"], r["group_b"]): r
-            for r in KV.kmv_overlap_pairs(docs, k=64).collect()
+            for r in KV.kmv_overlap_pairs(docs).collect()
         }
         exact = exact_group_overlap(docs)
         # mean absolute jaccard error over pairs that exist in both
@@ -211,11 +209,11 @@ class TestKmvSketch:
     def test_store_incremental_equals_batch(self, spark, sf_dir, tmp_path):
         docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
         root = str(tmp_path / "kmv")
-        KV.create_kmv_store(spark, root, k=64, shingle_k=3)
+        KV.create_kmv_store(spark, root, k=64)
         KV.append_to_kmv_store(spark, root, docs.filter(F.col("doc_id") % 2 == 0))
         KV.append_to_kmv_store(spark, root, docs.filter(F.col("doc_id") % 2 == 1))
         inc = sorted(map(tuple, KV.kmv_store_estimates(spark, root).collect()))
-        batch = sorted(map(tuple, KV.kmv_distinct_by_group(docs, k=64).collect()))
+        batch = sorted(map(tuple, KV.kmv_distinct_by_group(docs).collect()))
         assert inc == batch
 
     def test_store_replay_and_compaction_change_nothing(
@@ -223,7 +221,7 @@ class TestKmvSketch:
     ):
         docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
         root = str(tmp_path / "kmv")
-        KV.create_kmv_store(spark, root, k=64, shingle_k=3)
+        KV.create_kmv_store(spark, root, k=64)
         half = docs.filter(F.col("doc_id") % 2 == 0)
         KV.append_to_kmv_store(spark, root, half)
         before = sorted(map(tuple, KV.kmv_store_estimates(spark, root).collect()))
@@ -251,7 +249,7 @@ class TestKmvSketch:
             ],
             ["doc_id", "text", "source"],
         )
-        (row,) = KV.kmv_overlap_pairs(df, k=64).collect()
+        (row,) = KV.kmv_overlap_pairs(df).collect()
         # 3 shingles each, sharing exactly one ("c d e"): union 5,
         # intersection 1 — below k the sketch IS the set, so exact
         assert row["est_union"] == 5.0
@@ -270,9 +268,7 @@ class TestPoissonBootstrap:
         df = spark.createDataFrame(rows, ["doc_id", "source", "v"])
         out = {
             r["group"]: r
-            for r in BS.bootstrap_ci_by_group(
-                df, "source", "v", n_replicates=32
-            ).collect()
+            for r in BS.bootstrap_ci_by_group(df, "v").collect()
         }
         for g, r in out.items():
             assert r["ci_lo"] <= r["mean_value"] <= r["ci_hi"], r
@@ -294,9 +290,7 @@ class TestPoissonBootstrap:
         df = spark.createDataFrame(small + big, ["doc_id", "source", "v"])
         out = {
             r["group"]: r["ci_hi"] - r["ci_lo"]
-            for r in BS.bootstrap_ci_by_group(
-                df, "source", "v", n_replicates=32
-            ).collect()
+            for r in BS.bootstrap_ci_by_group(df, "v").collect()
         }
         assert out["big"] < out["small"]
 
@@ -393,7 +387,7 @@ class TestBlocklist:
         from etl_procedure_codes_crawler_spark.llm import blocklist as BL
 
         docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-        assert BL.top_trigram_phrases(docs, 8) == BL.top_trigram_phrases(docs, 8)
+        assert BL.top_trigram_phrases(docs) == BL.top_trigram_phrases(docs)
 
 
 class TestChiSquareDrift:

@@ -184,7 +184,7 @@ def test_viterbi_roundtrip_and_score_dominance(word, pieces):
     scores = dict(pieces)
     for ch in "abcdef":
         scores.setdefault(ch, -6.0)
-    segs = _viterbi(word, scores, 8)
+    segs = _viterbi(word, scores)
     # round-trip: pieces concatenate back to the word
     assert "".join(segs) == word
     # optimality against the all-singletons baseline

@@ -4,8 +4,6 @@ from __future__ import annotations
 
 import datetime as dt
 
-from pyspark.sql import functions as F
-
 from etl_procedure_codes_crawler_spark.operators.rangejoin import range_join
 
 
@@ -35,7 +33,7 @@ def _frames(spark):
 
 def test_containment_inclusive_start_exclusive_end(spark):
     points, intervals = _frames(spark)
-    out = range_join(points, intervals, "ts", "start", "end")
+    out = range_join(points, intervals, "start", "end")
     pairs = sorted((r.pid, r.win) for r in out.collect())
     assert pairs == [(1, "w1"), (2, "w1"), (2, "w2")]
 
@@ -43,7 +41,7 @@ def test_containment_inclusive_start_exclusive_end(spark):
 def test_bucket_size_does_not_change_results(spark):
     points, intervals = _frames(spark)
     for bucket in (60, 600, 3600, 86400):
-        out = range_join(points, intervals, "ts", "start", "end", bucket_seconds=bucket)
+        out = range_join(points, intervals, "start", "end", bucket_seconds=bucket)
         assert sorted((r.pid, r.win) for r in out.collect()) == [
             (1, "w1"),
             (2, "w1"),
@@ -63,13 +61,13 @@ def test_keyed_range_join_partitions_by_key(spark):
         ],
         "user string, pid int, ts timestamp",
     )
-    out = range_join(points, intervals, "ts", "start", "end", on="user")
+    out = range_join(points, intervals, "start", "end", on="user")
     assert [r.pid for r in out.collect()] == [1]
 
 
 def test_plans_as_equi_join_not_nested_loop(spark):
     points, intervals = _frames(spark)
-    plan = range_join(points, intervals, "ts", "start", "end")._jdf.queryExecution(
+    plan = range_join(points, intervals, "start", "end")._jdf.queryExecution(
     ).executedPlan().toString()
     assert "BroadcastNestedLoopJoin" not in plan
     assert "CartesianProduct" not in plan

@@ -53,7 +53,7 @@ def test_range_join_matches_naive_containment(spark, points, intervals, bucket):
     got = {
         (r.pid, r.iid)
         for r in range_join(
-            pts, ivs, "ts", "start", "end", bucket_seconds=bucket
+            pts, ivs, "start", "end", bucket_seconds=bucket
         ).collect()
     }
     assert got == expected

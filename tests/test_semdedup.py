@@ -125,11 +125,7 @@ class TestCellScopedSemDeDup:
         plan = _pairs_within_cells(
             emb.where(F.col("embedding").isNotNull()),
             0.45,
-            "embedding",
-            "vec_id",
             8,
-            42,
-            65536,
             probes=2,
         )._jdf.queryExecution().executedPlan().toString()
         assert "CartesianProduct" not in plan

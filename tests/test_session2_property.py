@@ -48,7 +48,7 @@ def test_intra_doc_repeats_match_replica(spark, texts, block):
     df = spark.createDataFrame(
         [(i, t) for i, t in enumerate(texts)], "doc_id bigint, text string"
     )
-    n_blocks, kept = D.intra_doc_kept_blocks("text", block)
+    n_blocks, kept = D.intra_doc_kept_blocks(block)
     got = {
         r.doc_id: (r.n_blocks, r.n_kept, r.text_clean)
         for r in df.select(
@@ -112,7 +112,7 @@ def test_cluster_holdout_never_straddles(spark, n, edges):
         "doc_a bigint, doc_b bigint",
     )
     out = PK.cluster_holdout_split(
-        docs, pairs, {"train": 0.8, "test": 0.2}, seed=3
+        docs, pairs, {"train": 0.8, "test": 0.2}
     ).collect()
     assert sorted(r.doc_id for r in out) == list(range(n))
     splits_per_cluster: dict = {}
@@ -144,6 +144,6 @@ def test_cluster_holdout_never_straddles(spark, n, edges):
 def test_bloom_never_false_negative(spark, items):
     df = spark.createDataFrame([(x,) for x in items], "fp string")
     m, k = B.bloom_parameters(len(items), 0.01)
-    flt = B.build_bloom(df, "fp", m, k).localCheckpoint(eager=True)
-    probed = B.probe_bloom(df, "fp", flt, m, k)
+    flt = B.build_bloom(df, m, k).localCheckpoint(eager=True)
+    probed = B.probe_bloom(df, flt, m, k)
     assert probed.filter("NOT maybe_seen").count() == 0

@@ -13,8 +13,6 @@ import os
 import shutil
 import tempfile
 
-import pytest
-
 from pyspark.sql import functions as F
 
 from etl_procedure_codes_crawler_spark.streaming.events import (

@@ -12,7 +12,6 @@ from etl_procedure_codes_crawler_spark.functions.html_extract import (
 )
 from etl_procedure_codes_crawler_spark.functions.htmldom import parse_html
 from etl_procedure_codes_crawler_spark.operators.udtf import (
-    ExtractModifiersUDTF,
     register_udtfs,
 )
 

@@ -17,8 +17,6 @@ import shutil
 
 import pytest
 
-from pyspark.sql import functions as F
-
 from etl_procedure_codes_crawler_spark.streaming import unified as U
 
 
@@ -83,8 +81,7 @@ def _stage(df, tmp_path, n_files=1, sub="in"):
 def _run_gate(spark, src, schema, root, budgets, ckpt, **kw):
     stores = os.path.join(root, "stores")
     if not os.path.exists(stores):
-        U.create_unified_stores(spark, stores, block=3, kmv_k=16,
-                               kmv_shingle_k=3)
+        U.create_unified_stores(spark, stores, kmv_k=16)
     q = U.stream_ingest_unified(
         spark, src, schema, os.path.join(root, "wh"), stores, ckpt,
         budgets=budgets, min_doc_freq=2, **kw
@@ -231,8 +228,7 @@ class TestCrashReplay:
 
         monkeypatch.setattr(U.KV, "append_to_kmv_store", exploding)
         stores_b = os.path.join(root_b, "stores")
-        U.create_unified_stores(spark, stores_b, block=3, kmv_k=16,
-                               kmv_shingle_k=3)
+        U.create_unified_stores(spark, stores_b, kmv_k=16)
         q = U.stream_ingest_unified(
             spark, src_b, docs.schema, os.path.join(root_b, "wh"),
             stores_b, str(tmp_path / "ckB"), budgets=budgets,
@@ -268,8 +264,7 @@ def test_store_commit_jobs_stay_in_the_streams_job_group(
     src = _stage(docs, tmp_path)
     root = str(tmp_path / "g")
     os.makedirs(root)
-    U.create_unified_stores(spark, os.path.join(root, "stores"), block=3,
-                            kmv_k=16, kmv_shingle_k=3)
+    U.create_unified_stores(spark, os.path.join(root, "stores"), kmv_k=16)
     runs = []
 
     def one_batch():

@@ -6,7 +6,6 @@ from __future__ import annotations
 
 import math
 
-import pytest
 from pyspark.sql import functions as F
 
 from etl_procedure_codes_crawler_spark.llm import unigram as UG
@@ -21,15 +20,15 @@ class TestViterbi:
     }
 
     def test_prefers_high_score_piece(self):
-        assert UG._viterbi("ababab", self.SCORES, 8) == ["ab", "ab", "ab"]
+        assert UG._viterbi("ababab", self.SCORES) == ["ab", "ab", "ab"]
 
     def test_roundtrip_always(self):
         for w in ("abc", "aab", "cccab", "xyz", "a"):
-            pieces = UG._viterbi(w, self.SCORES, 8)
+            pieces = UG._viterbi(w, self.SCORES)
             assert "".join(pieces) == w
 
     def test_unseen_chars_fall_back_to_singletons(self):
-        assert UG._viterbi("xyz", self.SCORES, 8) == ["x", "y", "z"]
+        assert UG._viterbi("xyz", self.SCORES) == ["x", "y", "z"]
 
 
 class TestTrainUnigram:

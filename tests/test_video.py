@@ -124,7 +124,7 @@ class TestVideoNearDup:
         kf = V.video_keyframe_hashes(
             V.documents_as_mjpeg_mp4(docs.unionByName(twins))
         ).localCheckpoint(eager=True)
-        pairs = V.video_near_dup_pairs(kf, max_hamming=3)
+        pairs = V.video_near_dup_pairs(kf)
         found = {
             (r.video_a, r.video_b): (r.n_matched, r.score)
             for r in pairs.collect()
@@ -171,8 +171,8 @@ class TestVideoNearDup:
         kf = V.video_keyframe_hashes(
             V.documents_as_mjpeg_mp4(docs)
         ).localCheckpoint(eager=True)
-        strict = V.video_near_dup_pairs(kf, max_hamming=3, min_match_frac=1.0)
-        loose = V.video_near_dup_pairs(kf, max_hamming=3, min_match_frac=0.5)
+        strict = V.video_near_dup_pairs(kf, min_match_frac=1.0)
+        loose = V.video_near_dup_pairs(kf, min_match_frac=0.5)
         strict_pairs = {(r.video_a, r.video_b) for r in strict.collect()}
         loose_pairs = {(r.video_a, r.video_b) for r in loose.collect()}
         assert (1, 2) not in strict_pairs

@@ -232,7 +232,7 @@ class TestAllFrameNearDup:
             codec=b"dgry",
         )
         fh = V.video_frame_hashes(_media_df(spark, [payload, payload]))
-        pairs = V.video_near_dup_pairs(fh, max_hamming=3).collect()
+        pairs = V.video_near_dup_pairs(fh).collect()
         assert len(pairs) == 1
         (p,) = pairs
         assert {p.video_a, p.video_b} == {1, 2}
@@ -261,11 +261,11 @@ class TestAllFrameNearDup:
         ]
         media = _media_df(spark, pays)
         kf_pairs = V.video_near_dup_pairs(
-            V.video_keyframe_hashes(media), max_hamming=3
+            V.video_keyframe_hashes(media)
         ).collect()
         assert len(kf_pairs) == 1 and kf_pairs[0].score == 1.0
         af_pairs = V.video_near_dup_pairs(
-            V.video_frame_hashes(media), max_hamming=3
+            V.video_frame_hashes(media)
         ).collect()
         assert af_pairs == []
 
