@@ -31,23 +31,25 @@ import json
 
 import numpy as np
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .similarity import (
     _FIXED_SHIFT,
-    _adc_score,
-    _dot,
-    _int_matmul,
+    _UNIT_GRID,
+    _adc_rerank,
+    _as_queries,
+    _encode_ivfpq,
+    _grid_dists,
+    _int_lut,
     _int_sq_dists,
-    _ivf_cell_int_udf,
-    _kmeans_int,
-    _md5_h60_py,
-    _pq_int_context,
-    _quantize_np,
+    _ivf_cell_udf,
+    _nearest_cells,
+    _pq_int_codecs,
+    _train_ivf_int,
+    _train_pq_int,
     _train_vectors_by_id,
-    _unit_seq_np,
-    with_norm,
+    _unit_fixed,
 )
 
 
@@ -62,31 +64,17 @@ def build_ivfpq_index(
     by cell. The encode scan is the only full pass over the corpus;
     everything else is metadata-sized.
 
-    Both quantizers run md5-seeded INTEGER Lloyd
-    (similarity._kmeans_int) and the meta stores the integer
+    Training and encode are the unrotated
+    :func:`..similarity.cosine_topk_ivfpq`'s own helpers (md5-seeded
+    INTEGER Lloyd for both quantizers), and the meta stores the integer
     centroids/codebook, so serves and a SQL oracle all re-derive
     identical structures from the corpus."""
-    from .text import spread_small_input
-
-    ids, train_X = _train_vectors_by_id(corpus, 1 << 16)
-    codebook, codes_udf, _lut_udf = _pq_int_context(
-        corpus, 64, max_iter, train_data=(ids, train_X)
-    )
-    keys = [(_md5_h60_py(f"km:{int(i)}"), int(i)) for i in ids]
-    centroids = _kmeans_int(
-        _quantize_np(_unit_seq_np(train_X)), keys, num_centroids, max_iter
-    )
-    cell_udf = _ivf_cell_int_udf(centroids, normalize=True)
-
-    coded = spread_small_input(
-        corpus.select(
-            F.col("vec_id").alias("id"), F.col("embedding").alias("vector")
-        )
-    ).select(
-        "id",
-        "vector",
-        F.coalesce(cell_udf(F.col("vector")), F.lit(-1)).alias("cell"),
-        codes_udf(F.col("vector")).alias("codes"),
+    train = _train_vectors_by_id(corpus)
+    codebook = _train_pq_int(train, _UNIT_GRID, 64, max_iter)
+    centroids = _train_ivf_int(train, _unit_fixed, num_centroids, max_iter)
+    codes_udf, _ = _pq_int_codecs(codebook, _UNIT_GRID)
+    coded = _encode_ivfpq(
+        corpus, _ivf_cell_udf(_grid_dists(centroids, _unit_fixed)), codes_udf
     )
     # repartition on cell before the partitioned write: without it,
     # every encode task writes a file into every cell directory
@@ -103,12 +91,12 @@ def build_ivfpq_index(
 
     meta = {
         "centroids": centroids.tolist(),
-        "codebook": np.asarray(codebook).tolist(),
+        "codebook": codebook.tolist(),
         "m": 8,
-        "sub": int(np.asarray(codebook).shape[1]),
+        "sub": int(codebook.shape[1]),
         "codebook_size": 64,
         "num_centroids": num_centroids,
-        "dim": int(train_X.shape[1]),
+        "dim": int(train[1].shape[1]),
     }
     spark = corpus.sparkSession
     # repartition(1), not coalesce(1): a coalesced one-row local
@@ -143,11 +131,7 @@ def query_ivfpq_index(
     the shortlist join. Same output contract as
     :func:`..similarity.cosine_topk_ivfpq`."""
     meta = load_index_meta(spark, path)
-    m, sub, K = meta["m"], meta["sub"], meta["codebook_size"]
-
-    q_side = queries.select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("qv")
-    )
+    q_side = _as_queries(queries)
     # the probe/re-rank relations are rebuilt driver-side, so they must
     # carry the CALLER's id type — hard-coding bigint would crash a
     # string-id corpus (the one-shot operators and the distributed twin
@@ -157,18 +141,13 @@ def query_ivfpq_index(
     if not q_rows:
         raise ValueError("empty query set")
     qids = [r["query_id"] for r in q_rows]
-    raw_Q = np.asarray([r["qv"] for r in q_rows], dtype=np.float64)
-    # the stored quantizers are integer — probe and LUT in the same
-    # exact int64 arithmetic the build used
-    G = np.asarray(meta["centroids"], dtype=np.int64)
-    C = np.asarray(meta["codebook"], dtype=np.int64)
-    QU = _quantize_np(_unit_seq_np(raw_Q))
-    luts = _int_matmul(
-        (QU - _FIXED_SHIFT).reshape(len(QU), m, sub),
-        (C - _FIXED_SHIFT).T,
-    ).reshape(len(QU), -1)
-    order = np.argsort(_int_sq_dists(QU, G), axis=1, kind="stable")
-    probe_cells = order[:, :nprobe]
+    # the stored quantizers are integer — probe and LUT with the same
+    # kernels, on the same grid, the build used
+    QU = _unit_fixed(np.asarray([r["qv"] for r in q_rows], dtype=np.float64))
+    luts = _int_lut(QU, np.asarray(meta["codebook"], dtype=np.int64), _FIXED_SHIFT)
+    probe_cells = _nearest_cells(
+        _int_sq_dists(QU, np.asarray(meta["centroids"], dtype=np.int64)), nprobe
+    )
 
     probes = spark.createDataFrame(
         [
@@ -183,55 +162,14 @@ def query_ivfpq_index(
     coded = spark.read.parquet(path.rstrip("/") + "/coded").where(
         F.col("cell").isin(cells_needed)  # static partition pruning
     )
-    adc = _adc_score(F.col("codes"), m, K)
-    pairs = (
-        coded.select("id", "cell", "codes")
-        .join(F.broadcast(probes), "cell")
-        .filter(F.col("query_id") != F.col("id"))
-        .select(
-            "query_id", F.col("id").alias("neighbor_id"), adc.alias("adc_score")
-        )
-    )
-    w_adc = Window.partitionBy("query_id").orderBy(
-        F.desc("adc_score"), F.asc("neighbor_id")
-    )
-    short = (
-        pairs.withColumn("_arank", F.row_number().over(w_adc))
-        .filter(F.col("_arank") <= k * 10)
-        .select("query_id", "neighbor_id")
-    )
-    cn = with_norm(
+    return _adc_rerank(
+        coded.select(F.col("id").alias("neighbor_id"), "cell", "codes").join(
+            F.broadcast(probes), "cell"
+        ),
         coded.select(F.col("id").alias("neighbor_id"), F.col("vector").alias("cv")),
-        "cv",
-    ).withColumnRenamed("_norm", "cn")
-    qn = with_norm(
         spark.createDataFrame(
             [(qid, [float(x) for x in r["qv"]]) for qid, r in zip(qids, q_rows)],
             f"query_id {id_type}, qv array<double>",
         ),
-        "qv",
-    ).withColumnRenamed("_norm", "qn")
-    reranked = (
-        cn.join(F.broadcast(short), "neighbor_id")
-        .join(F.broadcast(qn), "query_id")
-        .select(
-            "query_id",
-            "neighbor_id",
-            (
-                _dot(F.col("qv"), F.col("cv")) / (F.col("qn") * F.col("cn"))
-            ).alias("cosine"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cosine"), F.asc("neighbor_id")
-    )
-    return (
-        reranked.withColumn("rank", F.row_number().over(w).cast("bigint"))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round("cosine", 4).alias("cosine"),
-            "rank",
-        )
+        k,
     )

@@ -2389,12 +2389,10 @@ def ann_cosine_topk_hpq(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact int64 arithmetic DuckDB replays. The learned-rotation OPQ
     variant stays rows-only (eigh is libm); this row gives the
     rotation FAMILY a hash-proven member
-    (similarity._hpq_int_context)."""
+    (similarity._HADAMARD_GRID)."""
     embeddings = load(spark, sf_dir, "embeddings")
     queries = embeddings.filter(F.col("vec_id") < 20)
-    return S.cosine_topk_pq(
-        embeddings, queries, k=5, dim=64, max_iter=3, rotate=True
-    )
+    return S.cosine_topk_pq(embeddings, queries, k=5, max_iter=3, rotate=True)
 
 
 @register("ann_cosine_topk_pq", oracle=_pq_md5_oracle(ivf=False))
@@ -2403,14 +2401,14 @@ def ann_cosine_topk_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     memory-side scale path (codes, not float vectors, shuffle) —
     HASH-ORACLED (round 12): the shared codebook is md5-seeded
     INTEGER Lloyd over the pooled quantized subvector slices
-    (similarity._pq_int_context), codes are exact int argmins, and
+    (similarity._train_pq_int), codes are exact int argmins, and
     the ADC shortlist ranks by INTEGER dots of the signed quantized
     slices — DuckDB re-derives training, encoding, and the shortlist
     bit-for-bit, then the proven cosine fold re-ranks. Quantization
     noise stays approximate BY DESIGN; its derivation no longer is."""
     embeddings = load(spark, sf_dir, "embeddings")
     queries = embeddings.filter(F.col("vec_id") < 20)
-    return S.cosine_topk_pq(embeddings, queries, k=5, dim=64, max_iter=3)
+    return S.cosine_topk_pq(embeddings, queries, k=5, max_iter=3)
 
 
 @register("ann_cosine_topk_ivfpq", oracle=_pq_md5_oracle(ivf=True))
@@ -2424,9 +2422,7 @@ def ann_cosine_topk_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
     codes, integer ADC, shortlist, re-rank — replays in SQL."""
     embeddings = load(spark, sf_dir, "embeddings")
     queries = embeddings.filter(F.col("vec_id") < 20)
-    return S.cosine_topk_ivfpq(
-        embeddings, queries, k=5, nprobe=6, dim=64, max_iter=3
-    )
+    return S.cosine_topk_ivfpq(embeddings, queries, k=5, nprobe=6, max_iter=3)
 
 
 @register("ann_cosine_topk_opq")  # rows-only (approximate by design)
@@ -2441,9 +2437,7 @@ def ann_cosine_topk_opq(spark: SparkSession, sf_dir: str) -> DataFrame:
     rotation mechanics pinned in tests/test_llm_similarity.py)."""
     embeddings = load(spark, sf_dir, "embeddings")
     queries = embeddings.filter(F.col("vec_id") < 20)
-    return S.cosine_topk_ivfpq(
-        embeddings, queries, k=5, nprobe=6, dim=64, rotate=True
-    )
+    return S.cosine_topk_ivfpq(embeddings, queries, k=5, nprobe=6, rotate=True)
 
 
 @register(

@@ -22,11 +22,12 @@ Two modes, mirroring how the ANN family is structured:
   still an exact cosine — the approximation is solely that a dup pair
   straddling a cell boundary is missed, which the paper (and our
   recall tests) show is rare: near-identical vectors land in the same
-  Voronoi cell almost surely. Centroids come from the same bounded
-  driver-side seeded Lloyd training the IVF index uses
-  (:func:`.._kmeans_np` on a capped sample), so cell assignment is a
-  deterministic Arrow-batched argmin — replaying the dedup on the same
-  corpus keeps the same survivors.
+  Voronoi cell almost surely. Centroids come from seeded float Lloyd
+  (:func:`..similarity._kmeans_np`) on a bounded driver-side sample —
+  the float training the OPQ-rotated IVF+PQ cells use, not the
+  integer Lloyd of the persisted index — and cells are assigned by the
+  shared Arrow-batched probe (:func:`..similarity._ivf_probe_udf`), so
+  replaying the dedup on the same corpus keeps the same survivors.
 
 Scale shape (100 TB): the cell join shuffles each vector once on its
 cell id; within-cell self-joins are cell-local (no all-pairs exchange);
@@ -50,6 +51,7 @@ from .similarity import (
     _kmeans_np,
     _stack_np,
     _train_vectors,
+    _unit_dists,
     _unit_np,
     similar_pairs_bruteforce,
 )
@@ -65,7 +67,7 @@ def _pairs_within_cells(
     ``threshold``.
 
     Centroids train on the normalized sample (cosine geometry — the
-    IVF cosine path does the same); each vector is assigned to its
+    IVF+PQ cells do the same); each vector is assigned to its
     ``probes`` nearest cells (multi-probe assignment — a dup pair
     straddling one Voronoi boundary still shares a cell, which is
     where most of the single-assignment recall loss lives). Each cell
@@ -81,9 +83,9 @@ def _pairs_within_cells(
     """
     import pandas as pd
 
-    sample = _unit_np(_train_vectors(df, 65536))
+    sample = _unit_np(_train_vectors(df))
     centroids = _kmeans_np(sample, num_cells, seed=42, max_iter=10)
-    probe_of = _ivf_probe_udf(centroids, nprobe=probes)
+    probe_of = _ivf_probe_udf(_unit_dists(centroids), probes)
     v = df.select(
         F.col("vec_id").alias("id"), F.col("embedding").alias("v")
     ).withColumn("cell", F.explode(probe_of(F.col("v"))))

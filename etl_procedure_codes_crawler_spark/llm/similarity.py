@@ -1,18 +1,37 @@
 """Similarity search over embedding columns (``array<float>``).
 
-Two tiers, per SURVEY §7 Phase 5:
+Six operators, per SURVEY §7 Phase 5:
 
-- brute-force cosine top-k — the exact baseline: broadcast the (small)
-  query set against the corpus, cosine via zip_with/aggregate (JVM
-  higher-order fns, no UDF), rank with a window. Linear in corpus size
-  per query; at 100 TB this is the re-rank stage, not the scan.
-- random-hyperplane LSH — the scale path: 16-bit sign signatures
-  bucket the corpus; candidates share a band; exact cosine re-ranks.
-  The ±1 hyperplanes derive from md5 on the driver and ride the
-  signature UDF's closure — no state on executors.
+- :func:`similar_pairs_bruteforce` — every pair at cosine >= a
+  threshold: the exact baseline, cosine via zip_with/aggregate (JVM
+  higher-order fns, no UDF). At 100 TB this is the re-rank stage, not
+  the scan.
+- :func:`margin_pairs_ann` — ratio-margin pair mining
+  (:func:`margin_score_pairs`) over an IVF k-NN graph.
+- :func:`cosine_topk_lsh` — random-hyperplane LSH: ±1 planes derived
+  from md5 bucket the corpus; candidates share a bucket.
+- :func:`cosine_topk_ivf` — k-means cells; each query scans only its
+  ``nprobe`` nearest cells.
+- :func:`cosine_topk_pq` — product quantization with ADC scoring,
+  optionally Hadamard-rotated.
+- :func:`cosine_topk_ivfpq` — cells plus PQ codes, optionally
+  OPQ-rotated; :mod:`.index` persists the unrotated form.
+
+The approximate operators share one scaffold. Quantizers train on a
+bounded driver-side sample and ride UDF closures (no model state on
+executors): one integer k-means (:func:`_kmeans_int`) fits both the IVF
+cells (:func:`_train_ivf_int`) and the PQ codebook
+(:func:`_train_pq_int`); one kernel picks nearest cells
+(:func:`_nearest_cells`) and one builds the integer ADC table
+(:func:`_int_lut`). Every top-k ends in the same exact-cosine rank
+window (:func:`_topk`), the PQ operators after the ADC shortlist
+(:func:`_adc_rerank`).
 """
 
 from __future__ import annotations
+
+import functools
+from typing import Callable, NamedTuple
 
 import numpy as np
 import pandas as pd
@@ -39,9 +58,74 @@ def _norm(v):
     )
 
 
-def with_norm(df: DataFrame, vec_col: str = "embedding") -> DataFrame:
+def with_norm(df: DataFrame, vec_col: str, norm_col: str) -> DataFrame:
     """Precompute the L2 norm once per vector — never per pair."""
-    return df.withColumn("_norm", _norm(F.col(vec_col)))
+    return df.withColumn(norm_col, _norm(F.col(vec_col)))
+
+
+def _cosine(a: str, b: str):
+    """Cosine of vectors ``{a}v`` and ``{b}v`` over their precomputed
+    norms ``{a}n`` and ``{b}n``."""
+    return _dot(F.col(f"{a}v"), F.col(f"{b}v")) / (
+        F.col(f"{a}n") * F.col(f"{b}n")
+    )
+
+
+def _as_queries(df: DataFrame) -> DataFrame:
+    return df.select(
+        F.col("vec_id").alias("query_id"), F.col("embedding").alias("qv")
+    )
+
+
+def _as_corpus(df: DataFrame) -> DataFrame:
+    return df.select(
+        F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("cv")
+    )
+
+
+def _scored(candidates: DataFrame, score) -> DataFrame:
+    """(query_id, neighbor_id, score) per candidate row; a query is
+    never its own neighbor."""
+    return candidates.filter(
+        F.col("query_id") != F.col("neighbor_id")
+    ).select("query_id", "neighbor_id", score)
+
+
+def _ranked(pairs: DataFrame, score: str, k: int) -> DataFrame:
+    """The best ``k`` rows per query by ``score`` (ties to the lower
+    neighbor id), numbered in ``rank``."""
+    w = Window.partitionBy("query_id").orderBy(
+        F.desc(score), F.asc("neighbor_id")
+    )
+    return pairs.withColumn(
+        "rank", F.row_number().over(w).cast("bigint")
+    ).filter(F.col("rank") <= k)
+
+
+def _topk(pairs: DataFrame, k: int) -> DataFrame:
+    """The top-k output contract shared by every operator: (query_id,
+    neighbor_id, cosine rounded for display, rank)."""
+    return _ranked(pairs, "cosine", k).select(
+        "query_id", "neighbor_id", F.round("cosine", 4).alias("cosine"), "rank"
+    )
+
+
+def _pair_sides(df: DataFrame) -> list[DataFrame]:
+    """The two sides of a pair join, ``(vec_a, av, an)`` and
+    ``(vec_b, bv, bn)`` — id, vector and its norm, computed once."""
+    v = with_norm(
+        df.select(F.col("vec_id").alias("id"), F.col("embedding").alias("v")),
+        "v",
+        "n",
+    )
+    return [
+        v.select(
+            F.col("id").alias(f"vec_{s}"),
+            F.col("v").alias(f"{s}v"),
+            F.col("n").alias(f"{s}n"),
+        )
+        for s in "ab"
+    ]
 
 
 def _pairs_above(
@@ -52,24 +136,10 @@ def _pairs_above(
     pair at cosine >= threshold — shared by the pair miner and the
     margin scorer (which must derive neighbor statistics from the raw
     values, not display-rounded ones)."""
-    v = with_norm(
-        df.select(F.col("vec_id").alias("id"), F.col("embedding").alias("v")), "v"
-    )
-    a = v.select(
-        F.col("id").alias("vec_a"), F.col("v").alias("va"), F.col("_norm").alias("na")
-    )
-    b = v.select(
-        F.col("id").alias("vec_b"), F.col("v").alias("vb"), F.col("_norm").alias("nb")
-    )
+    a, b = _pair_sides(df)
     return (
         a.join(b, F.col("vec_a") < F.col("vec_b"))
-        .select(
-            "vec_a",
-            "vec_b",
-            (_dot(F.col("va"), F.col("vb")) / (F.col("na") * F.col("nb"))).alias(
-                "cosine"
-            ),
-        )
+        .select("vec_a", "vec_b", _cosine("a", "b").alias("cosine"))
         .filter(F.col("cosine") >= threshold)
     )
 
@@ -165,10 +235,10 @@ def margin_pairs_ann(
     strongest 32 neighbors at the IVF recall floor regardless of
     how weak "strong" is. Candidate edges are top-32 IVF
     neighbors at cosine >= 0.30, symmetrized; unrounded cosines are
-    re-derived pair-wise (the fold must not consume display-rounded
-    values); scoring is :func:`margin_score_pairs`, shared with the
-    exact twin. Recall floored against the exact variant in
-    tests/test_r9s2_families.py.
+    re-derived pair-wise by :func:`_pairs_above`'s pair sides (the
+    fold must not consume display-rounded values); scoring is
+    :func:`margin_score_pairs`, shared with the exact twin. Recall
+    floored against the exact variant in tests/test_r9s2_families.py.
 
     Cell count TRACKS the corpus: with every vector a
     query, fixed cells make the candidate join quadratic (each query
@@ -190,23 +260,11 @@ def margin_pairs_ann(
         )
         .distinct()
     )
-    v = with_norm(
-        df.select(F.col("vec_id").alias("id"), F.col("embedding").alias("v")), "v"
-    )
-    a = v.select(F.col("id").alias("vec_a"), F.col("v").alias("va"),
-                 F.col("_norm").alias("na"))
-    b = v.select(F.col("id").alias("vec_b"), F.col("v").alias("vb"),
-                 F.col("_norm").alias("nb"))
+    a, b = _pair_sides(df)
     raw = (
         edges.join(a, "vec_a")
         .join(b, "vec_b")
-        .select(
-            "vec_a",
-            "vec_b",
-            (_dot(F.col("va"), F.col("vb")) / (F.col("na") * F.col("nb"))).alias(
-                "cosine"
-            ),
-        )
+        .select("vec_a", "vec_b", _cosine("a", "b").alias("cosine"))
         # checkpoint: the IVF candidate join + top-knn window would
         # otherwise re-execute once per scorer consumer — negligible at
         # sf0.1 (broadcast reuse hides it) but 3x the dominant stage on
@@ -216,23 +274,25 @@ def margin_pairs_ann(
     return margin_score_pairs(raw)
 
 
-def _train_vectors(
-    corpus: DataFrame, train_sample: int
-) -> np.ndarray:
-    """Bounded driver-side training sample for k-means codebooks and
-    coarse centroids — the FAISS approach: quantizers are trained on a
-    capped sample (~64k vectors) regardless of corpus size, because
-    cluster geometry converges long before the full corpus is seen.
+#: rows in a quantizer's training sample — the FAISS approach:
+#: quantizers train on a capped sample regardless of corpus size,
+#: because cluster geometry converges long before the full corpus is
+#: seen
+_TRAIN_SAMPLE = 1 << 16
+
+
+def _train_vectors(corpus: DataFrame) -> np.ndarray:
+    """Bounded driver-side training sample for the float quantizers.
 
     ``limit`` short-circuits the scan (LocalLimit stops feeding after
-    ``train_sample`` rows), so driver memory and scan cost are constant
-    in corpus size. A corpus whose leading files are pathologically
-    unrepresentative should be pre-sampled by the caller; for training
-    a quantizer this is the standard trade."""
+    :data:`_TRAIN_SAMPLE` rows), so driver memory and scan cost are
+    constant in corpus size. A corpus whose leading files are
+    pathologically unrepresentative should be pre-sampled by the
+    caller; for training a quantizer this is the standard trade."""
     rows = (
         corpus.select("embedding")
         .where(F.col("embedding").isNotNull())
-        .limit(train_sample)
+        .limit(_TRAIN_SAMPLE)
         .collect()
     )
     if not rows:
@@ -306,6 +366,16 @@ def _stack_np(vectors: pd.Series) -> np.ndarray:
     return np.vstack([np.asarray(v, dtype=np.float64) for v in vectors])
 
 
+def _subspace_width(X: np.ndarray) -> int:
+    """Width of each of the 8 PQ subspaces of the vectors in ``X``."""
+    if X.shape[1] % 8:
+        raise ValueError(
+            "product quantization splits each vector into 8 subspaces; "
+            f"{X.shape[1]}-dim vectors do not divide into 8"
+        )
+    return X.shape[1] // 8
+
+
 # ---------------------------------------------------------------------------
 # md5-int quantizer training (round 12): the trained-ANN conversion.
 # The same fixed-point discipline that hash-oracled the LSH
@@ -322,13 +392,21 @@ def _stack_np(vectors: pd.Series) -> np.ndarray:
 # and SQL-hostile.
 # ---------------------------------------------------------------------------
 
-#: fixed-point geometry shared by every md5-int quantizer and its SQL
-#: oracle: SCALE is one IEEE multiply (2^20), SHIFT makes quantized
-#: coordinates non-negative so integer mean division floors
-#: identically everywhere (embedding coords are unit-scale; 2^21
-#: covers anything in (-2, 2))
+#: fixed-point geometry shared by every md5-int quantizer, the LSH
+#: signatures and their SQL oracles: SCALE is one IEEE multiply
+#: (2^20), SHIFT makes quantized coordinates non-negative so integer
+#: mean division floors identically everywhere (embedding coords are
+#: unit-scale; 2^21 covers anything in (-2, 2))
 _FIXED_SCALE = float(1 << 20)
 _FIXED_SHIFT = 1 << 21
+
+#: Hadamard-rotation fixed-point geometry (round 12): the rotation
+#: sums 64 quantized coordinates, so the grid is 2^16 (not 2^20) and
+#: the post-rotation shift 2^23 — keeps every kernel under the 2^53
+#: BLAS-exactness bound (|rot| <= 64·2^16 = 2^22; products < 2^48,
+#: 8-term sums < 2^51)
+_HADAMARD_ROT_SCALE = float(1 << 16)
+_HADAMARD_ROT_SHIFT = 1 << 23
 
 
 def _md5_h60_py(s: str) -> int:
@@ -356,6 +434,59 @@ def _unit_seq_np(X: np.ndarray) -> np.ndarray:
     n = np.sqrt(acc)
     safe = np.where(n > 0, n, 1.0)
     return np.where((n > 0)[:, None], X / safe[:, None], 0.0)
+
+
+def _unit_fixed(X: np.ndarray) -> np.ndarray:
+    """Unit vectors (sequential-order norm) on the shifted 2^20 grid."""
+    return _quantize_np(_unit_seq_np(X))
+
+
+@functools.lru_cache(maxsize=None)
+def _hadamard_signs(dim: int) -> np.ndarray:
+    """The Walsh-Hadamard sign matrix H[i][j] = (-1)^popcount(i & j)
+    — ±1, orthogonal (H·Hᵀ = dim·I), and SQL-expressible as
+    bit_count(i & j) % 2. ``dim`` must be a power of two. Cached: the
+    Hadamard grid rotates every Arrow batch with it."""
+    if dim & (dim - 1):
+        raise ValueError(f"Hadamard rotation needs power-of-two dim, got {dim}")
+    idx = np.arange(dim)
+    parity = np.vectorize(lambda x: bin(x).count("1") & 1)(
+        idx[:, None] & idx[None, :]
+    )
+    H = np.where(parity == 0, 1, -1).astype(np.int64)
+    H.setflags(write=False)  # cached: every caller shares this array
+    return H
+
+
+def _hadamard_fixed(X: np.ndarray) -> np.ndarray:
+    """Unit vectors on the 2^16 grid, rotated by the ±1 Walsh-Hadamard
+    matrix and shifted by 2^23."""
+    qs = np.floor(_unit_seq_np(X) * _HADAMARD_ROT_SCALE).astype(np.int64)
+    return _int_matmul(qs, _hadamard_signs(X.shape[1])) + _HADAMARD_ROT_SHIFT
+
+
+class _Grid(NamedTuple):
+    """A fixed-point map for the md5-int PQ: ``project`` sends a float
+    batch to non-negative int64 coordinates by adding ``shift``, which
+    the signed ADC dots remove again; ``tag`` prefixes the codebook's
+    md5 init keys."""
+
+    tag: str
+    shift: int
+    project: Callable[[np.ndarray], np.ndarray]
+
+
+_UNIT_GRID = _Grid("pq", _FIXED_SHIFT, _unit_fixed)
+
+#: HADAMARD-rotated PQ (round 12): OPQ's learned rotation is an
+#: eigendecomposition — libm-bound, rows-only forever — but a
+#: STRUCTURED rotation attacks the same blind-slicing problem
+#: (FAISS/ScaNN both ship random/structured rotations) while staying
+#: integer-exact: every input dimension spreads across all subspaces
+#: before the integer codebook machinery runs. The rotation scales all
+#: norms by sqrt(dim) uniformly, so ADC ranking is unaffected and the
+#: exact re-rank uses the ORIGINAL vectors.
+_HADAMARD_GRID = _Grid("hpq", _HADAMARD_ROT_SHIFT, _hadamard_fixed)
 
 
 def _int_sq_dists(A: np.ndarray, B: np.ndarray) -> np.ndarray:
@@ -391,15 +522,48 @@ def _int_sq_dists(A: np.ndarray, B: np.ndarray) -> np.ndarray:
     )
 
 
-def _train_vectors_by_id(
-    corpus: DataFrame, train_sample: int
-) -> tuple[np.ndarray, np.ndarray]:
+def _int_matmul(A: np.ndarray, B: np.ndarray) -> np.ndarray:
+    """Exact integer matmul through float64 BLAS when the operands
+    allow (same 2^53 bound discipline as :func:`_int_sq_dists`)."""
+    if A.size and B.size:
+        hi = max(
+            int(np.abs(A).max(initial=0)), int(np.abs(B).max(initial=0))
+        )
+        if hi * hi * A.shape[-1] < (1 << 53):
+            return np.rint(
+                A.astype(np.float64) @ B.astype(np.float64)
+            ).astype(np.int64)
+    return A @ B
+
+
+def _nearest_cells(d: np.ndarray, n: int) -> np.ndarray:
+    """The ``n`` nearest cells per row of a (rows, cells) distance
+    matrix, nearest first, as int32; ties go to the lower cell id (the
+    oracles' ORDER BY d, cid)."""
+    if n == 1:
+        # argmin keeps the first minimum — the stable sort's tie rule
+        # without sorting every row
+        return d.argmin(axis=1).astype(np.int32)[:, None]
+    return np.argsort(d, axis=1, kind="stable")[:, :n].astype(np.int32)
+
+
+def _int_lut(G: np.ndarray, codebook: np.ndarray, shift: int) -> np.ndarray:
+    """The integer ADC table of grid vectors ``G``: per vector, the dot
+    of each SHIFT-removed (signed) subvector slice with each signed
+    codeword, flattened (8·k,) so a candidate's score is 8 lookups."""
+    sub = codebook.shape[1]
+    return _int_matmul(
+        (G - shift).reshape(len(G), 8, sub), (codebook - shift).T
+    ).reshape(len(G), -1)
+
+
+def _train_vectors_by_id(corpus: DataFrame) -> tuple[np.ndarray, np.ndarray]:
     """Deterministic training sample for md5-int quantizers: the
-    ``train_sample`` LOWEST-id vectors — unlike :func:`_train_vectors`
-    (unordered limit, fine for a float quantizer nobody replays), the
-    oracle must re-derive the exact sample, so the cut is ORDER BY id
-    LIMIT n. Same bounded-collect scale story: driver memory and scan
-    cost are capped regardless of corpus size."""
+    :data:`_TRAIN_SAMPLE` LOWEST-id vectors — unlike
+    :func:`_train_vectors` (unordered limit, fine for a float quantizer
+    nobody replays), the oracle must re-derive the exact sample, so the
+    cut is ORDER BY id LIMIT n. Same bounded-collect scale story: driver
+    memory and scan cost are capped regardless of corpus size."""
     from pyspark.sql.types import IntegralType
 
     id_type = corpus.schema["vec_id"].dataType
@@ -414,7 +578,7 @@ def _train_vectors_by_id(
         corpus.select(F.col("vec_id"), F.col("embedding"))
         .where(F.col("embedding").isNotNull())
         .orderBy(F.col("vec_id"))
-        .limit(train_sample)
+        .limit(_TRAIN_SAMPLE)
         .collect()
     )
     if not rows:
@@ -452,226 +616,100 @@ def _kmeans_int(
     return centers
 
 
-def _ivf_cell_int_udf(centers: np.ndarray, normalize: bool):
-    """Arrow-batched md5-int cell assignment: quantize the batch onto
-    the shared fixed-point grid, exact int64 argmin against the
-    integer centroids (ties -> lowest cell id, same as the oracle's
-    ORDER BY d, cid)."""
-    from pyspark.sql.functions import pandas_udf
-    from pyspark.sql.types import IntegerType
-
-    G = np.asarray(centers, dtype=np.int64)
-
-    @pandas_udf(IntegerType())
-    def cell(vectors: pd.Series) -> pd.Series:
-        X = _stack_np(vectors)
-        if normalize:
-            X = _unit_seq_np(X)
-        q = _quantize_np(X)
-        return pd.Series(
-            _int_sq_dists(q, G).argmin(axis=1).astype(np.int32)
-        )
-
-    return cell
+def _train_ivf_int(train, project, k: int, max_iter: int) -> np.ndarray:
+    """Integer IVF cells: init keys md5_60('km:id'), then integer Lloyd
+    over the ``project``-ed training sample ``train = (ids, X)``."""
+    ids, X = train
+    keys = [(_md5_h60_py(f"km:{int(i)}"), int(i)) for i in ids]
+    return _kmeans_int(project(X), keys, k, max_iter)
 
 
-def _ivf_probe_int_udf(centers: np.ndarray, nprobe: int, normalize: bool):
-    """md5-int probe: nprobe nearest integer centroids per query
-    (stable argsort == ORDER BY d, cid LIMIT nprobe)."""
-    from pyspark.sql.functions import pandas_udf
-    from pyspark.sql.types import ArrayType, IntegerType
-
-    G = np.asarray(centers, dtype=np.int64)
-
-    @pandas_udf(ArrayType(IntegerType()))
-    def probe(vectors: pd.Series) -> pd.Series:
-        X = _stack_np(vectors)
-        if normalize:
-            X = _unit_seq_np(X)
-        q = _quantize_np(X)
-        order = np.argsort(_int_sq_dists(q, G), axis=1, kind="stable")
-        return pd.Series(list(order[:, :nprobe].astype(np.int32)))
-
-    return probe
-
-
-def _pq_int_context(
-    corpus: DataFrame,
-    codebook_size: int,
-    max_iter: int,
-    dim: int | None = None,
-    train_sample: int = 1 << 16,
-    train_data: "tuple[np.ndarray, np.ndarray] | None" = None,
-):
-    """md5-int twin of :func:`_pq_context`: unit-normalize with the
-    SEQUENTIAL-order norm, quantize onto the shared fixed-point grid,
-    pool the m subvector slices of the deterministic lowest-id
-    training sample, and fit the shared codebook with integer Lloyd
-    (:func:`_kmeans_int`, init keys md5_60('pq:id:slice')). Codes are
-    exact int argmins; the ADC LUT holds INTEGER dots of the
-    SHIFT-removed (signed) quantized slices — no float enters the
-    shortlist, so a SQL oracle replays training, encoding, and
-    ranking bit-for-bit. ``train_data=(ids, X)`` shares one collect
-    with the IVFPQ cell trainer."""
-    from pyspark.sql.functions import pandas_udf
-    from pyspark.sql.types import ArrayType, IntegerType, LongType
-
-    if train_data is None:
-        train_data = _train_vectors_by_id(
-            corpus, train_sample
-        )
-    ids, X = train_data
-    if dim is None:
-        dim = X.shape[1]
-    elif dim != X.shape[1]:
-        raise ValueError(
-            f"dim={dim} but corpus vectors have {X.shape[1]} elements"
-        )
-    assert dim % 8 == 0, f"dim {dim} not divisible by m=8"
-    sub = dim // 8
-
-    QU = _quantize_np(_unit_seq_np(X))
-    pooled = QU.reshape(len(QU) * 8, sub)
+def _train_pq_int(
+    train, grid: _Grid, codebook_size: int, max_iter: int
+) -> np.ndarray:
+    """The shared integer PQ codebook: project the training sample
+    ``train = (ids, X)`` onto ``grid``, pool its 8 subvector slices and
+    fit one codebook with integer Lloyd (init keys
+    md5_60('<tag>:id:slice')). Codes are then exact int argmins and the
+    ADC table holds integer dots (:func:`_pq_int_codecs`) — no float
+    enters the shortlist, so a SQL oracle replays training, encoding
+    and ranking bit-for-bit."""
+    ids, X = train
+    sub = _subspace_width(X)
+    pooled = grid.project(X).reshape(len(X) * 8, sub)
     keys = [
-        (_md5_h60_py(f"pq:{int(i)}:{s}"), int(i) * 8 + s)
+        (_md5_h60_py(f"{grid.tag}:{int(i)}:{s}"), int(i) * 8 + s)
         for i in ids
         for s in range(8)
     ]
-    CB = _kmeans_int(pooled, keys, codebook_size, max_iter)
-    codes, lut = _pq_int_codecs(CB, sub)
-    return CB, codes, lut
+    return _kmeans_int(pooled, keys, codebook_size, max_iter)
 
 
-def _pq_int_codecs(codebook: np.ndarray, sub: int):
-    """(codes_udf, lut_udf) over a FIXED integer codebook — shared by
-    the in-line trainer above and the persisted index, whose appends
-    and serves must encode with the STORED quantizers."""
+def _pq_int_codecs(codebook: np.ndarray, grid: _Grid):
+    """(codes_udf, lut_udf) over a FIXED integer codebook on ``grid`` —
+    shared by the one-shot operators and the persisted index, whose
+    appends and serves must encode with the STORED quantizers."""
     from pyspark.sql.functions import pandas_udf
     from pyspark.sql.types import ArrayType, IntegerType, LongType
 
     CB = np.asarray(codebook, dtype=np.int64)
-    CBs = CB - _FIXED_SHIFT
+    sub = CB.shape[1]
 
     @pandas_udf(ArrayType(IntegerType()))
     def codes(vectors: pd.Series) -> pd.Series:
-        q = _quantize_np(_unit_seq_np(_stack_np(vectors)))
-        lab = _int_sq_dists(q.reshape(-1, sub), CB).argmin(axis=1)
-        return pd.Series(list(lab.reshape(-1, 8).astype(np.int32)))
+        g = grid.project(_stack_np(vectors)).reshape(-1, sub)
+        lab = _nearest_cells(_int_sq_dists(g, CB), 1)
+        return pd.Series(list(lab.reshape(-1, 8)))
 
     @pandas_udf(ArrayType(LongType()))
     def lut(vectors: pd.Series) -> pd.Series:
-        qs = (
-            _quantize_np(_unit_seq_np(_stack_np(vectors)))
-            - _FIXED_SHIFT
+        return pd.Series(
+            list(_int_lut(grid.project(_stack_np(vectors)), CB, grid.shift))
         )
-        out = _int_matmul(qs.reshape(len(qs), 8, sub), CBs.T)
-        return pd.Series(list(out.reshape(len(qs), -1)))
 
     return codes, lut
 
 
-#: Hadamard-rotation fixed-point geometry (round 12): the rotation
-#: sums 64 quantized coordinates, so the grid is 2^16 (not 2^20) and
-#: the post-rotation shift 2^23 — keeps every kernel under the 2^53
-#: BLAS-exactness bound (|rot| <= 64·2^16 = 2^22; products < 2^48,
-#: 8-term sums < 2^51)
-_HADAMARD_ROT_SCALE = float(1 << 16)
-_HADAMARD_ROT_SHIFT = 1 << 23
+def _unit_dists(centers: np.ndarray):
+    """Float cell geometry: squared L2 from unit-normalized vectors to
+    ``centers``."""
+    G = np.asarray(centers, dtype=np.float64)
+    return lambda X: _sq_dists_np(_unit_np(X), G)
 
 
-def _hadamard_signs(dim: int) -> np.ndarray:
-    """The Walsh-Hadamard sign matrix H[i][j] = (-1)^popcount(i & j)
-    — ±1, orthogonal (H·Hᵀ = dim·I), and SQL-expressible as
-    bit_count(i & j) % 2. ``dim`` must be a power of two."""
-    if dim & (dim - 1):
-        raise ValueError(f"Hadamard rotation needs power-of-two dim, got {dim}")
-    idx = np.arange(dim)
-    parity = np.vectorize(lambda x: bin(x).count("1") & 1)(
-        idx[:, None] & idx[None, :]
-    )
-    return np.where(parity == 0, 1, -1).astype(np.int64)
+def _grid_dists(centers: np.ndarray, project):
+    """Integer cell geometry: exact int64 squared L2 from the
+    ``project``-ed fixed-point vectors to ``centers``."""
+    G = np.asarray(centers, dtype=np.int64)
+    return lambda X: _int_sq_dists(project(X), G)
 
 
-def _hpq_int_context(
-    corpus: DataFrame,
-    codebook_size: int,
-    max_iter: int,
-    dim: int | None = None,
-    train_sample: int = 1 << 16,
-    train_data: "tuple[np.ndarray, np.ndarray] | None" = None,
-):
-    """HADAMARD-rotated md5-int PQ (round 12): OPQ's learned rotation
-    is an eigendecomposition — libm-bound, rows-only forever — but a
-    STRUCTURED rotation attacks the same blind-slicing problem
-    (FAISS/ScaNN both ship random/structured rotations) while staying
-    integer-exact: pre-rotate the quantized unit coordinates with the
-    ±1 Walsh-Hadamard matrix (every input dimension spreads across
-    all subspaces), then run the proven integer codebook/codes/ADC
-    machinery on the rotated integers. The rotation scales all norms
-    by sqrt(dim) uniformly, so ADC ranking is unaffected and the
-    exact re-rank uses the ORIGINAL vectors. Fully SQL-replayable:
-    the sign matrix is bit_count(i & j) parity."""
+def _ivf_cell_udf(dists):
+    """Arrow-batched IVF cell assignment: each vector's nearest cell
+    under ``dists`` (batch -> (rows, cells) distances) — one matmul per
+    batch instead of a per-row nested-lambda argmin expression
+    (interpreted, ~µs/element)."""
     from pyspark.sql.functions import pandas_udf
-    from pyspark.sql.types import ArrayType, IntegerType, LongType
+    from pyspark.sql.types import IntegerType
 
-    if train_data is None:
-        train_data = _train_vectors_by_id(
-            corpus, train_sample
-        )
-    ids, X = train_data
-    if dim is None:
-        dim = X.shape[1]
-    elif dim != X.shape[1]:
-        raise ValueError(
-            f"dim={dim} but corpus vectors have {X.shape[1]} elements"
-        )
-    assert dim % 8 == 0, f"dim {dim} not divisible by m=8"
-    sub = dim // 8
-    H = _hadamard_signs(dim)
+    @pandas_udf(IntegerType())
+    def cell(vectors: pd.Series) -> pd.Series:
+        return pd.Series(_nearest_cells(dists(_stack_np(vectors)), 1)[:, 0])
 
-    def rot_shifted(batch: np.ndarray) -> np.ndarray:
-        qs = np.floor(
-            _unit_seq_np(batch) * _HADAMARD_ROT_SCALE
-        ).astype(np.int64)
-        return _int_matmul(qs, H) + _HADAMARD_ROT_SHIFT
+    return cell
 
-    R = rot_shifted(X)
-    pooled = R.reshape(len(R) * 8, sub)
-    keys = [
-        (_md5_h60_py(f"hpq:{int(i)}:{s}"), int(i) * 8 + s)
-        for i in ids
-        for s in range(8)
-    ]
-    CB = _kmeans_int(pooled, keys, codebook_size, max_iter)
-    CBs = CB - _HADAMARD_ROT_SHIFT
+
+def _ivf_probe_udf(dists, nprobe: int):
+    """Arrow-batched IVF probe: the ``nprobe`` nearest cells per vector
+    under ``dists``, nearest first, ties to the lower cell id."""
+    from pyspark.sql.functions import pandas_udf
+    from pyspark.sql.types import ArrayType, IntegerType
 
     @pandas_udf(ArrayType(IntegerType()))
-    def codes(vectors: pd.Series) -> pd.Series:
-        r = rot_shifted(_stack_np(vectors))
-        lab = _int_sq_dists(r.reshape(-1, sub), CB).argmin(axis=1)
-        return pd.Series(list(lab.reshape(-1, 8).astype(np.int32)))
+    def probe(vectors: pd.Series) -> pd.Series:
+        return pd.Series(list(_nearest_cells(dists(_stack_np(vectors)), nprobe)))
 
-    @pandas_udf(ArrayType(LongType()))
-    def lut(vectors: pd.Series) -> pd.Series:
-        rs = rot_shifted(_stack_np(vectors)) - _HADAMARD_ROT_SHIFT
-        out = _int_matmul(rs.reshape(len(rs), 8, sub), CBs.T)
-        return pd.Series(list(out.reshape(len(rs), -1)))
-
-    return CB, codes, lut
-
-
-def _int_matmul(A: np.ndarray, B: np.ndarray) -> np.ndarray:
-    """Exact integer matmul through float64 BLAS when the operands
-    allow (same 2^53 bound discipline as :func:`_int_sq_dists`)."""
-    if A.size and B.size:
-        hi = max(
-            int(np.abs(A).max(initial=0)), int(np.abs(B).max(initial=0))
-        )
-        if hi * hi * A.shape[-1] < (1 << 53):
-            return np.rint(
-                A.astype(np.float64) @ B.astype(np.float64)
-            ).astype(np.int64)
-    return A @ B
+    return probe
 
 
 def _opq_rotation(train_X: np.ndarray, m: int) -> np.ndarray:
@@ -685,10 +723,10 @@ def _opq_rotation(train_X: np.ndarray, m: int) -> np.ndarray:
     rest encode noise). The rotation is orthonormal, so cosine/L2
     geometry — and the exact re-rank — are untouched; only the code
     assignment improves. Returns R with the convention
-    ``rotated = x @ R`` (columns are the permuted eigenvectors)."""
+    ``rotated = x @ R`` (columns are the permuted eigenvectors).
+    The sample's width must divide into ``m``."""
     X = _unit_np(np.asarray(train_X, dtype=np.float64))
     d = X.shape[1]
-    assert d % m == 0
     sub = d // m
     mean = X.mean(axis=0)
     cov = (X - mean).T @ (X - mean) / max(1, len(X))
@@ -721,137 +759,58 @@ def _opq_rotation(train_X: np.ndarray, m: int) -> np.ndarray:
     return np.ascontiguousarray(evecs[:, perm])
 
 
-def _pq_codes_udf(codebook: np.ndarray, sub: int, R: np.ndarray):
-    """Arrow-batched PQ encode: unit-normalize, rotate,
-    slice into ``m`` subvectors, argmin against the closure codebook —
-    one (n·m, sub) @ (sub, k) matmul per batch (the sanctioned
-    pandas-UDF case, same rationale as
-    :func:`_md5_bucket_signatures`)."""
-    from pyspark.sql.functions import pandas_udf
-    from pyspark.sql.types import ArrayType, IntegerType
+def _pq_context(train_X: np.ndarray, max_iter: int):
+    """Train the shared OPQ-rotated float PQ codebook on the
+    driver-side sample ``train_X`` and return ``(codes_udf, lut_udf)``:
+    the Arrow-batched argmin encode and the per-query lookup table
+    (the dot of every rotated subvector slice with every codeword,
+    flattened (8·k,)). One small fit instead of an MLlib fit whose
+    per-iteration scheduling cost dwarfs the math.
 
-    C = np.asarray(codebook, dtype=np.float64)
+    Encode and LUT are pandas UDFs, not higher-order-function
+    expressions, for the same measured reason as
+    :func:`_md5_bucket_signatures`: the pure-expression encode is
+    m × codebook_size nested lambda folds evaluated interpreted per
+    row (plus a per-element norm recompute inside the normalize
+    lambda) — ~15 s for 2k × 64-dim vectors vs milliseconds for one
+    (n·m, sub) @ (sub, k) matmul per Arrow batch. The codebook rides
+    the closure (a few KB), not a crossJoined relation."""
+    from pyspark.sql.functions import pandas_udf
+    from pyspark.sql.types import ArrayType, DoubleType, IntegerType
+
+    sub = _subspace_width(train_X)
+    # ONE shared-codebook fit over all pooled m·n subvector slices of
+    # the rotated unit-normalized training sample; reshape(-1, sub)
+    # lays the m slices of each row out consecutively — same pooling
+    # an explode would produce. Cap the pooled set so the Lloyd
+    # distance matrix stays small even at the full _TRAIN_SAMPLE.
+    # The OPQ rotation decorrelates + balances variance across the m
+    # subspaces BEFORE pooling, so the shared codebook trains on the
+    # same geometry the encode path will see; it is fully
+    # deterministic from the training sample (mean/cov/eigh + greedy
+    # allocation) — deliberately NOT seed-controlled
+    R = _opq_rotation(train_X, 8)
+    pooled = (_unit_np(train_X) @ R).reshape(-1, sub)
+    pool_cap = 1 << 17
+    if len(pooled) > pool_cap:
+        idx = np.random.RandomState(42).choice(
+            len(pooled), size=pool_cap, replace=False
+        )
+        pooled = pooled[idx]
+    C = _kmeans_np(pooled, 64, 42, max_iter)
 
     @pandas_udf(ArrayType(IntegerType()))
     def codes(vectors: pd.Series) -> pd.Series:
         X = _unit_np(_stack_np(vectors)) @ R
-        lab = _sq_dists_np(X.reshape(-1, sub), C).argmin(axis=1)
-        return pd.Series(list(lab.reshape(-1, 8).astype(np.int32)))
-
-    return codes
-
-
-def _pq_lut_udf(codebook: np.ndarray, sub: int, R: np.ndarray):
-    """Arrow-batched ADC lookup table: for each query, the dot of every
-    rotated subvector slice with every codebook entry — flattened
-    (m·k,) so a candidate's score is ``m`` element_at adds."""
-    from pyspark.sql.functions import pandas_udf
-    from pyspark.sql.types import ArrayType, DoubleType
-
-    C = np.asarray(codebook, dtype=np.float64)
+        lab = _nearest_cells(_sq_dists_np(X.reshape(-1, sub), C), 1)
+        return pd.Series(list(lab.reshape(-1, 8)))
 
     @pandas_udf(ArrayType(DoubleType()))
     def lut(vectors: pd.Series) -> pd.Series:
         X = _unit_np(_stack_np(vectors)) @ R
-        out = (X.reshape(len(X), 8, sub) @ C.T).reshape(len(X), -1)
-        return pd.Series(list(out))
+        return pd.Series(list((X.reshape(len(X), 8, sub) @ C.T).reshape(len(X), -1)))
 
-    return lut
-
-
-def _ivf_cell_udf(centroids: np.ndarray):
-    """Arrow-batched IVF cell assignment in unit space: argmin distance
-    to the closure centroids — the corpus-side replacement for a per-row
-    nested-lambda argmin expression (interpreted, ~µs/element) with
-    one matmul per batch."""
-    from pyspark.sql.functions import pandas_udf
-    from pyspark.sql.types import IntegerType
-
-    G = np.asarray(centroids, dtype=np.float64)
-
-    @pandas_udf(IntegerType())
-    def cell(vectors: pd.Series) -> pd.Series:
-        X = _unit_np(_stack_np(vectors))
-        return pd.Series(_sq_dists_np(X, G).argmin(axis=1).astype(np.int32))
-
-    return cell
-
-
-def _sqdist_lit(vec, center) -> "F.Column":
-    """Squared L2 distance from an array column to a literal centroid
-    (constant-folded weights, JVM execution, no UDF)."""
-    return F.aggregate(
-        F.zip_with(
-            vec,
-            F.array(*[F.lit(float(w)) for w in center]),
-            lambda x, w: (x.cast("double") - w) * (x.cast("double") - w),
-        ),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-
-
-def _probe_cells_col(vec, centroids: list[list[float]], nprobe: int):
-    """The query side of IVF: the ``nprobe`` nearest cell ids as an
-    array column ((dist, cell) structs → array_sort orders by first
-    field → slice → project the cell). Ties order by cell asc (struct
-    comparison falls through to the second field)."""
-    cells = F.array(
-        *[
-            F.struct(_sqdist_lit(vec, c).alias("d"), F.lit(i).alias("cell"))
-            for i, c in enumerate(centroids)
-        ]
-    )
-    return F.transform(F.slice(F.array_sort(cells), 1, nprobe), lambda s: s.cell)
-
-
-#: above this many embedded literals (num_centroids × dim), the probe
-#: expression tree itself becomes the bottleneck (Catalyst analysis +
-#: interpreted eval scale with tree size) — switch to the Arrow probe
-_PROBE_LITERAL_CAP = 4096
-
-
-def _ivf_probe_udf(centroids: np.ndarray, nprobe: int):
-    """Arrow-batched probe for large centroid tables: nprobe nearest
-    cells per unit-normalized query via one matmul + stable argsort
-    (ties order by cell asc — same contract as
-    :func:`_probe_cells_col`)."""
-    from pyspark.sql.functions import pandas_udf
-    from pyspark.sql.types import ArrayType, IntegerType
-
-    G = np.asarray(centroids, dtype=np.float64)
-
-    @pandas_udf(ArrayType(IntegerType()))
-    def probe(vectors: pd.Series) -> pd.Series:
-        X = _unit_np(_stack_np(vectors))
-        order = np.argsort(_sq_dists_np(X, G), axis=1, kind="stable")
-        return pd.Series(list(order[:, :nprobe].astype(np.int32)))
-
-    return probe
-
-
-def _probe_cells(vec, centers: np.ndarray, nprobe: int):
-    """Adaptive IVF probe in unit space: the literal JVM expression for
-    small centroid tables (no Python worker round-trip for a tiny query
-    side), the Arrow matmul above :data:`_PROBE_LITERAL_CAP`. The
-    caller passes the RAW vector column; normalization happens inside
-    either branch."""
-    if centers.size <= _PROBE_LITERAL_CAP:
-        n = _norm(vec)
-        vec = F.transform(
-            vec,
-            lambda x: F.when(n > 0, x.cast("double") / n).otherwise(0.0),
-        )
-        return _probe_cells_col(vec, centers.tolist(), nprobe)
-    return _ivf_probe_udf(centers, nprobe)(vec)
-
-
-#: fixed-point scale for md5-mode signatures: quantizing each
-#: coordinate with ONE IEEE multiply + floor makes every plane dot an
-#: exact int64 sum — order-independent, so numpy matmul here equals
-#: DuckDB's list fold bit-for-bit (the round-10 md5-60 MinHash trick,
-#: extended to float-embedding LSH)
-_MD5_PLANE_SCALE = float(1 << 20)
+    return codes, lut
 
 
 def _md5_sign_planes(num_planes: int, dim: int) -> "np.ndarray":
@@ -875,10 +834,13 @@ def _md5_bucket_signatures(
     num_tables: int, planes_per_table: int, dim: int
 ):
     """Integer-exact all-tables signature column: coordinates
-    quantized to fixed-point int64, dots an int64 matmul against the
-    ±1 plane matrix (associative — no float order hazard), bucket =
-    Σ 2^i·(dot_i > 0) per table. Every step is replayable in ANSI SQL,
-    which is what makes the LSH queries hash-oracled.
+    quantized to fixed-point int64 (:data:`_FIXED_SCALE`, unshifted:
+    quantizing with ONE IEEE multiply + floor makes every plane dot an
+    exact int64 sum — order-independent, so numpy matmul here equals
+    DuckDB's list fold bit-for-bit), dots an int64 matmul against the
+    ±1 plane matrix, bucket = Σ 2^i·(dot_i > 0) per table. Every step
+    is replayable in ANSI SQL, which is what makes the LSH queries
+    hash-oracled.
 
     One Arrow-batched matmul computes every table's bucket per vector.
     A pure-expression alternative (one column expression per table)
@@ -894,10 +856,7 @@ def _md5_bucket_signatures(
 
     @pandas_udf(ArrayType(LongType()))
     def buckets(vectors: pd.Series) -> pd.Series:
-        stacked = np.vstack(
-            [np.asarray(v, dtype=np.float64) for v in vectors]
-        )
-        q = np.floor(stacked * _MD5_PLANE_SCALE).astype(np.int64)
+        q = np.floor(_stack_np(vectors) * _FIXED_SCALE).astype(np.int64)
         bits = (q @ signs.T) > 0  # (n, T*r), exact integer dots
         per_table = [
             bits[:, t * planes_per_table : (t + 1) * planes_per_table]
@@ -966,30 +925,27 @@ def cosine_topk_ivf(
     and brute-forces only within them.
 
     The scale shape: centroids are trained on a bounded driver-side
-    sample (:func:`_train_vectors` — quantizer geometry converges long
-    before the corpus is exhausted; training distributed pays
-    per-iteration scheduling that dwarfs the math) and folded into the
-    plan as literals; the corpus is scanned ONCE, assigning each vector
-    its cell with a closed-form argmin — no ML model state on
+    sample (:func:`_train_vectors_by_id` — quantizer geometry converges
+    long before the corpus is exhausted; training distributed pays
+    per-iteration scheduling that dwarfs the math) and ride the cell
+    and probe UDF closures; the corpus is scanned ONCE, assigning each
+    vector its cell with a closed-form argmin — no ML model state on
     executors, ever. Per query the candidate set shrinks by
     ~nprobe/num_centroids.
 
     The k-means is md5-seeded and FIXED-POINT integer
-    (:func:`_kmeans_int`): training, cell assignment, and probes are
-    engine-exact integer relations a SQL oracle replays."""
+    (:func:`_train_ivf_int`) on the raw (unnormalized) vectors:
+    training, cell assignment, and probes are engine-exact integer
+    relations a SQL oracle replays."""
     from .text import spread_small_input
 
-    ids, X = _train_vectors_by_id(corpus, 1 << 16)
-    keys = [(_md5_h60_py(f"km:{i}"), int(i)) for i in ids]
-    centers = _kmeans_int(_quantize_np(X), keys, num_centroids, max_iter)
-    cell_udf = _ivf_cell_int_udf(centers, normalize=False)
+    centers = _train_ivf_int(
+        _train_vectors_by_id(corpus), _quantize_np, num_centroids, max_iter
+    )
+    dists = _grid_dists(centers, _quantize_np)
     # spread narrow inputs so the Arrow cell-assign batches use every
     # core (same rationale as lsh_table_buckets)
-    assigned = spread_small_input(
-        corpus.select(
-            F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("cv")
-        )
-    ).select(
+    assigned = spread_small_input(_as_corpus(corpus)).select(
         "neighbor_id",
         "cv",
         # coalesce makes the join key non-nullable (the UDF never
@@ -998,37 +954,18 @@ def cosine_topk_ivf(
         # runs the cell assignment TWICE (two stacked ArrowEvalPython
         # stages over the full corpus); plan pinned in
         # tests/test_plan_quality.py
-        F.coalesce(cell_udf(F.col("cv")), F.lit(-1)).alias("cell"),
+        F.coalesce(_ivf_cell_udf(dists)(F.col("cv")), F.lit(-1)).alias("cell"),
     )
-    probe_col = _ivf_probe_int_udf(centers, nprobe, normalize=False)(
-        F.col("qv")
+    probes = _as_queries(queries).select(
+        "query_id",
+        "qv",
+        F.explode(_ivf_probe_udf(dists, nprobe)(F.col("qv"))).alias("cell"),
     )
-    probes = (
-        queries.select(F.col("vec_id").alias("query_id"), F.col("embedding").alias("qv"))
-        .select(
-            "query_id",
-            "qv",
-            F.explode(probe_col).alias("cell"),
-        )
-    )
-    qn = with_norm(probes, "qv").withColumnRenamed("_norm", "qn")
-    cn = with_norm(assigned, "cv").withColumnRenamed("_norm", "cn")
-    pairs = (
-        cn.join(F.broadcast(qn), "cell")
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            (_dot(F.col("qv"), F.col("cv")) / (F.col("qn") * F.col("cn"))).alias(
-                "cosine"
-            ),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return (
-        pairs.withColumn("rank", F.row_number().over(w).cast("bigint"))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", F.round("cosine", 4).alias("cosine"), "rank")
+    cn = with_norm(assigned, "cv", "cn")
+    qn = with_norm(probes, "qv", "qn")
+    return _topk(
+        _scored(cn.join(F.broadcast(qn), "cell"), _cosine("q", "c").alias("cosine")),
+        k,
     )
 
 
@@ -1051,24 +988,11 @@ def cosine_topk_lsh(
     replays (see :func:`_md5_bucket_signatures`)."""
     signature = _md5_bucket_signatures(num_tables, planes_per_table, dim)
     q = lsh_table_buckets(
-        queries.select(
-            F.col("vec_id").alias("query_id"), F.col("embedding").alias("qv")
-        ),
-        "query_id",
-        "qv",
-        signature,
-        spread=False,
+        _as_queries(queries), "query_id", "qv", signature, spread=False
     )
-    c = lsh_table_buckets(
-        corpus.select(
-            F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("cv")
-        ),
-        "neighbor_id",
-        "cv",
-        signature,
-    )
-    qn = with_norm(q, "qv").withColumnRenamed("_norm", "qn")
-    cn = with_norm(c, "cv").withColumnRenamed("_norm", "cn")
+    c = lsh_table_buckets(_as_corpus(corpus), "neighbor_id", "cv", signature)
+    qn = with_norm(q, "qv", "qn")
+    cn = with_norm(c, "cv", "cn")
     # cosine is computed per COLLISION row (before dedup): a pair
     # colliding in several tables computes the same dot a few extra
     # times (64 mults each — trivial), but the multi-table dedup then
@@ -1076,93 +1000,27 @@ def cosine_topk_lsh(
     # instead of two 64-dim vectors (~1 KB/row). max() is an exact
     # dedup because duplicate rows carry identical cosines.
     pairs = (
-        cn.join(F.broadcast(qn), ["table", "bucket"])
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            (
-                _dot(F.col("qv"), F.col("cv")) / (F.col("qn") * F.col("cn"))
-            ).alias("cosine"),
+        _scored(
+            cn.join(F.broadcast(qn), ["table", "bucket"]),
+            _cosine("q", "c").alias("cosine"),
         )
         .groupBy("query_id", "neighbor_id")
         .agg(F.max("cosine").alias("cosine"))
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return (
-        pairs.withColumn("rank", F.row_number().over(w).cast("bigint"))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", F.round("cosine", 4).alias("cosine"), "rank")
-    )
+    return _topk(pairs, k)
 
 
-def _pq_context(
-    train_X: np.ndarray,
-    max_iter: int,
-    dim: int | None = None,
-):
-    """Train the shared OPQ-rotated PQ codebook on the driver-side
-    sample ``train_X`` (collected once by the caller and shared with
-    the cell trainer) and return ``(codebook, codes_udf, lut_udf)``:
-    the Arrow-batched argmin encode and the per-query lookup table.
-    One small fit instead of an MLlib fit whose per-iteration
-    scheduling cost dwarfs the math. ``dim`` defaults to the sample's
-    width; pass it to assert an expectation.
-
-    Encode and LUT are pandas UDFs, not higher-order-function
-    expressions, for the same measured reason as
-    :func:`_md5_bucket_signatures`: the pure-expression encode is
-    m × codebook_size nested lambda folds evaluated interpreted per
-    row (plus a per-element norm recompute inside the normalize
-    lambda) — ~15 s for 2k × 64-dim vectors vs milliseconds for one
-    (n·m, sub) @ (sub, k) matmul per Arrow batch. The codebook rides
-    the closure (a few KB), not a crossJoined relation."""
-    if dim is None:
-        dim = train_X.shape[1]
-    elif dim != train_X.shape[1]:
-        raise ValueError(
-            f"dim={dim} but corpus vectors have {train_X.shape[1]} elements"
-        )
-    assert dim % 8 == 0, f"dim {dim} not divisible by m=8"
-    sub = dim // 8
-
-    # ONE shared-codebook fit over all pooled m·n subvector slices of
-    # the rotated unit-normalized training sample; reshape(-1, sub)
-    # lays the m slices of each row out consecutively — same pooling
-    # an explode would produce. Cap the pooled set so the Lloyd
-    # distance matrix stays small even at the full train_sample.
-    # The OPQ rotation decorrelates + balances variance across the m
-    # subspaces BEFORE pooling, so the shared codebook trains on the
-    # same geometry the encode path will see; it is fully
-    # deterministic from the training sample (mean/cov/eigh + greedy
-    # allocation) — deliberately NOT seed-controlled
-    R = _opq_rotation(train_X, 8)
-    pooled = (_unit_np(train_X) @ R).reshape(-1, sub)
-    pool_cap = 1 << 17
-    if len(pooled) > pool_cap:
-        idx = np.random.RandomState(42).choice(
-            len(pooled), size=pool_cap, replace=False
-        )
-        pooled = pooled[idx]
-    codebook = _kmeans_np(pooled, 64, 42, max_iter)
-    return (
-        codebook,
-        _pq_codes_udf(codebook, sub, R),
-        _pq_lut_udf(codebook, sub, R),
-    )
-
-
-def _adc_score(codes_col, m: int, codebook_size: int):
-    """The ADC score of a (codes, lut) pair: the sum of ``m`` LUT
-    lookups, unrolled and lambda-free — whole-stage codegen keeps the
-    per-pair hot loop JVM-compiled (this runs once per candidate pair,
-    the widest relation in the plan)."""
+def _adc_score(codes_col):
+    """The ADC score of a (codes, lut) pair: the sum of 8 LUT lookups
+    (64 codewords per subspace), unrolled and lambda-free — whole-stage
+    codegen keeps the per-pair hot loop JVM-compiled (this runs once per
+    candidate pair, the widest relation in the plan)."""
     terms = [
         F.element_at(
             F.col("lut"),
-            F.lit(j * codebook_size + 1) + F.element_at(codes_col, j + 1),
+            F.lit(j * 64 + 1) + F.element_at(codes_col, j + 1),
         )
-        for j in range(m)
+        for j in range(8)
     ]
     total = terms[0]
     for t in terms[1:]:
@@ -1170,37 +1028,25 @@ def _adc_score(codes_col, m: int, codebook_size: int):
     return total
 
 
-def _adc_shortlist_rerank(
-    pairs: DataFrame,
-    corpus: DataFrame,
-    queries: DataFrame,
+def _adc_rerank(
+    candidates: DataFrame,
+    corpus_vecs: DataFrame,
+    query_vecs: DataFrame,
     k: int,
 ) -> DataFrame:
-    """Standard PQ second stage: the quantized ADC score only
-    SHORTLISTS (``k × 10`` per query); exact cosine
-    re-ranks the shortlist — quantization noise decides nothing final,
-    and the exact math runs on k×factor rows per query, not the
-    corpus. ``pairs`` must carry (query_id, neighbor_id, adc_score)."""
-    w_adc = Window.partitionBy("query_id").orderBy(
-        F.desc("adc_score"), F.asc("neighbor_id")
-    )
-    short = (
-        pairs.withColumn("_arank", F.row_number().over(w_adc))
-        .filter(F.col("_arank") <= k * 10)
-        .select("query_id", "neighbor_id")
-    )
-    cn = with_norm(
-        corpus.select(
-            F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("cv")
-        ),
-        "cv",
-    ).withColumnRenamed("_norm", "cn")
-    qn = with_norm(
-        queries.select(
-            F.col("vec_id").alias("query_id"), F.col("embedding").alias("qv")
-        ),
-        "qv",
-    ).withColumnRenamed("_norm", "qn")
+    """Standard PQ second stage: the ADC score of each candidate
+    (query_id, neighbor_id, codes, lut) row only SHORTLISTS (``k × 10``
+    per query); exact cosine over ``corpus_vecs`` (neighbor_id, cv) and
+    ``query_vecs`` (query_id, qv) re-ranks the shortlist — quantization
+    noise decides nothing final, and the exact math runs on k×factor
+    rows per query, not the corpus."""
+    short = _ranked(
+        _scored(candidates, _adc_score(F.col("codes")).alias("adc_score")),
+        "adc_score",
+        k * 10,
+    ).select("query_id", "neighbor_id")
+    cn = with_norm(corpus_vecs, "cv", "cn")
+    qn = with_norm(query_vecs, "qv", "qn")
     reranked = (
         # the shortlist is queries × k × factor rows — broadcast it so
         # the corpus re-read streams map-side instead of sort-merging
@@ -1208,27 +1054,9 @@ def _adc_shortlist_rerank(
         # already be right)
         cn.join(F.broadcast(short), "neighbor_id")
         .join(F.broadcast(qn), "query_id")
-        .select(
-            "query_id",
-            "neighbor_id",
-            (
-                _dot(F.col("qv"), F.col("cv")) / (F.col("qn") * F.col("cn"))
-            ).alias("cosine"),
-        )
+        .select("query_id", "neighbor_id", _cosine("q", "c").alias("cosine"))
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cosine"), F.asc("neighbor_id")
-    )
-    return (
-        reranked.withColumn("rank", F.row_number().over(w).cast("bigint"))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round("cosine", 4).alias("cosine"),
-            "rank",
-        )
-    )
+    return _topk(reranked, k)
 
 
 def cosine_topk_pq(
@@ -1236,7 +1064,6 @@ def cosine_topk_pq(
     queries: DataFrame,
     k: int = 5,
     max_iter: int = 5,
-    dim: int | None = None,
     rotate: bool = False,
 ) -> DataFrame:
     """Product-quantization ANN with ADC (asymmetric distance
@@ -1251,10 +1078,10 @@ def cosine_topk_pq(
     shared-codebook k-means over all pooled subvector slices of a
     bounded driver-side sample (a single fit instead of 8 — a
     standard PQ simplification; see :func:`_train_vectors_by_id`),
-    md5-seeded integer Lloyd (:func:`_pq_int_context`) so a SQL oracle
+    md5-seeded integer Lloyd (:func:`_train_pq_int`) so a SQL oracle
     replays training, encoding and the shortlist; ``rotate=True``
     pre-rotates with the ±1 Walsh-Hadamard matrix
-    (:func:`_hpq_int_context`). The codebook rides the UDF closure (a
+    (:data:`_HADAMARD_GRID`). The codebook rides the UDF closure (a
     few KB); encode/LUT are Arrow-batched matmuls and the per-pair ADC
     score is a lambda-free codegen-able sum — no ML model call at
     scoring time, no per-row Python in the pair loop. The 100 TB win:
@@ -1268,32 +1095,34 @@ def cosine_topk_pq(
     """
     from .text import spread_small_input
 
-    ctx = _hpq_int_context if rotate else _pq_int_context
-    _, codes_udf, lut_udf = ctx(
-        corpus, 64, max_iter, dim=dim
+    grid = _HADAMARD_GRID if rotate else _UNIT_GRID
+    codes_udf, lut_udf = _pq_int_codecs(
+        _train_pq_int(_train_vectors_by_id(corpus), grid, 64, max_iter), grid
     )
-    coded = spread_small_input(
-        corpus.select(
-            F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("cv")
-        )
-    ).select("neighbor_id", codes_udf(F.col("cv")).alias("codes"))
-    q = queries.select(
-        F.col("vec_id").alias("query_id"),
-        lut_udf(F.col("embedding")).alias("lut"),
+    coded = spread_small_input(_as_corpus(corpus)).select(
+        "neighbor_id", codes_udf(F.col("cv")).alias("codes")
     )
-    pairs = (
-        coded.crossJoin(F.broadcast(q))
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            _adc_score(F.col("codes"), 8, 64).alias(
-                "adc_score"
-            ),
-        )
+    q = _as_queries(queries).select("query_id", lut_udf(F.col("qv")).alias("lut"))
+    return _adc_rerank(
+        coded.crossJoin(F.broadcast(q)), _as_corpus(corpus), _as_queries(queries), k
     )
-    return _adc_shortlist_rerank(
-        pairs, corpus, queries, k
+
+
+def _encode_ivfpq(corpus: DataFrame, cell_udf, codes_udf) -> DataFrame:
+    """(id, vector, cell, codes): the corpus encoded in ONE pass — the
+    cell and codes UDFs run in the same ArrowEvalPython stage."""
+    from .text import spread_small_input
+
+    return spread_small_input(
+        corpus.select(F.col("vec_id").alias("id"), F.col("embedding").alias("vector"))
+    ).select(
+        "id",
+        "vector",
+        # non-nullable join key — see cosine_topk_ivf: keeps both UDFs
+        # in ONE ArrowEvalPython stage instead of an extra full-corpus
+        # cell pass under the join's null filter
+        F.coalesce(cell_udf(F.col("vector")), F.lit(-1)).alias("cell"),
+        codes_udf(F.col("vector")).alias("codes"),
     )
 
 
@@ -1303,7 +1132,6 @@ def cosine_topk_ivfpq(
     k: int = 5,
     nprobe: int = 4,
     max_iter: int = 5,
-    dim: int | None = None,
     rotate: bool = False,
 ) -> DataFrame:
     """IVF + PQ — the canonical billion-scale ANN pipeline, composed
@@ -1320,86 +1148,49 @@ def cosine_topk_ivfpq(
       ``k × 10``; exact cosine decides the final top-k.
 
     Cell centroids and the PQ codebook are both trained driver-side on
-    one shared bounded sample (:func:`_train_vectors` — collected
-    once, fed to both quantizers) and folded into the plan — the
-    scoring join has no ML state, no Python, no UDFs; the corpus is
-    scanned ONCE, producing (cell, codes) per vector. Approximate by
-    design (recall floor pinned in tests/test_llm_similarity.py);
-    recall knob: ``nprobe`` (cell coverage).
+    one bounded sample (collected once, fed to both quantizers) and
+    ride the UDF closures — the scoring join has no ML state and no
+    Python; the corpus is scanned ONCE, producing (cell, codes) per
+    vector. Approximate by design (recall floor pinned in
+    tests/test_llm_similarity.py); recall knob: ``nprobe`` (cell
+    coverage).
 
     Unrotated, both quantizers are md5-seeded integer Lloyd on one
-    fixed-point grid (:func:`_pq_int_context`, :func:`_kmeans_int`),
-    so a SQL oracle replays the whole compose. ``rotate=True`` is OPQ
-    (:func:`_opq_rotation`): float quantizers seeded by 42, since
-    the learned rotation is an eigendecomposition no SQL replays.
+    fixed-point grid (:func:`_train_ivf_int`, :func:`_train_pq_int` on
+    the :func:`_train_vectors_by_id` sample), so a SQL oracle replays
+    the whole compose; :mod:`.index` persists exactly this form.
+    ``rotate=True`` is OPQ (:func:`_opq_rotation`): float quantizers
+    seeded by 42 on the :func:`_train_vectors` sample, since the
+    learned rotation is an eigendecomposition no SQL replays.
     """
-    from .text import spread_small_input
-
     if rotate:
-        train_X = _train_vectors(corpus, 1 << 16)
-        _, codes_udf, lut_udf = _pq_context(
-            train_X, max_iter, dim=dim
-        )
+        train_X = _train_vectors(corpus)
+        codes_udf, lut_udf = _pq_context(train_X, max_iter)
         # IVF cells on the unit vectors (cosine geometry)
-        centers = _kmeans_np(
-            _unit_np(train_X), 16, 42, max_iter
-        )
-        cell_udf = _ivf_cell_udf(centers)
-        probe_col = _probe_cells(F.col("qv"), centers, nprobe)
+        dists = _unit_dists(_kmeans_np(_unit_np(train_X), 16, 42, max_iter))
     else:
-        ids, X = _train_vectors_by_id(corpus, 1 << 16)
-        _, codes_udf, lut_udf = _pq_int_context(
-            corpus, 64, max_iter, dim=dim, train_data=(ids, X)
+        train = _train_vectors_by_id(corpus)
+        codes_udf, lut_udf = _pq_int_codecs(
+            _train_pq_int(train, _UNIT_GRID, 64, max_iter), _UNIT_GRID
         )
         # IVF cells on the QUANTIZED unit vectors (cosine geometry,
         # integer Lloyd — same grid as the PQ codebook)
-        keys = [(_md5_h60_py(f"km:{int(i)}"), int(i)) for i in ids]
-        centers = _kmeans_int(
-            _quantize_np(_unit_seq_np(X)), keys, 16, max_iter
+        dists = _grid_dists(
+            _train_ivf_int(train, _unit_fixed, 16, max_iter), _unit_fixed
         )
-        cell_udf = _ivf_cell_int_udf(centers, normalize=True)
-        probe_col = _ivf_probe_int_udf(centers, nprobe, normalize=True)(
-            F.col("qv")
-        )
-
-    # corpus side: Arrow-batched cell assignment + PQ codes in ONE pass
-    # over the corpus (both UDFs run in the same ArrowEvalPython stage)
-    coded = spread_small_input(
-        corpus.select(
-            F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("cv")
-        )
-    ).select(
-        "neighbor_id",
-        # non-nullable join key — see cosine_topk_ivf: keeps both UDFs
-        # in ONE ArrowEvalPython stage instead of an extra full-corpus
-        # cell pass under the join's null filter
-        F.coalesce(cell_udf(F.col("cv")), F.lit(-1)).alias("cell"),
-        codes_udf(F.col("cv")).alias("codes"),
+    coded = _encode_ivfpq(corpus, _ivf_cell_udf(dists), codes_udf).select(
+        F.col("id").alias("neighbor_id"), "cell", "codes"
     )
-
     # query side: nprobe nearest cells (probed in unit space — cell
     # geometry is cosine) + the ADC LUT, in one pass
-    probes = (
-        queries.select(
-            F.col("vec_id").alias("query_id"), F.col("embedding").alias("qv")
-        )
-        .select(
-            "query_id",
-            lut_udf(F.col("qv")).alias("lut"),
-            F.explode(probe_col).alias("cell"),
-        )
+    probes = _as_queries(queries).select(
+        "query_id",
+        lut_udf(F.col("qv")).alias("lut"),
+        F.explode(_ivf_probe_udf(dists, nprobe)(F.col("qv"))).alias("cell"),
     )
-    pairs = (
-        coded.join(F.broadcast(probes), "cell")
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            _adc_score(F.col("codes"), 8, 64).alias(
-                "adc_score"
-            ),
-        )
-    )
-    return _adc_shortlist_rerank(
-        pairs, corpus, queries, k
+    return _adc_rerank(
+        coded.join(F.broadcast(probes), "cell"),
+        _as_corpus(corpus),
+        _as_queries(queries),
+        k,
     )

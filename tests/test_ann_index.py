@@ -28,7 +28,7 @@ def test_index_query_equals_oneshot_operator(spark, emb, tmp_path):
     )
     want = sorted(
         map(tuple, S.cosine_topk_ivfpq(
-            emb, queries, k=5, nprobe=6, dim=64, max_iter=3
+            emb, queries, k=5, nprobe=6, max_iter=3
         ).collect())
     )
     assert got == want

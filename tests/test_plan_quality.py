@@ -242,7 +242,7 @@ class TestAnnPlans:
 
         corpus = self._corpus(spark)
         out = S.cosine_topk_pq(
-            corpus, corpus.filter(F.col("vec_id") < 5), k=3, dim=64
+            corpus, corpus.filter(F.col("vec_id") < 5), k=3
         )
         plan = self._plan(out)
         # corpus codes + query lut: exactly two Arrow stages
@@ -261,7 +261,6 @@ class TestAnnPlans:
         corpus = self._corpus(spark)
         out = S.cosine_topk_ivfpq(
             corpus, corpus.filter(F.col("vec_id") < 5), k=3, nprobe=4,
-            dim=64,
         )
         plan = self._plan(out)
         # corpus (cell+codes batched together) + query (integer probe,
