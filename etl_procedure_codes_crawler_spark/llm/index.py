@@ -94,7 +94,7 @@ def build_ivfpq_index(
         "codebook": codebook.tolist(),
         "m": 8,
         "sub": int(codebook.shape[1]),
-        "codebook_size": 64,
+        "codebook_size": len(codebook),
         "num_centroids": num_centroids,
         "dim": int(train[1].shape[1]),
     }
@@ -172,4 +172,5 @@ def query_ivfpq_index(
             f"query_id {id_type}, qv array<double>",
         ),
         k,
+        len(meta["codebook"]),
     )

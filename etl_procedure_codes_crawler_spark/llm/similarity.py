@@ -1010,15 +1010,17 @@ def cosine_topk_lsh(
     return _topk(pairs, k)
 
 
-def _adc_score(codes_col):
+def _adc_score(codes_col, codebook_size: int):
     """The ADC score of a (codes, lut) pair: the sum of 8 LUT lookups
-    (64 codewords per subspace), unrolled and lambda-free — whole-stage
+    (``codebook_size`` codewords per subspace: the trained codebook's
+    length, 64 unless the training sample had fewer than 8 vectors),
+    unrolled and lambda-free — whole-stage
     codegen keeps the per-pair hot loop JVM-compiled (this runs once per
     candidate pair, the widest relation in the plan)."""
     terms = [
         F.element_at(
             F.col("lut"),
-            F.lit(j * 64 + 1) + F.element_at(codes_col, j + 1),
+            F.lit(j * codebook_size + 1) + F.element_at(codes_col, j + 1),
         )
         for j in range(8)
     ]
@@ -1033,6 +1035,7 @@ def _adc_rerank(
     corpus_vecs: DataFrame,
     query_vecs: DataFrame,
     k: int,
+    codebook_size: int,
 ) -> DataFrame:
     """Standard PQ second stage: the ADC score of each candidate
     (query_id, neighbor_id, codes, lut) row only SHORTLISTS (``k × 10``
@@ -1041,7 +1044,10 @@ def _adc_rerank(
     noise decides nothing final, and the exact math runs on k×factor
     rows per query, not the corpus."""
     short = _ranked(
-        _scored(candidates, _adc_score(F.col("codes")).alias("adc_score")),
+        _scored(
+            candidates,
+            _adc_score(F.col("codes"), codebook_size).alias("adc_score"),
+        ),
         "adc_score",
         k * 10,
     ).select("query_id", "neighbor_id")
@@ -1096,15 +1102,18 @@ def cosine_topk_pq(
     from .text import spread_small_input
 
     grid = _HADAMARD_GRID if rotate else _UNIT_GRID
-    codes_udf, lut_udf = _pq_int_codecs(
-        _train_pq_int(_train_vectors_by_id(corpus), grid, 64, max_iter), grid
-    )
+    codebook = _train_pq_int(_train_vectors_by_id(corpus), grid, 64, max_iter)
+    codes_udf, lut_udf = _pq_int_codecs(codebook, grid)
     coded = spread_small_input(_as_corpus(corpus)).select(
         "neighbor_id", codes_udf(F.col("cv")).alias("codes")
     )
     q = _as_queries(queries).select("query_id", lut_udf(F.col("qv")).alias("lut"))
     return _adc_rerank(
-        coded.crossJoin(F.broadcast(q)), _as_corpus(corpus), _as_queries(queries), k
+        coded.crossJoin(F.broadcast(q)),
+        _as_corpus(corpus),
+        _as_queries(queries),
+        k,
+        len(codebook),
     )
 
 
@@ -1166,13 +1175,14 @@ def cosine_topk_ivfpq(
     if rotate:
         train_X = _train_vectors(corpus)
         codes_udf, lut_udf = _pq_context(train_X, max_iter)
+        codebook_size = 64  # float Lloyd always returns k centers
         # IVF cells on the unit vectors (cosine geometry)
         dists = _unit_dists(_kmeans_np(_unit_np(train_X), 16, 42, max_iter))
     else:
         train = _train_vectors_by_id(corpus)
-        codes_udf, lut_udf = _pq_int_codecs(
-            _train_pq_int(train, _UNIT_GRID, 64, max_iter), _UNIT_GRID
-        )
+        codebook = _train_pq_int(train, _UNIT_GRID, 64, max_iter)
+        codes_udf, lut_udf = _pq_int_codecs(codebook, _UNIT_GRID)
+        codebook_size = len(codebook)
         # IVF cells on the QUANTIZED unit vectors (cosine geometry,
         # integer Lloyd — same grid as the PQ codebook)
         dists = _grid_dists(
@@ -1193,4 +1203,5 @@ def cosine_topk_ivfpq(
         _as_corpus(corpus),
         _as_queries(queries),
         k,
+        codebook_size,
     )

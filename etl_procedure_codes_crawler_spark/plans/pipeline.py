@@ -37,7 +37,7 @@ from ..schemas import (
     PROCEDURE_NDC_SCHEMA,
 )
 from ..sources.fetcher import FetcherFactory
-from ..sources.parquet import read_table_or_empty
+from ..sources.parquet import local_relation, read_table_or_empty
 from ..sinks.parquet import with_load_date, write_parquet_dataset
 
 
@@ -81,11 +81,11 @@ def run_crawl_pipeline(
     ``existing_*`` default to typed empty relations (first run).
     """
     if existing_codes is None:
-        existing_codes = spark.createDataFrame([], PROCEDURE_CODES_SCHEMA)
+        existing_codes = local_relation(spark, PROCEDURE_CODES_SCHEMA)
     if existing_modifiers is None:
-        existing_modifiers = spark.createDataFrame([], PROCEDURE_MODIFIERS_SCHEMA)
+        existing_modifiers = local_relation(spark, PROCEDURE_MODIFIERS_SCHEMA)
     if existing_ndc is None:
-        existing_ndc = spark.createDataFrame([], PROCEDURE_NDC_SCHEMA)
+        existing_ndc = local_relation(spark, PROCEDURE_NDC_SCHEMA)
 
     # P1-P3 + within-batch distinct, then J3: only crawl unseen codes.
     to_crawl = anti_join_on_key(

@@ -62,7 +62,65 @@ def _pin_conf(spark: SparkSession, key: str, value: str) -> None:
         spark.conf.set(key, value)
 
 
+#: session confs whose values change what parquet schema inference
+#: returns (``load`` pins the first for the events table)
+_INFERENCE_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+)
+
+#: path -> (signature, inferred schema); one entry per path
+_SCHEMAS: dict[str, tuple] = {}
+
+
+def _data_files(path: str) -> tuple | None:
+    """(file, size, mtime_ns) of every file under ``path`` (a file or a
+    dataset directory); None for a non-local or missing path (Spark
+    then infers, or raises its own error)."""
+    if "://" in path and not path.startswith("file:"):
+        return None
+    local = path.removeprefix("file:")
+    files = [local] if os.path.isfile(local) else sorted(
+        os.path.join(root, name) for root, _, names in os.walk(local) for name in names
+    )
+    try:
+        stats = [os.stat(f) for f in files]
+    except OSError:  # a file replaced while listing
+        return None
+    return tuple(
+        (f, st.st_size, st.st_mtime_ns) for f, st in zip(files, stats)
+    ) or None
+
+
+def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` with the inferred schema remembered:
+    inference is a Spark job (a footer read per file), while the data
+    files it reads rarely change between queries. The memo key is the
+    file listing (names, sizes, mtimes — listed afresh on every call)
+    plus the session's :data:`_INFERENCE_CONFS`; a rewritten file or a
+    flipped conf re-infers and replaces the path's entry."""
+    files = _data_files(path)
+    if files is None:
+        return spark.read.parquet(path)
+    key = (files, tuple(spark.conf.get(c, None) for c in _INFERENCE_CONFS))
+    hit = _SCHEMAS.get(path)
+    if hit is not None and hit[0] == key:
+        return spark.read.schema(hit[1]).parquet(path)
+    df = spark.read.parquet(path)
+    _SCHEMAS[path] = (key, df.schema)
+    return df
+
+
 def load(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
+    """The corpus table ``table`` under ``sf_dir`` with the session
+    pins below applied. The parquet schema is inferred on the first
+    load of a path and remembered (:func:`_read_parquet`): the key is
+    the path's data files (name, size, mtime_ns) and the session's
+    parquet-inference confs, and the memo keeps one entry per path, so
+    it is bounded by the number of tables read. Non-local paths are
+    inferred on every call."""
     # The driver's gate runs these queries in ITS session, not ours:
     # pin the (runtime-settable) confs results depend on. Timezone —
     # NTZ→TIMESTAMP casts, epoch extraction, and window boundaries
@@ -82,7 +140,7 @@ def load(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
         # preset); the actual dtype is inspected below, never assumed.
         _pin_conf(spark, "spark.sql.legacy.parquet.nanosAsLong", "true")
     path = os.path.join(sf_dir, f"{table}.parquet")
-    df = spark.read.parquet(path)
+    df = _read_parquet(spark, path)
     if table == "events":
         # footer logical type (one driver-side read) makes the bigint
         # unit definitive; magnitude inference only covers plain INT64

@@ -24,7 +24,7 @@ def read_parquet(spark: SparkSession, path: str) -> DataFrame:
 
 
 def read_table_or_empty(
-    spark: SparkSession, path: str, schema: StructType
+    spark: SparkSession, path: str, schema: StructType | str
 ) -> DataFrame:
     """Read a parquet dataset; if absent, an empty frame with ``schema``.
 
@@ -34,7 +34,28 @@ def read_table_or_empty(
     """
     if _exists(path):
         return spark.read.schema(schema).parquet(path)
-    return spark.createDataFrame([], schema)
+    return local_relation(spark, schema)
+
+
+def local_relation(
+    spark: SparkSession, schema: StructType | str, *columns: list
+) -> DataFrame:
+    """A driver-built relation over ``schema`` (a StructType or a DDL
+    string) from one list per field (``columns``; none given: zero
+    rows), passed to Spark as an Arrow table. Spark plans it as a
+    ``LocalRelation`` (a ``LocalTableScan``, no Python worker tasks at
+    scan time), whose size the optimizer knows, and prunes joins
+    against it when it is empty."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if isinstance(schema, str):
+        schema = StructType.fromDDL(schema)
+    table = pa.Table.from_pydict(
+        dict(zip(schema.names, columns or [[]] * len(schema.names))),
+        schema=to_arrow_schema(schema),
+    )
+    return spark.createDataFrame(table, schema)
 
 
 def _exists(path: str) -> bool:

@@ -159,6 +159,67 @@ class TestDriverFastPath:
         pairs = spark.createDataFrame([], "doc_a bigint, doc_b bigint")
         assert CL.connected_components(pairs).count() == 0
 
+    @pytest.mark.parametrize(
+        "id_type, seed", [("int", 1), ("bigint", 2), ("string", 3)]
+    )
+    def test_random_graphs_match_the_distributed_loop(
+        self, spark, id_type, seed
+    ):
+        """Seeded random graphs with reversed and duplicated edges: the
+        union-find labels equal the forced distributed loop's, with the
+        caller's id type kept."""
+        import random
+
+        from etl_procedure_codes_crawler_spark.llm import cluster as CL
+
+        rng = random.Random(seed)
+        ids = [
+            f"v{i:03d}" if id_type == "string" else i * 7 for i in range(40)
+        ]
+        edges = [tuple(rng.sample(ids, 2)) for _ in range(30)]
+        edges += [(b, a) for a, b in edges[:8]] + edges[8:14]
+        rng.shuffle(edges)
+        pairs = spark.createDataFrame(edges, f"doc_a {id_type}, doc_b {id_type}")
+        fast = CL.connected_components(pairs)
+        slow = CL.connected_components(pairs, small_edge_limit=0)
+        assert fast.dtypes == [("vertex", id_type), ("component", id_type)]
+        assert slow.dtypes == fast.dtypes
+        assert sorted(fast.collect()) == sorted(slow.collect())
+
+    @pytest.mark.parametrize("id_type", ["int", "bigint", "string"])
+    def test_empty_edges_keep_the_id_type(self, spark, id_type):
+        from etl_procedure_codes_crawler_spark.llm import cluster as CL
+
+        pairs = spark.createDataFrame([], f"doc_a {id_type}, doc_b {id_type}")
+        comp = CL.connected_components(pairs)
+        assert comp.dtypes == [("vertex", id_type), ("component", id_type)]
+        assert comp.collect() == []
+
+    def test_labels_are_a_local_relation(self, spark):
+        """The union-find labels are an Arrow-built local relation:
+        no PythonRDD scan (``ExistingRDD``) for a Python worker."""
+        from etl_procedure_codes_crawler_spark.llm import cluster as CL
+
+        pairs = spark.createDataFrame(self.EDGES, "doc_a bigint, doc_b bigint")
+        plan = (
+            CL.connected_components(pairs)
+            ._jdf.queryExecution()
+            .executedPlan()
+            .toString()
+        )
+        assert "LocalTableScan" in plan
+        assert "ExistingRDD" not in plan
+
+    def test_singleton_anti_join_broadcasts_the_labels(self, spark):
+        from etl_procedure_codes_crawler_spark.llm import cluster as CL
+
+        pairs = spark.createDataFrame(self.EDGES, "doc_a bigint, doc_b bigint")
+        ids = spark.range(30).withColumnRenamed("id", "doc_id")
+        clusters = CL.duplicate_clusters(pairs, all_ids=ids)
+        plan = clusters._jdf.queryExecution().executedPlan().toString()
+        assert "BroadcastExchange" in plan
+        assert len(clusters.collect()) == 30
+
     def test_fast_path_job_count_independent_of_diameter(self, spark):
         from etl_procedure_codes_crawler_spark.llm import cluster as CL
 

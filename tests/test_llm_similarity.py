@@ -342,6 +342,22 @@ def test_pq_dim_param_and_empty_corpus_error(spark):
     assert codebook.shape == (4, 8)
 
 
+def test_pq_on_fewer_than_8_vectors_indexes_the_trained_codebook(spark):
+    """5 vectors pool into 40 subvector slices, so the codebook has 40
+    codewords per subspace, not 64: the ADC lookups must stride by the
+    trained size (a fixed stride of 64 reads past the end of the LUT).
+    The shortlist covers the whole corpus, so the result is exact."""
+    rng = np.random.RandomState(3)
+    corpus = spark.createDataFrame(
+        [(i, [float(x) for x in rng.randn(64)]) for i in range(5)],
+        "vec_id bigint, embedding array<float>",
+    )
+    got = S.cosine_topk_pq(corpus, corpus, k=2).collect()
+    assert {(r.query_id, r.neighbor_id) for r in got} == _exact_topk(
+        corpus, corpus, k=2
+    )
+
+
 def test_pq_rejects_vectors_that_do_not_split_into_8_subspaces(spark):
     """The check is a ValueError, so it holds under ``python -O`` and
     names the requirement instead of failing inside a reshape."""

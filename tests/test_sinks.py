@@ -45,6 +45,9 @@ def test_read_missing_table_yields_typed_empty(spark, tmp_path):
         spark, str(tmp_path / "nope"), PROCEDURE_MODIFIERS_SCHEMA
     )
     assert df.schema == PROCEDURE_MODIFIERS_SCHEMA and df.count() == 0
+    # a DDL string schema, as spark.read.schema takes it
+    ddl = read_table_or_empty(spark, str(tmp_path / "nope"), "id bigint, fp string")
+    assert ddl.dtypes == [("id", "bigint"), ("fp", "string")] and ddl.count() == 0
 
 
 def test_single_file_write(spark, tmp_path):
