@@ -34,6 +34,7 @@ import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..sources.parquet import local_relation
 from .similarity import (
     _FIXED_SHIFT,
     _UNIT_GRID,
@@ -149,13 +150,17 @@ def query_ivfpq_index(
         _int_sq_dists(QU, np.asarray(meta["centroids"], dtype=np.int64)), nprobe
     )
 
-    probes = spark.createDataFrame(
-        [
-            (qid, [int(x) for x in lut], int(cell))
-            for qid, lut, cells in zip(qids, luts, probe_cells)
-            for cell in cells
-        ],
+    # Arrow-built local relations: LocalTableScans, not PythonRDD scans
+    # that would run Python-worker tasks over these driver-held rows
+    probe_rows = [
+        (qid, [int(x) for x in lut], int(cell))
+        for qid, lut, cells in zip(qids, luts, probe_cells)
+        for cell in cells
+    ]
+    probes = local_relation(
+        spark,
         f"query_id {id_type}, lut array<bigint>, cell int",
+        *map(list, zip(*probe_rows)),
     )
     cells_needed = sorted({int(c) for row in probe_cells for c in row})
 
@@ -167,9 +172,11 @@ def query_ivfpq_index(
             F.broadcast(probes), "cell"
         ),
         coded.select(F.col("id").alias("neighbor_id"), F.col("vector").alias("cv")),
-        spark.createDataFrame(
-            [(qid, [float(x) for x in r["qv"]]) for qid, r in zip(qids, q_rows)],
+        local_relation(
+            spark,
             f"query_id {id_type}, qv array<double>",
+            qids,
+            [[float(x) for x in r["qv"]] for r in q_rows],
         ),
         k,
         len(meta["codebook"]),

@@ -84,7 +84,23 @@ def get_spark(
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.ui.enabled", os.environ.get("SPARK_GRAFT_UI", "false"))
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
-        # Codegen/JIT code-cache flags gave no reproducible gain (OPTIMIZATION_r13.md).
+        # Compile each distinct whole-stage pipeline once per JVM. At
+        # small scale Janino compilation, not data, sets query latency:
+        # llm_corpus_prep_v5 generates ~150 classes per run and the
+        # four-query perfbench mix ~200, so Spark's default LRU of 100
+        # entries recompiled every class on every run. 2000 holds the
+        # ~1,530 classes of one sweep of the 97 bench HEADLINE rows (at
+        # sf0.001 and at sf0.01); two such sweeps used ~130 MB of the
+        # 240 MB reserved code heap. The cache size is a static conf: it
+        # takes effect only when this factory creates the JVM's first
+        # session.
+        .config("spark.sql.codegen.cache.maxEntries", "2000")
+        # A stage id in a generated class name gives an identical
+        # pipeline a new cache key whenever AQE re-plans it or it sits
+        # at another position: with ids, a HEADLINE sweep at sf0.001
+        # compiles 1,929 classes and a second sweep 307 more; without,
+        # 1,530 and 22. Runtime conf.
+        .config("spark.sql.codegen.useIdInClassName", "false")
     )
     for key, value in (extra_conf or {}).items():
         builder = builder.config(key, value)

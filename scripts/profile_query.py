@@ -4,7 +4,8 @@
 For each named query: the bench's warm-up, N timed passes (the bench's
 methodology: ``harness.time_query`` settles, then materializes the full
 result through the noop sink), plus job/stage counts from the status
-tracker and an optional .explain("formatted") dump.
+tracker, the number of generated classes compiled, and an optional
+.explain("formatted") dump.
 
 Usage:
   python scripts/profile_query.py [--runs N] [--explain-dir DIR]
@@ -12,7 +13,11 @@ Usage:
 
 Prints one JSON line per query:
   {"query": ..., "times": [...], "best": ..., "jobs_last_pass": J,
-   "stages_last_pass": S}
+   "stages_last_pass": S, "codegen_compiles_last_pass": C}
+
+C counts the classes the last pass compiled (codegen cache misses): 0
+once the JVM holds every class the plan generates. The first pass of
+a plan pays for its compiles, so pass --runs 2 or more to see both.
 """
 
 from __future__ import annotations
@@ -53,21 +58,28 @@ def main() -> None:
     queries = harness.registry()
     harness.warm_up(spark, args.sf_dir)
     st = spark.sparkContext.statusTracker()
+    # one count per compile, exact; the histogram's values are a
+    # reservoir sample, so their sum would not be
+    codegen = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    compiles = codegen.METRIC_COMPILATION_TIME()
 
-    def run_once(name: str) -> tuple[float, int, int]:
+    def run_once(name: str) -> tuple[float, int, int, int]:
         jobs_before = set(st.getJobIdsForGroup(None) or [])
+        compiles_before = compiles.getCount()
         dt = harness.time_query(spark, name, args.sf_dir)
+        compiled = compiles.getCount() - compiles_before
         new_jobs = set(st.getJobIdsForGroup(None) or []) - jobs_before
         infos = [st.getJobInfo(j) for j in new_jobs]
-        return dt, len(new_jobs), sum(len(ji.stageIds) for ji in infos if ji)
+        stages = sum(len(ji.stageIds) for ji in infos if ji)
+        return dt, len(new_jobs), stages, compiled
 
     for name in args.queries:
         if name not in queries:
             print(json.dumps({"query": name, "error": "not registered"}))
             continue
         passes = [run_once(name) for _ in range(args.runs)]
-        times = [dt for dt, _, _ in passes]
-        _, jobs, stages = passes[-1]
+        times = [dt for dt, _, _, _ in passes]
+        _, jobs, stages, compiled = passes[-1]
         if args.explain_dir:
             os.makedirs(args.explain_dir, exist_ok=True)
             try:
@@ -91,6 +103,7 @@ def main() -> None:
                     "best": min(times),
                     "jobs_last_pass": jobs,
                     "stages_last_pass": stages,
+                    "codegen_compiles_last_pass": compiled,
                 }
             ),
             flush=True,

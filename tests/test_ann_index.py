@@ -65,3 +65,23 @@ def test_empty_query_set_rejected(spark, emb, tmp_path):
         IX.query_ivfpq_index(
             spark, path, emb.filter(F.col("vec_id") < 0), k=3
         )
+
+
+@pytest.mark.parametrize("id_type", ["bigint", "string"])
+def test_query_side_is_local_and_keeps_the_id_type(spark, emb, tmp_path, id_type):
+    """The probe and query-vector relations are built on the driver as
+    local relations: no PythonRDD scan in the executed plan, the
+    caller's query id type kept, and the one-shot operator's rows."""
+    path = str(tmp_path / "ix")
+    IX.build_ivfpq_index(emb, path, num_centroids=16, max_iter=3)
+    queries = emb.filter(F.col("vec_id") < 5).withColumn(
+        "vec_id", F.col("vec_id").cast(id_type)
+    )
+    out = IX.query_ivfpq_index(spark, path, queries, k=3, nprobe=4)
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert "ExistingRDD" not in plan, plan
+    assert dict(out.dtypes)["query_id"] == id_type
+    want = S.cosine_topk_ivfpq(emb, queries, k=3, nprobe=4, max_iter=3)
+    assert sorted(map(tuple, out.collect())) == sorted(
+        map(tuple, want.collect())
+    )
