@@ -961,7 +961,7 @@ def remove_boilerplate_passages(
     Complements :func:`intra_doc_kept_blocks` (within-doc) and
     :func:`remove_duplicate_spans` (pairwise spans): this is the
     corpus-frequency axis."""
-    chunks = passage_rows(df, block, "text", "doc_id")
+    chunks = passage_rows(df, block)
     freq = chunks.groupBy("fp").agg(
         F.countDistinct("id").alias("_df")
     )
@@ -969,17 +969,13 @@ def remove_boilerplate_passages(
     return _rebuild_cleaned(df, judged, min_doc_freq)
 
 
-def passage_rows(
-    df: DataFrame,
-    block: int = 16,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def passage_rows(df: DataFrame, block: int = 16) -> DataFrame:
     """(id, pos, passage, fp) — every document's consecutive
-    ``block``-token passages with their 32-byte sha2 fingerprints,
-    the shared substrate of :func:`remove_boilerplate_passages` and
-    the persisted passage-frequency store
-    (:mod:`.passagefreq`). NULL/empty texts contribute no rows."""
+    ``block``-token passages of ``text`` (id = ``doc_id``) with their
+    32-byte sha2 fingerprints, the shared substrate of
+    :func:`remove_boilerplate_passages` and the persisted
+    passage-frequency store (:mod:`.passagefreq`). NULL/empty texts
+    contribute no rows."""
     chunk_structs = F.transform(
         F.sequence(
             F.lit(1),
@@ -996,7 +992,7 @@ def passage_rows(
     )
     return (
         spread_small_input(df)
-        .select(F.col(id_col).alias("id"), tokens(text_col).alias("_toks"))
+        .select(F.col("doc_id").alias("id"), tokens("text").alias("_toks"))
         .where(F.col("_toks").isNotNull() & (F.size("_toks") > 0))
         .select("id", F.explode(chunk_structs).alias("c"))
         .select(

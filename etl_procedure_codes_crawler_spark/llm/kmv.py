@@ -54,14 +54,14 @@ H_SPACE = 1 << 60
 
 def group_kmv_minima(
     df: DataFrame,
-    group_col: str = "source",
     text_col: str = "text",
     k: int = 64,
     shingle_k: int = 3,
 ) -> DataFrame:
-    """(grp, h, rk) — each group's k smallest distinct shingle hashes,
-    rk = 1-based rank. Distinctness is collapsed (KMV is defined over
-    the hash SET), so estimates are a pure function of the data.
+    """(grp, h, rk) — each ``source`` group's k smallest distinct
+    shingle hashes, rk = 1-based rank. Distinctness is collapsed (KMV
+    is defined over the hash SET), so estimates are a pure function of
+    the data.
 
     Round 13 shuffle-shape change (guide §2.3, shuffle fewer bytes):
     the old form ran ``distinct()`` FIRST, so the first exchange
@@ -73,7 +73,7 @@ def group_kmv_minima(
     rows instead of O(distinct). dense_rank counts each distinct h
     once regardless of duplicates, so filter + distinct + re-rank is
     exactly the old k-smallest-distinct set."""
-    sh = _group_shingles(df, group_col, text_col, shingle_k)
+    sh = _group_shingles(df, "source", text_col, shingle_k)
     hashed = sh.select("grp", md5_h60(F.col("shingle")).alias("h"))
     w = Window.partitionBy("grp").orderBy("h")
     topk = (
@@ -101,7 +101,7 @@ def kmv_distinct_by_group(
 ) -> DataFrame:
     """(group, n_in_sketch, est_distinct) — estimated distinct-shingle
     cardinality per group from a k-value sketch."""
-    minima = group_kmv_minima(df, "source", "text", 64, 3)
+    minima = group_kmv_minima(df, "text", 64, 3)
     return (
         minima.groupBy("grp")
         .agg(
@@ -203,7 +203,6 @@ def append_to_kmv_store(
     spark: SparkSession,
     path: str,
     docs: DataFrame,
-    group_col: str = "source",
     text_col: str = "text",
     meta: dict | None = None,
 ) -> None:
@@ -216,7 +215,7 @@ def append_to_kmv_store(
     if meta is None:
         meta = load_kmv_meta(spark, path)
     minima = group_kmv_minima(
-        docs, group_col, text_col, int(meta["k"]), int(meta["shingle_k"])
+        docs, text_col, int(meta["k"]), int(meta["shingle_k"])
     )
     minima.select("grp", "h").write.mode("append").parquet(
         _kmv_minima_path(path)
@@ -277,7 +276,7 @@ def kmv_overlap_pairs(
     cross-pair expansion — with g groups and k sketch rows the largest
     intermediate is g·(g-1)/2·2k rows of (group_a, group_b, h), still
     metadata-sized for any bounded group domain."""
-    minima = group_kmv_minima(df, "source", "text", 64, 3)
+    minima = group_kmv_minima(df, "text", 64, 3)
     groups = minima.select(F.col("grp").alias("_g")).distinct()
     # (ga, gb, h, in_a, in_b): each sketch row fanned to every pair it
     # participates in, from either side

@@ -98,7 +98,7 @@ def load_passage_freq_meta(spark: SparkSession, path: str) -> dict:
     return meta
 
 
-def _derived_batch_id(docs: DataFrame, id_col: str) -> str:
+def _derived_batch_id(docs: DataFrame) -> str:
     """Deterministic, order-independent id of the OFFERED DOCUMENT
     SET: count + two independently-seeded xxhash64 XOR folds. Under
     the once-per-doc contract, two appends can only share an id set
@@ -108,8 +108,8 @@ def _derived_batch_id(docs: DataFrame, id_col: str) -> str:
     hand)."""
     row = docs.agg(
         F.count(F.lit(1)).alias("n"),
-        F.bit_xor(F.xxhash64(F.col(id_col), F.lit(0xB1D1))).alias("x1"),
-        F.bit_xor(F.xxhash64(F.col(id_col), F.lit(0xB1D2))).alias("x2"),
+        F.bit_xor(F.xxhash64(F.col("doc_id"), F.lit(0xB1D1))).alias("x1"),
+        F.bit_xor(F.xxhash64(F.col("doc_id"), F.lit(0xB1D2))).alias("x2"),
     ).first()
     return f"auto-{row['n']}-{row['x1']}-{row['x2']}"
 
@@ -118,8 +118,6 @@ def append_passage_counts(
     spark: SparkSession,
     path: str,
     docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     batch_id: str | None = None,
     chunks: DataFrame | None = None,
 ) -> int:
@@ -145,13 +143,13 @@ def append_passage_counts(
     block-size agreement; when omitted the rows derive here under the
     store's meta."""
     if batch_id is None:
-        batch_id = _derived_batch_id(docs, id_col)
+        batch_id = _derived_batch_id(docs)
     if chunks is None:
         # meta is only needed to derive the rows — a caller passing
         # precomputed chunks owns the block-size agreement, and the
         # meta read is one whole job per batch on the streaming path
         meta = load_passage_freq_meta(spark, path)
-        chunks = passage_rows(docs, meta["block"], text_col, id_col)
+        chunks = passage_rows(docs, meta["block"])
     seg = (
         chunks
         .groupBy("fp")
@@ -196,7 +194,7 @@ def strip_boilerplate_against_store(
     fingerprints). Passages absent from the store count as df=0
     (never seen → never boilerplate)."""
     meta = load_passage_freq_meta(spark, path)
-    chunks = passage_rows(docs, meta["block"], "text", "doc_id")
+    chunks = passage_rows(docs, meta["block"])
     judged = chunks.join(
         read_passage_freqs(spark, path).withColumnRenamed("df", "_df"),
         "fp",

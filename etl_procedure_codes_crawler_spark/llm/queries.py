@@ -76,6 +76,53 @@ def _memo_scaffold(key: str, build) -> str:
     return tmp
 
 
+def _stream_source(key: str, df: DataFrame, n_files: int) -> str:
+    """A file-stream source directory holding ``df`` as ``n_files``
+    parquet files, staged once per process under ``key``: laying out
+    the arriving corpus is scaffolding, not the gate under test."""
+    import os
+
+    from ..streaming.incremental import stage_stream_files
+
+    def build(root: str) -> None:
+        stage_stream_files(
+            df.repartition(n_files), os.path.join(root, "incoming"), "b"
+        )
+
+    return os.path.join(_memo_scaffold(key, build), "incoming")
+
+
+def _staged_documents(spark: SparkSession, sf_dir: str) -> str:
+    """The documents table as a file-stream source, one file per core
+    (at least four), staged once per process and shared by the gates
+    that ingest the whole corpus."""
+    return _stream_source(
+        f"docstage:{sf_dir}",
+        load(spark, sf_dir, "documents"),
+        max(spark.sparkContext.defaultParallelism, 4),
+    )
+
+
+def _drain_gate(start, read) -> DataFrame:
+    """Run one streaming gate end to end in a fresh temp root:
+    ``start(at)`` starts it and returns its StreamingQuery (``at(name)``
+    is a path under the root), which drains every staged file
+    (availableNow); ``read(at)`` is the result, pinned so it outlives
+    the root, which is removed on the way out."""
+    import functools
+    import os
+    import shutil
+    import tempfile
+
+    root = tempfile.mkdtemp(prefix="gate_")
+    at = functools.partial(os.path.join, root)
+    try:
+        start(at).awaitTermination()
+        return read(at).localCheckpoint(eager=True)
+    finally:
+        shutil.rmtree(root, ignore_errors=True)
+
+
 # ---------------------------------------------------------------------------
 # text analysis
 # ---------------------------------------------------------------------------
@@ -785,54 +832,30 @@ def streaming_boilerplate_strip_ingest(
     (_memo_scaffold, corpus layout only); the GATE — store create,
     stream round-trip, count append, strip, warehouse append — runs on
     every invocation."""
-    import os as _os
-    import shutil
-    import tempfile
-
     from ..streaming.incremental import stream_ingest_with_boilerplate
     from . import passagefreq as PF
 
     documents = load(spark, sf_dir, "documents")
+    src = _staged_documents(spark, sf_dir)
 
-    def build(memo_root: str) -> None:
-        import glob as _glob
-
-        src = _os.path.join(memo_root, "incoming")
-        _os.makedirs(src)
-        staging = _os.path.join(memo_root, "staging")
-        documents.repartition(
-            max(spark.sparkContext.defaultParallelism, 4)
-        ).write.mode("overwrite").parquet(staging)
-        for i, part in enumerate(
-            _glob.glob(_os.path.join(staging, "part-*.parquet"))
-        ):
-            shutil.copy(part, _os.path.join(src, f"b{i}.parquet"))
-
-    src = _os.path.join(
-        _memo_scaffold(f"docstage:{sf_dir}", build), "incoming"
-    )
-    root = tempfile.mkdtemp(prefix="boiler_gate_")
-    try:
-        store = _os.path.join(root, "store")
-        PF.create_passage_freq_store(spark, store, block=3)
-        wh = _os.path.join(root, "wh")
-        q = stream_ingest_with_boilerplate(
+    def start(at):
+        PF.create_passage_freq_store(spark, at("store"), block=3)
+        return stream_ingest_with_boilerplate(
             spark,
             src,
             documents.schema,
-            wh,
-            store,
-            _os.path.join(root, "ckpt"),
+            at("wh"),
+            at("store"),
+            at("ckpt"),
             min_doc_freq=5,
         )
-        q.awaitTermination()
-        return (
-            spark.read.parquet(wh)
-            .select("doc_id", "n_passages", "n_removed", "text_clean")
-            .localCheckpoint(eager=True)  # outlives the temp store
-        )
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+
+    return _drain_gate(
+        start,
+        lambda at: spark.read.parquet(at("wh")).select(
+            "doc_id", "n_passages", "n_removed", "text_clean"
+        ),
+    )
 
 
 @register("doremi_domain_weights")  # rows-only: ln() is libm
@@ -1066,9 +1089,6 @@ def dedup_exact_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     return D.exact_duplicate_groups(documents)
 
 
-_DOC_STREAM_SEQ = [0]
-
-
 @register(
     "streaming_incremental_dedup_documents",
     oracle="""
@@ -1104,48 +1124,36 @@ def streaming_incremental_dedup_documents(
     choice, unlike first-seen dropDuplicates). Hash-matches the SAME
     oracle as the batch ``dedup_incremental_documents`` — batch/stream
     parity for the dedup family by construction."""
-    import os as _os
-    import shutil
-    import tempfile
+    import os
 
-    from ..streaming.events import run_to_memory
+    from ..streaming.events import drain_table_file
     from . import text as _T
 
-    # staging dir removed in finally — the gate may invoke this query
-    # repeatedly and each leak would be a full documents.parquet copy
-    staged = tempfile.mkdtemp(prefix="docs_stream_")
-    try:
-        shutil.copy(
-            _os.path.join(sf_dir, "documents.parquet"),
-            _os.path.join(staged, "part-000.parquet"),
-        )
-        schema = spark.read.parquet(staged).schema
-        stream = (
-            spark.readStream.schema(schema)
+    def survivors(staged: str) -> DataFrame:
+        batch = (
+            spark.readStream.schema(spark.read.parquet(staged).schema)
             .option("maxFilesPerTrigger", 1)
             .parquet(staged)
-        )
-        batch = stream.filter(F.col("doc_id") % 2 == 1).select(
-            _T.fingerprint_sha256("text").alias("fingerprint"),
-            F.col("doc_id").cast("bigint").alias("id"),
+            .filter(F.col("doc_id") % 2 == 1)
+            .select(
+                _T.fingerprint_sha256("text").alias("fingerprint"),
+                F.col("doc_id").cast("bigint").alias("id"),
+            )
         )
         snapshot = (
             load(spark, sf_dir, "documents")
             .filter(F.col("doc_id") % 2 == 0)
             .select(_T.fingerprint_sha256("text").alias("fingerprint"))
         )
-        survivors = (
+        return (
             batch.join(snapshot, "fingerprint", "left_anti")
             .groupBy("fingerprint")
             .agg(F.min("id").alias("first_id"))
         )
-        _DOC_STREAM_SEQ[0] += 1
-        name = f"stream_doc_dedup_{_DOC_STREAM_SEQ[0]}"
-        query = run_to_memory(survivors, name)
-        query.stop()
-    finally:
-        shutil.rmtree(staged, ignore_errors=True)
-    return spark.table(name)
+
+    return drain_table_file(
+        spark, os.path.join(sf_dir, "documents.parquet"), survivors
+    )
 
 
 @register(
@@ -3140,10 +3148,7 @@ def streaming_media_neardup_ingest(
     sign/append round-trip) runs on every invocation, so the timed
     number is the ingest path and the output relation is invariant
     to the memo."""
-    import os as _os
-    import shutil
-    import tempfile
-
+    from ..sources.parquet import read_table_or_empty
     from ..streaming.incremental import stream_ingest_media_neardup
     from . import phash_store as PS
 
@@ -3154,47 +3159,24 @@ def streaming_media_neardup_ingest(
     media = M.documents_as_png(
         documents.unionByName(twins), corrupt_every=0
     )
-
-    def build(memo_root: str) -> None:
-        import glob as _glob
-
-        src = _os.path.join(memo_root, "incoming")
-        _os.makedirs(src)
-        staging = _os.path.join(memo_root, "staging")
-        media.repartition(
-            max(spark.sparkContext.defaultParallelism, 4)
-        ).write.mode("overwrite").parquet(staging)
-        for i, part in enumerate(
-            _glob.glob(_os.path.join(staging, "part-*.parquet"))
-        ):
-            shutil.copy(part, _os.path.join(src, f"b{i}.parquet"))
-
-    src = _os.path.join(
-        _memo_scaffold(f"mediastage:{sf_dir}", build), "incoming"
+    src = _stream_source(
+        f"mediastage:{sf_dir}",
+        media,
+        max(spark.sparkContext.defaultParallelism, 4),
     )
-    root = tempfile.mkdtemp(prefix="media_gate_")
-    try:
-        store = _os.path.join(root, "store")
-        PS.create_phash_store(spark, store)
-        wh = _os.path.join(root, "wh")
-        q = stream_ingest_media_neardup(
-            spark,
-            src,
-            M.MEDIA_SCHEMA,
-            wh,
-            store,
-            _os.path.join(root, "ckpt"),
-        )
-        q.awaitTermination()
-        from ..sources.parquet import read_table_or_empty
 
-        return (
-            read_table_or_empty(spark, wh, M.MEDIA_SCHEMA)
-            .select("media_id")
-            .localCheckpoint(eager=True)  # outlives the temp dir
+    def start(at):
+        PS.create_phash_store(spark, at("store"))
+        return stream_ingest_media_neardup(
+            spark, src, M.MEDIA_SCHEMA, at("wh"), at("store"), at("ckpt")
         )
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+
+    return _drain_gate(
+        start,
+        lambda at: read_table_or_empty(
+            spark, at("wh"), M.MEDIA_SCHEMA
+        ).select("media_id"),
+    )
 
 
 @register("neardup_store_cluster_survivors")  # rows-only: minhash store
@@ -4332,50 +4314,32 @@ def streaming_token_drift_monitor(
     token — must hash-match the oracle's from-scratch recomputation.
     Metric writes are batch-id idempotent (write_idempotent_run), so
     crash replays re-report instead of double-reporting."""
-    import os as _os
-    import shutil
-    import tempfile
-
     from ..streaming.drift import build_token_reference, stream_token_drift
+    from ..streaming.incremental import stage_stream_files
 
     documents = load(spark, sf_dir, "documents")
-    root = tempfile.mkdtemp(prefix="drift_")
-    try:
-        ref = _os.path.join(root, "reference")
-        build_token_reference(
-            documents.where(F.col("doc_id") % 2 == 0), ref
-        )
-        src = _os.path.join(root, "incoming")
-        _os.makedirs(src)
-        staging = _os.path.join(root, "staging")
-        odd = documents.where(F.col("doc_id") % 2 == 1)
-        odd.coalesce(1).write.mode("overwrite").parquet(staging)
-        import glob as _glob
+    odd = documents.where(F.col("doc_id") % 2 == 1)
 
-        part = _glob.glob(_os.path.join(staging, "part-*.parquet"))[0]
-        shutil.copy(part, _os.path.join(src, "b1.parquet"))
-        q = stream_token_drift(
+    def start(at):
+        build_token_reference(
+            documents.where(F.col("doc_id") % 2 == 0), at("reference")
+        )
+        stage_stream_files(odd.coalesce(1), at("incoming"), "b")
+        return stream_token_drift(
             spark,
-            src,
+            at("incoming"),
             odd.schema,
-            ref,
-            _os.path.join(root, "metrics"),
-            _os.path.join(root, "ckpt"),
+            at("reference"),
+            at("metrics"),
+            at("ckpt"),
         )
-        q.awaitTermination()
-        metrics = (
-            spark.read.parquet(_os.path.join(root, "metrics"))
-            .select(
-                "n_tokens_batch",
-                "n_tokens_reference",
-                "tv_distance",
-                "top_token",
-            )
-            .localCheckpoint(eager=True)  # outlives the temp dir
-        )
-        return metrics
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+
+    return _drain_gate(
+        start,
+        lambda at: spark.read.parquet(at("metrics")).select(
+            "n_tokens_batch", "n_tokens_reference", "tv_distance", "top_token"
+        ),
+    )
 
 
 @register(
@@ -5822,12 +5786,10 @@ def streaming_blocklist_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     never double-reports). The accumulated relation must hash-match
     the one-shot batch scan — the oracle is shared verbatim with
     blocklist_scan_documents."""
-    import os as _os
-    import shutil
-    import tempfile
+    import os
 
-    from . import blocklist as BL
     from ..streaming.scan import stream_blocklist_scan
+    from . import blocklist as BL
 
     documents = load(spark, sf_dir, "documents")
     # the FIXED phrase list is gate input (like the drift reference),
@@ -5836,49 +5798,25 @@ def streaming_blocklist_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     if memo_key not in _INPUT_MEMO:
         _INPUT_MEMO[memo_key] = BL.top_trigram_phrases(documents)
     phrases = _INPUT_MEMO[memo_key]
-
-    def build(memo_root: str) -> None:
-        import glob as _glob
-
-        src = _os.path.join(memo_root, "incoming")
-        _os.makedirs(src)
-        staging = _os.path.join(memo_root, "staging")
-        documents.repartition(
-            max(spark.sparkContext.defaultParallelism, 4)
-        ).write.mode("overwrite").parquet(staging)
-        for i, part in enumerate(
-            _glob.glob(_os.path.join(staging, "part-*.parquet"))
-        ):
-            shutil.copy(part, _os.path.join(src, f"b{i}.parquet"))
-
-    src = _os.path.join(
-        _memo_scaffold(f"docstage:{sf_dir}", build), "incoming"
-    )
-    root = tempfile.mkdtemp(prefix="blscan_gate_")
-    try:
-        # TWO micro-batches regardless of staging width: enough to
-        # prove cross-batch accumulation (not a single-batch echo)
-        # without paying the ~3 s fixed stream cost per extra batch
-        n_files = len(
-            [f for f in _os.listdir(src) if f.endswith(".parquet")]
-        )
-        q = stream_blocklist_scan(
+    src = _staged_documents(spark, sf_dir)
+    # TWO micro-batches regardless of staging width: enough to prove
+    # cross-batch accumulation (not a single-batch echo) without
+    # paying the ~3 s fixed stream cost per extra batch
+    n_files = len([f for f in os.listdir(src) if f.endswith(".parquet")])
+    return _drain_gate(
+        lambda at: stream_blocklist_scan(
             spark,
             src,
             documents.schema,
             phrases,
-            _os.path.join(root, "results"),
-            _os.path.join(root, "ckpt"),
+            at("results"),
+            at("ckpt"),
             max_files_per_trigger=max(1, -(-n_files // 2)),
-        )
-        q.awaitTermination()
-        return (
-            spark.read.parquet(_os.path.join(root, "results"))
-            .select("doc_id", "n_hits", "n_phrases_hit")
-            .localCheckpoint(eager=True)  # outlives the temp dir
-        )
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+        ),
+        lambda at: spark.read.parquet(at("results")).select(
+            "doc_id", "n_hits", "n_phrases_hit"
+        ),
+    )
 
 
 @register("streaming_chi_square_drift", oracle=_CHI2_ORACLE)
@@ -5891,9 +5829,7 @@ def streaming_chi_square_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     bookkeeping), and the serve path reproduces the batch query's
     fixed-order contingency expression over the summed counts. The
     streamed statistic must hash-match the one-shot oracle."""
-    import os as _os
-    import shutil
-    import tempfile
+    import os
 
     from ..streaming.drift import (
         build_source_token_reference,
@@ -5903,44 +5839,30 @@ def streaming_chi_square_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     documents = load(spark, sf_dir, "documents")
     odd = documents.where(F.col("doc_id") % 2 == 1)
-
-    def build(memo_root: str) -> None:
-        import glob as _glob
-
-        src = _os.path.join(memo_root, "incoming")
-        _os.makedirs(src)
-        staging = _os.path.join(memo_root, "staging")
-        odd.repartition(2).write.mode("overwrite").parquet(staging)
-        for i, part in enumerate(
-            _glob.glob(_os.path.join(staging, "part-*.parquet"))
-        ):
-            shutil.copy(part, _os.path.join(src, f"b{i}.parquet"))
-        # the persisted reference is gate INPUT (the re-baseline
-        # discipline) — built once per corpus with the staging
-        build_source_token_reference(
-            documents.where(F.col("doc_id") % 2 == 0),
-            _os.path.join(memo_root, "reference"),
-        )
-
-    memo_root = _memo_scaffold(f"chi2stage:{sf_dir}", build)
-    src = _os.path.join(memo_root, "incoming")
-    root = tempfile.mkdtemp(prefix="chi2_gate_")
-    try:
-        ref = _os.path.join(memo_root, "reference")
-        q = stream_chi_square_counts(
+    src = _stream_source(f"chi2stage:{sf_dir}", odd, 2)
+    # the persisted reference is gate INPUT (the re-baseline
+    # discipline) — built once per corpus, like the staging
+    ref = os.path.join(
+        _memo_scaffold(
+            f"chi2ref:{sf_dir}",
+            lambda root: build_source_token_reference(
+                documents.where(F.col("doc_id") % 2 == 0),
+                os.path.join(root, "reference"),
+            ),
+        ),
+        "reference",
+    )
+    return _drain_gate(
+        lambda at: stream_chi_square_counts(
             spark,
             src,
             odd.schema,
-            _os.path.join(root, "counts"),
-            _os.path.join(root, "ckpt"),
+            at("counts"),
+            at("ckpt"),
             max_files_per_trigger=1,
-        )
-        q.awaitTermination()
-        return chi_square_report(
-            spark, ref, _os.path.join(root, "counts")
-        ).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+        ),
+        lambda at: chi_square_report(spark, ref, at("counts")),
+    )
 
 
 #: the streaming capstone oracle (round 10, +video round 11): the
@@ -6103,10 +6025,6 @@ def streaming_unified_admission(spark: SparkSession, sf_dir: str) -> DataFrame:
     streaming twin of llm_corpus_prep_multimodal. Crash-replay
     bit-identity across all six stores is pinned in
     tests/test_unified_gate.py."""
-    import os as _os
-    import shutil
-    import tempfile
-
     from ..streaming.unified import (
         create_unified_stores,
         stream_ingest_unified,
@@ -6114,41 +6032,21 @@ def streaming_unified_admission(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     documents = load(spark, sf_dir, "documents")
+    src = _staged_documents(spark, sf_dir)
 
-    def build(memo_root: str) -> None:
-        import glob as _glob
-
-        src = _os.path.join(memo_root, "incoming")
-        _os.makedirs(src)
-        staging = _os.path.join(memo_root, "staging")
-        documents.repartition(
-            max(spark.sparkContext.defaultParallelism, 4)
-        ).write.mode("overwrite").parquet(staging)
-        for i, part in enumerate(
-            _glob.glob(_os.path.join(staging, "part-*.parquet"))
-        ):
-            shutil.copy(part, _os.path.join(src, f"b{i}.parquet"))
-
-    src = _os.path.join(
-        _memo_scaffold(f"docstage:{sf_dir}", build), "incoming"
-    )
-    root = tempfile.mkdtemp(prefix="unified_gate_")
-    try:
-        stores = _os.path.join(root, "stores")
-        create_unified_stores(spark, stores, kmv_k=64)
-        q = stream_ingest_unified(
+    def start(at):
+        create_unified_stores(spark, at("stores"), kmv_k=64)
+        return stream_ingest_unified(
             spark,
             src,
             documents.schema,
-            _os.path.join(root, "wh"),
-            stores,
-            _os.path.join(root, "ckpt"),
+            at("wh"),
+            at("stores"),
+            at("ckpt"),
             budgets={"src0": 800, "src1": 800, "src2": 800},
             min_doc_freq=5,
         )
-        q.awaitTermination()
-        return unified_attrition_report(spark, stores).localCheckpoint(
-            eager=True
-        )
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+
+    return _drain_gate(
+        start, lambda at: unified_attrition_report(spark, at("stores"))
+    )

@@ -723,11 +723,6 @@ def scalar_extract_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-#: monotonically unique memory-sink names (one session may run this
-#: query repeatedly; memory sink names are session-global)
-_STREAM_SEQ = [0]
-
-
 @register(
     "streaming_hourly_event_counts",
     oracle="""
@@ -748,48 +743,22 @@ def streaming_hourly_event_counts(spark: SparkSession, sf_dir: str) -> DataFrame
     a claim. Uses a staged file-source directory (file streams read
     directories) and a memory sink."""
     from ..streaming.events import (
+        drain_table_file,
         hourly_event_counts,
         read_events_stream,
-        run_to_memory,
     )
 
-    staged = _stage_events(sf_dir)
-    _STREAM_SEQ[0] += 1
-    name = f"stream_hourly_{_STREAM_SEQ[0]}"
-    try:
-        stream = read_events_stream(spark, staged)
-        query = run_to_memory(hourly_event_counts(stream), name)
-        query.stop()
-    finally:
-        _cleanup_staged(staged)
-    return spark.table(name).select(
+    counts = drain_table_file(
+        spark,
+        os.path.join(sf_dir, "events.parquet"),
+        lambda staged: hourly_event_counts(read_events_stream(spark, staged)),
+    )
+    return counts.select(
         F.date_format("window_start", "yyyy-MM-dd HH:mm:ss").alias("window_start"),
         "event_type",
         "n_events",
         "sum_value",
     )
-
-
-def _stage_events(sf_dir: str) -> str:
-    """Stage events.parquet into a fresh dir (file streams read
-    directories). Callers remove it via :func:`_cleanup_staged` in a
-    finally once the stream has drained — the gate may invoke a query
-    repeatedly, and each leak would be a full events.parquet copy."""
-    import shutil
-    import tempfile
-
-    staged = tempfile.mkdtemp(prefix="events_stream_")
-    shutil.copy(
-        os.path.join(sf_dir, "events.parquet"),
-        os.path.join(staged, "part-000.parquet"),
-    )
-    return staged
-
-
-def _cleanup_staged(staged: str) -> None:
-    import shutil
-
-    shutil.rmtree(staged, ignore_errors=True)
 
 
 # ---------------------------------------------------------------------------

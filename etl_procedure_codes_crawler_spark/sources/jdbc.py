@@ -9,8 +9,8 @@ reference never had to think about — and the part that matters at
 scale — is the **partitioned read**: a single-connection JDBC scan is a
 one-task bottleneck, so ``read_jdbc_query``/``read_jdbc_table`` accept
 ``partition_column/lower/upper/num_partitions`` and fan the scan out
-across executors, each fetching a key-range slice. ``fetchsize`` keeps
-the per-connection row buffer bounded.
+across executors, each fetching a key-range slice. :data:`FETCHSIZE`
+keeps the per-connection row buffer bounded.
 """
 
 from __future__ import annotations
@@ -20,6 +20,9 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession
 
 from .secrets import SecretProvider, parse_secret_json
+
+#: rows each JDBC connection buffers per round trip
+FETCHSIZE = 10_000
 
 
 @dataclass(frozen=True)
@@ -97,7 +100,6 @@ def read_jdbc_query(
     lower_bound: int | None = None,
     upper_bound: int | None = None,
     num_partitions: int = 1,
-    fetchsize: int = 10_000,
 ) -> DataFrame:
     """S4: SQL → DataFrame over JDBC (``utils/postgres.py:88-95``).
 
@@ -108,7 +110,7 @@ def read_jdbc_query(
     reader = (
         spark.read.format("jdbc")
         .options(**conn.options())
-        .option("fetchsize", str(fetchsize))
+        .option("fetchsize", str(FETCHSIZE))
     )
     if partition_column is not None:
         if lower_bound is None or upper_bound is None:

@@ -119,11 +119,17 @@ def hourly_event_counts(
     )
 
 
-def run_to_memory(
-    stream_df: DataFrame, name: str
-):
-    """Drain all available input into a memory sink (test/debug helper);
-    returns the query handle after processing completes."""
+def run_to_memory(stream_df: DataFrame) -> DataFrame:
+    """Drain all available input of ``stream_df`` through a memory sink
+    (complete mode) and return its rows, pinned (localCheckpoint); the
+    sink's temp view is dropped, so repeated drains leave the catalog
+    as they found it. Raises TimeoutError when the stream has not
+    drained within 60 s, rather than return the rows that arrived so
+    far as the result."""
+    import uuid
+
+    spark = stream_df.sparkSession
+    name = f"drain_{uuid.uuid4().hex}"
     query = (
         stream_df.writeStream.format("memory")
         .queryName(name)
@@ -131,5 +137,27 @@ def run_to_memory(
         .trigger(availableNow=True)
         .start()
     )
-    query.awaitTermination(60)
-    return query
+    try:
+        if not query.awaitTermination(60):
+            raise TimeoutError(f"stream {name} did not drain within 60 s")
+        return spark.table(name).localCheckpoint(eager=True)
+    finally:
+        query.stop()
+        spark.catalog.dropTempView(name)
+
+
+def drain_table_file(spark: SparkSession, path: str, build) -> DataFrame:
+    """Copy the table file ``path`` as-is into a fresh file-stream
+    source directory (file streams read directories; the copy keeps
+    the file's own encoding, which is what the stream readers must
+    handle), drain the stream ``build(directory)`` returns through
+    :func:`run_to_memory`, and remove the directory."""
+    import shutil
+    import tempfile
+
+    staged = tempfile.mkdtemp(prefix="table_stream_")
+    try:
+        shutil.copy(path, staged)
+        return run_to_memory(build(staged))
+    finally:
+        shutil.rmtree(staged, ignore_errors=True)

@@ -21,6 +21,10 @@ Exactly-once story (two layers, both needed at scale):
 
 from __future__ import annotations
 
+import os
+import shutil
+import tempfile
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
@@ -28,17 +32,10 @@ from pyspark.sql.types import StructType
 from ..sources.parquet import read_table_or_empty
 
 
-def _budget_stats_schema(source_col: str) -> StructType:
-    from pyspark.sql.types import LongType, StringType, StructField
-
-    return StructType(
-        [
-            StructField("gate_id", StringType()),
-            StructField("batch_id", LongType()),
-            StructField(source_col, StringType()),
-            StructField("n_tokens", LongType()),
-        ]
-    )
+#: the budget stats artifact: one row per (stream, batch, source)
+_BUDGET_STATS_SCHEMA = (
+    "gate_id string, batch_id bigint, source string, n_tokens bigint"
+)
 
 
 def _stream_gate_id(spark: SparkSession, checkpoint_dir: str) -> str:
@@ -128,34 +125,107 @@ def start_file_stream(
     )
 
 
-def read_consumed_tokens(
+def stage_stream_files(
+    df: DataFrame, source_dir: str, prefix: str
+) -> list[str]:
+    """Write ``df`` into the file-stream source ``source_dir`` (created
+    if missing) as one parquet file per partition, named
+    ``{prefix}{i}.parquet``; returns their paths. The files are written
+    to a sibling staging directory first and then renamed in, so a
+    running stream never sees a half-written file."""
+    os.makedirs(source_dir, exist_ok=True)
+    staging = tempfile.mkdtemp(
+        prefix=".staging-", dir=os.path.dirname(os.path.abspath(source_dir))
+    )
+    try:
+        df.write.mode("overwrite").parquet(staging)
+        parts = sorted(
+            f for f in os.listdir(staging)
+            if f.startswith("part-") and f.endswith(".parquet")
+        )
+        staged = []
+        for i, part in enumerate(parts):
+            staged.append(os.path.join(source_dir, f"{prefix}{i}.parquet"))
+            os.replace(os.path.join(staging, part), staged[-1])
+        return staged
+    finally:
+        shutil.rmtree(staging, ignore_errors=True)
+
+
+def drop_warehoused(
+    spark: SparkSession, rows: DataFrame, warehouse_path: str, key: str
+) -> DataFrame:
+    """The replay-safety anti-join of every ingest gate: ``rows`` whose
+    ``key`` the warehouse does not hold yet. Before the warehouse's
+    first append this is ``rows`` itself (one filesystem stat, no join
+    job), which a caller may test with ``is``."""
+    from ..sinks.fsutil import hadoop_fs
+
+    fs, hpath = hadoop_fs(spark, warehouse_path)
+    if not fs.exists(hpath(warehouse_path)):
+        return rows
+    existing = spark.read.parquet(warehouse_path).select(key)
+    return rows.join(existing, key, "left_anti")
+
+
+def strip_at_admission(
     spark: SparkSession,
-    stats_path: str,
-    source_col: str = "source",
-    exclude: tuple[str, int] | None = None,
+    docs: DataFrame,
+    store_path: str,
+    block: int,
+    batch_key: str,
+    min_doc_freq: int,
+) -> DataFrame:
+    """Boilerplate admission for one batch of (pinned, id-unique)
+    ``docs``: their passages explode ONCE (pinned) and feed both the
+    count append to the passage store under ``batch_key`` — the
+    store's (batch_id, fp) read-side dedup collapses a replayed append
+    — and the strip against the store's cumulative frequencies, which
+    include this batch's own counts. ``block`` is the store's passage
+    size. Returns ``docs``' columns, ``doc_id`` first, plus
+    ``(n_passages, n_removed, text_clean)``: ids are unique, so ONE
+    left join attaches the strip result, with ``_rebuild_cleaned``'s
+    0/0/NULL defaults for token-less docs."""
+    from ..llm import passagefreq as PF
+    from ..llm.dedup import passage_rows
+
+    chunks = passage_rows(docs, block).localCheckpoint(eager=True)
+    PF.append_passage_counts(
+        spark, store_path, docs, batch_id=batch_key, chunks=chunks
+    )
+    rebuilt = PF.strip_rebuilt_against_store(
+        spark, store_path, chunks, min_doc_freq
+    ).withColumnRenamed("id", "doc_id")
+    cols = ["doc_id"] + [c for c in docs.columns if c != "doc_id"]
+    return docs.join(rebuilt, "doc_id", "left").select(
+        *cols,
+        F.coalesce("n_passages", F.lit(0)).alias("n_passages"),
+        F.coalesce("n_removed", F.lit(0)).alias("n_removed"),
+        F.col("text_clean"),
+    )
+
+
+def read_consumed_tokens(
+    spark: SparkSession, stats_path: str, gate_id: str, batch_id: int
 ) -> DataFrame:
     """Per-source consumed-token totals from the stats artifact — a
     relation of O(batches × sources) rows, NOT the corpus. Rows are
     deduped on (gate_id, batch_id, source) first: crash-replayed
     batches re-append byte-identical rows, so any surviving duplicate
-    is exact and dedup restores the true sum. With ``exclude`` set to
-    the calling batch's own (gate_id, batch_id), the batch sees the
-    world as of BEFORE its first attempt — the replay-determinism
+    is exact and dedup restores the true sum. The calling batch's own
+    rows (``gate_id``, ``batch_id``) are left out, so the batch sees
+    the world as of BEFORE its first attempt — the replay-determinism
     contract of the unified gate's budget stage (:mod:`.unified`)."""
-    stats = read_table_or_empty(
-        spark, stats_path, _budget_stats_schema(source_col)
-    )
-    if exclude is not None:
-        gid, bid = exclude
-        stats = stats.filter(
+    return (
+        read_table_or_empty(spark, stats_path, _BUDGET_STATS_SCHEMA)
+        .filter(
             ~(
-                (F.col("gate_id") == F.lit(gid))
-                & (F.col("batch_id") == F.lit(int(bid)))
+                (F.col("gate_id") == F.lit(gate_id))
+                & (F.col("batch_id") == F.lit(int(batch_id)))
             )
         )
-    return (
-        stats.dropDuplicates(["gate_id", "batch_id", source_col])
-        .groupBy(source_col)
+        .dropDuplicates(["gate_id", "batch_id", "source"])
+        .groupBy("source")
         .agg(F.sum("n_tokens").alias("_used"))
     )
 
@@ -164,12 +234,10 @@ def budget_filter(
     fresh: DataFrame,
     consumed: DataFrame,
     budgets: dict[str, int],
-    key: str = "doc_id",
-    source_col: str = "source",
     text_col: str = "text",
 ) -> DataFrame:
     """The pure gate decision: keep each document whose per-source
-    running token sum (in ``key`` order — deterministic, so a replay
+    running token sum (in ``doc_id`` order — deterministic, so a replay
     re-makes identical decisions) fits within ``budget − consumed``.
     Sources missing from ``budgets`` are UNCAPPED (a new source
     appearing mid-stream must not be silently dropped). Returns the
@@ -182,9 +250,9 @@ def budget_filter(
     budget_col = None
     for src, cap in sorted(budgets.items()):
         branch = (
-            F.when(F.col(source_col) == src, F.lit(int(cap)))
+            F.when(F.col("source") == src, F.lit(int(cap)))
             if budget_col is None
-            else budget_col.when(F.col(source_col) == src, F.lit(int(cap)))
+            else budget_col.when(F.col("source") == src, F.lit(int(cap)))
         )
         budget_col = branch
     budget_col = (
@@ -193,14 +261,14 @@ def budget_filter(
         else F.lit(None).cast("bigint")
     )
     w = (
-        Window.partitionBy(source_col)
-        .orderBy(F.asc(key))
+        Window.partitionBy("source")
+        .orderBy(F.asc("doc_id"))
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
     return (
         fresh.withColumn("_n_tok", token_count(text_col))
         .withColumn("_cum", F.sum("_n_tok").over(w))
-        .join(F.broadcast(consumed), source_col, "left")
+        .join(F.broadcast(consumed), "source", "left")
         .withColumn("_budget", budget_col)
         .filter(
             F.col("_budget").isNull()
@@ -264,30 +332,18 @@ def stream_ingest_media_neardup(
             .dropDuplicates(["media_id"])
             .localCheckpoint(eager=True)  # small: ids + 64-bit hashes
         )
-        # missing-warehouse fast path: before the first accepted batch
-        # there is nothing to heal against and nothing to anti-join —
-        # one filesystem stat instead of two join jobs
-        from ..sinks.fsutil import hadoop_fs
-
-        fs, hpath = hadoop_fs(spark, warehouse_path)
-        if not fs.exists(hpath(warehouse_path)):
-            hashes = hashes_all
-        else:
-            existing = read_table_or_empty(
-                spark, warehouse_path, batch.schema
-            ).select("media_id")
+        hashes = drop_warehoused(spark, hashes_all, warehouse_path, "media_id")
+        if hashes is not hashes_all:
+            hashes = hashes.localCheckpoint(eager=True)
             # heal-first: re-offer already-warehoused batch objects to
             # the store (its id anti-join no-ops the steady state) so a
             # crash between a prior warehouse append and store append
             # cannot leave accepted objects unsigned
-            warehoused_h = hashes_all.join(existing, "media_id", "left_semi")
+            warehoused_h = hashes_all.join(hashes, "media_id", "left_anti")
             if not warehoused_h.isEmpty():
                 PS.append_to_phash_store(
                     spark, store_path, warehoused_h
                 )
-            hashes = hashes_all.join(
-                existing, "media_id", "left_anti"
-            ).localCheckpoint(eager=True)
         if hashes.isEmpty():
             return
         intra_pairs = hamming_band_pairs(
@@ -378,75 +434,34 @@ def stream_ingest_with_boilerplate(
     (``strip_boilerplate_against_store`` over the warehouse) upgrades
     any document to the full-corpus judgment without rescanning
     history."""
+    from functools import cache
+
     from ..llm import passagefreq as PF
 
-    _cache: dict[str, object] = {}
+    # fixed for the stream's lifetime: one read per stream, not one
+    # whole job per micro-batch
+    gate_id = cache(lambda: _stream_gate_id(spark, checkpoint_dir))
+    block = cache(lambda: PF.load_passage_freq_meta(spark, store_path)["block"])
 
     def _sink(batch: DataFrame, batch_id: int) -> None:
-        rows = (
-            batch.filter(F.col("doc_id").isNotNull())
-            .dropDuplicates(["doc_id"])
-            .localCheckpoint(eager=True)  # counted + stripped + joined
+        rows = batch.filter(F.col("doc_id").isNotNull()).dropDuplicates(
+            ["doc_id"]
         )
-        from ..sinks.fsutil import hadoop_fs
-
-        fs, hpath = hadoop_fs(spark, warehouse_path)
-        if fs.exists(hpath(warehouse_path)):
-            existing_ids = (
-                spark.read.parquet(warehouse_path).select("doc_id")
-            )
-            fresh = rows.join(
-                existing_ids, "doc_id", "left_anti"
-            ).localCheckpoint(eager=True)
-        else:
-            fresh = rows
+        fresh = drop_warehoused(
+            spark, rows, warehouse_path, "doc_id"
+        ).localCheckpoint(eager=True)  # counted + stripped + joined
         if fresh.isEmpty():
             return
-        # counts BEFORE warehouse (crash contract above); the batch
-        # key makes the replayed append a read-side no-op. The batch's
-        # passage rows explode ONCE (checkpointed) and feed both the
-        # count append and the strip — the count/strip pair would
-        # otherwise re-tokenize the batch twice.
-        from ..llm.dedup import passage_rows
-
-        gate_id = _stream_gate_id(spark, checkpoint_dir)
-        if "pf_meta" not in _cache:
-            # store meta is immutable for the store's lifetime — one
-            # read per stream, not one whole job per micro-batch
-            _cache["pf_meta"] = PF.load_passage_freq_meta(
-                spark, store_path
-            )
-        meta = _cache["pf_meta"]
-        chunks = passage_rows(
-            fresh, meta["block"], "text", "doc_id"
-        ).localCheckpoint(eager=True)
-        PF.append_passage_counts(
+        strip_at_admission(
             spark,
-            store_path,
             fresh,
-            "text",
-            "doc_id",
-            batch_id=f"{gate_id}-{int(batch_id)}",
-            chunks=chunks,
+            store_path,
+            block(),
+            f"{gate_id()}-{int(batch_id)}",
+            min_doc_freq,
+        ).write.mode("append").option("compression", "snappy").parquet(
+            warehouse_path
         )
-        # ONE left join attaches the strip result (round 13, guide
-        # §2.4; ids are unique per batch — dropDuplicates above): the
-        # generic strip's dropDuplicates + doc join + second attach
-        # join collapse to this, with _rebuild_cleaned's exact
-        # 0/0/NULL defaults for token-less docs
-        rebuilt = PF.strip_rebuilt_against_store(
-            spark, store_path, chunks, min_doc_freq
-        ).withColumnRenamed("id", "doc_id")
-        _cols = ["doc_id"] + [c for c in fresh.columns if c != "doc_id"]
-        stripped = fresh.join(rebuilt, "doc_id", "left").select(
-            *_cols,
-            F.coalesce("n_passages", F.lit(0)).alias("n_passages"),
-            F.coalesce("n_removed", F.lit(0)).alias("n_removed"),
-            F.col("text_clean"),
-        )
-        stripped.write.mode("append").option(
-            "compression", "snappy"
-        ).parquet(warehouse_path)
 
     return start_file_stream(
         spark, schema, source_dir, checkpoint_dir, _sink

@@ -14,20 +14,19 @@ Admission pipeline per micro-batch (order is the policy):
    fingerprint, then rejection against the persisted fingerprint
    store (same-id store rows are ignored, so crash replays never
    self-reject);
-2. **media near-dup** — each doc's media view (default: a real PNG of
-   its first 8 tokens — the re-hosted-image-different-caption case
+2. **media near-dup** — each doc's media view (a real PNG of its
+   first 8 tokens — the re-hosted-image-different-caption case
    exact text dedup cannot see) is decoded + perceptually hashed in
-   one Arrow pass; CANDIDATES come from the 4-band hamming join
-   (intra-batch and against the persisted media store) and a doc is
-   rejected ONLY on exact decoded-content match (the
-   candidates→verify discipline that makes the gate decision
-   deterministic and DuckDB-expressible). Undecodable media admits
-   the doc — no perceptual identity, and the exact gate already held;
-2b. **video near-dup** (round 11) — each image-gate survivor's clip
-   view (a real MJPEG-in-MP4 of its first 3 tokens — coarser than
-   the PNG class, the re-hosted-preview-clip case the image gate
-   cannot pair) is keyframe-decoded; candidates come from the same
-   4-band hamming join on the first keyframe's dHash, and rejection
+   one Arrow pass, and a doc is rejected ONLY on exact decoded-content
+   match with a lower id in the batch or a persisted media-store row
+   (equal content implies equal hashes, so this is the hamming
+   candidates→verify decision, computed directly: deterministic and
+   DuckDB-expressible). Undecodable media admits the doc — no
+   perceptual identity, and the exact gate already held;
+2b. **video near-dup** (round 11) — the same block over each
+   image-gate survivor's clip view (a real MJPEG-in-MP4 of its first
+   3 tokens — coarser than the PNG class, the re-hosted-preview-clip
+   case the image gate cannot pair), keyframe-decoded; rejection
    requires exact clip-content match. A clip has identity only if
    its container parses AND every keyframe decodes;
 3. **boilerplate strip at admission** — the batch's passage counts
@@ -62,6 +61,8 @@ are metadata-sized.
 
 from __future__ import annotations
 
+from functools import partial
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
@@ -75,9 +76,11 @@ from ..sources.parquet import read_table_or_empty
 from .incremental import (
     _stream_gate_id,
     budget_filter,
+    drop_warehoused,
     narrow_shuffle,
     read_consumed_tokens,
     start_file_stream,
+    strip_at_admission,
 )
 
 #: media-view geometry shared with the SQL oracle: the PNG carries the
@@ -128,38 +131,38 @@ def create_unified_stores(
     return paths
 
 
-def png_prefix_media_hashes(
-    docs: DataFrame,
-    prefix_tokens: int = MEDIA_PREFIX_TOKENS,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
-    """The default media view: a real PNG of the doc's leading tokens,
-    synthesized + decoded + dHashed + content-sha'd in one FUSED Arrow
-    pass (multimodal.image_hashes_from_documents — round 13, guide
-    §4.1: the payload bytes never cross the Python↔JVM boundary).
-    Returns (media_id, phash, content_sha, decode_error)."""
-    from ..llm import multimodal as MM
-
-    view = docs.select(
-        F.col(id_col).cast("bigint").alias("doc_id"),
+def _prefix_view(docs: DataFrame, prefix_tokens: int) -> DataFrame:
+    """(doc_id, text, source) with each doc's text cut to its first
+    ``prefix_tokens`` whitespace tokens — the input of both media
+    views."""
+    return docs.select(
+        F.col("doc_id").cast("bigint").alias("doc_id"),
         F.concat_ws(
-            " ", F.slice(T.tokens(text_col), 1, prefix_tokens)
+            " ", F.slice(T.tokens("text"), 1, prefix_tokens)
         ).alias("text"),
         F.lit("unified").alias("source"),
     )
-    return MM.image_hashes_from_documents(view, content_key=True)
 
 
-def mjpeg_prefix_video_hashes(
-    docs: DataFrame,
-    prefix_tokens: int = VIDEO_PREFIX_TOKENS,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def png_prefix_media_hashes(docs: DataFrame) -> DataFrame:
+    """The media view (gate 2): a real PNG of the doc's leading
+    :data:`MEDIA_PREFIX_TOKENS` tokens, synthesized + decoded + dHashed
+    + content-sha'd in one FUSED Arrow pass
+    (multimodal.image_hashes_from_documents — round 13, guide §4.1:
+    the payload bytes never cross the Python↔JVM boundary). Returns
+    (media_id, phash, content_sha, decode_error)."""
+    from ..llm import multimodal as MM
+
+    return MM.image_hashes_from_documents(
+        _prefix_view(docs, MEDIA_PREFIX_TOKENS), content_key=True
+    )
+
+
+def mjpeg_prefix_video_hashes(docs: DataFrame) -> DataFrame:
     """The video view (round 11, gate 2b): a real MJPEG-in-MP4 clip of
-    the doc's leading tokens (llm/video.py), keyframe-decoded in one
-    Arrow pass. Returns (media_id, phash, content_sha, decode_error):
+    the doc's leading :data:`VIDEO_PREFIX_TOKENS` tokens (llm/video.py),
+    keyframe-decoded in one Arrow pass. Returns (media_id, phash,
+    content_sha, decode_error):
 
     - phash = the FIRST keyframe's dHash — one 64-bit signature per
       clip, riding the same 4-band hamming candidate machinery;
@@ -170,21 +173,15 @@ def mjpeg_prefix_video_hashes(
     - a clip has perceptual identity ONLY if its container parses and
       EVERY keyframe decodes (decode_error NULL). Corrupt containers
       (every 50th doc) and broken keyframes (every other 37th) admit
-      — no identity, and the exact-text gate already held."""
+      — no identity, and the exact-text gate already held.
+
+    Synthesis and identity run as ONE FUSED mapInPandas (round 13,
+    guide §4.1) — payloads never leave the Python worker."""
     from ..llm import video as V
 
-    view = docs.select(
-        F.col(id_col).cast("bigint").alias("doc_id"),
-        F.concat_ws(
-            " ", F.slice(T.tokens(text_col), 1, prefix_tokens)
-        ).alias("text"),
-        F.lit("unified").alias("source"),
+    return V.clip_identity_from_documents(
+        _prefix_view(docs, VIDEO_PREFIX_TOKENS)
     )
-    # synthesis and identity run as ONE FUSED mapInPandas (round 13,
-    # guide §4.1) — payloads never leave the Python worker, where the
-    # round-11 two-operator chain still Arrow-serialized every clip
-    # out of the synth pass and back into the identity pass
-    return V.clip_identity_from_documents(view)
 
 
 _FP_SCHEMA = "id bigint, fp string"
@@ -195,13 +192,12 @@ def _content_dup_losers(
     spark: SparkSession,
     hashes: DataFrame,
     store_path: str,
-    max_hamming: int,
 ):
-    """One modality's candidates→content-verify rejection: intra-batch
-    losers (non-min-id per exact decoded/byte content among hamming
-    candidates) plus store losers (content matches a persisted row).
-    Returns (rejected_ids, store_df, identity_rows) — the shared
-    discipline of gates 2 (PNG) and 2b (video).
+    """One modality's content-verify rejection: intra-batch losers
+    (non-min-id per exact decoded/byte content) plus store losers
+    (content matches a persisted row). Returns (rejected_ids,
+    store_df) — the shared discipline of gates 2 (PNG) and 2b
+    (video).
 
     Round 13 (guide §2.4, remove shuffles outright): the hamming band
     join is PROVABLY REDUNDANT for this gate, because its verifier is
@@ -242,7 +238,7 @@ def _content_dup_losers(
         # first batch: nothing persisted to collide with — skip the
         # store probe (a provably-empty probe side cannot reject
         # anything; semantics identical)
-        return intra_losers, store, hv
+        return intra_losers, store
     store_losers = (
         hv.join(intra_losers, "id", "left_anti")
         .select("id", "content_sha")
@@ -258,7 +254,7 @@ def _content_dup_losers(
         .distinct()
     )
     rejected = intra_losers.unionByName(store_losers).distinct()
-    return rejected, store, hv
+    return rejected, store
 
 
 def stream_ingest_unified(
@@ -270,13 +266,6 @@ def stream_ingest_unified(
     checkpoint_dir: str,
     budgets: dict[str, int],
     min_doc_freq: int = 5,
-    media_hasher=png_prefix_media_hashes,
-    video_hasher=mjpeg_prefix_video_hashes,
-    max_hamming: int = 3,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    source_col: str = "source",
-    max_files_per_trigger: int | None = None,
 ):
     """Run the five-gate admission pipeline over arriving document
     files. Call :func:`create_unified_stores` on ``stores_root``
@@ -285,16 +274,19 @@ def stream_ingest_unified(
     sink's ~15 exchanges are all batch-sized, so its body runs at
     :data:`.incremental.GATE_SHUFFLE_PARTITIONS`, like the media
     gate's."""
+    from functools import cache
+
     paths = unified_store_paths(stores_root)
-    gate_cache: dict[str, str] = {}
+    # fixed for the stream's lifetime: one read per stream, not one
+    # whole job per micro-batch
+    gate_id = cache(lambda: _stream_gate_id(spark, checkpoint_dir))
+    pf_block = cache(
+        lambda: PF.load_passage_freq_meta(spark, paths["passages"])["block"]
+    )
+    kmv_meta = cache(lambda: KV.load_kmv_meta(spark, paths["kmv"]))
 
     @narrow_shuffle(spark)
     def _sink(batch: DataFrame, batch_id: int) -> None:
-        from ..sinks.fsutil import hadoop_fs
-
-        if "id" not in gate_cache:
-            gate_cache["id"] = _stream_gate_id(spark, checkpoint_dir)
-        gate_id = gate_cache["id"]
         run_id = str(int(batch_id))
 
         def _label(phase: str) -> None:
@@ -305,36 +297,37 @@ def stream_ingest_unified(
             )
 
         _label("arrival guard")
-        rows = batch.filter(F.col(id_col).isNotNull())
+        rows = batch.filter(F.col("doc_id").isNotNull())
         # Loud, not silent: the funnel counts one row per doc id and
         # the SQL oracle counts every non-NULL-id row — a corpus with
         # duplicate ids would diverge invisibly if we just
         # dropDuplicates()-ed here. Batch-sized agg, one job.
         tot, uniq = rows.agg(
-            F.count(F.lit(1)), F.countDistinct(id_col)
+            F.count(F.lit(1)), F.countDistinct("doc_id")
         ).first()
         if tot != uniq:
             raise ValueError(
                 f"unified gate batch {batch_id}: {tot - uniq} duplicate "
-                f"{id_col} rows in one batch — per-doc admission "
+                "doc_id rows in one batch — per-doc admission "
                 "bookkeeping cannot represent them; dedup ids upstream"
             )
         _label("warehouse anti-join + batch pin")
-        fs, hpath = hadoop_fs(spark, warehouse_path)
-        if fs.exists(hpath(warehouse_path)):
-            existing_ids = spark.read.parquet(warehouse_path).select(id_col)
-            fresh = rows.join(existing_ids, id_col, "left_anti")
-        else:
-            fresh = rows
-        fresh = fresh.localCheckpoint(eager=True)
+        fresh = drop_warehoused(
+            spark, rows, warehouse_path, "doc_id"
+        ).localCheckpoint(eager=True)
         if fresh.isEmpty():
             return
+
+        def _docs(ids: DataFrame) -> DataFrame:
+            return fresh.join(
+                ids.select(F.col("id").alias("doc_id")), "doc_id", "left_semi"
+            )
 
         # ---- gate 1: exact content dedup --------------------------
         _label("gate 1: exact dedup")
         fpd = fresh.select(
-            F.col(id_col).cast("bigint").alias("id"),
-            T.fingerprint_sha256(text_col).alias("fp"),
+            F.col("doc_id").cast("bigint").alias("id"),
+            T.fingerprint_sha256("text").alias("fp"),
         ).localCheckpoint(eager=True)
         intra_keep = fpd.groupBy("fp").agg(F.min("id").alias("id"))
         store_fp = read_table_or_empty(
@@ -362,117 +355,57 @@ def stream_ingest_unified(
                 store_hit, "id", "left_anti"
             ).localCheckpoint(eager=True)
 
-        # ---- gate 2: media near-dup (candidates -> content verify) -
-        _label("gate 2: image hash pass")
-        exact_docs = fresh.join(
-            exact_ids.select(F.col("id").alias(id_col)), id_col, "left_semi"
-        )
-        hashes = (
-            media_hasher(exact_docs, id_col=id_col, text_col=text_col)
-            .select(
-                F.col("media_id").cast("bigint").alias("id"),
-                "phash",
-                "content_sha",
-                "decode_error",
+        # ---- gates 2 (image) and 2b (video): near-dup -------------
+        # candidates -> content verify on each survivor's media view,
+        # one decode pass each (pinned: reused by the verify and the
+        # store commit). The clip's 3-token class is coarser than the
+        # PNG's 8, so 2b fires on docs the image gate cannot pair;
+        # undecodable media carry no identity and admit.
+        survivors, hashed = [exact_ids], []
+        for gate, hasher, store_path in (
+            ("2: image", png_prefix_media_hashes, paths["media"]),
+            ("2b: clip", mjpeg_prefix_video_hashes, paths["video"]),
+        ):
+            _label(f"gate {gate} hash pass")
+            hashes = (
+                hasher(_docs(survivors[-1]))
+                .select(
+                    F.col("media_id").cast("bigint").alias("id"),
+                    "phash",
+                    "content_sha",
+                    "decode_error",
+                )
+                .localCheckpoint(eager=True)
             )
-            .localCheckpoint(eager=True)  # one decode pass, reused 4x
-        )
-        _label("gate 2: image pair verify")
-        media_rejected, store_media, _ = _content_dup_losers(
-            spark, hashes, paths["media"], max_hamming
-        )
-        media_ids = exact_ids.join(
-            media_rejected, "id", "left_anti"
-        ).localCheckpoint(eager=True)
-
-        # ---- gate 2b: video near-dup on the image survivors --------
-        # same candidates->content-verify discipline over the clip
-        # view (its 3-token class is coarser than the PNG gate's 8, so
-        # it fires on docs the image gate cannot pair); undecodable
-        # clips carry no identity and admit
-        md_docs = fresh.join(
-            media_ids.select(F.col("id").alias(id_col)), id_col, "left_semi"
-        )
-        _label("gate 2b: clip hash pass")
-        vhashes = (
-            video_hasher(md_docs, id_col=id_col, text_col=text_col)
-            .select(
-                F.col("media_id").cast("bigint").alias("id"),
-                "phash",
-                "content_sha",
-                "decode_error",
+            _label(f"gate {gate} pair verify")
+            rejected, store = _content_dup_losers(spark, hashes, store_path)
+            survivors.append(
+                survivors[-1].join(rejected, "id", "left_anti")
+                .localCheckpoint(eager=True)
             )
-            .localCheckpoint(eager=True)
-        )
-        _label("gate 2b: clip pair verify")
-        video_rejected, store_video, _ = _content_dup_losers(
-            spark, vhashes, paths["video"], max_hamming
-        )
-        video_ids = media_ids.join(
-            video_rejected, "id", "left_anti"
-        ).localCheckpoint(eager=True)
+            hashed.append((hashes, store, store_path))
+        _, media_ids, video_ids = survivors
 
         # ---- gate 3: boilerplate strip at admission ----------------
+        # Not pinned: consumed exactly once by budget_filter, whose
+        # accepted output is the pinned relation.
         _label("gate 3: passage count + strip")
-        surv_docs = fresh.join(
-            video_ids.select(F.col("id").alias(id_col)), id_col, "left_semi"
-        ).localCheckpoint(eager=True)
-        from ..llm.dedup import passage_rows
-
-        if "pf_meta" not in gate_cache:
-            # store meta is immutable for the store's lifetime — one
-            # read per stream, not one whole job per micro-batch
-            gate_cache["pf_meta"] = PF.load_passage_freq_meta(
-                spark, paths["passages"]
-            )
-        meta = gate_cache["pf_meta"]
-        chunks = passage_rows(
-            surv_docs, meta["block"], text_col, id_col
-        ).localCheckpoint(eager=True)
-        PF.append_passage_counts(
+        stripped = strip_at_admission(
             spark,
+            _docs(video_ids).localCheckpoint(eager=True),
             paths["passages"],
-            surv_docs,
-            text_col,
-            id_col,
-            batch_id=f"{gate_id}-{int(batch_id)}",
-            chunks=chunks,
-        )
-        rebuilt = PF.strip_rebuilt_against_store(
-            spark, paths["passages"], chunks, min_doc_freq
-        ).withColumnRenamed("id", id_col)
-        # ONE left join attaches the strip result (round 13, guide
-        # §2.4): ids are unique per batch (the loud guard above), so
-        # the generic strip's dropDuplicates + doc-relation join +
-        # second attach join collapse to this single join with the
-        # same 0/0/NULL defaults _rebuild_cleaned produces for
-        # token-less docs. Not checkpointed: consumed exactly once by
-        # budget_filter, whose accepted output is the pinned relation.
-        _surv_cols = [id_col] + [
-            c for c in surv_docs.columns if c != id_col
-        ]
-        stripped = surv_docs.join(rebuilt, id_col, "left").select(
-            *_surv_cols,
-            F.coalesce("n_passages", F.lit(0)).alias("n_passages"),
-            F.coalesce("n_removed", F.lit(0)).alias("n_removed"),
-            F.col("text_clean"),
+            pf_block(),
+            f"{gate_id()}-{int(batch_id)}",
+            min_doc_freq,
         )
 
         # ---- gate 4: per-source token budgets on CLEAN text --------
         _label("gate 4: budgets")
         consumed = read_consumed_tokens(
-            spark,
-            paths["budget_stats"],
-            source_col,
-            exclude=(gate_id, int(batch_id)),
+            spark, paths["budget_stats"], gate_id(), batch_id
         )
         accepted = budget_filter(
-            stripped,
-            consumed,
-            budgets,
-            key=id_col,
-            source_col=source_col,
-            text_col="text_clean",
+            stripped, consumed, budgets, text_col="text_clean"
         ).localCheckpoint(eager=True)
 
         # ---- commits: every store BEFORE the warehouse -------------
@@ -485,19 +418,7 @@ def stream_ingest_unified(
         # store write precedes the warehouse append) is unchanged.
         _label("store commits")
         batch_empty = accepted.isEmpty()
-        delta = (
-            accepted.groupBy(source_col)
-            .agg(F.sum("_n_tok").alias("n_tokens"))
-            .select(
-                F.lit(gate_id).alias("gate_id"),
-                F.lit(int(batch_id)).cast("bigint").alias("batch_id"),
-                F.col(source_col),
-                F.col("n_tokens").cast("bigint").alias("n_tokens"),
-            )
-        )
-        acc_ids = accepted.select(
-            F.col(id_col).cast("bigint").alias("id")
-        )
+        acc_ids = accepted.select(F.col("doc_id").cast("bigint").alias("id"))
         # round 13: the three hash-store appends write UNCONDITIONALLY
         # — each old isEmpty() guard computed the append's whole join
         # lineage once just to decide whether to compute it again for
@@ -505,51 +426,47 @@ def stream_ingest_unified(
         # append commits an empty parquet part, which the read path
         # (read_table_or_empty + dropDuplicates disciplines) already
         # handles; replay idempotency is untouched (same anti-joins).
-        fp_new = fpd.join(acc_ids, "id", "left_semi")
+        def _append(df: DataFrame, path: str):
+            return partial(df.write.mode("append").parquet, path)
+
         fp_seen = read_table_or_empty(
             spark, paths["fingerprints"], _FP_SCHEMA
         ).select("id")
-        fp_new = fp_new.join(fp_seen, "id", "left_anti")
-        med_new = (
-            hashes.filter(F.col("phash").isNotNull())
-            .join(acc_ids, "id", "left_semi")
-            .select("id", "phash", "content_sha")
-            .join(store_media.select("id"), "id", "left_anti")
-        )
-        vid_new = (
-            vhashes.filter(F.col("phash").isNotNull())
-            .join(acc_ids, "id", "left_semi")
-            .select("id", "phash", "content_sha")
-            .join(store_video.select("id"), "id", "left_anti")
-        )
-
-        def _commit_delta() -> None:
-            delta.repartition(1).write.mode("append").parquet(
-                paths["budget_stats"]
+        commits = [
+            _append(
+                fpd.join(acc_ids, "id", "left_semi").join(
+                    fp_seen, "id", "left_anti"
+                ),
+                paths["fingerprints"],
             )
-
-        def _commit_fp() -> None:
-            fp_new.write.mode("append").parquet(paths["fingerprints"])
-
-        def _commit_media() -> None:
-            med_new.write.mode("append").parquet(paths["media"])
-
-        def _commit_video() -> None:
-            vid_new.write.mode("append").parquet(paths["video"])
-
-        def _commit_kmv() -> None:
-            if "kmv_meta" not in gate_cache:
-                gate_cache["kmv_meta"] = KV.load_kmv_meta(
-                    spark, paths["kmv"]
-                )
-            KV.append_to_kmv_store(
-                spark, paths["kmv"], accepted, source_col, "text_clean",
-                meta=gate_cache["kmv_meta"],
+        ] + [
+            _append(
+                hashes.filter(F.col("phash").isNotNull())
+                .join(acc_ids, "id", "left_semi")
+                .select("id", "phash", "content_sha")
+                .join(store.select("id"), "id", "left_anti"),
+                store_path,
             )
-
-        commits = [_commit_fp, _commit_media, _commit_video]
+            for hashes, store, store_path in hashed
+        ]
         if not batch_empty:
-            commits += [_commit_delta, _commit_kmv]
+            delta = (
+                accepted.groupBy("source")
+                .agg(F.sum("_n_tok").alias("n_tokens"))
+                .select(
+                    F.lit(gate_id()).alias("gate_id"),
+                    F.lit(int(batch_id)).cast("bigint").alias("batch_id"),
+                    F.col("source"),
+                    F.col("n_tokens").cast("bigint").alias("n_tokens"),
+                )
+            )
+            commits += [
+                _append(delta.repartition(1), paths["budget_stats"]),
+                lambda: KV.append_to_kmv_store(
+                    spark, paths["kmv"], accepted, "text_clean",
+                    meta=kmv_meta(),
+                ),
+            ]
 
         from concurrent.futures import ThreadPoolExecutor
 
@@ -581,7 +498,7 @@ def stream_ingest_unified(
         # above), so max-per-id flags summed per source reproduce
         # every funnel count exactly as the join form did.
         src_of = fresh.select(
-            F.col(id_col).cast("bigint").alias("id"), source_col
+            F.col("doc_id").cast("bigint").alias("id"), "source"
         )
         _z = F.lit(0).cast("bigint")
 
@@ -601,7 +518,7 @@ def stream_ingest_unified(
             .unionByName(_flag_rows(video_ids, "_vd"))
             .unionByName(
                 accepted.select(
-                    F.col(id_col).cast("bigint").alias("id"),
+                    F.col("doc_id").cast("bigint").alias("id"),
                     _z.alias("_ex"), _z.alias("_md"), _z.alias("_vd"),
                     F.lit(1).cast("bigint").alias("_acc"),
                     F.col("n_removed").cast("bigint").alias("_rm"),
@@ -619,7 +536,7 @@ def stream_ingest_unified(
         )
         att = (
             src_of.join(flags, "id", "left")
-            .groupBy(source_col)
+            .groupBy("source")
             .agg(
                 F.count(F.lit(1)).alias("n_arrived"),
                 F.sum(F.coalesce("_ex", F.lit(0))).alias("_ae"),
@@ -630,7 +547,7 @@ def stream_ingest_unified(
                 F.sum(F.coalesce("_tok", F.lit(0))).alias("_toks"),
             )
             .select(
-                F.col(source_col),
+                F.col("source"),
                 F.col("n_arrived"),
                 (F.col("n_arrived") - F.col("_ae"))
                 .cast("bigint").alias("n_exact_rejected"),
@@ -656,8 +573,7 @@ def stream_ingest_unified(
         spark.sparkContext.setJobDescription(None)
 
     return start_file_stream(
-        spark, schema, source_dir, checkpoint_dir, _sink,
-        max_files_per_trigger,
+        spark, schema, source_dir, checkpoint_dir, _sink
     )
 
 

@@ -137,13 +137,12 @@ class TestTvBetween:
 
 class TestStreamingDriftMonitor:
     def test_replayed_batch_replaces_its_metric_row(self, spark, tmp_path):
-        import glob
-        import os
-        import shutil
-
         from etl_procedure_codes_crawler_spark.streaming.drift import (
             build_token_reference,
             stream_token_drift,
+        )
+        from etl_procedure_codes_crawler_spark.streaming.incremental import (
+            stage_stream_files,
         )
 
         docs = spark.createDataFrame(
@@ -152,11 +151,7 @@ class TestStreamingDriftMonitor:
         ref = str(tmp_path / "ref")
         build_token_reference(docs, ref)
         src = tmp_path / "in"
-        src.mkdir()
-        staging = str(tmp_path / "stage")
-        docs.coalesce(1).write.mode("overwrite").parquet(staging)
-        part = glob.glob(os.path.join(staging, "part-*.parquet"))[0]
-        shutil.copy(part, str(src / "b1.parquet"))
+        stage_stream_files(docs.coalesce(1), str(src), "b")
         metrics = str(tmp_path / "metrics")
 
         def run(ck):

@@ -177,14 +177,15 @@ def _defined_names(stmt: ast.stmt) -> list[str]:
 
 
 class _Source:
-    """One parsed file: its definitions and its import bindings."""
+    """One parsed file (or ``text`` standing for that file): its
+    definitions and its import bindings."""
 
-    def __init__(self, path: Path):
+    def __init__(self, path: Path, text: str | None = None):
         self.name = _module_name(path)
         self.package = (
             self.name if path.name == "__init__.py" else self.name.rpartition(".")[0]
         )
-        self.tree = _parse(path)
+        self.tree = _parse(path) if text is None else ast.parse(text)
         self.defs: dict[str, list[ast.stmt]] = {}
         #: statements that run on import, and registered query builders
         self.on_import: list[ast.stmt] = []
@@ -215,10 +216,11 @@ class _Source:
 
 
 class _Graph:
-    """Name-level references between the package's definitions."""
+    """Name-level references between the package's definitions (by
+    default, the package's own modules)."""
 
-    def __init__(self):
-        self.sources = {
+    def __init__(self, sources: dict[str, _Source] | None = None):
+        self.sources = sources if sources is not None else {
             name: _Source(path) for name, path in _package_modules().items()
         }
 
@@ -445,14 +447,20 @@ def _all_params(fn: ast.FunctionDef) -> list[str]:
 class _Scope:
     """Where a call sits: its class, the parameters in reach (each
     mapped to the package function that owns it, or None for a nested
-    function or lambda), and every name bound locally."""
+    function or lambda), every name bound locally, and the ``**``
+    parameters in reach that no call fills."""
 
-    def __init__(self, cls=None, params=None, local=frozenset()):
+    def __init__(
+        self, cls=None, params=None, local=frozenset(), empty=frozenset()
+    ):
         self.cls = cls
         self.params: dict[str, str | None] = params or {}
         self.local: frozenset[str] = local
+        self.empty: frozenset[str] = empty
 
-    def enter(self, node, owner: str | None) -> "_Scope":
+    def enter(self, node, owner: str | None, unfilled: bool) -> "_Scope":
+        """The scope inside function ``node``; ``unfilled``: no call
+        fills its ``**`` parameter."""
         args = node.args
         names = {
             a.arg
@@ -470,18 +478,68 @@ class _Scope:
                 n, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
             ):
                 bound.add(n.name)
+        empty = self.empty - names
+        if unfilled:
+            empty |= {args.kwarg.arg}
         return _Scope(
             self.cls,
             {**self.params, **dict.fromkeys(names, owner)},
             self.local | bound,
+            empty,
         )
+
+
+def _unfilled_kwargs(sources: list[_Source]) -> set[int]:
+    """The ``id`` of each function whose ``**`` parameter no call
+    fills: every call by its name passes only keywords the function
+    names, and the name is never passed around as a value (to be
+    called unseen). Matching by name over-approximates the callers,
+    so a shared name only ever keeps a ``**`` counted as filled."""
+    defs = [
+        node
+        for source in sources
+        for node in ast.walk(source.tree)
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef))
+        and node.args.kwarg
+    ]
+    names = {fn.name for fn in defs}
+    calls: dict[str, list[ast.Call]] = {}
+    callees, passed = set(), set()
+    for source in sources:
+        for node in ast.walk(source.tree):
+            if isinstance(node, ast.Call):
+                callees.add(id(node.func))
+                name = getattr(node.func, "id", getattr(node.func, "attr", None))
+                if name in names:
+                    calls.setdefault(name, []).append(node)
+        for node in ast.walk(source.tree):
+            name = getattr(node, "id", getattr(node, "attr", None))
+            if (
+                isinstance(node, (ast.Name, ast.Attribute))
+                and name in names
+                and id(node) not in callees
+            ):
+                passed.add(name)
+    unfilled = set()
+    for fn in defs:
+        named = set(_all_params(fn))
+        if fn.name not in passed and all(
+            k.arg in named for call in calls.get(fn.name, ()) for k in call.keywords
+        ):
+            unfilled.add(id(fn))
+    return unfilled
 
 
 class _Options:
     """The values each package function's parameters receive."""
 
-    def __init__(self):
-        self.graph = _Graph()
+    def __init__(self, graph: _Graph | None = None, callers=None):
+        """``callers``: the sources whose calls count (default: every
+        file :func:`_call_sites` names)."""
+        self.graph = graph or _Graph()
+        if callers is None:
+            callers = [_Source(path) for path in _call_sites()]
+        self.unfilled = _unfilled_kwargs(callers)
         #: ``module.name`` or ``module.Class.name`` -> its definition
         self.functions: dict[str, ast.FunctionDef] = {}
         #: method name -> every package method so named
@@ -500,8 +558,7 @@ class _Options:
         #: text of a value, _VARIES, or the (function, parameter) whose
         #: values it passes through
         self.passed: dict[tuple[str, str], list] = {}
-        for path in _call_sites():
-            source = _Source(path)
+        for source in callers:
             for stmt in source.tree.body:
                 if not isinstance(stmt, (ast.Import, ast.ImportFrom)):
                     self._visit(source, stmt, _Scope(), source.name)
@@ -551,17 +608,26 @@ class _Options:
         self.passed.setdefault((key, param), []).append(value)
 
     def _call(self, source: _Source, call: ast.Call, scope: _Scope) -> None:
+        # forwarding a ``**`` parameter that no call fills passes nothing
+        keywords = [
+            k for k in call.keywords
+            if not (
+                k.arg is None
+                and isinstance(k.value, ast.Name)
+                and k.value.id in scope.empty
+            )
+        ]
         for key, skip in self._targets(source, call.func, scope):
             fn = self.functions[key]
             positional, defaults = _params(fn)
             if any(isinstance(a, ast.Starred) for a in call.args) or any(
-                k.arg is None for k in call.keywords
+                k.arg is None for k in keywords
             ):
                 for param in _all_params(fn):
                     self._record(key, param, _VARIES)
                 continue
             given = dict(zip(positional[skip:], call.args))
-            given.update((k.arg, k.value) for k in call.keywords)
+            given.update((k.arg, k.value) for k in keywords)
             for param in _all_params(fn)[skip:]:
                 if param in given:
                     self._record(key, param, self._value(given[param], scope))
@@ -583,14 +649,18 @@ class _Options:
         """Record the calls under ``node``; ``prefix`` is the dotted
         name a definition here would have, or None inside a function."""
         if isinstance(node, ast.ClassDef):
-            inner = _Scope(node.name, scope.params, scope.local)
+            inner = _Scope(node.name, scope.params, scope.local, scope.empty)
             name = f"{prefix}.{node.name}" if prefix else None
             for child in node.body:
                 self._visit(source, child, inner, name)
             return
         if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.Lambda)):
             key = f"{prefix}.{getattr(node, 'name', '')}" if prefix else None
-            inner = scope.enter(node, key if key in self.functions else None)
+            inner = scope.enter(
+                node,
+                key if key in self.functions else None,
+                id(node) in self.unfilled,
+            )
             for outer in (
                 *getattr(node, "decorator_list", ()),
                 *node.args.defaults,
@@ -629,10 +699,10 @@ class _Options:
         return found
 
 
-def one_value_options() -> dict[str, str]:
+def one_value_options(options: _Options | None = None) -> dict[str, str]:
     """``module.function.parameter`` -> the one value every call passes,
     for each defaulted package parameter that receives exactly one."""
-    options = _Options()
+    options = options or _Options()
     found = {}
     for key, fn in options.functions.items():
         for param in _params(fn)[1]:
@@ -664,3 +734,26 @@ def test_option_values():
     # an exemption that covers no such parameter hides nothing
     used = {_exemption(name) for name in found}
     assert set(ONE_VALUE_BY_DESIGN) <= used, set(ONE_VALUE_BY_DESIGN) - used
+
+
+def test_option_values_see_through_an_unfilled_kwargs():
+    """A helper that forwards a ``**`` parameter no call fills passes
+    no keyword, so it cannot hide a one-value option; one call that
+    fills it makes the forwarded call vary again."""
+    package = _Source(
+        ROOT / PACKAGE / "probe.py", "def scale(x, factor=2):\n    return x * factor\n"
+    )
+    caller = (
+        f"from {PACKAGE}.probe import scale\n\n"
+        "def helper(x, **kw):\n    return scale(x, **kw)\n\n"
+        "def test_a():\n    helper(1)\n    helper(2)\n"
+    )
+
+    def flagged(text: str) -> dict[str, str]:
+        test = _Source(ROOT / "tests" / "test_probe.py", text)
+        graph = _Graph({package.name: package})
+        return one_value_options(_Options(graph, [test]))
+
+    assert flagged(caller) == {f"{PACKAGE}.probe.scale.factor": "2"}
+    assert flagged(caller + "    helper(3, factor=3)\n") == {}
+    assert flagged(caller + "    run(helper)\n") == {}

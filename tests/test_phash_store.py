@@ -3,8 +3,6 @@
 
 from __future__ import annotations
 
-import os
-
 import pytest
 
 import etl_procedure_codes_crawler_spark.llm.multimodal as M
@@ -60,17 +58,13 @@ class TestPhashStore:
 
 class TestStreamIngestMediaNearDup:
     def _drop(self, spark, source_dir, name, rows):
-        import glob
-        import shutil
-        import tempfile
+        from etl_procedure_codes_crawler_spark.streaming.incremental import (
+            stage_stream_files,
+        )
 
-        staging = tempfile.mkdtemp()
-        _png_media(spark, rows).repartition(1).write.mode(
-            "overwrite"
-        ).parquet(staging)
-        part = glob.glob(os.path.join(staging, "part-*.parquet"))[0]
-        shutil.copy(part, os.path.join(source_dir, f"{name}.parquet"))
-        shutil.rmtree(staging, ignore_errors=True)
+        stage_stream_files(
+            _png_media(spark, rows).repartition(1), source_dir, name
+        )
 
     def _run(self, spark, dirs):
         from etl_procedure_codes_crawler_spark.streaming.incremental import (

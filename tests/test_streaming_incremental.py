@@ -29,17 +29,15 @@ class TestBoilerplateIngest:
     )
 
     def _drop_docs(self, spark, source_dir, name, rows):
-        import glob
-        import shutil
-        import tempfile
+        from etl_procedure_codes_crawler_spark.streaming.incremental import (
+            stage_stream_files,
+        )
 
-        staging = tempfile.mkdtemp()
-        spark.createDataFrame(rows, self.DOC_SCHEMA).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(staging)
-        part = glob.glob(os.path.join(staging, "part-*.parquet"))[0]
-        shutil.copy(part, os.path.join(source_dir, f"{name}.parquet"))
-        shutil.rmtree(staging, ignore_errors=True)
+        stage_stream_files(
+            spark.createDataFrame(rows, self.DOC_SCHEMA).coalesce(1),
+            source_dir,
+            name,
+        )
 
     def _run(self, spark, dirs, store, min_doc_freq=2):
         from etl_procedure_codes_crawler_spark.streaming.incremental import (

@@ -7,10 +7,6 @@ idempotent writes) instead of double-counting."""
 
 from __future__ import annotations
 
-import glob
-import os
-import shutil
-
 from pyspark.sql import functions as F
 
 from etl_procedure_codes_crawler_spark.llm import blocklist as BL
@@ -19,21 +15,12 @@ from etl_procedure_codes_crawler_spark.streaming.drift import (
     chi_square_report,
     stream_chi_square_counts,
 )
+from etl_procedure_codes_crawler_spark.streaming.incremental import (
+    stage_stream_files,
+)
 from etl_procedure_codes_crawler_spark.streaming.scan import (
     stream_blocklist_scan,
 )
-
-
-def _stage(df, tmp_path, n_files=3):
-    src = tmp_path / "in"
-    src.mkdir()
-    staging = str(tmp_path / "stage")
-    df.repartition(n_files).write.mode("overwrite").parquet(staging)
-    for i, part in enumerate(
-        glob.glob(os.path.join(staging, "part-*.parquet"))
-    ):
-        shutil.copy(part, str(src / f"b{i}.parquet"))
-    return str(src)
 
 
 def _docs(spark):
@@ -50,7 +37,8 @@ class TestStreamingBlocklist:
     def test_multi_batch_accumulation_equals_one_shot(self, spark, tmp_path):
         docs = _docs(spark)
         phrases = ["ban me", "me now"]
-        src = _stage(docs, tmp_path)
+        src = str(tmp_path / "in")
+        stage_stream_files(docs.repartition(3), src, "b")
         results = str(tmp_path / "results")
         q = stream_blocklist_scan(
             spark, src, docs.schema, phrases, results,
@@ -72,7 +60,8 @@ class TestStreamingBlocklist:
     def test_crash_replay_replaces_not_duplicates(self, spark, tmp_path):
         docs = _docs(spark)
         phrases = ["ban me"]
-        src = _stage(docs, tmp_path, n_files=1)
+        src = str(tmp_path / "in")
+        stage_stream_files(docs.repartition(1), src, "b")
         results = str(tmp_path / "results")
 
         def run(ck):
@@ -99,7 +88,8 @@ class TestStreamingChiSquare:
         odd = docs.where(F.col("doc_id") % 2 == 1)
         ref = str(tmp_path / "ref")
         build_source_token_reference(even, ref)
-        src = _stage(odd, tmp_path)
+        src = str(tmp_path / "in")
+        stage_stream_files(odd.repartition(3), src, "b")
         counts = str(tmp_path / "counts")
         q = stream_chi_square_counts(
             spark, src, odd.schema, counts, str(tmp_path / "ck1"),
@@ -135,7 +125,8 @@ class TestStreamingChiSquare:
         build_source_token_reference(
             docs.where(F.col("doc_id") % 2 == 0), ref
         )
-        src = _stage(odd, tmp_path, n_files=1)
+        src = str(tmp_path / "in")
+        stage_stream_files(odd.repartition(1), src, "b")
         counts = str(tmp_path / "counts")
 
         def run(ck):

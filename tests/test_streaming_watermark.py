@@ -8,16 +8,16 @@ micro-batches so the watermark actually advances and closes windows.
 
 from __future__ import annotations
 
-import glob
 import os
-import shutil
-import tempfile
 
 from pyspark.sql import functions as F
 
 from etl_procedure_codes_crawler_spark.streaming.events import (
     EVENTS_RAW_SCHEMA,
     read_events_stream,
+)
+from etl_procedure_codes_crawler_spark.streaming.incremental import (
+    stage_stream_files,
 )
 
 
@@ -26,7 +26,6 @@ def _write_events_file(spark, source_dir: str, name: str, rows, mtime: float):
     fixes the file's modification time — the file source orders
     micro-batches by mtime, and copies land within the same clock tick
     otherwise (batch order would be arbitrary)."""
-    staging = tempfile.mkdtemp()
     df = spark.createDataFrame(
         [
             (eid, int(sec * 1_000_000_000), uid, etype, val, "{}")
@@ -34,12 +33,8 @@ def _write_events_file(spark, source_dir: str, name: str, rows, mtime: float):
         ],
         EVENTS_RAW_SCHEMA,
     )
-    df.coalesce(1).write.mode("overwrite").parquet(staging)
-    part = glob.glob(os.path.join(staging, "part-*.parquet"))[0]
-    target = os.path.join(source_dir, f"{name}.parquet")
-    shutil.copy(part, target)
+    (target,) = stage_stream_files(df.coalesce(1), source_dir, name)
     os.utime(target, (mtime, mtime))
-    shutil.rmtree(staging, ignore_errors=True)
 
 
 HOUR = 3600

@@ -83,18 +83,16 @@ def test_stream_reader_matches_batch(spark, tmp_path, encoding):
     stream = E.read_events_stream(spark, src)
     assert stream.isStreaming
     assert dict(stream.dtypes)["ts"] == "timestamp"
-    name = f"ts_enc_{encoding}"
-    query = E.run_to_memory(E.hourly_event_counts(stream), name)
-    try:
-        got = {
-            (r.ws, r.event_type, r.n_events)
-            for r in spark.sql(
-                "SELECT date_format(window_start,'yyyy-MM-dd HH:mm:ss') ws,"
-                f"       event_type, n_events FROM {name}"
-            ).collect()
-        }
-    finally:
-        query.stop()
+    got = {
+        (r.ws, r.event_type, r.n_events)
+        for r in E.run_to_memory(E.hourly_event_counts(stream))
+        .selectExpr(
+            "date_format(window_start,'yyyy-MM-dd HH:mm:ss') ws",
+            "event_type",
+            "n_events",
+        )
+        .collect()
+    }
     # base instant is 2023-11-14 22:13:20 UTC; +60s stays in 22:00,
     # +3600s lands in 23:00, +7199s crosses into 2023-11-15 00:00
     assert got == {
@@ -190,15 +188,12 @@ def test_stream_starts_on_empty_directory(spark, tmp_path):
     # producer writes a nanos-encoded file after stream wiring
     table = pa.table({**_ROWS, "ts": ENCODINGS["nanos"]})
     pq.write_table(table, os.path.join(d, "events.parquet"))
-    name = "empty_start_probe"
-    q = E.run_to_memory(
+    rows = E.run_to_memory(
         stream.groupBy("event_id").agg(
             F.min(epoch_micros("ts")).alias("us")
-        ),
-        name,
-    )
-    q.stop()
-    got = sorted((r.event_id, r.us) for r in spark.table(name).collect())
+        )
+    ).collect()
+    got = sorted((r.event_id, r.us) for r in rows)
     assert got == sorted(zip(_ROWS["event_id"], _TS_US))
 
 
@@ -222,13 +217,10 @@ def test_stream_empty_start_near_epoch_nanos(spark, tmp_path):
         }
     )
     pq.write_table(table, os.path.join(d, "events.parquet"))
-    name = "empty_start_boundary_probe"
-    q = E.run_to_memory(
+    rows = E.run_to_memory(
         stream.groupBy("event_id").agg(
             F.min(epoch_micros("ts")).alias("us")
-        ),
-        name,
-    )
-    q.stop()
-    got = {r.event_id: r.us for r in spark.table(name).collect()}
+        )
+    ).collect()
+    got = {r.event_id: r.us for r in rows}
     assert got == {1: day2_us}

@@ -11,13 +11,14 @@ streaming_unified_admission.)"""
 
 from __future__ import annotations
 
-import glob
 import os
-import shutil
 
 import pytest
 
 from etl_procedure_codes_crawler_spark.streaming import unified as U
+from etl_procedure_codes_crawler_spark.streaming.incremental import (
+    stage_stream_files,
+)
 
 
 def _corpus(spark):
@@ -66,25 +67,13 @@ def _corpus(spark):
     )
 
 
-def _stage(df, tmp_path, n_files=1, sub="in"):
-    src = tmp_path / sub
-    src.mkdir()
-    staging = str(tmp_path / (sub + "_stage"))
-    df.repartition(n_files).write.mode("overwrite").parquet(staging)
-    for i, part in enumerate(
-        glob.glob(os.path.join(staging, "part-*.parquet"))
-    ):
-        shutil.copy(part, str(src / f"b{i}.parquet"))
-    return str(src)
-
-
-def _run_gate(spark, src, schema, root, budgets, ckpt, **kw):
+def _run_gate(spark, src, schema, root, budgets, ckpt):
     stores = os.path.join(root, "stores")
     if not os.path.exists(stores):
         U.create_unified_stores(spark, stores, kmv_k=16)
     q = U.stream_ingest_unified(
         spark, src, schema, os.path.join(root, "wh"), stores, ckpt,
-        budgets=budgets, min_doc_freq=2, **kw
+        budgets=budgets, min_doc_freq=2
     )
     q.awaitTermination(300)
     q.stop()
@@ -131,7 +120,8 @@ def _state(spark, root):
 class TestGateSemantics:
     def test_six_gates_each_bite(self, spark, tmp_path):
         docs = _corpus(spark)
-        src = _stage(docs, tmp_path)
+        src = str(tmp_path / "in")
+        stage_stream_files(docs.repartition(1), src, "b")
         root = str(tmp_path / "g")
         os.makedirs(root)
         stores = _run_gate(
@@ -179,7 +169,8 @@ class TestGateSemantics:
              for i in range(1, 8)],
             "doc_id long, text string, source string",
         )
-        src = _stage(docs, tmp_path)
+        src = str(tmp_path / "in")
+        stage_stream_files(docs.repartition(1), src, "b")
         root = str(tmp_path / "g")
         os.makedirs(root)
         stores = _run_gate(
@@ -205,7 +196,8 @@ class TestCrashReplay:
         budgets = {"s2": 60}
 
         # twin A: uncrashed reference run
-        src_a = _stage(docs, tmp_path, sub="inA")
+        src_a = str(tmp_path / "inA")
+        stage_stream_files(docs.repartition(1), src_a, "b")
         root_a = str(tmp_path / "A")
         os.makedirs(root_a)
         _run_gate(spark, src_a, docs.schema, root_a, budgets,
@@ -213,7 +205,8 @@ class TestCrashReplay:
         ref = _state(spark, root_a)
 
         # twin B: crash after the KMV fold (the LAST store commit)
-        src_b = _stage(docs, tmp_path, sub="inB")
+        src_b = str(tmp_path / "inB")
+        stage_stream_files(docs.repartition(1), src_b, "b")
         root_b = str(tmp_path / "B")
         os.makedirs(root_b)
         real_append = U.KV.append_to_kmv_store
@@ -261,7 +254,8 @@ def test_store_commit_jobs_stay_in_the_streams_job_group(
         [(i, f"solo{i} words{i} here{i} now{i}", "s9") for i in range(1, 4)],
         "doc_id long, text string, source string",
     )
-    src = _stage(docs, tmp_path)
+    src = str(tmp_path / "in")
+    stage_stream_files(docs.repartition(1), src, "b")
     root = str(tmp_path / "g")
     os.makedirs(root)
     U.create_unified_stores(spark, os.path.join(root, "stores"), kmv_k=16)
