@@ -14,11 +14,15 @@ every pass recompiles its plan).
 
 from __future__ import annotations
 
+import contextlib
 import functools
 import gc
 import sys
+import threading
 import time
+from collections.abc import Callable, Iterator
 
+from py4j import protocol as proto
 from pyspark.sql import DataFrame, SparkSession
 
 #: untimed pause per settle, split over its two GC rounds
@@ -102,9 +106,51 @@ def warm_up(spark: SparkSession, sf_dir: str) -> None:
 def time_query(spark: SparkSession, name: str, sf_dir: str) -> float:
     """Settle, then the seconds to build ``name``'s plan and materialize it."""
     settle(spark)
+    return round(sum(build_and_materialize(spark, name, sf_dir)), 3)
+
+
+def build_and_materialize(
+    spark: SparkSession, name: str, sf_dir: str
+) -> tuple[float, float]:
+    """Build ``name``'s plan and materialize it, without settling first:
+    the seconds of the build (the registry call, with any eager jobs it
+    runs) and of the materialization."""
     start = time.perf_counter()
-    materialize(registry()[name](spark, sf_dir))
-    return round(time.perf_counter() - start, 3)
+    df = registry()[name](spark, sf_dir)
+    built = time.perf_counter()
+    materialize(df)
+    return built - start, time.perf_counter() - built
+
+
+@contextlib.contextmanager
+def py4j_commands(spark: SparkSession) -> Iterator[Callable[[], int]]:
+    """Count the py4j commands the driver sends the JVM, from every
+    thread, while the block runs; yields a callable that returns the
+    count so far. Every DataFrame call and every column expression
+    built in Python is at least one such round trip, so the count is
+    the driver-side planning cost of a build in a unit that does not
+    depend on the box. Releases of Java object references are left
+    out: py4j sends them from its own thread whenever Python's
+    collector frees a reference, so their number in a window depends
+    on when the collector ran."""
+    client = spark.sparkContext._gateway._gateway_client
+    send = client.send_command
+    release = proto.MEMORY_COMMAND_NAME + proto.MEMORY_DEL_SUBCOMMAND_NAME
+    lock = threading.Lock()
+    sent = 0
+
+    def counted(command, *args, **kwargs):
+        nonlocal sent
+        if not command.startswith(release):
+            with lock:
+                sent += 1
+        return send(command, *args, **kwargs)
+
+    client.send_command = counted
+    try:
+        yield lambda: sent
+    finally:
+        del client.send_command
 
 
 def isolated_best(spark: SparkSession, name: str, sf_dir: str, runs: int) -> float:

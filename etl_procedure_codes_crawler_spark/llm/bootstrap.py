@@ -73,9 +73,11 @@ def bootstrap_ci_by_group(
     df: DataFrame,
     value_col: str,
 ) -> DataFrame:
-    """(group, mean, ci_lo, ci_hi): the per-``source`` mean of
-    ``value_col`` (must be integer-typed — replicate sums stay exact) with its
-    order-statistic Poisson-bootstrap interval.
+    """(group, ci_lo, ci_hi): the order-statistic Poisson-bootstrap
+    interval of the per-``source`` mean of ``value_col`` (must be
+    integer-typed — replicate sums stay exact). The mean itself is not
+    returned: it would cost a second aggregate and a join, and the one
+    caller reads only the interval.
 
     Scale shape: the ×B explode is the only inflation and it carries
     three small columns, not the corpus; one groupBy computes all
@@ -116,16 +118,7 @@ def bootstrap_ci_by_group(
         Window.partitionBy("grp").orderBy(F.asc("m"), F.asc("b"))
     )
     ranked = means.withColumn("rk", rk)
-    ci = ranked.groupBy("grp").agg(
-        F.max(F.when(F.col("rk") == 2, F.col("m"))).alias("_lo"),
-        F.max(F.when(F.col("rk") == 31, F.col("m"))).alias("_hi"),
-    )
-    base = d.groupBy("grp").agg(
-        (F.sum("_n").cast("double") / F.count(F.lit(1))).alias("_mean")
-    )
-    return base.join(ci, "grp").select(
-        F.col("grp").alias("group"),
-        F.round("_mean", 4).alias("mean_value"),
-        F.round("_lo", 4).alias("ci_lo"),
-        F.round("_hi", 4).alias("ci_hi"),
+    return ranked.groupBy(F.col("grp").alias("group")).agg(
+        F.round(F.max(F.when(F.col("rk") == 2, F.col("m"))), 4).alias("ci_lo"),
+        F.round(F.max(F.when(F.col("rk") == 31, F.col("m"))), 4).alias("ci_hi"),
     )

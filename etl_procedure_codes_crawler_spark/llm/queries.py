@@ -9,9 +9,12 @@ deterministic run-to-run, xxhash64/seeded hyperplanes).
 
 from __future__ import annotations
 
+from concurrent.futures import ThreadPoolExecutor
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as SparkWindow
 from pyspark.sql import functions as F
+from pyspark.util import inheritable_thread_target
 
 from ..functions.timestamps import epoch_micros
 from ..plans.relational import load, register
@@ -5440,27 +5443,69 @@ def llm_corpus_prep_v5(spark: SparkSession, sf_dir: str) -> DataFrame:
     containment, the KMV estimator, and the bootstrap in combination.
     Corpus exchanges on top of v4's trio: one distinct-hash shuffle
     (KMV) and the x32 narrow bootstrap explode; the fragment flags
-    reuse the funnel's posting-join relations."""
+    reuse the funnel's posting-join relations.
+
+    At small scale the build, not the data, sets this query's latency,
+    so the build overlaps its one eager step with planning: the shared
+    posting join is checkpointed on a worker thread (in the caller's
+    job group) while the driver plans the branches that do not read it
+    (boilerplate strip, KMV, bootstrap). The fragment count rides the
+    funnel's per-doc relation as a left join, so one per-source
+    aggregate yields the funnel columns and ``n_fragment_docs``
+    together."""
     from . import bootstrap as BS
     from . import cluster as CL
 
     documents = load(spark, sf_dir, "documents")
-    cleaned = D.remove_boilerplate_passages(
-        documents, min_doc_freq=5, block=3
-    ).select(F.col("id").alias("doc_id"), "n_removed", "text_clean")
+
     # ONE df-capped posting join feeds both pair consumers (the
     # jaccard cluster edges AND the containment fragment flags) —
     # checkpointed because the two consumers would otherwise each
     # re-run the shingle explode + self-join
-    base_pairs = D._shared_shingle_counts(
-        documents, 50
-    ).localCheckpoint(eager=True)
+    @inheritable_thread_target(spark)
+    def shared_shingle_counts() -> DataFrame:
+        # The worker's JVM thread starts with no active session, and
+        # Spark code that reads its conf there gets the defaults: when
+        # this checkpoint compiled a JVM's first generated class, the
+        # codegen cache was sized at Spark's 100 entries, not get_spark's
+        # 2000, and every later v5 run recompiled ~120 classes.
+        spark._jvm.SparkSession.setActiveSession(spark._jsparkSession)
+        return D._shared_shingle_counts(documents, 50).localCheckpoint(eager=True)
+
+    with ThreadPoolExecutor(1) as pool:
+        pending = pool.submit(shared_shingle_counts)
+        cleaned = D.remove_boilerplate_passages(
+            documents, min_doc_freq=5, block=3
+        ).select(F.col("id").alias("doc_id"), "n_removed", "text_clean")
+        kest = KV.kmv_distinct_by_group(documents).select(
+            F.col("group").alias("source"),
+            F.col("est_distinct").alias("est_distinct_shingles"),
+        )
+        bci = BS.bootstrap_ci_by_group(
+            documents.select(
+                "doc_id", "source", T.token_count("text").alias("_tc")
+            ),
+            value_col="_tc",
+        ).select(
+            F.col("group").alias("source"),
+            F.col("ci_lo").alias("tokens_ci_lo"),
+            F.col("ci_hi").alias("tokens_ci_hi"),
+        )
+        base_pairs = pending.result()
     jac = F.col("shared").cast("double") / (
         F.col("na") + F.col("nb") - F.col("shared")
     )
     pairs = base_pairs.filter(jac >= 0.05).select("doc_a", "doc_b")
     weights = CL.soft_dedup_weights(
         CL.duplicate_clusters(pairs, all_ids=documents)
+    )
+    c_ab = F.col("shared").cast("double") / F.col("na")
+    c_ba = F.col("shared").cast("double") / F.col("nb")
+    frag_ids = (
+        base_pairs.filter(c_ab >= 0.5)
+        .select(F.col("doc_a").alias("_frag"))
+        .unionAll(base_pairs.filter(c_ba >= 0.5).select(F.col("doc_b")))
+        .distinct()
     )
     n_tok_clean = F.when(
         F.col("text_clean").isNull() | (F.col("text_clean") == ""), F.lit(0)
@@ -5469,10 +5514,14 @@ def llm_corpus_prep_v5(spark: SparkSession, sf_dir: str) -> DataFrame:
         documents.select("doc_id", "source")
         .join(cleaned, "doc_id")
         .join(weights, "doc_id")
+        # doc_id is the documents key and cleaned/weights carry one row
+        # per doc, so count("_frag") counts each fragment doc once
+        .join(frag_ids, F.col("doc_id") == F.col("_frag"), "left")
         .select(
             "source",
             n_tok_clean.alias("n_tok_clean"),
             "cluster_size",
+            "_frag",
         )
         .groupBy("source")
         .agg(
@@ -5484,49 +5533,18 @@ def llm_corpus_prep_v5(spark: SparkSession, sf_dir: str) -> DataFrame:
                     / F.col("cluster_size").cast("double")
                 ).cast("bigint")
             ).cast("bigint").alias("eff_tokens_micro"),
+            F.count("_frag").cast("bigint").alias("n_fragment_docs"),
         )
-    )
-    c_ab = F.col("shared").cast("double") / F.col("na")
-    c_ba = F.col("shared").cast("double") / F.col("nb")
-    frag_ids = (
-        base_pairs.filter(c_ab >= 0.5)
-        .select(F.col("doc_a").alias("doc_id"))
-        .unionAll(
-            base_pairs.filter(c_ba >= 0.5)
-            .select(F.col("doc_b").alias("doc_id"))
-        )
-        .distinct()
-    )
-    fragcnt = (
-        documents.select("doc_id", "source")
-        .join(frag_ids, "doc_id")
-        .groupBy("source")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("n_fragment_docs"))
-    )
-    kest = KV.kmv_distinct_by_group(documents).select(
-        F.col("group").alias("source"),
-        F.col("est_distinct").alias("est_distinct_shingles"),
-    )
-    bci = BS.bootstrap_ci_by_group(
-        documents.select(
-            "doc_id", "source", T.token_count("text").alias("_tc")
-        ),
-        value_col="_tc",
-    ).select(
-        F.col("group").alias("source"),
-        F.col("ci_lo").alias("tokens_ci_lo"),
-        F.col("ci_hi").alias("tokens_ci_hi"),
     )
     return (
-        report.join(fragcnt, "source", "left")
-        .join(kest, "source")
+        report.join(kest, "source")
         .join(bci, "source")
         .select(
             "source",
             "n_docs",
             "tokens_clean",
             "eff_tokens_micro",
-            F.coalesce("n_fragment_docs", F.lit(0)).alias("n_fragment_docs"),
+            "n_fragment_docs",
             "est_distinct_shingles",
             "tokens_ci_lo",
             "tokens_ci_hi",

@@ -101,6 +101,17 @@ def get_spark(
         # compiles 1,929 classes and a second sweep 307 more; without,
         # 1,530 and 22. Runtime conf.
         .config("spark.sql.codegen.useIdInClassName", "false")
+        # No per-call call-site capture. With DataFrame debugging on,
+        # PySpark wraps every functions.*/Column call in a capture that
+        # costs about ten py4j commands (the active session, a conf read,
+        # set/clear of the JVM origin) plus a Python stack walk: 2,510 of
+        # the 4,312 commands a warm llm_corpus_prep_v5 build and
+        # materialization sent. The capture only names the Python line in
+        # a query-context error message; to get it back while debugging,
+        # pass extra_conf={"spark.python.sql.dataFrameDebugging.enabled":
+        # "true"} to the JVM's first session (PySpark reads it once per
+        # process).
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     for key, value in (extra_conf or {}).items():
         builder = builder.config(key, value)

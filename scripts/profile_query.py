@@ -2,18 +2,26 @@
 """Isolate one (or more) registry queries for optimization work.
 
 For each named query: the bench's warm-up, N timed passes (the bench's
-methodology: ``harness.time_query`` settles, then materializes the full
-result through the noop sink), plus job/stage counts from the status
-tracker, the number of generated classes compiled, and an optional
-.explain("formatted") dump.
+methodology: ``harness.settle``, then ``harness.build_and_materialize``
+builds the plan and materializes the full result through the noop
+sink), plus job/stage counts from the status tracker, the number of
+generated classes compiled, and an optional .explain("formatted") dump.
 
 Usage:
   python scripts/profile_query.py [--runs N] [--explain-dir DIR]
       [--sf-dir DIR] query [query ...]
 
 Prints one JSON line per query:
-  {"query": ..., "times": [...], "best": ..., "jobs_last_pass": J,
+  {"query": ..., "times": [...], "best": ..., "build_s": [...],
+   "materialize_s": [...], "py4j_commands": [...], "jobs_last_pass": J,
    "stages_last_pass": S, "codegen_compiles_last_pass": C}
+
+The lists hold one value per pass. ``build_s`` is the registry call
+(plan construction, with any eager jobs the build runs) and
+``materialize_s`` the noop write; they sum to the pass's ``times``
+entry. ``py4j_commands`` counts the driver's round trips to the JVM in
+both, from every thread: the driver-side planning layer, without an
+event log.
 
 C counts the classes the last pass compiled (codegen cache misses): 0
 once the JVM holds every class the plan generates. The first pass of
@@ -63,23 +71,35 @@ def main() -> None:
     codegen = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
     compiles = codegen.METRIC_COMPILATION_TIME()
 
-    def run_once(name: str) -> tuple[float, int, int, int]:
+    def run_once(name: str) -> dict:
+        harness.settle(spark)
         jobs_before = set(st.getJobIdsForGroup(None) or [])
         compiles_before = compiles.getCount()
-        dt = harness.time_query(spark, name, args.sf_dir)
+        with harness.py4j_commands(spark) as sent:
+            build_s, materialize_s = harness.build_and_materialize(
+                spark, name, args.sf_dir
+            )
+            py4j_commands = sent()
         compiled = compiles.getCount() - compiles_before
         new_jobs = set(st.getJobIdsForGroup(None) or []) - jobs_before
         infos = [st.getJobInfo(j) for j in new_jobs]
-        stages = sum(len(ji.stageIds) for ji in infos if ji)
-        return dt, len(new_jobs), stages, compiled
+        return {
+            "time": round(build_s + materialize_s, 3),
+            "build_s": round(build_s, 3),
+            "materialize_s": round(materialize_s, 3),
+            "py4j_commands": py4j_commands,
+            "jobs": len(new_jobs),
+            "stages": sum(len(ji.stageIds) for ji in infos if ji),
+            "compiled": compiled,
+        }
 
     for name in args.queries:
         if name not in queries:
             print(json.dumps({"query": name, "error": "not registered"}))
             continue
         passes = [run_once(name) for _ in range(args.runs)]
-        times = [dt for dt, _, _, _ in passes]
-        _, jobs, stages, compiled = passes[-1]
+        times = [p["time"] for p in passes]
+        last = passes[-1]
         if args.explain_dir:
             os.makedirs(args.explain_dir, exist_ok=True)
             try:
@@ -101,9 +121,13 @@ def main() -> None:
                     "query": name,
                     "times": times,
                     "best": min(times),
-                    "jobs_last_pass": jobs,
-                    "stages_last_pass": stages,
-                    "codegen_compiles_last_pass": compiled,
+                    **{
+                        key: [p[key] for p in passes]
+                        for key in ("build_s", "materialize_s", "py4j_commands")
+                    },
+                    "jobs_last_pass": last["jobs"],
+                    "stages_last_pass": last["stages"],
+                    "codegen_compiles_last_pass": last["compiled"],
                 }
             ),
             flush=True,

@@ -95,3 +95,6 @@ def test_profile_query_script_prints_one_result_line(sf_dir):
     assert row["query"] == "q1_pricing_summary"
     assert row["best"] > 0
     assert row["jobs_last_pass"] >= 1
+    (build_s,), (materialize_s,) = row["build_s"], row["materialize_s"]
+    assert build_s + materialize_s == pytest.approx(row["times"][0], abs=0.002)
+    assert row["py4j_commands"][0] > 0

@@ -270,8 +270,11 @@ class TestPoissonBootstrap:
             r["group"]: r
             for r in BS.bootstrap_ci_by_group(df, "v").collect()
         }
+        assert sorted(out) == ["tight", "wide"]
         for g, r in out.items():
-            assert r["ci_lo"] <= r["mean_value"] <= r["ci_hi"], r
+            values = [v for _, src, v in rows if src == g]
+            mean = sum(values) / len(values)
+            assert r["ci_lo"] <= mean <= r["ci_hi"], (mean, r)
         # a constant group's bootstrap interval is degenerate at the mean
         assert out["tight"]["ci_lo"] == out["tight"]["ci_hi"] == 50.0
         # the dispersed group has genuine width
