@@ -525,8 +525,8 @@ def parse_procedure_page(code: str, url: str, html: str) -> dict:
             "code_type": None, **_EMPTY_21}
     try:
         doc = parse_html(html)
-        is_cpt = "cpt" in (url or "").lower()
-        code_type = "CPT" if is_cpt else "HCPCS"
+        code_type = classify_code_type(url)
+        is_cpt = code_type == "CPT"
 
         if is_error_404_page(doc):
             return {**base, "status": STATUS_404}

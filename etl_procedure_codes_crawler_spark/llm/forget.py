@@ -48,7 +48,7 @@ run it again until every returned count is 0.
 Deliberate limit: forgetting EVERY remaining vector of the index
 raises — an all-partitions-deleted parquet dataset is unreadable
 (no schema to infer), so a total wipe must go through
-``sinks.parquet.delete_path`` + rebuild instead of masquerading as a
+removing the index's directory + rebuild instead of masquerading as a
 row-level delete.
 """
 
@@ -339,7 +339,7 @@ def _forget_index_cells(
         raise ValueError(
             "forget_documents: deleting every remaining vector would leave "
             "an unreadable empty index (no partitions, no schema); drop the "
-            "index with sinks.parquet.delete_path and rebuild instead"
+            "index's directory and rebuild instead"
         )
 
     # versioning stamp input: the affected cells' current files (the
@@ -426,8 +426,8 @@ def forget_documents(
             raise ValueError(
                 "forget_documents: deleting every remaining vector would "
                 "leave an unreadable empty index (no partitions, no "
-                "schema); drop the index with sinks.parquet.delete_path "
-                "and rebuild instead — no artifact was modified"
+                "schema); drop the index's directory and rebuild "
+                "instead — no artifact was modified"
             )
     if warehouse_path is not None:
         removed["warehouse"] = _forget_plain(

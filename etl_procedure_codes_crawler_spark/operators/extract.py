@@ -48,7 +48,6 @@ _RESULT_COLUMNS = [f.name for f in EXTRACT_RESULT_SCHEMA.fields]
 def extract_procedure_pages(
     codes: DataFrame,
     fetcher_factory: FetcherFactory,
-    base_url: str = "",
     batch_partitions: int | None = None,
     concurrency: int = FETCH_CONCURRENCY,
 ) -> DataFrame:
@@ -72,16 +71,15 @@ def extract_procedure_pages(
                 batch_codes = batch["code"]
                 records = []
                 for code, result in zip(batch_codes, pool.map(batch_codes)):
-                    # Final (post-redirect) URL when the fetcher knows it —
-                    # CPT/HCPCS classification depends on it (reference:
-                    # driver.current_url, procedure_code.py:550).
-                    url = result.url or (base_url + (code or "").strip())
+                    # result.url is the final (post-redirect) URL: CPT/HCPCS
+                    # classification depends on it (reference:
+                    # driver.current_url, procedure_code.py:550)
                     if result.html is None:
-                        record = parse_procedure_page(code, url, "")
+                        record = parse_procedure_page(code, result.url, "")
                         record["status"] = "fetch_error"
                         record["error"] = result.error
                     else:
-                        record = parse_procedure_page(code, url, result.html)
+                        record = parse_procedure_page(code, result.url, result.html)
                     records.append(record)
                 yield pd.DataFrame(records, columns=_RESULT_COLUMNS)
 

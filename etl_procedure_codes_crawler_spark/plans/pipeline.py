@@ -68,7 +68,6 @@ def run_crawl_pipeline(
     existing_codes: DataFrame | None = None,
     existing_modifiers: DataFrame | None = None,
     existing_ndc: DataFrame | None = None,
-    base_url: str = "",
     batch_partitions: int | None = None,
 ) -> CrawlResult:
     """Crawl the codes missing from ``existing_codes`` and plan the
@@ -95,7 +94,6 @@ def run_crawl_pipeline(
     extracted = extract_procedure_pages(
         to_crawl,
         fetcher_factory,
-        base_url=base_url,
         batch_partitions=batch_partitions or spark.sparkContext.defaultParallelism,
     )
     observation = Observation("extract")
@@ -125,12 +123,12 @@ def run_and_sink(
     codes_input: DataFrame,
     fetcher_factory: FetcherFactory,
     warehouse: str,
-    base_url: str = "",
-    load_date: str | None = None,
+    load_date: str,
 ) -> CrawlResult:
     """End-to-end incremental run against a parquet warehouse directory:
     reads the three snapshot tables (empty on first run), crawls, and
-    appends new rows partitioned by ``load_date`` (K1 semantics)."""
+    appends new rows to the ``load_date`` partition (K1 semantics; the
+    crawl job passes its logical date as yyyyMMdd)."""
     schemas = {
         "codes": PROCEDURE_CODES_SCHEMA,
         "modifiers": PROCEDURE_MODIFIERS_SCHEMA,
@@ -141,7 +139,6 @@ def run_and_sink(
         spark,
         codes_input,
         fetcher_factory,
-        base_url=base_url,
         **{
             f"existing_{table}": read_table_or_empty(spark, paths[table], schema)
             for table, schema in schemas.items()

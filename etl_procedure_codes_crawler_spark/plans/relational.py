@@ -1596,14 +1596,17 @@ def extract_procedure_pages_fixture(spark: SparkSession, sf_dir: str) -> DataFra
         "J0120": "https://example.test/hcpcs-codes/J0120",
         "J9999": "https://example.test/hcpcs-codes/J9999",
     }
-    factory = functools.partial(FixtureFetcher, pages=pages, urls=urls)
+    factory = functools.partial(
+        FixtureFetcher,
+        pages=pages,
+        urls=urls,
+        base_url="https://example.test/cpt-codes/",
+    )
     codes = spark.createDataFrame(
         [(c,) for c in ["99213", "J0120", "XXXXX", "J9999", "0001M", "0042T", "NOFIX"]],
         CODES_INPUT_SCHEMA,
     )
-    extracted = extract_procedure_pages(
-        codes, factory, base_url="https://example.test/cpt-codes/"
-    )
+    extracted = extract_procedure_pages(codes, factory)
     return extracted.select("code", "status")
 
 

@@ -84,6 +84,17 @@ def get_spark(
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.ui.enabled", os.environ.get("SPARK_GRAFT_UI", "false"))
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
+        # The driver JVM touches its heap as it commits it, so its
+        # resident memory follows its heap size, not G1's timing. Without
+        # this, a heap committed up front (-Xms = -Xmx) is resident only
+        # where eden has cycled. A run whose old plus humongous occupancy
+        # crosses G1's concurrent-start threshold early keeps eden small
+        # from then on and peaks ~300 MB under one that does not
+        # (perfbench crawl_incremental, 2 GB heap: 2,712-3,079 MB over
+        # 20 runs before, 3,047-3,100 MB over 10 after). Default options
+        # are prepended to a caller's spark.driver.extraJavaOptions, not
+        # replaced by them.
+        .config("spark.driver.defaultJavaOptions", "-XX:+AlwaysPreTouch")
         # Compile each distinct whole-stage pipeline once per JVM. At
         # small scale Janino compilation, not data, sets query latency:
         # llm_corpus_prep_v5 generates ~150 classes per run and the

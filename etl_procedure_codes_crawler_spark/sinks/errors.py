@@ -5,10 +5,10 @@ Airflow run-spec JSON (with ``ast.literal_eval`` fallback for
 single-quoted payloads), build a one-row DataFrame
 ``(dag_id, task_id, run_id, error)`` and append it to the audit table.
 
-The sink target is injected: production wires :func:`write_jdbc`
-(``sinks/jdbc.py``), tests wire a warehouse/parquet writer. The builder
-itself is pure driver-side code — a 1-row frame never touches the
-cluster's data path.
+The sink target is injected: the crawl job (``scripts/crawl.py``)
+appends to :data:`ERRORS_TABLE` through :func:`..sinks.jdbc.write_jdbc`,
+tests may wire a parquet writer. The builder itself is pure driver-side
+code — a 1-row frame never touches the cluster's data path.
 """
 
 from __future__ import annotations
@@ -20,6 +20,9 @@ from typing import Callable
 from pyspark.sql import DataFrame, SparkSession
 
 from ..schemas import AIRFLOW_ERRORS_SCHEMA
+
+#: the audit table (``error_handler.py:25-35``)
+ERRORS_TABLE = "airflow_errors"
 
 
 def parse_run_spec(raw: str) -> dict:

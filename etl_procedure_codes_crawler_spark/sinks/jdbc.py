@@ -1,149 +1,33 @@
-"""JDBC sinks + driver-side transactions (SURVEY §2.2 K3/K4/K5).
+"""JDBC sink (SURVEY §2.2 K3): the crawl job's error-audit append.
 
-Reference: ``crawler/src/utils/postgres.py:19-86`` —
-``postgres_to_sql_*`` (pandas ``to_sql`` append/overwrite),
-``postgres_execute_queries`` (multi-statement transaction with
-commit+rollback), ``postgres_create_table`` (DDL).
+Reference: ``crawler/src/utils/postgres.py:62-86`` —
+``postgres_to_sql_*`` (pandas ``to_sql``). Spark-first translation:
+``df.write.format("jdbc")`` in append mode, which creates the table on
+its first write. The reference's multi-statement transactions (K4) and
+DDL (K5) have no caller in the job and are not carried.
 
-Spark-first translation:
-
-- K3 ⇒ ``df.write.format("jdbc")``; ``batchsize`` turns per-row
-  INSERTs into batched statements, ``numPartitions`` bounds concurrent
-  connections against the target DB (1000 executors opening 1000
-  connections is a DB outage, not parallelism).
-- K4 has **no distributed equivalent** — Spark JDBC writes are not
-  transactional across tasks. Multi-statement atomicity is a
-  driver-side concern: ``execute_transaction`` takes any DB-API
-  connection factory (psycopg2, sqlite3, ...) and preserves the
-  reference's commit/rollback contract exactly.
-- K5 ⇒ ``spark.sql`` for catalog tables; ``execute_transaction`` for
-  remote-DB DDL.
-
-The whole surface is exercised END-TO-END against embedded Apache
-Derby (jars ship with Spark) in ``tests/test_io_surface.py`` —
-write→read-back parity, append/overwrite modes, partitioned reads,
-and transactional commit/rollback through a real JDBC connection.
+Exercised end to end against embedded Apache Derby (its jars ship with
+Spark): ``tests/test_io_surface.py`` and ``tests/test_crawl_job.py``.
 """
 
 from __future__ import annotations
 
-from typing import Callable, Sequence
-
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 
 from ..sources.jdbc import JdbcConnection
 
 
-def write_jdbc(
-    df: DataFrame,
-    conn: JdbcConnection,
-    table: str,
-    mode: str = "append",
-    batchsize: int = 10_000,
-    max_connections: int | None = None,
-    skip_empty: bool = True,
-) -> bool:
-    """K3: DataFrame → remote table (``utils/postgres.py:62-86``).
-
-    ``max_connections`` coalesces the write so at most that many
-    executor tasks hold connections at once. Returns True if written
-    (keeps the reference's empty-frame guard)."""
-    if skip_empty and df.isEmpty():
+def write_jdbc(df: DataFrame, conn: JdbcConnection, table: str) -> bool:
+    """K3: append ``df`` to ``table`` (``utils/postgres.py:62-86``).
+    Returns True if written; an empty frame writes nothing (the
+    reference's empty-frame guard)."""
+    if df.isEmpty():
         return False
-    out = df.coalesce(max_connections) if max_connections else df
     (
-        out.write.format("jdbc")
+        df.write.format("jdbc")
         .options(**conn.options())
         .option("dbtable", table)
-        .option("batchsize", str(batchsize))
-        .mode(mode)
+        .mode("append")
         .save()
     )
     return True
-
-
-def execute_transaction(
-    connection_factory: Callable[[], object],
-    statements: Sequence[str],
-) -> None:
-    """K4: run statements atomically — commit on success, rollback on any
-    failure, always close (``utils/postgres.py:19-33``). DB-API 2.0
-    generic, so the same code drives psycopg2 in production and sqlite3
-    in tests."""
-    conn = connection_factory()
-    try:
-        cursor = conn.cursor()
-        try:
-            for statement in statements:
-                cursor.execute(statement)
-            conn.commit()
-        except Exception:
-            conn.rollback()
-            raise
-        finally:
-            cursor.close()
-    finally:
-        conn.close()
-
-
-class _JvmJdbcCursor:
-    def __init__(self, jstatement):
-        self._stmt = jstatement
-
-    def execute(self, sql: str) -> None:
-        self._stmt.execute(sql)
-
-    def close(self) -> None:
-        self._stmt.close()
-
-
-class JvmJdbcConnection:
-    """DB-API-shaped adapter over a ``java.sql.Connection`` reached
-    through the session's JVM — lets :func:`execute_transaction` drive
-    any JDBC database (embedded Derby in tests, any server with its
-    driver on ``spark.jars`` in production) with the same
-    commit/rollback contract it gives psycopg2/sqlite3."""
-
-    def __init__(self, jconn):
-        self._jconn = jconn
-        self._jconn.setAutoCommit(False)
-
-    def cursor(self) -> _JvmJdbcCursor:
-        return _JvmJdbcCursor(self._jconn.createStatement())
-
-    def commit(self) -> None:
-        self._jconn.commit()
-
-    def rollback(self) -> None:
-        self._jconn.rollback()
-
-    def close(self) -> None:
-        self._jconn.close()
-
-
-def jvm_jdbc_connection_factory(
-    spark: SparkSession, url: str
-) -> Callable[[], JvmJdbcConnection]:
-    """Connection factory for :func:`execute_transaction` that opens
-    ``url`` via ``java.sql.DriverManager`` in the session JVM (the
-    JDBC driver must be on Spark's classpath)."""
-
-    def factory() -> JvmJdbcConnection:
-        jconn = spark._jvm.java.sql.DriverManager.getConnection(url)
-        return JvmJdbcConnection(jconn)
-
-    return factory
-
-
-def create_table(
-    spark: SparkSession,
-    table: str,
-    columns: dict[str, str],
-    if_not_exists: bool = True,
-    using: str = "parquet",
-) -> None:
-    """K5 against the Spark catalog (``utils/postgres.py:48-59``):
-    DDL executes in-process via Catalyst, no external engine."""
-    cols = ", ".join(f"{name} {dtype}" for name, dtype in columns.items())
-    exists = "IF NOT EXISTS " if if_not_exists else ""
-    spark.sql(f"CREATE TABLE {exists}{table} ({cols}) USING {using}")

@@ -40,13 +40,14 @@ from typing import Callable, Iterable, Iterator, Protocol
 @dataclass
 class FetchResult:
     html: str | None = None
-    url: str | None = None  # final URL after redirects, when known
+    url: str | None = None  # the page's final URL, after redirects
     error: str | None = None
 
 
 class Fetcher(Protocol):
     def fetch(self, code: str) -> FetchResult:
-        """html set on success, error set on failure; url when known.
+        """html set on success, error set on failure, url always: the
+        page's final address (the one asked for, when nothing answered).
         A result without html is a fetch error, whatever ``error`` says."""
         ...
 
@@ -116,15 +117,17 @@ class FetchPool:
 class FixtureFetcher:
     """Serves canned HTML from ``pages`` (code → html). ``urls``
     optionally maps a code to the final URL the live site would land on
-    (drives CPT/HCPCS classification in tests). Unknown codes are a
-    fetch error (covers the network-failure path)."""
+    (drives CPT/HCPCS classification in tests); any other code's URL is
+    ``base_url + code``, as :class:`HttpFetcher` asks for it. Unknown
+    codes are a fetch error (covers the network-failure path)."""
 
     pages: dict[str, str] = field(default_factory=dict)
     urls: dict[str, str] = field(default_factory=dict)
+    base_url: str = ""
 
     def fetch(self, code: str) -> FetchResult:
         code = (code or "").strip()
-        url = self.urls.get(code)
+        url = self.urls.get(code, self.base_url + code)
         if code in self.pages:
             return FetchResult(html=self.pages[code], url=url)
         return FetchResult(error=f"no fixture for code {code!r}", url=url)

@@ -24,56 +24,57 @@ test against a live local HTTP server
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 from typing import Callable
+
+
+#: the reference wizard's screens and form fields (``utils/login.py``),
+#: paths relative to the login site
+LOGIN_PATH = "login"
+PASSWORD_PATH = "password"
+RECONFIRM_PATH = "reconfirm"
+SUBSCRIPTION_PATH = "subscription"
+USERNAME_FIELD = "username"
+PASSWORD_FIELD = "password"
+
+#: seconds each login request may take
+LOGIN_TIMEOUT_S = 30.0
 
 
 @dataclass(frozen=True)
 class LoginStep:
-    """One wizard screen: GET when ``data`` is None, else a form POST."""
+    """One wizard screen: GET when ``data`` is None, else a form POST;
+    anything but HTTP 200 fails the login."""
 
     path: str
     data: dict[str, str] | None = None
-    expect_status: int = 200
 
 
 class LoginError(RuntimeError):
     """A step of the login sequence returned an unexpected status."""
 
 
-def scripted_login(
-    base_url: str, steps: list[LoginStep], timeout: float = 30.0
-) -> Callable[[object], None]:
+def scripted_login(base_url: str, steps: list[LoginStep]) -> Callable[[object], None]:
     """Build a ``login(session)`` hook executing ``steps`` in order
-    against the session; relative step paths resolve against
-    ``base_url``, absolute URLs pass through."""
+    against the session; step paths resolve against ``base_url``."""
 
     def login(session) -> None:
         for step in steps:
-            url = step.path if "://" in step.path else base_url + step.path
+            url = base_url + step.path
             if step.data is None:
-                response = session.get(url, timeout=timeout)
+                response = session.get(url, timeout=LOGIN_TIMEOUT_S)
             else:
-                response = session.post(url, data=step.data, timeout=timeout)
-            if response.status_code != step.expect_status:
+                response = session.post(url, data=step.data, timeout=LOGIN_TIMEOUT_S)
+            if response.status_code != 200:
                 raise LoginError(
                     f"login step {step.path!r} returned "
-                    f"{response.status_code}, expected {step.expect_status}"
+                    f"{response.status_code}, expected 200"
                 )
 
     return login
 
 
-def reference_login_steps(
-    email: str,
-    password: str,
-    login_path: str = "login",
-    password_path: str = "password",
-    reconfirm_path: str = "reconfirm",
-    subscription_path: str = "subscription",
-    username_field: str = "username",
-    password_field: str = "password",
-) -> list[LoginStep]:
+def reference_login_steps(email: str, password: str) -> list[LoginStep]:
     """The reference's exact sequence (``utils/login.py:12-88``):
 
     1. open the login page, submit the email (continue button)
@@ -83,15 +84,15 @@ def reference_login_steps(
        password again (the second full pass in the reference)
     5. open the subscription menu (``mnuCodifySubscription``)
     """
-    email_post = LoginStep(login_path, {username_field: email})
-    password_post = LoginStep(password_path, {password_field: password})
+    email_post = LoginStep(LOGIN_PATH, {USERNAME_FIELD: email})
+    password_post = LoginStep(PASSWORD_PATH, {PASSWORD_FIELD: password})
     return [
-        LoginStep(login_path),  # driver.get(login_url)
+        LoginStep(LOGIN_PATH),  # driver.get(login_url)
         email_post,
         password_post,
-        LoginStep(reconfirm_path, {}),  # login2.click()
-        LoginStep(reconfirm_path, {}),  # login3.click()
+        LoginStep(RECONFIRM_PATH, {}),  # login2.click()
+        LoginStep(RECONFIRM_PATH, {}),  # login3.click()
         email_post,  # second full pass
         password_post,
-        LoginStep(subscription_path),  # codify_link.click()
+        LoginStep(SUBSCRIPTION_PATH),  # codify_link.click()
     ]

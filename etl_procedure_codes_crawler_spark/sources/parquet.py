@@ -1,8 +1,9 @@
 """Parquet/table sources (SURVEY §2.1 S2/S3).
 
 The reference reads via Athena (``crawler/src/utils/athena.py:30-54``)
-with an optional chunked generator; Spark scans are natively
-partitioned, so "chunking" disappears. ``read_table_or_empty``
+with an optional chunked generator, and plain parquet via
+``utils/s3.py:71-72``, which is ``spark.read.parquet`` here; Spark scans
+are natively partitioned, so "chunking" disappears. ``read_table_or_empty``
 preserves one reference behavior worth keeping: a missing/empty source
 yields a typed empty DataFrame instead of ``None``
 (the reference returns ``None`` at ``athena.py:49-54`` and then
@@ -16,11 +17,6 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
-
-
-def read_parquet(spark: SparkSession, path: str) -> DataFrame:
-    """S3-equivalent plain parquet read (``utils/s3.py:71-72``)."""
-    return spark.read.parquet(path)
 
 
 def read_table_or_empty(

@@ -1,20 +1,19 @@
-"""Secrets providers (SURVEY §2.1 S7, §2.6 F23/F25).
+"""Secrets (SURVEY §2.1 S7, §2.6 F23/F25).
 
 Reference: ``crawler/src/utils/secret_manager.py:8-23`` fetches a JSON
 payload from AWS Secrets Manager and ``procedure_code.py:680-684``
-parses it with ``json.loads``. Spark-first translation: secrets are
-resolved ONCE on the driver and travel to executors inside picklable
-config objects (never re-fetched per task — at 1000 executors a
-per-task secrets call is a rate-limit outage).
+parses it with ``json.loads``. Secrets are resolved ONCE on the driver
+and travel to executors inside picklable objects (the login hook, the
+JDBC options), never re-fetched per task: at 1000 executors a per-task
+secrets call is a rate-limit outage.
 
-The provider is a protocol so tests and non-AWS deployments inject
-dict/env-backed implementations; the AWS client is import-gated.
+The job takes a :class:`SecretProvider`, so tests hand it an in-memory
+one; the AWS client is imported only when the provider is built.
 """
 
 from __future__ import annotations
 
 import json
-import os
 from typing import Protocol
 
 
@@ -24,49 +23,20 @@ class SecretProvider(Protocol):
         ...
 
 
-class DictSecretProvider:
-    """In-memory provider for tests and local runs."""
-
-    def __init__(self, secrets: dict[str, str]):
-        self._secrets = dict(secrets)
-
-    def get_secret(self, secret_id: str) -> str:
-        try:
-            return self._secrets[secret_id]
-        except KeyError:
-            raise KeyError(f"secret not found: {mask_secret_id(secret_id)}")
-
-
-class EnvSecretProvider:
-    """Secrets from environment variables (secret_id = var name)."""
-
-    def get_secret(self, secret_id: str) -> str:
-        value = os.environ.get(secret_id, "")
-        if not value:
-            raise KeyError(f"secret not found: {mask_secret_id(secret_id)}")
-        return value
-
-
 class AwsSecretsManagerProvider:
-    """AWS Secrets Manager (``utils/secret_manager.py:8-23``).
+    """AWS Secrets Manager (``utils/secret_manager.py:8-23``). The region
+    and credentials come from boto3's own environment and config lookup."""
 
-    Import-gated: instantiating without boto3 installed raises with a
-    clear message instead of failing at module import.
-    """
-
-    def __init__(self, region_name: str | None = None):
-        try:
-            import boto3  # noqa: F401
-        except ImportError as exc:  # pragma: no cover - no boto3 in CI
-            raise ImportError(
-                "boto3 is required for AwsSecretsManagerProvider"
-            ) from exc
+    def __init__(self):
         import boto3
 
-        self._client = boto3.client("secretsmanager", region_name=region_name)
+        self._client = boto3.client("secretsmanager")
 
-    def get_secret(self, secret_id: str) -> str:  # pragma: no cover
-        response = self._client.get_secret_value(SecretId=secret_id)
+    def get_secret(self, secret_id: str) -> str:
+        try:
+            response = self._client.get_secret_value(SecretId=secret_id)
+        except self._client.exceptions.ResourceNotFoundException:
+            raise KeyError(f"secret not found: {mask_secret_id(secret_id)}") from None
         return response["SecretString"]
 
 

@@ -4,6 +4,8 @@ dataclass. Pure Python; no SparkSession needed."""
 
 from __future__ import annotations
 
+import datetime
+
 import pytest
 
 from etl_procedure_codes_crawler_spark.config import (
@@ -29,36 +31,47 @@ class TestHandleEnvVars:
         with pytest.raises(MissingConfigError):
             handle_env_vars(required=["A"], env={"A": "   "})
 
-    def test_optional_defaults_and_overrides(self):
-        out = handle_env_vars(
-            optional={"X": "dx", "Y": "dy"}, env={"Y": "set"}
-        )
-        assert out == {"X": "dx", "Y": "set"}
+
+#: every variable PipelineConfig.from_env requires
+_ENV = {
+    "LOGICAL_DATE": "2026-08-13",
+    "BASE_SITE": "https://codes.example/codes/",
+    "LOGIN_SITE": "https://codes.example/",
+    "WAREHOUSE_PATH": "/warehouse",
+    "SITE_SECRET_ID": "crawler/site",
+    "DB_SECRET_ID": "crawler/db",
+    "CODES_QUERY": "SELECT code FROM codes_input WHERE dt = DATE '{logical_date}'",
+    "RUN_SPEC": '{"dag_id": "crawl"}',
+}
 
 
 class TestPipelineConfig:
-    def test_defaults_from_empty_env(self):
-        cfg = PipelineConfig.from_env(env={})
-        assert cfg.database == "default"
-        assert cfg.codes_table == "procedure_codes"
-        assert cfg.fetch_batch_size == 200  # reference chunk_size
+    def test_empty_env_raises_naming_every_variable(self):
+        with pytest.raises(MissingConfigError) as ei:
+            PipelineConfig.from_env(env={})
+        for name in _ENV:
+            assert name in str(ei.value)
 
     def test_env_overrides(self):
-        cfg = PipelineConfig.from_env(
-            env={
-                "LOGICAL_DATE": "2026-08-13",
-                "DATABASE": "prod",
-                "FETCH_BATCH_SIZE": "50",
-            }
+        cfg = PipelineConfig.from_env(env=_ENV)
+        assert cfg.logical_date == datetime.date(2026, 8, 13)
+        assert cfg.base_site == "https://codes.example/codes/"
+        assert cfg.db_secret_id == "crawler/db"
+        # the rerun of one date lands in that date's partition
+        assert cfg.load_date == "20260813"
+        assert cfg.codes_sql() == (
+            "SELECT code FROM codes_input WHERE dt = DATE '2026-08-13'"
         )
-        assert cfg.logical_date == "2026-08-13"
-        assert cfg.database == "prod"
-        assert cfg.fetch_batch_size == 50
+
+    def test_logical_date_must_parse_before_the_query_sees_it(self):
+        env = {**_ENV, "LOGICAL_DATE": "2026-08-13' OR '1'='1"}
+        with pytest.raises(ValueError, match="LOGICAL_DATE"):
+            PipelineConfig.from_env(env=env)
 
     def test_frozen_and_picklable(self):
         import pickle
 
-        cfg = PipelineConfig.from_env(env={})
+        cfg = PipelineConfig.from_env(env=_ENV)
         with pytest.raises(Exception):
-            cfg.database = "x"  # type: ignore[misc]
+            cfg.base_site = "x"  # type: ignore[misc]
         assert pickle.loads(pickle.dumps(cfg)) == cfg

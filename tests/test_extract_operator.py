@@ -63,8 +63,14 @@ _URLS = {
 _PAGES = _load_pages()
 # NOHTML fetches a result with neither html nor error, which the Fetcher
 # contract makes a fetch error
+# the cpt-codes base URL keeps code-type classification meaningful for
+# CPT fixtures; HCPCS fixtures carry their own hcpcs URLs in tests of the
+# parse layer
 _factory = functools.partial(
-    FixtureFetcher, pages={**_PAGES, "NOHTML": None}, urls=_URLS
+    FixtureFetcher,
+    pages={**_PAGES, "NOHTML": None},
+    urls=_URLS,
+    base_url="https://example.test/cpt-codes/",
 )
 
 
@@ -74,12 +80,7 @@ CODES = ["99213", "J0120", "XXXXX", "J9999", "0001M", "0042T", "NOFIX", "NOHTML"
 @pytest.fixture(scope="module")
 def extracted(spark):
     codes = spark.createDataFrame([(c,) for c in CODES], CODES_INPUT_SCHEMA)
-    # cpt-codes URL prefix keeps code-type classification meaningful for
-    # CPT fixtures; HCPCS fixtures carry their own hcpcs URLs in tests
-    # of the parse layer.
-    df = extract_procedure_pages(
-        codes, _factory, base_url="https://example.test/cpt-codes/"
-    ).persist()
+    df = extract_procedure_pages(codes, _factory).persist()
     yield df
     df.unpersist()
 
@@ -114,7 +115,7 @@ def test_ok_row_fields(extracted):
 
 
 def test_hcpcs_classification_from_final_url(extracted):
-    # the fetcher's post-redirect URL, not base_url, drives CPT/HCPCS
+    # the fetcher's post-redirect URL, not its base_url, drives CPT/HCPCS
     row = extracted.filter("code = 'J0120'").collect()[0]
     assert row.code_type == "HCPCS"
     assert row.main_interval == "J0120-J8999"
@@ -246,10 +247,7 @@ def test_rows_in_order_independent_of_concurrency_fixture(spark):
 
     def rows(concurrency):
         return extract_procedure_pages(
-            codes,
-            _factory,
-            base_url="https://example.test/cpt-codes/",
-            concurrency=concurrency,
+            codes, _factory, concurrency=concurrency
         ).collect()
 
     serial = rows(1)

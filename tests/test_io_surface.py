@@ -1,9 +1,7 @@
-"""Phase-4 I/O surface: secrets (S7), JDBC connections (S4/S5),
-transactions (K4), catalog DDL (K5), error-audit sink (K8)."""
+"""The crawl job's I/O surface: secrets (S7), JDBC connections and
+reads (S4/S5), the JDBC append (K3) and the error-audit sink (K8)."""
 
 from __future__ import annotations
-
-import sqlite3
 
 import pytest
 
@@ -12,36 +10,68 @@ from etl_procedure_codes_crawler_spark.sinks.errors import (
     parse_run_spec,
     register_error,
 )
-from etl_procedure_codes_crawler_spark.sinks.jdbc import (
-    create_table,
-    execute_transaction,
-)
 from etl_procedure_codes_crawler_spark.sources.jdbc import (
     JdbcConnection,
     connection_from_secret,
 )
 from etl_procedure_codes_crawler_spark.sources.secrets import (
-    DictSecretProvider,
-    EnvSecretProvider,
+    AwsSecretsManagerProvider,
     mask_secret_id,
 )
 
+DERBY_DRIVER = "org.apache.derby.iapi.jdbc.AutoloadedDriver"
+
+
+class DictSecrets(dict):
+    """In-memory SecretProvider: secret id -> payload."""
+
+    def get_secret(self, secret_id: str) -> str:
+        return self[secret_id]
+
+
+@pytest.fixture
+def aws_secrets(monkeypatch, tmp_path):
+    """An AwsSecretsManagerProvider whose client answers from a botocore
+    Stubber, and the stubber. Credentials and region come from the
+    environment, so boto3 looks nowhere else, and no request leaves the
+    process."""
+    from botocore.stub import Stubber
+
+    for name, value in {
+        "AWS_DEFAULT_REGION": "us-east-1",
+        "AWS_ACCESS_KEY_ID": "testing",
+        "AWS_SECRET_ACCESS_KEY": "testing",
+        "AWS_EC2_METADATA_DISABLED": "true",
+        "AWS_CONFIG_FILE": str(tmp_path / "no-config"),
+        "AWS_SHARED_CREDENTIALS_FILE": str(tmp_path / "no-credentials"),
+    }.items():
+        monkeypatch.setenv(name, value)
+    monkeypatch.delenv("AWS_PROFILE", raising=False)
+    provider = AwsSecretsManagerProvider()
+    with Stubber(provider._client) as stubber:
+        yield provider, stubber
+        stubber.assert_no_pending_responses()
+
 
 class TestSecrets:
-    def test_dict_provider_roundtrip(self):
-        provider = DictSecretProvider({"db/creds": '{"user": "u"}'})
+    def test_aws_provider_returns_the_secret_string(self, aws_secrets):
+        provider, stubber = aws_secrets
+        stubber.add_response(
+            "get_secret_value",
+            {"SecretString": '{"user": "u"}'},
+            {"SecretId": "db/creds"},
+        )
         assert provider.get_secret("db/creds") == '{"user": "u"}'
 
-    def test_missing_secret_is_masked_in_error(self):
-        provider = DictSecretProvider({})
+    def test_missing_secret_is_masked_in_error(self, aws_secrets):
+        provider, stubber = aws_secrets
+        stubber.add_client_error(
+            "get_secret_value", service_error_code="ResourceNotFoundException"
+        )
         with pytest.raises(KeyError) as exc:
             provider.get_secret("prod/super-secret-name")
         assert "super-secret-name" not in str(exc.value)
         assert "***" in str(exc.value)
-
-    def test_env_provider(self, monkeypatch):
-        monkeypatch.setenv("MY_SECRET", "payload")
-        assert EnvSecretProvider().get_secret("MY_SECRET") == "payload"
 
     def test_mask_keeps_first_half(self):
         # reference masking: secret_id[:len//2] + '***' (postgres.py:10)
@@ -52,15 +82,20 @@ class TestSecrets:
 class TestJdbcConnection:
     def test_url_and_options(self):
         conn = JdbcConnection(
-            host="db.example", database="app", user="u", password="p"
+            url="jdbc:postgresql://db.example:5432/app",
+            user="u",
+            password="p",
+            driver="org.postgresql.Driver",
         )
-        assert conn.url == "jdbc:postgresql://db.example:5432/app"
-        opts = conn.options()
-        assert opts["driver"] == "org.postgresql.Driver"
-        assert opts["user"] == "u" and opts["password"] == "p"
+        assert conn.options() == {
+            "url": "jdbc:postgresql://db.example:5432/app",
+            "user": "u",
+            "password": "p",
+            "driver": "org.postgresql.Driver",
+        }
 
     def test_connection_from_secret_rds_convention(self):
-        provider = DictSecretProvider(
+        provider = DictSecrets(
             {
                 "rds": '{"host": "h", "port": 5433, "dbname": "d",'
                 ' "username": "u", "password": "p"}'
@@ -69,59 +104,21 @@ class TestJdbcConnection:
         conn = connection_from_secret(provider, "rds")
         assert conn.url == "jdbc:postgresql://h:5433/d"
         assert conn.user == "u"
+        assert conn.driver == "org.postgresql.Driver"
 
     def test_connection_from_secret_overrides(self):
-        provider = DictSecretProvider(
-            {"rds": '{"host": "h", "dbname": "d", "user": "u", "password": "p"}'}
+        # a payload's url and driver win over the host/port assembly
+        provider = DictSecrets(
+            {
+                "athena": '{"host": "h", "url": "jdbc:awsathena://AwsRegion=us-east-1",'
+                ' "driver": "com.simba.athena.jdbc.Driver", "user": "u",'
+                ' "password": "p"}'
+            }
         )
-        conn = connection_from_secret(provider, "rds", scheme="mysql", port=3306)
-        assert conn.url == "jdbc:mysql://h:3306/d"
-
-
-class TestExecuteTransaction:
-    """K4 semantics against stdlib sqlite3 — same DB-API surface as
-    psycopg2 (``utils/postgres.py:19-33``)."""
-
-    def test_commit_on_success(self, tmp_path):
-        db = str(tmp_path / "t.db")
-        execute_transaction(
-            lambda: sqlite3.connect(db),
-            [
-                "CREATE TABLE t (x INTEGER)",
-                "INSERT INTO t VALUES (1)",
-                "INSERT INTO t VALUES (2)",
-            ],
-        )
-        with sqlite3.connect(db) as conn:
-            assert conn.execute("SELECT COUNT(*) FROM t").fetchone()[0] == 2
-
-    def test_rollback_on_failure_is_atomic(self, tmp_path):
-        db = str(tmp_path / "t.db")
-        execute_transaction(
-            lambda: sqlite3.connect(db), ["CREATE TABLE t (x INTEGER)"]
-        )
-        with pytest.raises(sqlite3.OperationalError):
-            execute_transaction(
-                lambda: sqlite3.connect(db),
-                ["INSERT INTO t VALUES (1)", "INSERT INTO nonexistent VALUES (2)"],
-            )
-        with sqlite3.connect(db) as conn:
-            # the successful INSERT must have been rolled back with the batch
-            assert conn.execute("SELECT COUNT(*) FROM t").fetchone()[0] == 0
-
-
-class TestCatalogDdl:
-    def test_create_table_and_describe(self, spark):
-        create_table(
-            spark, "ddl_smoke", {"id": "BIGINT", "name": "STRING"}
-        )
-        try:
-            fields = {f.name for f in spark.table("ddl_smoke").schema.fields}
-            assert fields == {"id", "name"}
-            # idempotent under IF NOT EXISTS
-            create_table(spark, "ddl_smoke", {"id": "BIGINT"})
-        finally:
-            spark.sql("DROP TABLE IF EXISTS ddl_smoke")
+        conn = connection_from_secret(provider, "athena")
+        assert conn.url == "jdbc:awsathena://AwsRegion=us-east-1"
+        assert conn.driver == "com.simba.athena.jdbc.Driver"
+        assert (conn.user, conn.password) == ("u", "p")
 
 
 class TestErrorAudit:
@@ -171,7 +168,12 @@ class TestEmbeddedDerbyRoundTrip:
 
     @pytest.fixture
     def derby(self, tmp_path):
-        return JdbcConnection.embedded_derby(str(tmp_path / "derbydb"))
+        return JdbcConnection(
+            url=f"jdbc:derby:{tmp_path / 'derbydb'};create=true",
+            user="",
+            password="",
+            driver=DERBY_DRIVER,
+        )
 
     def _frame(self, spark):
         return spark.createDataFrame(
@@ -181,15 +183,12 @@ class TestEmbeddedDerbyRoundTrip:
 
     def test_write_then_read_back_parity(self, spark, derby):
         from etl_procedure_codes_crawler_spark.sinks.jdbc import write_jdbc
-        from etl_procedure_codes_crawler_spark.sources.jdbc import (
-            read_jdbc_query,
-            read_jdbc_table,
-        )
+        from etl_procedure_codes_crawler_spark.sources.jdbc import read_jdbc_query
 
         df = self._frame(spark)
-        assert write_jdbc(df, derby, "people", mode="overwrite") is True
+        assert write_jdbc(df, derby, "people") is True
 
-        back = read_jdbc_table(spark, derby, "people")
+        back = read_jdbc_query(spark, derby, "SELECT * FROM people")
         assert {
             (r.id, r.name, r.score) for r in back.collect()
         } == {(1, "alpha", 1.5), (2, "beta", 2.5), (3, "gamma", None)}
@@ -202,71 +201,8 @@ class TestEmbeddedDerbyRoundTrip:
             (2, "beta"),
         ]
 
-    def test_append_accumulates_overwrite_replaces(self, spark, derby):
-        from etl_procedure_codes_crawler_spark.sinks.jdbc import write_jdbc
-        from etl_procedure_codes_crawler_spark.sources.jdbc import read_jdbc_table
-
-        df = self._frame(spark)
-        write_jdbc(df, derby, "modes", mode="overwrite")
-        write_jdbc(df, derby, "modes", mode="append")
-        assert read_jdbc_table(spark, derby, "modes").count() == 6
-        write_jdbc(df, derby, "modes", mode="overwrite")
-        assert read_jdbc_table(spark, derby, "modes").count() == 3
-
     def test_empty_frame_skipped(self, spark, derby):
         from etl_procedure_codes_crawler_spark.sinks.jdbc import write_jdbc
 
         empty = self._frame(spark).limit(0)
         assert write_jdbc(empty, derby, "never_created") is False
-
-    def test_partitioned_read_fans_out_and_matches(self, spark, derby):
-        from etl_procedure_codes_crawler_spark.sinks.jdbc import write_jdbc
-        from etl_procedure_codes_crawler_spark.sources.jdbc import read_jdbc_query
-
-        df = spark.range(1, 101).selectExpr("CAST(id AS INT) AS id", "id * 2 AS v")
-        write_jdbc(df, derby, "wide", mode="overwrite")
-        part = read_jdbc_query(
-            spark,
-            derby,
-            'SELECT "id", "v" FROM wide',
-            partition_column='"id"',
-            lower_bound=1,
-            upper_bound=101,
-            num_partitions=4,
-        )
-        assert part.rdd.getNumPartitions() == 4
-        assert part.count() == 100
-        assert part.agg({"v": "sum"}).collect()[0][0] == sum(i * 2 for i in range(1, 101))
-
-    def test_execute_transaction_commit_and_rollback(self, spark, derby):
-        from etl_procedure_codes_crawler_spark.sinks.jdbc import (
-            execute_transaction,
-            jvm_jdbc_connection_factory,
-        )
-        from etl_procedure_codes_crawler_spark.sources.jdbc import read_jdbc_table
-
-        factory = jvm_jdbc_connection_factory(spark, derby.url)
-        execute_transaction(
-            factory,
-            [
-                "CREATE TABLE txn_t (id INT, label VARCHAR(32))",
-                "INSERT INTO txn_t VALUES (1, 'committed')",
-                "INSERT INTO txn_t VALUES (2, 'also committed')",
-            ],
-        )
-        assert read_jdbc_table(spark, derby, "txn_t").count() == 2
-
-        # one bad statement rolls back the whole batch
-        with pytest.raises(Exception):
-            execute_transaction(
-                factory,
-                [
-                    "INSERT INTO txn_t VALUES (3, 'doomed')",
-                    "INSERT INTO no_such_table VALUES (1)",
-                ],
-            )
-        rows = {
-            (r.ID, r.LABEL)
-            for r in read_jdbc_table(spark, derby, "txn_t").collect()
-        }
-        assert rows == {(1, "committed"), (2, "also committed")}

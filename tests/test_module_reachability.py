@@ -32,35 +32,14 @@ PACKAGE = "etl_procedure_codes_crawler_spark"
 
 # Kept although no entry point imports them, one reason each.
 UNREACHED_BY_DESIGN = {
-    f"{PACKAGE}.config": "the reference's env-var settings (utils/config.py)",
-    f"{PACKAGE}.sources.secrets": "the reference's secret lookup (get_secret)",
-    f"{PACKAGE}.sources.login": "the reference's multi-step site login",
-    f"{PACKAGE}.sources.jdbc": "the reference's Postgres reads",
-    f"{PACKAGE}.sinks.jdbc": "the reference's Postgres writes and DDL",
-    f"{PACKAGE}.sinks.errors": "the reference's error-audit row",
     f"{PACKAGE}.plans.parity": "the tests' oracle comparer",
 }
 
 # Top-level definitions of reached modules kept although no entry point
 # reaches them, one reason each. (A module in UNREACHED_BY_DESIGN is
 # exempt as a whole.)
-DEFINITIONS_UNREACHED_BY_DESIGN = {
-    f"{PACKAGE}.sinks.parquet.write_single_file_parquet": (
-        "the reference's single-file export (utils/s3.py:57-63)"
-    ),
-    f"{PACKAGE}.sinks.parquet.delete_path": (
-        "the reference's path cleanup (utils/s3.py:12-24)"
-    ),
-    f"{PACKAGE}.sinks.parquet.get_table_location": (
-        "the reference's catalog location lookup (utils/s3.py:65-69)"
-    ),
-    f"{PACKAGE}.sources.parquet.read_parquet": (
-        "the reference's plain parquet read (utils/s3.py:71-72)"
-    ),
-    f"{PACKAGE}.functions.html_extract.classify_code_type": (
-        "the reference's CPT/HCPCS rule (procedure_code.py:550,602)"
-    ),
-}
+DEFINITIONS_UNREACHED_BY_DESIGN: dict[str, str] = {}
+
 
 def _module_name(path: Path) -> str:
     parts = list(path.relative_to(ROOT).with_suffix("").parts)
@@ -381,11 +360,6 @@ _ORACLE_SQL = "emits oracle SQL: that SQL is the reference"
 #: one value, one reason each. A key names a module, a function or one
 #: parameter.
 ONE_VALUE_BY_DESIGN = {
-    f"{PACKAGE}.sources.login": UNREACHED_BY_DESIGN[f"{PACKAGE}.sources.login"],
-    f"{PACKAGE}.sinks.jdbc": UNREACHED_BY_DESIGN[f"{PACKAGE}.sinks.jdbc"],
-    f"{PACKAGE}.plans.pipeline.run_and_sink.base_url": (
-        "deployment setting: the address of the site the crawl fetches"
-    ),
     # perfbench/workloads.py calls clean_codes(df, "code"); the
     # benchmark's files change only in a change of their own
     f"{PACKAGE}.operators.cleaning.clean_codes.column": (

@@ -163,7 +163,10 @@ def test_every_job_stays_in_the_callers_job_group(spark, tmp_path, jobs_started_
     codes = spark.createDataFrame([(c,) for c in RAW_CODES], CODES_INPUT_SCHEMA)
     group = "crawl-under-test"
     jobs = jobs_started_by(
-        lambda: run_and_sink(spark, codes, _factory, str(tmp_path / "wh")), group
+        lambda: run_and_sink(
+            spark, codes, _factory, str(tmp_path / "wh"), load_date="20260813"
+        ),
+        group,
     )
     in_group = set(spark.sparkContext.statusTracker().getJobIdsForGroup(group))
     assert jobs and set(jobs) <= in_group

@@ -7,7 +7,6 @@ import os
 from etl_procedure_codes_crawler_spark.sinks.parquet import (
     with_load_date,
     write_parquet_dataset,
-    write_single_file_parquet,
 )
 from etl_procedure_codes_crawler_spark.sources.parquet import read_table_or_empty
 from etl_procedure_codes_crawler_spark.schemas import PROCEDURE_MODIFIERS_SCHEMA
@@ -50,14 +49,6 @@ def test_read_missing_table_yields_typed_empty(spark, tmp_path):
     assert ddl.dtypes == [("id", "bigint"), ("fp", "string")] and ddl.count() == 0
 
 
-def test_single_file_write(spark, tmp_path):
-    path = str(tmp_path / "single")
-    write_single_file_parquet(_mods(spark, [("25", "d1"), ("59", "d2")]), path)
-    files = [f for f in os.listdir(path) if f.endswith(".parquet")]
-    assert len(files) == 1
-    assert spark.read.parquet(path).count() == 2
-
-
 class TestIdempotentRunWrites:
     def test_rerun_replaces_own_partition_only(self, spark, sf_dir, tmp_path):
         from pyspark.sql import functions as F
@@ -65,10 +56,8 @@ class TestIdempotentRunWrites:
         from etl_procedure_codes_crawler_spark.sinks.parquet import (
             write_idempotent_run,
         )
-        from etl_procedure_codes_crawler_spark.sources.parquet import read_parquet
-
         path = str(tmp_path / "runs")
-        orders = read_parquet(spark, os.path.join(sf_dir, "orders.parquet"))
+        orders = spark.read.parquet(os.path.join(sf_dir, "orders.parquet"))
         write_idempotent_run(orders.limit(100), path, run_id="r1")
         write_idempotent_run(orders.limit(50), path, run_id="r2")
         # retry of r1 with fewer rows: must REPLACE r1, leave r2 alone
@@ -104,11 +93,9 @@ class TestPartitionPruning:
         from etl_procedure_codes_crawler_spark.functions.timestamps import (
             normalize_event_ts,
         )
-        from etl_procedure_codes_crawler_spark.sources.parquet import read_parquet
-
         path = str(tmp_path / "events_by_day")
         events = normalize_event_ts(
-            read_parquet(spark, os.path.join(sf_dir, "events.parquet"))
+            spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
         ).withColumn("day", F.date_format("ts", "yyyy-MM-dd"))
         events.write.partitionBy("day").parquet(path)
 
